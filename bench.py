@@ -62,7 +62,9 @@ def main() -> None:
     # from plan codegen, so that fraction sits near 0.75 on clean
     # AND loaded boxes; cap-exit disagreement on the r9 records:
     # 0.05-0.07, so 0.15 flags only genuine sustained noise.)
-    ncpu = os.cpu_count() or 1
+    # per core of THIS run (local[$SPARK_GRAFT_CPUS]), not of the host:
+    # an 8-core run on a busy 32-core box must still read as loaded
+    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     # both loadavg horizons (r11 advice): the 1-min sample passes a
     # box still cache/IO-settling minutes after a pytest marathon —
     # the 5-min figure makes that visible in drift triage. The

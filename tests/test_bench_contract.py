@@ -96,6 +96,11 @@ def test_requiet_is_wired():
     assert "--requiet" in src
     assert "load_prewait_1m" in src and "load_prewait_5m" in src
     assert "SPARK_GRAFT_REQUIET_MAX_SEC" in src  # bounded wait
-    # degraded formula unchanged: keys on the measurement-start 1-min
-    # sample at the original threshold
+    # degraded formula: keys on the measurement-start 1-min sample at
+    # the original threshold, per core of the run (SPARK_GRAFT_CPUS,
+    # host count only as the fallback)
     assert "degraded = load_start > 0.5 * ncpu or retry_frac > 0.15" in src
+    assert (
+        'ncpu = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)'
+        in src
+    )

@@ -3,6 +3,7 @@
 
 import datetime
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,7 +11,11 @@ from pyspark.sql import functions as F
 from tidb_cdc_spark.cdc import parse_cdc, parse_envelope
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec, deals_spec, snake_case
 
-GOLDEN = open("/root/reference/test/fff.json").read()
+# the reference's captured Maxwell insert (FIXTURES.md §F1/§F2)
+GOLDEN = open(
+    os.path.join(os.path.dirname(__file__), "fixtures", "fff.json"),
+    encoding="utf-8",
+).read()
 
 
 def _df(spark, msgs):

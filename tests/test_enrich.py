@@ -281,24 +281,34 @@ class TestBandStoreCompaction:
         assert 998 in after and 999 not in after
 
     def test_torn_compaction_recovers(self, spark, tmp_path):
-        import shutil
+        """Matrix case: compact() crashed between the two renames of
+        the band table's swap (live dir gone, ``bands.swap.old``
+        intact); the restarted compact equals the uninterrupted one."""
+        from fault_matrix import rows, run_matrix
 
         from tidb_cdc_spark.streaming import NearDupAdmissionSink
 
-        sink = NearDupAdmissionSink(str(tmp_path / "store"))
-        self._run_batch(spark, tmp_path, sink, "c0.jsonl", [
-            {"doc_id": 1, "text": " ".join(f"a{j}" for j in range(30))},
-        ])
-        bands = str(tmp_path / "store" / "bands")
-        # simulate a crash between the two renames: table dir gone,
-        # .compact.old holds the intact data
-        os.rename(bands, bands + ".compact.old")
-        assert not os.path.exists(bands)
-        stats = sink.compact(spark, files_per_table=1)
-        assert os.path.exists(bands)
-        assert spark.read.parquet(bands).count() > 0
-        assert not os.path.exists(bands + ".compact.old")
-        assert "bands" in stats
+        def prepare(root):
+            NearDupAdmissionSink(root).process(
+                spark.createDataFrame(
+                    [(1, " ".join(f"a{j}" for j in range(30)))],
+                    "doc_id long, text string",
+                ),
+                0,
+            )
+
+        def observe(root):
+            corpus = NearDupAdmissionSink(root).read_corpus(spark)
+            return rows(corpus), rows(spark.read.parquet(os.path.join(root, "bands")))
+
+        run_matrix(
+            spark,
+            tmp_path,
+            prepare,
+            lambda root: NearDupAdmissionSink(root).compact(spark, files_per_table=1),
+            observe,
+            only=lambda step: step == "_replace(bands)",
+        )
 
 
 class TestDigestAdmissionSink:
@@ -386,20 +396,28 @@ class TestDigestAdmissionSink:
         assert 998 in after and 999 not in after
 
     def test_torn_compaction_recovers(self, spark, tmp_path):
-        import os
+        """Matrix case: compact() crashed between the two renames of
+        the digest table's swap; the restarted compact equals the
+        uninterrupted one and the index still screens."""
+        from fault_matrix import run_matrix
 
         from tidb_cdc_spark.streaming import DigestAdmissionSink
 
-        sink = DigestAdmissionSink(str(tmp_path / "store"))
-        sink.process(self._batch(spark, [(1, "image", b"X")]), 0)
-        dig = str(tmp_path / "store" / "digests")
-        os.rename(dig, dig + ".compact.old")  # crash between renames
-        assert not os.path.exists(dig)
-        stats = sink.compact(spark, files_per_table=1)
-        assert os.path.exists(dig)
-        assert spark.read.parquet(dig).count() == 1
-        assert not os.path.exists(dig + ".compact.old")
-        assert "digests" in stats
+        def observe(root):
+            sink = DigestAdmissionSink(root)
+            sink.process(self._batch(spark, [(2, "image", b"X")]), 1)
+            return sorted(r.media_id for r in sink.read_corpus(spark).collect())
+
+        run_matrix(
+            spark,
+            tmp_path,
+            lambda root: DigestAdmissionSink(root).process(
+                self._batch(spark, [(1, "image", b"X")]), 0
+            ),
+            lambda root: DigestAdmissionSink(root).compact(spark, files_per_table=1),
+            observe,
+            only=lambda step: step == "_replace(digests)",
+        )
 
 
 class TestWinnowOverlapSink:
@@ -588,53 +606,6 @@ class TestWinnowSinkTornBatchRedelivery:
         assert fps.count() == fps.distinct().count()
 
 
-class TestWinnowSinkLegacyMigration:
-    def test_flat_pre_partitioned_store_upgrades_in_place(
-        self, spark, tmp_path
-    ):
-        """A store written by the pre-r7 append-based code (flat
-        part-files; fps without batch_id) must be migrated to the
-        partitioned layout on the next batch instead of crashing on
-        the batch_id filter / partition discovery."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from tidb_cdc_spark.streaming import WinnowOverlapSink
-
-        root = tmp_path / "store"
-        run = " ".join(f"s{i}" for i in range(8))
-        # forge the legacy layout: flat appends, no batch_id in fps
-        from tidb_cdc_spark.functions.winnow import winnow_fingerprints
-
-        b0 = spark.createDataFrame(
-            [(1, "x1 x2 " + run)], "doc_id long, text string"
-        )
-        winnow_fingerprints(b0, 4, 2).write.mode("append").parquet(
-            str(root / "fps")
-        )
-        spark.createDataFrame(
-            [], "new_id long, corpus_id long, shared long, batch_id long"
-        ).coalesce(1).write.mode("append").parquet(str(root / "overlaps"))
-        os.makedirs(root, exist_ok=True)
-        with open(root / "_BATCH", "w") as f:
-            f.write("0")
-
-        sink = WinnowOverlapSink(str(root), k=4, w=2)
-        b1 = spark.createDataFrame(
-            [(10, run + " c1 c2")], "doc_id long, text string"
-        )
-        sink.process(b1, 1)  # must migrate, then join doc 10 vs doc 1
-        ov = sink.read_overlaps(spark)
-        pairs = {(r.new_id, r.corpus_id) for r in ov.collect()}
-        assert (10, 1) in pairs
-        # fps store now partitioned: legacy rows under batch_id=-1
-        fps = spark.read.parquet(str(root / "fps"))
-        assert set(
-            r.batch_id for r in fps.select("batch_id").distinct().collect()
-        ) == {-1, 1}
-
-
 class TestSharedSinkSerialization:
     def test_one_sink_instance_across_registrations_is_safe(
         self, spark, tmp_path
@@ -728,38 +699,6 @@ class TestBucketedIndexScale:
             [(i, k, bytearray(p)) for i, k, p in rows], self.SCHEMA
         )
 
-    def test_flat_digest_store_migrates_in_place(self, spark, tmp_path):
-        """A pre-r12 flat digest index upgrades to the bucketed
-        layout on the next batch and keeps screening correctly."""
-        import glob
-
-        from pyspark.sql import functions as F
-
-        from tidb_cdc_spark.streaming import DigestAdmissionSink
-
-        root = tmp_path / "store"
-        b0 = self._batch(spark, [(1, "image", b"A"), (2, "image", b"B")])
-        # forge the pre-r12 layout: flat (digest, media_id) appends
-        b0.select(
-            F.unhex(F.sha2("payload", 256)).alias("digest"), "media_id"
-        ).write.mode("append").parquet(str(root / "digests"))
-        b0.write.mode("append").parquet(str(root / "corpus"))
-        os.makedirs(root, exist_ok=True)
-        with open(root / "_BATCH", "w") as f:
-            f.write("0")
-
-        sink = DigestAdmissionSink(str(root))
-        sink.process(
-            self._batch(spark, [(10, "image", b"A"), (11, "image", b"C")]),
-            1,
-        )
-        corpus = {r.media_id for r in sink.read_corpus(spark).collect()}
-        assert corpus == {1, 2, 11}  # A screened via the migrated index
-        dig = spark.read.parquet(str(root / "digests"))
-        assert "bucket" in dig.columns and dig.count() == 3
-        assert glob.glob(str(root / "digests" / "bucket=*"))
-        assert not glob.glob(str(root / "digests" / "*.parquet"))
-
     def test_store_params_win_over_constructor(self, spark, tmp_path):
         """A restart with a different n_buckets default must keep the
         live store's bucketing (reads and writes stay consistent)."""
@@ -770,7 +709,7 @@ class TestBucketedIndexScale:
             self._batch(spark, [(1, "image", b"A")]), 0
         )
         sink2 = DigestAdmissionSink(root, n_buckets=32)
-        assert sink2._n_buckets(spark) == 8
+        assert sink2._params()["n_buckets"] == 8
         sink2.process(
             self._batch(spark, [(2, "image", b"A"), (3, "image", b"B")]), 1
         )
@@ -784,7 +723,7 @@ class TestBucketedIndexScale:
         import glob
 
         from tidb_cdc_spark.streaming import DigestAdmissionSink
-        from tidb_cdc_spark.streaming.enrich import _store_params_read
+        from tidb_cdc_spark.streaming.store import read_json
 
         root = str(tmp_path / "store")
         sink = DigestAdmissionSink(root, n_buckets=4)
@@ -797,7 +736,7 @@ class TestBucketedIndexScale:
                 b,
             )
         sink.compact(spark, n_buckets=16)
-        assert _store_params_read(root)["n_buckets"] == 16
+        assert read_json(os.path.join(root, "_PARAMS"))["n_buckets"] == 16
         buckets = glob.glob(str(tmp_path / "store" / "digests" / "bucket=*"))
         assert 0 < len(buckets) <= 16
         sink.process(
@@ -832,9 +771,9 @@ class TestBucketedIndexScale:
             spark, [(100, "image", b"p3"), (101, "image", b"novel")]
         ).select(
             F.unhex(F.sha2("payload", 256)).alias("_digest")
-        ).withColumn("_bucket", _bucket_expr(["_digest"], sink._n_buckets(spark)))
+        ).withColumn("_bucket", _bucket_expr(["_digest"], sink._params()["n_buckets"]))
         touched = [r[0] for r in probe.select("_bucket").distinct().collect()]
-        store = sink._digest_store(spark, probe, touched).select(
+        store = sink._index_scan(spark, probe, touched).select(
             F.col("digest").alias("_digest")
         )
         seen = store.join(
@@ -874,30 +813,6 @@ class TestBucketedIndexScale:
                 self._batch(spark, [(3, "image", b"C")]), 1
             )
 
-    def test_compact_on_flat_store_migrates_first(self, spark, tmp_path):
-        """compact() on a never-processed pre-r12 flat index must
-        migrate before the partitioned rewrite (which needs the
-        bucket column)."""
-        import glob
-
-        from pyspark.sql import functions as F
-
-        from tidb_cdc_spark.streaming import DigestAdmissionSink
-
-        root = tmp_path / "store"
-        b0 = self._batch(spark, [(1, "image", b"A"), (2, "image", b"B")])
-        b0.select(
-            F.unhex(F.sha2("payload", 256)).alias("digest"), "media_id"
-        ).write.mode("append").parquet(str(root / "digests"))
-        b0.write.mode("append").parquet(str(root / "corpus"))
-
-        sink = DigestAdmissionSink(str(root))
-        stats = sink.compact(spark, files_per_table=1)
-        assert "digests" in stats
-        assert glob.glob(str(root / "digests" / "bucket=*"))
-        assert spark.read.parquet(str(root / "digests")).count() == 2
-
-
     def test_band_store_screen_is_broadcast_pruned(self, spark, tmp_path):
         """The near-dup sink's store join must also stream the band
         index against the broadcast batch bands with a bucket
@@ -922,7 +837,7 @@ class TestBucketedIndexScale:
             [(10, " ".join(f"w3_{j}" for j in range(30)))],
             "doc_id long, text string",
         )
-        nb = sink._n_buckets(spark)
+        nb = sink._params()["n_buckets"]
         bands = minhash_band_rows(b1)
         touched = [
             r[0]
@@ -932,7 +847,7 @@ class TestBucketedIndexScale:
             .distinct()
             .collect()
         ]
-        store = sink._band_store(spark, b1, touched)
+        store = sink._index_scan(spark, b1, touched)
         _, candidates, _ = near_dup_ingest(b1, store, batch_bands=bands)
         plan = (
             candidates._jdf.queryExecution().executedPlan().toString()
@@ -1089,7 +1004,7 @@ class TestPhashAdmissionSink:
             "_bucket", _bucket_expr(["_table", "_key"], 64)
         )
         touched = [r[0] for r in keyed.select("_bucket").distinct().collect()]
-        store = sink._phash_store(spark, probe, touched)
+        store = sink._index_scan(spark, probe, touched)
         cand = store.join(
             F.broadcast(
                 keyed.select(
@@ -1282,9 +1197,9 @@ class TestIvfIndexSink:
         # watermark commit did not
         os.remove(os.path.join(root, "_BATCH"))
         # hack: restore watermark to batch 0 (the last COMMITTED one)
-        from tidb_cdc_spark.streaming.enrich import _watermark_commit
+        from tidb_cdc_spark.streaming.store import commit_watermark
 
-        _watermark_commit(root, 0)
+        commit_watermark(root, 0)
         sink.process(self._batch(spark, corpus[20:]), 1)  # re-delivery
         raw = sink.read_index(spark)
         assert raw.count() == 40  # duplicates really exist on disk
@@ -1447,11 +1362,11 @@ class TestIvfIndexSink:
     def test_rebuild_dedupes_torn_appends(self, spark, tmp_path):
         import os
 
-        from tidb_cdc_spark.streaming.enrich import _watermark_commit
+        from tidb_cdc_spark.streaming.store import commit_watermark
 
         sink, root = self._drifted_store(spark, tmp_path)
         os.remove(os.path.join(root, "_BATCH"))
-        _watermark_commit(root, 1)
+        commit_watermark(root, 1)
         sink.process(self._batch(spark, self._vecs(range(20, 30), 2)), 2)
         assert sink.read_index(spark).count() == 40  # torn duplicates
         stats = sink.rebuild(spark)
@@ -1459,79 +1374,44 @@ class TestIvfIndexSink:
         assert sink.read_index(spark).count() == 30  # permanent heal
 
     def test_rebuild_crash_windows_all_heal(self, spark, tmp_path):
-        """Kill the roll-forward at EVERY rename boundary (including
-        the dangerous index-swapped/centroids-not window) and at the
-        pre-commit stage; any subsequent read surface must land on a
-        consistent generation with search results equal to either
-        the completed rebuild's (post-commit) or the original's
-        (pre-commit)."""
-        import os
+        """Matrix over every step of rebuild() (including the
+        dangerous index-swapped/centroids-not window): a restarted
+        sink's search must equal the original generation's before the
+        journal commit and the completed rebuild's after it, with no
+        staging left behind."""
         import shutil
+
+        from fault_matrix import run_matrix
 
         from tidb_cdc_spark.streaming.enrich import IvfIndexSink
 
-        sink, root = self._drifted_store(spark, tmp_path)
+        _, root0 = self._drifted_store(spark, tmp_path / "drifted")
         queries = self._batch(spark, self._vecs([102], 2))
 
-        def results(s):
-            return sorted(
+        def results(root):
+            s = IvfIndexSink(root, n_cells=3, seed=7)
+            found = sorted(
                 (r.query_id, r.rank, r.neighbor_id)
                 for r in s.search(spark, queries, k=5, n_probe=3).collect()
             )
+            leftovers = [d for d in os.listdir(root) if ".swap." in d or d == "_REBUILD"]
+            return leftovers, found
 
-        # pre-commit crash: stray tmps, no journal → rollback
-        pre = results(sink)
-        os.makedirs(f"{root}/index.rebuild.tmp")
-        shutil.copytree(f"{root}/centroids", f"{root}/centroids.rebuild.tmp")
-        assert results(sink) == pre  # heal-on-read rolled back
-        assert not os.path.exists(f"{root}/index.rebuild.tmp")
+        original = results(root0)
 
-        # build the COMMITTED-but-unswapped state: run rebuild with
-        # the roll-forward disabled, leaving tmps + journal in place
-        real_roll = IvfIndexSink._rebuild_roll_forward
-        sink._rebuild_roll_forward = lambda: False
-        sink.rebuild(spark)
-        sink._rebuild_roll_forward = real_roll.__get__(sink)
-        assert os.path.exists(f"{root}/_REBUILD")
-        committed = str(tmp_path / "committed")
-        shutil.copytree(root, committed)
+        def check(expected, got, k, steps):
+            committed = k > steps.index("_replace(_REBUILD)")
+            assert got == (expected if committed else original)
 
-        # the expected final state: finish one copy completely
-        done_root = str(tmp_path / "done")
-        shutil.copytree(committed, done_root)
-        done = IvfIndexSink(done_root, n_cells=3, seed=7)
-        assert done._rebuild_roll_forward() is True
-        want = results(done)
-        assert not os.path.exists(f"{done_root}/_REBUILD")
-
-        # crash after each rename boundary of the roll-forward (it
-        # performs exactly 4: index→old, tmp→index, centroids→old,
-        # tmp→centroids; crash_after=0 dies before the first)
-        for crash_after in (0, 1, 2, 3):
-            r = str(tmp_path / f"crash{crash_after}")
-            shutil.copytree(committed, r)
-            s = IvfIndexSink(r, n_cells=3, seed=7)
-            calls = {"n": 0}
-            orig_rename = os.rename
-
-            def boom(a, b):
-                calls["n"] += 1
-                if calls["n"] > crash_after:
-                    raise OSError("injected crash")
-                return orig_rename(a, b)
-
-            os.rename = boom
-            try:
-                with pytest.raises(OSError):
-                    s._rebuild_roll_forward()
-            finally:
-                os.rename = orig_rename
-            # a fresh instance's read surface heals to the new gen
-            s2 = IvfIndexSink(r, n_cells=3, seed=7)
-            assert results(s2) == want
-            assert not os.path.exists(f"{r}/_REBUILD")
-            assert not os.path.exists(f"{r}/index.rebuild.tmp")
-            assert not os.path.exists(f"{r}/index.rebuild.old")
+        run_matrix(
+            spark,
+            tmp_path,
+            lambda root: shutil.copytree(root0, root),
+            lambda root: IvfIndexSink(root, n_cells=3, seed=7).rebuild(spark),
+            results,
+            check=check,
+            replay=lambda root: None,  # the restarted sink's search heals
+        )
 
     def test_rebuild_requires_live_index(self, spark, tmp_path):
         from tidb_cdc_spark.streaming.enrich import IvfIndexSink

@@ -120,36 +120,39 @@ class TestManifestCrashWindows:
         )
 
     def test_compact_swap_crash_heals_lazily(self, spark, tmp_path):
-        """Crash window A end-to-end: compact() rewrote + swapped the
-        digests dir but 'died' before the manifest rebuild (simulated
-        by restoring the pre-compact manifest). The next batch's
-        screen must still catch a duplicate — via the lazy rebuild —
-        not silently admit it."""
-        import shutil
+        """Crash window A as a matrix case: compact() swapped the
+        rewritten digests dir in but died before the manifest rebuild,
+        so every file the manifest names is gone. The restarted
+        process's next batch must still catch a duplicate — via the
+        lazy rebuild — not silently admit it."""
+        from fault_matrix import run_matrix
 
         from tidb_cdc_spark.streaming import DigestAdmissionSink
 
-        root = str(tmp_path / "store")
-        sink = DigestAdmissionSink(root)
-        sink.process(
-            self._batch(
-                spark, [(i, "image", f"p{i}".encode()) for i in range(10)]
+        def observe(root):
+            sink = DigestAdmissionSink(root)
+            sink.process(
+                self._batch(
+                    spark, [(100, "image", b"p3"), (101, "image", b"novel")]
+                ),
+                1,
+            )
+            return sorted(r.media_id for r in sink.read_corpus(spark).collect())
+
+        run_matrix(
+            spark,
+            tmp_path,
+            lambda root: DigestAdmissionSink(root).process(
+                self._batch(
+                    spark, [(i, "image", f"p{i}".encode()) for i in range(10)]
+                ),
+                0,
             ),
-            0,
+            lambda root: DigestAdmissionSink(root).compact(spark),
+            observe,
+            only=lambda step: step == "_write_file(digests.manifest.tmp)",
+            replay=lambda root: None,
         )
-        mf = os.path.join(root, "digests.manifest")
-        shutil.copy(mf, str(tmp_path / "saved.manifest"))
-        sink.compact(spark)  # rewrites files, rebuilds manifest
-        shutil.copy(str(tmp_path / "saved.manifest"), mf)  # 'crash'
-        # every file the stale manifest names is gone now
-        sink.process(
-            self._batch(
-                spark, [(100, "image", b"p3"), (101, "image", b"novel")]
-            ),
-            1,
-        )
-        got = {r.media_id for r in sink.read_corpus(spark).collect()}
-        assert 101 in got and 100 not in got  # dup screened, novel in
 
     def test_unmanifested_append_healed_by_replay(self, spark, tmp_path):
         """Crash window B end-to-end: the batch-1 index append landed
@@ -160,7 +163,7 @@ class TestManifestCrashWindows:
         import shutil
 
         from tidb_cdc_spark.streaming import DigestAdmissionSink
-        from tidb_cdc_spark.streaming.enrich import _watermark_commit
+        from tidb_cdc_spark.streaming.store import commit_watermark
 
         root = str(tmp_path / "store")
         sink = DigestAdmissionSink(root)
@@ -178,7 +181,7 @@ class TestManifestCrashWindows:
         )
         # crash: batch 1's append survived, manifest + watermark did not
         shutil.copy(str(tmp_path / "pre.manifest"), mf)
-        _watermark_commit(root, 0)
+        commit_watermark(root, 0)
         sink.process(  # re-delivery
             self._batch(spark, [(10, "image", b"NEW-A"), (11, "image", b"NEW-B")]),
             1,

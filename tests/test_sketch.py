@@ -151,23 +151,32 @@ class TestCountMinSink:
         assert est[0].cms_est == 0
 
     def test_torn_swap_recovers(self, spark, tmp_path):
-        import os
+        """Matrix case: a crash between the swap's two renames (live
+        dir gone, ``cells.swap.old`` intact); the restarted sink's
+        replay equals the uninterrupted run."""
+        from fault_matrix import rows, run_matrix
 
         from tidb_cdc_spark.streaming import CountMinSink
 
-        sink = CountMinSink(str(tmp_path / "store"), "k", depth=3, width=32)
-        batch = spark.createDataFrame([(1,), (2,)], "k long")
-        sink.process(batch, 0)
-        # simulate a crash between the two renames: live dir gone,
-        # .swap.old holds the intact table
-        p = str(tmp_path / "store" / "cells")
-        os.rename(p, p + ".swap.old")
-        assert sink.read_table(spark).count() > 0  # healed
-        sink.process(spark.createDataFrame([(3,)], "k long"), 1)
-        est = sink.estimates(
-            spark, spark.createDataFrame([(1,), (3,)], "k long")
-        ).toPandas().set_index("k")
-        assert est.loc[1, "cms_est"] >= 1 and est.loc[3, "cms_est"] >= 1
+        def run(keys, batch_id):
+            def op(root):
+                batch = spark.createDataFrame([(k,) for k in keys], "k long")
+                CountMinSink(root, "k", depth=3, width=32).process(batch, batch_id)
+
+            return op
+
+        def observe(root):
+            sink = CountMinSink(root, "k", depth=3, width=32)
+            return rows(sink.read_table(spark)), sink._last_batch_id()
+
+        run_matrix(
+            spark,
+            tmp_path,
+            run([1, 2], 0),
+            run([3], 1),
+            observe,
+            only=lambda step: step == "_replace(cells)",
+        )
 
 
 class TestReviewRegressions:
@@ -187,22 +196,42 @@ class TestReviewRegressions:
         assert est.count() == 3  # row-preserving, no grouping
 
     def test_watermark_commits_atomically_with_table(self, spark, tmp_path):
+        """Matrix case over every step of a batch: the watermark lives
+        inside the swapped directory, so a restarted sink (before any
+        replay) sees the table and watermark of batch 0 or of batch 1,
+        never a mix."""
         import os
+        import shutil
+
+        from fault_matrix import rows, run_matrix
 
         from tidb_cdc_spark.streaming import CountMinSink
 
-        sink = CountMinSink(str(tmp_path / "store"), "k", depth=3, width=32)
-        sink.process(spark.createDataFrame([(1,), (1,)], "k long"), 0)
-        # the watermark lives inside the swapped directory
-        assert os.path.exists(tmp_path / "store" / "cells" / "_BATCH")
-        assert sink._last_batch_id() == 0
-        # crash BETWEEN the two renames: live dir missing, .old holds
-        # the previous state — watermark rolls back WITH the table,
-        # so redelivering the lost batch re-applies it exactly once
-        p = str(tmp_path / "store" / "cells")
-        sink.process(spark.createDataFrame([(2,)], "k long"), 1)
-        os.rename(p + "", p + ".swap.old")  # undo batch 1's swap
-        assert sink._last_batch_id() == 1  # healed: old state restored
+        def observe(root):
+            sink = CountMinSink(root, "k", depth=3, width=32)
+            return rows(sink.read_table(spark)), sink._last_batch_id()
+
+        base = str(tmp_path / "batch0")
+        CountMinSink(base, "k", depth=3, width=32).process(
+            spark.createDataFrame([(1,), (1,)], "k long"), 0
+        )
+        assert os.path.exists(os.path.join(base, "cells", "_BATCH"))
+        committed = [observe(base)]
+
+        def check(expected, got, k, steps):
+            assert got in committed + [expected]
+
+        run_matrix(
+            spark,
+            tmp_path,
+            lambda root: shutil.copytree(base, root),
+            lambda root: CountMinSink(root, "k", depth=3, width=32).process(
+                spark.createDataFrame([(2,)], "k long"), 1
+            ),
+            observe,
+            check=check,
+            replay=lambda root: None,
+        )
 
 
 class TestCountMinSinkParamGuard:

@@ -715,32 +715,40 @@ class TestScd2SplitHistorySink:
         assert hist[("a", 2)].is_current and hist[("a", 2)].v == 5
 
     def test_torn_compact_recovers(self, spark, tmp_path):
-        """Crash between compact()'s commit point (_compact.ready.N)
-        and the publish: every read path must first repair the store
-        — no rows lost, no rows doubled (review catch)."""
+        """Matrix case: compact() crashed in the middle of its swap of
+        the closed store (old store renamed away, fold not yet in
+        place; fold in place, old store not yet removed). Every read
+        path repairs the store first, and the restarted compact
+        equals the uninterrupted one — no rows lost, none doubled."""
         import os
-        import shutil
+
+        from fault_matrix import rows, run_matrix
 
         from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
-        sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
-        for i in range(3):
-            sink.process(
-                self._changes(spark, [_msg("update", "a", i + 1, 10 * (i + 1))]),
-                i,
-                SPEC,
-            )
-        before = sorted(map(tuple, sink.read_current(spark).collect()))
-        root = os.path.join(str(tmp_path / "hist"), "closed")
-        # stage the fold exactly as compact() does, up to its commit
-        # point, then simulate a crash mid-removal (one dir gone)
-        merged = sink._read_closed(spark)
-        tmp = os.path.join(root, "_compact.tmp")
-        merged.write.mode("overwrite").parquet(tmp)
-        os.replace(tmp, os.path.join(root, "_compact.ready.2"))
-        shutil.rmtree(os.path.join(root, "b=1"))
-        assert sorted(map(tuple, sink.read_current(spark).collect())) == before
-        assert [d for d in os.listdir(root) if d.startswith("b=")] == ["b=2"]
+        def prepare(root):
+            sink = Scd2SplitHistorySink(root)
+            for i in range(3):
+                sink.process(
+                    self._changes(spark, [_msg("update", "a", i + 1, 10 * (i + 1))]),
+                    i,
+                    SPEC,
+                )
+
+        def observe(root):
+            closed = os.path.join(root, "closed")
+            history = rows(Scd2SplitHistorySink(root).read_current(spark))
+            return history, sorted(d for d in os.listdir(closed) if d.startswith("b="))
+
+        run_matrix(
+            spark,
+            tmp_path,
+            prepare,
+            lambda root: Scd2SplitHistorySink(root).compact(spark),
+            observe,
+            only=lambda step: step
+            in ("_replace(closed)", "_remove(closed.swap.old)"),
+        )
 
     def test_reserved_column_name_raises(self, spark, tmp_path):
         from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec

@@ -10,7 +10,7 @@ cost 1.71x at an 800 MB index). A manifest-based table format
 metadata -- this module is the same move for the plain-parquet
 stores: one tiny parquet file per partitioned table
 (``<table>.manifest``: (part, file) rows, a few KB per thousand
-files), swapped atomically with the ``_PARAMS`` rename discipline.
+files), published with ``streaming/store.atomic_write``.
 The screen resolves touched partitions to explicit file paths and
 hands Spark the files directly (``basePath`` read keeps the
 partition column) -- zero directory listing on the read path, at any
@@ -21,9 +21,9 @@ streaming/enrich.py):
 - appends refresh ONLY the touched partitions (one os.listdir per
   touched dir, the same dirs the append just wrote -- cost
   proportional to the batch);
-- compact()/re-bucket/migrate rebuild the manifest after their
+- compact() and re-bucketing rebuild the manifest after their
   directory swap (``_tables_compact`` does it for every partitioned
-  table it rewrites);
+  table it rewrites, a re-bucket inside its journaled commit);
 - crash windows heal lazily: a manifest entry whose file vanished
   (crash between a compact swap and its rebuild) is detected by a
   driver-side existence probe over the TOUCHED files only and
@@ -63,13 +63,12 @@ def _manifest_read(table_path: str) -> "dict[int, list[str]] | None":
 
 
 def _manifest_write(table_path: str, mapping: "dict[int, list[str]]") -> None:
-    """Atomic swap (write tmp + os.replace — the _PARAMS
-    discipline): readers see the old or the new manifest, never a
-    torn one."""
-    import os
-
+    """Publish with ``store.atomic_write``: readers see the old or the
+    new manifest, never a torn one."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from tidb_cdc_spark.streaming.store import atomic_write
 
     parts, files = [], []
     for part in sorted(mapping):
@@ -82,10 +81,9 @@ def _manifest_write(table_path: str, mapping: "dict[int, list[str]]") -> None:
             "file": pa.array(files, type=pa.string()),
         }
     )
-    mf = _manifest_file(table_path)
-    tmp = mf + ".tmp"
-    pq.write_table(t, tmp)
-    os.replace(tmp, mf)
+    buf = pa.BufferOutputStream()
+    pq.write_table(t, buf)
+    atomic_write(_manifest_file(table_path), buf.getvalue().to_pybytes())
 
 
 def _list_partition_dir(table_path: str, part_col: str, val: int) -> list[str]:
@@ -102,9 +100,9 @@ def _list_partition_dir(table_path: str, part_col: str, val: int) -> list[str]:
 
 
 def _manifest_rebuild(table_path: str, part_col: str) -> None:
-    """Full relist → manifest swap. Used after compaction /
-    re-bucketing / migration, and as the lazy heal when an entry's
-    file went missing."""
+    """Full relist → manifest swap. Used after compaction and
+    re-bucketing, and as the lazy heal when an entry's file went
+    missing."""
     import glob
     import os
 

@@ -28,8 +28,13 @@ Scale notes (100 TB stream, 1000 executors):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tidb_cdc_spark.streaming import store
+from tidb_cdc_spark.streaming.store import guard_batch_watermark
 
 
 def enrich_stream(
@@ -84,52 +89,12 @@ def snapshot_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(F.md5(F.col(text_col)).alias("fp")).distinct()
 
 
-# ------------------------------------------- append-store helpers
-# shared by the admission sinks (NearDupAdmissionSink,
-# DigestAdmissionSink): per-table compaction with rename-based swap
-# and torn-swap healing, plus the _BATCH watermark protocol.
 
 
-def _watermark_read(root: str) -> int | None:
-    """Last applied batch id of an append store, or None."""
-    import os
-
-    p = os.path.join(root, "_BATCH")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def _watermark_commit(root: str, batch_id: int) -> None:
-    """Advance the append store's batch watermark — written LAST,
-    published by atomic rename, so a re-delivered batch is a no-op
-    only once every append of the original delivery completed."""
-    import os
-
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, "_BATCH.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, os.path.join(root, "_BATCH"))
-
-
-def _table_recover_compact(path: str) -> None:
-    """Heal a crash between compaction's two renames: the table dir
-    is gone but ``.compact.old`` (the intact pre-compaction data) is
-    still there — put it back. A leftover ``.old`` NEXT TO a live
-    table dir means the crash happened after the second rename; the
-    compacted dir is complete, drop the old."""
-    import os
-    import shutil
-
-    old = path + ".compact.old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    shutil.rmtree(path + ".compact.tmp", ignore_errors=True)
+# ------------------------------------------------- store mechanics
+# Every commit below goes through ``streaming/store.py``, which states
+# the protocol once (atomic files, swapped directories, journaled
+# multi-directory swaps, batch watermarks).
 
 
 def _tables_compact(
@@ -141,30 +106,24 @@ def _tables_compact(
 ) -> dict:
     """Rewrite each store table into ~128 MB files (or exactly
     ``files_per_table``) and swap the directory in; returns
-    ``{table: (files_before, files_after)}``. Swap is rename-based
-    with ``_table_recover_compact`` healing either torn state.
-    Tables named in ``partitioned`` keep their directory-partition
-    columns through the rewrite (one file per partition value after
-    clustering on the partition key). Tables named in ``dedupe``
-    additionally drop duplicate rows on the given key columns during
-    the rewrite — the permanent heal for a sink whose appends can be
+    ``{table: (files_before, files_after)}``. Tables named in
+    ``partitioned`` keep their directory-partition columns through the
+    rewrite (one file per partition value after clustering on the
+    partition key) and get a fresh manifest. Tables named in
+    ``dedupe`` additionally drop duplicate rows on the given key
+    columns — the permanent heal for a sink whose appends can be
     torn-duplicated on replay (``IvfIndexSink``)."""
     import glob
-    import os
-    import shutil
 
     stats: dict[str, tuple[int, int]] = {}
     for name, p in paths.items():
-        _table_recover_compact(p)
+        store.recover(p)
         if not os.path.exists(p):
             continue
-        files = glob.glob(
-            os.path.join(p, "**", "*.parquet"), recursive=True
-        )
+        files = glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
         nbytes = sum(os.path.getsize(f) for f in files)
         n = files_per_table or max(1, -(-nbytes // (128 << 20)))
-        tmp, old = p + ".compact.tmp", p + ".compact.old"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = store.staging(p)
         part_cols = (partitioned or {}).get(name)
         src = spark.read.parquet(p)
         dedupe_cols = (dedupe or {}).get(name)
@@ -173,28 +132,18 @@ def _tables_compact(
         if part_cols:
             # cluster on the partition key so every partition dir
             # collapses to one file regardless of task count
-            (
-                src.repartition(n, *part_cols)
-                .write.partitionBy(*part_cols)
-                .mode("overwrite")
-                .parquet(tmp)
-            )
+            writer = src.repartition(n, *part_cols).write.partitionBy(*part_cols)
         else:
-            src.repartition(n).write.mode("overwrite").parquet(tmp)
-        os.rename(p, old)
-        os.rename(tmp, p)
-        shutil.rmtree(old)
+            writer = src.repartition(n).write
+        writer.mode("overwrite").parquet(tmp)
+        store.swap_in(tmp, p)
         if part_cols:
-            # the rewrite replaced every file: swap a fresh manifest
-            # in so the listing-free screen never sees dead entries
+            # the rewrite replaced every file: a fresh manifest keeps
+            # the listing-free screen from seeing dead entries
             _manifest_rebuild(p, part_cols[0])
         stats[name] = (
             len(files),
-            len(
-                glob.glob(
-                    os.path.join(p, "**", "*.parquet"), recursive=True
-                )
-            ),
+            len(glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)),
         )
     return stats
 
@@ -221,32 +170,10 @@ def _tables_compact(
 #    fleet). At 100 TB the same layout maps onto a transactional
 #    format's hidden bucket partitioning + OPTIMIZE.
 #
-# ``_PARAMS`` (atomic-rename JSON next to the watermark) pins the
-# live bucket count: the store's value is authoritative over the
-# sink constructor's, so a restart with a different default cannot
-# split reads and writes across incompatible bucketings.
-
-
-def _store_params_read(root: str) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(root, "_PARAMS")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _store_params_write(root: str, params: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, "_PARAMS.tmp")
-    with open(tmp, "w") as f:
-        json.dump(params, f, sort_keys=True)
-    os.replace(tmp, os.path.join(root, "_PARAMS"))
+# ``_PARAMS`` pins the live bucket count: the store's value is
+# authoritative over the sink constructor's, so a restart with a
+# different default cannot split reads and writes across incompatible
+# bucketings.
 
 
 def _bucket_expr(key_cols: list[str], n_buckets: int):
@@ -259,67 +186,164 @@ def _bucket_expr(key_cols: list[str], n_buckets: int):
 
 # store-manifest helpers live in a neutral module so the batch probe
 # side (functions/similarity.ivf_probe_index) can share them without
-# importing the streaming layer; re-exported here because they are
-# part of the admission stores' mechanics
+# importing the streaming layer
 from tidb_cdc_spark.manifest import (  # noqa: E402
-    _manifest_file,
     _manifest_pruned_scan,
-    _manifest_read,
     _manifest_rebuild,
     _manifest_update,
-    _manifest_write,
 )
 
 
-def _flat_files(path: str) -> list[str]:
-    import glob
-    import os
+class _AdmissionSink:
+    """Store mechanics shared by the bucketed admission sinks: a
+    ``corpus`` of admitted rows plus a bucket-partitioned ``INDEX``
+    the next batch is screened against, a ``_BATCH`` watermark
+    committed last, ``_PARAMS`` pinning ``n_buckets`` and the
+    ``PINNED`` layout keys, and ``compact()``. A crash between an
+    append and the watermark makes the replay append again —
+    duplication, never loss (``store.py``).
 
-    return glob.glob(os.path.join(path, "*.parquet"))
+    A subclass declares ``INDEX``, ``KEY_COLS`` (the index columns
+    hashed into ``bucket``), ``TABLES`` (every appended table, corpus
+    first), ``PINNED``, ``WHAT``, ``_index_schema(batch)`` (the empty
+    index's schema) and ``_admit(batch, n_buckets)``, which screens
+    and appends one batch and returns the touched buckets."""
 
+    INDEX: str
+    KEY_COLS: tuple[str, ...]
+    TABLES: tuple[str, ...]
+    PINNED: tuple[str, ...] = ()
+    WHAT: str
 
-def _migrate_flat_index(
-    spark, path: str, key_cols: list[str], n_buckets: int
-) -> None:
-    """One-time upgrade of a pre-r12 flat index directory to the
-    bucketed layout (rename-swap, healed by
-    ``_table_recover_compact`` if torn). Refuses an already-bucketed
-    index whose ``_PARAMS`` went missing: guessing a bucket count
-    against an unknown on-disk bucketing would silently mis-prune
-    reads (rows in unprobed buckets would stop screening — admitted
-    duplicates, not an error message)."""
-    import glob
-    import os
-    import shutil
+    def _path(self, name: str) -> str:
+        return os.path.join(self.root, name)
 
-    _table_recover_compact(path)
-    if not os.path.exists(path):
-        return
-    if glob.glob(os.path.join(path, "bucket=*")):
-        raise ValueError(
-            f"index at {path} is bucket-partitioned but the store's "
-            "_PARAMS file is missing — restore it or rebuild the "
-            "bucketing with compact(n_buckets=...)"
+    def _last_batch_id(self) -> int | None:
+        return store.read_watermark(self.root)
+
+    def _heal(self) -> None:
+        """Finish a committed re-bucket, roll back torn compactions."""
+        store.roll_forward(self._path("_REBUILD"), self._publish_params)
+        for name in self.TABLES:
+            store.recover(self._path(name))
+
+    def _publish_params(self, params: dict) -> None:
+        store.atomic_write(self._path("_PARAMS"), params)
+        if os.path.exists(self._path(self.INDEX)):
+            _manifest_rebuild(self._path(self.INDEX), "bucket")
+
+    def _params(self) -> dict:
+        """Live store parameters: created for a fresh store; a store
+        whose index exists without ``_PARAMS``, or whose pinned layout
+        differs from the sink's, is refused."""
+        want = {"layout": "bucketed", "n_buckets": self.n_buckets}
+        want.update({k: getattr(self, k) for k in self.PINNED})
+        params = store.read_json(self._path("_PARAMS"))
+        if params is None:
+            if os.path.exists(self._path(self.INDEX)):
+                raise ValueError(
+                    f"index at {self._path(self.INDEX)} exists but the "
+                    "store's _PARAMS file is missing — restore it (the "
+                    "bucketing and key layout cannot be inferred from data)"
+                )
+            store.atomic_write(self._path("_PARAMS"), want)
+            return want
+        for k in self.PINNED:
+            if params.get(k) != want[k]:
+                raise ValueError(
+                    f"{self.WHAT} {k}={params.get(k)!r} does not match "
+                    f"sink {k}={want[k]!r} — the persisted index is "
+                    "layout-specific; rebuild the store or match the "
+                    "sink configuration"
+                )
+        return params
+
+    def read_corpus(self, spark) -> DataFrame | None:
+        self._heal()
+        p = self._path("corpus")
+        return spark.read.parquet(p) if os.path.exists(p) else None
+
+    def _index_scan(self, spark, batch: DataFrame, touched: list[int]) -> DataFrame:
+        """The persisted index pruned to the ``touched`` buckets:
+        listing-free through the manifest, else a listing plus
+        partition filter; an empty frame before the first append."""
+        p = self._path(self.INDEX)
+        if not os.path.exists(p):
+            return spark.createDataFrame([], self._index_schema(batch))
+        if touched:
+            pruned = _manifest_pruned_scan(spark, p, "bucket", touched)
+            if pruned is not None:
+                return pruned
+        # an empty batch touches nothing: read nothing rather than
+        # lean on isin([]) semantics
+        index = spark.read.parquet(p)
+        return index.filter(F.col("bucket").isin(touched)) if touched else index.limit(0)
+
+    def compact(
+        self,
+        spark,
+        files_per_table: int | None = None,
+        n_buckets: int | None = None,
+    ) -> dict:
+        """Small-files maintenance: every micro-batch appends one
+        file set per store table, so a week of 30 s batches is ~20k
+        tiny files per table — at that point directory listing and
+        per-file open overhead dominate every screening join. Rewrite
+        each table into ~128 MB files (or exactly ``files_per_table``)
+        and swap the directory in. Returns
+        ``{table: (files_before, files_after)}``. The index keeps its
+        bucket partitioning; ``n_buckets`` re-buckets it first (the
+        scale lever that keeps per-batch screen IO bounded as the
+        index grows), committed together with the new ``_PARAMS``.
+
+        Run while the stream is STOPPED — the store is single-writer
+        and compaction is the maintenance-window kind of write. At
+        100 TB the same logic targets a transactional format's
+        OPTIMIZE/rewrite_data_files instead."""
+        self._heal()
+        params = self._params()
+        if n_buckets is not None and n_buckets != params["n_buckets"]:
+            index = self._path(self.INDEX)
+            lives = []
+            if os.path.exists(index):
+                tmp = store.staging(index)
+                (
+                    spark.read.parquet(index)
+                    .drop("bucket")
+                    .withColumn("bucket", _bucket_expr(list(self.KEY_COLS), n_buckets))
+                    .repartition("bucket")
+                    .write.partitionBy("bucket")
+                    .mode("overwrite")
+                    .parquet(tmp)
+                )
+                lives = [index]
+            store.swap_all(
+                self._path("_REBUILD"),
+                lives,
+                {**params, "n_buckets": n_buckets},
+                self._publish_params,
+            )
+        return _tables_compact(
+            spark,
+            {n: self._path(n) for n in self.TABLES},
+            files_per_table,
+            partitioned={self.INDEX: ["bucket"]},
         )
-    if not _flat_files(path):
-        return
-    tmp, old = path + ".compact.tmp", path + ".compact.old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        spark.read.parquet(path)
-        .withColumn("bucket", _bucket_expr(key_cols, n_buckets))
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    _manifest_rebuild(path, "bucket")
+
+    def process(self, batch: DataFrame, batch_id: int) -> None:
+        if guard_batch_watermark(self._last_batch_id(), batch_id, self.WHAT):
+            return  # at-least-once re-delivery
+        self._heal()
+        touched = self._admit(batch, int(self._params()["n_buckets"]))
+        # refresh the touched buckets' manifest entries (relists only
+        # the dirs this append wrote) BEFORE the watermark, so a
+        # replay after a crash relists the same dirs and re-covers any
+        # unmanifested files
+        _manifest_update(self._path(self.INDEX), "bucket", touched)
+        store.commit_watermark(self.root, batch_id)
 
 
-class NearDupAdmissionSink:
+class NearDupAdmissionSink(_AdmissionSink):
     """foreachBatch body that keeps a corpus NEAR-dup-free at ingest —
     the streaming composition of ``functions.dedup.near_dup_ingest``
     over a persistent LSH band store:
@@ -339,16 +363,16 @@ class NearDupAdmissionSink:
       batch), and candidate pairs to ``<root>/candidates`` as the
       audit trail for exact downstream verification.
 
-    Replay: a batch-id watermark (written LAST, atomic rename) makes
-    re-delivery of an already-applied batch a no-op — appends are not
-    idempotent. A crash BETWEEN the three appends can still leave a
-    partial batch on plain parquet; at scale the same sink logic
-    targets a transactional table format (Delta/Iceberg) where the
-    three appends commit atomically — same plan, different committer
-    (mirrors the ParquetSnapshotSink note in sinks.py).
+    Replay and maintenance: ``_AdmissionSink``. At scale the three
+    appends target a transactional table format (Delta/Iceberg) where
+    they commit atomically — same plan, different committer.
 
     Attach with ``stream.writeStream.foreachBatch(sink.process)``.
     """
+
+    INDEX, KEY_COLS = "bands", ("band", "bhash")
+    TABLES = ("corpus", "bands", "candidates")
+    WHAT = "band store"
 
     def __init__(
         self,
@@ -366,61 +390,7 @@ class NearDupAdmissionSink:
         # creation default only — a live store's _PARAMS wins
         self.n_buckets = n_buckets
 
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _watermark_read(self.root)
-
-    def _n_buckets(self, spark) -> int:
-        """Live bucket count (store _PARAMS authoritative); first
-        call on a pre-r12 flat band store migrates it in place."""
-        params = _store_params_read(self.root)
-        if params is not None:
-            return int(params["n_buckets"])
-        _migrate_flat_index(
-            spark, self._path("bands"), ["band", "bhash"], self.n_buckets
-        )
-        _store_params_write(
-            self.root, {"layout": "bucketed", "n_buckets": self.n_buckets}
-        )
-        return self.n_buckets
-
-    def read_corpus(self, spark) -> DataFrame | None:
-        import os
-
-        p = self._path("corpus")
-        self._recover_compact("corpus")  # heal a torn compact first
-        return spark.read.parquet(p) if os.path.exists(p) else None
-
-    def _band_store(
-        self, spark, batch: DataFrame, touched: "list[int] | None" = None
-    ) -> DataFrame:
-        import os
-
-        p = self._path("bands")
-        if os.path.exists(p):
-            if touched:
-                # listing-free screen: touched buckets resolved to
-                # explicit files from the manifest (r13 — removes
-                # the per-directory listing constant the r12
-                # rehearsal measured)
-                pruned = _manifest_pruned_scan(spark, p, "bucket", touched)
-                if pruned is not None:
-                    return pruned
-            store = spark.read.parquet(p)
-            if touched is not None:
-                # empty batch => empty touched: read nothing rather
-                # than lean on isin([]) semantics; no-manifest
-                # legacy stores keep the listing + partition filter
-                store = (
-                    store.filter(F.col("bucket").isin(touched))
-                    if touched
-                    else store.limit(0)
-                )
-            return store
+    def _index_schema(self, batch: DataFrame):
         from pyspark.sql.types import (
             IntegerType,
             LongType,
@@ -428,93 +398,18 @@ class NearDupAdmissionSink:
             StructType,
         )
 
-        # empty first-batch store: the id field's type is DERIVED from
-        # the incoming batch so non-long doc ids (string/uuid) union
-        # consistently with the intra-batch candidate rows
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(self.id_col, batch.schema[self.id_col].dataType),
-                    StructField("band", IntegerType()),
-                    StructField("bhash", LongType()),
-                ]
-            ),
+        # the id field's type is DERIVED from the incoming batch so
+        # non-long doc ids (string/uuid) union consistently with the
+        # intra-batch candidate rows
+        return StructType(
+            [
+                StructField(self.id_col, batch.schema[self.id_col].dataType),
+                StructField("band", IntegerType()),
+                StructField("bhash", LongType()),
+            ]
         )
 
-    def compact(
-        self,
-        spark,
-        files_per_table: int | None = None,
-        n_buckets: int | None = None,
-    ) -> dict:
-        """Small-files maintenance: every micro-batch appends one
-        file set per store table, so a week of 30 s batches is ~20k
-        tiny files per table — at that point directory listing and
-        per-file open overhead dominate every screening join. Rewrite
-        each table into ~128 MB files (or exactly ``files_per_table``)
-        and swap the directory in. Returns
-        ``{table: (files_before, files_after)}``. The band index
-        keeps its bucket partitioning; pass ``n_buckets`` to
-        re-bucket while compacting (the scale lever that keeps
-        per-batch screen IO bounded as the index grows).
-
-        Run while the stream is STOPPED — the store is single-writer
-        and compaction is the maintenance-window kind of write (same
-        discipline as a copy-on-write vacuum). Directory swap is
-        rename-based: a crash between the two renames leaves a
-        ``<table>.compact.old`` next to a missing table, which both
-        ``compact`` and ``process`` detect and restore before doing
-        anything else — no torn state survives past the next call.
-        At 100 TB the same logic targets a transactional format's
-        OPTIMIZE/rewrite_data_files instead.
-        """
-        # resolve params first: migrates a still-flat pre-r12 index so
-        # the partitioned rewrite below always sees a bucket column
-        self._n_buckets(spark)
-        if n_buckets is not None and n_buckets != self._n_buckets(spark):
-            import os
-            import shutil
-
-            p = self._path("bands")
-            _table_recover_compact(p)
-            if os.path.exists(p):
-                tmp, old = p + ".compact.tmp", p + ".compact.old"
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    spark.read.parquet(p)
-                    .drop("bucket")
-                    .withColumn(
-                        "bucket", _bucket_expr(["band", "bhash"], n_buckets)
-                    )
-                    .repartition("bucket")
-                    .write.partitionBy("bucket")
-                    .mode("overwrite")
-                    .parquet(tmp)
-                )
-                os.rename(p, old)
-                os.rename(tmp, p)
-                shutil.rmtree(old)
-            _store_params_write(
-                self.root, {"layout": "bucketed", "n_buckets": n_buckets}
-            )
-        return _tables_compact(
-            spark,
-            {n: self._path(n) for n in ("corpus", "bands", "candidates")},
-            files_per_table,
-            partitioned={"bands": ["bucket"]},
-        )
-
-    def _recover_compact(self, name: str) -> None:
-        _table_recover_compact(self._path(name))
-
-    def process(self, batch: DataFrame, batch_id: int) -> None:
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
-
-        if guard_batch_watermark(self._last_batch_id(), batch_id, "band store"):
-            return  # at-least-once re-delivery
-        for name in ("corpus", "bands", "candidates"):
-            self._recover_compact(name)  # heal any torn compaction
+    def _admit(self, batch: DataFrame, nb: int) -> list[int]:
         from tidb_cdc_spark.functions.dedup import (
             _materialize,
             minhash_band_rows,
@@ -522,7 +417,6 @@ class NearDupAdmissionSink:
         )
 
         spark = batch.sparkSession
-        nb_buckets = self._n_buckets(spark)
         # the batch's band rows are computed ONCE here (persisted) and
         # shared with near_dup_ingest — they drive both the
         # touched-bucket partition filter and the screening joins
@@ -540,14 +434,14 @@ class NearDupAdmissionSink:
         touched = [
             r[0]
             for r in batch_bands.select(
-                _bucket_expr(["band", "bhash"], nb_buckets).alias("_b")
+                _bucket_expr(list(self.KEY_COLS), nb).alias("_b")
             )
             .distinct()
             .collect()
         ]
         clean, candidates, new_bands = near_dup_ingest(
             batch,
-            self._band_store(spark, batch, touched),
+            self._index_scan(spark, batch, touched),
             self.id_col,
             self.text_col,
             self.num_hashes,
@@ -562,7 +456,7 @@ class NearDupAdmissionSink:
             clean.write.mode("append").parquet(self._path("corpus"))
             (
                 new_bands.withColumn(
-                    "bucket", _bucket_expr(["band", "bhash"], nb_buckets)
+                    "bucket", _bucket_expr(list(self.KEY_COLS), nb)
                 )
                 # cluster on the partition key before the append —
                 # ≤1 file per touched bucket per batch (see the
@@ -575,15 +469,10 @@ class NearDupAdmissionSink:
             candidates.write.mode("append").parquet(self._path("candidates"))
         finally:
             clean.unpersist()
-        # refresh the touched buckets' manifest entries (relists only
-        # the dirs this append wrote); committed BEFORE the watermark
-        # so replay-after-crash relists the same dirs and re-covers
-        # any unmanifested files
-        _manifest_update(self._path("bands"), "bucket", touched)
-        _watermark_commit(self.root, batch_id)
+        return touched
 
 
-class DigestAdmissionSink:
+class DigestAdmissionSink(_AdmissionSink):
     """foreachBatch body for content-addressable EXACT dedup at
     ingest — the media twin of ``NearDupAdmissionSink``: admit only
     rows whose payload digest has never been seen, the pass a
@@ -623,18 +512,13 @@ class DigestAdmissionSink:
       any upstream ``digest`` metadata, pass through untouched),
       and (digest, id, bucket) rows append to ``<root>/digests``.
 
-    Replay safety and maintenance follow the admission-store
-    conventions: batch-id watermark written LAST via atomic rename
-    (re-delivery is a no-op), ``compact()`` with rename-swap +
-    torn-state healing shared with the near-dup sink. A crash
-    BETWEEN the corpus and digests appends can leave admitted rows
-    unindexed on plain parquet; the replay then re-admits them —
-    duplication, never loss (the corpus-first append order is
-    deliberate: indexing first would make the replay SCREEN OUT rows
-    the corpus never received). At 100 TB the appends target a
-    transactional format (Delta/Iceberg) where both commit
-    atomically — same plan, different committer (mirrors the
-    NearDupAdmissionSink note)."""
+    Replay and maintenance: ``_AdmissionSink``. The corpus is
+    appended before the index on purpose: indexing first would make a
+    replay SCREEN OUT rows the corpus never received."""
+
+    INDEX, KEY_COLS = "digests", ("digest",)
+    TABLES = ("corpus", "digests")
+    WHAT = "digest store"
 
     def __init__(
         self,
@@ -645,148 +529,21 @@ class DigestAdmissionSink:
     ):
         self.root = root
         self.id_col, self.payload_col = id_col, payload_col
-        # creation default only — once a store exists, its _PARAMS
-        # value is authoritative (see _n_buckets)
-        self.n_buckets = n_buckets
+        self.n_buckets = n_buckets  # creation default; _PARAMS wins
 
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _watermark_read(self.root)
-
-    def _n_buckets(self, spark) -> int:
-        """Live bucket count: the store's ``_PARAMS`` wins over the
-        constructor default (a restart with a different default must
-        not split reads/writes across incompatible bucketings).
-        First call on a pre-r12 FLAT store migrates it in place."""
-        params = _store_params_read(self.root)
-        if params is not None:
-            return int(params["n_buckets"])
-        # no params: fresh store, or a pre-r12 flat index to upgrade
-        _migrate_flat_index(
-            spark, self._path("digests"), ["digest"], self.n_buckets
-        )
-        _store_params_write(
-            self.root, {"layout": "bucketed", "n_buckets": self.n_buckets}
-        )
-        return self.n_buckets
-
-    def read_corpus(self, spark) -> DataFrame | None:
-        import os
-
-        p = self._path("corpus")
-        _table_recover_compact(p)  # heal a torn compact before reading
-        return spark.read.parquet(p) if os.path.exists(p) else None
-
-    def _digest_store(
-        self, spark, batch: DataFrame, touched: "list[int] | None" = None
-    ) -> DataFrame:
-        """The persisted index, pruned to ``touched`` buckets when
-        given (static partition filter — only those directories are
-        listed and read)."""
-        import os
-
-        p = self._path("digests")
-        _table_recover_compact(p)
-        if os.path.exists(p):
-            if touched:
-                # listing-free screen: touched buckets resolved to
-                # explicit files from the manifest (r13 — removes
-                # the per-directory listing constant the r12
-                # rehearsal measured)
-                pruned = _manifest_pruned_scan(spark, p, "bucket", touched)
-                if pruned is not None:
-                    return pruned
-            store = spark.read.parquet(p)
-            if touched is not None:
-                # empty batch => empty touched: read nothing rather
-                # than lean on isin([]) semantics; no-manifest
-                # legacy stores keep the listing + partition filter
-                store = (
-                    store.filter(F.col("bucket").isin(touched))
-                    if touched
-                    else store.limit(0)
-                )
-            return store
+    def _index_schema(self, batch: DataFrame):
         from pyspark.sql.types import BinaryType, StructField, StructType
 
-        # empty first-batch store: id type derived from the batch so
-        # non-long media ids union consistently
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("digest", BinaryType()),
-                    StructField(
-                        self.id_col, batch.schema[self.id_col].dataType
-                    ),
-                ]
-            ),
+        return StructType(
+            [
+                StructField("digest", BinaryType()),
+                StructField(self.id_col, batch.schema[self.id_col].dataType),
+            ]
         )
 
-    def compact(
-        self,
-        spark,
-        files_per_table: int | None = None,
-        n_buckets: int | None = None,
-    ) -> dict:
-        """Small-files maintenance, stream stopped — see
-        ``NearDupAdmissionSink.compact`` (shared mechanics). The
-        digest index keeps its bucket partitioning through the
-        rewrite; pass ``n_buckets`` to RE-BUCKET while compacting —
-        the scale lever that keeps bucket size (hence per-batch
-        screen IO) bounded as the index grows. The new count takes
-        effect atomically with the rewrite (_PARAMS updated after
-        the swap; a crash in between is healed by the same
-        torn-compact recovery and the old _PARAMS still matches the
-        restored old layout)."""
-        # resolve params first: migrates a still-flat pre-r12 index so
-        # the partitioned rewrite below always sees a bucket column
-        self._n_buckets(spark)
-        if n_buckets is not None and n_buckets != self._n_buckets(spark):
-            p = self._path("digests")
-            _table_recover_compact(p)
-            import os
-
-            if os.path.exists(p):
-                import shutil
-
-                tmp, old = p + ".compact.tmp", p + ".compact.old"
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    spark.read.parquet(p)
-                    .drop("bucket")
-                    .withColumn("bucket", _bucket_expr(["digest"], n_buckets))
-                    .repartition("bucket")
-                    .write.partitionBy("bucket")
-                    .mode("overwrite")
-                    .parquet(tmp)
-                )
-                os.rename(p, old)
-                os.rename(tmp, p)
-                shutil.rmtree(old)
-            _store_params_write(
-                self.root, {"layout": "bucketed", "n_buckets": n_buckets}
-            )
-        return _tables_compact(
-            spark,
-            {n: self._path(n) for n in ("corpus", "digests")},
-            files_per_table,
-            partitioned={"digests": ["bucket"]},
-        )
-
-    def process(self, batch: DataFrame, batch_id: int) -> None:
+    def _admit(self, batch: DataFrame, nb: int) -> list[int]:
         from pyspark.sql.window import Window
 
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
-
-        if guard_batch_watermark(
-            self._last_batch_id(), batch_id, "digest store"
-        ):
-            return  # at-least-once re-delivery
         # the pass-through promise ("incoming columns survive
         # untouched") requires the internal working columns to be
         # collision-free — overwriting a user column and dropping it
@@ -797,9 +554,7 @@ class DigestAdmissionSink:
                 f"DigestAdmissionSink reserves internal column names "
                 f"{sorted(clash)}; rename them in the incoming batch"
             )
-        _table_recover_compact(self._path("corpus"))
         spark = batch.sparkSession
-        nb = self._n_buckets(spark)
         # internal _-prefixed columns (sibling-sink convention): the
         # user's own columns — including any upstream 'digest'
         # metadata — pass through to the corpus untouched
@@ -827,7 +582,7 @@ class DigestAdmissionSink:
             touched = [
                 r[0] for r in rep.select("_bucket").distinct().collect()
             ]
-            store = self._digest_store(spark, batch, touched).select(
+            index = self._index_scan(spark, batch, touched).select(
                 F.col("digest").alias("_digest")
             )
             # screen = two broadcast joins around the STREAMED index:
@@ -836,7 +591,7 @@ class DigestAdmissionSink:
             # runs once even though ``admitted`` evaluates per append.
             # No distinct over the index: it is duplicate-free by
             # construction and semi-join semantics ignore right dups.
-            seen = store.join(
+            seen = index.join(
                 F.broadcast(rep.select("_digest")), "_digest", "left_semi"
             ).persist()
             try:
@@ -868,13 +623,10 @@ class DigestAdmissionSink:
                 seen.unpersist()
         finally:
             rep.unpersist()
-        # touched-dirs-only manifest refresh, before the watermark
-        # (see NearDupAdmissionSink.process)
-        _manifest_update(self._path("digests"), "bucket", touched)
-        _watermark_commit(self.root, batch_id)
+        return touched
 
 
-class PhashAdmissionSink:
+class PhashAdmissionSink(_AdmissionSink):
     """foreachBatch body for PERCEPTUAL near-dup admission of media —
     the fuzzy twin of ``DigestAdmissionSink`` exactly as
     ``NearDupAdmissionSink`` is the fuzzy twin of exact text dedup:
@@ -919,10 +671,12 @@ class PhashAdmissionSink:
     (``blocks``/``max_hamming``/``hash_col``): a restart with a
     different layout would probe incompatible table keys, so a
     mismatch raises instead of silently admitting everything.
-    Replay safety and maintenance follow the admission-store
-    conventions (batch-id watermark written LAST, rename-swap
-    ``compact()`` with torn-state healing, corpus-first append
-    order — duplication on replay, never loss)."""
+    Replay and maintenance: ``_AdmissionSink``."""
+
+    INDEX, KEY_COLS = "phashes", ("tbl", "key")
+    TABLES = ("corpus", "phashes")
+    PINNED = ("blocks", "max_hamming", "hash_col")
+    WHAT = "phash store"
 
     def __init__(
         self,
@@ -940,152 +694,25 @@ class PhashAdmissionSink:
         self.max_hamming, self.blocks = max_hamming, blocks
         self.n_buckets = n_buckets  # creation default; _PARAMS wins
 
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _watermark_read(self.root)
-
-    def _params(self) -> dict:
-        """Live store parameters; creates them for a fresh store,
-        refuses a layout mismatch or a store with lost _PARAMS."""
-        import os
-
-        want = {
-            "layout": "bucketed",
-            "n_buckets": self.n_buckets,
-            "blocks": self.blocks,
-            "max_hamming": self.max_hamming,
-            "hash_col": self.hash_col,
-        }
-        params = _store_params_read(self.root)
-        if params is None:
-            if os.path.exists(self._path("phashes")):
-                raise ValueError(
-                    f"phash index at {self._path('phashes')} exists but "
-                    "the store's _PARAMS file is missing — restore it "
-                    "(the table-key layout cannot be inferred from data)"
-                )
-            _store_params_write(self.root, want)
-            return want
-        for k in ("blocks", "max_hamming", "hash_col"):
-            if params.get(k) != want[k]:
-                raise ValueError(
-                    f"phash store {k}={params.get(k)!r} does not match "
-                    f"sink {k}={want[k]!r} — the persisted table keys "
-                    "are layout-specific; rebuild the store or match "
-                    "the sink configuration"
-                )
-        return params
-
-    def read_corpus(self, spark) -> DataFrame | None:
-        import os
-
-        p = self._path("corpus")
-        _table_recover_compact(p)
-        return spark.read.parquet(p) if os.path.exists(p) else None
-
-    def _phash_store(
-        self, spark, batch: DataFrame, touched: "list[int] | None" = None
-    ) -> DataFrame:
-        import os
-
-        p = self._path("phashes")
-        _table_recover_compact(p)
-        if os.path.exists(p):
-            if touched:
-                # listing-free screen: touched buckets resolved to
-                # explicit files from the manifest (r13 — removes
-                # the per-directory listing constant the r12
-                # rehearsal measured)
-                pruned = _manifest_pruned_scan(spark, p, "bucket", touched)
-                if pruned is not None:
-                    return pruned
-            store = spark.read.parquet(p)
-            if touched is not None:
-                # empty batch => empty touched: read nothing rather
-                # than lean on isin([]) semantics; no-manifest
-                # legacy stores keep the listing + partition filter
-                store = (
-                    store.filter(F.col("bucket").isin(touched))
-                    if touched
-                    else store.limit(0)
-                )
-            return store
+    def _index_schema(self, batch: DataFrame):
         from pyspark.sql.types import LongType, StructField, StructType
 
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(
-                        self.id_col, batch.schema[self.id_col].dataType
-                    ),
-                    StructField("sh", LongType()),
-                    StructField("tbl", LongType()),
-                    StructField("key", LongType()),
-                ]
-            ),
+        return StructType(
+            [
+                StructField(self.id_col, batch.schema[self.id_col].dataType),
+                StructField("sh", LongType()),
+                StructField("tbl", LongType()),
+                StructField("key", LongType()),
+            ]
         )
 
-    def compact(
-        self,
-        spark,
-        files_per_table: int | None = None,
-        n_buckets: int | None = None,
-    ) -> dict:
-        """Small-files maintenance, stream stopped — shared mechanics
-        (see ``NearDupAdmissionSink.compact``); ``n_buckets``
-        re-buckets the phash index while compacting."""
-        params = self._params()
-        if n_buckets is not None and n_buckets != params["n_buckets"]:
-            import os
-            import shutil
-
-            p = self._path("phashes")
-            _table_recover_compact(p)
-            if os.path.exists(p):
-                tmp, old = p + ".compact.tmp", p + ".compact.old"
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    spark.read.parquet(p)
-                    .drop("bucket")
-                    .withColumn(
-                        "bucket", _bucket_expr(["tbl", "key"], n_buckets)
-                    )
-                    .repartition("bucket")
-                    .write.partitionBy("bucket")
-                    .mode("overwrite")
-                    .parquet(tmp)
-                )
-                os.rename(p, old)
-                os.rename(tmp, p)
-                shutil.rmtree(old)
-            _store_params_write(self.root, {**params, "n_buckets": n_buckets})
-        return _tables_compact(
-            spark,
-            {n: self._path(n) for n in ("corpus", "phashes")},
-            files_per_table,
-            partitioned={"phashes": ["bucket"]},
-        )
-
-    def process(self, batch: DataFrame, batch_id: int) -> None:
+    def _admit(self, batch: DataFrame, nb: int) -> list[int]:
         from tidb_cdc_spark.functions.dedup import (
             manku_table_keys,
             simhash_pairs_from_sigs,
         )
         from tidb_cdc_spark.functions.multimodal import perceptual_hashes
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
-        if guard_batch_watermark(
-            self._last_batch_id(), batch_id, "phash store"
-        ):
-            return  # at-least-once re-delivery
-        _table_recover_compact(self._path("corpus"))
-        params = self._params()
-        nb = int(params["n_buckets"])
         spark = batch.sparkSession
         # slim (id, hash) rows off the real pixel path; NULL hashes
         # (no pixel evidence) bypass the screen entirely
@@ -1103,12 +730,12 @@ class PhashAdmissionSink:
             touched = [
                 r[0] for r in keyed.select("_bucket").distinct().collect()
             ]
-            store = self._phash_store(spark, batch, touched)
+            index = self._index_scan(spark, batch, touched)
             # cross-batch candidates: index STREAMED against the
             # broadcast batch keys; exact Hamming verifies every
             # candidate — banding generates, bit_count decides
             cross = (
-                store.join(
+                index.join(
                     F.broadcast(
                         keyed.select(
                             F.col("_table").alias("tbl"),
@@ -1173,13 +800,10 @@ class PhashAdmissionSink:
                 rejected.unpersist()
         finally:
             keyed.unpersist()
-        # touched-dirs-only manifest refresh, before the watermark
-        # (see NearDupAdmissionSink.process)
-        _manifest_update(self._path("phashes"), "bucket", touched)
-        _watermark_commit(self.root, batch_id)
+        return touched
 
 
-class AudioWindowAdmissionSink:
+class AudioWindowAdmissionSink(_AdmissionSink):
     """foreachBatch body for TRIM-ROBUST audio admission — the
     ingest twin of ``multimodal_audio_trim_audit`` (its batch form),
     closing the transform gap the other two media admission passes
@@ -1223,11 +847,13 @@ class AudioWindowAdmissionSink:
     (``window_samples`` — stored hashes are meaningless under a
     different window size) AND ``min_shared_windows`` (a restart
     with a different threshold would silently change which stored
-    evidence rejects); a mismatch raises. Replay safety and
-    maintenance follow the admission-store conventions (batch-id
-    watermark written LAST, corpus-first append order — duplication
-    on replay, never loss; manifest refreshed per touched bucket
-    before the watermark; rename-swap ``compact()``)."""
+    evidence rejects); a mismatch raises. Replay and maintenance:
+    ``_AdmissionSink``."""
+
+    INDEX, KEY_COLS = "windows", ("whash",)
+    TABLES = ("corpus", "windows")
+    PINNED = ("window_samples", "min_shared_windows")
+    WHAT = "audio window store"
 
     def __init__(
         self,
@@ -1244,138 +870,19 @@ class AudioWindowAdmissionSink:
         self.min_shared_windows = min_shared_windows
         self.n_buckets = n_buckets  # creation default; _PARAMS wins
 
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _watermark_read(self.root)
-
-    def _params(self) -> dict:
-        """Live store parameters; creates them for a fresh store,
-        refuses a layout mismatch or a store with lost _PARAMS."""
-        import os
-
-        want = {
-            "layout": "bucketed",
-            "n_buckets": self.n_buckets,
-            "window_samples": self.window_samples,
-            "min_shared_windows": self.min_shared_windows,
-        }
-        params = _store_params_read(self.root)
-        if params is None:
-            if os.path.exists(self._path("windows")):
-                raise ValueError(
-                    f"window index at {self._path('windows')} exists "
-                    "but the store's _PARAMS file is missing — restore "
-                    "it (the window layout cannot be inferred from data)"
-                )
-            _store_params_write(self.root, want)
-            return want
-        for k in ("window_samples", "min_shared_windows"):
-            if params.get(k) != want[k]:
-                raise ValueError(
-                    f"audio window store {k}={params.get(k)!r} does not "
-                    f"match sink {k}={want[k]!r} — the persisted window "
-                    "hashes are layout-specific; rebuild the store or "
-                    "match the sink configuration"
-                )
-        return params
-
-    def read_corpus(self, spark) -> DataFrame | None:
-        import os
-
-        p = self._path("corpus")
-        _table_recover_compact(p)
-        return spark.read.parquet(p) if os.path.exists(p) else None
-
-    def _window_store(
-        self, spark, batch: DataFrame, touched: "list[int] | None" = None
-    ) -> DataFrame:
-        import os
-
-        p = self._path("windows")
-        _table_recover_compact(p)
-        if os.path.exists(p):
-            if touched:
-                # listing-free screen via the store manifest (r13)
-                pruned = _manifest_pruned_scan(spark, p, "bucket", touched)
-                if pruned is not None:
-                    return pruned
-            store = spark.read.parquet(p)
-            if touched is not None:
-                store = (
-                    store.filter(F.col("bucket").isin(touched))
-                    if touched
-                    else store.limit(0)
-                )
-            return store
+    def _index_schema(self, batch: DataFrame):
         from pyspark.sql.types import LongType, StructField, StructType
 
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(
-                        self.id_col, batch.schema[self.id_col].dataType
-                    ),
-                    StructField("whash", LongType()),
-                ]
-            ),
+        return StructType(
+            [
+                StructField(self.id_col, batch.schema[self.id_col].dataType),
+                StructField("whash", LongType()),
+            ]
         )
 
-    def compact(
-        self,
-        spark,
-        files_per_table: int | None = None,
-        n_buckets: int | None = None,
-    ) -> dict:
-        """Small-files maintenance, stream stopped — shared
-        mechanics; ``n_buckets`` re-buckets the window index while
-        compacting (manifest rebuilt by the rewrite)."""
-        params = self._params()
-        if n_buckets is not None and n_buckets != params["n_buckets"]:
-            import os
-            import shutil
-
-            p = self._path("windows")
-            _table_recover_compact(p)
-            if os.path.exists(p):
-                tmp, old = p + ".compact.tmp", p + ".compact.old"
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    spark.read.parquet(p)
-                    .drop("bucket")
-                    .withColumn("bucket", _bucket_expr(["whash"], n_buckets))
-                    .repartition("bucket")
-                    .write.partitionBy("bucket")
-                    .mode("overwrite")
-                    .parquet(tmp)
-                )
-                os.rename(p, old)
-                os.rename(tmp, p)
-                shutil.rmtree(old)
-                _manifest_rebuild(p, "bucket")
-            _store_params_write(self.root, {**params, "n_buckets": n_buckets})
-        return _tables_compact(
-            spark,
-            {n: self._path(n) for n in ("corpus", "windows")},
-            files_per_table,
-            partitioned={"windows": ["bucket"]},
-        )
-
-    def process(self, batch: DataFrame, batch_id: int) -> None:
+    def _admit(self, batch: DataFrame, nb: int) -> list[int]:
         from tidb_cdc_spark.functions.multimodal import audio_window_hashes
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
-        if guard_batch_watermark(
-            self._last_batch_id(), batch_id, "audio window store"
-        ):
-            return  # at-least-once re-delivery
-        _table_recover_compact(self._path("corpus"))
-        params = self._params()
-        nb = int(params["n_buckets"])
         spark = batch.sparkSession
         # DISTINCT (id, whash) rows off the real sample path; clips
         # without decodable PCM emit no rows and bypass the screen.
@@ -1400,11 +907,11 @@ class AudioWindowAdmissionSink:
             touched = [
                 r[0] for r in wh.select("_bucket").distinct().collect()
             ]
-            store = self._window_store(spark, batch, touched)
+            index = self._index_scan(spark, batch, touched)
             # cross-batch: shared-window counts per (new, stored)
             # pair — index STREAMED against the broadcast batch rows
             cross = (
-                store.select(
+                index.select(
                     F.col(self.id_col).alias("_corpus_id"),
                     F.col("whash").alias("_wh"),
                 )
@@ -1463,116 +970,67 @@ class AudioWindowAdmissionSink:
                 rejected.unpersist()
         finally:
             wh.unpersist()
-        # touched-dirs-only manifest refresh, before the watermark
-        _manifest_update(self._path("windows"), "bucket", touched)
-        _watermark_commit(self.root, batch_id)
+        return touched
 
 
-# ------------------------------------------------ swap-store helpers
-# shared by the copy-on-write sinks (CountMinSink, PcaMomentSink):
-# a table directory committed by a two-rename swap with the batch-id
-# watermark INSIDE the directory (table + watermark commit in one
-# atomic rename — no double-merge window), plus torn-swap healing.
+class _SwapTableSink:
+    """A sink whose whole state is one small table, rewritten every
+    batch and swapped in with ``_BATCH`` and ``_PARAMS`` inside the
+    directory (``store.py``, protocol 3): table, watermark and
+    parameters commit in one rename, so a re-delivered batch is a
+    true no-op. A subclass declares ``TABLE``."""
+
+    TABLE: str
+
+    def _live(self) -> str:
+        return os.path.join(self.root, self.TABLE)
+
+    def _last_batch_id(self) -> int | None:
+        store.recover(self._live())
+        return store.read_watermark(self._live())
+
+    def read_table(self, spark) -> "DataFrame | None":
+        store.recover(self._live())
+        p = self._live()
+        return spark.read.parquet(p) if os.path.exists(p) else None
+
+    def _stored_params(self) -> dict:
+        store.recover(self._live())
+        return store.read_json(os.path.join(self._live(), "_PARAMS")) or {}
+
+    def _check_params(self, expected: dict) -> None:
+        """Raise before a merge would silently union incompatible
+        state: a table built under different parameters (CMS
+        depth/width/seed, PCA vector dim, HLL lgk) merges without any
+        schema error but corrupts every later estimate."""
+        stored = self._stored_params()
+        mismatched = {
+            k: (stored[k], v)
+            for k, v in expected.items()
+            if stored.get(k) is not None and stored[k] != v
+        }
+        if mismatched:
+            detail = ", ".join(
+                f"{k}: stored={s!r} vs sink={v!r}"
+                for k, (s, v) in sorted(mismatched.items())
+            )
+            raise ValueError(
+                f"{type(self).__name__}: persisted state at "
+                f"{self._live()!r} was built with different parameters "
+                f"({detail}) — merging would corrupt every later "
+                "estimate; use a fresh root or matching parameters"
+            )
+
+    def _commit(self, df: DataFrame, batch_id: int, params: dict) -> None:
+        tmp = store.staging(self._live())
+        # ≤ a few thousand rows — one file is the right layout
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        store.commit_watermark(tmp, batch_id)
+        store.atomic_write(os.path.join(tmp, "_PARAMS"), params)
+        store.swap_in(tmp, self._live())
 
 
-def _swap_recover(path: str) -> None:
-    """Heal a crash between the two renames: live dir missing +
-    ``.swap.old`` intact → restore; both present → drop old."""
-    import os
-    import shutil
-
-    old = path + ".swap.old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    shutil.rmtree(path + ".swap.tmp", ignore_errors=True)
-
-
-def _swap_read(spark, path: str) -> "DataFrame | None":
-    import os
-
-    _swap_recover(path)
-    return spark.read.parquet(path) if os.path.exists(path) else None
-
-
-def _swap_batch_id(path: str) -> int | None:
-    import os
-
-    _swap_recover(path)
-    p = os.path.join(path, "_BATCH")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def _swap_commit(
-    df: DataFrame, path: str, batch_id: int, params: dict | None = None
-) -> None:
-    import json
-    import os
-    import shutil
-
-    tmp, old = path + ".swap.tmp", path + ".swap.old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_BATCH"), "w") as f:
-        f.write(str(batch_id))
-    if params is not None:
-        # sink parameters ride inside the swapped directory (same
-        # atomic rename as table + watermark) so a restart can verify
-        # compatibility before merging — see _check_swap_params
-        with open(os.path.join(tmp, "_PARAMS"), "w") as f:
-            json.dump(params, f, sort_keys=True)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _swap_params(path: str) -> dict | None:
-    import json
-    import os
-
-    _swap_recover(path)
-    p = os.path.join(path, "_PARAMS")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _check_swap_params(path: str, expected: dict, what: str) -> None:
-    """Raise before a merge would silently union incompatible state:
-    a persisted sketch/moment table built under different parameters
-    (CMS depth/width/seed, PCA vector dim) merges without any schema
-    error but corrupts every later estimate. Stores written before
-    params were recorded (no ``_PARAMS``) are tolerated and stamped
-    at the next commit."""
-    stored = _swap_params(path)
-    if stored is None:
-        return
-    mismatched = {
-        k: (stored[k], v)
-        for k, v in expected.items()
-        if k in stored and stored[k] is not None and stored[k] != v
-    }
-    if mismatched:
-        detail = ", ".join(
-            f"{k}: stored={s!r} vs sink={v!r}"
-            for k, (s, v) in sorted(mismatched.items())
-        )
-        raise ValueError(
-            f"{what}: persisted state at {path!r} was built with "
-            f"different parameters ({detail}) — merging would corrupt "
-            "every later estimate; use a fresh root or matching "
-            "parameters"
-        )
-
-
-class CountMinSink:
+class CountMinSink(_SwapTableSink):
     """foreachBatch body maintaining a persistent Count-Min cell
     table (functions/sketch.py) over a stream — the sketch's real
     habitat: per-batch work is one combining groupBy of the BATCH
@@ -1582,21 +1040,15 @@ class CountMinSink:
     with key cardinality).
 
     The cell table is copy-on-write (merge = union + re-sum →
-    rewrite), swapped in by the same two-rename discipline as
-    ``NearDupAdmissionSink.compact`` — a crash between the renames
-    leaves ``cells.swap.old``, healed before the next merge. The
-    batch-id watermark lives INSIDE the swapped directory
-    (``cells/_BATCH``, written before the rename; parquet readers
-    ignore ``_``-prefixed files), so table and watermark commit in
-    the SAME atomic rename — there is no window where the merge
-    landed but the watermark didn't, and at-least-once re-delivery
-    is a true no-op. A fresh checkpoint against an existing root
-    raises (guard_batch_watermark lineage rule).
+    rewrite), committed by ``_SwapTableSink``. A fresh checkpoint
+    against an existing root raises (``guard_batch_watermark``).
 
     Attach with ``stream.writeStream.foreachBatch(sink.process)``;
     query any time with ``estimates(spark, keys)`` — estimates never
     under-count, so downstream screening keeps guaranteed recall.
     """
+
+    TABLE = "cells"
 
     def __init__(
         self,
@@ -1609,17 +1061,6 @@ class CountMinSink:
         self.root = root
         self.key_col = key_col
         self.depth, self.width, self.seed = depth, width, seed
-
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _swap_batch_id(self._path("cells"))
-
-    def read_table(self, spark) -> "DataFrame | None":
-        return _swap_read(spark, self._path("cells"))
 
     def estimates(self, spark, keys: DataFrame) -> DataFrame:
         """``keys`` + ``cms_est`` from the current persisted table
@@ -1635,25 +1076,22 @@ class CountMinSink:
 
     def process(self, batch: DataFrame, batch_id: int) -> None:
         from tidb_cdc_spark.functions.sketch import count_min_table
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
         if guard_batch_watermark(self._last_batch_id(), batch_id, "CMS store"):
             return  # at-least-once re-delivery
         params = {"depth": self.depth, "width": self.width, "seed": self.seed}
-        _check_swap_params(self._path("cells"), params, "CountMinSink")
-        spark = batch.sparkSession
+        self._check_params(params)
         merged = count_min_table(
             batch, self.key_col, self.depth, self.width, self.seed
         )
-        existing = self.read_table(spark)  # heals any torn swap
+        existing = self.read_table(batch.sparkSession)
         if existing is not None:
             merged = (
                 merged.unionByName(existing)
                 .groupBy("row", "bucket")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        # ≤ depth×width rows — one file is the right layout
-        _swap_commit(merged, self._path("cells"), batch_id, params)
+        self._commit(merged, batch_id, params)
 
 
 class WinnowOverlapSink:
@@ -1672,12 +1110,10 @@ class WinnowOverlapSink:
     Matches land in ``overlaps``, the batch's fingerprints in
     ``fps`` — both PARTITIONED BY batch_id and written with dynamic
     partition overwrite, so a re-delivered batch REPLACES its own
-    partition instead of appending a second copy. Batch-id watermark
-    (written LAST, atomic rename) makes at-least-once re-delivery a
-    no-op; and a crash BETWEEN the partition writes and the
-    watermark is healed structurally: the store join reads only
-    ``batch_id < current`` partitions (partition-pruned), so a torn
-    batch's own fingerprints never pair against the re-run, and
+    partition instead of appending a second copy. The ``_BATCH``
+    watermark is committed last (``store.py``); the store join reads
+    only ``batch_id < current`` partitions, so a torn batch's own
+    fingerprints never pair against its re-run, and
     ``read_overlaps`` serves only partitions at or below the
     committed watermark.
 
@@ -1705,62 +1141,22 @@ class WinnowOverlapSink:
         self.max_doc_freq = max_doc_freq
 
     def _path(self, name: str) -> str:
-        import os
-
         return os.path.join(self.root, name)
 
     def _last_batch_id(self) -> int | None:
-        return _watermark_read(self.root)
-
-    @staticmethod
-    def _migrate_flat_store(spark, path: str) -> None:
-        """One-time upgrade of a pre-partitioned-layout store (flat
-        part-files appended by the old code, fps without a batch_id
-        column): rewrite it PARTITIONED BY batch_id (legacy rows get
-        batch_id=-1 — always below any live batch, i.e. committed
-        history), swapped in by two renames with crash recovery.
-        Mixing flat files with batch_id=N directories would break
-        Spark partition discovery entirely."""
-        import os
-        import shutil
-
-        old_p, tmp = path + ".migrate.old", path + ".migrate.tmp"
-        if os.path.exists(old_p):  # crashed mid-migration: heal
-            if os.path.exists(path):
-                shutil.rmtree(old_p)
-            else:
-                os.rename(old_p, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(path):
-            return
-        flat = any(f.startswith("part-") for f in os.listdir(path))
-        if not flat:
-            return
-        df = spark.read.parquet(path)
-        if "batch_id" not in df.columns:
-            df = df.withColumn("batch_id", F.lit(-1))
-        df.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-        os.rename(path, old_p)
-        os.rename(tmp, path)
-        shutil.rmtree(old_p)
+        return store.read_watermark(self.root)
 
     def read_overlaps(self, spark) -> "DataFrame | None":
-        import os
-
         p = self._path("overlaps")
         wm = self._last_batch_id()
         if wm is None or not os.path.exists(p):
             return None
-        self._migrate_flat_store(spark, p)
         # exclude any torn partition written by a batch that crashed
         # before committing its watermark (partition-pruned filter)
         return spark.read.parquet(p).filter(F.col("batch_id") <= wm)
 
     def process(self, batch: DataFrame, batch_id: int) -> None:
-        import os
-
         from tidb_cdc_spark.functions.winnow import winnow_fingerprints
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
         if guard_batch_watermark(
             self._last_batch_id(), batch_id, "winnow store"
@@ -1775,13 +1171,11 @@ class WinnowOverlapSink:
             batch, self.k, self.w, self.id_col, self.text_col
         ).persist()
         store_p = self._path("fps")
-        self._migrate_flat_store(spark, store_p)
-        self._migrate_flat_store(spark, self._path("overlaps"))
         # batch_id < current: a torn partition from a crashed run of
         # THIS batch must not join against its own re-run (it would
         # emit the intra-batch pairs a second time via the store
         # path, in both orientations)
-        store = (
+        fp_store = (
             spark.read.parquet(store_p)
             .filter(F.col("batch_id") < batch_id)
             .drop("batch_id")
@@ -1802,16 +1196,16 @@ class WinnowOverlapSink:
                     F.lit("batch").alias("_src"),
                 )
             ]
-            if store is not None:
+            if fp_store is not None:
                 # viral-fp cap and the join share ONE persisted read
                 viral = (
-                    store.groupBy("fp")
+                    fp_store.groupBy("fp")
                     .agg(F.count(F.lit(1)).alias("_df"))
                     .filter(F.col("_df") > self.max_doc_freq)
                     .select("fp")
                 )
                 parts.append(
-                    store.join(F.broadcast(viral), "fp", "left_anti")
+                    fp_store.join(F.broadcast(viral), "fp", "left_anti")
                     .select(
                         F.col("doc_id").alias("corpus_id"),
                         "fp",
@@ -1864,12 +1258,12 @@ class WinnowOverlapSink:
             fps.unpersist()
             if overlaps is not None:
                 overlaps.unpersist()
-            if store is not None:
-                store.unpersist()
-        _watermark_commit(self.root, batch_id)
+            if fp_store is not None:
+                fp_store.unpersist()
+        store.commit_watermark(self.root, batch_id)
 
 
-class PcaMomentSink:
+class PcaMomentSink(_SwapTableSink):
     """foreachBatch body that maintains the PCA moment table
     (functions/pca.py: n, Σx, Σxxᵀ as d²+d+1 (pos, val) scalars)
     over a vector stream — INCREMENTAL PCA with constant state:
@@ -1878,27 +1272,17 @@ class PcaMomentSink:
     cell table; ``fit(spark)`` eigendecomposes the CURRENT moments at
     any time, giving the same model a one-shot ``fit_pca`` over
     everything seen so far would (pinned by test up to float
-    addition order).
-
-    Same commit discipline as ``CountMinSink``: copy-on-write swap,
-    watermark INSIDE the swapped directory (table + batch id commit
-    in one rename — replay-safe with no double-merge window).
+    addition order). Committed by ``_SwapTableSink``.
     """
+
+    TABLE = "moments"
 
     def __init__(self, root: str, vec_col: str = "embedding"):
         self.root = root
         self.vec_col = vec_col
 
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _swap_batch_id(self._path("moments"))
-
     def read_moments(self, spark) -> "DataFrame | None":
-        return _swap_read(spark, self._path("moments"))
+        return self.read_table(spark)
 
     def fit(self, spark, k: int = 8):
         """PcaModel from the current persisted moments (None before
@@ -1915,8 +1299,9 @@ class PcaMomentSink:
         return _model_from_moments(vals, k)
 
     def process(self, batch: DataFrame, batch_id: int) -> None:
+        import math
+
         from tidb_cdc_spark.functions.pca import moment_partials
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
         if guard_batch_watermark(
             self._last_batch_id(), batch_id, "PCA moment store"
@@ -1928,9 +1313,6 @@ class PcaMomentSink:
         # table itself (max pos = d²+d, and the partials are cached so
         # the probe costs no extra pass over the batch); an empty
         # batch has no dim and the stored value carries forward.
-        import math
-
-        spark = batch.sparkSession
         partials = moment_partials(batch, self.vec_col).persist()
         try:
             m = partials.agg(F.max("pos")).collect()[0][0]
@@ -1939,26 +1321,23 @@ class PcaMomentSink:
                 if m is None
                 else int((math.isqrt(4 * int(m) + 1) - 1) // 2)
             )
-            stored = _swap_params(self._path("moments")) or {}
             if dim is not None:
-                _check_swap_params(
-                    self._path("moments"), {"dim": dim}, "PcaMomentSink"
-                )
-            params = {"dim": dim if dim is not None else stored.get("dim")}
+                self._check_params({"dim": dim})
+            params = {"dim": dim if dim is not None else self._stored_params().get("dim")}
             merged = partials
-            existing = self.read_moments(spark)
+            existing = self.read_table(batch.sparkSession)
             if existing is not None:
                 merged = (
                     merged.unionByName(existing)
                     .groupBy("pos")
                     .agg(F.sum("val").alias("val"))
                 )
-            _swap_commit(merged, self._path("moments"), batch_id, params)
+            self._commit(merged, batch_id, params)
         finally:
             partials.unpersist()
 
 
-class HllDistinctSink:
+class HllDistinctSink(_SwapTableSink):
     """foreachBatch body maintaining per-group DataSketches HLL
     sketches over a stream — unbounded distinct counting ("unique
     users per event type, ever") with CONSTANT state per group:
@@ -1968,15 +1347,14 @@ class HllDistinctSink:
     of the BATCH plus one ``hll_union_agg`` merge with the stored
     table (functions/sketch.py HLL surface).
 
-    Same commit discipline as ``CountMinSink``: copy-on-write swap,
-    batch-id watermark INSIDE the swapped directory (table +
-    watermark commit in one rename — replay-safe, no double-merge
-    window), ``_PARAMS`` compatibility guard (merging sketches built
-    at a different lgk or over a different key column would not
-    error — DataSketches refuses mismatched lgk only sometimes, and
-    a different key silently produces a union of different
-    universes).
+    Committed by ``_SwapTableSink``, whose ``_PARAMS`` guard matters
+    here: merging sketches built at a different lgk or over a
+    different key column would not error — DataSketches refuses
+    mismatched lgk only sometimes, and a different key silently
+    produces a union of different universes.
     """
+
+    TABLE = "sketches"
 
     def __init__(
         self,
@@ -1989,17 +1367,6 @@ class HllDistinctSink:
         self.key_col = key_col
         self.group_cols = list(group_cols)
         self.lgk = lgk
-
-    def _path(self, name: str) -> str:
-        import os
-
-        return os.path.join(self.root, name)
-
-    def _last_batch_id(self) -> int | None:
-        return _swap_batch_id(self._path("sketches"))
-
-    def read_table(self, spark) -> "DataFrame | None":
-        return _swap_read(spark, self._path("sketches"))
 
     def estimates(self, spark) -> "DataFrame | None":
         """(group cols…, distinct_est) from the current persisted
@@ -2016,7 +1383,6 @@ class HllDistinctSink:
             hll_distinct_table,
             hll_merge_tables,
         )
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
         if guard_batch_watermark(
             self._last_batch_id(), batch_id, "HLL store"
@@ -2027,16 +1393,14 @@ class HllDistinctSink:
             "key_col": self.key_col,
             "group_cols": self.group_cols,
         }
-        _check_swap_params(self._path("sketches"), params, "HllDistinctSink")
-        spark = batch.sparkSession
+        self._check_params(params)
         merged = hll_distinct_table(
             batch, self.key_col, self.group_cols, self.lgk
         )
-        existing = self.read_table(spark)  # heals any torn swap
+        existing = self.read_table(batch.sparkSession)
         if existing is not None:
             merged = hll_merge_tables(merged, existing, self.group_cols)
-        # one sketch row per group — one file is the right layout
-        _swap_commit(merged, self._path("sketches"), batch_id, params)
+        self._commit(merged, batch_id, params)
 
 
 class IvfIndexSink:
@@ -2073,21 +1437,17 @@ class IvfIndexSink:
       never reads the store (append-only ingest has no screen —
       compose with ``DigestAdmissionSink`` upstream when ingest
       must also dedup);
-    - replay: batch-id watermark written LAST (atomic rename) makes
-      re-delivery a no-op ONCE the watermark commit succeeded. The
-      window in between is NOT idempotent: a crash after the index
-      append but before the commit means the re-delivered batch
-      appends the same vectors again (duplicate (vec_id, cell) rows
-      — duplication, never loss, the admission stores' shared
-      failure direction). Both read surfaces heal it: ``search()``
-      dedupes candidates on vec_id over the PRUNED probed-cell scan
-      (fixed centroids ⇒ torn duplicates are bit-identical rows, so
-      keep-any is exact; cost ∝ probed cells, not the corpus), and
-      ``compact()`` drops duplicate vec_ids during the rewrite — the
-      permanent heal;
+    - replay: the ``_BATCH`` watermark is committed last
+      (``store.py``), so a crash after the index append but before
+      it makes the re-delivered batch append the same vectors again
+      (duplicate (vec_id, cell) rows — duplication, never loss).
+      Both read surfaces heal it: ``search()`` dedupes candidates on
+      vec_id over the PRUNED probed-cell scan (fixed centroids ⇒
+      torn duplicates are bit-identical rows, so keep-any is exact;
+      cost ∝ probed cells, not the corpus), and ``compact()`` drops
+      duplicate vec_ids during the rewrite — the permanent heal;
     - ``compact()`` collapses the per-batch file fragments per cell
-      (rename-swap, torn-state healed — the admission sinks'
-      shared mechanics) and dedupes vec_id as above.
+      and dedupes vec_id as above.
     """
 
     def __init__(
@@ -2105,18 +1465,26 @@ class IvfIndexSink:
         self._centers = None  # driver cache: k×d, metadata-sized
 
     def _path(self, name: str) -> str:
-        import os
-
         return os.path.join(self.root, name)
 
     def _last_batch_id(self) -> int | None:
-        return _watermark_read(self.root)
+        return store.read_watermark(self.root)
+
+    def _heal(self) -> None:
+        """Finish a committed rebuild, roll back torn compactions and
+        uncommitted rebuild staging."""
+        if store.roll_forward(self._path("_REBUILD"), self._publish_rebuild):
+            self._centers = None
+        for name in ("index", "centroids"):
+            store.recover(self._path(name))
+
+    def _publish_rebuild(self, params: dict) -> None:
+        store.atomic_write(self._path("_PARAMS"), params)
+        _manifest_rebuild(self._path("index"), "cell")
 
     def _load_centers(self, spark):
         """k×d numpy centroid matrix (driver cache — k rows of
         metadata, never corpus-sized), or None before the fit."""
-        import os
-
         import numpy as np
 
         if self._centers is None and os.path.exists(self._path("centroids")):
@@ -2136,8 +1504,9 @@ class IvfIndexSink:
         k = self._kmeans_fit_write(
             spark, batch, self.n_cells, self.seed, self._path("centroids")
         )
-        _store_params_write(
-            self.root, {"layout": "ivf", "n_cells": k, "seed": self.seed}
+        store.atomic_write(
+            self._path("_PARAMS"),
+            {"layout": "ivf", "n_cells": k, "seed": self.seed},
         )
         self._centers = None  # reload from the authoritative store
 
@@ -2174,7 +1543,7 @@ class IvfIndexSink:
         tagged queries, exact rerank)."""
         from tidb_cdc_spark.functions.similarity import ivf_probe_index
 
-        self._rebuild_roll_forward()  # heal a torn rebuild first
+        self._heal()
         return ivf_probe_index(
             spark,
             self.root,
@@ -2189,18 +1558,15 @@ class IvfIndexSink:
         )
 
     def read_index(self, spark) -> DataFrame | None:
-        import os
-
-        self._rebuild_roll_forward()  # heal a torn rebuild first
+        self._heal()
         p = self._path("index")
-        _table_recover_compact(p)
         return spark.read.parquet(p) if os.path.exists(p) else None
 
     def compact(self, spark, files_per_table: int | None = None) -> dict:
         """Collapse per-batch appends to ~one file per cell (stream
         stopped — same operational contract as the admission sinks'
         ``compact``)."""
-        self._rebuild_roll_forward()  # heal a torn rebuild first
+        self._heal()
         return _tables_compact(
             spark,
             {"index": self._path("index")},
@@ -2208,54 +1574,6 @@ class IvfIndexSink:
             partitioned={"index": ["cell"]},
             dedupe={"index": [self.id_col]},
         )
-
-    # ---------------------------------------- rebuild (maintenance)
-
-    def _journal_path(self) -> str:
-        return self._path("_REBUILD")
-
-    def _rebuild_roll_forward(self) -> bool:
-        """Finish a committed rebuild: every step is idempotent and
-        ordered, so resuming from ANY crash point inside it yields
-        the same final state. Returns True when a journal was
-        applied. The commit point is the ``_REBUILD`` journal (atomic
-        rename): before it exists the live dirs are untouched and
-        stray ``.rebuild.tmp`` dirs are garbage; once it exists the
-        new generation is authoritative and this roll-forward
-        completes it — including the dangerous half-swapped window
-        (index re-bucketed by NEW centroids while the centroids dir
-        still holds the OLD ones would silently mis-prune probes)."""
-        import json
-        import os
-        import shutil
-
-        jp = self._journal_path()
-        if not os.path.exists(jp):
-            # no commit: a crash mid-write left only tmp garbage
-            for name in ("index", "centroids"):
-                shutil.rmtree(
-                    self._path(name) + ".rebuild.tmp", ignore_errors=True
-                )
-            return False
-        with open(jp) as f:
-            params = json.load(f)["params"]
-        for name in ("index", "centroids"):
-            live = self._path(name)
-            tmp, old = live + ".rebuild.tmp", live + ".rebuild.old"
-            if os.path.exists(tmp):
-                if os.path.exists(live) and not os.path.exists(old):
-                    os.rename(live, old)
-                if not os.path.exists(live):
-                    os.rename(tmp, live)
-        _store_params_write(self.root, params)
-        _manifest_rebuild(self._path("index"), "cell")
-        for name in ("index", "centroids"):
-            shutil.rmtree(
-                self._path(name) + ".rebuild.old", ignore_errors=True
-            )
-        os.remove(jp)
-        self._centers = None
-        return True
 
     def rebuild(
         self,
@@ -2276,15 +1594,15 @@ class IvfIndexSink:
         SAMPLE capped at ``max_fit_rows`` (the family's sampled-fit
         story — nobody k-means 100 TB; the cap makes rebuild cost
         ∝ corpus for the assignment pass and O(sample) for the fit),
-        one Arrow pass assigning every vector to its new cell, write
-        BOTH new tables under ``.rebuild.tmp``, then commit via the
-        ``_REBUILD`` journal and roll forward (rename swaps, _PARAMS
-        with a bumped ``version``, manifest rebuild, cleanup). A
-        crash anywhere is healed on the next read/write/rebuild:
-        before the journal → rollback (live generation untouched),
-        after → roll-forward (new generation completes). ``n_cells``
-        defaults to the constructor's (a rebuild is the moment a
-        first-batch-capped k can finally reach it).
+        one Arrow pass assigning every vector to its new cell, both
+        new tables staged, then one ``store.swap_all`` with the new
+        ``_PARAMS`` (bumped ``version``) and a manifest rebuild. A
+        crash before its journal leaves the old generation; after
+        it, the next read, write or rebuild completes the new one —
+        never index cells from one generation under the other's
+        centroids. ``n_cells`` defaults to the constructor's (a
+        rebuild is the moment a first-batch-capped k can finally
+        reach it).
 
         Cost at scale: fit O(sample × k × iters); assignment one
         broadcast-k×d Arrow pass over the corpus; the write is the
@@ -2293,22 +1611,20 @@ class IvfIndexSink:
         cold): ~9 s for a 5k × 16-dim index at k=8 — dominated by
         the KMeans fit + the two Spark writes' fixed overheads, with
         the data-dependent part linear in corpus rows."""
-        import json
-        import os
+        import numpy as np
 
-        self._rebuild_roll_forward()  # finish any prior torn rebuild
-        _table_recover_compact(self._path("index"))
-        params = _store_params_read(self.root)
-        if params is None or not os.path.exists(self._path("index")):
-            raise ValueError(
-                "rebuild() needs a live fitted index "
-                f"(none at {self.root})"
-            )
         from tidb_cdc_spark.functions.similarity import (
             _probe_cells_udf,
             as_double,
         )
 
+        self._heal()
+        params = store.read_json(self._path("_PARAMS"))
+        if params is None or not os.path.exists(self._path("index")):
+            raise ValueError(
+                "rebuild() needs a live fitted index "
+                f"(none at {self.root})"
+            )
         k_req = int(n_cells if n_cells is not None else self.n_cells)
         fseed = int(seed if seed is not None else params.get("seed", self.seed))
         src = (
@@ -2322,14 +1638,10 @@ class IvfIndexSink:
         total = src.count()
         frac = min(1.0, max_fit_rows / max(total, 1))
         fit_src = src.sample(frac, fseed) if frac < 1.0 else src
-        cent_tmp = self._path("centroids") + ".rebuild.tmp"
-        idx_tmp = self._path("index") + ".rebuild.tmp"
+        cent_tmp = store.staging(self._path("centroids"))
+        idx_tmp = store.staging(self._path("index"))
         k = self._kmeans_fit_write(spark, fit_src, k_req, fseed, cent_tmp)
-        rows = (
-            spark.read.parquet(cent_tmp).orderBy("cell").collect()
-        )
-        import numpy as np
-
+        rows = spark.read.parquet(cent_tmp).orderBy("cell").collect()
         centers = np.stack([np.asarray(r.center) for r in rows])
         assign = _probe_cells_udf(centers, 1)
         (
@@ -2342,17 +1654,13 @@ class IvfIndexSink:
             .parquet(idx_tmp)
         )
         version = int(params.get("version", 1)) + 1
-        new_params = {
-            "layout": "ivf",
-            "n_cells": k,
-            "seed": fseed,
-            "version": version,
-        }
-        tmp = self._journal_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"params": new_params}, f, sort_keys=True)
-        os.replace(tmp, self._journal_path())  # COMMIT POINT
-        self._rebuild_roll_forward()
+        store.swap_all(
+            self._path("_REBUILD"),
+            [self._path("index"), self._path("centroids")],
+            {"layout": "ivf", "n_cells": k, "seed": fseed, "version": version},
+            self._publish_rebuild,
+        )
+        self._centers = None
         return {"n_cells": k, "rows": total, "version": version}
 
     def process(self, batch: DataFrame, batch_id: int) -> None:
@@ -2360,22 +1668,19 @@ class IvfIndexSink:
             _probe_cells_udf,
             as_double,
         )
-        from tidb_cdc_spark.streaming.sinks import guard_batch_watermark
 
         if guard_batch_watermark(
             self._last_batch_id(), batch_id, "IVF index"
         ):
             return  # at-least-once re-delivery
-        self._rebuild_roll_forward()  # heal a torn rebuild first
-        params = _store_params_read(self.root)
-        if params is None:
+        self._heal()
+        if store.read_json(self._path("_PARAMS")) is None:
             if batch.isEmpty():
                 return  # nothing to fit on; watermark NOT advanced —
                 # an empty batch re-delivered later is still a no-op
             self._fit_centroids(spark=batch.sparkSession, batch=batch)
         centers = self._load_centers(batch.sparkSession)
         assign = _probe_cells_udf(centers, 1)
-        _table_recover_compact(self._path("index"))
         assigned = (
             batch.select(
                 self.id_col, as_double(F.col(self.vec_col)).alias(self.vec_col)
@@ -2406,4 +1711,4 @@ class IvfIndexSink:
         # search() probes read file lists from the manifest instead
         # of listing the cell directories (see tidb_cdc_spark.manifest)
         _manifest_update(self._path("index"), "cell", touched)
-        _watermark_commit(self.root, batch_id)
+        store.commit_watermark(self.root, batch_id)

@@ -14,9 +14,7 @@ sink here fails the batch and BLOCKS the offset commit).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -30,6 +28,8 @@ from tidb_cdc_spark.cdc.apply import (
 )
 from tidb_cdc_spark.cdc.schema import CDCType
 from tidb_cdc_spark.cdc.spec import TableSpec
+from tidb_cdc_spark.streaming import store
+from tidb_cdc_spark.streaming.store import guard_batch_watermark
 
 
 class Sink:
@@ -39,38 +39,12 @@ class Sink:
         raise NotImplementedError
 
 
-def guard_batch_watermark(last: int | None, batch_id: int, what: str) -> bool:
-    """Shared replay/lineage policy for watermark-keeping sinks.
-
-    Returns True when ``batch_id`` equals the stored watermark — the
-    one legitimate at-least-once re-delivery (under a single
-    checkpoint lineage batches arrive in order, so only the latest
-    applied batch can ever be re-run) — meaning the caller should
-    no-op. Raises when ``batch_id`` is BEHIND the watermark: that
-    means a fresh/foreign checkpoint is writing into an existing
-    store path, and silently skipping every batch until ids catch up
-    would be silent data loss. ``last`` of None or <0 (legacy
-    single-value pointers) means no watermark exists yet.
-    """
-    if last is None or last < 0:
-        return False
-    if batch_id == last:
-        return True
-    if batch_id < last:
-        raise RuntimeError(
-            f"batch id {batch_id} is behind the stored watermark {last}: "
-            f"this {what} was written under a different checkpoint "
-            "lineage; a stream with a fresh checkpoint must target a "
-            "fresh sink path"
-        )
-    return False
-
-
 @dataclass
 class ParquetSnapshotSink(Sink):
     """Maintains a queryable current-state snapshot in Parquet via
     versioned directories (v=N) with a _CURRENT pointer — the
-    copy-on-write MERGE pattern for a plain-Parquet table.
+    copy-on-write MERGE pattern for a plain-Parquet table (commit
+    protocol: ``store.py``).
 
     Scale: each batch rewrites the snapshot via an anti-join on PK.
     At 100 TB the same sink logic targets a format with real MERGE
@@ -80,48 +54,17 @@ class ParquetSnapshotSink(Sink):
     """
 
     path: str
-
-    def _pointer(self) -> tuple[int, int] | None:
-        """(version, last_applied_batch_id) from the _CURRENT pointer.
-
-        The two values live in ONE file swapped with ``os.replace`` so
-        version and batch watermark commit atomically together; older
-        single-value pointers read back with batch_id -1 (unknown)."""
-        ptr = os.path.join(self.path, "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            parts = f.read().split()
-        return int(parts[0]), (int(parts[1]) if len(parts) > 1 else -1)
-
-    def _current_version(self) -> int | None:
-        p = self._pointer()
-        return None if p is None else p[0]
+    PREFIX = "v="  # version directories: <path>/v=N
 
     def _last_batch_id(self) -> int | None:
-        p = self._pointer()
+        p = store.read_pointer(self.path)
         return None if p is None else p[1]
 
     def read_current(self, spark) -> DataFrame | None:
-        v = self._current_version()
-        if v is None:
+        p = store.read_pointer(self.path)
+        if p is None:
             return None
-        return spark.read.parquet(os.path.join(self.path, f"v={v}"))
-
-    def _commit_version(self, merged: DataFrame, batch_id: int) -> None:
-        """Write the next snapshot version, atomically swap the
-        pointer (version + batch watermark), GC old versions."""
-        v = (self._current_version() or 0) + 1
-        target = os.path.join(self.path, f"v={v}")
-        merged.write.mode("overwrite").parquet(target)
-        tmp = os.path.join(self.path, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(f"{v} {batch_id}")
-        os.replace(tmp, os.path.join(self.path, "_CURRENT"))  # atomic pointer swap
-        # retain previous version for readers-in-flight; GC older
-        for d in os.listdir(self.path):
-            if d.startswith("v=") and int(d[2:]) < v - 1:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        return spark.read.parquet(os.path.join(self.path, f"{self.PREFIX}{p[0]}"))
 
     def bootstrap(self, initial: DataFrame, spec: TableSpec) -> None:
         """Seed the snapshot with an initial full-table load — the
@@ -143,19 +86,19 @@ class ParquetSnapshotSink(Sink):
         consistent point; the PK-keyed latest-wins merge makes the
         overlap idempotent.
         """
-        if self._pointer() is not None:
+        if store.read_pointer(self.path) is not None:
             raise RuntimeError(
                 f"snapshot at {self.path} already exists — bootstrap "
                 "targets a fresh path (re-seeding live state would "
                 "discard applied changes)"
             )
-        self._commit_version(align_to_spec(initial, spec), -1)
+        store.commit_version(self.path, self.PREFIX, align_to_spec(initial, spec), -1)
 
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
         spark = changes.sparkSession
         base = self.read_current(spark)
         merged = apply_changes(base, changes, spec)
-        self._commit_version(merged, batch_id)
+        store.commit_version(self.path, self.PREFIX, merged, batch_id)
 
 
 @dataclass
@@ -173,8 +116,8 @@ class Scd2HistorySink(ParquetSnapshotSink):
     and NOT naturally idempotent — a foreachBatch re-delivery after a
     crash (offsets commit after ``process``) would close the batch's
     own just-written intervals at their own ``valid_from`` and append
-    duplicate versions. The batch watermark stored atomically in the
-    _CURRENT pointer makes replays an explicit no-op."""
+    duplicate versions. The batch watermark in the ``_CURRENT`` pointer
+    makes replays an explicit no-op (commit protocol: ``store.py``)."""
 
     def bootstrap(
         self,
@@ -201,7 +144,7 @@ class Scd2HistorySink(ParquetSnapshotSink):
         is persisted next to the pointer and ``process`` drops
         change rows with ts < as_of: they are already reflected in
         the export by definition of its consistent point."""
-        if self._pointer() is not None:
+        if store.read_pointer(self.path) is not None:
             raise RuntimeError(
                 f"history at {self.path} already exists — bootstrap "
                 "targets a fresh path"
@@ -218,39 +161,34 @@ class Scd2HistorySink(ParquetSnapshotSink):
             .withColumn("valid_to", F.lit(None).cast(ts_dtype))
             .withColumn("is_current", F.lit(True))
         )
-        self._commit_version(seeded, -1)
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, "_BOOTSTRAP.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"as_of": as_of, "ts_dtype": ts_dtype}, f)
-        os.replace(tmp, os.path.join(self.path, "_BOOTSTRAP"))
+        # _BOOTSTRAP first: the pointer publishes the seeded version,
+        # so a crash in between leaves a path bootstrap() can retry
+        store.atomic_write(
+            os.path.join(self.path, "_BOOTSTRAP"),
+            {"as_of": as_of, "ts_dtype": ts_dtype},
+        )
+        store.commit_version(self.path, self.PREFIX, seeded, -1)
 
-    def _bootstrap_as_of(self) -> tuple[object, str] | None:
-        p = os.path.join(self.path, "_BOOTSTRAP")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            d = json.load(f)
-        return d["as_of"], d["ts_dtype"]
+    def _since_bootstrap(self, changes: DataFrame) -> DataFrame:
+        """Drop pre-export changes: they are already in the seeded
+        state, and for history (unlike latest-wins) replaying them is
+        not idempotent — see bootstrap()."""
+        boot = store.read_json(os.path.join(self.path, "_BOOTSTRAP"))
+        if boot is None:
+            return changes
+        return changes.filter(
+            F.col("ts") >= F.lit(boot["as_of"]).cast(boot["ts_dtype"])
+        )
 
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
         from tidb_cdc_spark.cdc.scd import merge_scd2
 
         if guard_batch_watermark(self._last_batch_id(), batch_id, "history"):
             return  # at-least-once replay of an already-applied batch
-        boot = self._bootstrap_as_of()
-        if boot is not None:
-            # pre-export changes are already in the seeded state; for
-            # history (unlike latest-wins) replaying them is not
-            # idempotent — see bootstrap()
-            as_of, ts_dtype = boot
-            changes = changes.filter(
-                F.col("ts") >= F.lit(as_of).cast(ts_dtype)
-            )
-        spark = changes.sparkSession
-        base = self.read_current(spark)
+        changes = self._since_bootstrap(changes)
+        base = self.read_current(changes.sparkSession)
         merged = merge_scd2(base, changes, spec)
-        self._commit_version(merged, batch_id)
+        store.commit_version(self.path, self.PREFIX, merged, batch_id)
 
 
 @dataclass
@@ -283,12 +221,11 @@ class Scd2SplitHistorySink(Scd2HistorySink):
     - ``closed/b=<batch_id>/`` — every superseded version, written
       ONCE and immutable forever — cost ∝ batch.
 
-    ``read_current`` = head ∪ closed(b ≤ watermark). Crash-retry is
-    clean: the retry OVERWRITES its own ``closed/b=<id>`` dir (per-
-    batch-dir idempotence) before the pointer swap publishes it, and
-    the watermark guard no-ops true re-deliveries. ``compact()``
+    ``read_current`` = head ∪ closed(b ≤ watermark). The pointer swap
+    publishes both; a retry overwrites its own unpublished
+    ``closed/b=<id>`` (commit protocol: ``store.py``). ``compact()``
     folds the accumulated per-batch dirs into one when small-files
-    listing cost matters (NearDupAdmissionSink convention).
+    listing cost matters.
 
     Compaction cadence (measured r11, ``stateful_width_rehearsal.py
     compact 40 300000`` — the same 12M-row history as the crossover
@@ -306,12 +243,14 @@ class Scd2SplitHistorySink(Scd2HistorySink):
     Fold equivalence with the monolithic sink is pinned by
     ``merge_scd2_split``'s contract tests."""
 
+    PREFIX = "head_v="
+
     def _closed_root(self) -> str:
         return os.path.join(self.path, "closed")
 
     def _read_closed(self, spark) -> DataFrame | None:
-        self._recover_compact()  # repair a torn compact before reading
         root = self._closed_root()
+        store.recover(root)  # roll back a torn compact before reading
         wm = self._last_batch_id()
         if wm is None or not os.path.exists(root):
             return None
@@ -325,48 +264,22 @@ class Scd2SplitHistorySink(Scd2HistorySink):
             .drop("b")
         )
 
-    def _read_head(self, spark) -> DataFrame | None:
-        v = self._current_version()
-        if v is None:
-            return None
-        return spark.read.parquet(os.path.join(self.path, f"head_v={v}"))
-
     def read_current(self, spark) -> DataFrame | None:
-        head = self._read_head(spark)
+        head = super().read_current(spark)
         if head is None:
             return None
         closed = self._read_closed(spark)
         return head if closed is None else head.unionByName(closed)
-
-    def _commit_version(self, head: DataFrame, batch_id: int) -> None:
-        """Write the next HEAD version + swap the shared pointer.
-        (Reused by ``bootstrap``, which seeds only open head rows.)"""
-        v = (self._current_version() or 0) + 1
-        head.write.mode("overwrite").parquet(
-            os.path.join(self.path, f"head_v={v}")
-        )
-        tmp = os.path.join(self.path, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(f"{v} {batch_id}")
-        os.replace(tmp, os.path.join(self.path, "_CURRENT"))
-        for d in os.listdir(self.path):
-            if d.startswith("head_v=") and int(d[7:]) < v - 1:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
         from tidb_cdc_spark.cdc.scd import merge_scd2_split
 
         if guard_batch_watermark(self._last_batch_id(), batch_id, "history"):
             return
-        boot = self._bootstrap_as_of()
-        if boot is not None:
-            as_of, ts_dtype = boot
-            changes = changes.filter(
-                F.col("ts") >= F.lit(as_of).cast(ts_dtype)
-            )
+        changes = self._since_bootstrap(changes)
         spark = changes.sparkSession
-        self._recover_compact()
-        head = self._read_head(spark)
+        store.recover(self._closed_root())
+        head = super().read_current(spark)
         new_head, newly_closed, batch_handles = merge_scd2_split(
             head, changes, spec
         )
@@ -385,9 +298,10 @@ class Scd2SplitHistorySink(Scd2HistorySink):
         # the monolithic sink's batch cost before this; the batch
         # SCD2 subplan is additionally materialized inside
         # merge_scd2_split), staged then moved into the two stores;
-        # the pointer swap publishes both atomically
-        staging = os.path.join(self.path, f"_stage_b={batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
+        # the pointer swap publishes both. Single writer: whatever is
+        # left in _stage is a crashed attempt's
+        staging = os.path.join(self.path, "_stage")
+        store.remove(staging)
         (
             new_head.withColumn("scd2zone", F.lit("head"))
             .unionByName(newly_closed.withColumn("scd2zone", F.lit("closed")))
@@ -397,77 +311,36 @@ class Scd2SplitHistorySink(Scd2HistorySink):
         )
         closed_dst = os.path.join(self._closed_root(), f"b={batch_id}")
         os.makedirs(self._closed_root(), exist_ok=True)
-        shutil.rmtree(closed_dst, ignore_errors=True)  # crash-retry
         src_closed = os.path.join(staging, "scd2zone=closed")
         src_head = os.path.join(staging, "scd2zone=head")
         if os.path.exists(src_closed):
-            os.replace(src_closed, closed_dst)
-        # else: batch closed nothing — create NO b=<id> dir at all.
-        # _read_closed globs whatever b=* dirs exist and filters
-        # b<=wm, so gaps are first-class; writing a schema-only
-        # empty dir per idle batch re-created exactly the listing-
-        # cost growth compact() exists to fight (r9-advice catch).
-        # The rmtree above still clears a torn prior attempt.
-        v = (self._current_version() or 0) + 1
-        head_dst = os.path.join(self.path, f"head_v={v}")
-        # a crash AFTER the head publish but BEFORE the pointer swap
-        # leaves head_v=v populated while the watermark still admits
-        # the retry — clear it like closed_dst or os.replace raises
-        # ENOTEMPTY forever (review catch)
-        shutil.rmtree(head_dst, ignore_errors=True)
-        if os.path.exists(src_head):
-            os.replace(src_head, head_dst)
-        else:  # empty stream batch over an empty store
-            new_head.limit(0).write.mode("overwrite").parquet(head_dst)
-        shutil.rmtree(staging, ignore_errors=True)
+            store.move(src_closed, closed_dst)
+        else:
+            # batch closed nothing — create NO b=<id> dir at all
+            # (_read_closed tolerates gaps; an empty dir per idle batch
+            # would re-grow the listing cost compact() fights), but
+            # clear a torn prior attempt
+            store.remove(closed_dst)
+        # an empty stream batch over an empty store stages no head
+        head_src = src_head if os.path.exists(src_head) else new_head.limit(0)
         for handle in batch_handles:
             try:  # release this batch's persisted blocks
                 handle.unpersist()
             except Exception:  # noqa: BLE001 — best-effort cache release
                 pass
-        tmp = os.path.join(self.path, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(f"{v} {batch_id}")
-        os.replace(tmp, os.path.join(self.path, "_CURRENT"))
-        for d in os.listdir(self.path):
-            if d.startswith("head_v=") and int(d[7:]) < v - 1:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def _recover_compact(self) -> None:
-        """Complete a compact() whose crash window was hit: a
-        ``_compact.ready.<N>`` marker dir holds the complete fold of
-        every ``b<=N`` dir — finish the protocol (remove the folded
-        dirs, publish the fold as ``b=N``). Idempotent; called at the
-        top of every read/process/compact so a half-removed closed
-        store is repaired before anyone reads it."""
-        root = self._closed_root()
-        if not os.path.exists(root):
-            return
-        for d in os.listdir(root):
-            if not d.startswith("_compact.ready."):
-                continue
-            n = int(d.rsplit(".", 1)[1])
-            for e in os.listdir(root):
-                if e.startswith("b=") and int(e[2:]) <= n:
-                    shutil.rmtree(os.path.join(root, e), ignore_errors=True)
-            os.replace(os.path.join(root, d), os.path.join(root, f"b={n}"))
+        store.commit_version(self.path, self.PREFIX, head_src, batch_id)
+        store.remove(staging)
 
     def compact(self, spark) -> tuple[int, int]:
         """Fold all published ``closed/b=*`` dirs into the newest one
         — per-batch dirs make ``read_current`` listing cost grow with
         batch count (~1 file set per batch). Returns
-        ``(dirs_before, dirs_after)``. Unpublished dirs (> watermark,
-        from an in-flight crash) are left untouched.
-
-        Crash-safe via a two-phase marker (review catch — the naive
-        remove-then-rename lost the whole closed store if the crash
-        landed between): the fold is written to ``_compact.tmp``,
-        atomically renamed to ``_compact.ready.<N>`` (the commit
-        point; '_'-prefixed, invisible to Spark reads), and only then
-        are the folded dirs removed and the fold published —
-        ``_recover_compact`` finishes that tail after any crash."""
-        self._recover_compact()
+        ``(dirs_before, dirs_after)``. The fold replaces the whole
+        closed store with one ``store.swap_in``; unpublished dirs
+        (> watermark, left by a crashed batch) are dropped — the retry
+        of that batch rewrites them."""
         root = self._closed_root()
+        store.recover(root)
         wm = self._last_batch_id()
         if wm is None or not os.path.exists(root):
             return (0, 0)
@@ -479,14 +352,11 @@ class Scd2SplitHistorySink(Scd2HistorySink):
         if len(dirs) <= 1:
             return (len(dirs), len(dirs))
         merged = self._read_closed(spark)
-        tmp = os.path.join(root, "_compact.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = store.staging(root)
         merged.coalesce(max(1, merged.rdd.getNumPartitions() // 8)).write.mode(
             "overwrite"
-        ).parquet(tmp)
-        # commit point: after this rename the fold is authoritative
-        os.replace(tmp, os.path.join(root, f"_compact.ready.{dirs[-1]}"))
-        self._recover_compact()
+        ).parquet(os.path.join(tmp, f"b={dirs[-1]}"))
+        store.swap_in(tmp, root)
         return (len(dirs), 1)
 
 

@@ -157,6 +157,7 @@ def scd2_single(
 
     from tidb_cdc_spark.cdc import parse_cdc
     from tidb_cdc_spark.streaming import sinks as SK
+    from tidb_cdc_spark.streaming.store import read_pointer
 
     root = os.path.join(TMP, f"single_{sink_cls_name}")
     shutil.rmtree(root, ignore_errors=True)
@@ -199,7 +200,7 @@ def scd2_single(
         # narrow rows hide it behind fixed job overhead): monolithic
         # rewrites the full history (v=N), split writes head + its
         # closed/b=N append
-        v = sink._current_version()
+        v = read_pointer(sink.path)[0]
         if sink_cls_name == "Scd2HistorySink":
             written = _du(os.path.join(sink.path, f"v={v}"))
         else:
@@ -241,6 +242,7 @@ def scd2_crossover(spark, batches: int, per_batch: int) -> dict:
 
     from tidb_cdc_spark.cdc import parse_cdc
     from tidb_cdc_spark.streaming import sinks as SK
+    from tidb_cdc_spark.streaming.store import read_pointer
 
     root = os.path.join(TMP, "crossover")
     shutil.rmtree(root, ignore_errors=True)
@@ -293,9 +295,9 @@ def scd2_crossover(spark, batches: int, per_batch: int) -> dict:
         # the interleaved rewrite must keep reporting it): monolithic
         # rewrote v=N (the FULL history), split wrote head_v=N + its
         # immutable closed/b=N append (absent when nothing closed)
-        v_m = mono_sink._current_version()
+        v_m = read_pointer(mono_sink.path)[0]
         mono_mb.append(round(_du(os.path.join(mono_sink.path, f"v={v_m}")) / 1e6, 1))
-        v_s = split_sink._current_version()
+        v_s = read_pointer(split_sink.path)[0]
         split_mb.append(
             round(
                 (
@@ -535,10 +537,8 @@ def _build_digest_index(spark, root: str, n_rows: int, n_buckets: int) -> float:
     than any batch, without replaying millions of micro-batches."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.streaming.enrich import (
-        _bucket_expr,
-        _store_params_write,
-    )
+    from tidb_cdc_spark.streaming.enrich import _bucket_expr
+    from tidb_cdc_spark.streaming.store import atomic_write
 
     shutil.rmtree(root, ignore_errors=True)
     t0 = time.perf_counter()
@@ -556,7 +556,10 @@ def _build_digest_index(spark, root: str, n_rows: int, n_buckets: int) -> float:
         .mode("overwrite")
         .parquet(os.path.join(root, "digests"))
     )
-    _store_params_write(root, {"layout": "bucketed", "n_buckets": n_buckets})
+    atomic_write(
+        os.path.join(root, "_PARAMS"),
+        {"layout": "bucketed", "n_buckets": n_buckets},
+    )
     return round(time.perf_counter() - t0, 2)
 
 
