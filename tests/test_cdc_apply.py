@@ -194,7 +194,7 @@ class TestScd2History:
     def test_incremental_merge_equals_one_shot(self, spark):
         import random
 
-        from tidb_cdc_spark.cdc.scd import merge_scd2, scd2_history
+        from tidb_cdc_spark.cdc.scd import merge_scd2_split, scd2_history
 
         rng = random.Random(7)
         ops, ts = [], 0
@@ -205,9 +205,13 @@ class TestScd2History:
             ops.append(_msg(op, k, rng.randint(0, 99) + 1, ts))
         one_shot = scd2_history(_parse(spark, ops), SPEC)
         # fold the same log in three ts-ordered batches
-        hist = None
+        head, closed_all = None, []
         for lo, hi in ((0, 20), (20, 45), (45, 60)):
-            hist = merge_scd2(hist, _parse(spark, ops[lo:hi]), SPEC)
+            head, closed, _ = merge_scd2_split(head, _parse(spark, ops[lo:hi]), SPEC)
+            closed_all.append(closed)
+        hist = head
+        for closed in closed_all:
+            hist = hist.unionByName(closed)
         assert sorted(map(tuple, one_shot.collect())) == sorted(
             map(tuple, hist.collect())
         )

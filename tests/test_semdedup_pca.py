@@ -287,6 +287,31 @@ def test_train_fraction_sampled_centroids_still_exhaustive(spark):
     assert set(res[res.is_dup].vec_id) >= set(range(80, 90))
 
 
+def test_persisted_input_does_not_change_output(spark, monkeypatch):
+    # semantic_dedup persists its vector frame before the k-means fit
+    # and assignment; with materialize as identity every consumer
+    # recomputes it instead — the output rows must be identical
+    import tidb_cdc_spark.session as session
+
+    rng2 = np.random.default_rng(3)
+    base = rng2.normal(size=(60, 8))
+    vecs = np.vstack([base, base[:12] + rng2.normal(scale=1e-3, size=(12, 8))])
+    df = _vec_df(spark, vecs)
+
+    def run():
+        return (
+            SD.semantic_dedup(df, n_cells=4, threshold=0.99, seed=5)
+            .toPandas()
+            .sort_values("vec_id", ignore_index=True)
+        )
+
+    persisted = run()
+    monkeypatch.setattr(session, "materialize", lambda frame: frame)
+    recomputed = run()
+    pd.testing.assert_frame_equal(persisted, recomputed)
+    assert set(persisted[persisted.is_dup].vec_id) >= set(range(60, 72))
+
+
 def test_allocation_balances_with_subunit_eigenvalues(spark, rng):
     # unit-scale embeddings: ALL eigenvalues < 1 (logs negative) —
     # the greedy must stay scale-invariant and still beat the

@@ -5,9 +5,10 @@ and parquet writes of an uninterrupted run, copies the store as a
 crash just before each of them would leave it, restarts a fresh sink
 on each copy, replays and compares with the uninterrupted result:
 
-- pointer and swap sinks (``ParquetSnapshotSink``, ``Scd2HistorySink``,
-  ``Scd2SplitHistorySink`` process and compact, ``CountMinSink``,
-  ``PcaMomentSink``, ``HllDistinctSink``, ``WinnowOverlapSink``)
+- pointer and swap sinks (``ParquetSnapshotSink``,
+  ``Scd2SplitHistorySink`` process, bootstrap and compact,
+  ``CountMinSink``, ``PcaMomentSink``, ``HllDistinctSink``,
+  ``WinnowOverlapSink``)
   must equal the uninterrupted run exactly;
 - append stores (the admission sinks, ``IvfIndexSink``) keep their
   contract: no admitted row lost, duplicates only from a crash between
@@ -118,20 +119,24 @@ def test_snapshot_process(spark, tmp_path):
 
 
 def test_scd2_history_process(spark, tmp_path):
-    from tidb_cdc_spark.streaming import Scd2HistorySink as S
+    """The first batch that closes versions: one head version before
+    it, so nothing is old enough to collect."""
+    from tidb_cdc_spark.streaming import Scd2SplitHistorySink as S
 
     steps = run_matrix(
         spark,
         tmp_path,
-        _cdc_prepare(spark, S, 2),
-        _cdc_process(spark, S, 2),
+        _cdc_prepare(spark, S, 1),
+        _cdc_process(spark, S, 1),
         _current(spark, S),
     )
     assert steps == [
-        "parquet(v=3)",
+        "parquet(_stage)",
+        "_replace(b=1)",
+        "_replace(head_v=2)",
         "_write_file(_CURRENT.tmp)",
         "_replace(_CURRENT)",
-        "_remove(v=1)",
+        "_remove(_stage)",
     ]
 
 
@@ -140,7 +145,7 @@ def test_scd2_history_bootstrap(spark, tmp_path):
     """A retried bootstrap (unless it committed) and then a batch
     carrying a pre-export change: ``_BOOTSTRAP`` must be published
     with, or before, the seeded version."""
-    from tidb_cdc_spark.streaming import Scd2HistorySink as S
+    from tidb_cdc_spark.streaming import Scd2SplitHistorySink as S
 
     def bootstrap(root):
         if store.read_pointer(root) is None:
@@ -159,7 +164,7 @@ def test_scd2_history_bootstrap(spark, tmp_path):
     assert steps == [
         "_write_file(_BOOTSTRAP.tmp)",
         "_replace(_BOOTSTRAP)",
-        "parquet(v=1)",
+        "parquet(head_v=1)",
         "_write_file(_CURRENT.tmp)",
         "_replace(_CURRENT)",
     ]

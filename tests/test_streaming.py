@@ -301,6 +301,93 @@ class TestOffsetOrderingContract:
             ("a", 9)}
 
 
+class TestOneBatchBodyBothModes:
+    """``start`` and ``start_shared`` run the same foreachBatch body:
+    one Kafka-shaped stream carrying two tables and a ts tie must
+    leave identical sink state through either mode."""
+
+    @staticmethod
+    def _kmsg(table, offset, op, data, ts, old=None):
+        m = {"database": "d", "table": table, "type": op, "ts": ts, "data": data}
+        if old is not None:
+            m["old"] = old
+        return json.dumps({
+            "topic": f"srv.d.{table}", "partition": 0, "offset": offset,
+            "value": json.dumps(m),
+        })
+
+    def _run(self, spark, root, events_dir, shared):
+        from tidb_cdc_spark.sources import kafka_shaped_file_stream
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
+
+        def source():
+            return kafka_shaped_file_stream(spark, str(events_dir), 1)
+
+        conn = Connector(
+            ConnectorConfig(server_name="srv", checkpoint_root=str(root / "ck"))
+        )
+        snaps = {t: ParquetSnapshotSink(str(root / t)) for t in ("t", "u")}
+        hist = Scd2SplitHistorySink(str(root / "hist"))
+        conn.register(SPEC, [snaps["t"], hist], source=None if shared else source())
+        conn.register(SPEC2, [snaps["u"]], source=None if shared else source())
+        if shared:
+            conn.start_shared(spark, source=source(), available_now=True)
+        else:
+            conn.start(spark, available_now=True)
+        conn.await_termination()
+        return (
+            {
+                t: sorted(map(tuple, s.read_current(spark).collect()))
+                for t, s in snaps.items()
+            },
+            sorted(map(tuple, hist.read_current(spark).collect())),
+        )
+
+    def test_start_and_start_shared_agree(self, spark, tmp_path):
+        k = self._kmsg
+        events_dir = tmp_path / "in"
+        # key "a" of t: three changes at ONE ts — only the offset
+        # orders them, and offset 2 (v=5) must win
+        _write_batch(events_dir, "b1.jsonl", [
+            k("t", 0, "insert", {"k": "a", "v": 1}, 10),
+            k("u", 0, "insert", {"k": "x", "w": 7}, 10),
+            k("t", 1, "update", {"k": "a", "v": 3}, 10, {"v": 1}),
+            k("t", 2, "update", {"k": "a", "v": 5}, 10, {"v": 3}),
+            k("t", 3, "insert", {"k": "b", "v": 2}, 11),
+        ])
+        _write_batch(events_dir, "b2.jsonl", [
+            k("t", 4, "update", {"k": "a", "v": 9}, 20, {"v": 5}),
+            k("u", 1, "update", {"k": "x", "w": 8}, 20, {"w": 7}),
+            k("t", 5, "delete", {"k": "b", "v": 2}, 21),
+        ])
+        per_table = self._run(spark, tmp_path / "per_table", events_dir, False)
+        shared = self._run(spark, tmp_path / "shared", events_dir, True)
+        assert per_table == shared
+        snaps, hist = shared
+        assert snaps == {"t": [("a", 9)], "u": [("x", 8)]}
+        # (k, v, version, valid_from, valid_to, is_current)
+        assert hist == [
+            ("a", 1, 1, 10, 10, False),
+            ("a", 3, 2, 10, 10, False),
+            ("a", 5, 3, 10, 20, False),
+            ("a", 9, 4, 20, None, True),
+            ("b", 2, 1, 11, 21, False),
+        ]
+
+    def test_offsetless_ts_tie_resolves_to_later_line(self, spark, tmp_path):
+        events_dir = tmp_path / "in"
+        _write_batch(events_dir, "b1.jsonl", [
+            _msg("insert", "a", 1, 10),
+            _msg("update", "a", 3, 10),
+            _msg("update", "a", 5, 10),
+        ])
+        sink = ParquetSnapshotSink(str(tmp_path / "snap"))
+        conn = _connector(tmp_path, [sink], maxwell_file_stream(spark, str(events_dir)))
+        conn.start(spark, available_now=True)
+        conn.await_termination()
+        assert [(r.k, r.v) for r in sink.read_current(spark).collect()] == [("a", 5)]
+
+
 class TestJdbcMergeSql:
     def test_merge_statement_shape(self):
         sink = JdbcMergeSink(url="jdbc:x", table="tgt")
@@ -523,11 +610,24 @@ class TestStatefulOperators:
         assert latest[3] == (7, "orig")
 
 
-class TestScd2HistorySink:
+class TestScd2SplitHistorySink:
+    """SCD2 history sink: read_current = the full history, stored as
+    a per-key head plus immutable per-batch closed dirs."""
+
+    def _changes(self, spark, msgs):
+        from tidb_cdc_spark.cdc import parse_cdc
+
+        df = spark.createDataFrame([(m,) for m in msgs], "value string")
+        return parse_cdc(
+            df.withColumn("_s", F.monotonically_increasing_id()),
+            SPEC,
+            seq_col=F.col("_s"),
+        )
+
     def test_streamed_history_equals_one_shot_replay(self, spark, tmp_path):
         from tidb_cdc_spark.cdc import parse_cdc
         from tidb_cdc_spark.cdc.scd import scd2_history
-        from tidb_cdc_spark.streaming import Scd2HistorySink
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
         b1 = [
             _msg("insert", "a", 1, 10),
@@ -540,7 +640,7 @@ class TestScd2HistorySink:
             _msg("update", "b", 3, 22),
         ]
         events_dir = tmp_path / "in"
-        sink = Scd2HistorySink(str(tmp_path / "hist"))
+        sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
         _write_batch(events_dir, "b1.jsonl", b1)
         conn = _connector(tmp_path, [sink], maxwell_file_stream(spark, str(events_dir)))
         conn.start(spark, available_now=True)
@@ -568,23 +668,16 @@ class TestScd2HistorySink:
 
     def test_batch_replay_is_noop(self, spark, tmp_path):
         """foreachBatch re-delivery after a crash (offsets commit AFTER
-        process) must not corrupt the history: merge_scd2 is append-
+        process) must not corrupt the history: the merge is append-
         based, so without the batch watermark a replay would close the
         batch's own intervals at their own valid_from and duplicate
         versions."""
-        from tidb_cdc_spark.cdc import parse_cdc
-        from tidb_cdc_spark.streaming import Scd2HistorySink
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
-        def changes(msgs):
-            df = spark.createDataFrame([(m,) for m in msgs], "value string")
-            return parse_cdc(
-                df.withColumn("_s", F.monotonically_increasing_id()),
-                SPEC,
-                seq_col=F.col("_s"),
-            )
-
-        sink = Scd2HistorySink(str(tmp_path / "hist"))
-        b1 = changes([_msg("insert", "a", 1, 10), _msg("update", "a", 5, 12)])
+        sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
+        b1 = self._changes(
+            spark, [_msg("insert", "a", 1, 10), _msg("update", "a", 5, 12)]
+        )
         sink.process(b1, 0, SPEC)
         applied = sorted(map(tuple, sink.read_current(spark).collect()))
 
@@ -592,7 +685,7 @@ class TestScd2HistorySink:
         assert sorted(map(tuple, sink.read_current(spark).collect())) == applied
 
         # a genuinely new batch still applies
-        sink.process(changes([_msg("update", "a", 9, 20)]), 1, SPEC)
+        sink.process(self._changes(spark, [_msg("update", "a", 9, 20)]), 1, SPEC)
         hist = {(r.k, r.version): r for r in sink.read_current(spark).collect()}
         assert hist[("a", 2)].valid_to == 20
         assert hist[("a", 3)].is_current and hist[("a", 3)].v == 9
@@ -600,32 +693,15 @@ class TestScd2HistorySink:
         # a batch id BEHIND the watermark = fresh checkpoint writing
         # into an old history path: loud failure, not a silent no-op
         with pytest.raises(RuntimeError, match="behind the stored watermark"):
-            sink.process(changes([_msg("update", "a", 1, 30)]), 0, SPEC)
-
-
-class TestScd2SplitHistorySink:
-    """Split-store SCD2 sink: same external contract as the
-    monolithic sink (read_current = the full history), different
-    storage — per-batch cost ∝ batch + live keyspace."""
-
-    def _changes(self, spark, msgs):
-        from tidb_cdc_spark.cdc import parse_cdc
-
-        df = spark.createDataFrame([(m,) for m in msgs], "value string")
-        return parse_cdc(
-            df.withColumn("_s", F.monotonically_increasing_id()),
-            SPEC,
-            seq_col=F.col("_s"),
-        )
+            sink.process(
+                self._changes(spark, [_msg("update", "a", 1, 30)]), 0, SPEC
+            )
 
     @pytest.mark.slow  # r15 tiered gate
-    def test_equals_monolithic_sink_batch_by_batch(self, spark, tmp_path):
-        from tidb_cdc_spark.streaming import (
-            Scd2HistorySink,
-            Scd2SplitHistorySink,
-        )
+    def test_equals_one_shot_batch_by_batch(self, spark, tmp_path):
+        from tidb_cdc_spark.cdc.scd import scd2_history
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
-        mono = Scd2HistorySink(str(tmp_path / "mono"))
         split = Scd2SplitHistorySink(str(tmp_path / "split"))
         batches = [
             [_msg("insert", "a", 1, 10), _msg("insert", "b", 2, 11),
@@ -636,12 +712,13 @@ class TestScd2SplitHistorySink:
             [_msg("update", "c", 4, 40)],  # brand-new key mid-stream
         ]
         for i, b in enumerate(batches):
-            mono.process(self._changes(spark, b), i, SPEC)
             split.process(self._changes(spark, b), i, SPEC)
-            a = sorted(map(tuple, mono.read_current(spark).collect()))
-            c = split.read_current(spark)
-            s = sorted(map(tuple, c.select(*mono.read_current(spark).columns).collect()))
-            assert a == s, f"divergence after batch {i}"
+            log = [m for batch in batches[: i + 1] for m in batch]
+            one_shot = scd2_history(self._changes(spark, log), SPEC)
+            got = split.read_current(spark).select(*one_shot.columns)
+            assert sorted(map(tuple, one_shot.collect())) == sorted(
+                map(tuple, got.collect())
+            ), f"divergence after batch {i}"
 
     def test_replay_noop_and_behind_watermark_raises(self, spark, tmp_path):
         from tidb_cdc_spark.streaming import Scd2SplitHistorySink
@@ -972,10 +1049,10 @@ class TestBootstrap:
         assert row.k == "a" and row.v is None
 
     def test_scd2_bootstrap_then_stream(self, spark, tmp_path):
-        from tidb_cdc_spark.streaming import Scd2HistorySink
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
         initial = spark.createDataFrame([("a", 1)], "k string, v int")
-        sink = Scd2HistorySink(str(tmp_path / "hist"))
+        sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
         with pytest.raises(ValueError, match="as_of"):
             sink.bootstrap(initial, SPEC)
         sink.bootstrap(initial, SPEC, as_of=5)
@@ -1000,10 +1077,10 @@ class TestBootstrap:
         # export already reflects it) — otherwise the seeded interval
         # inverts (valid_to < valid_from) and a stale image becomes
         # current
-        from tidb_cdc_spark.streaming import Scd2HistorySink
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
         initial = spark.createDataFrame([("a", 7)], "k string, v int")
-        sink = Scd2HistorySink(str(tmp_path / "hist"))
+        sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
         sink.bootstrap(initial, SPEC, as_of=100)
 
         events_dir = tmp_path / "in"
@@ -1087,99 +1164,6 @@ class TestSharedConnectorWidth:
             else:
                 # absent tables skipped entirely — no snapshot dir
                 assert cur is None or cur.count() == 0
-
-
-class TestTransformWithStateTwin:
-    def test_tws_matches_applyinpandaswithstate(self, spark, tmp_path):
-        """The transformWithState form of running_totals must emit
-        the same lifetime totals as the applyInPandasWithState form
-        over the same two-batch stream — the migration-path pin.
-        Guarded like the Kafka e2e: the TWS state-server protocol
-        needs protobuf, absent in this container."""
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithState needs protobuf (not in container)",
-        )
-        from tidb_cdc_spark.streaming.stateful import running_totals_tws
-
-        helper = TestStatefulOperators()
-        out = running_totals_tws(
-            helper._two_batch_stream(spark, tmp_path)
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("run_tot_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        rows = spark.sql("select * from run_tot_tws").collect()
-        latest = {}
-        for r in rows:
-            if r.user_id not in latest or r.n_events > latest[r.user_id][0]:
-                latest[r.user_id] = (r.n_events, r.total)
-        assert latest[1] == (3, 7.0)
-        assert latest[2] == (2, 110.0)
-        assert latest[3] == (2, 2.0)
-
-    def test_latest_tws_matches_applyinpandaswithstate(self, spark, tmp_path):
-        """The transformWithState form of stateful_latest must make
-        the same latest-wins / stale-ignore / equal-ts-replay calls
-        as the applyInPandasWithState form over the same two-batch
-        stream. Guarded: the TWS state-server protocol needs
-        protobuf, absent in this container."""
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithState needs protobuf (not in container)",
-        )
-        from tidb_cdc_spark.streaming.stateful import stateful_latest_tws
-
-        helper = TestStatefulOperators()
-        out = stateful_latest_tws(
-            helper._two_batch_stream(spark, tmp_path), "user_id"
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("st_latest_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck_sl_tws"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        rows = spark.sql("select * from st_latest_tws").collect()
-        latest = {}
-        for r in rows:
-            if r.user_id not in latest or r.ts > latest[r.user_id][0]:
-                latest[r.user_id] = (r.ts, r.payload)
-        assert latest[1] == (30, "c")  # batch-2 newer event wins
-        assert latest[2] == (5, "x")  # batch-2 stale event ignored
-        assert latest[3] == (7, "orig")  # equal-ts replay ignored
-
-    def test_tws_twins_raise_clear_importerror_without_protobuf(self, spark):
-        """In THIS container (no protobuf) both TWS twins must fail
-        fast with the actionable message, not a deep protocol error —
-        this is the branch that actually runs here, so pin it."""
-        try:
-            import google.protobuf  # noqa: F401
-
-            pytest.skip("protobuf present — guarded branch not reachable")
-        except ImportError:
-            pass
-        from tidb_cdc_spark.streaming.stateful import (
-            running_totals_tws,
-            stateful_latest_tws,
-        )
-
-        df = spark.createDataFrame(
-            [], "user_id long, ts long, value double, payload string"
-        )
-        with pytest.raises(ImportError, match="running_totals"):
-            running_totals_tws(df)
-        with pytest.raises(ImportError, match="stateful_latest"):
-            stateful_latest_tws(df, "user_id")
 
 
 class TestSharedSinkErrorPropagation:

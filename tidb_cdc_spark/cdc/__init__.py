@@ -14,8 +14,6 @@ from tidb_cdc_spark.cdc.schema import (
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec, is_widening, snake_case
 from tidb_cdc_spark.cdc.parse import (
     parse_envelope,
-    with_images,
-    project_table,
     parse_cdc,
     schema_drift,
 )
@@ -30,8 +28,6 @@ __all__ = [
     "is_widening",
     "snake_case",
     "parse_envelope",
-    "with_images",
-    "project_table",
     "parse_cdc",
     "schema_drift",
     "conflate_latest",

@@ -20,6 +20,8 @@ Deliberate divergences from the reference (SURVEY §7.5):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -72,50 +74,6 @@ def parse_envelope(
     if drop_malformed:
         out = out.filter(F.col("_corrupt").isNull()).drop("_corrupt")
     return out
-
-
-def with_images(df: DataFrame) -> DataFrame:
-    """Materialize raw before/after string-map images per op type.
-
-    Semantics table (cdc_manager.go:219-261):
-      insert: after = data,                  before = null
-      update: after = data,                  before = data ⊕ old
-      delete: after = null,                  before = data (full deleted row)
-
-    ``data ⊕ old`` is the full-before-image overlay the reference
-    intended but never shipped (commented DeserializeMaxwell,
-    cdc_manager.go:263-274): for every key of ``data``, take ``old``'s
-    value iff the key is PRESENT in ``old`` (Maxwell's ``old`` holds
-    changed columns only), else ``data``'s. Done on the string-map
-    phase where key-absence is detectable — ``map_contains_key``
-    distinguishes "column unchanged" from "old value was NULL".
-
-    Note the reference binds delete's row image to its ``after``
-    variable (cdc_manager.go:249-256) and hands it to
-    ``Delete(before)``; semantically it is the before-image, which is
-    where we put it.
-    """
-    data = F.col("data")
-    old = F.col("old")
-    overlay = F.map_zip_with(
-        data,
-        F.map_filter(old, lambda k, _: F.map_contains_key(data, k)),
-        lambda k, d, o: F.when(F.map_contains_key(old, k), o).otherwise(d),
-    )
-    return (
-        df.withColumn(
-            "after_raw",
-            F.when(F.col("type").isin(CDCType.INSERT, CDCType.UPDATE), data),
-        )
-        .withColumn(
-            "before_raw",
-            F.when(F.col("type") == CDCType.UPDATE, overlay).when(
-                F.col("type") == CDCType.DELETE, data
-            ),
-        )
-        # drop-empty guard, cdc_manager.go:258-261
-        .filter(F.col("after_raw").isNotNull() | F.col("before_raw").isNotNull())
-    )
 
 
 def schema_drift(
@@ -206,18 +164,6 @@ def cast_value(value: Column, col: ColumnSpec) -> Column:
     return value.try_cast(col.dtype)
 
 
-def project_table(df: DataFrame, spec: TableSpec, image_col: str) -> Column:
-    """Typed projection of one raw string-map image into a struct —
-    the MaxwellUnmarshal equivalent (cdc_utils.go:31-47), compiled
-    once from the spec into pure expressions."""
-    img = F.col(image_col)
-    fields = [
-        cast_value(img.getItem(c.source), c).alias(c.target)
-        for c in spec.resolved_columns()
-    ]
-    return F.when(img.isNotNull(), F.struct(*fields))
-
-
 def typed_envelope_schema(spec: TableSpec):
     """Single-phase envelope schema for ONE table: ``data`` is a
     struct of the spec's source columns (all string — coercion stays
@@ -277,60 +223,58 @@ def parse_cdc(
 
     Single-phase fast path: one ``from_json`` with a per-table typed
     envelope (see ``typed_envelope_schema``), then pure struct-field
-    casts. The generic two-phase path (``parse_envelope`` →
-    ``with_images`` → ``project_table``) remains for multi-table
-    routing and dead-letter inspection.
+    casts.
 
     Scale: stateless, shuffle-free, fully codegen'd; parallelism =
     source partitions. At 100 TB of backlog this stage scales
     linearly with executors.
     """
+    return cdc_parser(spec, value_col, seq_col)(df)
+
+
+def cdc_parser(
+    spec: TableSpec,
+    value_col: str = "value",
+    seq_col: Column | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """``parse_cdc`` for one spec with its expressions built once: the
+    returned function applies them to any raw frame. Building them
+    costs about 0.1 s of driver CPU for a ten-column spec, more than
+    parsing a small micro-batch, so a one-table streaming query builds
+    one parser and applies it to every batch."""
     raw = F.col(value_col).cast("string")
     env = F.from_json(raw, typed_envelope_schema(spec))
     # _mono (monotonically_increasing_id) is non-deterministic, which
     # blocks predicate pushdown through this projection — guaranteeing
     # the JSON parse runs exactly once per row instead of being
     # re-substituted into every downstream filter condition. It also
-    # serves as the default arrival-order _seq for batch sources.
-    # Streaming disallows monotonically_increasing_id; there the
-    # caller should pass the Kafka offset as seq_col (file streams
-    # fall back to ts-only ordering within a micro-batch). NOTE: the
-    # streaming lit(0) is deterministic, so the exactly-once-parse
-    # barrier does not hold there — Catalyst may substitute the
-    # from_json into downstream filter conditions and re-evaluate it;
-    # harmless for real sources (the scan column is stored bytes) and
-    # a CPU cost only, never a correctness one (from_json is pure).
-    mono = (
-        F.lit(0).cast("long") if df.isStreaming else F.monotonically_increasing_id()
-    )
-    passthrough = [c for c in df.columns if c != value_col]
+    # serves as the default arrival-order _seq. Streaming callers parse
+    # inside foreachBatch (``streaming/connector.py``), where the
+    # micro-batch is a batch frame, so this holds there too.
+    mono = F.monotonically_increasing_id()
     # NOTE: no explicit tombstone filter on value_col here — a null
     # Kafka value parses to a null envelope, which the malformed
     # filter below already drops (same outcome as cdc_manager.go:
     # 209-211). An explicit isnotnull(value) would be pushed below
     # this projection and re-evaluate the value expression (fatal
     # when value is computed, e.g. the bench's synthesized to_json).
-    parsed = (
-        df.select(env.alias("_env"), mono.alias("_mono"), *passthrough)
-        .filter(
-            F.col("_env").isNotNull()
-            & F.col("_env.type").isNotNull()  # malformed → dropped (dead-letter
-            # surface is parse_envelope; the reference panics, cdc_manager.go:164)
-            & (F.col("_env.database") == spec.database)
-            & (F.col("_env.table") == spec.table)
-        )
-        .select(
-            F.col("_env.type").alias("type"),
-            F.col("_env.ts").alias("ts"),
-            F.col("_env.data").alias("data"),
-            F.col("_env.old").alias("old"),
-            "_mono",
-            *passthrough,
-        )
-        # seq_col may reference envelope fields (e.g. data.event_id)
-        # or passthrough columns, so it is evaluated after extraction
-        .withColumn("_seq", seq_col if seq_col is not None else F.col("_mono"))
+    valid = (
+        F.col("_env").isNotNull()
+        & F.col("_env.type").isNotNull()  # malformed → dropped (dead-letter
+        # surface is parse_envelope; the reference panics, cdc_manager.go:164)
+        & (F.col("_env.database") == spec.database)
+        & (F.col("_env.table") == spec.table)
     )
+    fields = [
+        F.col("_env.type").alias("type"),
+        F.col("_env.ts").alias("ts"),
+        F.col("_env.data").alias("data"),
+        F.col("_env.old").alias("old"),
+        F.col("_mono"),
+    ]
+    # seq_col may reference envelope fields (e.g. data.event_id)
+    # or passthrough columns, so it is evaluated after extraction
+    seq = seq_col if seq_col is not None else F.col("_mono")
     cols = spec.resolved_columns()
     data, old = F.col("data"), F.col("old")
     after_struct = F.struct(
@@ -358,20 +302,29 @@ def parse_cdc(
     before = F.when(
         (F.col("type") == CDCType.UPDATE) & has_data, before_update
     ).when((F.col("type") == CDCType.DELETE) & has_data, after_struct)
-    return (
-        # drop-empty guard, cdc_manager.go:258-261. Expressed on the
-        # RAW fields (not after/before isNotNull) so predicate
-        # pushdown doesn't clone the full projection CASE trees into
-        # the filter — equivalent because after/before are non-null
-        # exactly when (type known) AND (data present).
-        parsed.filter(
-            F.col("type").isin(*CDCType.ALL) & has_data
-        ).select(
-            F.col("type").alias("op"),
-            F.col("ts"),
-            F.col("_seq"),
-            before.alias("before"),
-            after.alias("after"),
-            *passthrough,
+    # drop-empty guard, cdc_manager.go:258-261. Expressed on the RAW
+    # fields (not after/before isNotNull) so predicate pushdown
+    # doesn't clone the full projection CASE trees into the filter —
+    # equivalent because after/before are non-null exactly when
+    # (type known) AND (data present).
+    known = F.col("type").isin(*CDCType.ALL) & has_data
+    typed = [
+        F.col("type").alias("op"),
+        F.col("ts"),
+        F.col("_seq"),
+        before.alias("before"),
+        after.alias("after"),
+    ]
+
+    def parse(df: DataFrame) -> DataFrame:
+        passthrough = [c for c in df.columns if c != value_col]
+        return (
+            df.select(env.alias("_env"), mono.alias("_mono"), *passthrough)
+            .filter(valid)
+            .select(*fields, *passthrough)
+            .withColumn("_seq", seq)
+            .filter(known)
+            .select(*typed, *passthrough)
         )
-    )
+
+    return parse

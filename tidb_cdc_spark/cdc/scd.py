@@ -38,8 +38,8 @@ def scd2_history(
     Output: PK columns, the after-image attributes, ``version`` (the
     per-key ordinal among EMITTED versions — deletes close intervals
     but do not consume an ordinal, so ``version`` is "the nth visible
-    version of this entity" and ``merge_scd2`` can continue the
-    numbering from ``max(version)``), ``valid_from`` / ``valid_to``
+    version of this entity" and ``merge_scd2_split`` can continue the
+    numbering from the key's head version), ``valid_from`` / ``valid_to``
     (the ts of this change / the next change of ANY kind on the key,
     null while open), ``is_current``.
     """
@@ -79,66 +79,6 @@ def scd2_history(
     )
 
 
-def merge_scd2(
-    history: DataFrame | None,
-    changes: DataFrame,
-    spec: TableSpec,
-    ts_col: str = "ts",
-    seq_col: str = "_seq",
-) -> DataFrame:
-    """Incrementally maintain a Type-2 SCD table with one micro-batch
-    of typed changes — the ``foreachBatch`` body for a streaming SCD2
-    sink (the history sibling of ``apply.apply_changes``).
-
-    Contract: if batches partition the change log respecting per-key
-    (ts, seq) order (the CDC dispatch-key guarantee), then folding
-    them with ``merge_scd2`` equals ``scd2_history`` over the whole
-    log — pinned by tests.
-
-    Plan: the batch's own SCD2 plan, plus one keyed join against the
-    history to (a) close the open interval of every touched key at
-    the batch's first change ts and (b) continue version numbering
-    from ``max(version)``. With the history table bucketed by PK both
-    joins are co-located at scale.
-    """
-    batch = scd2_history(changes, spec, ts_col, seq_col)
-    if history is None:
-        return batch
-    pk = spec.pk_columns
-    firsts = (
-        changes.select(
-            *[
-                F.coalesce(F.col(f"after.{c}"), F.col(f"before.{c}")).alias(c)
-                for c in pk
-            ],
-            F.col(ts_col).alias("_bts"),
-        )
-        .groupBy(*pk)
-        .agg(F.min("_bts").alias("_first_ts"))
-    )
-    base_v = history.groupBy(*pk).agg(F.max("version").alias("_v0"))
-    closed = (
-        history.join(firsts, pk, "left")
-        .withColumn(
-            "valid_to",
-            F.when(
-                F.col("is_current") & F.col("_first_ts").isNotNull(),
-                F.col("_first_ts"),
-            ).otherwise(F.col("valid_to")),
-        )
-        .withColumn("is_current", F.col("valid_to").isNull())
-        .drop("_first_ts")
-    )
-    shifted = (
-        batch.join(base_v, pk, "left")
-        .withColumn(
-            "version", F.col("version") + F.coalesce(F.col("_v0"), F.lit(0))
-        )
-        .drop("_v0")
-    )
-    return closed.unionByName(shifted)
-
-
 def merge_scd2_split(
     head: DataFrame | None,
     changes: DataFrame,
@@ -146,7 +86,9 @@ def merge_scd2_split(
     ts_col: str = "ts",
     seq_col: str = "_seq",
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Split-store Type-2 merge: ``(new_head, newly_closed,
+    """Incrementally maintain a Type-2 SCD table with one micro-batch
+    of typed changes — the ``foreachBatch`` body of
+    ``Scd2SplitHistorySink``: ``(new_head, newly_closed,
     batch_handles)``.
 
     ``head`` holds exactly ONE row per key ever seen — the key's
@@ -155,13 +97,13 @@ def merge_scd2_split(
     (no max() over full history needed) and makes every other
     history row immutable forever, so a sink can keep them in an
     append-only store: per-batch write cost is ∝ batch + live
-    keyspace, NOT ∝ accumulated history, which the monolithic
-    ``merge_scd2`` rewrites in full every batch.
+    keyspace, NOT ∝ accumulated history.
 
-    Equivalence contract (pinned by tests): folding batches through
-    this function and unioning ``new_head`` with all emitted
-    ``newly_closed`` rows equals ``scd2_history`` over the whole log
-    — and therefore equals the monolithic ``merge_scd2`` fold.
+    Contract (pinned by tests): if batches partition the change log
+    respecting per-key (ts, seq) order (the CDC dispatch-key
+    guarantee), then folding them through this function and unioning
+    ``new_head`` with all emitted ``newly_closed`` rows equals
+    ``scd2_history`` over the whole log.
 
     Execution shape: exactly TWO heavy passes per batch, each
     materialized once — the persisted frames come back as the THIRD
@@ -176,8 +118,7 @@ def merge_scd2_split(
     with the batch's per-key (first_ts, emitted) summary. Everything
     the caller writes is a filter/union over those two, so a sink's
     single partitioned write re-executes nothing — an earlier
-    formulation with per-output joins re-ran the JSON parse 3× and
-    measured 3× the monolithic sink's batch cost.
+    formulation with per-output joins re-ran the JSON parse 3×.
     """
     from tidb_cdc_spark.session import materialize
 

@@ -2,7 +2,7 @@
 (JSON-lines of Maxwell events for tests/replay; Parquet for batch).
 """
 
-from tidb_cdc_spark.sources.kafka import KafkaSourceConfig, kafka_stream, kafka_batch
+from tidb_cdc_spark.sources.kafka import KafkaSourceConfig, kafka_stream
 from tidb_cdc_spark.sources.files import (
     kafka_shaped_file_stream,
     maxwell_file_batch,
@@ -12,7 +12,6 @@ from tidb_cdc_spark.sources.files import (
 __all__ = [
     "KafkaSourceConfig",
     "kafka_stream",
-    "kafka_batch",
     "kafka_shaped_file_stream",
     "maxwell_file_batch",
     "maxwell_file_stream",

@@ -95,13 +95,3 @@ def kafka_stream(spark: SparkSession, cfg: KafkaSourceConfig) -> DataFrame:
     for k, v in cfg.options().items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def kafka_batch(spark: SparkSession, cfg: KafkaSourceConfig) -> DataFrame:
-    """Batch (bounded) read of a topic — the backfill/bootstrap path
-    (startingOffsets=earliest reads the full retained log)."""
-    reader = spark.read.format("kafka")
-    for k, v in cfg.options().items():
-        if k not in ("maxOffsetsPerTrigger",):
-            reader = reader.option(k, v)
-    return reader.load()

@@ -7,7 +7,6 @@ from tidb_cdc_spark.streaming.sinks import (
     JdbcMergeSink,
     MemorySink,
     ParquetSnapshotSink,
-    Scd2HistorySink,
     Scd2SplitHistorySink,
     Sink,
 )
@@ -41,7 +40,6 @@ __all__ = [
     "attach_metrics",
     "Sink",
     "ParquetSnapshotSink",
-    "Scd2HistorySink",
     "Scd2SplitHistorySink",
     "JdbcMergeSink",
     "HandlerSink",

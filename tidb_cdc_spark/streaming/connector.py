@@ -2,11 +2,13 @@
 registry + runner (``Connector`` / ``Register`` / ``Start``,
 ``/root/reference/cdc_manager.go:305-434``).
 
-One registration = (TableSpec, sinks, source). ``start`` launches one
-streaming query per registered table; each query is: source → parse
-(pure expressions) → foreachBatch → sink fan-out, with a per-table
-checkpoint directory carrying offsets (MarkMessage parity,
-cdc_manager.go:299, upgraded to transactional checkpoints).
+One registration = (TableSpec, sinks, source). Every streaming query
+the Connector launches runs the same ``foreachBatch`` body (consume
+loop + handler fan-out parity, cdc_manager.go:278-299): parse the raw
+micro-batch per table, then hand the typed changes to each sink, with
+a checkpoint directory carrying the offsets (MarkMessage parity,
+cdc_manager.go:299, upgraded to transactional checkpoints). ``start``
+launches that query once per table, ``start_shared`` once for all.
 
 Divergences (SURVEY §7.5): duplicate registration raises (reference
 panics, :383-385 — same contract, recoverable error instead); sink
@@ -16,13 +18,15 @@ anyway, :281-299 — data-loss bug we do not replicate).
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tidb_cdc_spark.cdc.parse import parse_cdc
+from tidb_cdc_spark.cdc.parse import cdc_parser, parse_cdc
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.sources.kafka import KafkaSourceConfig, kafka_stream
 from tidb_cdc_spark.streaming.sinks import Sink
@@ -56,6 +60,13 @@ class Connector:
         self.config = config
         self._registrations: dict[str, _Registration] = {}
         self._queries: list[StreamingQuery] = []
+        # a sink INSTANCE may back several registrations (one metrics
+        # sink for every table) while their batches run on different
+        # threads — per-table queries each run their own foreachBatch,
+        # the shared query fans out on a pool; a per-instance lock
+        # keeps its process() calls sequential. (Distinct sink
+        # instances pointed at one output path are never safe.)
+        self._sink_locks: dict[int, threading.Lock] = {}
 
     def register(
         self,
@@ -69,7 +80,8 @@ class Connector:
         ``group`` defaults to the topic name ``server.db.table``
         (:390-391). ``source`` overrides the Kafka stream with any
         DataFrame bearing a ``value`` column (file streams in tests —
-        same parse expressions either way).
+        same parse expressions either way); ``start_shared`` reads its
+        own source instead.
         """
         group = group or spec.topic(self.config.server_name)
         if group in self._registrations:
@@ -78,72 +90,43 @@ class Connector:
         if not spec.pk_columns:
             raise ValueError(f"spec {spec.table} needs a primary key for merge sinks")
         self._registrations[group] = _Registration(group, spec, list(sinks), source)
+        for sink in sinks:
+            self._sink_locks.setdefault(id(sink), threading.Lock())
 
-    def _source_for(self, spark: SparkSession, reg: _Registration) -> DataFrame:
-        if reg.source is not None:
-            return reg.source
+    def _kafka_source(
+        self, spark: SparkSession, group: str, **subscription
+    ) -> DataFrame:
+        """The config's Kafka stream for one ``topic`` or ``topic_pattern``."""
         cfg = KafkaSourceConfig(
             brokers=self.config.brokers,
-            topic=reg.spec.topic(self.config.server_name),
-            group=reg.group,
+            group=group,
             starting_offsets=self.config.starting_offsets,
             max_offsets_per_trigger=self.config.max_offsets_per_trigger,
             sasl_enabled=self.config.sasl_enabled,
             sasl_user=self.config.sasl_user,
             sasl_password=self.config.sasl_password,
+            **subscription,
         )
         return kafka_stream(spark, cfg)
 
     def start(
         self, spark: SparkSession, available_now: bool = False
     ) -> list[StreamingQuery]:
-        """Launch one checkpointed query per registration.
+        """Launch one checkpointed query per registration, checkpoint
+        ``<root>/<group>``, query name ``group`` — each table its own
+        failure domain.
 
         ``available_now=True`` drains what exists and stops (batch
         replay / tests); default is continuous micro-batches. Task
         parallelism per query = source partitions (the reference's
-        NumOfConsumers goroutines, automatic here). A sink INSTANCE
-        registered for several tables is serialized by a
-        per-instance lock — each table's query runs its foreachBatch
-        on its own thread, so without it a shared metrics/snapshot
-        sink object would race (same guard as ``start_shared``)."""
-        import threading
-
-        sink_locks: dict[int, threading.Lock] = {}
-        for _r in self._registrations.values():
-            for _s in _r.sinks:
-                sink_locks.setdefault(id(_s), threading.Lock())
+        NumOfConsumers goroutines, automatic here)."""
         for reg in self._registrations.values():
-            raw = self._source_for(spark, reg)
-            seq = F.col("offset").cast("long") if "offset" in raw.columns else None
-            changes = parse_cdc(raw, reg.spec, seq_col=seq)
-
-            def make_batch_fn(r: _Registration):
-                def fn(batch_df: DataFrame, batch_id: int) -> None:
-                    batch_df.persist()
-                    try:
-                        # fan-out loop parity (cdc_manager.go:277-298) —
-                        # but a sink error FAILS the batch (no silent
-                        # offset commit past lost data)
-                        for sink in r.sinks:
-                            with sink_locks[id(sink)]:
-                                sink.process(batch_df, batch_id, r.spec)
-                    finally:
-                        batch_df.unpersist()
-
-                return fn
-
-            writer = (
-                changes.writeStream.foreachBatch(make_batch_fn(reg))
-                .option(
-                    "checkpointLocation",
-                    f"{self.config.checkpoint_root}/{reg.group}",
+            source = reg.source
+            if source is None:
+                source = self._kafka_source(
+                    spark, reg.group, topic=reg.spec.topic(self.config.server_name)
                 )
-                .queryName(reg.group)
-            )
-            if available_now:
-                writer = writer.trigger(availableNow=True)
-            self._queries.append(writer.start())
+            self._launch(source, [reg], reg.group, reg.group, available_now)
         return list(self._queries)
 
     def start_shared(
@@ -154,60 +137,74 @@ class Connector:
         topic_pattern: str | None = None,
     ) -> StreamingQuery:
         """ONE streaming query serving EVERY registration — the
-        many-table scale mode.
+        many-table scale mode, checkpoint ``<root>/_shared``.
 
         ``start`` launches a query per table, which is right for tens
         of tables but not hundreds: each Spark streaming query costs a
         Kafka consumer group, a checkpoint log, a trigger loop, and
         driver scheduling. The shared form subscribes to a topic
         PATTERN (default ``server\\..*`` — topics are
-        ``server.db.table``, cdc_manager.go:390-391), persists each
-        raw micro-batch ONCE, and routes rows to each registration's
-        typed parse + sinks with cheap filtered passes over the cached
-        batch (the envelope's database/table fields via
-        ``get_json_object``; rows of unregistered tables are ignored —
-        watch them with ``parse.schema_drift`` if that matters).
+        ``server.db.table``, cdc_manager.go:390-391) and routes each
+        micro-batch's rows to every registration (rows of
+        unregistered tables are ignored — watch them with
+        ``parse.schema_drift`` if that matters).
 
         Ordering: identical guarantee to per-table mode — per-PK order
         within a topic-partition (seq = Kafka offset); neither mode
         orders across tables. Offsets commit once for the whole batch,
         so a sink error fails the batch for EVERY table (no partial
-        commit; same no-silent-loss stance as ``start``).
+        commit; same no-silent-loss stance as ``start``). The choice
+        between the two modes is fixed by the checkpoint layout: a
+        live deployment cannot switch modes without a new checkpoint.
         """
-        import threading
-
         regs = list(self._registrations.values())
         if not regs:
             raise ValueError("no registrations")
-        # a sink INSTANCE may back several registrations (one metrics
-        # sink for every table); the concurrent routing below must not
-        # let two threads run its process() at once — per-instance
-        # locks restore the sequential-loop guarantee for shared
-        # sinks. (Distinct sink instances pointed at one output path
-        # were never safe in either mode — per-table `start` always
-        # ran them concurrently.)
-        sink_locks: dict[int, threading.Lock] = {}
-        for _r in regs:
-            for _s in _r.sinks:
-                sink_locks.setdefault(id(_s), threading.Lock())
         if source is None:
-            cfg = KafkaSourceConfig(
-                brokers=self.config.brokers,
+            source = self._kafka_source(
+                spark,
+                f"{self.config.server_name}-shared",
                 topic_pattern=topic_pattern
                 or self.config.server_name.replace(".", "\\.") + "\\..*",
-                group=f"{self.config.server_name}-shared",
-                starting_offsets=self.config.starting_offsets,
-                max_offsets_per_trigger=self.config.max_offsets_per_trigger,
-                sasl_enabled=self.config.sasl_enabled,
-                sasl_user=self.config.sasl_user,
-                sasl_password=self.config.sasl_password,
             )
-            source = kafka_stream(spark, cfg)
-        has_offset = "offset" in source.columns
+        return self._launch(
+            source, regs, "_shared", f"{self.config.server_name}-shared", available_now
+        )
+
+    def _launch(
+        self,
+        source: DataFrame,
+        regs: list[_Registration],
+        checkpoint: str,
+        name: str,
+        available_now: bool,
+    ) -> StreamingQuery:
+        """Start one checkpointed query running the Connector's
+        ``foreachBatch`` body for ``regs``."""
+        seq = F.col("offset").cast("long") if "offset" in source.columns else None
+        # a one-table query builds its parse expressions once (each
+        # build costs about 0.1 s of driver CPU); a shared query may
+        # serve hundreds of registrations, most absent from any one
+        # batch, so it builds them per batch for the tables present
+        parse = cdc_parser(regs[0].spec, seq_col=seq) if len(regs) == 1 else None
+
+        def deliver(r: _Registration, changes: DataFrame, batch_id: int) -> None:
+            # fan-out loop parity (cdc_manager.go:277-298) — but a sink
+            # error FAILS the batch (no silent offset commit past lost
+            # data)
+            for sink in r.sinks:
+                with self._sink_locks[id(sink)]:
+                    sink.process(changes, batch_id, r.spec)
 
         def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-            from concurrent.futures import ThreadPoolExecutor
-
+            if parse is not None:
+                # every sink of the table reads one cached parse
+                cached = parse(batch_df).persist()
+                try:
+                    deliver(regs[0], cached, batch_id)
+                finally:
+                    cached.unpersist()
+                return
             # ONE slim routing parse per row, cached with the batch:
             # separate get_json_object calls each re-parse the whole
             # JSON document and would run 2× per registration; a
@@ -217,27 +214,22 @@ class Connector:
             routed = batch_df.withColumn(
                 "_route",
                 F.from_json(
-                    F.col("value").cast("string"),
-                    "database string, table string",
+                    F.col("value").cast("string"), "database string, table string"
                 ),
             ).persist()
 
             def handle(r: _Registration) -> None:
-                sub = routed.filter(
+                rows = routed.filter(
                     (F.col("_route.database") == r.spec.database)
                     & (F.col("_route.table") == r.spec.table)
                 ).drop("_route")
-                seq = F.col("offset").cast("long") if has_offset else None
-                changes = parse_cdc(sub, r.spec, seq_col=seq)
-                for sink in r.sinks:
-                    with sink_locks[id(sink)]:
-                        sink.process(changes, batch_id, r.spec)
+                deliver(r, parse_cdc(rows, r.spec, seq_col=seq), batch_id)
 
             # CONCURRENT routed passes: a sequential loop serializes
             # N small Spark jobs per batch and loses to per-table
             # mode's N independent trigger loops by ~N/parallelism
             # (tools/shared_width_rehearsal.py measured 2.7× slower
-            # at 24 tables before this).  Driver threads submit jobs
+            # at 24 tables before this). Driver threads submit jobs
             # Spark schedules side by side over the SAME cached
             # batch; sinks of one registration still run in order.
             # Any failure propagates out of .result() and fails the
@@ -247,7 +239,7 @@ class Connector:
             # micro-batch usually carries rows for a FRACTION of the
             # tables; one tiny distinct-collect over the cached batch
             # (bounded by #tables, not #rows) skips every absent
-            # registration's filter+parse+sink jobs.  A skipped sink
+            # registration's filter+parse+sink jobs. A skipped sink
             # sees nothing — identical to processing an empty frame,
             # which every Sink treats as a no-op merge.
             try:
@@ -260,15 +252,9 @@ class Connector:
                     .distinct()
                     .collect()
                 }
-                live = [
-                    r
-                    for r in regs
-                    if (r.spec.database, r.spec.table) in present
-                ]
+                live = [r for r in regs if (r.spec.database, r.spec.table) in present]
                 if live:
-                    with ThreadPoolExecutor(
-                        max_workers=min(32, len(live))
-                    ) as ex:
+                    with ThreadPoolExecutor(max_workers=min(32, len(live))) as ex:
                         for fut in [ex.submit(handle, r) for r in live]:
                             fut.result()
             finally:
@@ -276,11 +262,8 @@ class Connector:
 
         writer = (
             source.writeStream.foreachBatch(batch_fn)
-            .option(
-                "checkpointLocation",
-                f"{self.config.checkpoint_root}/_shared",
-            )
-            .queryName(f"{self.config.server_name}-shared")
+            .option("checkpointLocation", f"{self.config.checkpoint_root}/{checkpoint}")
+            .queryName(name)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)

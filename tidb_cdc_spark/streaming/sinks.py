@@ -2,8 +2,8 @@
 ``ConsumerHandler`` extension point (``cdc_manager.go:43-47``) plus
 real built-in sinks the reference lacks (SURVEY §2.1).
 
-All sinks are driven from one ``foreachBatch`` per table (handler
-fan-out loop parity, ``cdc_manager.go:277-298``) with Structured
+All sinks are driven from the Connector's one ``foreachBatch`` body
+(handler fan-out loop parity, ``cdc_manager.go:277-298``) with Structured
 Streaming checkpointing carrying the offsets — and, because every
 built-in sink is an idempotent latest-wins MERGE keyed on PK,
 at-least-once replay upgrades to effectively-exactly-once (the
@@ -27,6 +27,7 @@ from tidb_cdc_spark.cdc.apply import (
     conflate_latest,
 )
 from tidb_cdc_spark.cdc.schema import CDCType
+from tidb_cdc_spark.cdc.scd import merge_scd2_split
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.streaming import store
 from tidb_cdc_spark.streaming.store import guard_batch_watermark
@@ -102,22 +103,39 @@ class ParquetSnapshotSink(Sink):
 
 
 @dataclass
-class Scd2HistorySink(ParquetSnapshotSink):
+class Scd2SplitHistorySink(ParquetSnapshotSink):
     """Maintains a Type-2 SCD history table (versioned rows with
-    ``[valid_from, valid_to)`` intervals, ``cdc/scd.py``) instead of
-    a current-state snapshot — same copy-on-write versioned-directory
-    mechanics as ``ParquetSnapshotSink``, different merge: each batch
-    closes the open interval of every touched key and appends the
-    batch's new versions (``merge_scd2``). Checkpointed offsets +
-    per-key ordered batches ⇒ the stored history equals a one-shot
-    replay of the full log (pinned by the merge property test).
+    ``[valid_from, valid_to)`` intervals, ``cdc/scd.py``) instead of a
+    current-state snapshot. Checkpointed offsets + per-key ordered
+    batches ⇒ the stored history equals a one-shot ``scd2_history``
+    replay of the full log (pinned by the fold tests). Layout:
 
-    Unlike the PK-keyed MERGE sinks, ``merge_scd2`` is append-based
-    and NOT naturally idempotent — a foreachBatch re-delivery after a
-    crash (offsets commit after ``process``) would close the batch's
-    own just-written intervals at their own ``valid_from`` and append
-    duplicate versions. The batch watermark in the ``_CURRENT`` pointer
-    makes replays an explicit no-op (commit protocol: ``store.py``)."""
+    - ``head_v=N/`` — ONE row per key ever seen (its latest version;
+      open, or delete-closed with no successor), rewritten per batch
+      with the same versioned-dir + atomic-pointer mechanics as
+      ``ParquetSnapshotSink`` — cost ∝ live keyspace, the SAME
+      accepted baseline as the latest-wins snapshot sink;
+    - ``closed/b=<batch_id>/`` — every superseded version, written
+      ONCE and immutable forever — cost ∝ batch;
+    - ``_BOOTSTRAP`` — the as-of point of a seeded history, if any.
+
+    ``read_current`` = head ∪ closed(b ≤ watermark). The pointer swap
+    publishes both; a retry overwrites its own unpublished
+    ``closed/b=<id>`` (commit protocol: ``store.py``). The merge is
+    append-based and NOT naturally idempotent — a foreachBatch
+    re-delivery after a crash (offsets commit after ``process``)
+    would close the batch's own just-written intervals and append
+    duplicate versions — so the batch watermark in the ``_CURRENT``
+    pointer makes replays an explicit no-op.
+
+    ``compact()`` folds the accumulated per-batch closed dirs into
+    one; it costs ONE closed-store rewrite (∝ closed bytes,
+    independent of batch count). Compact when closed dirs reach a few
+    dozen; shorten the cadence only if the store is read between
+    batches (the listing cost, not write cost, is then the binding
+    term)."""
+
+    PREFIX = "head_v="
 
     def bootstrap(
         self,
@@ -134,10 +152,10 @@ class Scd2HistorySink(ParquetSnapshotSink):
         stream's ts representation (``ts_dtype``, default epoch
         ``long`` to match the Maxwell envelope); the first change to
         a key AFTER ``as_of`` closes its seeded interval via the
-        normal ``merge_scd2`` path.
+        normal merge path.
 
         Overlap handling differs from the snapshot sink: latest-wins
-        absorbs a replayed pre-export change, but ``merge_scd2``
+        absorbs a replayed pre-export change, but the history merge
         would close the seeded ``[as_of, null)`` interval at the
         stale change's EARLIER ts — an inverted interval plus a
         duplicate version carrying a pre-export image. So ``as_of``
@@ -180,71 +198,6 @@ class Scd2HistorySink(ParquetSnapshotSink):
             F.col("ts") >= F.lit(boot["as_of"]).cast(boot["ts_dtype"])
         )
 
-    def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
-        from tidb_cdc_spark.cdc.scd import merge_scd2
-
-        if guard_batch_watermark(self._last_batch_id(), batch_id, "history"):
-            return  # at-least-once replay of an already-applied batch
-        changes = self._since_bootstrap(changes)
-        base = self.read_current(changes.sparkSession)
-        merged = merge_scd2(base, changes, spec)
-        store.commit_version(self.path, self.PREFIX, merged, batch_id)
-
-
-@dataclass
-class Scd2SplitHistorySink(Scd2HistorySink):
-    """Type-2 SCD history with a SPLIT store — the 100 TB layout the
-    monolithic ``Scd2HistorySink`` documents itself out of: that sink
-    joins and rewrites the FULL history every batch, so per-batch
-    WRITE VOLUME grows with accumulated versions without bound.
-    Measured (tools/stateful_width_rehearsal.py::scd2_single, 12
-    batches × 50k changes): monolithic 0.7 → 9.6 MB written/batch
-    and still climbing; split constant 1.3 MB/batch. At the r10
-    12M-row interleaved sweep (``crossover 40 300000``, NOTES.md)
-    the write-volume gap reached **162 MB/batch growing vs ~6
-    MB/batch constant (27×)** — but wall-time on LOCAL NVMe never
-    crossed: a 162 MB local parquet rewrite costs ~1-2 s while this
-    sink's fixed two-materialize-pass overhead costs ~3.5 s/batch,
-    and the fitted differential puts the local crossover near ~200M
-    history rows. Choose by STORAGE, not microbench seconds: on
-    replicated/remote stores (S3/HDFS) write volume is the cost and
-    an O(history) per-batch rewrite is untenable — use this sink
-    whenever history bytes ≫ ~30× batch bytes or the store is
-    remote; prefer the monolithic sink for short histories on fast
-    local disks (~25% faster there). This sink keeps
-
-    - ``head_v=N/`` — ONE row per key ever seen (its latest version;
-      open, or delete-closed with no successor), rewritten per batch
-      with the same versioned-dir + atomic-pointer mechanics as
-      ``ParquetSnapshotSink`` — cost ∝ live keyspace, the SAME
-      accepted baseline as the latest-wins snapshot sink;
-    - ``closed/b=<batch_id>/`` — every superseded version, written
-      ONCE and immutable forever — cost ∝ batch.
-
-    ``read_current`` = head ∪ closed(b ≤ watermark). The pointer swap
-    publishes both; a retry overwrites its own unpublished
-    ``closed/b=<id>`` (commit protocol: ``store.py``). ``compact()``
-    folds the accumulated per-batch dirs into one when small-files
-    listing cost matters.
-
-    Compaction cadence (measured r11, ``stateful_width_rehearsal.py
-    compact 40 300000`` — the same 12M-row history as the crossover
-    sweep): one compact() = **4.6 s**, folding 40 dirs / 2,560 files
-    / 174 MB into 1 dir / 12 files / 166 MB and cutting the closed-
-    store read 1.0 → 0.23 s (4.4×). Cost is ONE closed-store
-    rewrite (∝ closed bytes, independent of batch count), so at an
-    every-N-batches cadence the amortized extra write volume is
-    closed_bytes/N per batch — at N=40 here that's ~4 MB/batch,
-    parity with the per-batch append itself, while keeping listing
-    flat. Rule: compact when closed dirs reach a few dozen; shorten
-    the cadence only if the store is read between batches (the read
-    speedup, not write cost, is then the binding term).
-
-    Fold equivalence with the monolithic sink is pinned by
-    ``merge_scd2_split``'s contract tests."""
-
-    PREFIX = "head_v="
-
     def _closed_root(self) -> str:
         return os.path.join(self.path, "closed")
 
@@ -272,8 +225,6 @@ class Scd2SplitHistorySink(Scd2HistorySink):
         return head if closed is None else head.unionByName(closed)
 
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
-        from tidb_cdc_spark.cdc.scd import merge_scd2_split
-
         if guard_batch_watermark(self._last_batch_id(), batch_id, "history"):
             return
         changes = self._since_bootstrap(changes)
@@ -294,9 +245,8 @@ class Scd2SplitHistorySink(Scd2HistorySink):
                 "(scd2zone, b) — rename via ColumnSpec(column=...)"
             )
         # ONE partitioned job computes both outputs (two separate
-        # writes re-executed the shared merge subplan — measured 3×
-        # the monolithic sink's batch cost before this; the batch
-        # SCD2 subplan is additionally materialized inside
+        # writes re-executed the shared merge subplan; the batch SCD2
+        # subplan is additionally materialized inside
         # merge_scd2_split), staged then moved into the two stores;
         # the pointer swap publishes both. Single writer: whatever is
         # left in _stage is a crashed attempt's

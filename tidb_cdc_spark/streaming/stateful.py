@@ -113,144 +113,3 @@ def stateful_latest(
             else GroupStateTimeout.NoTimeout
         ),
     )
-
-
-def running_totals_tws(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    key_type: str = "bigint",
-) -> DataFrame:
-    """``running_totals`` on the transformWithState API (Spark 4's
-    successor to ``applyInPandasWithState``: named state variables on
-    a handle, per-state TTL, timers, RocksDB-only). Same contract —
-    one row per key present in the batch with the lifetime
-    count/sum — so the two implementations are interchangeable and
-    the equality test pins the migration path. Prefer this form for
-    NEW operators: multiple independent state variables per key
-    (value/list/map) beat packing everything into one tuple, and
-    state-variable TTL replaces hand-rolled timeout plumbing.
-
-    Requires ``protobuf`` (the transformWithState state-server
-    protocol speaks it); raises ImportError with a clear message in
-    environments without it — ``running_totals`` is the
-    dependency-free equivalent."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(state-server protocol); use running_totals() instead in "
-            "environments without it"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = f"{key_col} {key_type}, n_events bigint, total double"
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n bigint, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "total": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def stateful_latest_tws(
-    changes: DataFrame,
-    key_col: str,
-    ts_col: str = "ts",
-    payload_col: str = "payload",
-    key_type: str = "bigint",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """``stateful_latest`` on the transformWithState API — the second
-    migration twin (same contract, same cross-batch tests): per-key
-    latest-wins with strict-``>`` replay idempotence. The TTL story
-    is where the new API pays off: ``applyInPandasWithState`` needed
-    hand-rolled ``setTimeoutDuration`` + ``hasTimedOut`` plumbing per
-    operator; here idle-key eviction is DECLARED on the state
-    variable (``getValueState(..., ttlDurationMs=...)``) and the
-    store expires unrefreshed values itself. State-variable TTL
-    requires processing-time semantics, so ``timeMode`` switches to
-    ProcessingTime exactly when a TTL is requested.
-
-    Requires ``protobuf`` (state-server protocol) like
-    ``running_totals_tws``; ``stateful_latest`` is the
-    dependency-free equivalent."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(state-server protocol); use stateful_latest() instead in "
-            "environments without it"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = f"{key_col} {key_type}, ts bigint, {payload_col} string"
-
-    class LatestState(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState(
-                "latest",
-                "ts bigint, payload string",
-                ttlDurationMs=ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            ts0, payload0 = (
-                self._latest.get() if self._latest.exists() else (-1, None)
-            )
-            changed = False
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                top = pdf.loc[pdf[ts_col].idxmax()]
-                # strict >: equal-ts arrivals are replays/ties and
-                # never displace the stored value (same contract as
-                # stateful_latest — replay-idempotent)
-                if int(top[ts_col]) > ts0:
-                    ts0, payload0 = int(top[ts_col]), top[payload_col]
-                    changed = True
-            self._latest.update((ts0, payload0))
-            if changed:
-                yield pd.DataFrame(
-                    {key_col: [key[0]], "ts": [ts0], payload_col: [payload0]}
-                )
-
-        def close(self) -> None:
-            pass
-
-    return changes.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=LatestState(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )

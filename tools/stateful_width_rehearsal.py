@@ -3,12 +3,8 @@ the r8 verdict's gap: the r7 width rehearsal covered routing, not
 stateful per-batch cost. Two questions, measured:
 
 1. **SCD2 at width**: a 24-table shared stream where 6 tables carry
-   ``Scd2HistorySink`` — does per-ROUND cost stay flat as history
-   accumulates across R sequential availableNow rounds?  (The
-   monolithic ``merge_scd2`` joins and rewrites the FULL history
-   every batch, so cost is expected ∝ accumulated versions — this
-   rehearsal quantifies the slope that justifies the split-store
-   head/closed layout.)
+   ``Scd2SplitHistorySink`` — does per-ROUND cost stay flat as history
+   accumulates across R sequential availableNow rounds?
 2. **NearDupAdmission compaction**: B batches through
    ``NearDupAdmissionSink`` — per-batch screening time with the
    band store growing, with and without periodic ``compact()``.
@@ -57,8 +53,7 @@ def _specs(n: int):
 def _write_round(root: str, n_tables: int, per_table: int, rnd: int) -> None:
     """One round of files: every table gets ``per_table`` updates on
     a rolling key window so SCD2 history GROWS every round (new
-    versions of existing keys — the worst case for a monolithic
-    history rewrite)."""
+    versions of existing keys)."""
     os.makedirs(root, exist_ok=True)
     msgs = []
     for i in range(n_tables):
@@ -84,14 +79,15 @@ def _write_round(root: str, n_tables: int, per_table: int, rnd: int) -> None:
     os.replace(tmp, os.path.join(root, f"r{rnd}.jsonl"))
 
 
-def scd2_width(spark, n_tables: int, rounds: int, sink_cls_name: str) -> dict:
+def scd2_width(spark, n_tables: int, rounds: int) -> dict:
     from tidb_cdc_spark.sources.files import maxwell_file_stream
-    from tidb_cdc_spark.streaming import sinks as SK
     from tidb_cdc_spark.streaming.connector import Connector, ConnectorConfig
-    from tidb_cdc_spark.streaming.sinks import ParquetSnapshotSink
+    from tidb_cdc_spark.streaming.sinks import (
+        ParquetSnapshotSink,
+        Scd2SplitHistorySink,
+    )
 
-    sink_cls = getattr(SK, sink_cls_name)
-    root = os.path.join(TMP, f"scd2_{sink_cls_name}")
+    root = os.path.join(TMP, "scd2_width")
     shutil.rmtree(root, ignore_errors=True)
     events = os.path.join(root, "in")
     os.makedirs(events, exist_ok=True)  # stream source probes the dir
@@ -107,7 +103,7 @@ def scd2_width(spark, n_tables: int, rounds: int, sink_cls_name: str) -> dict:
     scd_sinks = []
     for i, s in enumerate(specs):
         if i % 4 == 0:
-            sink = sink_cls(os.path.join(root, "hist", s.table))
+            sink = Scd2SplitHistorySink(os.path.join(root, "hist", s.table))
             scd_sinks.append(sink)
         else:
             sink = ParquetSnapshotSink(os.path.join(root, "snap", s.table))
@@ -129,7 +125,6 @@ def scd2_width(spark, n_tables: int, rounds: int, sink_cls_name: str) -> dict:
         hist_rows.append(0 if cur is None else cur.count())
     return {
         "experiment": "scd2_width",
-        "sink": sink_cls_name,
         "n_tables": n_tables,
         "n_scd2_tables": n_scd2,
         "rounds": rounds,
@@ -139,208 +134,9 @@ def scd2_width(spark, n_tables: int, rounds: int, sink_cls_name: str) -> dict:
     }
 
 
-def scd2_single(
-    spark,
-    batches: int,
-    per_batch: int,
-    sink_cls_name: str,
-    n_keys: int = 2000,
-) -> dict:
-    """Isolated sink cost: one table, ``batches`` sequential calls of
-    ``sink.process`` with ``per_batch`` updates each over a rolling
-    ``n_keys``-key window — history grows to batches×per_batch rows
-    while each batch stays constant, so a per-batch cost ∝ history
-    shows as a rising per_batch_sec sequence with no connector noise.
-    NOTE: fixed job overhead (~1-3 s on local[32]) hides the slope
-    below ~10⁶ history rows — size per_batch/batches accordingly."""
-    import pandas as pd
-
-    from tidb_cdc_spark.cdc import parse_cdc
-    from tidb_cdc_spark.streaming import sinks as SK
-    from tidb_cdc_spark.streaming.store import read_pointer
-
-    root = os.path.join(TMP, f"single_{sink_cls_name}")
-    shutil.rmtree(root, ignore_errors=True)
-    sink = getattr(SK, sink_cls_name)(os.path.join(root, "hist"))
-    spec = _specs(1)[0]
-    from pyspark.sql import functions as F
-
-    per_round: list[float] = []
-    per_round_bytes: list[int] = []
-    for b in range(batches):
-        msgs = [
-            json.dumps(
-                {
-                    "database": "d",
-                    "table": "t000",
-                    "type": "insert" if b == 0 else "update",
-                    "ts": b * per_batch + j,
-                    "data": {
-                        "k": f"k{j % n_keys}",
-                        "v": b * per_batch + j,
-                        "ts": "2026-01-01 00:00:00",
-                    },
-                }
-            )
-            for j in range(per_batch)
-        ]
-        df = spark.createDataFrame(
-            pd.DataFrame({"value": msgs})
-        ).repartition(8)
-        changes = parse_cdc(
-            df.withColumn("_s", F.monotonically_increasing_id()),
-            spec,
-            seq_col=F.col("_s"),
-        )
-        t0 = time.perf_counter()
-        sink.process(changes, b, spec)
-        per_round.append(round(time.perf_counter() - t0, 2))
-        # bytes the batch WROTE — the metric that scales to 100 TB
-        # (at production scale I/O volume dominates; local NVMe +
-        # narrow rows hide it behind fixed job overhead): monolithic
-        # rewrites the full history (v=N), split writes head + its
-        # closed/b=N append
-        v = read_pointer(sink.path)[0]
-        if sink_cls_name == "Scd2HistorySink":
-            written = _du(os.path.join(sink.path, f"v={v}"))
-        else:
-            written = _du(os.path.join(sink.path, f"head_v={v}")) + _du(
-                os.path.join(sink.path, "closed", f"b={b}")
-            )
-        per_round_bytes.append(written)
-    hist = sink.read_current(spark)
-    return {
-        "experiment": "scd2_single",
-        "sink": sink_cls_name,
-        "batches": batches,
-        "per_batch_rows": per_batch,
-        "per_batch_sec": per_round,
-        "per_batch_mb_written": [round(x / 1e6, 1) for x in per_round_bytes],
-        "history_rows": 0 if hist is None else hist.count(),
-        # slope signal robust to warmup noise: mean of last 3 over
-        # mean of batches 2-4
-        "tail_over_early": round(
-            (sum(per_round[-3:]) / 3)
-            / max(sum(per_round[2:5]) / 3, 1e-9),
-            2,
-        ),
-    }
-
-
-def scd2_crossover(spark, batches: int, per_batch: int) -> dict:
-    """Monolithic-vs-split wall-time crossover, measured FAIRLY: both
-    sinks fold the SAME parsed batch inside one loop, alternating
-    which sink runs first each batch (review catch — running the
-    full monolithic sweep before the split sweep in one warm session
-    hands the split sink every JVM/codegen warmup for free and
-    shifts the reported crossover earlier). History grows to
-    batches × per_batch rows; crossover = first batch index from
-    which the split sink stays faster for the REST of the run
-    (searched from batch 1 — batch 0 is bootstrap for both and
-    included in the tail requirement from b=1 on)."""
-    import pandas as pd
-
-    from tidb_cdc_spark.cdc import parse_cdc
-    from tidb_cdc_spark.streaming import sinks as SK
-    from tidb_cdc_spark.streaming.store import read_pointer
-
-    root = os.path.join(TMP, "crossover")
-    shutil.rmtree(root, ignore_errors=True)
-    mono_sink = SK.Scd2HistorySink(os.path.join(root, "mono"))
-    split_sink = SK.Scd2SplitHistorySink(os.path.join(root, "split"))
-    spec = _specs(1)[0]
-    from pyspark.sql import functions as F
-
-    n_keys = 50_000
-    mono_t: list[float] = []
-    split_t: list[float] = []
-    mono_mb: list[float] = []
-    split_mb: list[float] = []
-    for b in range(batches):
-        msgs = [
-            json.dumps(
-                {
-                    "database": "d",
-                    "table": "t000",
-                    "type": "insert" if b == 0 else "update",
-                    "ts": b * per_batch + j,
-                    "data": {
-                        "k": f"k{j % n_keys}",
-                        "v": b * per_batch + j,
-                        "ts": "2026-01-01 00:00:00",
-                    },
-                }
-            )
-            for j in range(per_batch)
-        ]
-        df = spark.createDataFrame(
-            pd.DataFrame({"value": msgs})
-        ).repartition(8)
-        changes = parse_cdc(
-            df.withColumn("_s", F.monotonically_increasing_id()),
-            spec,
-            seq_col=F.col("_s"),
-        )
-        order = (
-            [(mono_sink, mono_t), (split_sink, split_t)]
-            if b % 2 == 0
-            else [(split_sink, split_t), (mono_sink, mono_t)]
-        )
-        for sink, times in order:
-            t0 = time.perf_counter()
-            sink.process(changes, b, spec)
-            times.append(round(time.perf_counter() - t0, 2))
-        # bytes each sink WROTE this batch — the metric that decides
-        # sink choice on replicated/remote storage (review catch:
-        # the interleaved rewrite must keep reporting it): monolithic
-        # rewrote v=N (the FULL history), split wrote head_v=N + its
-        # immutable closed/b=N append (absent when nothing closed)
-        v_m = read_pointer(mono_sink.path)[0]
-        mono_mb.append(round(_du(os.path.join(mono_sink.path, f"v={v_m}")) / 1e6, 1))
-        v_s = read_pointer(split_sink.path)[0]
-        split_mb.append(
-            round(
-                (
-                    _du(os.path.join(split_sink.path, f"head_v={v_s}"))
-                    + _du(os.path.join(split_sink.path, "closed", f"b={b}"))
-                )
-                / 1e6,
-                1,
-            )
-        )
-        print(
-            f"# b{b}: mono {mono_t[-1]}s/{mono_mb[-1]}MB "
-            f"split {split_t[-1]}s/{split_mb[-1]}MB "
-            f"(hist ~{(b + 1) * per_batch} rows)",
-            file=sys.stderr,
-            flush=True,
-        )
-    cross = next(
-        (
-            b
-            for b in range(1, batches)
-            if all(split_t[i] < mono_t[i] for i in range(b, batches))
-        ),
-        None,
-    )
-    return {
-        "experiment": "scd2_crossover",
-        "batches": batches,
-        "per_batch_rows": per_batch,
-        "mono_per_batch_sec": mono_t,
-        "split_per_batch_sec": split_t,
-        "mono_per_batch_mb_written": mono_mb,
-        "split_per_batch_mb_written": split_mb,
-        "crossover_batch": cross,
-        "crossover_history_rows": None if cross is None else cross * per_batch,
-    }
-
-
 def scd2_compact_cost(spark, batches: int, per_batch: int) -> dict:
-    """Price ``Scd2SplitHistorySink.compact()`` at the same 12M-row
-    store the r10 crossover sweep proved write-volume-optimal
-    (verdict r10 #7: the maintenance cost was the unpriced half of
-    the choose-by-storage story). Split-sink-only fold to
+    """Price ``Scd2SplitHistorySink.compact()`` on a 12M-row store
+    (at the defaults). Fold to
     ``batches × per_batch`` history rows, then ONE compact:
     report wall-time, closed-dir/file counts and history-read time
     before vs after — the listing cost compact() exists to bound."""
@@ -772,23 +568,6 @@ def admission_batches(spark, batches: int, compact_every: int | None) -> dict:
 
 
 def main() -> None:
-    # crossover mode (r9 verdict #5): push the scd2_single shape past
-    # the ~10M-row accumulated history where the monolithic sink's
-    # O(history) rewrite must dominate the split sink's fixed
-    # two-pass overhead, and report the wall-time crossover batch.
-    # Run: PYTHONPATH=. python3 tools/stateful_width_rehearsal.py \
-    #   crossover [batches=40] [per_batch=300000]
-    if len(sys.argv) > 1 and sys.argv[1] == "crossover":
-        batches = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-        per_batch = int(sys.argv[3]) if len(sys.argv) > 3 else 300_000
-        from tidb_cdc_spark import get_spark
-
-        spark = get_spark("scd2-crossover")
-        spark.sparkContext.setLogLevel("ERROR")
-        print(json.dumps(scd2_crossover(spark, batches, per_batch)), flush=True)
-        spark.stop()
-        return
-
     # digest-admission mode (r11): per-batch cost of the exact-digest
     # admission sink as the index grows — must stay flat (∝ batch).
     # Run: PYTHONPATH=. python3 tools/stateful_width_rehearsal.py \
@@ -879,7 +658,7 @@ def main() -> None:
         return
 
     # compact-cost mode (r10 verdict #7): price the split store's
-    # maintenance at the 12M-row history from the crossover sweep.
+    # maintenance at a 12M-row history.
     # Run: PYTHONPATH=. python3 tools/stateful_width_rehearsal.py \
     #   compact [batches=40] [per_batch=300000]
     if len(sys.argv) > 1 and sys.argv[1] == "compact":
@@ -904,20 +683,9 @@ def main() -> None:
     spark = get_spark("stateful-width")
     spark.sparkContext.setLogLevel("ERROR")
 
-    print(
-        json.dumps(scd2_width(spark, n_tables, rounds, "Scd2HistorySink")),
-        flush=True,
-    )
-    print(
-        json.dumps(
-            scd2_width(spark, n_tables, rounds, "Scd2SplitHistorySink")
-        ),
-        flush=True,
-    )
+    print(json.dumps(scd2_width(spark, n_tables, rounds)), flush=True)
     print(json.dumps(admission_batches(spark, 8, None)), flush=True)
     print(json.dumps(admission_batches(spark, 8, 4)), flush=True)
-    for cls in ("Scd2HistorySink", "Scd2SplitHistorySink"):
-        print(json.dumps(scd2_single(spark, 25, 5000, cls)), flush=True)
     spark.stop()
 
 
