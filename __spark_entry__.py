@@ -23,7 +23,7 @@ from tidb_cdc_spark.queries import ORACLE, QUERIES  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: TPC-H Q1 pricing summary on sf0.001."""
-    from tidb_cdc_spark.queries.batch import q1_pricing_summary
+    from tidb_cdc_spark.queries.tpch import q1_pricing_summary
 
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 

@@ -1,5 +1,5 @@
 """Composed near-dup-collapse → containment pipeline
-(queries/llm17.py::dedup_containment_repr): equivalence, family-
+(queries/dedup.py::dedup_containment_repr): equivalence, family-
 blowup removal, and cross-family subset PRESERVATION on synthetic
 corpora where the expected answer is computable exactly — the r9
 verdict's open item #4 (the raw op's 100× caveat said "collapse
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.functions.dedup import ngram_containment_pairs
-from tidb_cdc_spark.queries.llm17 import _repr_docs
+from tidb_cdc_spark.queries.dedup import _repr_docs
 
 #: unique-token body generator — 40 tokens per family, no overlap
 #: across families, so exact-duplicate family structure is the ONLY

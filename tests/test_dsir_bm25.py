@@ -169,7 +169,7 @@ def test_bm25_matches_pure_python(spark):
 def test_bm25_idf_favors_rare_terms(spark):
     """A doc matching the query's RARE term must outrank a doc
     matching only the ubiquitous term — the idf property the
-    degenerate overlap ranker (llm9) lacks."""
+    degenerate overlap ranker (rag_hybrid_rrf) lacks."""
     from tidb_cdc_spark.functions.bm25 import bm25_topk
 
     rows = [(i, "common filler words here") for i in range(6)]

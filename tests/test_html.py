@@ -67,7 +67,7 @@ class TestColumnChain:
         """The declared query's plan has NO Python stage of any
         kind — stricter than the registry-wide no-BatchEvalPython
         guard (Arrow stages are allowed there, not here)."""
-        from tidb_cdc_spark.queries.llm20 import corpus_html_extract
+        from tidb_cdc_spark.queries.crawl import corpus_html_extract
 
         plan = (
             corpus_html_extract(spark, "/root/testdata/sf0.001")

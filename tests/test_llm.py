@@ -890,9 +890,7 @@ class TestTokenizerFertility:
         # → single-symbol token); chars=7
         assert ("de", 1, 4, 7) in rows
 
-        from tidb_cdc_spark.queries.llm16 import (
-            corpus_tokenizer_fertility,
-        )
+        from tidb_cdc_spark.queries.corpus import corpus_tokenizer_fertility
 
         # end-to-end ratios on the real table: integral and ordered
         out = corpus_tokenizer_fertility(spark, "/root/testdata/sf0.001")

@@ -1,4 +1,4 @@
-"""Container-parse query wave (queries/llm18.py): the planted-value
+"""Container-parse query wave (queries/media.py): the planted-value
 contract between ``synth_container_media``'s / ``synth_image_media``'s
 formula-valued headers and what ``probe_media``'s REAL chunk/box
 walks and marker scans recover."""

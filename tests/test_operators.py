@@ -192,7 +192,7 @@ class TestSketches:
     def test_approx_within_tolerance_of_exact(self, spark):
         # sketch_approx computes approx AND exact in one plan and emits
         # the error-bound verdict per group (its oracle is TRUE rows).
-        from tidb_cdc_spark.queries.batch3 import sketch_approx, sketch_percentiles
+        from tidb_cdc_spark.queries.tpch import sketch_approx, sketch_percentiles
 
         sf = "/root/testdata/sf0.01"
         exact = {r.o_orderstatus for r in sketch_percentiles(spark, sf).collect()}

@@ -161,7 +161,7 @@ def test_media_curation_pipeline_non_vacuous(spark):
     """Both stages must do real work on the plant: exact dedup
     collapses byte-identical twins, perceptual collapses the
     shifted copies exact hashing cannot."""
-    from tidb_cdc_spark.queries.llm18 import media_curation_pipeline
+    from tidb_cdc_spark.queries.media import media_curation_pipeline
 
     row = media_curation_pipeline(spark, "/root/testdata/sf0.001").collect()[0]
     assert row.n_media > row.after_exact > row.after_perceptual > 0

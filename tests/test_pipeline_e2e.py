@@ -162,7 +162,7 @@ class TestCdcFeedsCurationSurface:
 
     def test_provenance_over_cdc_snapshot_equals_batch(self, spark, tmp_path):
         from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
-        from tidb_cdc_spark.queries.llm9 import corpus_curation_provenance
+        from tidb_cdc_spark.queries.corpus import corpus_curation_provenance
         from tidb_cdc_spark.sources import maxwell_file_stream
         from tidb_cdc_spark.streaming import (
             Connector,

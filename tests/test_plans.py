@@ -12,12 +12,12 @@ from tidb_cdc_spark.plans import (
     has_pushed_filters,
     num_exchanges,
 )
-from tidb_cdc_spark.queries.batch import (
+from tidb_cdc_spark.queries.events import events_asof_purchase_click
+from tidb_cdc_spark.queries.tpch import (
     q1_pricing_summary,
     q3_shipping_priority,
     q5_local_supplier_volume,
     q6_forecast_revenue,
-    events_asof_purchase_click,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -78,7 +78,7 @@ class TestMultimodalPruning:
         only, so no Generate (explode) or Exchange ever carries the
         bytes. Pinned on the declared query (the shape the frame-
         extraction fleet would join against)."""
-        from tidb_cdc_spark.queries.llm18 import multimodal_frame_plan
+        from tidb_cdc_spark.queries.media import multimodal_frame_plan
 
         plan = explain_str(multimodal_frame_plan(spark, SF))
         assert "MapInPandas" in plan  # the probe is the sanctioned path
@@ -97,7 +97,7 @@ class TestMultimodalPruning:
 
 class TestNewTpchPlans:
     def test_q7_broadcasts_all_dims(self, spark):
-        from tidb_cdc_spark.queries.batch3 import q7_volume_shipping
+        from tidb_cdc_spark.queries.tpch import q7_volume_shipping
 
         plan = explain_str(q7_volume_shipping(spark, SF))
         # supplier + nation×2 broadcast; only lineitem→orders→customer
@@ -105,21 +105,21 @@ class TestNewTpchPlans:
         assert plan.count("BroadcastHashJoin") >= 3
 
     def test_q8_broadcasts_selective_part(self, spark):
-        from tidb_cdc_spark.queries.batch3 import q8_market_share
+        from tidb_cdc_spark.queries.tpch import q8_market_share
 
         df = q8_market_share(spark, SF)
         assert explain_str(df).count("BroadcastHashJoin") >= 4
         assert has_pushed_filters(df, "p_type")
 
     def test_q10_pushdown_both_scans(self, spark):
-        from tidb_cdc_spark.queries.batch3 import q10_returned_items
+        from tidb_cdc_spark.queries.tpch import q10_returned_items
 
         df = q10_returned_items(spark, SF)
         assert has_pushed_filters(df, "l_returnflag")
         assert has_pushed_filters(df, "o_orderdate")
 
     def test_q18_aggregates_before_join(self, spark):
-        from tidb_cdc_spark.queries.batch3 import q18_large_volume_customers
+        from tidb_cdc_spark.queries.tpch import q18_large_volume_customers
 
         # the HAVING aggregate must appear BELOW the joins (smallest
         # join input): in the plan string the first HashAggregate
@@ -133,7 +133,7 @@ class TestNewTpchPlans:
 
 class TestNewWavePlans:
     def test_funnel_scans_events_at_most_thrice(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_funnel
+        from tidb_cdc_spark.queries.events import events_funnel
 
         # v and c are materialized, so the plan holds exactly one
         # filtered events scan per funnel stage — not the 6 the
@@ -142,13 +142,13 @@ class TestNewWavePlans:
         assert plan.count("FileScan parquet") <= 3
 
     def test_funnel_pushes_event_type(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_funnel
+        from tidb_cdc_spark.queries.events import events_funnel
 
         df = events_funnel(spark, SF)
         assert has_pushed_filters(df, "event_type")
 
     def test_source_overlap_single_corpus_scan(self, spark):
-        from tidb_cdc_spark.queries.llm7 import source_overlap_matrix
+        from tidb_cdc_spark.queries.corpus import source_overlap_matrix
 
         # the distinct (fp, source) projection is materialized before
         # the self-join: one scan of documents, not one per side
@@ -156,7 +156,7 @@ class TestNewWavePlans:
         assert plan.count("FileScan parquet") <= 1
 
     def test_gapfill_broadcasts_spine(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_daily_gapfill
+        from tidb_cdc_spark.queries.events import events_daily_gapfill
 
         plan = explain_str(events_daily_gapfill(spark, SF))
         # spine side joins broadcast; running-total window partitioned
@@ -187,7 +187,7 @@ class TestDynamicPartitionPruning:
 
 class TestRangeFramePlan:
     def test_trailing_30m_single_hash_exchange(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_trailing_30m
+        from tidb_cdc_spark.queries.events import events_trailing_30m
 
         # both window aggregates share the user_id partitioning: one
         # hash exchange total (plus the final sort's range exchange)
@@ -199,7 +199,7 @@ class TestRangeFramePlan:
 
 class TestCurationPipelinePlan:
     def test_pipeline_stays_jvm_side(self, spark):
-        from tidb_cdc_spark.queries.llm9 import corpus_curation_pipeline
+        from tidb_cdc_spark.queries.corpus import corpus_curation_pipeline
 
         # 4-stage funnel must stay whole-stage codegen: no Python
         # round-trip, and the dedup/selection joins on the tiny
@@ -211,7 +211,7 @@ class TestCurationPipelinePlan:
 
 class TestNewQueryPlans:
     def test_sliding_window_two_exchanges_max(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_sliding_1h
+        from tidb_cdc_spark.queries.events import events_sliding_1h
 
         # window() explode feeds a map-side-combining agg: one hash
         # exchange + the final sort's range exchange
@@ -221,7 +221,7 @@ class TestNewQueryPlans:
         assert "BatchEvalPython" not in plan
 
     def test_transition_matrix_bounded_exchanges(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_transition_matrix
+        from tidb_cdc_spark.queries.events import events_transition_matrix
 
         df = events_transition_matrix(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -230,7 +230,7 @@ class TestNewQueryPlans:
         assert "BatchEvalPython" not in plan
 
     def test_salted_agg_two_phase(self, spark):
-        from tidb_cdc_spark.queries.batch2 import skew_salted_agg
+        from tidb_cdc_spark.queries.tpch import skew_salted_agg
 
         df = skew_salted_agg(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -238,7 +238,7 @@ class TestNewQueryPlans:
         assert plan.count("Exchange hashpartitioning") == 2
 
     def test_grouping_sets_single_exchange(self, spark):
-        from tidb_cdc_spark.queries.batch2 import grouping_sets_orders
+        from tidb_cdc_spark.queries.tpch import grouping_sets_orders
 
         df = grouping_sets_orders(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -249,7 +249,7 @@ class TestNewQueryPlans:
 
 class TestZorderPlan:
     def test_morton_code_is_codegen(self, spark):
-        from tidb_cdc_spark.queries.batch4 import events_zorder_buckets
+        from tidb_cdc_spark.queries.events import events_zorder_buckets
 
         # the bit-dilation expressions must stay inside
         # WholeStageCodegen (no CodegenFallback interpreted eval, no
@@ -270,7 +270,7 @@ class TestRound5Plans:
     def test_decimal_agg_single_hash_exchange(self, spark):
         # envelope parse is stateless/codegen; ONE hash exchange (the
         # 3-key aggregate) + the final sort's range exchange
-        from tidb_cdc_spark.queries.cdcq import cdc_decimal_agg
+        from tidb_cdc_spark.queries.cdc import cdc_decimal_agg
 
         df = cdc_decimal_agg(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -280,7 +280,7 @@ class TestRound5Plans:
     def test_repeated_spans_two_hash_exchanges(self, spark):
         # shingle window (doc_id) + span groupBy — nothing else; the
         # top-100 is TakeOrdered, not a sort exchange
-        from tidb_cdc_spark.queries.llm10 import repeated_spans_top
+        from tidb_cdc_spark.queries.dedup import repeated_spans_top
 
         plan = explain_str(repeated_spans_top(spark, SF), mode="simple")
         assert plan.count("Exchange hashpartitioning") == 2
@@ -290,7 +290,7 @@ class TestRound5Plans:
         # shingle window + span count + count-join/doc aggregate: the
         # span-key join is co-partitioned with the count aggregate, so
         # hash exchanges stay at 3 (never one per operator)
-        from tidb_cdc_spark.queries.llm10 import span_dup_coverage
+        from tidb_cdc_spark.queries.dedup import span_dup_coverage
 
         plan = explain_str(span_dup_coverage(spark, SF), mode="simple")
         assert plan.count("Exchange hashpartitioning") <= 3
@@ -351,7 +351,7 @@ class TestSemdedupPcaPlans:
     def test_covariance_scan_only(self, spark):
         # one scalar aggregate of 21 partial sums: the data never
         # hash-shuffles — only the 1-row partial-agg collect moves
-        from tidb_cdc_spark.queries.llm13 import embedding_covariance
+        from tidb_cdc_spark.queries.embeddings import embedding_covariance
 
         df = embedding_covariance(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -359,7 +359,7 @@ class TestSemdedupPcaPlans:
         assert "BatchEvalPython" not in plan  # codegen, no Python
 
     def test_pca_projection_arrow_batched(self, spark):
-        from tidb_cdc_spark.queries.llm13 import embedding_pca_project
+        from tidb_cdc_spark.queries.embeddings import embedding_pca_project
 
         df = embedding_pca_project(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -415,7 +415,7 @@ class TestLateR6Plans:
         assert "BroadcastHashJoin" in plan
 
     def test_drift_vocabulary_sized_join(self, spark):
-        from tidb_cdc_spark.queries.llm14 import vocab_drift_top
+        from tidb_cdc_spark.queries.corpus import vocab_drift_top
 
         df = vocab_drift_top(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -425,7 +425,7 @@ class TestLateR6Plans:
         assert "TakeOrderedAndProject" in plan
 
     def test_bigram_surprisal_codegen(self, spark):
-        from tidb_cdc_spark.queries.llm14 import text_bigram_surprisal
+        from tidb_cdc_spark.queries.corpus import text_bigram_surprisal
 
         df = text_bigram_surprisal(spark, SF)
         plan = explain_str(df, mode="simple")
@@ -437,7 +437,7 @@ class TestRound7Plans:
         """The global rank must run partitioned by the score band —
         a row_number window WITHOUT a partition key serializes the
         corpus onto one task."""
-        from tidb_cdc_spark.queries.llm14 import corpus_perplexity_buckets
+        from tidb_cdc_spark.queries.corpus import corpus_perplexity_buckets
 
         plan = explain_str(corpus_perplexity_buckets(spark, SF))
         import re
@@ -455,7 +455,7 @@ class TestRound7Plans:
     def test_rerank_cascade_broadcasts_and_stays_jvm(self, spark):
         """Stage-1 query side broadcast (corpus never shuffles for
         the cosine scan); the pairwise rerank joins stay JVM-side."""
-        from tidb_cdc_spark.queries.llm13 import rag_rerank_cascade
+        from tidb_cdc_spark.queries.retrieval import rag_rerank_cascade
 
         df = rag_rerank_cascade(spark, SF)
         plan = explain_str(df)
@@ -466,7 +466,7 @@ class TestRound7Plans:
         """freq agg and the affected-docs semi-join must share ONE
         fingerprint computation (InMemoryTableScan), not recompute
         the shingle window per consumer."""
-        from tidb_cdc_spark.queries.llm14 import winnow_cap_report
+        from tidb_cdc_spark.queries.dedup import winnow_cap_report
 
         plan = explain_str(winnow_cap_report(spark, SF))
         assert "InMemoryTableScan" in plan
@@ -476,7 +476,7 @@ class TestRound7Plans:
         assert live.count("windowspecdefinition") <= 1
 
     def test_hll_audit_no_python_and_single_scan_per_arm(self, spark):
-        from tidb_cdc_spark.queries.batch3 import events_distinct_hll_audit
+        from tidb_cdc_spark.queries.events import events_distinct_hll_audit
 
         plan = explain_str(events_distinct_hll_audit(spark, SF))
         assert "BatchEvalPython" not in plan
@@ -488,7 +488,7 @@ class TestLateR7Plans:
         """The dim-row log-ratio table must arrive broadcast — a
         hash-exchange join on bucket would shuffle the whole sparse
         TF table against a 64-row side."""
-        from tidb_cdc_spark.queries.llm15 import corpus_dsir_weights
+        from tidb_cdc_spark.queries.corpus import corpus_dsir_weights
 
         plan = explain_str(corpus_dsir_weights(spark, SF))
         assert "BroadcastHashJoin" in plan
@@ -499,7 +499,7 @@ class TestLateR7Plans:
         """Selection rank must run partitioned by the weight band —
         an unpartitioned row_number serializes the corpus onto one
         task (the corpus_perplexity_buckets contract)."""
-        from tidb_cdc_spark.queries.llm15 import corpus_dsir_select
+        from tidb_cdc_spark.queries.corpus import corpus_dsir_select
 
         plan = explain_str(corpus_dsir_select(spark, SF))
         rn = [
@@ -515,7 +515,7 @@ class TestLateR7Plans:
         """Postings stay put: the query-term×idf table broadcasts
         onto the corpus tf table; nothing corpus-sized crosses a
         broadcast threshold, no cartesian pair generation."""
-        from tidb_cdc_spark.queries.llm15 import rag_bm25_topk
+        from tidb_cdc_spark.queries.retrieval import rag_bm25_topk
 
         plan = explain_str(rag_bm25_topk(spark, SF))
         assert "BroadcastHashJoin" in plan
@@ -527,7 +527,7 @@ class TestLateR7Plans:
         groupBy(doc) must all reuse the doc_id fan-out distribution:
         exactly ONE hash exchange in the whole plan, and the window
         carries the doc_id partition key."""
-        from tidb_cdc_spark.queries.llm15 import text_token_entropy
+        from tidb_cdc_spark.queries.corpus import text_token_entropy
 
         plan = explain_str(text_token_entropy(spark, SF))
         assert "BatchEvalPython" not in plan
@@ -542,12 +542,12 @@ class TestLateR7Plans:
 
 
 class TestFinalTpchPlans:
-    """q2/q11/q12/q21 (batch5) — the shapes that close the 22-query
+    """q2/q11/q12/q21 (queries/tpch.py) — the shapes that close the 22-query
     TPC-H set. Pins: single fact scan where the design says one,
     broadcast dims, no Python in any plan."""
 
     def test_q2_single_lineitem_scan_and_window_min(self, spark):
-        from tidb_cdc_spark.queries.batch5 import q2_min_cost_supplier
+        from tidb_cdc_spark.queries.tpch import q2_min_cost_supplier
 
         plan = explain_str(q2_min_cost_supplier(spark, SF))
         # window-min decorrelation: the self-join variant scans and
@@ -558,7 +558,7 @@ class TestFinalTpchPlans:
         assert "BatchEvalPython" not in plan
 
     def test_q11_scalar_subquery_stays_in_plan(self, spark):
-        from tidb_cdc_spark.queries.batch5 import q11_important_parts
+        from tidb_cdc_spark.queries.tpch import q11_important_parts
 
         plan = explain_str(q11_important_parts(spark, SF))
         # threshold = broadcast 1-row aggregate, never a collect;
@@ -567,7 +567,7 @@ class TestFinalTpchPlans:
         assert "BatchEvalPython" not in plan
 
     def test_q12_pushdown_and_single_join(self, spark):
-        from tidb_cdc_spark.queries.batch5 import q12_priority_lines
+        from tidb_cdc_spark.queries.tpch import q12_priority_lines
 
         df = q12_priority_lines(spark, SF)
         assert has_pushed_filters(df, "l_shipdate")
@@ -575,7 +575,7 @@ class TestFinalTpchPlans:
         assert "BatchEvalPython" not in plan
 
     def test_q21_semi_then_anti_on_orderkey(self, spark):
-        from tidb_cdc_spark.queries.batch5 import q21_waiting_suppliers
+        from tidb_cdc_spark.queries.tpch import q21_waiting_suppliers
 
         plan = explain_str(q21_waiting_suppliers(spark, SF))
         assert "LeftSemi" in plan and "LeftAnti" in plan
@@ -588,7 +588,7 @@ class TestProjectionPlan:
         """JL projection is a pure per-row expression: no exchange
         beyond the final presentation sort, no Python, no broadcast
         (the sign matrix is literals in the plan)."""
-        from tidb_cdc_spark.queries.llm16 import embedding_random_projection
+        from tidb_cdc_spark.queries.embeddings import embedding_random_projection
 
         plan = explain_str(embedding_random_projection(spark, SF))
         assert "BatchEvalPython" not in plan
@@ -605,7 +605,7 @@ class TestSpanRewritePlan:
         table crosses at most two hash exchanges."""
         import re
 
-        from tidb_cdc_spark.queries.llm16 import dedup_span_rewrite
+        from tidb_cdc_spark.queries.dedup import dedup_span_rewrite
 
         plan = explain_str(dedup_span_rewrite(spark, SF))
         assert "CartesianProduct" not in plan
@@ -618,7 +618,7 @@ class TestSpanRewritePlan:
 
 class TestPagerankPlan:
     def test_pagerank_no_python_no_cartesian(self, spark):
-        from tidb_cdc_spark.queries.llm16 import events_engagement_pagerank
+        from tidb_cdc_spark.queries.events import events_engagement_pagerank
 
         plan = explain_str(events_engagement_pagerank(spark, SF))
         assert "BatchEvalPython" not in plan
@@ -633,7 +633,7 @@ class TestR10CompositionPlans:
         and the ranked output read the cache (InMemoryTableScan) and
         the rank window stays band-partitioned (no single-task
         global window)."""
-        from tidb_cdc_spark.queries.llm17 import corpus_lm_quality_buckets
+        from tidb_cdc_spark.queries.corpus import corpus_lm_quality_buckets
 
         df = corpus_lm_quality_buckets(spark, SF)
         plan = explain_str(df)
@@ -648,7 +648,7 @@ class TestR10CompositionPlans:
         assert "BatchEvalPython" not in plan
 
     def test_containment_repr_no_python_no_cartesian(self, spark):
-        from tidb_cdc_spark.queries.llm17 import dedup_containment_repr
+        from tidb_cdc_spark.queries.dedup import dedup_containment_repr
 
         plan = explain_str(dedup_containment_repr(spark, SF))
         assert "BatchEvalPython" not in plan

@@ -106,7 +106,7 @@ def test_q21_non_vacuous_at_sf001(spark, con):
 
 def test_winnow_repr_pipeline_non_vacuous(spark):
     """The composed rows-only pipeline must produce pairs at sf0.01
-    (k=4 chosen exactly so the output is non-vacuous — see llm17)."""
+    (k=4 chosen exactly so the output is non-vacuous — see queries/dedup.py)."""
     from tidb_cdc_spark.queries import QUERIES
 
     assert QUERIES["winnow_repr_pipeline"](

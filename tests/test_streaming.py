@@ -831,6 +831,7 @@ class TestScd2SplitHistorySink:
         from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
         from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
+        spark.catalog.clearCache()
         zspec = TableSpec(
             database="d",
             table="t",
@@ -855,6 +856,25 @@ class TestScd2SplitHistorySink:
         sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
         with pytest.raises(ValueError, match="reserved partition names"):
             sink.process(changes, 0, zspec)
+        # nothing persisted for the batch outlives the failed call
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_failed_stage_write_releases_cache(self, spark, tmp_path, monkeypatch):
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
+
+        spark.catalog.clearCache()
+        changes = self._changes(spark, [_msg("insert", "a", 1, 10)])
+        sink = Scd2SplitHistorySink(str(tmp_path / "hist"))
+
+        def fail(self, path, *args, **kwargs):
+            raise OSError(f"injected write failure: {path}")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+        with pytest.raises(OSError, match="injected"):
+            sink.process(changes, 0, SPEC)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_compact_folds_closed_dirs(self, spark, tmp_path):
         import os

@@ -1,4 +1,4 @@
-"""Composed near-dup-collapse → winnow pipeline (queries/llm17.py):
+"""Composed near-dup-collapse → winnow pipeline (queries/dedup.py):
 equivalence and family-blowup-removal contracts on synthetic corpora
 where the expected answer is computable exactly in the test."""
 
@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from tidb_cdc_spark.functions import clusters as C
 from tidb_cdc_spark.functions import dedup as D
 from tidb_cdc_spark.functions.winnow import winnow_overlap
-from tidb_cdc_spark.queries.llm17 import _WK, _WW, _repr_docs
+from tidb_cdc_spark.queries.dedup import _WK, _WW, _repr_docs
 
 BOILER = "this content is licensed under the creative commons attribution share alike terms"
 

@@ -2,7 +2,7 @@
 Probabilistic Relevance Framework: BM25 and Beyond" — public
 literature) with the standard k1 = 1.2, b = 0.75, as an
 inverted-index equi-join — the real tf/idf-weighted ranker the RRF
-hybrid's lexical arm (queries/llm9.py) deliberately degenerates to
+hybrid's lexical arm (queries/retrieval.py) deliberately degenerates to
 distinct-token overlap.
 
 Exactness contract (hash-exact cross-engine, repo convention since
@@ -55,7 +55,7 @@ PPM = 1_000_000
 
 #: Degenerate-input clamps keeping the µ-score numerator inside
 #: int64 under ANSI mode (see module docstring for the bound).
-#: Mirrored verbatim in the DuckDB oracle (queries/llm15.py) and the
+#: Mirrored verbatim in the DuckDB oracle (queries/retrieval.py) and the
 #: pure-Python twin (tests/test_dsir_bm25.py).
 TF_CAP = 1_000_000
 AVGDL_CAP = 100_000

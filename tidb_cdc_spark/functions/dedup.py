@@ -23,7 +23,7 @@ from tidb_cdc_spark.functions.text import (
 from tidb_cdc_spark.functions.similarity import as_double, cosine
 
 # Signature subplans feed BOTH sides of a self-join; materialize once
-# (fault-tolerantly — see session.MATERIALIZE_MODE) instead of
+# (lineage kept — see session.materialize) instead of
 # executing the shingle+signature pipeline per side.
 from tidb_cdc_spark.session import materialize as _materialize
 
@@ -745,7 +745,7 @@ def ngram_containment_pairs(
     family whose per-doc shingle count is s emits ~s·b(b−1)/2 join
     rows, UNDER the viral cap when b < max_doc_freq. On family-heavy
     corpora collapse families FIRST (star-LSH → CC → representatives,
-    the queries/llm17.py pipeline pattern) and run containment on
+    the queries/dedup.py pipeline pattern) and run containment on
     the survivors — cross-family subset relations are preserved."""
     from pyspark.sql import Window
 

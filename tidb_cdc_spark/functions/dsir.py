@@ -21,7 +21,7 @@ with add-one (Laplace) smoothing so absent buckets stay defined:
 log importance weight (within the ±2-bit quantization) and every
 intermediate is integral, so the op is hash-exact cross-engine and
 fully ORACLE-CHECKABLE (DuckDB recomputes identical md5 buckets and
-bin-lengths; queries/llm15.py).
+bin-lengths; queries/corpus.py).
 
 Scale shape (100 TB): the bucket log-ratio table is ``dim`` rows —
 a BROADCAST side regardless of corpus size; per-doc sparse hashed

@@ -9,7 +9,7 @@ Cross-engine contract: the bucket hash is the repo's md5 sampling
 hash (``sampling.hash_bucket`` — first 4 bytes of md5), NOT
 xxhash64, so the sparse (doc, bucket, tf) table is bit-reproducible
 in any engine and fully ORACLE-CHECKABLE (DuckDB recomputes the
-same buckets; see ``queries/llm14.py``). Tokenization is the repo
+same buckets; see ``queries/corpus.py``). Tokenization is the repo
 standard: split on whitespace, lowercase, drop empties (identical
 to the unigram-surprisal / token-count convention).
 

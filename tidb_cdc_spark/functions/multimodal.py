@@ -470,7 +470,7 @@ def synth_container_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame
     never reads past), so a corpus-wide plant costs nothing. All
     other metadata is NULL: the probe must RECOVER it from the
     bytes, making this the planted-value audit source for the real
-    container parsers at corpus scale (queries/llm18.py)."""
+    container parsers at corpus scale (queries/media.py)."""
     import struct
 
     slim = ids.select(F.col(id_col).cast("long").alias("media_id"))
@@ -545,7 +545,7 @@ def synth_image_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
     all five layouts (w = 16 + id%60000, h = 16 + id%40000 — both
     fit the 16-bit containers), so the values ``probe_media``
     recovers are reproducible by any engine: the planted-value audit
-    source for the image parsers (queries/llm18.py), the pattern
+    source for the image parsers (queries/media.py), the pattern
     that closed the WAV/MP4 gap in round 10. Payloads are
     header-only (13-43 bytes: GIF 13, BMP 26/30, PNG 33, JPEG
     41/43); all metadata is planted NULL so the probe must RECOVER
@@ -3352,7 +3352,7 @@ def phash_near_dup_pairs(
 ) -> DataFrame:
     """Perceptual near-duplicate pairs over a 64-bit image hash —
     the LAION-pipeline fuzzy twin of the exact payload dedup
-    (``queries/llm18.py::multimodal_dedup_audit``): (id_a, id_b,
+    (``queries/media.py::multimodal_dedup_audit``): (id_a, id_b,
     hamming) for every pair within ``max_hamming`` bits.
 
     The pair join IS :func:`tidb_cdc_spark.functions.dedup.
@@ -3472,7 +3472,7 @@ def synth_bmp_pixel_media(
     integer formula of a pattern byte ``v`` (column ``pattern_col``,
     use 1..254) and a brightness shift δ (``shift_col``) — the pixel
     twin of ``synth_image_media``'s header plants, and the audit
-    source for the perceptual-hash chain (queries/llm18.py):
+    source for the perceptual-hash chain (queries/media.py):
 
     - the image is an 8×8 block pattern aligned with the aHash
       downsample grid: block (bx, by) is bright (180+δ) iff bit

@@ -21,7 +21,7 @@ window-min: key = h·2³¹ + (2³¹−1−pos), so MIN(key) picks the
 smallest hash and, among ties, the largest position. h < 2³² and
 pos < 2³¹ keep the key inside a BIGINT. The whole pipeline is
 integral and order-independent ⇒ the DuckDB oracle reproduces it
-bit-for-bit (queries/llm14.py).
+bit-for-bit (queries/dedup.py).
 
 Scale shape: tokenize/shingle/hash is codegen clustered on doc_id
 (one partitionBy(doc) window pass — same shape as the shingle

@@ -17,316 +17,41 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from tidb_cdc_spark.queries import (
-    audits,
-    batch,
-    batch2,
-    batch3,
-    batch4,
-    batch5,
-    cdcq,
-    llm,
-    llm2,
-    llm3,
-    llm4,
-    llm5,
-    llm6,
-    llm7,
-    llm8,
-    llm9,
-    llm10,
-    llm11,
-    llm12,
-    llm13,
-    llm14,
-    llm15,
-    llm16,
-    llm17,
-    llm18,
-    llm19,
-    llm20,
+    cdc,
+    corpus,
+    crawl,
+    dedup,
+    embeddings,
+    events,
+    media,
+    retrieval,
+    tpch,
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
-for _mod in (
-    llm, llm2, llm3, llm4, llm5, llm6, llm7, llm8, llm9, llm10,
-    audits, cdcq, llm11, llm12, llm13, llm14, llm15, llm16, llm17,
-    llm18, llm19, llm20,
-    batch, batch2, batch3, batch4, batch5,
-):
+for _mod in (cdc, tpch, events, corpus, dedup, retrieval, embeddings, media, crawl):
     QUERIES.update(_mod.QUERIES)
     ORACLE.update(_mod.ORACLE)
 
 # Registry order is load-bearing: the driver's correctness gate checks
-# the FIRST 50 entries in insertion order.  GATE names them explicitly.
-# Composition (round 7):
-# - every gate entry is oracle-checkable (rows-only LSH/IVF/PQ/LBFGS
-#   ops are represented by their audit twins from queries/audits.py /
-#   llm14.py — planted-copy or planted-contrast contracts DuckDB can
-#   verify; the raw forms stay declared right after the window);
-# - ~10-16 slots rotate per round, never-gated entries first, so every
-#   declared query re-acquires a fresh driver row within a few rounds
-#   (the r5 finding: 51 non-gate queries had only stale driver rows).
-#   Round 7 rotates IN the ENTIRE never-gated oracle-checkable backlog
-#   (dedup_exact_keep_best, dedup_keep_best_audit,
-#   corpus_cluster_safe_split, rag_hybrid_rrf, rag_hard_negatives,
-#   winnow_overlap_pairs, vocab_drift_top, text_bigram_surprisal,
-#   events_value_outliers, events_value_mad_outliers), the two new r7
-#   audits (winnow_cap_report, quality_classifier_audit), and four
-#   r4-stale rows named by the r6 verdict (events_rolling_features,
-#   table_profile_lineitem, events_transition_matrix,
-#   events_pivot_by_type — events_value_outliers yielded its slot to
-#   the new corpus_perplexity_buckets and queues for r8); OUT
-#   sixteen r6-green single-scan rows
-#   (unigram surprisal, quality filter, contamination, pack/mix/
-#   padding, centroids ×2, snapshot diff, chunk spans, rag topk,
-#   repeated spans ×2, hashed-tf... funnel, trailing-30m) — each
-#   keeps its r6 driver row + the strict mirror in
-#   tests/test_queries_oracle.py (driver-identical compare).
-#
-# ROUND-8 ROTATION (applied): IN — the whole never-gated backlog
-# (embedding_whiten_audit, events_distinct_hll_audit,
-# events_value_outliers, rag_rerank_cascade), the four new r8 TPC-H
-# shapes (q2/q11/q12/q21, queries/batch5.py), and eleven r4-stale
-# rows (q4/q14/q16/q17/q22, rollup_revenue, topk_orders_per_customer,
-# price_band_pairs, events_daily_gapfill,
-# events_value_percentiles_by_type, sketch_percentiles). OUT —
-# nineteen r7-green rows whose code is unchanged this round
-# (the r7 rotation block: keep_best ×2, cluster_safe_split,
-# rag_hybrid/hard_negatives, winnow ×2, vocab_drift, bigram,
-# perplexity_buckets, mad_outliers, classifier_audit,
-# rolling/table_profile/transition/pivot; plus doc_nfc_normalize and
-# corpus_dsir_weights/select) — each keeps its r7 driver row and the
-# strict mirror in tests/test_queries_oracle.py. Kept despite r7
-# rows: corpus_mojibake_audit and rag_bm25_topk (both ops CHANGED
-# this round — non-Latin-1 guard / int64 clamps — and need fresh
-# driver certification).
-#
-# ROUND-9 ROTATION (applied): IN — the 2 never-driver-gated queries
-# named by the r8 verdict (corpus_collocations_pmi,
-# corpus_tokenizer_fertility — both oracle-harness-green at sf0.01),
-# the new composed-pipeline audit (winnow_repr_audit, queries/
-# llm17.py), and nine r4-stale rows (q1/q6/q7/q10/q13/q15 heads,
-# setops_nation_overlap, cube_order_stats,
-# window_functions_showcase). OUT — twelve r8-green rows with
-# UNCHANGED code (dedup_jaccard/embedding/clusters audits,
-# knn_ivf_audit, embedding_whiten_audit, events_distinct_hll_audit,
-# events_value_outliers, rag_rerank_cascade, rollup_revenue,
-# topk_orders_per_customer, price_band_pairs, sketch_percentiles) —
-# each keeps its r8 driver row + the strict mirror in
-# tests/test_queries_oracle.py. Kept despite r8 rows:
-# dedup_minhash_star_audit (CHANGED this round — now passes
-# max_bucket_size=None per ADVICE — needs fresh certification).
-#
-# ROUND-10 ROTATION (applied): IN — the ENTIRE r4-stale block (the
-# oldest driver rows in the registry: q19/q20 heads,
-# events asof/hourly/sliding/cohort/json showcases, sketch_approx,
-# full_outer_nation_presence, suppliers_of_large_parts,
-# scalar/date/array showcases, grouping_sets_orders — 14 rows), the
-# two new r10 composed ops (containment_repr_audit,
-# corpus_lm_quality_buckets — queries/llm17.py), and
-# corpus_perplexity_buckets (r7 row, but its rank stage was
-# refactored into the shared rank_buckets this round — changed code
-# needs fresh certification). OUT — seventeen r9-green rows with
-# UNCHANGED code (q1/q4/q6/q7/q10/q13/q14/q15/q16/q17/q22 heads,
-# setops_nation_overlap, cube_order_stats,
-# window_functions_showcase, corpus_collocations_pmi,
-# corpus_tokenizer_fertility, rag_bm25_topk) — each keeps its r9
-# driver row + the strict mirror in tests/test_queries_oracle.py.
-# Kept despite r9 rows: dedup_containment_pairs,
-# contamination_containment_screen (CHANGED — the shingle sentinel
-# now uses the tokenizer's whitespace class), the minhash/simhash/
-# winnow audits (shingle_hash_rows shares the sentinel change), and
-# corpus_lm_stupid_backoff (functions/lm.py refactored around it).
-#
-# LATE-R10 SWAP: the two new multimodal container-parse audits
-# (multimodal_probe_audit, multimodal_frame_plan — queries/llm18.py,
-# full value oracles over planted formula-valued WAV/MP4 headers)
-# take the q2/q11 slots (both r9-green, unchanged, mirror-kept;
-# they queue for r11 with the other rotated-out heads).
-#
-# ROUND-11 ROTATION (applied): IN — the ENTIRE pre-certified queue
-# (NOTES.md r10 pre-certification, commit d40dad3): the r5-stale
-# block (text_token_stats/quality_by_lang/lang_id/fingerprint_md5,
-# sample_* ×3, tfidf_top_terms, pii_scrub_stats,
-# text_repetition_stats, token_length_histogram, vocab_top_terms,
-# source_overlap_matrix, doc_length_band, embedding_int8_quantize,
-# quality_budget_head, cdc_dead_letter_stats, text_bpe_tokens,
-# multimodal_doc_features — dedup_clusters_fuzzy is rows-only and
-# stays represented by dedup_clusters_exact + its brute-force twin),
-# the r6 heads (q3/q5/q8/q9, doc_hashed_tf), the r7 showcase block
-# (events_rolling_features, table_profile_lineitem,
-# events_transition_matrix, events_pivot_by_type), and the NEW
-# multimodal_image_audit (queries/llm18.py — the image twin of the
-# r10 container audits, closing the family's last evidence gap).
-# OUT — 29 r10-green rows with UNCHANGED code (q12/q18/q19/q20/q21
-# heads, events asof/hourly/sliding/cohort/json showcases,
-# sketch_approx, full_outer_nation_presence,
-# suppliers_of_large_parts, scalar/date/array showcases,
-# grouping_sets_orders, corpus_lm_quality_buckets,
-# corpus_perplexity_buckets, corpus_lm_stupid_backoff,
-# dedup_containment_pairs, embedding_random_projection,
-# dedup_span_rewrite, events_engagement_pagerank,
-# corpus_mojibake_audit, embedding_pca_audit,
-# doc_semantic_dedup_audit, corpus_curation_pipeline,
-# text_token_entropy) — each keeps its r10 driver row + the strict
-# mirror in tests/test_queries_oracle.py. Kept despite r10 rows:
-# multimodal_probe_audit / multimodal_frame_plan (CHANGED —
-# probe_media gained the vectorized need-probing premask — fresh
-# certification required) and containment_repr_audit (r10-new
-# composed op, second driver round).
-#
-# ROUND-12 ROTATION (applied): IN — the ENTIRE pre-certified r12
-# queue from the r11 NOTES (34 rows: the r8 block q2/q11/q4/q14/q16/
-# q17/q22 heads, rollup_revenue, topk_orders_per_customer,
-# price_band_pairs, events_daily_gapfill,
-# events_value_percentiles_by_type, sketch_percentiles,
-# embedding_whiten_audit, events_distinct_hll_audit,
-# events_value_outliers, rag_rerank_cascade, the dedup jaccard/
-# embedding/clusters audits, knn_ivf_audit; the r9 heads q1/q6/q7/
-# q10/q13/q15, setops_nation_overlap, cube_order_stats,
-# window_functions_showcase, corpus_collocations_pmi,
-# corpus_tokenizer_fertility, rag_bm25_topk; plus events_sessions
-# from the late-r11 swap) and the NEW multimodal_phash_audit
-# (queries/llm18.py — real BMP pixel decode + perceptual near-dup
-# under a planted-transform value oracle). OUT — 35 r11-green rows
-# with UNCHANGED code (dedup_minhash_star_audit, dedup_minhash_audit,
-# dedup_simhash_audit, winnow_repr_audit, rag_retrieval_eval,
-# corpus_stratified_split, containment_repr_audit, and the whole
-# r11 rotation block: text_token_stats/quality_by_lang/lang_id/
-# fingerprint_md5, sample_* ×3, tfidf_top_terms, pii_scrub_stats,
-# text_repetition_stats, token_length_histogram, vocab_top_terms,
-# source_overlap_matrix, doc_length_band, embedding_int8_quantize,
-# quality_budget_head, cdc_dead_letter_stats, text_bpe_tokens,
-# multimodal_doc_features, q3/q5/q8/q9 heads, doc_hashed_tf,
-# events_rolling_features, table_profile_lineitem,
-# events_transition_matrix, events_pivot_by_type) — each keeps its
-# r11 driver row + the strict mirror in tests/test_queries_oracle.py.
-# Kept despite r11 rows: multimodal_probe_audit /
-# multimodal_frame_plan / multimodal_image_audit /
-# multimodal_dedup_audit (all CHANGED this round — the explicit
-# doc_id >= 0 domain guard on both engines — fresh certification
-# required). R13 rotation queue (oldest rows after this round):
-# the r10 block (q12/q18/q19/q20/q21 heads, events asof/hourly/
-# sliding/cohort/json showcases, sketch_approx,
-# full_outer_nation_presence, suppliers_of_large_parts, scalar/date/
-# array showcases, grouping_sets_orders, corpus_lm_quality_buckets,
-# corpus_perplexity_buckets, corpus_lm_stupid_backoff,
-# dedup_containment_pairs, embedding_random_projection,
-# dedup_span_rewrite, events_engagement_pagerank,
-# corpus_mojibake_audit, embedding_pca_audit,
-# doc_semantic_dedup_audit, corpus_curation_pipeline,
-# text_token_entropy), then the r11 block.
-# ROUND-13 ROTATION (applied): IN — the 3 NEVER-driver-gated rows
-# first per the r12 verdict (video_curation_pipeline,
-# corpus_curation_provenance, media_curation_provenance — all three
-# hash-green at sf0.001+sf0.01+sf0.1 at the r12 final tree and
-# re-verified at sf0.01 before this swap), then the ENTIRE r10 block
-# (the oldest driver rows in the registry: q12/q18/q19/q20/q21
-# heads, events asof/hourly/sliding/cohort/json showcases,
-# sketch_approx, full_outer_nation_presence,
-# suppliers_of_large_parts, scalar/date/array showcases,
-# grouping_sets_orders, corpus_lm_quality_buckets,
-# corpus_perplexity_buckets, corpus_lm_stupid_backoff,
-# dedup_containment_pairs, embedding_random_projection,
-# dedup_span_rewrite, events_engagement_pagerank,
-# corpus_mojibake_audit, embedding_pca_audit,
-# doc_semantic_dedup_audit, corpus_curation_pipeline,
-# text_token_entropy — 29 rows), then the six r12 swap victims
-# (r11 rows: cdc_incremental_agg, skew_salted_agg,
-# contamination_containment_screen, cdc_schema_drift,
-# cdc_decimal_agg, cdc_apply_latest), then the first 9 of the r11
-# block (dedup_minhash_star_audit, dedup_minhash_audit,
-# dedup_simhash_audit, winnow_repr_audit, rag_retrieval_eval,
-# corpus_stratified_split, containment_repr_audit, text_token_stats,
-# text_quality_by_lang). OUT — 47 r12-green rows with UNCHANGED
-# code (the five multimodal container/image/dedup/phash audits, the
-# r12 rotation block q2/q11/q4/q14/q16/q17/q22/q1/q6/q7/q10/q13/q15
-# heads, rollup_revenue, topk_orders_per_customer, price_band_pairs,
-# events_daily_gapfill, events_value_percentiles_by_type,
-# sketch_percentiles, embedding_whiten_audit,
-# events_distinct_hll_audit, events_value_outliers,
-# rag_rerank_cascade, dedup jaccard/embedding/clusters audits,
-# knn_ivf_audit, setops_nation_overlap, cube_order_stats,
-# window_functions_showcase, corpus_collocations_pmi,
-# corpus_tokenizer_fertility, rag_bm25_topk, events_sessions,
-# cdc_parse_typed, cdc_scd2_history, and the r12 media family:
-# media/audio curation pipelines, audio_trim/dct_phash/video/audio
-# audits) — each keeps its r12 driver row + the strict mirror in
-# tests/test_queries_oracle.py. R14 rotation queue (oldest rows
-# after this round): the remaining 26 r11-block rows
-# (text_lang_id, text_fingerprint_md5, sample_* ×3, tfidf_top_terms,
-# pii_scrub_stats, text_repetition_stats, token_length_histogram,
-# vocab_top_terms, source_overlap_matrix, doc_length_band,
-# embedding_int8_quantize, quality_budget_head,
-# cdc_dead_letter_stats, text_bpe_tokens, multimodal_doc_features,
-# q3/q5/q8/q9 heads, doc_hashed_tf, events_rolling_features,
-# table_profile_lineitem, events_transition_matrix,
-# events_pivot_by_type), then the r12 block.
-# ROUND-14 ROTATION (applied): the ENTIRE stale backlog clears this
-# round. IN — all 14 late-r13 swap victims (events_json_extract,
-# events_hourly, events_sliding_1h, events_cohort_retention,
-# q12_priority_lines, dedup_minhash_star_audit, dedup_minhash_audit,
-# dedup_simhash_audit, winnow_repr_audit, rag_retrieval_eval,
-# corpus_stratified_split, containment_repr_audit, text_token_stats,
-# text_quality_by_lang) and 25 of the 26 remaining r11-block rows —
-# every swap-in pre-verified hash-green at sf0.001+sf0.01+sf0.1
-# this session (120/120 OK) — plus the two r14-NEW rows
-# (multimodal_webp_lossy_audit, animated_gif_video_audit;
-# never-gated-first) and six CHANGED-code rows needing fresh
-# certification: multimodal_webp_phash_audit (VP8L predictor 11/13
-# fixes), multimodal_jpeg_prog_audit (Ns=1 DC scan grid fix), and
-# the four video_frame_hashes consumers (GIF routing added):
-# video_curation_pipeline, video_curation_provenance,
-# video_frame_cap_report, multimodal_video_audit — all six also
-# pre-verified at the three SFs. OUT — 39 r13-green rows with
-# UNCHANGED code (q18/q19/q20/q21 heads, events_asof_purchase_click,
-# sketch_approx, full_outer_nation_presence,
-# suppliers_of_large_parts, scalar/date/array showcases,
-# grouping_sets_orders, corpus_lm_quality_buckets,
-# corpus_perplexity_buckets, corpus_lm_stupid_backoff,
-# dedup_containment_pairs, embedding_random_projection,
-# dedup_span_rewrite, events_engagement_pagerank,
-# corpus_mojibake_audit, embedding_pca_audit,
-# doc_semantic_dedup_audit, corpus_curation_pipeline,
-# text_token_entropy, the six r12 CDC swap victims
-# (cdc_incremental_agg, skew_salted_agg,
-# contamination_containment_screen, cdc_schema_drift,
-# cdc_decimal_agg, cdc_apply_latest), multimodal_png_phash_audit,
-# multimodal_codec_matrix_audit, multimodal_png_deep_audit,
-# multimodal_jpeg_phash_audit, multimodal_exif_orientation_audit,
-# audio_window_cap_report, audio/corpus/media curation provenance,
-# media/audio curation pipelines, phash_cap_report) — each keeps its
-# r13 driver row + the strict mirror in tests/test_queries_oracle.py.
-# R15 rotation queue (oldest rows after this round): the twelve
-# r14-new never-gated rows first (animated_webp_video_audit,
-# multimodal_anim_probe_audit, multimodal_audio_probe_audit,
-# audio_g711_audit, multimodal_tiff_phash_audit,
-# multimodal_mjpeg_video_audit, audio_adpcm_audit,
-# warc_ingest_audit, corpus_html_extract, crawl_html_pipeline,
-# animated_apng_video_audit — all pre-verified hash-green at
-# sf0.001+sf0.01+sf0.1 this session (compare() tuples properly
-# unpacked) — and events_pivot_by_type,
-# the one r11-block row this rotation could not seat: changed-code
-# certification outranked it), then the r12 block, then this
-# round's 39 OUT rows.
+# the FIRST 50 entries in insertion order. GATE names them explicitly;
+# every gate entry is oracle-checkable (rows-only LSH/IVF/PQ ops are
+# represented by their planted-copy audit twins, which DuckDB can
+# verify).
 GATE = [
-    # exact dedup/ANN family anchors (kept fresh every round)
     "dedup_exact_docs",
     "knn_bruteforce_cosine",
     "dedup_clusters_exact",
-    # r14-NEW rows (never-gated-first doctrine)
     "multimodal_webp_lossy_audit",
     "animated_gif_video_audit",
-    # CHANGED code needing fresh certification (see rotation note)
     "multimodal_webp_phash_audit",
     "multimodal_jpeg_prog_audit",
     "video_curation_pipeline",
     "video_curation_provenance",
     "video_frame_cap_report",
     "multimodal_video_audit",
-    # the 14 late-r13 swap victims (oldest-first)
     "events_json_extract",
     "events_hourly",
     "events_sliding_1h",
@@ -341,7 +66,6 @@ GATE = [
     "containment_repr_audit",
     "text_token_stats",
     "text_quality_by_lang",
-    # 25 of the 26 remaining r11-block rows
     "text_lang_id",
     "text_fingerprint_md5",
     "sample_hash_docs",

@@ -1,12 +1,13 @@
-"""CDC-surface queries: the reference's core capability (Maxwell
-parse + apply semantics) made oracle-checkable.
+"""CDC queries: the reference's core capability (Maxwell parse + apply
+semantics) made oracle-checkable.
 
-Both queries synthesize a deterministic Maxwell envelope stream from
-the ``events`` table INSIDE Spark (to_json of a struct — same
-protocol shape as /root/reference/test/fff.json), push it through
-the engine's real parse/apply path, and the DuckDB oracle computes
-the expected result directly from the base table. This exercises
-ops #3-#12 and #15-#16 of SURVEY §2 end-to-end.
+Each query synthesizes a deterministic Maxwell envelope stream from
+the ``events`` table INSIDE Spark (to_json of a struct — the protocol
+shape of tests/fixtures/fff.json), pushes it through the engine's real
+parse/apply path, and the DuckDB oracle computes the expected result
+directly from the base table. This exercises ops #3-#12 and #15-#16 of
+SURVEY §2 end-to-end; ``cdc_dead_letter_stats`` accounts for the
+envelopes the parser rejects.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.cdc.apply import snapshot_from_ops
-from tidb_cdc_spark.cdc.parse import parse_cdc
+from tidb_cdc_spark.cdc.parse import parse_cdc, parse_envelope
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
 
 
@@ -427,7 +428,60 @@ ORDER BY l_returnflag
 """
 
 
+# --------------------------------------------- CDC dead-letter stats
+def cdc_dead_letter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Malformed-event accounting — the §7.5 divergence from the
+    reference (which PANICS the consumer on bad JSON,
+    cdc_manager.go:164): every 7th synthesized envelope is corrupted;
+    the engine's dead-letter column captures it and the stream keeps
+    flowing. Output: rows per op label with 'corrupt' as its own
+    bucket."""
+    from tidb_cdc_spark.session import fan_out, read_table
+
+    ev = fan_out(read_table(spark, sf_dir, "events"), spark)
+    op = (
+        F.when(F.col("event_id") % 4 == 3, "delete")
+        .when(F.col("event_id") % 4 == 1, "update")
+        .otherwise("insert")
+    )
+    good = F.to_json(
+        F.struct(
+            F.lit("app").alias("database"),
+            F.lit("events").alias("table"),
+            op.alias("type"),
+            F.unix_timestamp(F.col("ts")).alias("ts"),
+            F.struct(F.col("event_id"), F.col("user_id")).alias("data"),
+        )
+    )
+    value = F.when(
+        F.col("event_id") % 7 == 0, F.concat(F.lit("not json "), good)
+    ).otherwise(good)
+    src = ev.select(value.alias("value")).localCheckpoint(eager=False)
+    env = parse_envelope(src)
+    label = F.when(F.col("_corrupt").isNotNull(), "corrupt").otherwise(
+        F.col("type")
+    )
+    return (
+        env.groupBy(label.alias("op_label"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy("op_label")
+    )
+
+
+_DEAD_LETTER_SQL = """
+SELECT CASE WHEN event_id % 7 = 0 THEN 'corrupt'
+            WHEN event_id % 4 = 3 THEN 'delete'
+            WHEN event_id % 4 = 1 THEN 'update'
+            ELSE 'insert' END AS op_label,
+       COUNT(*) AS n
+FROM events
+GROUP BY op_label
+ORDER BY op_label
+"""
+
+
 QUERIES = {
+    "cdc_dead_letter_stats": cdc_dead_letter_stats,
     "cdc_parse_typed": cdc_parse_typed,
     "cdc_apply_latest": cdc_apply_latest,
     "cdc_scd2_history": cdc_scd2_history,
@@ -435,8 +489,8 @@ QUERIES = {
     "cdc_schema_drift": cdc_schema_drift,
     "cdc_decimal_agg": cdc_decimal_agg,
 }
-
 ORACLE = {
+    "cdc_dead_letter_stats": _DEAD_LETTER_SQL,
     "cdc_parse_typed": _PARSE_SQL,
     "cdc_apply_latest": _APPLY_SQL,
     "cdc_scd2_history": _SCD2_SQL,

@@ -1,11 +1,6 @@
-"""Crawl-archive ingest queries (r14): WARC — the container every
-web-scale corpus actually arrives in — walked, HTTP-parsed, and
-census'd with planted-arithmetic oracles.
-
-Reference parity note: the reference (dollarkillerx/tidb-cdc) has no
-ingest surface beyond Kafka CDC messages; this family belongs to the
-north-star LLM-data-pipeline additions (SURVEY §2.1's engine-provided
-categories), like the multimodal and audio paths.
+"""Crawl-archive ingest queries: WARC — the container every web-scale
+corpus arrives in — walked, HTTP-parsed, HTML-extracted and census'd
+with planted-arithmetic oracles.
 """
 
 from __future__ import annotations
@@ -273,7 +268,6 @@ QUERIES = {
     "corpus_html_extract": corpus_html_extract,
     "crawl_html_pipeline": crawl_html_pipeline,
 }
-
 ORACLE = {
     "warc_ingest_audit": _WARC_INGEST_SQL,
     "corpus_html_extract": _html_extract_sql(),

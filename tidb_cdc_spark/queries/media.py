@@ -1,29 +1,71 @@
-"""Eighteenth wave: the multimodal container-parse path as
-driver-gated, fully value-oracled queries — closing the family's
-evidence gap (one declared query since r5 for a 400-line module with
-real RIFF/ISO-BMFF parsers).
+"""Multimodal queries: container probes, image/audio/video decode,
+perceptual hashes, frame plans and the media/audio/video curation
+pipelines, as fully value-oracled audits.
 
-Strategy: plant REAL container bytes whose header fields derive from
-the id by fixed integer formulas (``functions/multimodal.py::
-synth_container_media``), run the REAL Arrow-batched probe
-(``probe_media`` — the chunk/box walks under ``mapInPandas``), and
-compare the RECOVERED values against a DuckDB oracle computing the
-same formulas. A parser regression (endianness, box-version layout,
-word-alignment, truncation bound) changes a recovered duration and
-fails the value hash — this is the audit pattern of queries/
-audits.py applied to byte-level decoding: booleans replaced by exact
-recovered integers.
+Strategy: plant REAL container or codec bytes whose header fields and
+pixels derive from the id by fixed integer formulas
+(``functions/multimodal.py::synth_*``), run the REAL Arrow-batched
+probe or decode (``probe_media``/``decode_pixels`` under
+``mapInPandas``), and compare the RECOVERED values against a DuckDB
+oracle computing the same formulas. A parser or codec regression
+changes a recovered value and fails the value hash.
 
-Scale shape: payloads are header-only (≤72 bytes) and the probe's
-output drops the bytes, so both queries are two Arrow passes over
-id-sized rows + codegen expressions — no Python in any per-row hot
-path beyond the sanctioned ``mapInPandas``.
+Scale shape: the synth→decode→hash chain is one Arrow-batched linear
+pass per consumer (materialized to run once); hashes are a few bytes
+per row and pixels never shuffle. Lossy VP8/H.264/MP3 remain codec
+territory (guarded PIL branch).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tidb_cdc_spark.functions.multimodal import extract_features
+from tidb_cdc_spark.queries.corpus import _docs
+
+
+# ------------------------------------------- multimodal feature pass
+def multimodal_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents re-cast as a media table (payload = UTF-8 bytes,
+    metadata first / bytes last) pushed through the REAL multimodal
+    path: Arrow-batched ``mapInPandas`` decode → small typed feature
+    rows (sha256, byte count, stub-decoded dimensions). The decode
+    stub derives dimensions from the payload hash, so the whole
+    output — including the fake dims — is oracle-checkable."""
+    d = _docs(spark, sf_dir)
+    media = d.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("image").alias("kind"),
+        F.lit("text/plain").alias("mime"),
+        F.lit(None).cast("int").alias("width"),
+        F.lit(None).cast("int").alias("height"),
+        F.lit(None).cast("long").alias("duration_ms"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
+    )
+    return extract_features(media).orderBy("media_id")
+
+
+def _hex_byte(sql_expr: str, pos: int) -> str:
+    """DuckDB int value of hex chars [pos, pos+1] (1-based) of a hex
+    string — mirrors ``hashlib.sha256(...).digest()[i]``."""
+    c1 = f"substr({sql_expr}, {pos}, 1)"
+    c2 = f"substr({sql_expr}, {pos + 1}, 1)"
+    return (
+        f"((strpos('0123456789abcdef', {c1}) - 1) * 16"
+        f" + (strpos('0123456789abcdef', {c2}) - 1))"
+    )
+
+
+_MULTIMODAL_SQL = f"""
+SELECT doc_id AS media_id, 'image' AS kind,
+       sha256(text) AS sha256,
+       octet_length(encode(text)) AS n_bytes,
+       64 + ({_hex_byte('sha256(text)', 1)} % 64) AS feat_width,
+       64 + ({_hex_byte('sha256(text)', 3)} % 64) AS feat_height
+FROM documents
+ORDER BY media_id
+"""
 
 
 def _probed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1792,7 +1834,1316 @@ SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
 """
 
 
+def multimodal_png_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual near-dup over REAL decoded PNG pixels — the
+    compressed twin of ``multimodal_phash_audit``: zlib-inflate +
+    unfilter 8-bit PNGs in pure Python inside the sanctioned Arrow
+    pass (``decode_png_pixels`` via the ``decode_pixels`` boundary),
+    compute aHash/dHash, find Hamming-≤3 pairs with the Manku banded
+    join.
+
+    Planted-transform oracle: cluster ``pid = doc_id % 97``; variant
+    ``doc_id div 97 % 3`` selects the COLOR TYPE — 0 → truecolor RGB
+    (type 2), 1 → grayscale (type 0), 2 → palette (type 3) with a
+    +20 uniform brightness shift. Scanline filters cycle through all
+    five types per row (seed = pattern), so every unfilter
+    recurrence (None/Sub/Up/Average/Paeth) is under the oracle on
+    every payload. The 8×8 block pattern makes ``ahash64`` provably
+    the pattern byte's bits replicated (injective per cluster,
+    ≥8-bit cross-cluster margin, shift- and colortype-invariant:
+    BT.601 luma of (g,g,g) is exactly g), so:
+
+    - ``distinct_ahash = n_clusters`` fails if inflate → unfilter →
+      palette/luma → downsample → threshold is colortype- or
+      shift-variant OR collides across clusters;
+    - ``max_cluster_*_variants = 1`` fails if any hash varies within
+      a cluster (three byte-disjoint encodings of the same pixels);
+    - ``neardup_pairs = Σ C(m_pid, 2)`` fails if the banded join
+      misses a true pair or admits a cross-cluster one.
+      ``max_bucket_size=None`` because the planted clusters ARE the
+      duplicate families being measured.
+    """
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 97).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 97) % 254).alias("pattern"),
+            F.when(F.expr("doc_id div 97") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.element_at(
+                F.array(F.lit("png"), F.lit("png_gray"), F.lit("png_pal")),
+                (F.expr("doc_id div 97") % 3 + 1).cast("int"),
+            ).alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id")
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# every column derives from the plant arithmetic: payloads are pure
+# functions of (pid-pattern, colortype-variant, shift); ahash is
+# provably the pattern's replicated bits — injective across clusters,
+# invariant across color types (luma(g,g,g) = g) and shift, ≥8-bit
+# cross-cluster margin ⇒ τ=3 pairs are exactly the within-cluster ones
+_PNG_PHASH_SQL = """
+WITH m AS (
+  SELECT doc_id % 97 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_codec_matrix_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The cross-codec re-encode audit — the case perceptual dedup
+    EXISTS for: the same image saved as BMP, PNG (all three 8-bit
+    color types), and GIF (sequential AND interlaced) is six
+    byte-disjoint payloads that must collapse to ONE perceptual
+    identity. Variant ``doc_id div 89 % 6`` selects the codec leg
+    for cluster ``pid = doc_id % 89`` (same planted 8×8 block
+    pattern; shift 0 so pixels are bit-identical across legs);
+    every payload goes through the ONE ``decode_pixels`` boundary —
+    BMP through the uncompressed path, PNG through stdlib-zlib
+    inflate + unfilter, GIF through the pure-Python LZW codec
+    (+ 4-pass deinterlace for ``gif_i``).
+
+    - ``n_codecs`` pins that the plant actually spans codecs (id
+      arithmetic, SQL-recomputable);
+    - ``distinct_ahash = n_clusters`` + ``max_cluster_ahash_variants
+      = 1`` ARE the cross-codec equality claim: one decoder
+      diverging by a single pixel breaks them;
+    - ``neardup_pairs = Σ C(m_pid, 2)``: the banded join sees every
+      re-encoded pair and no cross-cluster one (≥8-bit margin).
+      ``max_bucket_size=None`` — the planted families are the
+      signal.
+    """
+    from tidb_cdc_spark.functions.multimodal import (
+        CODEC_LEGS,
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 89).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 89) % 254).alias("pattern"),
+            F.lit(0).alias("shift"),
+            F.element_at(
+                F.array(*[F.lit(c) for c in CODEC_LEGS]),
+                (F.expr("doc_id div 89") % 6 + 1).cast("int"),
+            ).alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id")
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid", "codec"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("codec").alias("n_codecs"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "n_codecs",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: the codec leg is (doc_id div 89) % 6 — byte-level
+# encodings differ, pixels are identical, so distinct_ahash collapses
+# to the cluster count iff all six decode paths agree pixel-for-pixel
+_CODEC_MATRIX_SQL = """
+WITH m AS (
+  SELECT doc_id % 89 AS pid, (doc_id // 89) % 6 AS leg
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT leg) FROM m) AS BIGINT) AS n_codecs,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_jpeg_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual near-dup over REAL decoded BASELINE-JPEG pixels —
+    the lossy-codec member of the family, and the format the r12
+    verdict named as the gap: pure-Python/numpy Huffman + zigzag +
+    dequant + orthogonal IDCT (``functions/jpeg.py``), no codec
+    library, wired through the same ``decode_pixels`` boundary.
+
+    JPEG is lossy in general, so the plant is chosen where it is
+    provably EXACT: 64×64 images whose 8×8 aHash grid cells coincide
+    with the JPEG block grid — every block is FLAT, its spectrum is
+    DC-only, quantization step 1 stores ``8·(v−128)`` exactly, and
+    the IDCT reproduces the flat value bit-for-bit. The planted
+    lemma (``ahash64`` = pattern bits replicated; injective, ≥8-bit
+    cross-cluster margin, shift-invariant) therefore carries over
+    from the BMP audit UNCHANGED even through the lossy codec.
+
+    Variants per cluster ``pid = doc_id % 83``: 0 → grayscale scan,
+    1 → 3-component 4:4:4 with neutral chroma (the Huffman-coded
+    stream triples its block count; decoded RGB equals the gray
+    exactly under the JFIF integer conversion), 2 → 4:2:0 — the
+    layout most real crawls carry (general interleaved MCUs, chroma
+    quarter-res through the replication upsample; flat zero chroma
+    stays exact) — with a +20 brightness shift (different DCs,
+    different BYTES, same hash). Scorecard semantics identical to
+    the PNG audit; all columns from id arithmetic alone."""
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 83).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 83) % 254).alias("pattern"),
+            F.when(F.expr("doc_id div 83") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.when(F.expr("doc_id div 83") % 3 == 1, F.lit("jpeg_rgb"))
+            .when(F.expr("doc_id div 83") % 3 == 2, F.lit("jpeg_420"))
+            .otherwise(F.lit("jpeg"))
+            .alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: 64×64 flat-block plants make the lossy codec
+# EXACT (DC-only spectra at quant 1), so ahash is provably the
+# pattern's replicated bits — injective across clusters, invariant
+# across scan type (gray vs neutral-chroma color) and brightness
+# shift, ≥8-bit margin ⇒ τ=3 pairs are exactly the within-cluster ones
+_JPEG_PHASH_SQL = """
+WITH m AS (
+  SELECT doc_id % 83 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_png_deep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full-envelope PNG audit — the r13 close of the format's
+    remaining reject paths: Adam7 interlace, 16-bit samples, alpha,
+    sub-byte palette depths. Variant ``doc_id div 79 % 6`` selects
+    one of the six ``PNG_DEEP_LEGS`` for cluster ``pid = doc_id %
+    79``: Adam7-interlaced RGB, 16-bit grayscale (samples v·257 —
+    the standard bit-replication expansion, whose high byte is
+    exactly v), opaque RGBA and gray+alpha (white compositing at
+    a=255 is provably the identity: ``(v·255 + 127)//255 = v``),
+    depth-2 palette (the plant has exactly two distinct grays), and
+    Adam7+16-bit combined. Six byte-DISJOINT encodings of the SAME
+    pixels that must collapse to ONE perceptual identity through
+    ``decode_pixels``:
+
+    - ``n_codecs`` pins the plant spans all six legs (id arithmetic,
+      SQL-recomputable);
+    - ``distinct_ahash = n_clusters`` + ``max_cluster_ahash_variants
+      = 1`` ARE the envelope-equality claim — a deinterlace placing
+      one pixel wrong, a 16-bit reduction off by one, or compositing
+      drifting from the identity at a=255 breaks them;
+    - ``neardup_pairs = Σ C(m_pid, 2)``: the banded join sees every
+      re-encoded pair and no cross-cluster one (≥8-bit margin).
+      ``max_bucket_size=None`` — the planted families are the
+      signal.
+    """
+    from tidb_cdc_spark.functions.multimodal import (
+        PNG_DEEP_LEGS,
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 79).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 79) % 254).alias("pattern"),
+            F.lit(0).alias("shift"),
+            F.element_at(
+                F.array(*[F.lit(c) for c in PNG_DEEP_LEGS]),
+                (F.expr("doc_id div 79") % 6 + 1).cast("int"),
+            ).alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id")
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid", "codec"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("codec").alias("n_codecs"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "n_codecs",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: leg = (doc_id div 79) % 6 over PNG_DEEP_LEGS —
+# byte-disjoint encodings, identical pixels, so distinct_ahash
+# collapses to the cluster count iff Adam7 reassembly, the 16-bit
+# high-byte reduction, alpha-over-white compositing and the depth-2
+# palette all reproduce the 8-bit reference pixels exactly
+_PNG_DEEP_SQL = """
+WITH m AS (
+  SELECT doc_id % 79 AS pid, (doc_id // 79) % 6 AS leg
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT leg) FROM m) AS BIGINT) AS n_codecs,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_jpeg_prog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PROGRESSIVE-JPEG audit — SOF2 is the web's other dominant
+    JPEG flavor, and progressive mode is a LOSSLESS reordering of
+    the same quantized coefficients, so a progressive re-save of a
+    sequential JPEG must collapse to the SAME perceptual identity.
+    Variant ``doc_id div 73 % 3`` for cluster ``pid = doc_id % 73``:
+    0 → BASELINE grayscale scan (the cross-MODE reference leg),
+    1 → progressive grayscale (seven-stage scan script: DC first at
+    Al=1, banded AC first scans with EOB runs, two AC refinement
+    levels, DC refinement), 2 → progressive 4:2:0 color with a +20
+    brightness shift (interleaved DC scans over subsampled MCUs +
+    per-component AC scans whose flat chroma exercises EOB runs
+    spanning whole scans). The 64×64 flat-block plant keeps the
+    lossy codec provably exact (DC-only spectra at quant 1), so the
+    aHash lemma (pattern bits replicated, injective, ≥8-bit margin,
+    shift-invariant) carries through the multi-scan reassembly
+    unchanged. Scorecard semantics identical to the baseline JPEG
+    audit; all columns from id arithmetic alone."""
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 73).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 73) % 254).alias("pattern"),
+            F.when(F.expr("doc_id div 73") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.when(F.expr("doc_id div 73") % 3 == 1, F.lit("jpeg_prog"))
+            .when(F.expr("doc_id div 73") % 3 == 2, F.lit("jpeg_prog_420"))
+            .otherwise(F.lit("jpeg"))
+            .alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: variant selects baseline gray / progressive gray /
+# progressive 4:2:0 (+20 shift) — byte-disjoint streams, identical
+# coefficients, so distinct_ahash collapses to the cluster count iff
+# the multi-scan progressive reassembly is coefficient-exact
+_JPEG_PROG_SQL = """
+WITH m AS (
+  SELECT doc_id % 73 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_webp_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The VP8L lossless-WebP audit — the codec family's last named
+    format (`functions/webp.py`): RIFF walk, VP8L entropy-coded
+    images (simple + normal prefix codes with 16/17/18 repeats and
+    the max-symbol cap), LZ77 backrefs + color cache, and the
+    transform machinery, all pure Python. Variant ``doc_id div 71 %
+    3`` for cluster ``pid = doc_id % 71``: 0 → plain ARGB literals,
+    1 → color-indexing transform (2-entry palette ⇒ 8-pixel-per-byte
+    index bundling), 2 → LZ77 copy-above + color cache + max-symbol
+    cap, with a +20 brightness shift. Lossless format ⇒ the planted
+    aHash lemma carries over exactly (byte-disjoint encodings,
+    identical pixels). Scorecard semantics identical to the PNG
+    audit; all columns from id arithmetic alone."""
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 71).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 71) % 254).alias("pattern"),
+            F.when(F.expr("doc_id div 71") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.when(F.expr("doc_id div 71") % 3 == 1, F.lit("webp_pal"))
+            .when(F.expr("doc_id div 71") % 3 == 2, F.lit("webp_lz"))
+            .otherwise(F.lit("webp"))
+            .alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id")
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: variant selects literal / palette-bundled / LZ77+
+# cache VP8L encodings (+20 shift on the third) — byte-disjoint,
+# lossless, identical pixels ⇒ distinct_ahash = cluster count iff the
+# VP8L entropy/transform machinery is pixel-exact
+_WEBP_PHASH_SQL = """
+WITH m AS (
+  SELECT doc_id % 71 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_exif_orientation_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The camera-rotation audit — the perceptual-dedup trap EXIF
+    orientation creates: a camera stores the sensor's landscape
+    pixels plus an orientation tag, so the SAME photo exists as
+    byte-different, PIXEL-ROTATED files that only normalize to the
+    same image once the tag is honored. ``decode_pixels`` normalizes
+    through ``jpeg_exif_orientation`` + ``apply_exif_orientation``
+    (functions/jpeg.py); this audit pins it end-to-end: variant
+    ``doc_id div 67 % 4`` for cluster ``pid = doc_id % 67`` selects
+    orientation 1 (upright, no tag semantics), 3 (rotate 180), 6
+    (rotate 90 CW) or 8 (rotate 90 CCW) — each leg stores the
+    INVERSE-rotated pixels plus the tag, so normalization must
+    recover the identical upright plant. The 64×64 block-aligned
+    plant keeps every rotation block-aligned and flat (rotations are
+    index permutations), so the exactness lemma carries over and
+    ``distinct_ahash = n_clusters`` / ``max_cluster_*_variants = 1``
+    / exact τ=3 pair counts all hold iff the tag parse AND the
+    normalization transform are correct. All columns from id
+    arithmetic alone."""
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 67).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 67) % 254).alias("pattern"),
+            F.lit(0).alias("shift"),
+            F.element_at(
+                F.array(
+                    F.lit("jpeg"), F.lit("jpeg_o3"),
+                    F.lit("jpeg_o6"), F.lit("jpeg_o8"),
+                ),
+                (F.expr("doc_id div 67") % 4 + 1).cast("int"),
+            ).alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: variant selects the EXIF orientation leg — the
+# stored pixels are rotated, the tag says how to un-rotate them, and
+# distinct_ahash collapses to the cluster count iff the normalization
+# is exact. Rotations are index permutations of block-aligned flat
+# plants, so the JPEG exactness lemma is untouched.
+_EXIF_ORIENTATION_SQL = """
+WITH m AS (
+  SELECT doc_id % 67 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_webp_lossy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lossy-VP8 WebP audit — the first INHERENTLY-LOSSY codec
+    admitted with real pixels: `decode_pixels` routes VP8/VP8X
+    payloads the pure VP8L path declines through libwebp's own
+    ``WebPDecodeRGBA`` via ctypes (`functions/webp.py::
+    decode_webp_lossy_pixels` — this container ships the shared
+    library; hosts without it take the NULL-hash admission path and
+    this audit would raise at planting time, not lie). Variant
+    ``doc_id div 69 % 3`` for cluster ``pid = doc_id % 69``: 0 → the
+    exact BMP anchor, 1 → the SAME pixels through libwebp's REAL
+    lossy encoder (``WebPEncodeRGBA`` q=95), 2 → lossy with a +20
+    brightness shift. The 64×64 flat-block plant's ≥8-bit
+    cross-pattern margin absorbs VP8's quantization noise (verified
+    empirically over all 254 patterns × both shifts: aHash and dHash
+    both survive the lossy round-trip bit-exactly), so
+    ``distinct_ahash = n_clusters`` iff the tag-sniff → ctypes
+    decode → BT.601 reduction chain is correct — a lossy re-save of
+    an image collapses onto its exact twin, the admission claim this
+    branch exists for. All columns from id arithmetic alone."""
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 69).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 69) % 254).alias("pattern"),
+            F.when(F.expr("doc_id div 69") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.when(F.expr("doc_id div 69") % 3 == 0, F.lit("bmp"))
+            .otherwise(F.lit("webp_lossy"))
+            .alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: variant selects exact-BMP anchor / lossy VP8 /
+# lossy VP8 +20 shift — the lossy copies must hash onto the anchor
+# (the flat plant's 120-gray-level margin dominates quantization
+# noise), so distinct_ahash = cluster count iff the libwebp decode
+# branch is live and reduction-exact
+_WEBP_LOSSY_SQL = """
+WITH m AS (
+  SELECT doc_id % 69 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def animated_gif_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Animated-GIF near-dup over REAL composed frames — the web's
+    actual animation format reaching the shot-level path
+    uncompressed AVI already has (`multimodal_video_audit`):
+    `decode_gif_frames` (functions/multimodal.py) LZW-decodes every
+    rendering block and COMPOSES it onto the logical screen per
+    GIF89a — the planted streams are DELTA-encoded (first frame a
+    keyframe, later frames transparent-patched blocks), so each
+    frame hash is only right if the transparency compositing is.
+    Frames feed the same `video_frame_hashes` → inverted-index
+    `video_near_dup_pairs` chain.
+
+    Planted-transform oracle: cluster ``pid = doc_id % 103``;
+    variants 0/1 plant byte-identical 8-frame animations, variant 2
+    plants a TRIMMED (first frame dropped — its keyframe is frame 1)
+    AND brightness-shifted copy — different bytes, 7 shared composed
+    frame hashes. `synth_gif_anim_media`'s 16-bit frame words keep
+    every composed hash provably the word's replicated bits
+    (injective over (pid, frame): pid·8+7 ≤ 823 ≪ 65534;
+    shift-invariant), so all columns derive from id arithmetic."""
+    from tidb_cdc_spark.functions.multimodal import (
+        synth_gif_anim_media,
+        video_frame_hashes,
+        video_near_dup_pairs,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 103).alias("pid"),
+            (F.col("doc_id") % 103).alias("base"),
+            F.when(F.expr("doc_id div 103") % 3 == 2, F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("skip"),
+            F.when(F.expr("doc_id div 103") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+        )
+    )
+    media = synth_gif_anim_media(planted, "media_id")
+    fh = materialize(
+        video_frame_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = video_near_dup_pairs(
+        fh, min_shared_frames=4, max_frame_freq=None
+    )
+    return (
+        fh.agg(
+            F.countDistinct("media_id").alias("n_media"),
+            F.countDistinct("pid").alias("n_clusters"),
+            F.count(F.lit(1)).alias("n_frame_rows"),
+            F.countDistinct("fhash").alias("distinct_fhash"),
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "n_frame_rows",
+            "distinct_fhash",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: trimmed members carry 7 frames; a cluster's
+# distinct composed-frame hashes are 8 iff any member is untrimmed
+# (frame words are disjoint across clusters)
+_GIF_ANIM_SQL = """
+WITH m AS (
+  SELECT doc_id % 103 AS pid,
+         CASE WHEN (doc_id // 103) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
+       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
+            AS BIGINT) AS distinct_fhash,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def animated_webp_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Animated-WebP near-dup over REAL composed frames — completing
+    the animation pair (`animated_gif_video_audit` is the GIF twin):
+    `decode_webp_anim_frames` (functions/multimodal.py) decodes each
+    ANMF's standalone VP8L bitstream with the conformance-verified
+    pure decoder and composes rects per RFC 9649 (2-px-unit offsets,
+    no-blend replace, dispose-to-white) — the planted streams are
+    keyframe + changed-region rects, so a frame hash is only right
+    if both the rect placement and the per-frame decode are. Frames
+    feed the same `video_frame_hashes` → `video_near_dup_pairs`
+    chain.
+
+    Planted-transform oracle: cluster ``pid = doc_id % 107``;
+    variants 0/1 byte-identical 8-frame animations, variant 2 a
+    TRIMMED + brightness-shifted re-encode — 7 shared composed
+    hashes. 16-bit frame words injective over (pid, frame)
+    (pid·8+7 ≤ 855 ≪ 65534; shift-invariant); all columns from id
+    arithmetic."""
+    from tidb_cdc_spark.functions.multimodal import (
+        synth_webp_anim_media,
+        video_frame_hashes,
+        video_near_dup_pairs,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 107).alias("pid"),
+            (F.col("doc_id") % 107).alias("base"),
+            F.when(F.expr("doc_id div 107") % 3 == 2, F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("skip"),
+            F.when(F.expr("doc_id div 107") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+        )
+    )
+    media = synth_webp_anim_media(planted, "media_id")
+    fh = materialize(
+        video_frame_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = video_near_dup_pairs(
+        fh, min_shared_frames=4, max_frame_freq=None
+    )
+    return (
+        fh.agg(
+            F.countDistinct("media_id").alias("n_media"),
+            F.countDistinct("pid").alias("n_clusters"),
+            F.count(F.lit(1)).alias("n_frame_rows"),
+            F.countDistinct("fhash").alias("distinct_fhash"),
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "n_frame_rows",
+            "distinct_fhash",
+            "neardup_pairs",
+        )
+    )
+
+
+_WEBP_ANIM_SQL = """
+WITH m AS (
+  SELECT doc_id % 107 AS pid,
+         CASE WHEN (doc_id // 107) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
+       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
+            AS BIGINT) AS distinct_fhash,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_tiff_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The baseline-TIFF audit — the last common still format joins
+    the codec family (`functions/multimodal.py::decode_tiff_pixels`:
+    both byte orders, multi-strip, photometric 0/1/2/3, 1/8/16-bit,
+    RGBA-over-white, and the TIFF Orientation tag normalized through
+    the shared `apply_exif_orientation`). Variant ``doc_id div 97 %
+    4`` for cluster ``pid = doc_id % 97``: 0 → the BMP anchor, 1 →
+    gray little-endian multi-strip TIFF, 2 → big-endian RGB TIFF
+    with a +20 brightness shift, 3 → an Orientation-6 TIFF storing
+    the inverse-rotated pixels (the scanner-rotation trap — byte-
+    different, pixel-rotated, must normalize onto the upright
+    anchor). All legs lossless ⇒ the flat-plant aHash lemma carries
+    exactly; ``distinct_ahash = n_clusters`` iff the IFD walk, strip
+    assembly, endianness, photometric handling, and orientation
+    normalization are all right. All columns from id arithmetic."""
+    from tidb_cdc_spark.functions.multimodal import (
+        perceptual_hashes,
+        phash_near_dup_pairs,
+        synth_codec_pixel_media,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 97).alias("pid"),
+            (F.lit(1) + (F.col("doc_id") % 97) % 254).alias("pattern"),
+            F.when(F.expr("doc_id div 97") % 4 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.element_at(
+                F.array(
+                    F.lit("bmp"), F.lit("tiff"),
+                    F.lit("tiff_rgb_be"), F.lit("tiff_o6"),
+                ),
+                (F.expr("doc_id div 97") % 4 + 1).cast("int"),
+            ).alias("codec"),
+        )
+    )
+    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
+    hashes = materialize(
+        perceptual_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
+    per_cluster = hashes.groupBy("pid").agg(
+        F.countDistinct("ahash").alias("_na"),
+        F.countDistinct("dhash").alias("_nd"),
+    )
+    scorecard = hashes.agg(
+        F.count(F.lit(1)).alias("n_media"),
+        F.countDistinct("pid").alias("n_clusters"),
+        F.countDistinct("ahash").alias("distinct_ahash"),
+    )
+    return (
+        scorecard.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
+                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
+                )
+            )
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "distinct_ahash",
+            "max_cluster_ahash_variants",
+            "max_cluster_dhash_variants",
+            "neardup_pairs",
+        )
+    )
+
+
+_TIFF_PHASH_SQL = """
+WITH m AS (
+  SELECT doc_id % 97 AS pid
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
+       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
+       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def animated_apng_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Animated-PNG near-dup over REAL composed frames — completing
+    the web's animation trio (GIF and WebP are the r14 siblings):
+    `decode_apng_frames` (functions/multimodal.py) rewraps each
+    frame's fdAT zlib stream as a standalone PNG for the
+    conformance-verified still decoder and composes fcTL sub-rects
+    per the spec (sequence validation, dispose/blend ops, the
+    IDAT-participates-as-frame-0 rule) — the planted streams are
+    DELTA-encoded (keyframe + changed-region rects), so each frame
+    hash is only right if rect placement AND the per-frame rewrap
+    are. Frames feed the same `video_frame_hashes` →
+    `video_near_dup_pairs` chain.
+
+    Planted-transform oracle: cluster ``pid = doc_id % 139``;
+    variants 0/1 byte-identical 8-frame animations, variant 2 a
+    TRIMMED + brightness-shifted re-encode — 7 shared composed
+    hashes. 16-bit frame words injective over (pid, frame)
+    (pid·8+7 ≤ 1111 ≪ 65534; shift-invariant); all columns from id
+    arithmetic."""
+    from tidb_cdc_spark.functions.multimodal import (
+        synth_apng_anim_media,
+        video_frame_hashes,
+        video_near_dup_pairs,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 139).alias("pid"),
+            (F.col("doc_id") % 139).alias("base"),
+            F.when(F.expr("doc_id div 139") % 3 == 2, F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("skip"),
+            F.when(F.expr("doc_id div 139") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+        )
+    )
+    media = synth_apng_anim_media(planted, "media_id")
+    fh = materialize(
+        video_frame_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = video_near_dup_pairs(
+        fh, min_shared_frames=4, max_frame_freq=None
+    )
+    return (
+        fh.agg(
+            F.countDistinct("media_id").alias("n_media"),
+            F.countDistinct("pid").alias("n_clusters"),
+            F.count(F.lit(1)).alias("n_frame_rows"),
+            F.countDistinct("fhash").alias("distinct_fhash"),
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "n_frame_rows",
+            "distinct_fhash",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: trimmed members carry 7 frames; a cluster's
+# distinct composed-frame hashes are 8 iff any member is untrimmed
+# (frame words are disjoint across clusters)
+_APNG_ANIM_SQL = """
+WITH m AS (
+  SELECT doc_id % 139 AS pid,
+         CASE WHEN (doc_id // 139) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
+       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
+            AS BIGINT) AS distinct_fhash,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def multimodal_mjpeg_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MJPEG near-dup over REAL compressed frames — the dominant
+    real-world AVI codec joins the video frame path
+    (`functions/multimodal.py::decode_avi_frames`, ``00dc`` chunks):
+    each frame is a standalone baseline JPEG decoded with the
+    conformance-verified pure decoder, and the OpenDML "AVI1"
+    DHT-LESS frame form is decoded through the T.81 K.3 fixed-table
+    injection (`functions/jpeg.py::mjpeg_ensure_dht` — tables pinned
+    byte-for-byte against javax.imageio's writer in
+    tests/test_codec_conformance.py). Frames feed the same
+    `video_frame_hashes` → inverted-index `video_near_dup_pairs`
+    chain every other video format uses.
+
+    Planted-transform oracle: cluster ``pid = doc_id % 113``;
+    variant 0 plants DHT-carrying streams, variant 1 the DHT-less
+    AVI1 twin (different bytes, BIT-IDENTICAL pixels — flat
+    8×8-block frames at quant step 1 round-trip exactly, so a
+    matching frame hash certifies the K.3 injection), variant 2 a
+    TRIMMED (first frame dropped) + brightness-shifted DHT-less
+    copy — 7 shared frame hashes. `synth_mjpeg_avi_media`'s 16-bit
+    frame words keep every hash provably the word's replicated bits
+    (injective over (pid, frame): pid·8+7 ≤ 911 ≪ 65534;
+    shift-invariant), so all columns derive from id arithmetic."""
+    from tidb_cdc_spark.functions.multimodal import (
+        synth_mjpeg_avi_media,
+        video_frame_hashes,
+        video_near_dup_pairs,
+    )
+    from tidb_cdc_spark.session import materialize
+
+    planted = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("doc_id") % 113).alias("pid"),
+            (F.col("doc_id") % 113).alias("base"),
+            F.when(F.expr("doc_id div 113") % 3 == 2, F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("skip"),
+            F.when(F.expr("doc_id div 113") % 3 == 2, F.lit(20))
+            .otherwise(F.lit(0))
+            .alias("shift"),
+            F.when(F.expr("doc_id div 113") % 3 >= 1, F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("strip"),
+        )
+    )
+    media = synth_mjpeg_avi_media(planted, "media_id")
+    fh = materialize(
+        video_frame_hashes(media).join(
+            planted.select("media_id", "pid"), "media_id"
+        )
+    )
+    pairs = video_near_dup_pairs(
+        fh, min_shared_frames=4, max_frame_freq=None
+    )
+    return (
+        fh.agg(
+            F.countDistinct("media_id").alias("n_media"),
+            F.countDistinct("pid").alias("n_clusters"),
+            F.count(F.lit(1)).alias("n_frame_rows"),
+            F.countDistinct("fhash").alias("distinct_fhash"),
+        )
+        .crossJoin(
+            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+        )
+        .select(
+            "n_media",
+            "n_clusters",
+            "n_frame_rows",
+            "distinct_fhash",
+            "neardup_pairs",
+        )
+    )
+
+
+# plant arithmetic: trimmed members carry 7 frames; a cluster's
+# distinct frame hashes are 8 iff any member is untrimmed (frame
+# words are disjoint across clusters); the DHT-less variant adds no
+# new hashes iff the K.3 injection decodes it pixel-identically
+_MJPEG_VIDEO_SQL = """
+WITH m AS (
+  SELECT doc_id % 113 AS pid,
+         CASE WHEN (doc_id // 113) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
+       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
+            AS BIGINT) AS distinct_fhash,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
 QUERIES = {
+    "multimodal_webp_lossy_audit": multimodal_webp_lossy_audit,
+    "animated_gif_video_audit": animated_gif_video_audit,
+    "multimodal_webp_phash_audit": multimodal_webp_phash_audit,
+    "multimodal_jpeg_prog_audit": multimodal_jpeg_prog_audit,
+    "video_curation_pipeline": video_curation_pipeline,
+    "video_curation_provenance": video_curation_provenance,
+    "video_frame_cap_report": video_frame_cap_report,
+    "multimodal_video_audit": multimodal_video_audit,
+    "multimodal_doc_features": multimodal_doc_features,
     "multimodal_probe_audit": multimodal_probe_audit,
     "multimodal_frame_plan": multimodal_frame_plan,
     "multimodal_image_audit": multimodal_image_audit,
@@ -1800,24 +3151,37 @@ QUERIES = {
     "multimodal_phash_audit": multimodal_phash_audit,
     "media_curation_pipeline": media_curation_pipeline,
     "multimodal_audio_audit": multimodal_audio_audit,
-    "multimodal_video_audit": multimodal_video_audit,
     "multimodal_audio_trim_audit": multimodal_audio_trim_audit,
     "multimodal_dct_phash_audit": multimodal_dct_phash_audit,
     "audio_curation_pipeline": audio_curation_pipeline,
-    "video_curation_pipeline": video_curation_pipeline,
     "media_curation_provenance": media_curation_provenance,
     "phash_cap_report": phash_cap_report,
-    "video_frame_cap_report": video_frame_cap_report,
     "audio_window_cap_report": audio_window_cap_report,
     "audio_curation_provenance": audio_curation_provenance,
-    "video_curation_provenance": video_curation_provenance,
     "multimodal_anim_probe_audit": multimodal_anim_probe_audit,
     "multimodal_audio_probe_audit": multimodal_audio_probe_audit,
     "audio_g711_audit": audio_g711_audit,
     "audio_adpcm_audit": audio_adpcm_audit,
+    "multimodal_png_phash_audit": multimodal_png_phash_audit,
+    "multimodal_codec_matrix_audit": multimodal_codec_matrix_audit,
+    "multimodal_jpeg_phash_audit": multimodal_jpeg_phash_audit,
+    "multimodal_png_deep_audit": multimodal_png_deep_audit,
+    "multimodal_exif_orientation_audit": multimodal_exif_orientation_audit,
+    "animated_webp_video_audit": animated_webp_video_audit,
+    "multimodal_tiff_phash_audit": multimodal_tiff_phash_audit,
+    "multimodal_mjpeg_video_audit": multimodal_mjpeg_video_audit,
+    "animated_apng_video_audit": animated_apng_video_audit,
 }
-
 ORACLE = {
+    "multimodal_webp_lossy_audit": _WEBP_LOSSY_SQL,
+    "animated_gif_video_audit": _GIF_ANIM_SQL,
+    "multimodal_webp_phash_audit": _WEBP_PHASH_SQL,
+    "multimodal_jpeg_prog_audit": _JPEG_PROG_SQL,
+    "video_curation_pipeline": _VIDEO_CURATION_SQL,
+    "video_curation_provenance": _VIDEO_PROVENANCE_SQL,
+    "video_frame_cap_report": _VIDEO_CAP_SQL,
+    "multimodal_video_audit": _VIDEO_SQL,
+    "multimodal_doc_features": _MULTIMODAL_SQL,
     "multimodal_probe_audit": _PROBE_SQL,
     "multimodal_frame_plan": _FRAME_SQL,
     "multimodal_image_audit": _IMAGE_SQL,
@@ -1825,19 +3189,24 @@ ORACLE = {
     "multimodal_phash_audit": _PHASH_SQL,
     "media_curation_pipeline": _CURATION_SQL,
     "multimodal_audio_audit": _AUDIO_SQL,
-    "multimodal_video_audit": _VIDEO_SQL,
     "multimodal_audio_trim_audit": _AUDIO_TRIM_SQL,
     "multimodal_dct_phash_audit": _DCT_PHASH_SQL,
     "audio_curation_pipeline": _AUDIO_CURATION_SQL,
-    "video_curation_pipeline": _VIDEO_CURATION_SQL,
     "media_curation_provenance": _MEDIA_PROVENANCE_SQL,
     "phash_cap_report": _PHASH_CAP_SQL,
-    "video_frame_cap_report": _VIDEO_CAP_SQL,
     "audio_window_cap_report": _AUDIO_CAP_SQL,
     "audio_curation_provenance": _AUDIO_PROVENANCE_SQL,
-    "video_curation_provenance": _VIDEO_PROVENANCE_SQL,
     "multimodal_anim_probe_audit": _ANIM_PROBE_SQL,
     "multimodal_audio_probe_audit": _AUDIO_PROBE_SQL,
     "audio_g711_audit": _G711_SQL,
     "audio_adpcm_audit": _ADPCM_SQL,
+    "multimodal_png_phash_audit": _PNG_PHASH_SQL,
+    "multimodal_codec_matrix_audit": _CODEC_MATRIX_SQL,
+    "multimodal_jpeg_phash_audit": _JPEG_PHASH_SQL,
+    "multimodal_png_deep_audit": _PNG_DEEP_SQL,
+    "multimodal_exif_orientation_audit": _EXIF_ORIENTATION_SQL,
+    "animated_webp_video_audit": _WEBP_ANIM_SQL,
+    "multimodal_tiff_phash_audit": _TIFF_PHASH_SQL,
+    "multimodal_mjpeg_video_audit": _MJPEG_VIDEO_SQL,
+    "animated_apng_video_audit": _APNG_ANIM_SQL,
 }

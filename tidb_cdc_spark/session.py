@@ -46,34 +46,22 @@ def get_spark(
         # clusters. Scale-adaptive by construction: the coalesce
         # target is bytes, so a 100 TB shuffle still fans out to
         # thousands of partitions while a KB-sized one collapses to 1.
-        # Env-overridable for A/B runs, not hard-coded to local mode.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         # --- r14 (guide §5): let AQE re-plan the subplans that fill
         # the persisted frames materialize() creates — without this a
         # cached frame keeps the static shuffle.partitions layout and
         # every downstream consumer (MLlib fit iterations included)
         # inherits its near-empty task fan-out.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_AQE_CACHED_PLAN", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # --- r15 (guide §3.1, VERDICT #6/ADVICE): static planner
         # keeps Spark's sort-merge preference (the default). r14 had
         # shipped preferSortMergeJoin=false, but the static choice
         # rides SIZE ESTIMATES — a bad estimate plus skew builds an
         # unbounded hash map on an executor at 100 TB, and the
-        # rotated 3-arm A/B (tools/shj_ab_r15.py: static-SHJ 7.03 s
-        # vs runtime-only 6.30 s vs both-off 6.40 s over the 6
-        # SMJ-heavy queries, min-of-6 interleaved) shows the static
-        # half carries no measurable win over the bounded AQE
-        # runtime rewrite below. Env-overridable for A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # rotated 3-arm A/B recorded in OPTIMIZATION_r15.md §5 shows
+        # the static half carries no measurable win over the bounded
+        # AQE runtime rewrite below.
+        .config("spark.sql.join.preferSortMergeJoin", "true")
         # --- r14 (guide §3.1): preferSortMergeJoin=false alone only
         # affects the STATIC planner (whose size estimates rarely
         # qualify); this is the runtime half — AQE rewrites a
@@ -84,10 +72,7 @@ def get_spark(
         # oversized partitions keep sort-merge. Measured 10-25% on
         # the SMJ-heavy queries (q21, SCD2, pagerank, keep-best)
         # interleaved on=off-warm.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "67108864"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "67108864")
         # --- scan sizing: keep input splits ~128 MB so executor
         # memory holds a partition comfortably at any SF ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
@@ -172,51 +157,21 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     return df
 
 
-#: How multiply-consumed subplans (self-join inputs, synthesized CDC
-#: sources) are materialized. Modes:
-#:   "persist"    (default) — ``persist(StorageLevel.MEMORY_AND_DISK)``:
-#:                keeps full lineage, so a lost executor/block is
-#:                recomputed from source — the fault-tolerant choice
-#:                for a 1000-executor 100 TB run. r14 (guide §5):
-#:                MEMORY_AND_DISK instead of DISK_ONLY — the SQL
-#:                cache stores compressed columnar batches either
-#:                way, but DISK_ONLY forced a write+read round-trip
-#:                per consumer even when the batches fit storage
-#:                memory; MEMORY_AND_DISK degrades to exactly the
-#:                old behavior under memory pressure (blocks spill
-#:                to disk, nothing is lost or recomputed).
-#:   "checkpoint" — ``localCheckpoint(eager=False)``: truncates
-#:                lineage (smaller re-plans) but blocks live only in
-#:                the block manager; an executor loss KILLS the job.
-#:                Acceptable for short single-node sessions.
-MATERIALIZE_MODE = "persist"
-
-
 def materialize(df):
     """Materialize a subplan consumed by more than one downstream
     branch (Spark does not reuse common subplans — without this the
     producing pipeline executes, and codegen-compiles, once per
     consumer). Also acts as a projection/pushdown barrier: consumers
-    read the materialized blocks, never re-derive the source."""
-    if MATERIALIZE_MODE == "checkpoint":
-        return df.localCheckpoint(eager=False)
+    read the materialized blocks, never re-derive the source.
+
+    ``persist(MEMORY_AND_DISK)`` keeps full lineage, so a lost
+    executor or block is recomputed from source. The SQL cache stores
+    compressed columnar batches at any level; MEMORY_AND_DISK skips the
+    write+read round-trip per consumer that DISK_ONLY forces when the
+    batches fit storage memory, and spills to disk under pressure."""
     from pyspark.storagelevel import StorageLevel
 
-    level = os.environ.get("SPARK_GRAFT_MATERIALIZE_LEVEL", "MEMORY_AND_DISK")
-    # r15 (advice): a typo'd env value used to surface as a bare
-    # AttributeError deep inside every query build — validate here
-    # and name the variable and the accepted values instead.
-    sl = getattr(StorageLevel, level, None)
-    if not isinstance(sl, StorageLevel):
-        valid = sorted(
-            k for k, v in vars(StorageLevel).items()
-            if isinstance(v, StorageLevel)
-        )
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE_LEVEL={level!r} is not a "
-            f"pyspark StorageLevel; use one of {valid}"
-        )
-    return df.persist(sl)
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def fan_out(df, spark: SparkSession, partitions: int | None = None):

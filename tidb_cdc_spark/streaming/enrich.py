@@ -478,7 +478,7 @@ class DigestAdmissionSink(_AdmissionSink):
     rows whose payload digest has never been seen, the pass a
     crawl's media fetcher runs so the corpus never stores the same
     bytes twice (the multimodal batch form is
-    ``queries/llm18.py::multimodal_dedup_audit``).
+    ``queries/media.py::multimodal_dedup_audit``).
 
     - digest = ``unhex(sha2(payload, 256))`` — JVM-side codegen on
       the binary column, no Python anywhere in the sink; stored as
@@ -634,7 +634,7 @@ class PhashAdmissionSink(_AdmissionSink):
     within ``max_hamming`` bits, the pass an image crawl runs AFTER
     exact byte dedup (a re-encoded / brightness-shifted copy has new
     bytes but the same aHash; the batch form is
-    ``queries/llm18.py::multimodal_phash_audit``).
+    ``queries/media.py::multimodal_phash_audit``).
 
     - hashes come from the REAL pixel path (``functions/multimodal.
       perceptual_hashes`` — Arrow-batched decode, 24 B output rows;

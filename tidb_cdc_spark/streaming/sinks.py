@@ -227,6 +227,16 @@ class Scd2SplitHistorySink(ParquetSnapshotSink):
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
         if guard_batch_watermark(self._last_batch_id(), batch_id, "history"):
             return
+        # the stores' layout reserves two names a table column cannot
+        # use (partition dirs derive from them); fail loudly, not by
+        # silently overwriting the data column (review catch)
+        reserved = {"scd2zone", "b"} & {c.target for c in spec.resolved_columns()}
+        if reserved:
+            raise ValueError(
+                f"table columns {sorted(reserved)} collide with the "
+                "split-store layout's reserved partition names "
+                "(scd2zone, b) — rename via ColumnSpec(column=...)"
+            )
         changes = self._since_bootstrap(changes)
         spark = changes.sparkSession
         store.recover(self._closed_root())
@@ -234,16 +244,6 @@ class Scd2SplitHistorySink(ParquetSnapshotSink):
         new_head, newly_closed, batch_handles = merge_scd2_split(
             head, changes, spec
         )
-        # the stores' layout reserves two names a table column cannot
-        # use (partition dirs derive from them); fail loudly, not by
-        # silently overwriting the data column (review catch)
-        reserved = {"scd2zone", "b"} & set(new_head.columns)
-        if reserved:
-            raise ValueError(
-                f"table columns {sorted(reserved)} collide with the "
-                "split-store layout's reserved partition names "
-                "(scd2zone, b) — rename via ColumnSpec(column=...)"
-            )
         # ONE partitioned job computes both outputs (two separate
         # writes re-executed the shared merge subplan; the batch SCD2
         # subplan is additionally materialized inside
@@ -251,33 +251,37 @@ class Scd2SplitHistorySink(ParquetSnapshotSink):
         # the pointer swap publishes both. Single writer: whatever is
         # left in _stage is a crashed attempt's
         staging = os.path.join(self.path, "_stage")
-        store.remove(staging)
-        (
-            new_head.withColumn("scd2zone", F.lit("head"))
-            .unionByName(newly_closed.withColumn("scd2zone", F.lit("closed")))
-            .write.partitionBy("scd2zone")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        closed_dst = os.path.join(self._closed_root(), f"b={batch_id}")
-        os.makedirs(self._closed_root(), exist_ok=True)
-        src_closed = os.path.join(staging, "scd2zone=closed")
-        src_head = os.path.join(staging, "scd2zone=head")
-        if os.path.exists(src_closed):
-            store.move(src_closed, closed_dst)
-        else:
-            # batch closed nothing — create NO b=<id> dir at all
-            # (_read_closed tolerates gaps; an empty dir per idle batch
-            # would re-grow the listing cost compact() fights), but
-            # clear a torn prior attempt
-            store.remove(closed_dst)
-        # an empty stream batch over an empty store stages no head
-        head_src = src_head if os.path.exists(src_head) else new_head.limit(0)
-        for handle in batch_handles:
-            try:  # release this batch's persisted blocks
-                handle.unpersist()
-            except Exception:  # noqa: BLE001 — best-effort cache release
-                pass
+        try:
+            store.remove(staging)
+            (
+                new_head.withColumn("scd2zone", F.lit("head"))
+                .unionByName(newly_closed.withColumn("scd2zone", F.lit("closed")))
+                .write.partitionBy("scd2zone")
+                .mode("overwrite")
+                .parquet(staging)
+            )
+            closed_dst = os.path.join(self._closed_root(), f"b={batch_id}")
+            os.makedirs(self._closed_root(), exist_ok=True)
+            src_closed = os.path.join(staging, "scd2zone=closed")
+            src_head = os.path.join(staging, "scd2zone=head")
+            if os.path.exists(src_closed):
+                store.move(src_closed, closed_dst)
+            else:
+                # batch closed nothing — create NO b=<id> dir at all
+                # (_read_closed tolerates gaps; an empty dir per idle
+                # batch would re-grow the listing cost compact()
+                # fights), but clear a torn prior attempt
+                store.remove(closed_dst)
+            # an empty stream batch over an empty store stages no head
+            head_src = src_head if os.path.exists(src_head) else new_head.limit(0)
+        finally:
+            # release this batch's persisted blocks, also when the
+            # staged write fails
+            for handle in batch_handles:
+                try:
+                    handle.unpersist()
+                except Exception:  # noqa: BLE001 — best-effort cache release
+                    pass
         store.commit_version(self.path, self.PREFIX, head_src, batch_id)
         store.remove(staging)
 
