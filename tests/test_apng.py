@@ -13,17 +13,21 @@ import zlib
 import numpy as np
 import pytest
 
-from tidb_cdc_spark.functions.multimodal import (
-    _encode_apng,
-    _encode_png,
+from tidb_cdc_spark.functions.media_decode import (
     _png_chunk,
-    ahash64,
-    apng_animation_info,
     decode_apng_frames,
     decode_png_pixels,
-    synth_apng_anim_media,
+)
+from tidb_cdc_spark.functions.media_hash import (
+    ahash64,
     video_frame_hashes,
     video_near_dup_pairs,
+)
+from tidb_cdc_spark.functions.media_probe import apng_animation_info
+from tidb_cdc_spark.functions.media_synth import (
+    _encode_apng,
+    _encode_png,
+    synth_apng_anim_media,
 )
 
 
@@ -163,7 +167,7 @@ class TestFailClosed:
     def test_alpha_blend_over_fails_closed(self):
         """A gray+alpha frame under OVER blending needs the planes
         the luma reduction collapsed — None, never wrong pixels."""
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_synth import (
             _encode_png_ex,
             _idat_payload,
         )
@@ -214,7 +218,7 @@ class TestProbe:
         assert apng_animation_info(b"\x89PNG\r\n\x1a\n") is None
 
     def test_probe_media_duration(self, spark):
-        from tidb_cdc_spark.functions.multimodal import probe_media
+        from tidb_cdc_spark.functions.media_probe import probe_media
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)
         p = _encode_apng([(g, 0, 0, 0, 0)] * 4, 8, 8, delay_ms=50)

@@ -17,13 +17,13 @@ import pytest
 
 import numpy as np
 
-from tidb_cdc_spark.functions.multimodal import (
+from tidb_cdc_spark.functions.media_decode import decode_wav_samples
+from tidb_cdc_spark.functions.media_hash import (
     audio_fingerprint64,
     audio_fingerprints,
-    decode_wav_samples,
     phash_near_dup_pairs,
-    synth_wav_pcm_media,
 )
+from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
 
 FRAMES, SPF = 64, 32
 
@@ -59,7 +59,7 @@ def test_fingerprint_replication_gain_invariance_and_margin():
 
 
 def test_wav_roundtrip_and_probe_agreement(spark):
-    from tidb_cdc_spark.functions.multimodal import parse_media_header
+    from tidb_cdc_spark.functions.media_probe import parse_media_header
 
     rows = [(1, 7, 1), (2, 8, 3), (3, 101, 1)]
     expected = {mid: (v, g) for mid, v, g in rows}
@@ -106,7 +106,7 @@ def test_stereo_averages_to_mono():
 
 
 def test_fingerprints_null_for_unrecognized(spark):
-    from tidb_cdc_spark.functions.multimodal import synthesize_media
+    from tidb_cdc_spark.functions.media_probe import synthesize_media
 
     out = audio_fingerprints(synthesize_media(spark, 6)).collect()
     assert len(out) == 6
@@ -186,7 +186,7 @@ def test_window_fingerprint_lemma_and_injectivity():
 
 
 def test_trimmed_copy_window_hashes_are_suffix():
-    from tidb_cdc_spark.functions.multimodal import audio_fingerprint64
+    from tidb_cdc_spark.functions.media_hash import audio_fingerprint64
 
     def seq(payload):
         x = decode_wav_samples(payload)
@@ -206,11 +206,11 @@ def test_trimmed_copy_window_hashes_are_suffix():
 def test_audio_window_near_dup_catches_trim_regain(spark):
     """End-to-end on the Spark path: planted full/full/trim+regain
     triple pairs up fully within the cluster, never across."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_near_dup_pairs,
         audio_window_hashes,
-        synth_wav_windowed_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
 
     rows = [
         # cluster A: two identical fulls + one trim(2)+regain(3)
@@ -233,7 +233,7 @@ def test_audio_window_near_dup_catches_trim_regain(spark):
 def test_audio_window_hashes_skip_non_pcm(spark):
     """Unrecognized payloads emit NO window rows (no fabricated
     evidence), matching the video frame path's contract."""
-    from tidb_cdc_spark.functions.multimodal import audio_window_hashes
+    from tidb_cdc_spark.functions.media_hash import audio_window_hashes
 
     media = spark.createDataFrame(
         [(1, b"\x89PNG not audio")], "media_id long, payload binary"
@@ -244,11 +244,9 @@ def test_audio_window_hashes_skip_non_pcm(spark):
 def test_fully_trimmed_clip_is_valid_empty_wav(spark):
     """skip >= n_windows plants a zero-sample (still valid) WAV:
     no window rows, no crash in the Arrow pass."""
-    from tidb_cdc_spark.functions.multimodal import (
-        audio_window_hashes,
-        decode_wav_samples,
-        synth_wav_windowed_media,
-    )
+    from tidb_cdc_spark.functions.media_decode import decode_wav_samples
+    from tidb_cdc_spark.functions.media_hash import audio_window_hashes
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
 
     ids = spark.createDataFrame(
         [(1, 5, 8, 1)], "media_id long, base long, skip int, gain int"
@@ -268,10 +266,7 @@ class TestG711:
         audioop = pytest.importorskip("audioop")
         import numpy as np
 
-        from tidb_cdc_spark.functions.multimodal import (
-            _ALAW_LUT,
-            _ULAW_LUT,
-        )
+        from tidb_cdc_spark.functions.media_decode import _ALAW_LUT, _ULAW_LUT
 
         u = bytes(range(256))
         ref_u = np.frombuffer(audioop.ulaw2lin(u, 2), dtype="<i2")
@@ -296,12 +291,12 @@ class TestG711:
     def test_decode_routes_by_format_tag(self):
         import numpy as np
 
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_decode import (
             _ALAW_LUT,
             _ULAW_LUT,
-            _g711_encode,
             decode_wav_samples,
         )
+        from tidb_cdc_spark.functions.media_synth import _g711_encode
 
         rng = np.random.default_rng(5)
         x = rng.integers(-8000, 8000, 512).astype(np.int64)
@@ -320,13 +315,13 @@ class TestG711:
     def test_fingerprint_collapses_across_codings(self):
         import numpy as np
 
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_decode import (
             _ALAW_LUT,
             _ULAW_LUT,
-            _g711_encode,
-            audio_fingerprint64,
             decode_wav_samples,
         )
+        from tidb_cdc_spark.functions.media_hash import audio_fingerprint64
+        from tidb_cdc_spark.functions.media_synth import _g711_encode
 
         n = 64 * 32
         sign = np.where(np.arange(n) % 2 == 0, 1, -1).astype(np.int64)
@@ -347,7 +342,7 @@ class TestG711:
 
 class TestCompressedAudioProbes:
     def test_flac_streaminfo_duration(self):
-        from tidb_cdc_spark.functions.multimodal import parse_media_header
+        from tidb_cdc_spark.functions.media_probe import parse_media_header
 
         sr, total = 44100, 44100 * 7 + 123
         b = bytearray(34)
@@ -366,7 +361,7 @@ class TestCompressedAudioProbes:
         assert parse_media_header(bytes(z)) is None  # sr == 0
 
     def test_mp3_xing_and_cbr(self):
-        from tidb_cdc_spark.functions.multimodal import parse_media_header
+        from tidb_cdc_spark.functions.media_probe import parse_media_header
 
         # Xing behind an ID3v2 tag, mono side-info offset
         tag_sz = 57
@@ -420,7 +415,7 @@ class TestImaAdpcm:
         first sample in the HIGH nibble; WAV packs low-first, so
         the fixture shifts)."""
         audioop = pytest.importorskip("audioop")
-        from tidb_cdc_spark.functions.multimodal import _ima_decode_core
+        from tidb_cdc_spark.functions.media_decode import _ima_decode_core
 
         for index in range(89):
             for nib in range(16):
@@ -434,7 +429,7 @@ class TestImaAdpcm:
 
     def test_stream_matches_audioop_with_state(self):
         audioop = pytest.importorskip("audioop")
-        from tidb_cdc_spark.functions.multimodal import _ima_decode_core
+        from tidb_cdc_spark.functions.media_decode import _ima_decode_core
 
         rng = np.random.default_rng(11)
         nibs = rng.integers(0, 16, 4096).tolist()
@@ -451,10 +446,8 @@ class TestImaAdpcm:
         """Multi-block streams restart state from each block header;
         the header predictor is emitted as the block's first
         sample, bit-exact regardless of quantization."""
-        from tidb_cdc_spark.functions.multimodal import (
-            _ima_encode_block,
-            decode_wav_samples,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_wav_samples
+        from tidb_cdc_spark.functions.media_synth import _ima_encode_block
 
         n_blk, spb = 3, 17  # 17 samples: 16 nibbles = 8 bytes body
         rng = np.random.default_rng(23)
@@ -471,10 +464,8 @@ class TestImaAdpcm:
             assert int(got[b * spb]) == firsts[b]
 
     def test_samples_per_block_truncates_pad_nibble(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _ima_encode_block,
-            decode_wav_samples,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_wav_samples
+        from tidb_cdc_spark.functions.media_synth import _ima_encode_block
 
         s = np.arange(-512, 512, 1, dtype=np.int64) * 7  # 1024 samples
         ba = 4 + 512  # 1023 nibbles + 1 pad
@@ -501,7 +492,7 @@ class TestImaAdpcm:
         nibble groups channel-major — the decode must equal each
         channel decoded alone, then averaged like every other
         multi-channel path."""
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_decode import (
             _ima_decode_core,
             decode_wav_samples,
         )
@@ -534,7 +525,7 @@ class TestImaAdpcm:
         assert np.array_equal(got, want)
 
     def test_fail_closed_misalignment_and_bad_index(self):
-        from tidb_cdc_spark.functions.multimodal import decode_wav_samples
+        from tidb_cdc_spark.functions.media_decode import decode_wav_samples
         import struct
 
         # step index > 88 in the header
@@ -574,11 +565,9 @@ class TestImaAdpcm:
         of every planted pattern × the audit gains keeps the energy
         aHash EQUAL to the PCM fingerprint — adaptive quantization
         error never crosses the 3:1 frame-energy margin."""
-        from tidb_cdc_spark.functions.multimodal import (
-            _ima_adpcm_decode,
-            _ima_encode_block,
-            audio_fingerprint64,
-        )
+        from tidb_cdc_spark.functions.media_decode import _ima_adpcm_decode
+        from tidb_cdc_spark.functions.media_hash import audio_fingerprint64
+        from tidb_cdc_spark.functions.media_synth import _ima_encode_block
 
         n = FRAMES * SPF
         ba = 4 + n // 2

@@ -26,7 +26,7 @@ N_TABLES = comb(6, 3)  # Manku tables at the (blocks=6, τ=3) defaults
 
 
 def _plant_bmp(spark, sf_dir=SF):
-    from tidb_cdc_spark.functions.multimodal import synth_bmp_pixel_media
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -49,7 +49,7 @@ def test_phash_plant_manku_keys_collision_free(spark):
     20·n_clusters arithmetic stands on; the hash values depend only
     on pid, so this single check covers every SF."""
     from tidb_cdc_spark.functions.dedup import manku_table_keys
-    from tidb_cdc_spark.functions.multimodal import perceptual_hashes
+    from tidb_cdc_spark.functions.media_hash import perceptual_hashes
 
     hashes = perceptual_hashes(_plant_bmp(spark))
     fam = hashes.select(F.col("ahash").alias("_sh")).distinct()
@@ -64,7 +64,7 @@ def test_phash_cap_report_brute_force(spark):
     """Report counts equal a pandas recomputation over the raw Manku
     explode — no plant arithmetic, no collision assumption."""
     from tidb_cdc_spark.functions.dedup import manku_table_keys
-    from tidb_cdc_spark.functions.multimodal import phash_cap_report
+    from tidb_cdc_spark.functions.media_hash import phash_cap_report
 
     # families: 6 ids on hash A, 3 on B, 1 on C (+ a NULL screened
     # out); the three hashes differ in EVERY Manku block (0, ~0,
@@ -101,7 +101,7 @@ def test_phash_cap_report_brute_force(spark):
 
 
 def test_video_frame_cap_report_brute_force(spark):
-    from tidb_cdc_spark.functions.multimodal import video_frame_cap_report
+    from tidb_cdc_spark.functions.media_hash import video_frame_cap_report
 
     # frame inverted index: hash 100 in 5 videos, 200 in 2, 300 in 1;
     # video 0 repeats hash 100 (distinct-collapse must dedupe it)
@@ -127,12 +127,14 @@ def _survivor_stats(spark):
     """Stage-2 survivor family sizes for all three composed
     pipelines at sf0.001 — computed exactly as the pipelines build
     their stage-2 inputs."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_window_hashes,
         perceptual_hashes,
+        video_frame_hashes,
+    )
+    from tidb_cdc_spark.functions.media_synth import (
         synth_avi_media,
         synth_wav_windowed_media,
-        video_frame_hashes,
     )
 
     def survivors(media):
@@ -211,7 +213,7 @@ def test_capped_equals_uncapped_on_survivor_pairs(spark):
     the IDENTICAL pair set as cap=None over the image pipeline's
     stage-2 survivors (the other two pipelines share the family-size
     bound asserted above)."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
     )

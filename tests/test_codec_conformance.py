@@ -32,7 +32,7 @@ from tidb_cdc_spark.functions.jpeg import (
     encode_jpeg,
     encode_jpeg_progressive,
 )
-from tidb_cdc_spark.functions.multimodal import _encode_gif, _encode_png_ex
+from tidb_cdc_spark.functions.media_synth import _encode_gif, _encode_png_ex
 
 _HAVE_JDK = shutil.which("javac") is not None and shutil.which("java") is not None
 pytestmark = pytest.mark.skipif(not _HAVE_JDK, reason="no JDK available")
@@ -288,7 +288,7 @@ class TestThirdPartyEncodedStreams:
     selections, Huffman tables, and 4:2:0 subsampling."""
 
     def test_imageio_png_decodes_exactly(self, recoder):
-        from tidb_cdc_spark.functions.multimodal import decode_png_pixels
+        from tidb_cdc_spark.functions.media_decode import decode_png_pixels
 
         rng = _rng()
         for h, w in [(24, 31), (13, 7), (64, 64)]:
@@ -322,7 +322,7 @@ class TestThirdPartyEncodedStreams:
         construction) through our pure-Python decoder — gray
         content keeps the palette lossless, so the decode must be
         EXACT against the source."""
-        from tidb_cdc_spark.functions.multimodal import decode_gif_pixels
+        from tidb_cdc_spark.functions.media_decode import decode_gif_pixels
 
         rng = _rng()
         for h, w in [(24, 31), (9, 13)]:
@@ -430,7 +430,7 @@ class TestApngAgainstImageIO:
     stream layout against an independent decoder."""
 
     def test_default_image_matches_reference(self, dumper):
-        from tidb_cdc_spark.functions.multimodal import _encode_apng
+        from tidb_cdc_spark.functions.media_synth import _encode_apng
 
         rng = _rng()
         g0 = rng.integers(0, 256, (12, 17)).astype(np.int64)

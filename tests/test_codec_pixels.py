@@ -12,17 +12,18 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tidb_cdc_spark.functions.multimodal import (
-    CODEC_LEGS,
-    _encode_gif,
-    _encode_png,
+from tidb_cdc_spark.functions.media_decode import (
     _gif_lzw_decode,
-    _gif_lzw_encode,
-    ahash64,
     decode_gif_pixels,
     decode_pixels,
     decode_png_pixels,
-    dhash64,
+)
+from tidb_cdc_spark.functions.media_hash import ahash64, dhash64
+from tidb_cdc_spark.functions.media_synth import (
+    CODEC_LEGS,
+    _encode_gif,
+    _encode_png,
+    _gif_lzw_encode,
 )
 
 
@@ -75,7 +76,7 @@ class TestPngDecode:
         import struct
         import zlib
 
-        from tidb_cdc_spark.functions.multimodal import _png_chunk
+        from tidb_cdc_spark.functions.media_decode import _png_chunk
 
         def png_with_ihdr(depth, color, interlace):
             ihdr = struct.pack(">IIBBBBB", 4, 4, depth, color, 0, 0, interlace)
@@ -101,7 +102,7 @@ class TestPngDecode:
         # shrink PLTE to one entry: rebuild with a truncated palette
         import struct
 
-        from tidb_cdc_spark.functions.multimodal import _png_chunk
+        from tidb_cdc_spark.functions.media_decode import _png_chunk
 
         pos = 8
         out = b"\x89PNG\r\n\x1a\n"
@@ -124,7 +125,7 @@ class TestPngFullEnvelope:
     @pytest.mark.parametrize("interlaced", [False, True])
     @pytest.mark.parametrize("size", [(13, 17), (5, 3), (1, 1), (2, 2)])
     def test_roundtrip_gray_and_rgb_all_depths(self, interlaced, size):
-        from tidb_cdc_spark.functions.multimodal import _encode_png_ex
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         h, w = size
         rng = _rng()
@@ -155,7 +156,7 @@ class TestPngFullEnvelope:
 
     @pytest.mark.parametrize("interlaced", [False, True])
     def test_roundtrip_subbyte_palette(self, interlaced):
-        from tidb_cdc_spark.functions.multimodal import _encode_png_ex
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         rng = _rng()
         vals = np.array([10, 60, 180, 240], dtype=np.int64)
@@ -170,7 +171,7 @@ class TestPngFullEnvelope:
             assert (got == vals[idx]).all()
 
     def test_alpha_composites_over_white_round_half_up(self):
-        from tidb_cdc_spark.functions.multimodal import _encode_png_ex
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = np.full((4, 4), 100, dtype=np.int64)
         a = np.array([[0, 64, 128, 255]] * 4, dtype=np.int64)
@@ -193,7 +194,7 @@ class TestPngFullEnvelope:
         """a=255 composite is the identity: an opaque RGBA re-save of
         an RGB image must hash identically — the perceptual-dedup
         claim the deep audit pins at scale."""
-        from tidb_cdc_spark.functions.multimodal import _encode_png_ex
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         rgb = _rng().integers(0, 256, (8, 8, 3)).astype(np.int64)
         rgba = np.concatenate(
@@ -206,7 +207,7 @@ class TestPngFullEnvelope:
     def test_16bit_msb_rule_on_non_replicated_samples(self):
         """Arbitrary 16-bit samples (not of the v·257 form) reduce by
         the HIGH byte — deterministic, platform-free."""
-        from tidb_cdc_spark.functions.multimodal import _encode_png_ex
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         v16 = np.array(
             [[0x1234, 0xFFFF], [0x00FF, 0x8000]], dtype=np.int64
@@ -220,10 +221,8 @@ class TestPngFullEnvelope:
         import struct
         import zlib
 
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_png_ex,
-            _png_chunk,
-        )
+        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)
         raw = _encode_png_ex(g, 0, 8, interlaced=True)
@@ -245,10 +244,8 @@ class TestPngFullEnvelope:
         import struct
         import zlib
 
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_png_ex,
-            _png_chunk,
-        )
+        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)
         for interlaced in (False, True):
@@ -269,9 +266,9 @@ class TestPngFullEnvelope:
         """Spark-side: the six PNG_DEEP_LEGS byte-disjoint encodings
         of the same pattern collapse to one (ahash, dhash) — the
         deep audit's core claim in miniature."""
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_hash import perceptual_hashes
+        from tidb_cdc_spark.functions.media_synth import (
             PNG_DEEP_LEGS,
-            perceptual_hashes,
             synth_codec_pixel_media,
         )
 
@@ -395,8 +392,8 @@ class TestSynthCodecMedia:
         ids = spark.createDataFrame(
             rows, "media_id long, pattern int, shift int, codec string"
         )
-        from tidb_cdc_spark.functions.multimodal import (
-            perceptual_hashes,
+        from tidb_cdc_spark.functions.media_hash import perceptual_hashes
+        from tidb_cdc_spark.functions.media_synth import (
             synth_codec_pixel_media,
         )
 
@@ -412,7 +409,7 @@ class TestSynthCodecMedia:
         assert by_pattern[0] != by_pattern[1]
 
     def test_unknown_leg_raises(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_synth import (
             synth_codec_pixel_media,
         )
 
@@ -433,7 +430,7 @@ class TestPngExifOrientation:
     def _with_exif(raw: bytes, orientation: int) -> bytes:
         import struct as _s
 
-        from tidb_cdc_spark.functions.multimodal import _png_chunk
+        from tidb_cdc_spark.functions.media_decode import _png_chunk
 
         tiff = (
             b"II*\x00" + _s.pack("<I", 8) + _s.pack("<H", 1)
@@ -444,7 +441,7 @@ class TestPngExifOrientation:
         return raw[:i] + _png_chunk(b"eXIf", tiff) + raw[i:]
 
     def test_all_eight_orientations_normalize_exactly(self):
-        from tidb_cdc_spark.functions.multimodal import _encode_png_ex
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (12, 9)).astype(np.int64)
         inv = {
@@ -462,10 +459,8 @@ class TestPngExifOrientation:
             assert (out == g).all(), o  # PNG is lossless: exact
 
     def test_malformed_exif_falls_back_upright(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_png_ex,
-            _png_chunk,
-        )
+        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)
         raw = _encode_png_ex(g, 0, 8)
@@ -485,10 +480,8 @@ class TestAnimatedGif:
         return (a // 30 * 30).astype(np.int64)
 
     def test_delta_encoded_animation_composes_exactly(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_gif_anim,
-            decode_gif_frames,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_gif_frames
+        from tidb_cdc_spark.functions.media_synth import _encode_gif_anim
 
         rng = _rng()
         f0 = rng.integers(0, 4, (24, 18)).astype(np.int64) * 60 + 30
@@ -506,10 +499,8 @@ class TestAnimatedGif:
         assert (frames[2] == f2).all()
 
     def test_disposal_methods(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_gif_anim,
-            decode_gif_frames,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_gif_frames
+        from tidb_cdc_spark.functions.media_synth import _encode_gif_anim
 
         base = np.full((8, 8), 100, dtype=np.int64)
         patch = np.full((4, 4), 0, dtype=np.int64)
@@ -533,7 +524,7 @@ class TestAnimatedGif:
         assert (fr[2][2:6, 2:6] == 100).all()
 
     def test_single_image_gif_is_one_frame_equal_to_image_path(self):
-        from tidb_cdc_spark.functions.multimodal import decode_gif_frames
+        from tidb_cdc_spark.functions.media_decode import decode_gif_frames
 
         g = np.where(
             _rng().integers(0, 2, size=(16, 16)) == 1, 180, 60
@@ -546,10 +537,8 @@ class TestAnimatedGif:
     def test_out_of_screen_frame_and_truncation_rejected(self):
         import struct
 
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_gif_anim,
-            decode_gif_frames,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_gif_frames
+        from tidb_cdc_spark.functions.media_synth import _encode_gif_anim
 
         base = np.full((8, 8), 100, dtype=np.int64)
         p = _encode_gif_anim([(base, 0, 0, 1), (base, 4, 4, 1)])
@@ -562,10 +551,8 @@ class TestAnimatedGif:
     def test_trim_shares_composed_hashes(self):
         """The audit lemma: a trimmed delta re-encode shares all its
         composed-frame hashes with the original's tail frames."""
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_gif_anim,
-            decode_gif_frames,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_gif_frames
+        from tidb_cdc_spark.functions.media_synth import _encode_gif_anim
 
         idx = np.arange(16) // 2
         bit_idx = (idx[:, None] * 8 + idx[None, :]) % 16
@@ -588,10 +575,8 @@ class TestAnimatedGif:
         assert full[1:] == trim  # shift-invariant, trim-aligned
 
     def test_video_frame_hashes_routes_gif(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
-            synth_gif_anim_media,
-            video_frame_hashes,
-        )
+        from tidb_cdc_spark.functions.media_hash import video_frame_hashes
+        from tidb_cdc_spark.functions.media_synth import synth_gif_anim_media
 
         ids = spark.createDataFrame(
             [(1, 3, 0, 0), (2, 3, 1, 20)],
@@ -611,10 +596,8 @@ class TestAnimationInfo:
     duration sums (animated WebP) without decoding any frame."""
 
     def test_gif_delays_summed(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_gif_anim,
-            gif_animation_info,
-        )
+        from tidb_cdc_spark.functions.media_probe import gif_animation_info
+        from tidb_cdc_spark.functions.media_synth import _encode_gif_anim
 
         g = np.full((6, 8), 120, dtype=np.int64)
         p = _encode_gif_anim(
@@ -628,11 +611,11 @@ class TestAnimationInfo:
         assert gif_animation_info(p[: len(p) - 9]) == (3, 3190)  # no trailer: accepted like the decoder
 
     def test_webp_anmf_durations_summed(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_webp_anim,
+        from tidb_cdc_spark.functions.media_probe import (
             parse_image_header,
             webp_animation_info,
         )
+        from tidb_cdc_spark.functions.media_synth import _encode_webp_anim
         from tidb_cdc_spark.functions.webp import encode_webp_lossless
 
         g = np.full((6, 8), 120, dtype=np.int64)
@@ -646,10 +629,8 @@ class TestAnimationInfo:
         assert webp_animation_info(w[: len(w) - 4]) is None
 
     def test_probe_media_fills_animation_duration(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
-            probe_media,
-            synth_anim_probe_media,
-        )
+        from tidb_cdc_spark.functions.media_probe import probe_media
+        from tidb_cdc_spark.functions.media_synth import synth_anim_probe_media
 
         ids = spark.createDataFrame([(0,), (1,), (6,)], "doc_id long")
         rows = {
@@ -669,10 +650,10 @@ class TestAnimatedWebp:
     the WebP twin of TestAnimatedGif."""
 
     def test_rect_composition_exact(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_webp_anim,
+        from tidb_cdc_spark.functions.media_decode import (
             decode_webp_anim_frames,
         )
+        from tidb_cdc_spark.functions.media_synth import _encode_webp_anim
 
         rng = _rng()
         f0 = rng.integers(0, 256, (12, 16)).astype(np.int64)
@@ -689,10 +670,10 @@ class TestAnimatedWebp:
         assert (fr[2] == exp).all()
 
     def test_dispose_to_background_is_white(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_webp_anim,
+        from tidb_cdc_spark.functions.media_decode import (
             decode_webp_anim_frames,
         )
+        from tidb_cdc_spark.functions.media_synth import _encode_webp_anim
 
         f0 = np.full((12, 16), 100, dtype=np.int64)
         patch = np.full((4, 6), 0, dtype=np.int64)
@@ -707,10 +688,10 @@ class TestAnimatedWebp:
         assert fr[2][0, 0] == 7
 
     def test_rejects(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_webp_anim,
+        from tidb_cdc_spark.functions.media_decode import (
             decode_webp_anim_frames,
         )
+        from tidb_cdc_spark.functions.media_synth import _encode_webp_anim
         from tidb_cdc_spark.functions.webp import encode_webp_lossless
 
         f0 = np.full((12, 16), 100, dtype=np.int64)
@@ -727,10 +708,8 @@ class TestAnimatedWebp:
         ) is None
 
     def test_trim_shares_composed_hashes_and_routing(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
-            synth_webp_anim_media,
-            video_frame_hashes,
-        )
+        from tidb_cdc_spark.functions.media_hash import video_frame_hashes
+        from tidb_cdc_spark.functions.media_synth import synth_webp_anim_media
 
         ids = spark.createDataFrame(
             [(1, 5, 0, 0), (2, 5, 1, 20)],
@@ -750,10 +729,8 @@ class TestTiffDecode:
     Orientation tag, and the fail-closed rejects."""
 
     def test_envelope_roundtrips(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_tiff,
-            decode_tiff_pixels,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_tiff_pixels
+        from tidb_cdc_spark.functions.media_synth import _encode_tiff
 
         g = _rng().integers(0, 256, (33, 47)).astype(np.int64)
         cases = [
@@ -774,10 +751,8 @@ class TestTiffDecode:
     def test_orientation_normalizes(self):
         import numpy as np
 
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_tiff,
-            decode_tiff_pixels,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_tiff_pixels
+        from tidb_cdc_spark.functions.media_synth import _encode_tiff
 
         g = _rng().integers(0, 256, (24, 24)).astype(np.int64)
         inv = {
@@ -792,11 +767,9 @@ class TestTiffDecode:
             assert got is not None and (got == g).all(), o
 
     def test_probe_and_boundary_route(self):
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_tiff,
-            decode_pixels,
-            parse_image_header,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_pixels
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
+        from tidb_cdc_spark.functions.media_synth import _encode_tiff
 
         g = _rng().integers(0, 256, (16, 20)).astype(np.int64)
         p = _encode_tiff(g)
@@ -806,10 +779,8 @@ class TestTiffDecode:
     def test_rejects_fail_closed(self):
         import struct
 
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_tiff,
-            decode_tiff_pixels,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_tiff_pixels
+        from tidb_cdc_spark.functions.media_synth import _encode_tiff
 
         g = _rng().integers(0, 256, (16, 16)).astype(np.int64)
         p = _encode_tiff(g)
@@ -831,11 +802,9 @@ class TestTiffDecode:
     def test_cross_codec_hash_identity(self):
         """A TIFF re-save of a BMP/PNG image hashes IDENTICALLY —
         the cross-codec claim extended to the sixth format."""
-        from tidb_cdc_spark.functions.multimodal import (
-            _encode_tiff,
-            ahash64,
-            decode_pixels,
-        )
+        from tidb_cdc_spark.functions.media_decode import decode_pixels
+        from tidb_cdc_spark.functions.media_hash import ahash64
+        from tidb_cdc_spark.functions.media_synth import _encode_tiff
 
         idx = np.arange(64) // 8
         bit_idx = (idx[:, None] * 8 + idx[None, :]) % 8

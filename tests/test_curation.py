@@ -209,6 +209,67 @@ class TestConnectedComponents:
         assert by_id[4] == (4, True)
 
 
+def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Driver-side union-find ground truth: node -> component min."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for v in (a, b):
+            parent.setdefault(v, v)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+class TestCcFusedInit:
+    @pytest.mark.parametrize(
+        "name,edges",
+        [
+            # chain: diameter n-1 — the topology the pointer jump and
+            # the fused first round must not miscount on
+            ("chain", [(i, i + 1) for i in range(40)]),
+            ("star", [(0, i) for i in range(1, 30)]),
+            (
+                "two_components_plus_selfloop",
+                [(1, 2), (2, 3), (10, 11), (11, 12), (5, 5)],
+            ),
+            (
+                "dup_edges_reversed",
+                [(7, 3), (3, 7), (7, 3), (9, 3), (20, 21)],
+            ),
+        ],
+    )
+    def test_labels_equal_union_find(self, spark, name, edges):
+        from tidb_cdc_spark.functions.clusters import connected_components
+
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {
+            r["id"]: r["cluster_id"]
+            for r in connected_components(df).collect()
+        }
+        assert got == _uf_components(edges), name
+
+    def test_single_edge_converges_in_one_round(self, spark):
+        """The fused init IS the fixpoint for a single pair — the
+        loop's first round must detect 0 changes and return."""
+        from tidb_cdc_spark.functions import clusters as C
+
+        df = spark.createDataFrame([(5, 9)], "id_a long, id_b long")
+        out = C.connected_components(df)
+        assert {(r["id"], r["cluster_id"]) for r in out.collect()} == {
+            (5, 5),
+            (9, 5),
+        }
+        assert C.LAST_ROUNDS == 1
+
+
 class TestPiiScrub:
     def test_counts_and_redaction(self, spark):
         txt = (

@@ -873,7 +873,7 @@ class TestPhashAdmissionSink:
 
     def _media(self, spark, rows):
         """rows: (media_id, pattern, shift) → real BMP batch."""
-        from tidb_cdc_spark.functions.multimodal import synth_bmp_pixel_media
+        from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
 
         df = spark.createDataFrame(
             rows, "media_id long, pattern int, shift int"
@@ -930,7 +930,7 @@ class TestPhashAdmissionSink:
         GIF, so a COMPRESSED re-encode of an admitted BMP — byte-
         disjoint, exact-digest-invisible — is perceptually screened
         at ingest with no sink change."""
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_synth import (
             synth_codec_pixel_media,
         )
         from tidb_cdc_spark.streaming import PhashAdmissionSink
@@ -994,7 +994,7 @@ class TestPhashAdmissionSink:
         sink.process(
             self._media(spark, [(i, 1 + i, 0) for i in range(10)]), 0
         )
-        from tidb_cdc_spark.functions.multimodal import perceptual_hashes
+        from tidb_cdc_spark.functions.media_hash import perceptual_hashes
 
         probe = self._media(spark, [(100, 3, 20)])
         sig = perceptual_hashes(probe).select(
@@ -1431,7 +1431,7 @@ class TestAudioWindowAdmissionSink:
 
     def _media(self, spark, rows):
         """rows: (media_id, base, skip, gain) → real WAV batch."""
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_synth import (
             synth_wav_windowed_media,
         )
 

@@ -16,7 +16,8 @@ from tidb_cdc_spark.functions.jpeg import (
     encode_jpeg,
     encode_jpeg_progressive,
 )
-from tidb_cdc_spark.functions.multimodal import ahash64, decode_pixels
+from tidb_cdc_spark.functions.media_decode import decode_pixels
+from tidb_cdc_spark.functions.media_hash import ahash64
 
 
 def _rng():
@@ -359,8 +360,8 @@ class TestBoundary:
     def test_synth_leg(self, spark):
         """Spark-side: jpeg and jpeg_rgb legs of the codec synth
         hash identically to each other and to the formula."""
-        from tidb_cdc_spark.functions.multimodal import (
-            perceptual_hashes,
+        from tidb_cdc_spark.functions.media_hash import perceptual_hashes
+        from tidb_cdc_spark.functions.media_synth import (
             synth_codec_pixel_media,
         )
 

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.functions import dedup as D
-from tidb_cdc_spark.functions import multimodal as M
+from tidb_cdc_spark.functions import media_probe as M
 from tidb_cdc_spark.functions import similarity as S
 from tidb_cdc_spark.functions import text as T
 
@@ -665,7 +665,7 @@ class TestImageHeaderParsing:
         )
 
     def test_real_headers_parse_exactly(self):
-        from tidb_cdc_spark.functions.multimodal import parse_image_header
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
 
         assert parse_image_header(self._png(640, 480)) == (
             "image/png", 640, 480,
@@ -688,7 +688,7 @@ class TestImageHeaderParsing:
         """The pipeline path: real container bytes flow through
         extract_features and come out with TRUE dimensions, not the
         hash-derived fake."""
-        from tidb_cdc_spark.functions.multimodal import extract_features
+        from tidb_cdc_spark.functions.media_probe import extract_features
 
         rows = [
             (1, "image", "image/png", None, None, None,
@@ -698,7 +698,7 @@ class TestImageHeaderParsing:
             (3, "image", "application/octet-stream", None, None, None,
              bytearray(b"opaque-unknown-bytes")),
         ]
-        from tidb_cdc_spark.functions.multimodal import MEDIA_SCHEMA
+        from tidb_cdc_spark.functions.media_probe import MEDIA_SCHEMA
 
         media = spark.createDataFrame(rows, MEDIA_SCHEMA)
         out = {
@@ -743,7 +743,7 @@ class TestMediaHeaderParsing:
         return ftyp + moov
 
     def test_wav_and_mp4_durations_parse_exactly(self):
-        from tidb_cdc_spark.functions.multimodal import parse_media_header
+        from tidb_cdc_spark.functions.media_probe import parse_media_header
 
         assert parse_media_header(self._wav(3)) == ("audio/wav", 3000)
         assert parse_media_header(self._mp4(42)) == ("video/mp4", 42000)
@@ -759,7 +759,7 @@ class TestMediaHeaderParsing:
 
 class TestProbeMedia:
     def test_fills_null_metadata_from_real_headers(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_probe import (
             MEDIA_SCHEMA,
             probe_media,
         )
@@ -792,7 +792,7 @@ class TestHeaderParserEdgeCases:
     def test_truncated_mp4_returns_none_not_garbage(self):
         import struct
 
-        from tidb_cdc_spark.functions.multimodal import parse_media_header
+        from tidb_cdc_spark.functions.media_probe import parse_media_header
 
         # v1 mvhd truncated right after the timescale
         mvhd_v1 = b"\x01\x00\x00\x00" + b"\x00" * 16 + struct.pack(">I", 600)
@@ -810,7 +810,7 @@ class TestHeaderParserEdgeCases:
     def test_jpeg_fill_bytes_before_marker(self):
         import struct
 
-        from tidb_cdc_spark.functions.multimodal import parse_image_header
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
 
         sof0 = (
             b"\xff\xc0"
@@ -826,7 +826,7 @@ class TestHeaderParserEdgeCases:
     def test_os2_core_header_bmp(self):
         import struct
 
-        from tidb_cdc_spark.functions.multimodal import parse_image_header
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
 
         core = (
             b"BM" + b"\x00" * 12
@@ -840,7 +840,7 @@ class TestHeaderParserEdgeCases:
         assert parse_image_header(weird) is None
 
     def test_probe_media_null_payload_passes_through(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_probe import (
             MEDIA_SCHEMA,
             probe_media,
         )

@@ -24,14 +24,14 @@ from tidb_cdc_spark.functions.jpeg import (
     mjpeg_ensure_dht,
     mjpeg_strip_dht,
 )
-from tidb_cdc_spark.functions.multimodal import (
+from tidb_cdc_spark.functions.media_decode import decode_avi_frames
+from tidb_cdc_spark.functions.media_hash import (
     ahash64,
-    decode_avi_frames,
-    parse_avi_header,
-    synth_mjpeg_avi_media,
     video_frame_hashes,
     video_near_dup_pairs,
 )
+from tidb_cdc_spark.functions.media_probe import parse_avi_header
+from tidb_cdc_spark.functions.media_synth import synth_mjpeg_avi_media
 
 
 def _rng():

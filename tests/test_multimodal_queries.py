@@ -6,11 +6,13 @@ walks and marker scans recover."""
 import pytest
 from pyspark.sql import functions as F
 
-from tidb_cdc_spark.functions.multimodal import (
+from tidb_cdc_spark.functions.media_probe import (
     frame_sample_plan,
     parse_image_header,
     parse_media_header,
     probe_media,
+)
+from tidb_cdc_spark.functions.media_synth import (
     synth_container_media,
     synth_image_media,
 )
@@ -162,7 +164,7 @@ def test_decode_image_dims_with_pil_when_importable():
     import struct
     import zlib
 
-    from tidb_cdc_spark.functions.multimodal import decode_image_dims
+    from tidb_cdc_spark.functions.media_probe import decode_image_dims
 
     w, h = 5, 3
     ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
@@ -187,8 +189,37 @@ def test_frame_plan_short_video_gets_one_frame(spark):
     """duration < every_ms must yield exactly one frame at t=0 (the
     sequence floor), matching the oracle's greatest(n, 1)."""
     rows = [(1, "video", "video/mp4", None, None, 180, None)]
-    from tidb_cdc_spark.functions.multimodal import MEDIA_SCHEMA
+    from tidb_cdc_spark.functions.media_probe import MEDIA_SCHEMA
 
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = frame_sample_plan(media, every_ms=250).collect()
     assert [(r.media_id, r.frame_ts_ms) for r in got] == [(1, 0)]
+
+
+class TestSynthFanOut:
+    def test_synth_output_is_spread(self, spark):
+        """A 1-split id source must NOT serialize the synth pass on
+        one task: the synth output's rows span multiple partitions
+        (bounded by the session's parallelism)."""
+        ids = spark.range(0, 2000, 1, 1).select(
+            F.col("id").alias("media_id")
+        )
+        media = synth_container_media(ids, "media_id")
+        nparts = (
+            media.select(F.spark_partition_id().alias("p"))
+            .distinct()
+            .count()
+        )
+        expect = min(4, spark.sparkContext.defaultParallelism)
+        assert nparts >= expect, f"synth ran on {nparts} partition(s)"
+
+    def test_spread_preserves_rows(self, spark):
+        from tidb_cdc_spark.session import fan_out
+
+        slim = spark.range(0, 500, 1, 1).select(
+            F.col("id").alias("media_id")
+        )
+        out = fan_out(slim, spark)
+        assert sorted(r["media_id"] for r in out.collect()) == list(
+            range(500)
+        )

@@ -18,14 +18,14 @@ from __future__ import annotations
 
 import numpy as np
 
-from tidb_cdc_spark.functions.multimodal import (
+from tidb_cdc_spark.functions.media_decode import decode_bmp_pixels
+from tidb_cdc_spark.functions.media_hash import (
     ahash64,
-    decode_bmp_pixels,
     dhash64,
     perceptual_hashes,
     phash_near_dup_pairs,
-    synth_bmp_pixel_media,
 )
+from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
 
 W, H = 70, 64
 
@@ -72,7 +72,7 @@ def test_dhash_distinctness_pinned():
 
 
 def test_bmp_roundtrip_both_orientations(spark):
-    from tidb_cdc_spark.functions.multimodal import parse_image_header
+    from tidb_cdc_spark.functions.media_probe import parse_image_header
 
     rows = [(1, 7, 0), (2, 8, 20), (3, 101, 0)]  # odd v = top-down
     expected = {mid: (v, d) for mid, v, d in rows}
@@ -109,7 +109,7 @@ def test_truncated_payload_rejected(spark):
 
 
 def test_perceptual_hashes_null_for_unrecognized(spark):
-    from tidb_cdc_spark.functions.multimodal import synthesize_media
+    from tidb_cdc_spark.functions.media_probe import synthesize_media
 
     hashed = perceptual_hashes(synthesize_media(spark, 6)).collect()
     assert len(hashed) == 6
@@ -199,7 +199,7 @@ def _block16_gray(word: int, delta: int, eps: int, w: int = 70, h: int = 64):
 def test_dct_phash_invariance_injectivity_margin():
     from itertools import combinations
 
-    from tidb_cdc_spark.functions.multimodal import dct_phash64
+    from tidb_cdc_spark.functions.media_hash import dct_phash64
 
     words = [1 + (pid * 643) % 65534 for pid in range(101)]
     assert len(set(words)) == 101
@@ -218,7 +218,7 @@ def test_dct_phash_invariance_injectivity_margin():
 
 
 def test_dct_phash_small_image_returns_none():
-    from tidb_cdc_spark.functions.multimodal import dct_phash64
+    from tidb_cdc_spark.functions.media_hash import dct_phash64
 
     assert dct_phash64(np.full((16, 70), 100, dtype=np.int64)) is None
     assert dct_phash64(np.full((64, 16), 100, dtype=np.int64)) is None
@@ -227,11 +227,8 @@ def test_dct_phash_small_image_returns_none():
 def test_dct_phashes_roundtrip_and_null_contract(spark):
     """Spark path: synthesized block-16 BMPs hash to the numpy
     reference; unrecognized payloads get NULL (not a fake value)."""
-    from tidb_cdc_spark.functions.multimodal import (
-        dct_phash64,
-        dct_phashes,
-        synth_bmp_block16_media,
-    )
+    from tidb_cdc_spark.functions.media_hash import dct_phash64, dct_phashes
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_block16_media
 
     ids = spark.createDataFrame(
         [(1, 777, 0, 0), (2, 777, 20, 6), (3, 31000, 0, 0)],
@@ -252,7 +249,7 @@ def test_decode_pixels_boundary_bmp_and_null():
     """decode_pixels prefers the deterministic pure-Python BMP path
     and returns None (the documented NULL-hash path) for compressed
     formats when no codec library exists."""
-    from tidb_cdc_spark.functions.multimodal import decode_pixels
+    from tidb_cdc_spark.functions.media_decode import decode_pixels
 
     import struct
 
@@ -275,7 +272,7 @@ def test_decode_pixels_boundary_bmp_and_null():
         + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(px), 0, 0, 0, 0)
         + bytes(px)
     )
-    from tidb_cdc_spark.functions.multimodal import decode_bmp_pixels
+    from tidb_cdc_spark.functions.media_decode import decode_bmp_pixels
 
     a, b = decode_pixels(payload), decode_bmp_pixels(payload)
     assert a is not None and (a == b).all()
@@ -292,11 +289,9 @@ def test_jpeg_decodes_to_same_ahash_as_bmp_twin():
     test_pil_absent_in_container_pins_skip_reason)."""
     import pytest
 
-    from tidb_cdc_spark.functions.multimodal import (
-        _PIL_Image,
-        ahash64,
-        decode_pixels,
-    )
+    from tidb_cdc_spark.functions.media_decode import decode_pixels
+    from tidb_cdc_spark.functions.media_hash import ahash64
+    from tidb_cdc_spark.functions.media_probe import _PIL_Image
 
     if _PIL_Image is None:
         pytest.skip(
@@ -321,7 +316,7 @@ def test_pil_absent_in_container_pins_skip_reason():
     """Pin the environment fact the guarded test's skip rests on: if
     PIL ever becomes importable here, this fails and the JPEG-twin
     test above must be the one running instead."""
-    from tidb_cdc_spark.functions.multimodal import _PIL_Image
+    from tidb_cdc_spark.functions.media_probe import _PIL_Image
 
     try:
         import PIL  # noqa: F401
@@ -346,10 +341,7 @@ def test_dct_plant_coefficients_clear_rounding_boundaries():
     that margin is empirically FALSE for this family — 200 of the
     12,928 coefficients sit closer — so the guard pins the margin
     that is actually true and still conclusive.)"""
-    from tidb_cdc_spark.functions.multimodal import (
-        _box_means,
-        _dct32_basis,
-    )
+    from tidb_cdc_spark.functions.media_hash import _box_means, _dct32_basis
 
     c = _dct32_basis()
     worst = 1.0

@@ -62,7 +62,7 @@ class TestShuffleBudget:
 
 class TestMultimodalPruning:
     def test_metadata_query_skips_payload(self, spark, tmp_path):
-        from tidb_cdc_spark.functions.multimodal import synthesize_media
+        from tidb_cdc_spark.functions.media_probe import synthesize_media
 
         path = str(tmp_path / "media")
         synthesize_media(spark, n=8).write.parquet(path)

@@ -490,7 +490,7 @@ def test_near_dup_process(spark, tmp_path):
 
 @pytest.mark.slow
 def test_phash_process(spark, tmp_path):
-    from tidb_cdc_spark.functions.multimodal import synth_bmp_pixel_media
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
     from tidb_cdc_spark.streaming import PhashAdmissionSink as S
 
     def media(rows_):
@@ -512,7 +512,7 @@ def test_phash_process(spark, tmp_path):
 
 @pytest.mark.slow
 def test_audio_window_process(spark, tmp_path):
-    from tidb_cdc_spark.functions.multimodal import synth_wav_windowed_media
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
     from tidb_cdc_spark.streaming import AudioWindowAdmissionSink as S
 
     def media(rows_):

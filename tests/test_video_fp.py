@@ -9,14 +9,14 @@ import struct
 
 import numpy as np
 
-from tidb_cdc_spark.functions.multimodal import (
+from tidb_cdc_spark.functions.media_decode import decode_avi_frames
+from tidb_cdc_spark.functions.media_hash import (
     ahash64,
-    decode_avi_frames,
-    parse_avi_header,
-    synth_avi_media,
     video_frame_hashes,
     video_near_dup_pairs,
 )
+from tidb_cdc_spark.functions.media_probe import parse_avi_header
+from tidb_cdc_spark.functions.media_synth import synth_avi_media
 
 W = H = 16
 
@@ -141,6 +141,6 @@ def test_viral_frame_guard_drops_bucket(spark):
 
 
 def test_frame_hashes_skip_non_video(spark):
-    from tidb_cdc_spark.functions.multimodal import synthesize_media
+    from tidb_cdc_spark.functions.media_probe import synthesize_media
 
     assert video_frame_hashes(synthesize_media(spark, 6)).count() == 0

@@ -10,7 +10,8 @@ import struct
 import numpy as np
 import pytest
 
-from tidb_cdc_spark.functions.multimodal import ahash64, decode_pixels
+from tidb_cdc_spark.functions.media_decode import decode_pixels
+from tidb_cdc_spark.functions.media_hash import ahash64
 from tidb_cdc_spark.functions.webp import (
     _DIST_MAP,
     _inv_predictor,
@@ -219,7 +220,7 @@ class TestHeaderProbe:
     crawl metadata pass needs dims without a codec library."""
 
     def test_vp8l_dims(self):
-        from tidb_cdc_spark.functions.multimodal import parse_image_header
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
 
         for h, w in [(1, 1), (13, 17), (480, 640), (16383, 16383)]:
             g = np.zeros((min(h, 8), min(w, 8)), dtype=np.int64)
@@ -234,7 +235,7 @@ class TestHeaderProbe:
             assert got == ("image/webp", w, h)
 
     def test_vp8_lossy_dims(self):
-        from tidb_cdc_spark.functions.multimodal import parse_image_header
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
 
         body = bytes(3) + b"\x9d\x01\x2a" + struct.pack("<HH", 640, 480)
         body += bytes(10)
@@ -245,7 +246,7 @@ class TestHeaderProbe:
         assert parse_image_header(p) == ("image/webp", 640, 480)
 
     def test_vp8x_dims(self):
-        from tidb_cdc_spark.functions.multimodal import parse_image_header
+        from tidb_cdc_spark.functions.media_probe import parse_image_header
 
         body = bytes(4) + (639).to_bytes(3, "little") + (479).to_bytes(
             3, "little"
@@ -267,7 +268,7 @@ class TestBoundary:
     def test_cross_codec_hash_equality(self):
         """The same pixels through WebP (all variants), PNG and BMP
         must produce ONE aHash — the cross-codec re-encode claim."""
-        from tidb_cdc_spark.functions.multimodal import _encode_png
+        from tidb_cdc_spark.functions.media_synth import _encode_png
 
         vals = np.array([40, 200])
         g = vals[_rng().integers(0, 2, (64, 70))].astype(np.int64)
@@ -279,8 +280,8 @@ class TestBoundary:
         assert len(hashes) == 1
 
     def test_synth_webp_legs(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
-            perceptual_hashes,
+        from tidb_cdc_spark.functions.media_hash import perceptual_hashes
+        from tidb_cdc_spark.functions.media_synth import (
             synth_codec_pixel_media,
         )
 

@@ -362,7 +362,7 @@ class TestLossyVp8Decode:
     than the codec math."""
 
     def test_real_lossy_stream_decodes_close_to_source(self):
-        from tidb_cdc_spark.functions.multimodal import decode_pixels
+        from tidb_cdc_spark.functions.media_decode import decode_pixels
         from tidb_cdc_spark.functions.webp import (
             decode_webp_lossless_pixels,
             decode_webp_lossy_pixels,
@@ -408,7 +408,7 @@ class TestLossyVp8Decode:
         WebPEncodeRGBA(q=95) → decode chain bit-exactly, for a
         pattern sample and both shifts (the full 254×2 sweep was
         run once during development: 0 mismatches)."""
-        from tidb_cdc_spark.functions.multimodal import ahash64, dhash64
+        from tidb_cdc_spark.functions.media_hash import ahash64, dhash64
         from tidb_cdc_spark.functions.webp import (
             decode_webp_lossy_pixels,
             encode_webp_lossy,
@@ -439,7 +439,7 @@ class TestLossyVp8Decode:
             WW.encode_webp_lossy(np.zeros((8, 8), dtype=np.int64))
 
     def test_synth_leg_emits_real_vp8(self, spark):
-        from tidb_cdc_spark.functions.multimodal import (
+        from tidb_cdc_spark.functions.media_synth import (
             synth_codec_pixel_media,
         )
 

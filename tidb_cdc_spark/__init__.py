@@ -15,7 +15,8 @@ see ``/root/reference/cdc_manager.go``) as an idiomatic Spark engine:
                  sessionize, dedup).
 - ``functions/`` scalar/vector function library: text analysis,
                  similarity search, MinHash/SimHash dedup,
-                 multimodal column plumbing.
+                 multimodal columns (``media_probe`` / ``media_decode``
+                 / ``media_hash`` / ``media_synth``).
 - ``plans/``     plan-inspection helpers (pushdown / broadcast /
                  codegen assertions) used by tests to pin the
                  physical plans we want at 100 TB scale.

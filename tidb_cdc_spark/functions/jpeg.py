@@ -265,6 +265,8 @@ def decode_jpeg_pixels(payload: bytes):
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 prog.
             progressive = marker == 0xC2
+            if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+                return None  # component specs cut short
             prec, h, w, ncomp = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
             if prec != 8 or ncomp not in (1, 3) or w == 0 or h == 0:
                 return None
@@ -295,6 +297,8 @@ def decode_jpeg_pixels(payload: bytes):
             if sof is None:
                 return None
             h, w, comps = sof
+            if not seg or len(seg) != 1 + 2 * seg[0] + 3:
+                return None  # component selectors + Ss/Se/AhAl
             ns = seg[0]
             if not progressive:
                 if ns != len(comps):
@@ -310,7 +314,7 @@ def decode_jpeg_pixels(payload: bytes):
                     sel.append((dc_t, ac_t, q, comps[c][2], comps[c][3]))
                 return _decode_scan(p, pos + 2 + seglen, h, w, sel, dri)
             # --- progressive scan ---
-            if len(seg) != 1 + 2 * ns + 3 or not 1 <= ns <= len(comps):
+            if not 1 <= ns <= len(comps):
                 return None
             if coefs is None:
                 geom = _prog_geometry(h, w, comps)

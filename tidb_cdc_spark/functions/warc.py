@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tidb_cdc_spark.functions.media_synth import plant_rows
+
 __all__ = [
     "parse_warc_records",
     "parse_http_response",
@@ -458,22 +460,9 @@ def synth_warc_media(
             StructField("payload", BinaryType()),
         ]
     )
-    chunk = 512
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), chunk):
-                seg = pdf.iloc[lo : lo + chunk]
-                rows = [
-                    (int(m), _planted_warc_file(int(p), int(v), bodies))
-                    for m, p, v in zip(seg["media_id"], seg["_p"], seg["_v"])
-                ]
-                yield pd.DataFrame(
-                    rows, columns=["media_id", "payload"]
-                )
-
-    # fan the id-sized input out before the Python chain starts —
-    # same single-split rationale as multimodal._spread (guide §2.5)
-    from tidb_cdc_spark.functions.multimodal import _spread
-
-    return _spread(slim).mapInPandas(synth, schema=out_schema)
+    return plant_rows(
+        slim,
+        out_schema,
+        lambda mid, pid, variant: (mid, _planted_warc_file(pid, variant, bodies)),
+        chunk=512,
+    )

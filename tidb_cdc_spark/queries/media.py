@@ -4,7 +4,7 @@ pipelines, as fully value-oracled audits.
 
 Strategy: plant REAL container or codec bytes whose header fields and
 pixels derive from the id by fixed integer formulas
-(``functions/multimodal.py::synth_*``), run the REAL Arrow-batched
+(``functions/media_synth.py::synth_*``), run the REAL Arrow-batched
 probe or decode (``probe_media``/``decode_pixels`` under
 ``mapInPandas``), and compare the RECOVERED values against a DuckDB
 oracle computing the same formulas. A parser or codec regression
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tidb_cdc_spark.functions.multimodal import extract_features
+from tidb_cdc_spark.functions.media_probe import extract_features
 from tidb_cdc_spark.queries.corpus import _docs
 
 
@@ -69,10 +69,8 @@ ORDER BY media_id
 
 
 def _probed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_cdc_spark.functions.multimodal import (
-        probe_media,
-        synth_container_media,
-    )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_container_media
 
     # the planted-value contract is defined on non-negative ids:
     # Python's % (synth side) returns a non-negative residue while
@@ -134,7 +132,7 @@ def multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit durations that exist to exercise the parser, not to be
     exploded. Fully value-oracled: frame counts and timestamps
     derive from the recovered durations."""
-    from tidb_cdc_spark.functions.multimodal import frame_sample_plan
+    from tidb_cdc_spark.functions.media_probe import frame_sample_plan
 
     v0 = _probed(spark, sf_dir).filter(F.col("media_id") % 4 == 1)
     return frame_sample_plan(v0, every_ms=250).select(
@@ -169,10 +167,8 @@ def multimodal_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     height per row. Exact value oracle: DuckDB computes the same
     integer formulas; any divergence in endianness, header-size
     branch, abs(), or the marker scan flips the hash."""
-    from tidb_cdc_spark.functions.multimodal import (
-        probe_media,
-        synth_image_media,
-    )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_image_media
 
     # non-negative-id contract — see _probed's note
     ids = (
@@ -219,10 +215,8 @@ def multimodal_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct byte strings flips the value hash. Output:
     (mime, n_media, n_unique) — the dedup scorecard (total vs
     surviving representatives)."""
-    from tidb_cdc_spark.functions.multimodal import (
-        probe_media,
-        synth_image_media,
-    )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_image_media
 
     # non-negative-id contract — see _probed's note
     pids = (
@@ -298,11 +292,11 @@ def multimodal_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       because the planted clusters ARE the duplicate families being
       measured.
     """
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_bmp_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -410,11 +404,11 @@ def media_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes-in-pairs only. No Python past the sanctioned synth/hash
     Arrow passes."""
     from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_bmp_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -496,11 +490,11 @@ def media_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads never; output corpus-sized BY DESIGN (the audit
     artifact, a write job at 100 TB)."""
     from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_bmp_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -606,11 +600,11 @@ def audio_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, samples never; output corpus-sized BY DESIGN (the
     audit artifact a run writes next to the corpus)."""
     from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_near_dup_pairs,
         audio_window_hashes,
-        synth_wav_windowed_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -704,11 +698,11 @@ def video_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audio twin (digests + 28 B frame hashes, frames never
     shuffle; corpus-sized audit artifact by design)."""
     from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_avi_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_avi_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -798,11 +792,11 @@ def multimodal_audio_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably the pattern byte's replicated bits (injective, ≥8-bit
     margin, gain-invariant — ``synth_wav_pcm_media``), so every
     column derives from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_fingerprints,
         phash_near_dup_pairs,
-        synth_wav_pcm_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -891,12 +885,12 @@ def multimodal_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives from id arithmetic — including ``total_duration_ms``,
     which the REAL ``avih`` header parse recovers from the planted
     µs-per-frame × total-frames fields (40 ms × 8 or 7)."""
-    from tidb_cdc_spark.functions.multimodal import (
-        probe_media,
-        synth_avi_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_avi_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -991,12 +985,12 @@ def multimodal_audio_trim_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from id arithmetic — including ``total_duration_ms``, which the
     REAL RIFF parse recovers from the planted rate/data-length
     fields (64 ms per window: 512 or 384)."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_near_dup_pairs,
         audio_window_hashes,
-        probe_media,
-        synth_wav_windowed_media,
     )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1100,11 +1094,11 @@ def audio_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index (linear in total windows), CC is the
     checkpoint-truncated hash-min loop over nodes-in-pairs only."""
     from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_near_dup_pairs,
         audio_window_hashes,
-        synth_wav_windowed_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1192,11 +1186,11 @@ def video_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index (linear in total frames), CC is the
     checkpoint-truncated hash-min loop over nodes-in-pairs only."""
     from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_avi_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_avi_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1275,11 +1269,11 @@ def multimodal_dct_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     injective with min pairwise Hamming 4 > τ=3 (both pinned over
     the full domain in tests/test_phash.py), so every column derives
     from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         dct_phashes,
         phash_near_dup_pairs,
-        synth_bmp_block16_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_block16_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1360,7 +1354,7 @@ def phash_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No-silent-caps audit for the perceptual-hash banded join —
     what ``phash_near_dup_pairs``'s ``max_bucket_size`` guard
     excludes, reported over the SAME Manku ``(table, key)`` buckets
-    the join keys on (``functions/multimodal.py::phash_cap_report``;
+    the join keys on (``functions/media_hash.py::phash_cap_report``;
     ``winnow_cap_report`` is the template). Run here with cap=4 over
     the ``multimodal_phash_audit`` plant so the exclusions are
     non-trivial and DERIVABLE: within cluster ``pid = doc_id % 101``
@@ -1374,11 +1368,11 @@ def phash_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters (an identical-hash family floods ALL its tables — the
     equality is itself the structural statement), max_bucket =
     max m_pid — all pure id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_cap_report as _report,
-        synth_bmp_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1420,7 +1414,7 @@ FROM fam
 def video_frame_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No-silent-caps audit for the video inverted-index join — what
     ``video_near_dup_pairs``'s ``max_frame_freq`` viral-frame guard
-    excludes (``functions/multimodal.py::video_frame_cap_report``).
+    excludes (``functions/media_hash.py::video_frame_cap_report``).
     Run with cap=4 over the ``multimodal_video_audit`` plant so the
     exclusions derive from id arithmetic: cluster ``pid = doc_id %
     101`` plants n members of which the trimmed variants drop frame
@@ -1431,11 +1425,11 @@ def video_frame_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected_media = Σ n over clusters with n>4 (every member holds
     frames 1..7; n_full ≤ n makes the frame-0 term subsumed),
     total_fhashes = Σ (7 + [n_full>0]), max_freq = max n."""
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_avi_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_frame_cap_report as _report,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_avi_media
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1479,7 +1473,7 @@ FROM c
 def audio_window_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No-silent-caps audit for the audio inverted-index join — what
     ``audio_near_dup_pairs``'s ``max_window_freq`` viral-window
-    guard excludes (``functions/multimodal.py::
+    guard excludes (``functions/media_hash.py::
     audio_window_cap_report``), completing the cap-report family
     (winnow / phash / video / audio — every guarded join in the repo
     now has its exclusion report). Run with cap=4 over the
@@ -1491,11 +1485,11 @@ def audio_window_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     — whence capped_whashes = Σ (6·[n>4] + 2·[n_full>4]),
     affected_media = Σ n over clusters with n>4, total_whashes =
     Σ (6 + 2·[n_full>0]), max_freq = max n. Pure id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_window_cap_report as _report,
         audio_window_hashes,
-        synth_wav_windowed_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1551,10 +1545,8 @@ def multimodal_anim_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence in the GCE delay bytes, the VP8X flag/canvas fields,
     the ANMF 24-bit duration, or the even-padding walk flips the
     hash."""
-    from tidb_cdc_spark.functions.multimodal import (
-        probe_media,
-        synth_anim_probe_media,
-    )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_anim_probe_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1603,10 +1595,8 @@ def multimodal_audio_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas; any divergence in the bit unpacking, the syncsafe
     arithmetic, the Xing offset (mono side-info), or the bitrate
     table flips the hash."""
-    from tidb_cdc_spark.functions.multimodal import (
-        probe_media,
-        synth_audio_probe_media,
-    )
+    from tidb_cdc_spark.functions.media_probe import probe_media
+    from tidb_cdc_spark.functions.media_synth import synth_audio_probe_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1662,11 +1652,11 @@ def audio_g711_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     patterns × both gains × both laws (0 mismatches), so
     ``distinct_afp = n_clusters`` iff the expansion tables and the
     format-tag routing are right. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_fingerprints,
         phash_near_dup_pairs,
-        synth_wav_pcm_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1744,7 +1734,7 @@ def audio_adpcm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample path: `decode_wav_samples` decodes WAV block framing
     (per-block header predictor + step index, low-nibble-first
     groups) through the standard IMA step/index tables
-    (`multimodal.py::_ima_adpcm_decode`), pinned one-step-exact
+    (`media_decode.py::_ima_adpcm_decode`), pinned one-step-exact
     against stdlib ``audioop.adpcm2lin`` over EVERY (start index ×
     nibble) pair and stream-exact with carried state. Unlike G.711's
     memoryless table lookup, ADPCM is stateful and lossy-adaptive —
@@ -1759,11 +1749,11 @@ def audio_adpcm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tellings of one signal, so ``distinct_afp = n_clusters`` iff
     the block walk, the adaptive recurrence, and the format-tag
     routing are all right. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         audio_fingerprints,
         phash_near_dup_pairs,
-        synth_wav_pcm_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1863,11 +1853,11 @@ def multimodal_png_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``max_bucket_size=None`` because the planted clusters ARE the
       duplicate families being measured.
     """
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -1971,10 +1961,12 @@ def multimodal_codec_matrix_audit(
       ``max_bucket_size=None`` — the planted families are the
       signal.
     """
-    from tidb_cdc_spark.functions.multimodal import (
-        CODEC_LEGS,
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
+    )
+    from tidb_cdc_spark.functions.media_synth import (
+        CODEC_LEGS,
         synth_codec_pixel_media,
     )
     from tidb_cdc_spark.session import materialize
@@ -2079,11 +2071,11 @@ def multimodal_jpeg_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays exact) — with a +20 brightness shift (different DCs,
     different BYTES, same hash). Scorecard semantics identical to
     the PNG audit; all columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2187,10 +2179,12 @@ def multimodal_png_deep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``max_bucket_size=None`` — the planted families are the
       signal.
     """
-    from tidb_cdc_spark.functions.multimodal import (
-        PNG_DEEP_LEGS,
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
+    )
+    from tidb_cdc_spark.functions.media_synth import (
+        PNG_DEEP_LEGS,
         synth_codec_pixel_media,
     )
     from tidb_cdc_spark.session import materialize
@@ -2290,11 +2284,11 @@ def multimodal_jpeg_prog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift-invariant) carries through the multi-scan reassembly
     unchanged. Scorecard semantics identical to the baseline JPEG
     audit; all columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2385,11 +2379,11 @@ def multimodal_webp_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aHash lemma carries over exactly (byte-disjoint encodings,
     identical pixels). Scorecard semantics identical to the PNG
     audit; all columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2488,11 +2482,11 @@ def multimodal_exif_orientation_audit(
     / exact τ=3 pair counts all hold iff the tag parse AND the
     normalization transform are correct. All columns from id
     arithmetic alone."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2591,11 +2585,11 @@ def multimodal_webp_lossy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode → BT.601 reduction chain is correct — a lossy re-save of
     an image collapses onto its exact twin, the admission claim this
     branch exists for. All columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2677,7 +2671,7 @@ def animated_gif_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-GIF near-dup over REAL composed frames — the web's
     actual animation format reaching the shot-level path
     uncompressed AVI already has (`multimodal_video_audit`):
-    `decode_gif_frames` (functions/multimodal.py) LZW-decodes every
+    `decode_gif_frames` (functions/media_decode.py) LZW-decodes every
     rendering block and COMPOSES it onto the logical screen per
     GIF89a — the planted streams are DELTA-encoded (first frame a
     keyframe, later frames transparent-patched blocks), so each
@@ -2693,11 +2687,11 @@ def animated_gif_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every composed hash provably the word's replicated bits
     (injective over (pid, frame): pid·8+7 ≤ 823 ≪ 65534;
     shift-invariant), so all columns derive from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_gif_anim_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_gif_anim_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2767,7 +2761,7 @@ SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
 def animated_webp_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-WebP near-dup over REAL composed frames — completing
     the animation pair (`animated_gif_video_audit` is the GIF twin):
-    `decode_webp_anim_frames` (functions/multimodal.py) decodes each
+    `decode_webp_anim_frames` (functions/media_decode.py) decodes each
     ANMF's standalone VP8L bitstream with the conformance-verified
     pure decoder and composes rects per RFC 9649 (2-px-unit offsets,
     no-blend replace, dispose-to-white) — the planted streams are
@@ -2782,11 +2776,11 @@ def animated_webp_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. 16-bit frame words injective over (pid, frame)
     (pid·8+7 ≤ 855 ≪ 65534; shift-invariant); all columns from id
     arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_webp_anim_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_webp_anim_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2852,7 +2846,7 @@ SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
 
 def multimodal_tiff_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The baseline-TIFF audit — the last common still format joins
-    the codec family (`functions/multimodal.py::decode_tiff_pixels`:
+    the codec family (`functions/media_decode.py::decode_tiff_pixels`:
     both byte orders, multi-strip, photometric 0/1/2/3, 1/8/16-bit,
     RGBA-over-white, and the TIFF Orientation tag normalized through
     the shared `apply_exif_orientation`). Variant ``doc_id div 97 %
@@ -2865,11 +2859,11 @@ def multimodal_tiff_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly; ``distinct_ahash = n_clusters`` iff the IFD walk, strip
     assembly, endianness, photometric handling, and orientation
     normalization are all right. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import (
         perceptual_hashes,
         phash_near_dup_pairs,
-        synth_codec_pixel_media,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -2949,7 +2943,7 @@ SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
 def animated_apng_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-PNG near-dup over REAL composed frames — completing
     the web's animation trio (GIF and WebP are the r14 siblings):
-    `decode_apng_frames` (functions/multimodal.py) rewraps each
+    `decode_apng_frames` (functions/media_decode.py) rewraps each
     frame's fdAT zlib stream as a standalone PNG for the
     conformance-verified still decoder and composes fcTL sub-rects
     per the spec (sequence validation, dispose/blend ops, the
@@ -2965,11 +2959,11 @@ def animated_apng_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. 16-bit frame words injective over (pid, frame)
     (pid·8+7 ≤ 1111 ≪ 65534; shift-invariant); all columns from id
     arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_apng_anim_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_apng_anim_media
     from tidb_cdc_spark.session import materialize
 
     planted = (
@@ -3039,7 +3033,7 @@ SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
 def multimodal_mjpeg_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJPEG near-dup over REAL compressed frames — the dominant
     real-world AVI codec joins the video frame path
-    (`functions/multimodal.py::decode_avi_frames`, ``00dc`` chunks):
+    (`functions/media_decode.py::decode_avi_frames`, ``00dc`` chunks):
     each frame is a standalone baseline JPEG decoded with the
     conformance-verified pure decoder, and the OpenDML "AVI1"
     DHT-LESS frame form is decoded through the T.81 K.3 fixed-table
@@ -3059,11 +3053,11 @@ def multimodal_mjpeg_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame words keep every hash provably the word's replicated bits
     (injective over (pid, frame): pid·8+7 ≤ 911 ≪ 65534;
     shift-invariant), so all columns derive from id arithmetic."""
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_mjpeg_avi_media,
+    from tidb_cdc_spark.functions.media_hash import (
         video_frame_hashes,
         video_near_dup_pairs,
     )
+    from tidb_cdc_spark.functions.media_synth import synth_mjpeg_avi_media
     from tidb_cdc_spark.session import materialize
 
     planted = (

@@ -174,8 +174,9 @@ def materialize(df):
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def fan_out(df, spark: SparkSession, partitions: int | None = None):
-    """Round-robin repartition to restore scan parallelism.
+def fan_out(df, spark: SparkSession):
+    """Round-robin repartition to restore scan parallelism in front
+    of a CPU-heavy per-row pipeline.
 
     The local testdata parquet files each hold ONE row group, so a
     scan yields a single input split and every downstream narrow
@@ -183,22 +184,40 @@ def fan_out(df, spark: SparkSession, partitions: int | None = None):
     this (a Kafka topic has N partitions; a 100 TB table has ~10⁵
     files/row-groups), so this is a bench-environment correction,
     not a scale crutch: use it ONLY in front of CPU-heavy per-row
-    pipelines (JSON parse, hashing, pandas UDFs) where the one-time
+    pipelines (JSON parse, hashing, pandas UDFs, the media
+    planters' synth → decode → hash chains) where the one-time
     shuffle of the raw rows is trivially repaid. Scan-light
     aggregations should NOT fan out — the shuffle would cost more
     than the single-split scan.
+
+    The target is ``max(defaultParallelism, existing split count)``:
+    a bare ``repartition(defaultParallelism)`` would COLLAPSE a
+    source that already has more partitions than cores, capping the
+    pipeline's parallelism with no straggler slack. Reading the
+    split count plans the input subtree; for the scan-shaped inputs
+    this sits in front of, no job runs. The
+    exchange is KEYLESS round-robin (deterministic under retries via
+    Spark's sort-before-repartition, SPARK-23207), not a hash
+    repartition: a key-matched layout would be reused straight
+    through a later join on that key, pinning every downstream
+    aggregate at ``n`` near-empty tasks and blocking AQE's
+    size-based coalesce.
     """
-    n = partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
+    try:
+        n = max(n, df.rdd.getNumPartitions())
+    except Exception:
+        pass  # planning hiccup — fall back to the core-count target
     return df.repartition(n)
 
 
-def fan_out_by(df, spark: SparkSession, *cols, partitions: int | None = None):
+def fan_out_by(df, spark: SparkSession, *cols):
     """Hash-partition fan-out: like ``fan_out`` but clustered on
     ``cols``, so a downstream window/groupBy on the same key reuses
     the distribution instead of inserting a second exchange."""
     from pyspark.sql import functions as F
 
-    n = partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     return df.repartition(n, *[F.col(c) for c in cols])
 
 

@@ -636,7 +636,7 @@ class PhashAdmissionSink(_AdmissionSink):
     bytes but the same aHash; the batch form is
     ``queries/media.py::multimodal_phash_audit``).
 
-    - hashes come from the REAL pixel path (``functions/multimodal.
+    - hashes come from the REAL pixel path (``functions/media_hash.
       perceptual_hashes`` — Arrow-batched decode, 24 B output rows;
       payload bytes never reach a join);
     - the persisted index ``<root>/phashes`` holds the Manku
@@ -658,7 +658,7 @@ class PhashAdmissionSink(_AdmissionSink):
       are ADMITTED unscreened and not indexed: no pixel evidence,
       no perceptual claim (route them through
       ``DigestAdmissionSink`` for exact dedup). The pixel boundary
-      is ``functions/multimodal.decode_pixels``: pure-Python REAL
+      is ``functions/media_decode.decode_pixels``: pure-Python REAL
       pixels for BMP, the full PNG envelope, GIF, sequential AND
       progressive JPEG (any integer-ratio subsampling), and
       lossless WebP — so all of those are screened everywhere; the
@@ -711,7 +711,7 @@ class PhashAdmissionSink(_AdmissionSink):
             manku_table_keys,
             simhash_pairs_from_sigs,
         )
-        from tidb_cdc_spark.functions.multimodal import perceptual_hashes
+        from tidb_cdc_spark.functions.media_hash import perceptual_hashes
 
         spark = batch.sparkSession
         # slim (id, hash) rows off the real pixel path; NULL hashes
@@ -813,7 +813,7 @@ class AudioWindowAdmissionSink(_AdmissionSink):
     clip-level frame boundary — only the per-window inverted index
     catches it. Admit a clip only if it shares fewer than
     ``min_shared_windows`` DISTINCT window hashes with every stored
-    clip (the same containment test ``functions/multimodal.
+    clip (the same containment test ``functions/media_hash.
     audio_near_dup_pairs`` runs in batch; reference parity:
     SURVEY §2's north-star ingest additions, not a reference op).
 
@@ -881,7 +881,7 @@ class AudioWindowAdmissionSink(_AdmissionSink):
         )
 
     def _admit(self, batch: DataFrame, nb: int) -> list[int]:
-        from tidb_cdc_spark.functions.multimodal import audio_window_hashes
+        from tidb_cdc_spark.functions.media_hash import audio_window_hashes
 
         spark = batch.sparkSession
         # DISTINCT (id, whash) rows off the real sample path; clips

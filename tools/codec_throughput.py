@@ -26,14 +26,14 @@ def _plant(v: int, d: int = 0, n: int = 64):
 
 
 def _payloads(leg: str, patterns):
-    from tidb_cdc_spark.functions import multimodal as M
+    from tidb_cdc_spark.functions import media_synth as M
 
     out = []
     for v in patterns:
         g = _plant(v)
         if leg == "bmp":
             # reuse the synth's exact BMP layout via the boundary twin
-            from tidb_cdc_spark.functions.multimodal import _encode_png  # noqa
+            from tidb_cdc_spark.functions.media_synth import _encode_png  # noqa
             import struct
 
             h, w = g.shape
@@ -170,7 +170,7 @@ LEGS = [
 
 
 def measure(n_payloads: int = 120, repeat: int = 3):
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_decode import (
         decode_gif_frames,
         decode_pixels,
     )
@@ -188,21 +188,19 @@ def measure(n_payloads: int = 120, repeat: int = 3):
         if leg == "gif_anim":
             dec = decode_gif_frames
         elif leg == "apng_anim":
-            from tidb_cdc_spark.functions.multimodal import (
+            from tidb_cdc_spark.functions.media_decode import (
                 decode_apng_frames,
             )
 
             dec = decode_apng_frames
         elif leg == "webp_anim":
-            from tidb_cdc_spark.functions.multimodal import (
+            from tidb_cdc_spark.functions.media_decode import (
                 decode_webp_anim_frames,
             )
 
             dec = decode_webp_anim_frames
         elif leg == "mjpeg_avi":
-            from tidb_cdc_spark.functions.multimodal import (
-                decode_avi_frames,
-            )
+            from tidb_cdc_spark.functions.media_decode import decode_avi_frames
 
             dec = decode_avi_frames
         else:

@@ -81,10 +81,8 @@ OPS = [
 def phash_hash_pass(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
-        perceptual_hashes,
-        synth_bmp_pixel_media,
-    )
+    from tidb_cdc_spark.functions.media_hash import perceptual_hashes
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -106,10 +104,8 @@ def audio_fp_pass(spark, sf_dir: str):
     energy fingerprint, linear per-row over ~4 KB payloads."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
-        audio_fingerprints,
-        synth_wav_pcm_media,
-    )
+    from tidb_cdc_spark.functions.media_hash import audio_fingerprints
+    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -131,10 +127,8 @@ def video_fp_pass(spark, sf_dir: str):
     linear in total frames over ~6.5 KB payloads."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
-        synth_avi_media,
-        video_frame_hashes,
-    )
+    from tidb_cdc_spark.functions.media_hash import video_frame_hashes
+    from tidb_cdc_spark.functions.media_synth import synth_avi_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -158,10 +152,8 @@ def dct_phash_pass(spark, sf_dir: str):
     shape as phash_hash_pass plus two 32×32 float matmuls/row."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
-        dct_phashes,
-        synth_bmp_block16_media,
-    )
+    from tidb_cdc_spark.functions.media_hash import dct_phashes
+    from tidb_cdc_spark.functions.media_synth import synth_bmp_block16_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -185,10 +177,8 @@ def audio_window_pass(spark, sf_dir: str):
     windows over ~8 KB payloads."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
-        audio_window_hashes,
-        synth_wav_windowed_media,
-    )
+    from tidb_cdc_spark.functions.media_hash import audio_window_hashes
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -218,10 +208,10 @@ def codec_decode_pass(spark, sf_dir: str):
     any corpus size."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import perceptual_hashes
+    from tidb_cdc_spark.functions.media_synth import (
         CODEC_LEGS,
         PNG_DEEP_LEGS,
-        perceptual_hashes,
         synth_codec_pixel_media,
     )
 
@@ -264,11 +254,11 @@ def anim_decode_pass(spark, sf_dir: str):
     the thing that scales with corpus size — is measured alone."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
+    from tidb_cdc_spark.functions.media_hash import video_frame_hashes
+    from tidb_cdc_spark.functions.media_synth import (
         synth_apng_anim_media,
         synth_gif_anim_media,
         synth_mjpeg_avi_media,
-        video_frame_hashes,
     )
 
     ids = (
@@ -302,10 +292,8 @@ def audio_codec_pass(spark, sf_dir: str):
     join (same rationale as anim_decode_pass)."""
     from pyspark.sql import functions as F
 
-    from tidb_cdc_spark.functions.multimodal import (
-        audio_fingerprints,
-        synth_wav_pcm_media,
-    )
+    from tidb_cdc_spark.functions.media_hash import audio_fingerprints
+    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
 
     ids = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -407,7 +407,7 @@ def audio_window_batches(spark, batches: int, per_batch: int) -> dict:
     — 20% of each batch are trim+regain copies of earlier admitted
     clips (must be screened), 80% novel. Expect flat: the screen is
     manifest-pruned + broadcast, the appends are ∝ batch."""
-    from tidb_cdc_spark.functions.multimodal import synth_wav_windowed_media
+    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
     from tidb_cdc_spark.streaming.enrich import AudioWindowAdmissionSink
 
     root = os.path.join(TMP, "audiowindow_store")
