@@ -32,12 +32,16 @@ def _files() -> list[str]:
     return sorted(out)
 
 
-def _package_imports(path: str):
-    """(line, module, name or None) for each tidb_cdc_spark import."""
+def _package_imports(path: str, local_only: bool = False):
+    """(line, module, name or None) for each tidb_cdc_spark import;
+    ``local_only`` leaves out the module-level ones."""
     rel = os.path.relpath(path, ROOT)[: -len(".py")].split(os.sep)
     with open(path, encoding="utf-8") as f:
         tree = ast.parse(f.read(), path)
+    top = {id(node) for node in tree.body} if local_only else set()
     for node in ast.walk(tree):
+        if id(node) in top:
+            continue
         if isinstance(node, ast.Import):
             for alias in node.names:
                 if alias.name.split(".")[0] == "tidb_cdc_spark":
@@ -76,3 +80,19 @@ def test_every_package_import_resolves():
             if err:
                 bad.append(f"{os.path.relpath(path, ROOT)}:{line} {module} {err}")
     assert not bad, "\n".join(bad)
+
+
+def test_query_modules_import_at_module_level():
+    """Each query family module keeps its package imports in one
+    block at the top: no module outside ``queries/`` imports the
+    registry, so a function-local import there guards no cycle and
+    only hides a dependency."""
+    qdir = os.path.join(ROOT, "tidb_cdc_spark", "queries")
+    bad = []
+    for name in sorted(os.listdir(qdir)):
+        if not name.endswith(".py"):
+            continue
+        path = os.path.join(qdir, name)
+        for line, _, _ in _package_imports(path, local_only=True):
+            bad.append(f"tidb_cdc_spark/queries/{name}:{line}")
+    assert not bad, "function-local package imports:\n" + "\n".join(bad)

@@ -15,16 +15,22 @@ def con():
 
 
 def _all_names():
-    from tidb_cdc_spark.queries import ORACLE
+    from tidb_cdc_spark.queries import ORACLE, QUERIES
 
-    return sorted(ORACLE)
+    return [
+        n
+        if QUERIES[n].__module__ == "tidb_cdc_spark.queries.media"
+        else pytest.param(n, marks=pytest.mark.slow)
+        for n in sorted(ORACLE)
+    ]
 
 
-# r15 tiered gate: the full 186-entry value-mirror battery is the
-# SLOW tier — the driver value-compares its gate sample itself, and
-# the default tier still executes every declared query below
-# (test_every_query_runs).
-@pytest.mark.slow
+# Tiered gate: the 36 media-family mirrors run in the default tier —
+# they share one planted-cluster scaffold, and the default tier holds
+# no other value check for it. The other oracle mirrors are the SLOW
+# tier: test_every_query_runs below executes only the queries WITHOUT
+# an oracle, so outside the media family an oracled query is neither
+# run nor value-checked by default.
 @pytest.mark.parametrize("name", _all_names())
 def test_query_matches_oracle(spark, con, name):
     from tidb_cdc_spark.queries import ORACLE, QUERIES

@@ -111,7 +111,7 @@ def merge_scd2_split(
     (an explicit return, not a dynamic attribute: any DataFrame
     transformation silently drops an attribute, and a caller that
     never learns the handles exist leaks two DISK_ONLY blocks per
-    batch, unbounded across a streaming fold — r9-advice catch) —
+    batch, unbounded across a streaming fold) —
     (1) ``shifted``: the batch's SCD2
     windows + one left join against head for the version shift and
     the per-key max; (2) ``labeled``: ONE pass over head left-joined

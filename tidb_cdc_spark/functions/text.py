@@ -215,7 +215,7 @@ def _no_tokens(text: Column) -> Column:
     tokenizer's split (Java ``\\s``): ``trim`` strips only ASCII
     spaces, so a tabs/newlines-only doc would otherwise emit no
     shingle row at all while the oracle's tokenize-then-count n=0
-    branch emits the sentinel (r9-advice catch). Null text stays
+    branch emits the sentinel. Null text stays
     excluded (null predicate → filter false)."""
     return F.regexp_replace(text, r"\s", "") == ""
 

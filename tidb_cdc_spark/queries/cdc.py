@@ -16,8 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.cdc.apply import snapshot_from_ops
-from tidb_cdc_spark.cdc.parse import parse_cdc, parse_envelope
+from tidb_cdc_spark.cdc.incremental import agg_delta, merge_agg
+from tidb_cdc_spark.cdc.parse import parse_cdc, parse_envelope, schema_drift
+from tidb_cdc_spark.cdc.scd import scd2_history
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
+from tidb_cdc_spark.session import fan_out, materialize, read_table
 
 
 def events_spec() -> TableSpec:
@@ -50,7 +53,6 @@ def _cached_source(spark: SparkSession, key, build) -> DataFrame:
     the session through them and never evict), and no id()-reuse
     collisions handing back frames bound to a dead SparkContext.
     """
-    from tidb_cdc_spark.session import materialize
 
     per_session = getattr(spark, "_tidb_cdc_env_cache", None)
     if per_session is None:
@@ -76,8 +78,6 @@ def _envelopes(spark: SparkSession, sf_dir: str, with_ops: bool) -> DataFrame:
     (session.materialize)."""
 
     def build() -> DataFrame:
-        from tidb_cdc_spark.session import fan_out, read_table
-
         # fan_out: a real CDC source is a Kafka topic with N
         # partitions; the single-row-group test parquet collapses the
         # scan to one split, which would serialize the JSON round-trip.
@@ -184,7 +184,6 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned dimension rows with ``[valid_from, valid_to)``
     intervals — deletes close intervals without opening one. One
     PK-keyed exchange serves both window passes (``cdc/scd.py``)."""
-    from tidb_cdc_spark.cdc.scd import scd2_history
 
     env = _envelopes(spark, sf_dir, with_ops=True)
     parsed = parse_cdc(
@@ -242,8 +241,6 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle can compute base ⊕ delta directly in SQL. Plan: two
     map-side-combining aggregates + one keyed full-outer merge join
     on the few-row aggregates — no shuffle carries raw rows twice."""
-    from tidb_cdc_spark.cdc.incremental import agg_delta, merge_agg
-    from tidb_cdc_spark.session import read_table
 
     ev = read_table(spark, sf_dir, "events")
     base = ev.groupBy("event_type").agg(
@@ -309,8 +306,6 @@ def cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cdc_utils.go:96-123 fall-through) and zero-values the latter;
     the engine makes both observable so ``TableSpec.evolve`` can
     adopt/retire them deliberately."""
-    from tidb_cdc_spark.cdc.parse import schema_drift
-    from tidb_cdc_spark.session import fan_out, read_table
 
     def build() -> DataFrame:
         ev = fan_out(read_table(spark, sf_dir, "events"), spark)
@@ -363,7 +358,6 @@ def cdc_decimal_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     only as float64/string (cdc_utils.go:96-123) — a warehouse sink
     needs exact money types. Plan: stateless codegen parse + one
     map-side-combining hash aggregate on a 3-value key."""
-    from tidb_cdc_spark.session import fan_out, read_table
 
     def build() -> DataFrame:
         li = fan_out(read_table(spark, sf_dir, "lineitem"), spark)
@@ -436,7 +430,6 @@ def cdc_dead_letter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine's dead-letter column captures it and the stream keeps
     flowing. Output: rows per op label with 'corrupt' as its own
     bucket."""
-    from tidb_cdc_spark.session import fan_out, read_table
 
     ev = fan_out(read_table(spark, sf_dir, "events"), spark)
     op = (

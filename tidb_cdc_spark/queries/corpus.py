@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tidb_cdc_spark.functions import chunking as CH
 from tidb_cdc_spark.functions import dsir as DS
 from tidb_cdc_spark.functions import lm as LM
 from tidb_cdc_spark.functions import mixing as MX
@@ -34,9 +35,25 @@ from tidb_cdc_spark.functions import tfidf as TI
 from tidb_cdc_spark.functions import versioning as VER
 from tidb_cdc_spark.functions import vocab as V
 from tidb_cdc_spark.functions.bpe import bpe_train
+from tidb_cdc_spark.functions.classifier import source_classifier_eval
 from tidb_cdc_spark.functions.feature_hash import hashed_tf
-from tidb_cdc_spark.functions.lm import unigram_surprisal
-from tidb_cdc_spark.session import materialize
+from tidb_cdc_spark.functions.lm import (
+    bigram_surprisal,
+    collocations,
+    rank_buckets,
+    stupid_backoff_score,
+    surprisal_buckets,
+    unigram_surprisal,
+)
+from tidb_cdc_spark.functions.sampling import exact_stratified_split
+from tidb_cdc_spark.functions.text import (
+    bpe_token_count,
+    fix_mojibake,
+    normalize_text,
+    token_count,
+)
+from tidb_cdc_spark.functions.vocab import term_drift
+from tidb_cdc_spark.session import fan_out_by, materialize
 
 
 _STOP_EN = T.STOPWORDS["en"]
@@ -46,7 +63,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fanned out BY doc_id: the shingle pipeline's window/groupBy
     cluster on the id, so hash-partitioning here means the whole
     explode→lead→aggregate chain runs with zero further shuffles."""
-    from tidb_cdc_spark.session import fan_out_by
 
     return fan_out_by(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), spark, "doc_id"
@@ -948,7 +964,6 @@ _CW, _CS = 32, 24  # window/stride sized to the testdata's 10-99-token docs
 def doc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window RAG chunking (32-token windows, stride 24):
     one row per chunk span per document."""
-    from tidb_cdc_spark.functions import chunking as CH
 
     d = _docs(spark, sf_dir).select(
         "doc_id", T.token_count(F.col("text")).cast("long").alias("n_tokens")
@@ -1286,7 +1301,6 @@ def vocab_drift_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     that catches a template flooding a crawl before it skews a
     training mixture. Integral ppm (cnt·10⁶ div total) — exact in
     both engines."""
-    from tidb_cdc_spark.functions.vocab import term_drift
 
     # deliberately NOT materialized (r12 profile, NOTES.md): the base
     # scan feeds three consumers but costs only ~0.27 s of the 1.34 s
@@ -1343,7 +1357,6 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram bits = common words in uncommon order (word salad,
     shuffled boilerplate). Exact whole-bit arithmetic, hash-green in
     both engines (functions/lm.py)."""
-    from tidb_cdc_spark.functions.lm import bigram_surprisal
 
     return bigram_surprisal(_docs(spark, sf_dir)).orderBy("doc_id")
 
@@ -1394,7 +1407,6 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) ⇒ hash-exact; the rank runs as the two-level banded
     prefix scan, never a single-task global window
     (functions/lm.py::surprisal_buckets)."""
-    from tidb_cdc_spark.functions.lm import surprisal_buckets
 
     b = surprisal_buckets(_docs(spark, sf_dir), n_buckets=3)
     return b.select(
@@ -1435,7 +1447,6 @@ def doc_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's utf8proc ``nfc_normalize`` — two independent UAX #15
     implementations agreeing bit-for-bit
     (functions/text.py::normalize_text)."""
-    from tidb_cdc_spark.functions.text import normalize_text
 
     tail = (
         " cafe\u0301 a\u0303 \u212bngstrom"  # e+acute, a+tilde, angstrom sign
@@ -1472,7 +1483,6 @@ def corpus_mojibake_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Booleans TRUE by construction (the repair is the corruption's
     inverse and the is_valid_utf8 guard admits the planted bytes) —
     DuckDB-checkable."""
-    from tidb_cdc_spark.functions.text import fix_mojibake
 
     tail = "\u00a0caf\u00e9 \u2014 na\u00efve r\u00e9sum\u00e9"
     # r7-advice pin: a marker char PLUS non-Latin-1 chars (em dash,
@@ -1519,7 +1529,6 @@ def quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LBFGS is iterative; the operator itself is exact-tested in
     tests/test_semdedup_pca.py incl. a no-signal-stays-at-chance
     sanity check)."""
-    from tidb_cdc_spark.functions.classifier import source_classifier_eval
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
     off = _planting_offset(d, "doc_id")  # id-space-safe at any SF
@@ -1712,7 +1721,6 @@ def corpus_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 collocations by whole-bit PMI with a count-5 floor
     (functions/lm.py::collocations) — multi-word-expression /
     tokenizer-merge candidates, hash-exact."""
-    from tidb_cdc_spark.functions.lm import collocations
 
     return collocations(_docs(spark, sf_dir), min_count=5, k=25)
 
@@ -1761,10 +1769,6 @@ def corpus_tokenizer_fertility(
 
     Scale: single scan, per-row codegen counting expressions, one
     map-side-combining groupBy on the #languages-sized key."""
-    from tidb_cdc_spark.functions.text import (
-        bpe_token_count,
-        token_count,
-    )
 
     d = _docs(spark, sf_dir).select(
         "lang",
@@ -1823,7 +1827,6 @@ def corpus_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/sampling.py::exact_stratified_split): md5-ordered
     banded rank within each source, quota boundaries as exact
     integer floors — hash-exact cross-engine."""
-    from tidb_cdc_spark.functions.sampling import exact_stratified_split
 
     return exact_stratified_split(_docs(spark, sf_dir)).orderBy(
         "source", "rank"
@@ -1861,7 +1864,6 @@ def corpus_lm_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL: unseen trigrams/bigrams/OOV all occur. High mean_mbits =
     improbable under the trusted slice — the CCNet/quality-filter
     ranking signal, with no external model artifact."""
-    from tidb_cdc_spark.functions.lm import stupid_backoff_score
 
     d = _docs(spark, sf_dir)
     return stupid_backoff_score(
@@ -1955,7 +1957,6 @@ def corpus_lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max/count aggregate and the ranked output read that single
     pass, so the 3-join corpus-scale scoring never runs twice
     (pinned in tests/test_plans.py)."""
-    from tidb_cdc_spark.functions.lm import rank_buckets, stupid_backoff_score
 
     d = _docs(spark, sf_dir)
     scored = stupid_backoff_score(

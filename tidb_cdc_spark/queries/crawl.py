@@ -8,6 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tidb_cdc_spark.functions.html import html_strip_tags, html_strip_tags_sql
+from tidb_cdc_spark.functions.warc import synth_warc_media, warc_records
+from tidb_cdc_spark.session import materialize
+
 
 def warc_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC ingest census over REAL crawl archives — the ISO 28500
@@ -28,11 +32,6 @@ def warc_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the number of distinct (pid, k) pairs iff the record
     walk, de-chunking, and both gzip layers are right — a broken
     layer inflates it. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.warc import (
-        synth_warc_media,
-        warc_records,
-    )
-    from tidb_cdc_spark.session import materialize
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -123,7 +122,6 @@ def corpus_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Java-regex ∩ RE2 common subset, so DuckDB runs the IDENTICAL
     chain over the same parquet text and the md5s must match
     value-for-value."""
-    from tidb_cdc_spark.functions.html import html_strip_tags
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -156,8 +154,6 @@ def corpus_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _html_extract_sql() -> str:
-    from tidb_cdc_spark.functions.html import html_strip_tags_sql
-
     page = (
         "'<html><head><title>D' || CAST(doc_id AS VARCHAR) || "
         "'</title><script type=\"text/javascript\">var x = "
@@ -197,12 +193,6 @@ def crawl_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     every census column is id arithmetic — and collapses across the
     three storage variants iff every stage upstream of the census
     decodes right."""
-    from tidb_cdc_spark.functions.html import html_strip_tags
-    from tidb_cdc_spark.functions.warc import (
-        synth_warc_media,
-        warc_records,
-    )
-    from tidb_cdc_spark.session import materialize
 
     planted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -23,7 +23,7 @@ winnowing's pair output linear in family size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.functions import clusters as C
@@ -31,11 +31,16 @@ from tidb_cdc_spark.functions import dedup as D
 from tidb_cdc_spark.functions import quality as Q
 from tidb_cdc_spark.functions import semdedup as SD
 from tidb_cdc_spark.functions import text as T
+from tidb_cdc_spark.functions.dedup import ngram_containment_pairs
 from tidb_cdc_spark.functions.feature_hash import hashed_tf_dense
 from tidb_cdc_spark.functions.quality import span_dedup_rewrite
+from tidb_cdc_spark.functions.sampling import hash_bucket
+from tidb_cdc_spark.functions.text import shingle_string_rows, token_count, tokens
+from tidb_cdc_spark.functions.winnow import winnow_cap_report as wcr
 from tidb_cdc_spark.functions.winnow import winnow_overlap
 from tidb_cdc_spark.queries.corpus import _DIM, _docs, _md5_bucket_sql, _planting_offset
 from tidb_cdc_spark.queries.embeddings import _N_VECS, _embs, _embs_with_copies
+from tidb_cdc_spark.session import materialize
 
 
 # ------------------------------------------------------ exact dedup
@@ -715,7 +720,6 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee's setting; an 11-token run promises exactly one shared
     fingerprint). Fully integral and md5-hash-based ⇒ bit-exact
     DuckDB oracle."""
-    from tidb_cdc_spark.functions.winnow import winnow_overlap
 
     return winnow_overlap(
         _docs(spark, sf_dir), k=_OVERLAP_WK, w=_OVERLAP_WW, min_shared=1
@@ -784,7 +788,6 @@ def winnow_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap the testdata actually exceeds so the numbers are non-zero;
     production runs emit it at the same cap as the pair query.
     Fully integral ⇒ bit-exact DuckDB oracle."""
-    from tidb_cdc_spark.functions.winnow import winnow_cap_report as wcr
 
     return wcr(
         _docs(spark, sf_dir), k=_OVERLAP_WK, w=_OVERLAP_WW, max_doc_freq=_WINNOW_CAP
@@ -881,7 +884,6 @@ def dedup_minhash_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     components for every cluster consumer. Rows-only (xxhash64
     signatures, like dedup_minhash_lsh); the connectivity contract
     is oracle-gated by ``dedup_minhash_star_audit``."""
-    from tidb_cdc_spark.functions import dedup as D
 
     return D.minhash_lsh_star_pairs(_docs(spark, sf_dir)).orderBy(
         "id_a", "id_b"
@@ -1061,7 +1063,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles appear in the other. md5-keyed shingles make this the
     fuzzy family's one RAW pair op with a full value-level DuckDB
     oracle (the xxhash64 ops are audit-gated instead)."""
-    from tidb_cdc_spark.functions.dedup import ngram_containment_pairs
 
     return ngram_containment_pairs(_docs(spark, sf_dir)).orderBy(
         "id_a", "id_b"
@@ -1146,9 +1147,6 @@ def contamination_containment_screen(
     first formulation). The viral-shingle cap and set sizes stay
     corpus-wide, so the containment values equal the symmetric op's
     for the same pairs."""
-    from tidb_cdc_spark.functions.sampling import hash_bucket
-    from tidb_cdc_spark.functions.text import shingle_string_rows
-    from tidb_cdc_spark.session import materialize
 
     d = _docs(spark, sf_dir)
     dist = (
@@ -1162,7 +1160,6 @@ def contamination_containment_screen(
         .filter(F.col("_df") > 1000)
         .select("_g")
     )
-    from pyspark.sql import Window
 
     sized = materialize(
         dist.join(F.broadcast(viral), "_g", "left_anti").select(
@@ -1248,7 +1245,6 @@ def dedup_containment_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_containment_pairs`` (same op, collapsed input) rather
     than being lowered until rows appear; the audit and the
     synthetic-corpus tests carry the non-vacuous evidence."""
-    from tidb_cdc_spark.functions.dedup import ngram_containment_pairs
 
     # r15 (guide §2.3): this composed pipeline is ROWS-ONLY (the
     # oracle twin is ``containment_repr_audit``), and containment
@@ -1289,8 +1285,6 @@ def containment_repr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       pruning, kept(S) ⊆ kept(O) unconditionally, so the ratio is
       1.0 by set algebra, not by luck (pruning behavior is already
       value-oracled by ``dedup_containment_pairs``)."""
-    from tidb_cdc_spark.functions.dedup import ngram_containment_pairs
-    from tidb_cdc_spark.functions.text import token_count, tokens
 
     spine = (
         _docs(spark, sf_dir)

@@ -15,6 +15,7 @@ vector, so a copy and its original project identically.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,6 +25,7 @@ from tidb_cdc_spark.functions import quantize as QZ
 from tidb_cdc_spark.functions.centroids import SCALE
 from tidb_cdc_spark.functions.projection import random_project, random_project_sql
 from tidb_cdc_spark.queries.corpus import _planting_offset
+from tidb_cdc_spark.session import read_table
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,7 +126,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines hash identically: integral component sums, one
     decimal-exact cross-moment, doubles only for the final
     mean-product subtraction (identical op order)."""
-    from tidb_cdc_spark.session import read_table
 
     # Spark plan: ONE scan + a scalar aggregate of 1+d+d² partial
     # sums (map-side combined — nothing data-sized shuffles), then
@@ -235,7 +236,6 @@ def embedding_pca_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector, 1e-6 tolerance for BLAS batching); components are
     orthonormal; explained variance is non-increasing and the ratios
     sum to ≤ 1."""
-    import numpy as np
 
     e, off = _embs_with_copies(spark, sf_dir)
     e = e.select("vec_id", "embedding")

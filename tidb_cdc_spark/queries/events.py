@@ -14,12 +14,20 @@ offsets are integral ``datediff``/``date_diff('day', …)``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tidb_cdc_spark.functions.pagerank import pagerank_sql
+from tidb_cdc_spark.functions.io import morton_z2
+from tidb_cdc_spark.functions.pagerank import pagerank, pagerank_sql
+from tidb_cdc_spark.functions.sketch import (
+    heavy_hitters,
+    hll_distinct_estimates,
+    hll_distinct_table,
+    hll_merge_tables,
+)
 from tidb_cdc_spark.operators.joins import asof_join
 from tidb_cdc_spark.operators.windows import sessionize
+from tidb_cdc_spark.session import materialize
 from tidb_cdc_spark.session import read_table as _t
 
 
@@ -179,11 +187,6 @@ def events_distinct_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact side shares the single scan. A regression in Spark's
     sketch, the merge path, or our plan flips a boolean and fails
     the hash (the ``sketch_approx`` verdict pattern)."""
-    from tidb_cdc_spark.functions.sketch import (
-        hll_distinct_estimates,
-        hll_distinct_table,
-        hll_merge_tables,
-    )
 
     e = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
@@ -223,7 +226,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view → click → purchase conversion: users with a view, users
     with a click at-or-after their first view, users with a purchase
     at-or-after that first qualifying click."""
-    from tidb_cdc_spark.session import materialize
 
     ev = _t(spark, sf_dir, "events")
     # v and c are per-user aggregates (small) consumed by 3 resp. 2
@@ -335,7 +337,6 @@ def events_daily_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(d.select("event_type").distinct())
     )
-    from pyspark.sql.window import Window
 
     w = (
         Window.partitionBy("event_type")
@@ -449,7 +450,6 @@ def events_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     running state, no driver involvement. Gap is integral (epoch
     microseconds) and the rolling sum is exact decimal, cast to
     double only at the edge (cross-engine hash conventions)."""
-    from pyspark.sql.window import Window
 
     ev = _t(spark, sf_dir, "events")
     order = [F.col("ts"), F.col("event_id")]
@@ -498,7 +498,6 @@ def events_trailing_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row, no unbounded running state. RANGE frames include peer
     rows (equal timestamps) in both engines, so ties are
     deterministic without a tiebreak column."""
-    from pyspark.sql.window import Window
 
     ev = _t(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
@@ -582,7 +581,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE hash exchange on user_id for the lead() pairing; the
     transition aggregate is map-side combining on the 25-cell pair
     space; the share window runs on the 25-row aggregate."""
-    from pyspark.sql.window import Window
 
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -680,7 +678,6 @@ def events_zorder_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     dilation arithmetic — the part an engine can silently get wrong —
     bit-for-bit against the oracle; the layout/pruning effect itself
     is asserted in tests/test_io.py (file min/max coverage)."""
-    from tidb_cdc_spark.functions.io import morton_z2
 
     ev = _t(spark, sf_dir, "events")
     x = F.col("user_id") % 65536
@@ -737,9 +734,8 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to a #types-row stats table, broadcast back onto the
     scan — the rows shuffle zero times.
     """
-    from tidb_cdc_spark.session import read_table
 
-    ev = read_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     d2 = F.col("value").cast("decimal(18,2)")
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("_n"),
@@ -816,9 +812,8 @@ def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle zero times; at 100 TB swap ``percentile`` for
     ``approx_percentile`` with the same call shape.
     """
-    from tidb_cdc_spark.session import read_table
 
-    ev = read_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("_med")
     )
@@ -863,10 +858,8 @@ def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed 100% recall and the exact verify pass drops collision
     false-positives — the output is exactly SQL's HAVING COUNT(*) >
     80, with the plan shape a streaming/mergeable pipeline uses."""
-    from tidb_cdc_spark.functions.sketch import heavy_hitters
-    from tidb_cdc_spark.session import read_table
 
-    ev = read_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     return heavy_hitters(ev, "user_id", min_count=80).orderBy("user_id")
 
 
@@ -895,7 +888,6 @@ def events_engagement_pagerank(
     ).unionByName(
         pairs.select(F.col("t").alias("src"), F.col("u").alias("dst"))
     )
-    from tidb_cdc_spark.functions.pagerank import pagerank
 
     return (
         pagerank(edges, iters=5)

@@ -10,6 +10,12 @@ probe or decode (``probe_media``/``decode_pixels`` under
 oracle computing the same formulas. A parser or codec regression
 changes a recovered value and fails the value hash.
 
+Most audits share one scaffold: ``_plant`` builds the planted
+clusters ``pid = doc_id % m`` with per-variant columns,
+``_cluster_audit`` turns their hashes into the near-dup scorecard,
+``_curation_pipeline``/``_curation_provenance`` run the exact→fuzzy
+funnel, and ``_hash_sql``/``_frame_sql`` are the matching oracles.
+
 Scale shape: the synth→decode→hash chain is one Arrow-batched linear
 pass per consumer (materialized to run once); hashes are a few bytes
 per row and pixels never shuffle. Lossy VP8/H.264/MP3 remain codec
@@ -21,8 +27,373 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tidb_cdc_spark.functions.media_probe import extract_features
+from tidb_cdc_spark.functions import media_hash as mh
+from tidb_cdc_spark.functions.clusters import cluster_representatives
+from tidb_cdc_spark.functions.media_probe import (
+    extract_features,
+    frame_sample_plan,
+    probe_media,
+)
+from tidb_cdc_spark.functions.media_synth import (
+    CODEC_LEGS,
+    PNG_DEEP_LEGS,
+    synth_anim_probe_media,
+    synth_apng_anim_media,
+    synth_audio_probe_media,
+    synth_avi_media,
+    synth_bmp_block16_media,
+    synth_bmp_pixel_media,
+    synth_codec_pixel_media,
+    synth_container_media,
+    synth_gif_anim_media,
+    synth_image_media,
+    synth_mjpeg_avi_media,
+    synth_wav_pcm_media,
+    synth_wav_windowed_media,
+    synth_webp_anim_media,
+)
 from tidb_cdc_spark.queries.corpus import _docs
+from tidb_cdc_spark.session import materialize
+
+
+# ------------------------------------------------ planted clusters
+#: the planted 8-bit pattern byte of cluster ``pid``
+_PATTERN = "1 + pid % 254"
+#: hash-identical frames, variant 2 trimmed by one frame and shifted
+_TRIM_SHIFT = {"base": "pid", "skip": (0, 0, 1), "shift": (0, 0, 20)}
+
+
+def _plant(
+    spark: SparkSession, sf_dir: str, m: int | None = None, **cols
+) -> DataFrame:
+    """The one read of the documents table behind every media plant:
+    the non-negative document ids as ``media_id``.
+
+    The planted-value contract is defined on non-negative ids:
+    Python's % (synth side) returns a non-negative residue while
+    Spark/DuckDB % follow the dividend's sign, and the 16-bit header
+    packs would reject a negative field — the filter makes the domain
+    explicit on BOTH engines instead of incidental.
+
+    With a modulus ``m`` the frame also carries the cluster id
+    ``pid = doc_id % m`` and one column per keyword: a string is a SQL
+    expression over ``pid``; a tuple of k values is indexed by the
+    row's variant ``(doc_id div m) % k``."""
+    ids = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .where(F.col("doc_id") >= 0)
+        .select(F.col("doc_id").alias("media_id"))
+    )
+    if m is None:
+        return ids
+    variant = F.expr(f"media_id div {m}")
+    return ids.select("media_id", (F.col("media_id") % m).alias("pid")).select(
+        "*",
+        *[
+            (
+                F.expr(c)
+                if isinstance(c, str)
+                else F.element_at(
+                    F.array(*map(F.lit, c)), (variant % len(c) + 1).cast("int")
+                )
+            ).alias(name)
+            for name, c in cols.items()
+        ],
+    )
+
+
+def _bmp_plant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``multimodal_phash_audit`` plant: cluster ``pid = doc_id %
+    101``; variants 0/1 plant byte-identical BMPs of the pid's 8×8
+    block pattern, variant 2 a +20 uniform-brightness shift of it."""
+    return _plant(spark, sf_dir, 101, pattern=_PATTERN, shift=(0, 0, 20))
+
+
+def _avi_plant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``multimodal_video_audit`` plant: cluster ``pid = doc_id %
+    101``; variants 0/1 byte-identical 8-frame AVIs, variant 2 a
+    trim(first frame)+shift(+20) copy."""
+    return _plant(spark, sf_dir, 101, **_TRIM_SHIFT)
+
+
+def _wav_plant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``multimodal_audio_trim_audit`` plant: cluster ``pid =
+    doc_id % 101``; variants 0/1 byte-identical 8-window WAVs,
+    variant 2 a trim(2 windows)+regain(×3) copy."""
+    return _plant(spark, sf_dir, 101, base="pid", skip=(0, 0, 2), gain=(1, 1, 3))
+
+
+#: multi-row hash columns: the row unit and its containment join
+_ROWS = {
+    "fhash": ("frame", mh.video_near_dup_pairs),
+    "whash": ("window", mh.audio_near_dup_pairs),
+}
+
+
+def _pairs(hashes: DataFrame, hash_col: str, cap: int | None) -> DataFrame:
+    """Near-dup pairs over materialized hash rows: a one-per-media
+    hash pairs through the Manku banded join at Hamming ≤ 3, frame and
+    window hash rows through the inverted-index join on ≥ 4 shared
+    hashes. ``cap`` is the join's bucket-size / hash-frequency guard
+    (None: uncapped)."""
+    if hash_col in _ROWS:
+        return _ROWS[hash_col][1](hashes, "media_id", 4, cap)
+    return mh.phash_near_dup_pairs(
+        hashes, hash_col=hash_col, max_hamming=3, max_bucket_size=cap
+    )
+
+
+def _cluster_audit(
+    planted: DataFrame,
+    hashes: DataFrame,
+    hash_cols: tuple[str, ...] = ("ahash", "dhash"),
+    n_codecs: bool = False,
+    probed: DataFrame | None = None,
+) -> DataFrame:
+    """The one scorecard of the planted-cluster audits, over
+    ``hashes`` (the hash pass over the plant's synth) joined to the
+    plant's ``pid``. That frame is materialized: it feeds three
+    aggregate consumers (the global scorecard, the per-cluster
+    variant counts, the pair join), and without the persist the
+    synth→decode→hash Arrow chain runs once per consumer. Its rows
+    are a few bytes each; the payloads are already gone.
+
+    Columns: ``n_media``, ``n_clusters``, then ``n_<unit>_rows`` for
+    frame/window hash rows, ``n_codecs`` (distinct planted ``codec``)
+    when asked, ``distinct_<first hash>``; for one-per-media hashes
+    ``max_cluster_<hash>_variants`` per hash column; then
+    ``neardup_pairs`` — uncapped, because the planted clusters ARE
+    the duplicate families being measured — and, given ``probed``,
+    ``total_duration_ms`` summed over what the real header parse
+    recovered (a second read of the payloads: the parse is what is
+    under oracle there)."""
+    first = hash_cols[0]
+    keep = ["media_id", "pid"] + (["codec"] if n_codecs else [])
+    h = materialize(hashes.join(planted.select(*keep), "media_id"))
+    if first in _ROWS:
+        head = [
+            F.countDistinct("media_id").alias("n_media"),
+            F.countDistinct("pid").alias("n_clusters"),
+            F.count(F.lit(1)).alias(f"n_{_ROWS[first][0]}_rows"),
+        ]
+    else:
+        head = [
+            F.count(F.lit(1)).alias("n_media"),
+            F.countDistinct("pid").alias("n_clusters"),
+        ]
+    if n_codecs:
+        head.append(F.countDistinct("codec").alias("n_codecs"))
+    card = h.agg(*head, F.countDistinct(first).alias(f"distinct_{first}"))
+    if first not in _ROWS:
+        per_cluster = h.groupBy("pid").agg(
+            *[F.countDistinct(c).alias(f"_{c}") for c in hash_cols]
+        )
+        card = card.crossJoin(
+            F.broadcast(
+                per_cluster.agg(
+                    *[
+                        F.max(f"_{c}").cast("long").alias(f"max_cluster_{c}_variants")
+                        for c in hash_cols
+                    ]
+                )
+            )
+        )
+    pairs = _pairs(h, first, None)
+    card = card.crossJoin(
+        F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
+    )
+    if probed is None:
+        return card
+    dur = probed.agg(F.sum("duration_ms").cast("long").alias("total_duration_ms"))
+    return card.crossJoin(F.broadcast(dur))
+
+
+def _hash_sql(
+    m: int, hashes: tuple[str, ...] = ("ahash", "dhash"), legs: int = 0
+) -> str:
+    """Oracle of a one-hash-per-media cluster audit. Every planted
+    hash is injective across the clusters ``pid = doc_id % m``,
+    invariant within one, and any two clusters' hashes lie more than
+    τ = 3 bits apart, so distinct = n_clusters, every per-cluster
+    variant count is 1 and the τ=3 pairs are exactly the
+    within-cluster ones, Σ C(n_pid, 2). ``legs`` adds the codec-leg
+    count of a plant whose variant ``(doc_id // m) % legs`` picks the
+    codec."""
+    leg = f", (doc_id // {m}) % {legs} AS leg" if legs else ""
+    n_codecs = (
+        "       CAST((SELECT COUNT(DISTINCT leg) FROM m) AS BIGINT) AS n_codecs,\n"
+        if legs
+        else ""
+    )
+    variants = "".join(
+        f"       CAST(1 AS BIGINT) AS max_cluster_{h}_variants,\n" for h in hashes
+    )
+    return f"""
+WITH m AS (
+  SELECT doc_id % {m} AS pid{leg}
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+{n_codecs}       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_{hashes[0]},
+{variants}       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
+"""
+
+
+def _frame_sql(m: int, duration: str | None = None) -> str:
+    """Oracle of a trimmed-copy frame audit over clusters ``pid =
+    doc_id % m``: trimmed members (variant 2) carry 7 frames, the
+    others 8; a cluster's distinct frame hashes are 8 iff any member
+    is untrimmed (frame words are disjoint across clusters), and
+    every within-cluster pair shares ≥ 7 ≥ 4 of them. ``duration`` is
+    the per-media duration formula over ``trimmed``."""
+    dur = (
+        f",\n       CAST((SELECT SUM({duration}) FROM m) AS BIGINT)"
+        "\n            AS total_duration_ms"
+        if duration
+        else ""
+    )
+    return f"""
+WITH m AS (
+  SELECT doc_id % {m} AS pid,
+         CASE WHEN (doc_id // {m}) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
+  FROM documents WHERE doc_id >= 0
+), c AS (
+  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
+)
+SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
+       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
+       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
+       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
+            AS BIGINT) AS distinct_fhash,
+       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs{dur}
+"""
+
+
+# ------------------------------------------------ curation funnels
+def _fuzzy_reps(survivors: DataFrame, hash_fn, hash_col: str) -> DataFrame:
+    """Connected-component representatives of the fuzzy stage over
+    the exact-dedup survivors only (their hash rows materialized:
+    pairs and nodes both read them). Production path ⇒ the CAPPED
+    default (1000): survivor families are ≤ 2 per cluster by the
+    plant construction — asserted in tests/test_curation.py — and
+    what a cap would exclude is never silent (the ``*_cap_report``
+    queries)."""
+    h = materialize(hash_fn(survivors))
+    ids = h.select(F.col("media_id").alias("doc_id"))
+    return cluster_representatives(
+        ids.distinct() if hash_col in _ROWS else ids, _pairs(h, hash_col, 1000)
+    )
+
+
+def _curation_pipeline(
+    media: DataFrame, hash_fn, hash_col: str, stage: str
+) -> DataFrame:
+    """The composed funnel's scorecard: ``n_media``, ``after_exact``
+    (one min-id representative per payload sha2 — 32 B digests
+    through the shuffle, never payloads; materialized, since the
+    survivor set feeds the fuzzy stage AND the scorecard) and
+    ``stage`` (fuzzy-cluster representatives among the survivors)."""
+    exact_reps = materialize(
+        media.groupBy(F.sha2("payload", 256).alias("_digest"))
+        .agg(F.min("media_id").alias("media_id"))
+        .select("media_id")
+    )
+    survivors = media.join(exact_reps, "media_id", "left_semi")
+    reps = _fuzzy_reps(survivors, hash_fn, hash_col)
+    n_exact = exact_reps.agg(F.count(F.lit(1)).alias("after_exact"))
+    n_fuzzy = reps.filter("is_representative").agg(F.count(F.lit(1)).alias(stage))
+    return (
+        media.agg(F.count(F.lit(1)).alias("n_media"))
+        .crossJoin(F.broadcast(n_exact))
+        .crossJoin(F.broadcast(n_fuzzy))
+    )
+
+
+def _curation_provenance(
+    media: DataFrame, hash_fn, hash_col: str, dropped: str
+) -> DataFrame:
+    """The funnel with per-media outcomes kept: (media_id, outcome,
+    exact_rep, canonical_id). ``exact_rep`` is the min-id keeper of
+    the media's byte-identical sha2 class; ``canonical_id`` is its
+    fuzzy cluster's representative — TRANSITIVE, since the exact rep
+    may itself lose the fuzzy stage (``dropped``). Every media's
+    exact rep IS a survivor, so the final join covers all."""
+    digests = materialize(
+        media.select("media_id", F.sha2("payload", 256).alias("_digest"))
+    )
+    reps = digests.groupBy("_digest").agg(F.min("media_id").alias("_rep"))
+    rep_map = digests.join(reps, "_digest").select("media_id", "_rep")
+    survivors = media.join(
+        rep_map.filter(F.col("media_id") == F.col("_rep")),
+        "media_id",
+        "left_semi",
+    )
+    cr = _fuzzy_reps(survivors, hash_fn, hash_col).select(
+        F.col("doc_id").alias("_rep"),
+        F.col("cluster_id").alias("canonical_id"),
+        "is_representative",
+    )
+    return (
+        rep_map.join(cr, "_rep")
+        .select(
+            "media_id",
+            F.when(F.col("media_id") != F.col("_rep"), F.lit("dropped_exact_dup"))
+            .when(~F.col("is_representative"), F.lit(dropped))
+            .otherwise(F.lit("kept"))
+            .alias("outcome"),
+            F.col("_rep").alias("exact_rep"),
+            "canonical_id",
+        )
+        .orderBy("media_id")
+    )
+
+
+def _curation_sql(variant: str, value: int, scale: int, stage: str) -> str:
+    """Oracle of a curation funnel's scorecard over cluster ``pid =
+    doc_id % 101`` whose variant 2 carries ``variant = value`` (0
+    otherwise): the exact stage keeps one payload class per (pid,
+    variant), the fuzzy ``stage`` one per pid."""
+    return f"""
+WITH m AS (
+  SELECT doc_id % 101 AS pid,
+         CASE WHEN (doc_id // 101) % 3 = 2 THEN {value} ELSE 0 END AS {variant}
+  FROM documents WHERE doc_id >= 0
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_media,
+       CAST(COUNT(DISTINCT pid * {scale} + {variant}) AS BIGINT) AS after_exact,
+       CAST(COUNT(DISTINCT pid) AS BIGINT) AS {stage}
+FROM m
+"""
+
+
+def _provenance_sql(variant: str, value: int, dropped: str) -> str:
+    """Oracle of a curation funnel's provenance over the same plant:
+    exact classes are (pid, ``variant``) with min-id reps, fuzzy
+    clusters are pid with min-id canonicals — and the pid minimum
+    (variant 0) is necessarily its own exact rep, so one hop resolves
+    transitively."""
+    return f"""
+WITH m AS (
+  SELECT doc_id AS media_id, doc_id % 101 AS pid,
+         CASE WHEN (doc_id // 101) % 3 = 2 THEN {value} ELSE 0 END AS {variant}
+  FROM documents WHERE doc_id >= 0
+), e AS (
+  SELECT media_id,
+         MIN(media_id) OVER (PARTITION BY pid, {variant}) AS exact_rep,
+         MIN(media_id) OVER (PARTITION BY pid) AS canonical_id
+  FROM m
+)
+SELECT media_id,
+       CASE WHEN media_id <> exact_rep THEN 'dropped_exact_dup'
+            WHEN media_id <> canonical_id THEN '{dropped}'
+            ELSE 'kept' END AS outcome,
+       CAST(exact_rep AS BIGINT) AS exact_rep,
+       CAST(canonical_id AS BIGINT) AS canonical_id
+FROM e ORDER BY media_id
+"""
 
 
 # ------------------------------------------- multimodal feature pass
@@ -69,20 +440,7 @@ ORDER BY media_id
 
 
 def _probed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_container_media
-
-    # the planted-value contract is defined on non-negative ids:
-    # Python's % (synth side) returns a non-negative residue while
-    # Spark/DuckDB % follow the dividend's sign, and the 16-bit
-    # header packs would reject a negative field — the filter makes
-    # the domain explicit on BOTH engines instead of incidental
-    ids = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .where(F.col("doc_id") >= 0)
-    )
-    return probe_media(synth_container_media(ids, "doc_id"))
+    return probe_media(synth_container_media(_plant(spark, sf_dir)))
 
 
 def multimodal_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,8 +490,6 @@ def multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit durations that exist to exercise the parser, not to be
     exploded. Fully value-oracled: frame counts and timestamps
     derive from the recovered durations."""
-    from tidb_cdc_spark.functions.media_probe import frame_sample_plan
-
     v0 = _probed(spark, sf_dir).filter(F.col("media_id") % 4 == 1)
     return frame_sample_plan(v0, every_ms=250).select(
         "media_id", F.col("frame_ts_ms").cast("long").alias("frame_ts_ms")
@@ -157,9 +513,9 @@ ORDER BY media_id, frame_ts_ms
 
 
 def multimodal_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Planted-image probe — the image twin of the r10 WAV/MP4 audit,
-    closing the image parsers' evidence gap: every document id gets
-    real PNG/GIF/BMP-core/BMP-info/JPEG header bytes
+    """Planted-image probe — the image counterpart of
+    ``multimodal_probe_audit``: every document id gets real
+    PNG/GIF/BMP-core/BMP-info/JPEG header bytes
     (``synth_image_media`` — formula-valued dims, both GIF magics,
     both DIB header layouts incl. negative top-down heights, a JPEG
     fill-byte run), and the output is what ``parse_image_header``
@@ -167,17 +523,8 @@ def multimodal_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     height per row. Exact value oracle: DuckDB computes the same
     integer formulas; any divergence in endianness, header-size
     branch, abs(), or the marker scan flips the hash."""
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_image_media
-
-    # non-negative-id contract — see _probed's note
-    ids = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .where(F.col("doc_id") >= 0)
-    )
     return (
-        probe_media(synth_image_media(ids, "doc_id"))
+        probe_media(synth_image_media(_plant(spark, sf_dir)))
         .select("media_id", "mime", "width", "height")
         .orderBy("media_id")
     )
@@ -215,16 +562,7 @@ def multimodal_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct byte strings flips the value hash. Output:
     (mime, n_media, n_unique) — the dedup scorecard (total vs
     surviving representatives)."""
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_image_media
-
-    # non-negative-id contract — see _probed's note
-    pids = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select((F.col("doc_id") % 211).alias("pid"))
-    )
-    media = probe_media(synth_image_media(pids, "pid"))
+    media = probe_media(synth_image_media(_plant(spark, sf_dir, 211), "pid"))
     return (
         media.groupBy("mime")
         .agg(
@@ -269,15 +607,15 @@ def multimodal_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dhash64``), and find Hamming-≤3 pairs with the SAME Manku
     banded join the text SimHash uses (``phash_near_dup_pairs``).
 
-    Planted-transform oracle (the r11 verdict's design): cluster
-    ``pid = doc_id % 101``; variants 0/1 plant byte-identical BMPs,
-    variant 2 plants a +20 uniform-brightness shift of the same
-    pattern (different BYTES, same pixels up to shift). The synth's
-    8×8 block pattern makes ``ahash64`` provably the pattern byte's
-    bits replicated across the 64 cells (see ``synth_bmp_pixel_media``
-    — injective per cluster, ≥8-bit Hamming margin across clusters,
-    δ-invariant within), so every output column is derivable from id
-    arithmetic alone:
+    Planted-transform oracle: cluster ``pid = doc_id % 101``;
+    variants 0/1 plant byte-identical BMPs, variant 2 plants a +20
+    uniform-brightness shift of the same pattern (different BYTES,
+    same pixels up to shift). The synth's 8×8 block pattern makes
+    ``ahash64`` provably the pattern byte's bits replicated across
+    the 64 cells (see ``synth_bmp_pixel_media`` — injective per
+    cluster, ≥8-bit Hamming margin across clusters, δ-invariant
+    within), so every output column is derivable from id arithmetic
+    alone:
 
     - ``distinct_ahash = n_clusters`` fails if the decode →
       downsample → threshold chain is shift-variant OR collides
@@ -288,94 +626,11 @@ def multimodal_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       it is not injective over the pattern family by design);
     - ``neardup_pairs = Σ C(m_pid, 2)`` fails if the banded join
       misses a true pair or admits a cross-cluster one (the ≥8-bit
-      margin guarantees none exist at τ=3). ``max_bucket_size=None``
-      because the planted clusters ARE the duplicate families being
-      measured.
+      margin guarantees none exist at τ=3).
     """
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 101) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    from tidb_cdc_spark.session import materialize
-
+    planted = _bmp_plant(spark, sf_dir)
     media = synth_bmp_pixel_media(planted, "media_id")
-    # materialized: THREE aggregate consumers (global scorecard,
-    # per-cluster variant counts, the pair join) — without this the
-    # synth→decode→hash Arrow chain runs once per consumer. The
-    # hash frame is 24 B/row; the payloads are already gone.
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(
-                pairs.agg(F.count(F.lit(1)).alias("neardup_pairs"))
-            )
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# every column derives from the plant arithmetic: payloads are pure
-# functions of (pid-pattern, shift); ahash is provably the pattern's
-# replicated bits (injective across clusters, shift-invariant within,
-# ≥8-bit cross-cluster Hamming margin ⇒ τ=3 pairs are exactly the
-# within-cluster pairs)
-_PHASH_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def media_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,68 +658,10 @@ def media_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (linear), CC is the checkpoint-truncated hash-min loop over
     nodes-in-pairs only. No Python past the sanctioned synth/hash
     Arrow passes."""
-    from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
+    media = synth_bmp_pixel_media(_bmp_plant(spark, sf_dir), "media_id")
+    return _curation_pipeline(
+        media, mh.perceptual_hashes, "ahash", "after_perceptual"
     )
-    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.lit(1) + (F.col("doc_id") % 101) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    media = synth_bmp_pixel_media(planted, "media_id")
-    # stage 1: exact payload dedup — min id per digest, digests only
-    # through the shuffle. Materialized: the survivor set feeds the
-    # perceptual stage AND the scorecard.
-    exact_reps = materialize(
-        media.groupBy(F.sha2("payload", 256).alias("_digest"))
-        .agg(F.min("media_id").alias("media_id"))
-        .select("media_id")
-    )
-    survivors = media.join(exact_reps, "media_id", "left_semi")
-    # stage 2: perceptual collapse over survivors only (24 B hash
-    # rows; three consumers → materialized once). Production path ⇒
-    # the CAPPED default (survivor families here are ≤2 per cluster
-    # by the plant construction — asserted in tests/test_curation.py;
-    # what a cap would exclude is never silent: phash_cap_report)
-    hashes = materialize(perceptual_hashes(survivors))
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=1000)
-    reps = cluster_representatives(
-        hashes.select(F.col("media_id").alias("doc_id")), pairs
-    )
-    n_all = media.agg(F.count(F.lit(1)).alias("n_media"))
-    n_exact = exact_reps.agg(F.count(F.lit(1)).alias("after_exact"))
-    n_perc = reps.filter("is_representative").agg(
-        F.count(F.lit(1)).alias("after_perceptual")
-    )
-    return (
-        n_all.crossJoin(F.broadcast(n_exact))
-        .crossJoin(F.broadcast(n_perc))
-        .select("n_media", "after_exact", "after_perceptual")
-    )
-
-
-_CURATION_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 20 ELSE 0 END AS shift
-  FROM documents WHERE doc_id >= 0
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_media,
-       CAST(COUNT(DISTINCT pid * 100 + shift) AS BIGINT) AS after_exact,
-       CAST(COUNT(DISTINCT pid) AS BIGINT) AS after_perceptual
-FROM m
-"""
 
 
 def media_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -489,90 +686,10 @@ def media_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: digests and 24 B hash rows through the shuffles,
     payloads never; output corpus-sized BY DESIGN (the audit
     artifact, a write job at 100 TB)."""
-    from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
+    media = synth_bmp_pixel_media(_bmp_plant(spark, sf_dir), "media_id")
+    return _curation_provenance(
+        media, mh.perceptual_hashes, "ahash", "dropped_perceptual_dup"
     )
-    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.lit(1) + (F.col("doc_id") % 101) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    media = synth_bmp_pixel_media(planted, "media_id")
-    # (id, exact_rep) for every media: min id per sha2 class
-    digests = materialize(
-        media.select(
-            "media_id", F.sha2("payload", 256).alias("_digest")
-        )
-    )
-    reps = digests.groupBy("_digest").agg(F.min("media_id").alias("_rep"))
-    rep_map = digests.join(reps, "_digest").select("media_id", "_rep")
-    survivors = media.join(
-        rep_map.filter(F.col("media_id") == F.col("_rep")),
-        "media_id",
-        "left_semi",
-    )
-    # production path ⇒ capped default (survivor families ≤2 per
-    # cluster by construction; cap exclusions surface via
-    # phash_cap_report, never silently)
-    hashes = materialize(perceptual_hashes(survivors))
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=1000)
-    cr = cluster_representatives(
-        hashes.select(F.col("media_id").alias("doc_id")), pairs
-    ).select(
-        F.col("doc_id").alias("_rep"),
-        F.col("cluster_id").alias("canonical_id"),
-        "is_representative",
-    )
-    # every media's exact rep IS a survivor, so this join covers all
-    return (
-        rep_map.join(cr, "_rep")
-        .select(
-            "media_id",
-            F.when(F.col("media_id") != F.col("_rep"), F.lit("dropped_exact_dup"))
-            .when(~F.col("is_representative"), F.lit("dropped_perceptual_dup"))
-            .otherwise(F.lit("kept"))
-            .alias("outcome"),
-            F.col("_rep").alias("exact_rep"),
-            "canonical_id",
-        )
-        .orderBy("media_id")
-    )
-
-
-# plant arithmetic: exact classes are (pid, δ) with min-id reps;
-# perceptual clusters are pid (shift-invariant aHash, ≥8-bit
-# cross-cluster margin) with min-id canonicals — and the pid minimum
-# is necessarily its own exact rep, so one hop resolves transitively
-_MEDIA_PROVENANCE_SQL = """
-WITH m AS (
-  SELECT doc_id AS media_id, doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 20 ELSE 0 END AS shift
-  FROM documents WHERE doc_id >= 0
-), e AS (
-  SELECT media_id,
-         MIN(media_id) OVER (PARTITION BY pid, shift) AS exact_rep,
-         MIN(media_id) OVER (PARTITION BY pid) AS canonical_id
-  FROM m
-)
-SELECT media_id,
-       CASE WHEN media_id <> exact_rep THEN 'dropped_exact_dup'
-            WHEN media_id <> canonical_id THEN 'dropped_perceptual_dup'
-            ELSE 'kept' END AS outcome,
-       CAST(exact_rep AS BIGINT) AS exact_rep,
-       CAST(canonical_id AS BIGINT) AS canonical_id
-FROM e ORDER BY media_id
-"""
 
 
 def audio_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,89 +716,10 @@ def audio_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 32 B digests and ~20 B window hashes through the
     shuffles, samples never; output corpus-sized BY DESIGN (the
     audit artifact a run writes next to the corpus)."""
-    from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_near_dup_pairs,
-        audio_window_hashes,
+    media = synth_wav_windowed_media(_wav_plant(spark, sf_dir), "media_id")
+    return _curation_provenance(
+        media, mh.audio_window_hashes, "whash", "dropped_trim_dup"
     )
-    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(2))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-        )
-    )
-    media = synth_wav_windowed_media(planted, "media_id")
-    digests = materialize(
-        media.select("media_id", F.sha2("payload", 256).alias("_digest"))
-    )
-    reps = digests.groupBy("_digest").agg(F.min("media_id").alias("_rep"))
-    rep_map = digests.join(reps, "_digest").select("media_id", "_rep")
-    survivors = media.join(
-        rep_map.filter(F.col("media_id") == F.col("_rep")),
-        "media_id",
-        "left_semi",
-    )
-    wh = materialize(audio_window_hashes(survivors))
-    pairs = audio_near_dup_pairs(
-        wh, min_shared_windows=4, max_window_freq=1000
-    )
-    cr = cluster_representatives(
-        wh.select(F.col("media_id").alias("doc_id")).distinct(), pairs
-    ).select(
-        F.col("doc_id").alias("_rep"),
-        F.col("cluster_id").alias("canonical_id"),
-        "is_representative",
-    )
-    return (
-        rep_map.join(cr, "_rep")
-        .select(
-            "media_id",
-            F.when(F.col("media_id") != F.col("_rep"), F.lit("dropped_exact_dup"))
-            .when(~F.col("is_representative"), F.lit("dropped_trim_dup"))
-            .otherwise(F.lit("kept"))
-            .alias("outcome"),
-            F.col("_rep").alias("exact_rep"),
-            "canonical_id",
-        )
-        .orderBy("media_id")
-    )
-
-
-# plant arithmetic: exact classes are (pid, trimmed) with min-id
-# reps; trim-robust clusters are pid (6 shared windows ≥ 4; 16-bit
-# window-word injectivity forbids cross-pid edges) with min-id
-# canonicals — the pid minimum (variant 0) is its own exact rep, so
-# one hop resolves transitively
-_AUDIO_PROVENANCE_SQL = """
-WITH m AS (
-  SELECT doc_id AS media_id, doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), e AS (
-  SELECT media_id,
-         MIN(media_id) OVER (PARTITION BY pid, trimmed) AS exact_rep,
-         MIN(media_id) OVER (PARTITION BY pid) AS canonical_id
-  FROM m
-)
-SELECT media_id,
-       CASE WHEN media_id <> exact_rep THEN 'dropped_exact_dup'
-            WHEN media_id <> canonical_id THEN 'dropped_trim_dup'
-            ELSE 'kept' END AS outcome,
-       CAST(exact_rep AS BIGINT) AS exact_rep,
-       CAST(canonical_id AS BIGINT) AS canonical_id
-FROM e ORDER BY media_id
-"""
 
 
 def video_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -697,89 +735,15 @@ def video_curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive property under the oracle equality. Scale shape as
     the audio twin (digests + 28 B frame hashes, frames never
     shuffle; corpus-sized audit artifact by design)."""
-    from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
+    media = synth_avi_media(_avi_plant(spark, sf_dir), "media_id")
+    return _curation_provenance(
+        media, mh.video_frame_hashes, "fhash", "dropped_shot_dup"
     )
-    from tidb_cdc_spark.functions.media_synth import synth_avi_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    media = synth_avi_media(planted, "media_id")
-    digests = materialize(
-        media.select("media_id", F.sha2("payload", 256).alias("_digest"))
-    )
-    reps = digests.groupBy("_digest").agg(F.min("media_id").alias("_rep"))
-    rep_map = digests.join(reps, "_digest").select("media_id", "_rep")
-    survivors = media.join(
-        rep_map.filter(F.col("media_id") == F.col("_rep")),
-        "media_id",
-        "left_semi",
-    )
-    fh = materialize(video_frame_hashes(survivors))
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=1000
-    )
-    cr = cluster_representatives(
-        fh.select(F.col("media_id").alias("doc_id")).distinct(), pairs
-    ).select(
-        F.col("doc_id").alias("_rep"),
-        F.col("cluster_id").alias("canonical_id"),
-        "is_representative",
-    )
-    return (
-        rep_map.join(cr, "_rep")
-        .select(
-            "media_id",
-            F.when(F.col("media_id") != F.col("_rep"), F.lit("dropped_exact_dup"))
-            .when(~F.col("is_representative"), F.lit("dropped_shot_dup"))
-            .otherwise(F.lit("kept"))
-            .alias("outcome"),
-            F.col("_rep").alias("exact_rep"),
-            "canonical_id",
-        )
-        .orderBy("media_id")
-    )
-
-
-_VIDEO_PROVENANCE_SQL = """
-WITH m AS (
-  SELECT doc_id AS media_id, doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), e AS (
-  SELECT media_id,
-         MIN(media_id) OVER (PARTITION BY pid, trimmed) AS exact_rep,
-         MIN(media_id) OVER (PARTITION BY pid) AS canonical_id
-  FROM m
-)
-SELECT media_id,
-       CASE WHEN media_id <> exact_rep THEN 'dropped_exact_dup'
-            WHEN media_id <> canonical_id THEN 'dropped_shot_dup'
-            ELSE 'kept' END AS outcome,
-       CAST(exact_rep AS BIGINT) AS exact_rep,
-       CAST(canonical_id AS BIGINT) AS canonical_id
-FROM e ORDER BY media_id
-"""
 
 
 def multimodal_audio_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio perceptual near-dup over REAL decoded PCM samples — the
-    audio member of the r12 pixel-path family: decode 16-bit PCM WAV
+    audio member of the pixel-path family: decode 16-bit PCM WAV
     sample data in pure Python inside the sanctioned Arrow pass
     (``decode_wav_samples``), compute the energy aHash
     (``audio_fingerprint64``), and find Hamming-≤3 pairs with the
@@ -792,83 +756,15 @@ def multimodal_audio_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably the pattern byte's replicated bits (injective, ≥8-bit
     margin, gain-invariant — ``synth_wav_pcm_media``), so every
     column derives from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_fingerprints,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 101) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-        )
-    )
+    planted = _plant(spark, sf_dir, 101, pattern=_PATTERN, gain=(1, 1, 3))
     media = synth_wav_pcm_media(planted, "media_id")
-    # materialized: three aggregate consumers of the 16 B hash rows
-    hashes = materialize(
-        audio_fingerprints(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(
-        hashes, hash_col="afp", max_hamming=3, max_bucket_size=None
-    )
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("afp").alias("_na")
-    )
-    return (
-        hashes.agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.countDistinct("afp").alias("distinct_afp"),
-        )
-        .crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_afp_variants")
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_afp",
-            "max_cluster_afp_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-_AUDIO_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_afp,
-       CAST(1 AS BIGINT) AS max_cluster_afp_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.audio_fingerprints(media), ("afp",))
 
 
 def multimodal_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-dup over REAL decoded frames — the video member of
-    the r12 sample-path family: decode uncompressed-AVI raw-DIB
-    frames in pure Python inside the sanctioned Arrow pass
+    the sample-path family: decode uncompressed-AVI raw-DIB frames in
+    pure Python inside the sanctioned Arrow pass
     (``decode_avi_frames``), hash each frame with the shared
     ``ahash64``, and find videos sharing ≥4 distinct frame hashes
     via the inverted-index join (``video_near_dup_pairs``) — the
@@ -885,83 +781,11 @@ def multimodal_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives from id arithmetic — including ``total_duration_ms``,
     which the REAL ``avih`` header parse recovers from the planted
     µs-per-frame × total-frames fields (40 ms × 8 or 7)."""
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_avi_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("pid"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
+    planted = _avi_plant(spark, sf_dir)
     media = synth_avi_media(planted, "media_id")
-    # materialized: the 28 B frame-hash rows feed three aggregate
-    # consumers; the probed duration agg re-reads payloads once more
-    # (the real avih parse is the thing under oracle there)
-    fh = materialize(
-        video_frame_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
+    return _cluster_audit(
+        planted, mh.video_frame_hashes(media), ("fhash",), probed=probe_media(media)
     )
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=None
-    )
-    dur = probe_media(media).agg(
-        F.sum("duration_ms").cast("long").alias("total_duration_ms")
-    )
-    return (
-        fh.agg(
-            F.countDistinct("media_id").alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.count(F.lit(1)).alias("n_frame_rows"),
-            F.countDistinct("fhash").alias("distinct_fhash"),
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .crossJoin(F.broadcast(dur))
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_frame_rows",
-            "distinct_fhash",
-            "neardup_pairs",
-            "total_duration_ms",
-        )
-    )
-
-
-_VIDEO_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
-       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
-            AS BIGINT) AS distinct_fhash,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs,
-       CAST((SELECT SUM(320 - 40 * trimmed) FROM m) AS BIGINT)
-            AS total_duration_ms
-"""
 
 
 def multimodal_audio_trim_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,63 +809,10 @@ def multimodal_audio_trim_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from id arithmetic — including ``total_duration_ms``, which the
     REAL RIFF parse recovers from the planted rate/data-length
     fields (64 ms per window: 512 or 384)."""
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_near_dup_pairs,
-        audio_window_hashes,
-    )
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("pid"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(2))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-        )
-    )
+    planted = _wav_plant(spark, sf_dir)
     media = synth_wav_windowed_media(planted, "media_id")
-    # materialized: the ~20 B window-hash rows feed three aggregate
-    # consumers; the probed duration agg re-reads payloads once more
-    # (the real RIFF duration parse is the thing under oracle there)
-    wh = materialize(
-        audio_window_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = audio_near_dup_pairs(
-        wh, min_shared_windows=4, max_window_freq=None
-    )
-    dur = probe_media(media).agg(
-        F.sum("duration_ms").cast("long").alias("total_duration_ms")
-    )
-    return (
-        wh.agg(
-            F.countDistinct("media_id").alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.count(F.lit(1)).alias("n_window_rows"),
-            F.countDistinct("whash").alias("distinct_whash"),
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .crossJoin(F.broadcast(dur))
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_window_rows",
-            "distinct_whash",
-            "neardup_pairs",
-            "total_duration_ms",
-        )
+    return _cluster_audit(
+        planted, mh.audio_window_hashes(media), ("whash",), probed=probe_media(media)
     )
 
 
@@ -1093,71 +864,10 @@ def audio_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes — payload bytes never reach a shuffle; pairs are
     inverted-index (linear in total windows), CC is the
     checkpoint-truncated hash-min loop over nodes-in-pairs only."""
-    from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_near_dup_pairs,
-        audio_window_hashes,
+    media = synth_wav_windowed_media(_wav_plant(spark, sf_dir), "media_id")
+    return _curation_pipeline(
+        media, mh.audio_window_hashes, "whash", "after_trim_robust"
     )
-    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(2))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-        )
-    )
-    media = synth_wav_windowed_media(planted, "media_id")
-    # stage 1: exact payload dedup — min id per digest, digests only
-    # through the shuffle; survivors feed stage 2 AND the scorecard
-    exact_reps = materialize(
-        media.groupBy(F.sha2("payload", 256).alias("_digest"))
-        .agg(F.min("media_id").alias("media_id"))
-        .select("media_id")
-    )
-    survivors = media.join(exact_reps, "media_id", "left_semi")
-    # stage 2: trim-robust collapse over survivors only (~20 B
-    # window-hash rows; two consumers → materialized once)
-    wh = materialize(audio_window_hashes(survivors))
-    # production path ⇒ capped default (survivor window-hash doc
-    # frequency ≤2 per cluster by construction — asserted in tests)
-    pairs = audio_near_dup_pairs(
-        wh, min_shared_windows=4, max_window_freq=1000
-    )
-    reps = cluster_representatives(
-        wh.select(F.col("media_id").alias("doc_id")).distinct(), pairs
-    )
-    n_all = media.agg(F.count(F.lit(1)).alias("n_media"))
-    n_exact = exact_reps.agg(F.count(F.lit(1)).alias("after_exact"))
-    n_trim = reps.filter("is_representative").agg(
-        F.count(F.lit(1)).alias("after_trim_robust")
-    )
-    return (
-        n_all.crossJoin(F.broadcast(n_exact))
-        .crossJoin(F.broadcast(n_trim))
-        .select("n_media", "after_exact", "after_trim_robust")
-    )
-
-
-_AUDIO_CURATION_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_media,
-       CAST(COUNT(DISTINCT pid * 10 + trimmed) AS BIGINT) AS after_exact,
-       CAST(COUNT(DISTINCT pid) AS BIGINT) AS after_trim_robust
-FROM m
-"""
 
 
 def video_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1185,68 +895,10 @@ def video_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes — frame bytes never reach a shuffle; pairs are
     inverted-index (linear in total frames), CC is the
     checkpoint-truncated hash-min loop over nodes-in-pairs only."""
-    from tidb_cdc_spark.functions.clusters import cluster_representatives
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
+    media = synth_avi_media(_avi_plant(spark, sf_dir), "media_id")
+    return _curation_pipeline(
+        media, mh.video_frame_hashes, "fhash", "after_shot_robust"
     )
-    from tidb_cdc_spark.functions.media_synth import synth_avi_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    media = synth_avi_media(planted, "media_id")
-    exact_reps = materialize(
-        media.groupBy(F.sha2("payload", 256).alias("_digest"))
-        .agg(F.min("media_id").alias("media_id"))
-        .select("media_id")
-    )
-    survivors = media.join(exact_reps, "media_id", "left_semi")
-    fh = materialize(video_frame_hashes(survivors))
-    # production path ⇒ capped default (survivor frame-hash doc
-    # frequency ≤2 per cluster by construction — asserted in tests;
-    # cap exclusions surface via video_frame_cap_report)
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=1000
-    )
-    reps = cluster_representatives(
-        fh.select(F.col("media_id").alias("doc_id")).distinct(), pairs
-    )
-    n_all = media.agg(F.count(F.lit(1)).alias("n_media"))
-    n_exact = exact_reps.agg(F.count(F.lit(1)).alias("after_exact"))
-    n_shot = reps.filter("is_representative").agg(
-        F.count(F.lit(1)).alias("after_shot_robust")
-    )
-    return (
-        n_all.crossJoin(F.broadcast(n_exact))
-        .crossJoin(F.broadcast(n_shot))
-        .select("n_media", "after_exact", "after_shot_robust")
-    )
-
-
-_VIDEO_CURATION_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid,
-         CASE WHEN (doc_id // 101) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_media,
-       CAST(COUNT(DISTINCT pid * 10 + trimmed) AS BIGINT) AS after_exact,
-       CAST(COUNT(DISTINCT pid) AS BIGINT) AS after_shot_robust
-FROM m
-"""
 
 
 def multimodal_dct_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1269,85 +921,16 @@ def multimodal_dct_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     injective with min pairwise Hamming 4 > τ=3 (both pinned over
     the full domain in tests/test_phash.py), so every column derives
     from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        dct_phashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_bmp_block16_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 101) * 643 % 65534).alias("word"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(6))
-            .otherwise(F.lit(0))
-            .alias("noise"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        101,
+        word="1 + pid * 643 % 65534",
+        shift=(0, 0, 20),
+        noise=(0, 0, 6),
     )
     media = synth_bmp_block16_media(planted, "media_id")
-    # materialized: three aggregate consumers of the 16 B hash rows
-    hashes = materialize(
-        dct_phashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(
-        hashes, hash_col="phash", max_hamming=3, max_bucket_size=None
-    )
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("phash").alias("_np")
-    )
-    return (
-        hashes.agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.countDistinct("phash").alias("distinct_phash"),
-        )
-        .crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_np").cast("long").alias("max_cluster_phash_variants")
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_phash",
-            "max_cluster_phash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# every column derives from the plant arithmetic: the 101-word hash
-# set is injective (distinct_phash = n_clusters), both planted
-# transforms are exactly hash-invariant (max variants 1), and the
-# min-pairwise-Hamming-4 margin forbids cross-cluster pairs at τ=3
-# (all three properties pinned over the full domain in tests)
-_DCT_PHASH_SQL = """
-WITH m AS (
-  SELECT doc_id % 101 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_phash,
-       CAST(1 AS BIGINT) AS max_cluster_phash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.dct_phashes(media), ("phash",))
 
 
 def phash_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1368,26 +951,9 @@ def phash_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters (an identical-hash family floods ALL its tables — the
     equality is itself the structural statement), max_bucket =
     max m_pid — all pure id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_cap_report as _report,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_bmp_pixel_media
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.lit(1) + (F.col("doc_id") % 101) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    media = synth_bmp_pixel_media(planted, "media_id")
-    return _report(
-        perceptual_hashes(media), max_hamming=3, max_bucket_size=4
+    media = synth_bmp_pixel_media(_bmp_plant(spark, sf_dir), "media_id")
+    return mh.phash_cap_report(
+        mh.perceptual_hashes(media), max_hamming=3, max_bucket_size=4
     )
 
 
@@ -1425,28 +991,8 @@ def video_frame_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected_media = Σ n over clusters with n>4 (every member holds
     frames 1..7; n_full ≤ n makes the frame-0 term subsumed),
     total_fhashes = Σ (7 + [n_full>0]), max_freq = max n."""
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_frame_cap_report as _report,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_avi_media
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
-    media = synth_avi_media(planted, "media_id")
-    return _report(video_frame_hashes(media), max_frame_freq=4)
+    media = synth_avi_media(_avi_plant(spark, sf_dir), "media_id")
+    return mh.video_frame_cap_report(mh.video_frame_hashes(media), max_frame_freq=4)
 
 
 _VIDEO_CAP_SQL = """
@@ -1476,7 +1022,7 @@ def audio_window_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard excludes (``functions/media_hash.py::
     audio_window_cap_report``), completing the cap-report family
     (winnow / phash / video / audio — every guarded join in the repo
-    now has its exclusion report). Run with cap=4 over the
+    has its exclusion report). Run with cap=4 over the
     ``multimodal_audio_trim_audit`` plant: cluster ``pid = doc_id %
     101`` plants n members of which the trimmed variants cut windows
     0-1 and regain ×3 (gain-invariant per-window hashes ⇒ trimmed
@@ -1485,28 +1031,10 @@ def audio_window_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     — whence capped_whashes = Σ (6·[n>4] + 2·[n_full>4]),
     affected_media = Σ n over clusters with n>4, total_whashes =
     Σ (6 + 2·[n_full>0]), max_freq = max n. Pure id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_window_cap_report as _report,
-        audio_window_hashes,
+    media = synth_wav_windowed_media(_wav_plant(spark, sf_dir), "media_id")
+    return mh.audio_window_cap_report(
+        mh.audio_window_hashes(media), max_window_freq=4
     )
-    from tidb_cdc_spark.functions.media_synth import synth_wav_windowed_media
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)  # non-negative-id contract
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 101).alias("base"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(2))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 101") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-        )
-    )
-    media = synth_wav_windowed_media(planted, "media_id")
-    return _report(audio_window_hashes(media), max_window_freq=4)
 
 
 _AUDIO_CAP_SQL = """
@@ -1531,12 +1059,12 @@ FROM c
 
 
 def multimodal_anim_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Animated-container probe — the animation twin of the r10
-    WAV/MP4 audit: every document id gets a REAL animated container
-    with formula-valued animation metadata (`synth_anim_probe_media`
-    — even ids an animated GIF whose GCE delays are
-    ``2 + id % 50`` cs over ``2 + id % 7`` frames, odd ids an
-    animated WebP (VP8X+ANIM+ANMF) with ``20 + id % 500`` ms per
+    """Animated-container probe — the animation counterpart of
+    ``multimodal_probe_audit``: every document id gets a REAL animated
+    container with formula-valued animation metadata
+    (`synth_anim_probe_media` — even ids an animated GIF whose GCE
+    delays are ``2 + id % 50`` cs over ``2 + id % 7`` frames, odd ids
+    an animated WebP (VP8X+ANIM+ANMF) with ``20 + id % 500`` ms per
     frame), and the output is what the HEADER-ONLY walks recovered
     through the real Arrow-batched `probe_media` pass — mime, canvas
     dims, and the summed duration (frame bitstreams length-skipped:
@@ -1545,16 +1073,8 @@ def multimodal_anim_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence in the GCE delay bytes, the VP8X flag/canvas fields,
     the ANMF 24-bit duration, or the even-padding walk flips the
     hash."""
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_anim_probe_media
-
-    ids = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .where(F.col("doc_id") >= 0)
-    )
     return (
-        probe_media(synth_anim_probe_media(ids, "doc_id"))
+        probe_media(synth_anim_probe_media(_plant(spark, sf_dir), "media_id"))
         .select(
             "media_id",
             "mime",
@@ -1595,16 +1115,8 @@ def multimodal_audio_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas; any divergence in the bit unpacking, the syncsafe
     arithmetic, the Xing offset (mono side-info), or the bitrate
     table flips the hash."""
-    from tidb_cdc_spark.functions.media_probe import probe_media
-    from tidb_cdc_spark.functions.media_synth import synth_audio_probe_media
-
-    ids = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .where(F.col("doc_id") >= 0)
-    )
     return (
-        probe_media(synth_audio_probe_media(ids, "doc_id"))
+        probe_media(synth_audio_probe_media(_plant(spark, sf_dir), "media_id"))
         .select(
             "media_id",
             "mime",
@@ -1652,80 +1164,16 @@ def audio_g711_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     patterns × both gains × both laws (0 mismatches), so
     ``distinct_afp = n_clusters`` iff the expansion tables and the
     format-tag routing are right. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_fingerprints,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 109).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 109) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 109") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-            F.when(F.expr("doc_id div 109") % 3 == 1, F.lit("ulaw"))
-            .when(F.expr("doc_id div 109") % 3 == 2, F.lit("alaw"))
-            .otherwise(F.lit("pcm16"))
-            .alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        109,
+        pattern=_PATTERN,
+        gain=(1, 1, 3),
+        codec=("pcm16", "ulaw", "alaw"),
     )
     media = synth_wav_pcm_media(planted, "media_id", codec_col="codec")
-    hashes = materialize(
-        audio_fingerprints(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(
-        hashes, hash_col="afp", max_hamming=3, max_bucket_size=None
-    )
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("afp").alias("_na")
-    )
-    return (
-        hashes.agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.countDistinct("afp").alias("distinct_afp"),
-        )
-        .crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_afp_variants")
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_afp",
-            "max_cluster_afp_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-_G711_SQL = """
-WITH m AS (
-  SELECT doc_id % 109 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_afp,
-       CAST(1 AS BIGINT) AS max_cluster_afp_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.audio_fingerprints(media), ("afp",))
 
 
 def audio_adpcm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1749,79 +1197,16 @@ def audio_adpcm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tellings of one signal, so ``distinct_afp = n_clusters`` iff
     the block walk, the adaptive recurrence, and the format-tag
     routing are all right. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        audio_fingerprints,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_wav_pcm_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 127).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 127) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 127") % 3 == 2, F.lit(3))
-            .otherwise(F.lit(1))
-            .alias("gain"),
-            F.when(F.expr("doc_id div 127") % 3 == 0, F.lit("pcm16"))
-            .otherwise(F.lit("adpcm"))
-            .alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        127,
+        pattern=_PATTERN,
+        gain=(1, 1, 3),
+        codec=("pcm16", "adpcm", "adpcm"),
     )
     media = synth_wav_pcm_media(planted, "media_id", codec_col="codec")
-    hashes = materialize(
-        audio_fingerprints(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(
-        hashes, hash_col="afp", max_hamming=3, max_bucket_size=None
-    )
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("afp").alias("_na")
-    )
-    return (
-        hashes.agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.countDistinct("afp").alias("distinct_afp"),
-        )
-        .crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_afp_variants")
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_afp",
-            "max_cluster_afp_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-_ADPCM_SQL = """
-WITH m AS (
-  SELECT doc_id % 127 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_afp,
-       CAST(1 AS BIGINT) AS max_cluster_afp_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.audio_fingerprints(media), ("afp",))
 
 
 def multimodal_png_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1850,90 +1235,17 @@ def multimodal_png_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       a cluster (three byte-disjoint encodings of the same pixels);
     - ``neardup_pairs = Σ C(m_pid, 2)`` fails if the banded join
       misses a true pair or admits a cross-cluster one.
-      ``max_bucket_size=None`` because the planted clusters ARE the
-      duplicate families being measured.
     """
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 97).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 97) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 97") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.element_at(
-                F.array(F.lit("png"), F.lit("png_gray"), F.lit("png_pal")),
-                (F.expr("doc_id div 97") % 3 + 1).cast("int"),
-            ).alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        97,
+        pattern=_PATTERN,
+        shift=(0, 0, 20),
+        codec=("png", "png_gray", "png_pal"),
     )
     media = synth_codec_pixel_media(planted, "media_id")
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# every column derives from the plant arithmetic: payloads are pure
-# functions of (pid-pattern, colortype-variant, shift); ahash is
-# provably the pattern's replicated bits — injective across clusters,
-# invariant across color types (luma(g,g,g) = g) and shift, ≥8-bit
-# cross-cluster margin ⇒ τ=3 pairs are exactly the within-cluster ones
-_PNG_PHASH_SQL = """
-WITH m AS (
-  SELECT doc_id % 97 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def multimodal_codec_matrix_audit(
@@ -1958,100 +1270,19 @@ def multimodal_codec_matrix_audit(
       diverging by a single pixel breaks them;
     - ``neardup_pairs = Σ C(m_pid, 2)``: the banded join sees every
       re-encoded pair and no cross-cluster one (≥8-bit margin).
-      ``max_bucket_size=None`` — the planted families are the
-      signal.
     """
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import (
-        CODEC_LEGS,
-        synth_codec_pixel_media,
-    )
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 89).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 89) % 254).alias("pattern"),
-            F.lit(0).alias("shift"),
-            F.element_at(
-                F.array(*[F.lit(c) for c in CODEC_LEGS]),
-                (F.expr("doc_id div 89") % 6 + 1).cast("int"),
-            ).alias("codec"),
-        )
+    planted = _plant(
+        spark, sf_dir, 89, pattern=_PATTERN, shift="0", codec=CODEC_LEGS
     )
     media = synth_codec_pixel_media(planted, "media_id")
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid", "codec"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("codec").alias("n_codecs"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_codecs",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: the codec leg is (doc_id div 89) % 6 — byte-level
-# encodings differ, pixels are identical, so distinct_ahash collapses
-# to the cluster count iff all six decode paths agree pixel-for-pixel
-_CODEC_MATRIX_SQL = """
-WITH m AS (
-  SELECT doc_id % 89 AS pid, (doc_id // 89) % 6 AS leg
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT leg) FROM m) AS BIGINT) AS n_codecs,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media), n_codecs=True)
 
 
 def multimodal_jpeg_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup over REAL decoded BASELINE-JPEG pixels —
-    the lossy-codec member of the family, and the format the r12
-    verdict named as the gap: pure-Python/numpy Huffman + zigzag +
-    dequant + orthogonal IDCT (``functions/jpeg.py``), no codec
-    library, wired through the same ``decode_pixels`` boundary.
+    the lossy-codec member of the family: pure-Python/numpy Huffman
+    + zigzag + dequant + orthogonal IDCT (``functions/jpeg.py``), no
+    codec library, wired through the same ``decode_pixels`` boundary.
 
     JPEG is lossy in general, so the plant is chosen where it is
     provably EXACT: 64×64 images whose 8×8 aHash grid cells coincide
@@ -2071,93 +1302,22 @@ def multimodal_jpeg_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays exact) — with a +20 brightness shift (different DCs,
     different BYTES, same hash). Scorecard semantics identical to
     the PNG audit; all columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 83).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 83) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 83") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.when(F.expr("doc_id div 83") % 3 == 1, F.lit("jpeg_rgb"))
-            .when(F.expr("doc_id div 83") % 3 == 2, F.lit("jpeg_420"))
-            .otherwise(F.lit("jpeg"))
-            .alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        83,
+        pattern=_PATTERN,
+        shift=(0, 0, 20),
+        codec=("jpeg", "jpeg_rgb", "jpeg_420"),
     )
     media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: 64×64 flat-block plants make the lossy codec
-# EXACT (DC-only spectra at quant 1), so ahash is provably the
-# pattern's replicated bits — injective across clusters, invariant
-# across scan type (gray vs neutral-chroma color) and brightness
-# shift, ≥8-bit margin ⇒ τ=3 pairs are exactly the within-cluster ones
-_JPEG_PHASH_SQL = """
-WITH m AS (
-  SELECT doc_id % 83 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def multimodal_png_deep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full-envelope PNG audit — the r13 close of the format's
-    remaining reject paths: Adam7 interlace, 16-bit samples, alpha,
-    sub-byte palette depths. Variant ``doc_id div 79 % 6`` selects
+    """The full-envelope PNG audit — the format's remaining reject
+    paths: Adam7 interlace, 16-bit samples, alpha, sub-byte palette
+    depths. Variant ``doc_id div 79 % 6`` selects
     one of the six ``PNG_DEEP_LEGS`` for cluster ``pid = doc_id %
     79``: Adam7-interlaced RGB, 16-bit grayscale (samples v·257 —
     the standard bit-replication expansion, whose high byte is
@@ -2176,94 +1336,12 @@ def multimodal_png_deep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       drifting from the identity at a=255 breaks them;
     - ``neardup_pairs = Σ C(m_pid, 2)``: the banded join sees every
       re-encoded pair and no cross-cluster one (≥8-bit margin).
-      ``max_bucket_size=None`` — the planted families are the
-      signal.
     """
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import (
-        PNG_DEEP_LEGS,
-        synth_codec_pixel_media,
-    )
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 79).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 79) % 254).alias("pattern"),
-            F.lit(0).alias("shift"),
-            F.element_at(
-                F.array(*[F.lit(c) for c in PNG_DEEP_LEGS]),
-                (F.expr("doc_id div 79") % 6 + 1).cast("int"),
-            ).alias("codec"),
-        )
+    planted = _plant(
+        spark, sf_dir, 79, pattern=_PATTERN, shift="0", codec=PNG_DEEP_LEGS
     )
     media = synth_codec_pixel_media(planted, "media_id")
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid", "codec"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("codec").alias("n_codecs"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_codecs",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: leg = (doc_id div 79) % 6 over PNG_DEEP_LEGS —
-# byte-disjoint encodings, identical pixels, so distinct_ahash
-# collapses to the cluster count iff Adam7 reassembly, the 16-bit
-# high-byte reduction, alpha-over-white compositing and the depth-2
-# palette all reproduce the 8-bit reference pixels exactly
-_PNG_DEEP_SQL = """
-WITH m AS (
-  SELECT doc_id % 79 AS pid, (doc_id // 79) % 6 AS leg
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT leg) FROM m) AS BIGINT) AS n_codecs,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media), n_codecs=True)
 
 
 def multimodal_jpeg_prog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2284,94 +1362,23 @@ def multimodal_jpeg_prog_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift-invariant) carries through the multi-scan reassembly
     unchanged. Scorecard semantics identical to the baseline JPEG
     audit; all columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 73).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 73) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 73") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.when(F.expr("doc_id div 73") % 3 == 1, F.lit("jpeg_prog"))
-            .when(F.expr("doc_id div 73") % 3 == 2, F.lit("jpeg_prog_420"))
-            .otherwise(F.lit("jpeg"))
-            .alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        73,
+        pattern=_PATTERN,
+        shift=(0, 0, 20),
+        codec=("jpeg", "jpeg_prog", "jpeg_prog_420"),
     )
     media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: variant selects baseline gray / progressive gray /
-# progressive 4:2:0 (+20 shift) — byte-disjoint streams, identical
-# coefficients, so distinct_ahash collapses to the cluster count iff
-# the multi-scan progressive reassembly is coefficient-exact
-_JPEG_PROG_SQL = """
-WITH m AS (
-  SELECT doc_id % 73 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def multimodal_webp_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VP8L lossless-WebP audit — the codec family's last named
-    format (`functions/webp.py`): RIFF walk, VP8L entropy-coded
-    images (simple + normal prefix codes with 16/17/18 repeats and
-    the max-symbol cap), LZ77 backrefs + color cache, and the
-    transform machinery, all pure Python. Variant ``doc_id div 71 %
+    """The VP8L lossless-WebP audit (`functions/webp.py`): RIFF walk,
+    VP8L entropy-coded images (simple + normal prefix codes with
+    16/17/18 repeats and the max-symbol cap), LZ77 backrefs + color
+    cache, and the transform machinery, all pure Python. Variant ``doc_id div 71 %
     3`` for cluster ``pid = doc_id % 71``: 0 → plain ARGB literals,
     1 → color-indexing transform (2-entry palette ⇒ 8-pixel-per-byte
     index bundling), 2 → LZ77 copy-above + color cache + max-symbol
@@ -2379,86 +1386,16 @@ def multimodal_webp_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aHash lemma carries over exactly (byte-disjoint encodings,
     identical pixels). Scorecard semantics identical to the PNG
     audit; all columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 71).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 71) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 71") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.when(F.expr("doc_id div 71") % 3 == 1, F.lit("webp_pal"))
-            .when(F.expr("doc_id div 71") % 3 == 2, F.lit("webp_lz"))
-            .otherwise(F.lit("webp"))
-            .alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        71,
+        pattern=_PATTERN,
+        shift=(0, 0, 20),
+        codec=("webp", "webp_pal", "webp_lz"),
     )
     media = synth_codec_pixel_media(planted, "media_id")
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: variant selects literal / palette-bundled / LZ77+
-# cache VP8L encodings (+20 shift on the third) — byte-disjoint,
-# lossless, identical pixels ⇒ distinct_ahash = cluster count iff the
-# VP8L entropy/transform machinery is pixel-exact
-_WEBP_PHASH_SQL = """
-WITH m AS (
-  SELECT doc_id % 71 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def multimodal_exif_orientation_audit(
@@ -2482,88 +1419,16 @@ def multimodal_exif_orientation_audit(
     / exact τ=3 pair counts all hold iff the tag parse AND the
     normalization transform are correct. All columns from id
     arithmetic alone."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 67).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 67) % 254).alias("pattern"),
-            F.lit(0).alias("shift"),
-            F.element_at(
-                F.array(
-                    F.lit("jpeg"), F.lit("jpeg_o3"),
-                    F.lit("jpeg_o6"), F.lit("jpeg_o8"),
-                ),
-                (F.expr("doc_id div 67") % 4 + 1).cast("int"),
-            ).alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        67,
+        pattern=_PATTERN,
+        shift="0",
+        codec=("jpeg", "jpeg_o3", "jpeg_o6", "jpeg_o8"),
     )
     media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: variant selects the EXIF orientation leg — the
-# stored pixels are rotated, the tag says how to un-rotate them, and
-# distinct_ahash collapses to the cluster count iff the normalization
-# is exact. Rotations are index permutations of block-aligned flat
-# plants, so the JPEG exactness lemma is untouched.
-_EXIF_ORIENTATION_SQL = """
-WITH m AS (
-  SELECT doc_id % 67 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def multimodal_webp_lossy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2578,93 +1443,50 @@ def multimodal_webp_lossy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BMP anchor, 1 → the SAME pixels through libwebp's REAL
     lossy encoder (``WebPEncodeRGBA`` q=95), 2 → lossy with a +20
     brightness shift. The 64×64 flat-block plant's ≥8-bit
-    cross-pattern margin absorbs VP8's quantization noise (verified
-    empirically over all 254 patterns × both shifts: aHash and dHash
-    both survive the lossy round-trip bit-exactly), so
+    cross-pattern margin (120 gray levels) absorbs VP8's quantization
+    noise (verified empirically over all 254 patterns × both shifts:
+    aHash and dHash both survive the lossy round-trip bit-exactly), so
     ``distinct_ahash = n_clusters`` iff the tag-sniff → ctypes
     decode → BT.601 reduction chain is correct — a lossy re-save of
     an image collapses onto its exact twin, the admission claim this
     branch exists for. All columns from id arithmetic alone."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 69).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 69) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 69") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.when(F.expr("doc_id div 69") % 3 == 0, F.lit("bmp"))
-            .otherwise(F.lit("webp_lossy"))
-            .alias("codec"),
-        )
+    planted = _plant(
+        spark,
+        sf_dir,
+        69,
+        pattern=_PATTERN,
+        shift=(0, 0, 20),
+        codec=("bmp", "webp_lossy", "webp_lossy"),
     )
     media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
-# plant arithmetic: variant selects exact-BMP anchor / lossy VP8 /
-# lossy VP8 +20 shift — the lossy copies must hash onto the anchor
-# (the flat plant's 120-gray-level margin dominates quantization
-# noise), so distinct_ahash = cluster count iff the libwebp decode
-# branch is live and reduction-exact
-_WEBP_LOSSY_SQL = """
-WITH m AS (
-  SELECT doc_id % 69 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+def multimodal_tiff_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The baseline-TIFF audit — the last common still format joins
+    the codec family (`functions/media_decode.py::decode_tiff_pixels`:
+    both byte orders, multi-strip, photometric 0/1/2/3, 1/8/16-bit,
+    RGBA-over-white, and the TIFF Orientation tag normalized through
+    the shared `apply_exif_orientation`). Variant ``doc_id div 97 %
+    4`` for cluster ``pid = doc_id % 97``: 0 → the BMP anchor, 1 →
+    gray little-endian multi-strip TIFF, 2 → big-endian RGB TIFF
+    with a +20 brightness shift, 3 → an Orientation-6 TIFF storing
+    the inverse-rotated pixels (the scanner-rotation trap — byte-
+    different, pixel-rotated, must normalize onto the upright
+    anchor). All legs lossless ⇒ the flat-plant aHash lemma carries
+    exactly; ``distinct_ahash = n_clusters`` iff the IFD walk, strip
+    assembly, endianness, photometric handling, and orientation
+    normalization are all right. All columns from id arithmetic."""
+    planted = _plant(
+        spark,
+        sf_dir,
+        97,
+        pattern=_PATTERN,
+        shift=(0, 0, 20, 0),
+        codec=("bmp", "tiff", "tiff_rgb_be", "tiff_o6"),
+    )
+    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
+    return _cluster_audit(planted, mh.perceptual_hashes(media))
 
 
 def animated_gif_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2687,75 +1509,9 @@ def animated_gif_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every composed hash provably the word's replicated bits
     (injective over (pid, frame): pid·8+7 ≤ 823 ≪ 65534;
     shift-invariant), so all columns derive from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_gif_anim_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 103).alias("pid"),
-            (F.col("doc_id") % 103).alias("base"),
-            F.when(F.expr("doc_id div 103") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 103") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
+    planted = _plant(spark, sf_dir, 103, **_TRIM_SHIFT)
     media = synth_gif_anim_media(planted, "media_id")
-    fh = materialize(
-        video_frame_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=None
-    )
-    return (
-        fh.agg(
-            F.countDistinct("media_id").alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.count(F.lit(1)).alias("n_frame_rows"),
-            F.countDistinct("fhash").alias("distinct_fhash"),
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_frame_rows",
-            "distinct_fhash",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: trimmed members carry 7 frames; a cluster's
-# distinct composed-frame hashes are 8 iff any member is untrimmed
-# (frame words are disjoint across clusters)
-_GIF_ANIM_SQL = """
-WITH m AS (
-  SELECT doc_id % 103 AS pid,
-         CASE WHEN (doc_id // 103) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
-       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
-            AS BIGINT) AS distinct_fhash,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.video_frame_hashes(media), ("fhash",))
 
 
 def animated_webp_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2776,173 +1532,14 @@ def animated_webp_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. 16-bit frame words injective over (pid, frame)
     (pid·8+7 ≤ 855 ≪ 65534; shift-invariant); all columns from id
     arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_webp_anim_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 107).alias("pid"),
-            (F.col("doc_id") % 107).alias("base"),
-            F.when(F.expr("doc_id div 107") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 107") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
+    planted = _plant(spark, sf_dir, 107, **_TRIM_SHIFT)
     media = synth_webp_anim_media(planted, "media_id")
-    fh = materialize(
-        video_frame_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=None
-    )
-    return (
-        fh.agg(
-            F.countDistinct("media_id").alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.count(F.lit(1)).alias("n_frame_rows"),
-            F.countDistinct("fhash").alias("distinct_fhash"),
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_frame_rows",
-            "distinct_fhash",
-            "neardup_pairs",
-        )
-    )
-
-
-_WEBP_ANIM_SQL = """
-WITH m AS (
-  SELECT doc_id % 107 AS pid,
-         CASE WHEN (doc_id // 107) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
-       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
-            AS BIGINT) AS distinct_fhash,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
-
-
-def multimodal_tiff_phash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The baseline-TIFF audit — the last common still format joins
-    the codec family (`functions/media_decode.py::decode_tiff_pixels`:
-    both byte orders, multi-strip, photometric 0/1/2/3, 1/8/16-bit,
-    RGBA-over-white, and the TIFF Orientation tag normalized through
-    the shared `apply_exif_orientation`). Variant ``doc_id div 97 %
-    4`` for cluster ``pid = doc_id % 97``: 0 → the BMP anchor, 1 →
-    gray little-endian multi-strip TIFF, 2 → big-endian RGB TIFF
-    with a +20 brightness shift, 3 → an Orientation-6 TIFF storing
-    the inverse-rotated pixels (the scanner-rotation trap — byte-
-    different, pixel-rotated, must normalize onto the upright
-    anchor). All legs lossless ⇒ the flat-plant aHash lemma carries
-    exactly; ``distinct_ahash = n_clusters`` iff the IFD walk, strip
-    assembly, endianness, photometric handling, and orientation
-    normalization are all right. All columns from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        perceptual_hashes,
-        phash_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_codec_pixel_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 97).alias("pid"),
-            (F.lit(1) + (F.col("doc_id") % 97) % 254).alias("pattern"),
-            F.when(F.expr("doc_id div 97") % 4 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.element_at(
-                F.array(
-                    F.lit("bmp"), F.lit("tiff"),
-                    F.lit("tiff_rgb_be"), F.lit("tiff_o6"),
-                ),
-                (F.expr("doc_id div 97") % 4 + 1).cast("int"),
-            ).alias("codec"),
-        )
-    )
-    media = synth_codec_pixel_media(planted, "media_id", width=64, height=64)
-    hashes = materialize(
-        perceptual_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = phash_near_dup_pairs(hashes, max_hamming=3, max_bucket_size=None)
-    per_cluster = hashes.groupBy("pid").agg(
-        F.countDistinct("ahash").alias("_na"),
-        F.countDistinct("dhash").alias("_nd"),
-    )
-    scorecard = hashes.agg(
-        F.count(F.lit(1)).alias("n_media"),
-        F.countDistinct("pid").alias("n_clusters"),
-        F.countDistinct("ahash").alias("distinct_ahash"),
-    )
-    return (
-        scorecard.crossJoin(
-            F.broadcast(
-                per_cluster.agg(
-                    F.max("_na").cast("long").alias("max_cluster_ahash_variants"),
-                    F.max("_nd").cast("long").alias("max_cluster_dhash_variants"),
-                )
-            )
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "distinct_ahash",
-            "max_cluster_ahash_variants",
-            "max_cluster_dhash_variants",
-            "neardup_pairs",
-        )
-    )
-
-
-_TIFF_PHASH_SQL = """
-WITH m AS (
-  SELECT doc_id % 97 AS pid
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS distinct_ahash,
-       CAST(1 AS BIGINT) AS max_cluster_ahash_variants,
-       CAST(1 AS BIGINT) AS max_cluster_dhash_variants,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.video_frame_hashes(media), ("fhash",))
 
 
 def animated_apng_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Animated-PNG near-dup over REAL composed frames — completing
-    the web's animation trio (GIF and WebP are the r14 siblings):
+    the web's animation trio with the GIF and WebP audits:
     `decode_apng_frames` (functions/media_decode.py) rewraps each
     frame's fdAT zlib stream as a standalone PNG for the
     conformance-verified still decoder and composes fcTL sub-rects
@@ -2959,75 +1556,9 @@ def animated_apng_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes. 16-bit frame words injective over (pid, frame)
     (pid·8+7 ≤ 1111 ≪ 65534; shift-invariant); all columns from id
     arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_apng_anim_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 139).alias("pid"),
-            (F.col("doc_id") % 139).alias("base"),
-            F.when(F.expr("doc_id div 139") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 139") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-        )
-    )
+    planted = _plant(spark, sf_dir, 139, **_TRIM_SHIFT)
     media = synth_apng_anim_media(planted, "media_id")
-    fh = materialize(
-        video_frame_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=None
-    )
-    return (
-        fh.agg(
-            F.countDistinct("media_id").alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.count(F.lit(1)).alias("n_frame_rows"),
-            F.countDistinct("fhash").alias("distinct_fhash"),
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_frame_rows",
-            "distinct_fhash",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: trimmed members carry 7 frames; a cluster's
-# distinct composed-frame hashes are 8 iff any member is untrimmed
-# (frame words are disjoint across clusters)
-_APNG_ANIM_SQL = """
-WITH m AS (
-  SELECT doc_id % 139 AS pid,
-         CASE WHEN (doc_id // 139) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
-       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
-            AS BIGINT) AS distinct_fhash,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.video_frame_hashes(media), ("fhash",))
 
 
 def multimodal_mjpeg_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3047,85 +1578,16 @@ def multimodal_mjpeg_video_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant 0 plants DHT-carrying streams, variant 1 the DHT-less
     AVI1 twin (different bytes, BIT-IDENTICAL pixels — flat
     8×8-block frames at quant step 1 round-trip exactly, so a
-    matching frame hash certifies the K.3 injection), variant 2 a
-    TRIMMED (first frame dropped) + brightness-shifted DHT-less
-    copy — 7 shared frame hashes. `synth_mjpeg_avi_media`'s 16-bit
+    matching frame hash certifies the K.3 injection: the DHT-less
+    variant adds no new hashes), variant 2 a TRIMMED (first frame
+    dropped) + brightness-shifted DHT-less copy — 7 shared frame
+    hashes. `synth_mjpeg_avi_media`'s 16-bit
     frame words keep every hash provably the word's replicated bits
     (injective over (pid, frame): pid·8+7 ≤ 911 ≪ 65534;
     shift-invariant), so all columns derive from id arithmetic."""
-    from tidb_cdc_spark.functions.media_hash import (
-        video_frame_hashes,
-        video_near_dup_pairs,
-    )
-    from tidb_cdc_spark.functions.media_synth import synth_mjpeg_avi_media
-    from tidb_cdc_spark.session import materialize
-
-    planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .where(F.col("doc_id") >= 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("doc_id") % 113).alias("pid"),
-            (F.col("doc_id") % 113).alias("base"),
-            F.when(F.expr("doc_id div 113") % 3 == 2, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("skip"),
-            F.when(F.expr("doc_id div 113") % 3 == 2, F.lit(20))
-            .otherwise(F.lit(0))
-            .alias("shift"),
-            F.when(F.expr("doc_id div 113") % 3 >= 1, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("strip"),
-        )
-    )
+    planted = _plant(spark, sf_dir, 113, **_TRIM_SHIFT, strip=(0, 1, 1))
     media = synth_mjpeg_avi_media(planted, "media_id")
-    fh = materialize(
-        video_frame_hashes(media).join(
-            planted.select("media_id", "pid"), "media_id"
-        )
-    )
-    pairs = video_near_dup_pairs(
-        fh, min_shared_frames=4, max_frame_freq=None
-    )
-    return (
-        fh.agg(
-            F.countDistinct("media_id").alias("n_media"),
-            F.countDistinct("pid").alias("n_clusters"),
-            F.count(F.lit(1)).alias("n_frame_rows"),
-            F.countDistinct("fhash").alias("distinct_fhash"),
-        )
-        .crossJoin(
-            F.broadcast(pairs.agg(F.count(F.lit(1)).alias("neardup_pairs")))
-        )
-        .select(
-            "n_media",
-            "n_clusters",
-            "n_frame_rows",
-            "distinct_fhash",
-            "neardup_pairs",
-        )
-    )
-
-
-# plant arithmetic: trimmed members carry 7 frames; a cluster's
-# distinct frame hashes are 8 iff any member is untrimmed (frame
-# words are disjoint across clusters); the DHT-less variant adds no
-# new hashes iff the K.3 injection decodes it pixel-identically
-_MJPEG_VIDEO_SQL = """
-WITH m AS (
-  SELECT doc_id % 113 AS pid,
-         CASE WHEN (doc_id // 113) % 3 = 2 THEN 1 ELSE 0 END AS trimmed
-  FROM documents WHERE doc_id >= 0
-), c AS (
-  SELECT pid, COUNT(*) AS n, MIN(trimmed) AS min_tr FROM m GROUP BY pid
-)
-SELECT CAST((SELECT COUNT(*) FROM m) AS BIGINT) AS n_media,
-       CAST((SELECT COUNT(DISTINCT pid) FROM m) AS BIGINT) AS n_clusters,
-       CAST((SELECT SUM(8 - trimmed) FROM m) AS BIGINT) AS n_frame_rows,
-       CAST((SELECT SUM(CASE WHEN min_tr = 0 THEN 8 ELSE 7 END) FROM c)
-            AS BIGINT) AS distinct_fhash,
-       CAST((SELECT SUM(n * (n - 1) // 2) FROM c) AS BIGINT) AS neardup_pairs
-"""
+    return _cluster_audit(planted, mh.video_frame_hashes(media), ("fhash",))
 
 
 QUERIES = {
@@ -3167,40 +1629,40 @@ QUERIES = {
     "animated_apng_video_audit": animated_apng_video_audit,
 }
 ORACLE = {
-    "multimodal_webp_lossy_audit": _WEBP_LOSSY_SQL,
-    "animated_gif_video_audit": _GIF_ANIM_SQL,
-    "multimodal_webp_phash_audit": _WEBP_PHASH_SQL,
-    "multimodal_jpeg_prog_audit": _JPEG_PROG_SQL,
-    "video_curation_pipeline": _VIDEO_CURATION_SQL,
-    "video_curation_provenance": _VIDEO_PROVENANCE_SQL,
+    "multimodal_webp_lossy_audit": _hash_sql(69),
+    "animated_gif_video_audit": _frame_sql(103),
+    "multimodal_webp_phash_audit": _hash_sql(71),
+    "multimodal_jpeg_prog_audit": _hash_sql(73),
+    "video_curation_pipeline": _curation_sql("trimmed", 1, 10, "after_shot_robust"),
+    "video_curation_provenance": _provenance_sql("trimmed", 1, "dropped_shot_dup"),
     "video_frame_cap_report": _VIDEO_CAP_SQL,
-    "multimodal_video_audit": _VIDEO_SQL,
+    "multimodal_video_audit": _frame_sql(101, duration="320 - 40 * trimmed"),
     "multimodal_doc_features": _MULTIMODAL_SQL,
     "multimodal_probe_audit": _PROBE_SQL,
     "multimodal_frame_plan": _FRAME_SQL,
     "multimodal_image_audit": _IMAGE_SQL,
     "multimodal_dedup_audit": _DEDUP_SQL,
-    "multimodal_phash_audit": _PHASH_SQL,
-    "media_curation_pipeline": _CURATION_SQL,
-    "multimodal_audio_audit": _AUDIO_SQL,
+    "multimodal_phash_audit": _hash_sql(101),
+    "media_curation_pipeline": _curation_sql("shift", 20, 100, "after_perceptual"),
+    "multimodal_audio_audit": _hash_sql(101, ("afp",)),
     "multimodal_audio_trim_audit": _AUDIO_TRIM_SQL,
-    "multimodal_dct_phash_audit": _DCT_PHASH_SQL,
-    "audio_curation_pipeline": _AUDIO_CURATION_SQL,
-    "media_curation_provenance": _MEDIA_PROVENANCE_SQL,
+    "multimodal_dct_phash_audit": _hash_sql(101, ("phash",)),
+    "audio_curation_pipeline": _curation_sql("trimmed", 1, 10, "after_trim_robust"),
+    "media_curation_provenance": _provenance_sql("shift", 20, "dropped_perceptual_dup"),
     "phash_cap_report": _PHASH_CAP_SQL,
     "audio_window_cap_report": _AUDIO_CAP_SQL,
-    "audio_curation_provenance": _AUDIO_PROVENANCE_SQL,
+    "audio_curation_provenance": _provenance_sql("trimmed", 1, "dropped_trim_dup"),
     "multimodal_anim_probe_audit": _ANIM_PROBE_SQL,
     "multimodal_audio_probe_audit": _AUDIO_PROBE_SQL,
-    "audio_g711_audit": _G711_SQL,
-    "audio_adpcm_audit": _ADPCM_SQL,
-    "multimodal_png_phash_audit": _PNG_PHASH_SQL,
-    "multimodal_codec_matrix_audit": _CODEC_MATRIX_SQL,
-    "multimodal_jpeg_phash_audit": _JPEG_PHASH_SQL,
-    "multimodal_png_deep_audit": _PNG_DEEP_SQL,
-    "multimodal_exif_orientation_audit": _EXIF_ORIENTATION_SQL,
-    "animated_webp_video_audit": _WEBP_ANIM_SQL,
-    "multimodal_tiff_phash_audit": _TIFF_PHASH_SQL,
-    "multimodal_mjpeg_video_audit": _MJPEG_VIDEO_SQL,
-    "animated_apng_video_audit": _APNG_ANIM_SQL,
+    "audio_g711_audit": _hash_sql(109, ("afp",)),
+    "audio_adpcm_audit": _hash_sql(127, ("afp",)),
+    "multimodal_png_phash_audit": _hash_sql(97),
+    "multimodal_codec_matrix_audit": _hash_sql(89, legs=6),
+    "multimodal_jpeg_phash_audit": _hash_sql(83),
+    "multimodal_png_deep_audit": _hash_sql(79, legs=6),
+    "multimodal_exif_orientation_audit": _hash_sql(67),
+    "animated_webp_video_audit": _frame_sql(107),
+    "multimodal_tiff_phash_audit": _hash_sql(97),
+    "multimodal_mjpeg_video_audit": _frame_sql(113),
+    "animated_apng_video_audit": _frame_sql(139),
 }

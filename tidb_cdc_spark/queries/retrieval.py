@@ -12,13 +12,16 @@ ranks at ADC distance 0, so it must appear in the top-k.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.functions import bm25 as B
 from tidb_cdc_spark.functions import centroids as CE
 from tidb_cdc_spark.functions import pq as PQ
 from tidb_cdc_spark.functions import similarity as S
+from tidb_cdc_spark.functions import text as T
+from tidb_cdc_spark.functions.similarity import as_double, cosine, knn_bruteforce
+from tidb_cdc_spark.operators.windows import topk_per_group
 from tidb_cdc_spark.queries.corpus import _docs
 from tidb_cdc_spark.queries.embeddings import (
     _N_VECS,
@@ -231,8 +234,6 @@ def rag_retrieve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload (language, token count). One broadcast of the 3 query
     vectors + one id-equi-join against documents — no corpus text
     moves until a document is actually retrieved."""
-    from tidb_cdc_spark.functions import similarity as S
-    from tidb_cdc_spark.functions import text as T
 
     e = _embs(spark, sf_dir)
     q = e.filter(F.col("vec_id") < 3)
@@ -297,11 +298,7 @@ def rag_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap in play on dense rank alone. At 100 TB both arms scan the
     corpus once each with only id/rank-sized shuffles; the dense arm
     swaps to the IVF/LSH index for large query sets (same fusion)."""
-    from tidb_cdc_spark.functions import similarity as S
-    from tidb_cdc_spark.functions import text as T
-    from tidb_cdc_spark.operators import topk_per_group
 
-    from pyspark.sql import Window
 
     e = _embs(spark, sf_dir)
     q = e.filter(F.col("vec_id") < 3)
@@ -479,8 +476,6 @@ def rag_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k) with the label-mismatch predicate applied pre-rank; at
     100 TB the brute-force arm swaps for ``knn_lsh``/IVF with a
     post-filter, same contract."""
-    from tidb_cdc_spark.functions.similarity import as_double, cosine
-    from tidb_cdc_spark.operators.windows import topk_per_group
 
     e = _embs(spark, sf_dir)
     q = e.filter(F.col("vec_id") < 5).select(
@@ -555,8 +550,6 @@ def rag_rerank_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches k·|queries| pairs, never the corpus. Fully exact ⇒
     DuckDB oracle; ties broken by neighbor_id.
     """
-    from tidb_cdc_spark.functions.similarity import knn_bruteforce
-    from tidb_cdc_spark.operators.windows import topk_per_group
 
     e = _embs(spark, sf_dir).select("vec_id", "embedding")
     q = e.filter(F.col("vec_id") < 5)
@@ -728,7 +721,6 @@ def rag_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits@10 / first-hit rank / reciprocal rank / bounded recall, all
     integer µ. The evaluation harness every retrieval change should
     re-run; swaps to the LSH/IVF arm unchanged at scale."""
-    from tidb_cdc_spark.functions import similarity as S
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 20)

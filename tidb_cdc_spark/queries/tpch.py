@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.functions.numeric import dec
+from tidb_cdc_spark.operators.skew import salted_sum
 from tidb_cdc_spark.operators.windows import topk_per_group
 from tidb_cdc_spark.session import read_table as _t
 
@@ -719,7 +720,6 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     over lineitem's 3-value l_returnflag — maximal key skew. Exact
     decimal sums make the salted split algebraically identical to the
     plain GROUP BY the oracle runs."""
-    from tidb_cdc_spark.operators.skew import salted_sum
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
@@ -1363,7 +1363,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min("_unit").alias("supply_cost"))
     )
-    from pyspark.sql import Window
 
     best = cost.withColumn(
         "_min_cost",

@@ -229,7 +229,7 @@ class Scd2SplitHistorySink(ParquetSnapshotSink):
             return
         # the stores' layout reserves two names a table column cannot
         # use (partition dirs derive from them); fail loudly, not by
-        # silently overwriting the data column (review catch)
+        # silently overwriting the data column
         reserved = {"scd2zone", "b"} & {c.target for c in spec.resolved_columns()}
         if reserved:
             raise ValueError(
