@@ -130,7 +130,7 @@ def test_audio_near_dup_pairs_planted(spark):
     assert got == {(10, 11): 0, (10, 12): 0, (11, 12): 0}
 
 
-# ------------------------- trim-robust window chain (late r12)
+# -------------------------------------- trim-robust window chain
 # Lemma inventory for multimodal_audio_trim_audit's planted oracle:
 # 4. Each 512-sample window's fingerprint == the 16-bit pattern
 #    word's bits replicated x4 (=> injective over v in [1, 65534]).

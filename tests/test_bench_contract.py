@@ -1,5 +1,5 @@
 """bench.py contract guards — the stdout-line overflow silently cost
-the official bench record twice (r6, r8: driver tail capture is
+the official bench record twice (the driver's tail capture is
 2,000 chars, measured); pin the invariants statically so suite
 growth can never break the signal chain again."""
 
@@ -67,7 +67,7 @@ def test_stdout_line_fits_driver_window_worst_case():
 def test_full_per_query_dict_goes_to_detail_file_not_stdout():
     src = _bench_source()
     # the size guard must be a graceful shrink, not a bare assert
-    # (stripped under -O; fired only after the suite ran — r9 advice)
+    # (stripped under -O; fired only after the suite ran)
     assert "for n_slow in (5, 3, 1, 0):" in src
     assert re.search(r"if len\(line\) < 1500", src)
     assert "assert len(line)" not in src
@@ -77,7 +77,7 @@ def test_full_per_query_dict_goes_to_detail_file_not_stdout():
 
 
 def test_load_guard_is_wired():
-    """The r9 official record was captured on a loaded box with no
+    """An official record was once captured on a loaded box with no
     in-band signal. Both degraded-detection signals must stay wired:
     ambient start load and the retry-fraction of disagreeing runs."""
     src = _bench_source()
@@ -89,7 +89,7 @@ def test_load_guard_is_wired():
 
 
 def test_requiet_is_wired():
-    """r12 verdict #7: --requiet waits (bounded) before the first
+    """--requiet waits (bounded) before the first
     query, records both load samples, and leaves the degraded
     verdict's formula untouched."""
     src = _bench_source()

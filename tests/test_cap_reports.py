@@ -1,4 +1,4 @@
-"""Lemmas for the r13 no-silent-caps reports (phash_cap_report /
+"""Lemmas for the no-silent-caps reports (phash_cap_report /
 video_frame_cap_report) and the capped composed-pipeline defaults.
 
 Three obligations:

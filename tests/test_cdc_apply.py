@@ -216,7 +216,7 @@ class TestScd2History:
             map(tuple, hist.collect())
         )
 
-    @pytest.mark.slow  # r15 tiered gate
+    @pytest.mark.slow  # slow tier
     def test_split_merge_fold_equals_one_shot(self, spark):
         """merge_scd2_split contract: head ∪ (all emitted closed
         rows) after a fold equals scd2_history over the whole log —

@@ -224,7 +224,7 @@ class TestJpegAgainstImageIO:
         """T.81 A.2: non-interleaved DC scans (Ns=1, Ss=0) cover the
         component's own ceil(dims/8) grid. javax.imageio accepts the
         shape and decodes it identically to the interleaved-DC twin;
-        our decoder must agree (r13 returned None on it)."""
+        our decoder must agree (it once returned None on it)."""
         from tidb_cdc_spark.functions.jpeg import decode_jpeg_pixels
 
         rng = _rng()

@@ -2,7 +2,7 @@
 (stdlib zlib + all five scanline unfilters, every spec-legal
 color-type/bit-depth combination, Adam7, alpha-over-white, eXIf
 orientation) and GIF (pure-Python LZW, sequential + interlaced) —
-the r12 verdict's #1 gap closed with real byte paths. Round-trips
+the image-decode gap closed with real byte paths. Round-trips
 are exact (encode is the test fixture, decode is the engine);
 rejects are pinned so corrupt/spec-illegal payloads keep the
 documented NULL-hash treatment."""
@@ -72,7 +72,7 @@ class TestPngDecode:
         """Spec-ILLEGAL (color, depth) combinations and unknown
         interlace methods must return None, not guess (the legal
         envelope — Adam7, 16-bit, alpha, sub-byte — is a real path
-        since r13, covered by TestPngFullEnvelope)."""
+        covered by TestPngFullEnvelope)."""
         import struct
         import zlib
 
@@ -118,7 +118,7 @@ class TestPngDecode:
 
 
 class TestPngFullEnvelope:
-    """r13: Adam7 interlace, 16-bit, sub-byte depths, alpha — every
+    """Adam7 interlace, 16-bit, sub-byte depths, alpha — every
     spec-legal shape is a REAL pure-Python path through the same
     ``decode_png_pixels``."""
 

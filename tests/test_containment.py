@@ -70,7 +70,7 @@ def test_tab_newline_only_docs_hit_the_sentinel_too(spark):
     class (Java \\s), not trim()'s ASCII-space-only class: a doc of
     tabs/newlines/form-feeds tokenizes to zero tokens and must emit
     the same empty-string sentinel as '' — the oracle's n=0 branch
-    does (r9-advice catch; trim-based filtering emitted NO row)."""
+    does (trim-based filtering once emitted NO row)."""
     got = _pairs(spark, [(1, "\t\n"), (2, " \r\n\t "), (3, ""), (4, "w x y z q")])
     assert set(got) == {(1, 2), (1, 3), (2, 3)}
     for key in got:
@@ -128,7 +128,7 @@ def test_plan_stays_jvm_side(spark):
 
 
 def test_xxh64_key_mode_row_identical_to_md5(spark):
-    """r15 (guide §2.3): the xxh64 shingle keying used by the
+    """The xxh64 shingle keying used by the
     rows-only composed pipeline (``dedup_containment_repr``) must
     produce IDENTICAL rows to the md5 keying — every output column
     depends only on shingle-set identity, never on key values. The

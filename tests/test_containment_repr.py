@@ -1,10 +1,9 @@
 """Composed near-dup-collapse → containment pipeline
 (queries/dedup.py::dedup_containment_repr): equivalence, family-
 blowup removal, and cross-family subset PRESERVATION on synthetic
-corpora where the expected answer is computable exactly — the r9
-verdict's open item #4 (the raw op's 100× caveat said "collapse
-families first"; this pins that the collapse keeps the pairs the op
-exists to find)."""
+corpora where the expected answer is computable exactly (the raw
+op's 100× caveat said "collapse families first"; this pins that the
+collapse keeps the pairs the op exists to find)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -59,7 +58,7 @@ def test_composed_equals_raw_over_expected_reps(spark):
 
 
 def test_family_pairs_removed_cross_family_subset_kept(spark):
-    """The heart of the r10 composition: a 25-member exact-dup family
+    """The heart of the composition: a 25-member exact-dup family
     emits C(25,2) raw within-family pairs; the composed pipeline
     emits NONE of them while PRESERVING the cross-family wrapper pair
     (family 1's body quoted inside 160 tokens of filler — exactly
@@ -84,7 +83,7 @@ def test_family_pairs_removed_cross_family_subset_kept(spark):
     assert jac < 0.5
 
 
-@pytest.mark.slow  # r15 tiered gate
+@pytest.mark.slow  # slow tier
 def test_pair_output_linear_not_quadratic_in_family_size(spark):
     """Pair-row counts, the unit the 100× curve measured: raw output
     grows quadratically with family size; composed output is flat."""

@@ -389,7 +389,7 @@ class TestExactStratifiedSplit:
 
 
 def test_audio_video_curation_stages_strictly_shrink(spark):
-    """Both late-r12 composed pipelines do real work at every stage
+    """Both composed media pipelines do real work at every stage
     at sf0.001: exact dedup collapses byte-identical plants, the
     fuzzy stage collapses the planted transform survivors (guards
     against a degenerate plant where a stage is a no-op)."""

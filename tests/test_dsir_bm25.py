@@ -234,7 +234,7 @@ def test_token_entropy_bounds(spark, n):
 
 
 def test_bm25_degenerate_repeated_token_doc_no_overflow(spark):
-    """r7 advice (low): a multi-million-repetition single-token doc
+    """A multi-million-repetition single-token doc
     drove the unclamped µ-numerator past int64 (tf·avgdl ≳ 10¹⁰) and
     ANSI mode raised ARITHMETIC_OVERFLOW, failing the whole query.
     The TF_CAP/AVGDL_CAP clamps must score it finitely — and still

@@ -1,130 +1,12 @@
-"""Tests for stream-static enrichment and incremental corpus
-ingestion (streaming/enrich.py)."""
+"""Tests for the state-keeping streaming sinks (streaming/enrich.py)."""
 
 import json
 import os
 
 import pytest
 
-# r15 tiered gate: streaming admission-sink e2e battery (~6 min); the Connector/sink families keep default-tier coverage in test_streaming/test_stream_join/test_kafka_e2e
+# slow tier: streaming admission-sink e2e battery (~6 min); the Connector/sink families keep default-tier coverage in test_streaming/test_stream_join/test_kafka_e2e
 pytestmark = pytest.mark.slow
-
-from tidb_cdc_spark.streaming.enrich import (
-    enrich_stream,
-    ingest_new_documents,
-    snapshot_fingerprints,
-)
-
-
-def _doc_stream(spark, tmp_path, rows):
-    d = tmp_path / "docs_in"
-    os.makedirs(d, exist_ok=True)
-    with open(d / "1.jsonl", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in rows))
-    return (
-        spark.readStream.format("json")
-        .schema("doc_id long, text string, source string, ingest_ts timestamp")
-        .load(str(d))
-    )
-
-
-class TestEnrichStream:
-    def test_left_join_attaches_dim(self, spark, tmp_path):
-        stream = _doc_stream(
-            spark,
-            tmp_path,
-            [
-                {"doc_id": 1, "text": "a", "source": "web", "ingest_ts": "2024-01-01 00:00:00"},
-                {"doc_id": 2, "text": "b", "source": "unknown", "ingest_ts": "2024-01-01 00:00:00"},
-            ],
-        )
-        dim = spark.createDataFrame(
-            [("web", 500_000)], "source string, mix_ppm long"
-        )
-        out = enrich_stream(stream, dim, on="source")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("enriched")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck_e"))
-            .start()
-        )
-        q.awaitTermination()
-        rows = {r.doc_id: r.mix_ppm for r in spark.sql("select * from enriched").collect()}
-        assert rows == {1: 500_000, 2: None}
-
-    def test_illegal_how_rejected(self, spark):
-        df = spark.createDataFrame([(1,)], "a long")
-        with pytest.raises(ValueError, match="stream-static"):
-            enrich_stream(df, df, on="a", how="full")
-
-    def test_dim_is_broadcast(self, spark, tmp_path):
-        stream = _doc_stream(
-            spark,
-            tmp_path,
-            [{"doc_id": 1, "text": "a", "source": "web", "ingest_ts": "2024-01-01 00:00:00"}],
-        )
-        dim = spark.createDataFrame([("web", 1)], "source string, x long")
-        q = (
-            enrich_stream(stream, dim, on="source")
-            .writeStream.format("memory")
-            .queryName("enrich_plan")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck_p"))
-            .start()
-        )
-        q.awaitTermination()
-        # the last-executed micro-batch plan must hash-join against a
-        # broadcast dim — no stream-side Exchange
-        plan = q._jsq.explainInternal(False)
-        assert "BroadcastHashJoin" in plan
-
-
-class TestIngestNewDocuments:
-    def test_snapshot_and_in_stream_dedup(self, spark, tmp_path):
-        snapshot_docs = spark.createDataFrame(
-            [(100, "already shipped")], "doc_id long, text string"
-        )
-        snap = snapshot_fingerprints(snapshot_docs)
-        stream = _doc_stream(
-            spark,
-            tmp_path,
-            [
-                # dup of the snapshot — dropped
-                {"doc_id": 1, "text": "already shipped", "source": "web", "ingest_ts": "2024-01-01 00:00:00"},
-                # fresh — kept
-                {"doc_id": 2, "text": "brand new", "source": "web", "ingest_ts": "2024-01-01 00:01:00"},
-                # in-stream repeat of the fresh doc — dropped
-                {"doc_id": 3, "text": "brand new", "source": "books", "ingest_ts": "2024-01-01 00:02:00"},
-                # another fresh one — kept
-                {"doc_id": 4, "text": "also new", "source": "web", "ingest_ts": "2024-01-01 00:03:00"},
-            ],
-        )
-        out = ingest_new_documents(stream, snap, broadcast_snapshot=True)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ingested")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck_i"))
-            .start()
-        )
-        q.awaitTermination()
-        kept = sorted(
-            r.doc_id for r in spark.sql("select * from ingested").collect()
-        )
-        assert kept == [2, 4]
-
-    def test_emits_fp_for_snapshot_append(self, spark, tmp_path):
-        snap = snapshot_fingerprints(
-            spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        )
-        stream = _doc_stream(
-            spark,
-            tmp_path,
-            [{"doc_id": 2, "text": "y", "source": "web", "ingest_ts": "2024-01-01 00:00:00"}],
-        )
-        out = ingest_new_documents(stream, snap)
-        assert "fp" in out.columns
 
 
 class TestNearDupAdmissionSink:
@@ -580,7 +462,7 @@ class TestWinnowSinkTornBatchRedelivery:
     def test_crash_between_fps_and_watermark_no_double_pairs(
         self, spark, tmp_path
     ):
-        """The r6-advice scenario: fps/overlaps written, crash before
+        """The scenario: fps/overlaps written, crash before
         the watermark — redelivery must not pair the batch against
         its own torn fingerprints (doubled + reversed intra-batch
         pairs) nor leave two copies of the batch's fps rows."""
@@ -688,9 +570,8 @@ class TestBucketedIndexScale:
     """R12 layout: the admission indexes are directory-partitioned on
     a key-hash bucket, the screen streams the index against the
     broadcast batch, and the scan prunes to the batch's touched
-    buckets — the properties behind 'per-batch cost ∝ batch' (the
-    r11 verdict's finding was that the flat layout re-shuffled the
-    whole index every micro-batch)."""
+    buckets — the properties behind 'per-batch cost ∝ batch' (a flat
+    layout re-shuffles the whole index every micro-batch)."""
 
     SCHEMA = "media_id long, kind string, payload binary"
 
@@ -771,18 +652,18 @@ class TestBucketedIndexScale:
             spark, [(100, "image", b"p3"), (101, "image", b"novel")]
         ).select(
             F.unhex(F.sha2("payload", 256)).alias("_digest")
-        ).withColumn("_bucket", _bucket_expr(["_digest"], sink._params()["n_buckets"]))
-        touched = [r[0] for r in probe.select("_bucket").distinct().collect()]
-        store = sink._index_scan(spark, probe, touched).select(
-            F.col("digest").alias("_digest")
+        ).withColumn("bucket", _bucket_expr(["_digest"], sink._params()["n_buckets"]))
+        store, touched = sink._index_scan(
+            probe.select(F.col("_digest").alias("digest"), "bucket")
         )
+        store = store.select(F.col("digest").alias("_digest"))
         seen = store.join(
             F.broadcast(probe.select("_digest")), "_digest", "left_semi"
         )
         plan = seen._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
-        # r13 manifest screen: pruning happens BEFORE the plan — the
+        # manifest screen: pruning happens BEFORE the plan — the
         # scan's input files are exactly the touched buckets' files
         # from the manifest, with zero directory listing (stronger
         # than the old PartitionFilters pin)
@@ -839,22 +720,16 @@ class TestBucketedIndexScale:
         )
         nb = sink._params()["n_buckets"]
         bands = minhash_band_rows(b1)
-        touched = [
-            r[0]
-            for r in bands.select(
-                _bucket_expr(["band", "bhash"], nb).alias("_b")
-            )
-            .distinct()
-            .collect()
-        ]
-        store = sink._index_scan(spark, b1, touched)
+        store, touched = sink._index_scan(
+            bands.withColumn("bucket", _bucket_expr(["band", "bhash"], nb))
+        )
         _, candidates, _ = near_dup_ingest(b1, store, batch_bands=bands)
         plan = (
             candidates._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
-        # r13 manifest screen (see the digest sink's plan test)
+        # manifest screen (see the digest sink's plan test)
         in_buckets = {
             int(f.split("bucket=")[1].split("/")[0])
             for f in store.inputFiles()
@@ -926,7 +801,7 @@ class TestPhashAdmissionSink:
         assert sink.read_corpus(spark).count() == 1
 
     def test_cross_codec_reencode_screened_at_ingest(self, spark, tmp_path):
-        """r13: the decode_pixels boundary now inflates PNG and
+        """The decode_pixels boundary inflates PNG and
         GIF, so a COMPRESSED re-encode of an admitted BMP — byte-
         disjoint, exact-digest-invisible — is perceptually screened
         at ingest with no sink change."""
@@ -1003,8 +878,13 @@ class TestPhashAdmissionSink:
         keyed = manku_table_keys(sig).withColumn(
             "_bucket", _bucket_expr(["_table", "_key"], 64)
         )
-        touched = [r[0] for r in keyed.select("_bucket").distinct().collect()]
-        store = sink._index_scan(spark, probe, touched)
+        store, touched = sink._index_scan(
+            keyed.select(
+                F.col("_table").alias("tbl"),
+                F.col("_key").alias("key"),
+                F.col("_bucket").alias("bucket"),
+            )
+        )
         cand = store.join(
             F.broadcast(
                 keyed.select(
@@ -1019,7 +899,7 @@ class TestPhashAdmissionSink:
         plan = cand._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
-        # r13 manifest screen (see the digest sink's plan test)
+        # manifest screen (see the digest sink's plan test)
         in_buckets = {
             int(f.split("bucket=")[1].split("/")[0])
             for f in store.inputFiles()
@@ -1179,7 +1059,7 @@ class TestIvfIndexSink:
         assert all(10 <= r.neighbor_id < 20 for r in a)
 
     def test_torn_append_healed_by_search_and_compact(self, spark, tmp_path):
-        """ADVICE r12: a crash AFTER the index append but BEFORE the
+        """A crash AFTER the index append but BEFORE the
         watermark commit duplicates the batch on re-delivery. The
         raw store then really holds duplicate (vec_id, cell) rows —
         but search() dedupes candidates (no neighbor consumes two
@@ -1290,7 +1170,7 @@ class TestIvfIndexSink:
         hits = sink.search(spark, queries, k=3, n_probe=1).collect()
         assert hits and all(0 <= r.neighbor_id < 10 for r in hits)
 
-    # -------------------------------------------- rebuild (r14)
+    # -------------------------------------------------- rebuild
 
     def _drifted_store(self, spark, tmp_path):
         """Fit on cluster 0 ONLY (all centroids in one ball), then

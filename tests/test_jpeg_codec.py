@@ -97,7 +97,7 @@ class TestFlatBlockExactness:
         assert ahash64(d0) == ahash64(d20)
 
     def test_dc_coefficients_clear_rounding_boundaries(self):
-        """ADVICE-r12 pattern: the exactness lemma rests on np.rint
+        """The exactness lemma rests on np.rint
         of float64 DCs — assert every planted DC sits ≥0.4 from the
         nearest .5 boundary over the full (v, shift) domain, so
         cross-platform BLAS residue (~1e-13) is provably absorbed."""
@@ -298,7 +298,7 @@ class TestProgressive:
     def test_dc_per_component_identical_to_sequential(self):
         """Non-interleaved DC scans (Ns=1, Ss=0) cover the
         component's OWN ceil(dims/8) grid, not the MCU-padded one
-        (T.81 A.2) — the r13 decoder iterated the padded grid and
+        (T.81 A.2) — an earlier decoder iterated the padded grid and
         returned None on this spec-legal shape. Gray, 4:4:4, and the
         4:2:0 case (where padded ≠ own grid for luma at odd MCU
         counts) must all decode pixel-identically to sequential."""

@@ -300,16 +300,6 @@ class TestTextFunctions:
         got = df.select(T.shingles(F.col("text"), k=5).alias("s")).collect()[0].s
         assert got == ["a b"]
 
-    def test_quality_score_range(self, spark):
-        df = spark.createDataFrame(
-            [(0, "the quick brown fox jumps over the lazy dog"),
-             (1, "!!! ??? ###")],
-            "doc_id long, text string",
-        )
-        got = {r.doc_id: r.q for r in
-               df.select("doc_id", T.quality_score(F.col("text")).alias("q")).collect()}
-        assert 0.0 <= got[1] < got[0] <= 1.0
-
 
 class TestMultimodal:
     def test_feature_extraction_plumbing(self, spark):
@@ -353,13 +343,6 @@ class TestMultimodal:
         monkeypatch.setattr(M, "_PIL_Image", None)
         assert M.decode_image_dims(bad) == M._decode_image_stub(bad)
 
-    def test_resize_preserves_schema_updates_meta(self, spark):
-        media = M.synthesize_media(spark, n=6)
-        out = M.resize_images(media, 32, 32)
-        assert out.schema == media.schema
-        rows = out.collect()
-        assert all(r.width == 32 and r.height == 32 for r in rows)
-
     def test_frame_sampling_plan(self, spark):
         media = M.synthesize_media(spark, n=9)
         frames = M.frame_sample_plan(media, every_ms=1000)
@@ -369,7 +352,7 @@ class TestMultimodal:
         assert by_id[2] == 3 and by_id[5] == 6 and by_id[8] == 9
 
 
-@pytest.mark.slow  # r15 tiered gate: clustered-recall battery
+@pytest.mark.slow  # slow tier: clustered-recall battery
 class TestIvf:
     def test_ivf_knn_high_recall_on_clustered_data(self, spark):
         import random
@@ -430,7 +413,7 @@ class TestIvf:
             assert len(glob.glob(f"{d}/*.parquet")) == 1
 
 
-@pytest.mark.slow  # r15 tiered gate: PQ/ADC recall battery
+@pytest.mark.slow  # slow tier: PQ/ADC recall battery
 class TestProductQuantization:
     def _clustered(self, spark, dim=32, n_clusters=10, per=12, sigma=0.05):
         import random
@@ -549,7 +532,7 @@ class TestProductQuantization:
         assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
 
 
-@pytest.mark.slow  # r15 tiered gate: band-store e2e battery
+@pytest.mark.slow  # slow tier: band-store e2e battery
 class TestNearDupIngest:
     def test_band_store_screens_incoming_batch(self, spark):
         from tidb_cdc_spark.functions.dedup import (
@@ -786,7 +769,7 @@ class TestProbeMedia:
 
 
 class TestHeaderParserEdgeCases:
-    """Crafted payloads from the r7 review: truncated MP4s, JPEG
+    """Crafted payloads from a review: truncated MP4s, JPEG
     fill bytes, OS/2 core-header BMPs, NULL payloads."""
 
     def test_truncated_mp4_returns_none_not_garbage(self):

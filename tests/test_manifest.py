@@ -1,4 +1,4 @@
-"""Store-manifest mechanics (r13): the listing-free screen path for
+"""Store-manifest mechanics: the listing-free screen path for
 the bucketed admission/index stores — unit roundtrips, the two crash
 windows, and end-to-end screen correctness under each."""
 

@@ -157,37 +157,6 @@ class TestSessionize:
         assert got == expect
 
 
-class TestBucketedJoin:
-    def test_colocated_join_has_zero_exchanges(self, spark):
-        from tidb_cdc_spark.operators.bucketing import colocated_join, write_bucketed
-        from tidb_cdc_spark.plans.inspect import num_exchanges
-        from tidb_cdc_spark.session import read_table
-
-        sf = "/root/testdata/sf0.001"
-        li = read_table(spark, sf, "lineitem").select(
-            "l_orderkey", "l_quantity", "l_extendedprice"
-        )
-        orders = read_table(spark, sf, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        write_bucketed(li, "b_lineitem", ["l_orderkey"], 8, sort_cols=["l_orderkey"])
-        write_bucketed(orders, "b_orders", ["o_orderkey"], 8, sort_cols=["o_orderkey"])
-        try:
-            joined = colocated_join(
-                spark, "b_lineitem", "b_orders", [("l_orderkey", "o_orderkey")]
-            )
-            # the whole point: both scans are bucket-partitioned on the
-            # join key, so EnsureRequirements inserts NO shuffle
-            assert num_exchanges(joined) == 0, joined._jdf.queryExecution().toString()
-            expect = li.join(
-                orders, li.l_orderkey == orders.o_orderkey
-            ).count()
-            assert joined.count() == expect
-        finally:
-            spark.sql("DROP TABLE IF EXISTS b_lineitem")
-            spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
 class TestSketches:
     def test_approx_within_tolerance_of_exact(self, spark):
         # sketch_approx computes approx AND exact in one plan and emits

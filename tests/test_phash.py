@@ -17,6 +17,7 @@ Lemma inventory (each pinned here, cited by the oracle docstring):
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from tidb_cdc_spark.functions.media_decode import decode_bmp_pixels
 from tidb_cdc_spark.functions.media_hash import (
@@ -167,7 +168,7 @@ def test_media_curation_pipeline_non_vacuous(spark):
     assert row.n_media > row.after_exact > row.after_perceptual > 0
 
 
-# ----------------------------- DCT pHash lemmas (late r12)
+# ------------------------------------------ DCT pHash lemmas
 # multimodal_dct_phash_audit's planted oracle rests on three
 # deterministic properties of the 101-word plant family — pinned
 # here over the FULL domain the audit uses:
@@ -222,6 +223,26 @@ def test_dct_phash_small_image_returns_none():
 
     assert dct_phash64(np.full((16, 70), 100, dtype=np.int64)) is None
     assert dct_phash64(np.full((64, 16), 100, dtype=np.int64)) is None
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+def test_box_mean_hashes_refuse_empty_cells():
+    """Below 8×8 pixels (9 wide for dHash) or 64 audio samples some
+    box-mean cell is empty: the hashes return None instead of dividing
+    by a zero area. Runs with RuntimeWarning as an error, so a
+    division by zero fails the test."""
+    from tidb_cdc_spark.functions.media_hash import audio_fingerprint64
+
+    for shape in [(4, 4), (7, 70), (64, 7), (0, 0)]:
+        assert ahash64(np.full(shape, 100, dtype=np.int64)) is None, shape
+    for shape in [(8, 8), (7, 70), (64, 3)]:
+        assert dhash64(np.full(shape, 100, dtype=np.int64)) is None, shape
+    for n in (0, 1, 63):
+        assert audio_fingerprint64(np.full(n, 1000, dtype=np.int16)) is None, n
+    # the smallest sizes with no empty cell still hash
+    assert ahash64(np.full((8, 8), 100, dtype=np.int64)) is not None
+    assert dhash64(np.full((8, 9), 100, dtype=np.int64)) is not None
+    assert audio_fingerprint64(np.full(64, 1000, dtype=np.int16)) is not None
 
 
 def test_dct_phashes_roundtrip_and_null_contract(spark):
@@ -279,7 +300,7 @@ def test_decode_pixels_boundary_bmp_and_null():
 
 
 def test_jpeg_decodes_to_same_ahash_as_bmp_twin():
-    """Guarded PIL-branch contract (r12 verdict #3): a JPEG and an
+    """Guarded PIL-branch contract: a JPEG and an
     uncompressed-BMP encoding of the SAME 8x8 block image must aHash
     identically — the BMP through the pure-Python path, the JPEG
     through decode_pixels' PIL branch. The block plant's 120-luma
@@ -328,7 +349,7 @@ def test_pil_absent_in_container_pins_skip_reason():
 
 
 def test_dct_plant_coefficients_clear_rounding_boundaries():
-    """ADVICE r12: dct_phash64 is float64 (BLAS matmuls) — rounding
+    """dct_phash64 is float64 (BLAS matmuls) — rounding
     determinism across platforms holds only if no true coefficient
     sits near an x.5 boundary where float residue could flip
     np.rint the other way. Prove the audit family is safe: every
@@ -337,7 +358,7 @@ def test_dct_plant_coefficients_clear_rounding_boundaries():
     2.99e-4). Cross-BLAS evaluation error on a 32-point orthonormal
     DCT of means <= ~6400 is O(n*eps*|x|) ~ 1e-11 — the margin
     dominates it by seven orders, so cross-platform drift is
-    provably absorbed. (The r12 advice suggested asserting 0.05;
+    provably absorbed. (A 0.05 margin was once proposed;
     that margin is empirically FALSE for this family — 200 of the
     12,928 coefficients sit closer — so the guard pins the margin
     that is actually true and still conclusive.)"""

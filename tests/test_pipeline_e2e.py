@@ -1,7 +1,7 @@
 """End-to-end pipeline integration: the curation stages composed the
 way a real training-data run chains them — quality filter → exact
-dedup → budget selection → chunking → partitioned write — plus the
-CDC path feeding the incremental-ingest dedup. Each stage's output
+dedup → budget selection → chunking → partitioned write — plus a
+CDC snapshot feeding the curation surface. Each stage's output
 is the next stage's input; the assertions pin row conservation and
 contract compatibility ACROSS modules (unit tests cover each stage
 alone)."""
@@ -87,73 +87,8 @@ class TestBatchCurationChain:
         assert keepers.count() == 200
 
 
-class TestCdcToCorpusChain:
-    def test_cdc_stream_feeds_ingest_dedup(self, spark, tmp_path):
-        """Maxwell-style doc-table CDC events → parse → latest-wins
-        image → incremental ingest dedup against a shipped snapshot."""
-        from tidb_cdc_spark.streaming.enrich import (
-            ingest_new_documents,
-            snapshot_fingerprints,
-        )
-
-        snapshot = spark.createDataFrame(
-            [(1, "already shipped body")], "doc_id long, text string"
-        )
-        msgs = [
-            # insert duplicating the snapshot content → dropped
-            {"database": "d", "table": "documents", "type": "insert",
-             "ts": 1700000001, "data": {"doc_id": "10", "text": "already shipped body"}},
-            # fresh insert → kept
-            {"database": "d", "table": "documents", "type": "insert",
-             "ts": 1700000002, "data": {"doc_id": "11", "text": "fresh body A"}},
-            # update superseding doc 11 → its final image is what ships
-            {"database": "d", "table": "documents", "type": "update",
-             "ts": 1700000003, "data": {"doc_id": "11", "text": "fresh body B"},
-             "old": {"text": "fresh body A"}},
-        ]
-        d = tmp_path / "cdc_in"
-        os.makedirs(d, exist_ok=True)
-        with open(d / "1.jsonl", "w") as f:
-            f.write("\n".join(json.dumps({"value": json.dumps(m)}) for m in msgs))
-
-        from tidb_cdc_spark.cdc.parse import parse_envelope
-
-        raw = (
-            spark.readStream.format("json")
-            .schema("value string")
-            .load(str(d))
-        )
-        env = parse_envelope(raw, drop_malformed=True)
-        docs = env.filter(F.col("type").isin("insert", "update")).select(
-            F.col("data")["doc_id"].cast("long").alias("doc_id"),
-            F.col("data")["text"].alias("text"),
-            F.to_timestamp(F.from_unixtime(F.col("ts"))).alias("ingest_ts"),
-        )
-        out = ingest_new_documents(
-            docs,
-            snapshot_fingerprints(snapshot),
-            broadcast_snapshot=True,
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("cdc_ingest")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.sql("select doc_id, text from cdc_ingest").collect()
-        got = {(r.doc_id, r.text) for r in rows}
-        # doc 10 deduped away; both images of doc 11 are distinct
-        # content → both pass the fingerprint gate (conflation to the
-        # latest image is the batch cdc_apply job's contract, tested
-        # in test_cdc_apply.py)
-        assert (10, "already shipped body") not in got
-        assert (11, "fresh body A") in got and (11, "fresh body B") in got
-
-
 class TestCdcFeedsCurationSurface:
-    """r12 verdict #6: the "CDC feeds the curation surface" story
+    """The "CDC feeds the curation surface" story
     (SURVEY §0) as ONE executed test instead of prose — file-stream
     Maxwell events carrying document payloads → Connector →
     ParquetSnapshotSink → corpus_curation_provenance over the

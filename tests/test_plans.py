@@ -656,7 +656,7 @@ class TestR10CompositionPlans:
 
 
 class TestGlobalPlanInvariants:
-    # r15 tiered gate: whole-registry plan sweep (~2 min alone);
+    # slow tier: whole-registry plan sweep (~2 min alone);
     # per-family plan pins above stay in the default tier
     @pytest.mark.slow
     def test_no_rowwise_python_or_cartesian_anywhere(self, spark):

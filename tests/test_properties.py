@@ -81,7 +81,7 @@ class TestSnakeCase:
         max_size=20,
     )
 )
-@pytest.mark.slow  # r15 tiered gate
+@pytest.mark.slow  # slow tier
 def test_snapshot_equals_dict_replay(spark, ops):
     """Arbitrary op logs: the engine snapshot equals the sequential
     dict interpretation (last-write-wins per PK, delete removes)."""
@@ -124,7 +124,7 @@ _WORDS = st.text(alphabet="abc", min_size=1, max_size=5)
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(st.lists(_WORDS, min_size=1, max_size=8), min_size=1, max_size=5))
-@pytest.mark.slow  # r15 tiered gate
+@pytest.mark.slow  # slow tier
 def test_bpe_merge_sequence_equals_reference(spark, docs_words):
     """Distributed BPE == the pure-Python reference on random corpora
     over a 3-letter alphabet — ties everywhere, so this sweeps the
@@ -143,7 +143,7 @@ def test_bpe_merge_sequence_equals_reference(spark, docs_words):
     assert got == ref_bpe(texts, 6)
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestSemanticDedupProperties:
     """SemDeDup invariants vs a brute-force twin, hypothesis-swept
     over random corpora (Spark job per example — tight caps)."""
@@ -224,7 +224,7 @@ def _ref_winnow(texts: dict[int, str], k: int, w: int) -> dict[int, set]:
     return out
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestWinnowProperties:
     @settings(
         max_examples=6,
@@ -305,7 +305,7 @@ class TestFeatureHashProperties:
         assert got == ref
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestLmDriftProperties:
     @settings(
         max_examples=6,
@@ -401,9 +401,9 @@ class TestLmDriftProperties:
         assert got == ref
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestRankBucketsDirect:
-    """The r10-extracted shared helper, tested against the obvious
+    """The extracted shared helper, tested against the obvious
     spec on score frames its LM consumers can never produce:
     negative scores, adversarial clustering (all scores in one
     shard-band), ties resolved by doc_id."""
@@ -450,7 +450,7 @@ class TestRankBucketsDirect:
         ]
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestSurprisalBucketProperties:
     @settings(
         max_examples=8,
@@ -555,7 +555,7 @@ def _span_rewrite_pure(docs, k):
     return out
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestSpanRewriteProperty:
     @settings(
         max_examples=6,
@@ -586,7 +586,7 @@ class TestSpanRewriteProperty:
         assert got == _span_rewrite_pure(docs, k)
 
 
-@pytest.mark.slow  # r15 tiered gate: reference-equality property battery
+@pytest.mark.slow  # slow tier: reference-equality property battery
 class TestPagerankProperty:
     @settings(
         max_examples=6,

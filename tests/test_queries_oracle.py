@@ -14,28 +14,31 @@ def con():
     return duck_con(SF)
 
 
+@pytest.fixture
+def fresh_spark(spark):
+    """The session with nothing persisted by an earlier case: no
+    cached subplan and no CDC envelope cache
+    (``queries/cdc.py::_cached_source``), so each query is checked
+    cold and a leaked cache entry cannot carry one query's state or
+    memory into the next."""
+    spark.catalog.clearCache()
+    spark.__dict__.pop("_tidb_cdc_env_cache", None)
+    return spark
+
+
 def _all_names():
-    from tidb_cdc_spark.queries import ORACLE, QUERIES
+    from tidb_cdc_spark.queries import ORACLE
 
-    return [
-        n
-        if QUERIES[n].__module__ == "tidb_cdc_spark.queries.media"
-        else pytest.param(n, marks=pytest.mark.slow)
-        for n in sorted(ORACLE)
-    ]
+    return sorted(ORACLE)
 
 
-# Tiered gate: the 36 media-family mirrors run in the default tier —
-# they share one planted-cluster scaffold, and the default tier holds
-# no other value check for it. The other oracle mirrors are the SLOW
-# tier: test_every_query_runs below executes only the queries WITHOUT
-# an oracle, so outside the media family an oracled query is neither
-# run nor value-checked by default.
+# Every oracled query is value-checked in the default tier;
+# test_every_query_runs below executes the queries WITHOUT an oracle.
 @pytest.mark.parametrize("name", _all_names())
-def test_query_matches_oracle(spark, con, name):
+def test_query_matches_oracle(fresh_spark, con, name):
     from tidb_cdc_spark.queries import ORACLE, QUERIES
 
-    sdf = QUERIES[name](spark, SF)
+    sdf = QUERIES[name](fresh_spark, SF)
     ok, msg = compare(name, sdf, con.sql(ORACLE[name]).df())
     assert ok, msg
 
@@ -52,32 +55,32 @@ def test_every_query_runs(spark):
         assert df.columns
 
 
-# --- SF-independence check (r8 verdict #6): each round's NEW or
-# CHANGED oracle rows re-verify at sf0.1 as well — hash-exact ops can
-# hide SF-dependent constants (q11's data-relative threshold class).
-# Update this list each round to the round's additions.
+# --- SF-independence check: queries whose oracle rests on a
+# data-relative constant or a decoder path re-verify at sf0.1 as well
+# — hash-exact ops can hide SF-dependent constants (q11's
+# data-relative threshold class).
 SF_LARGE = "/root/testdata/sf0.1"
-ROUND_ADDITIONS = [
+SF_INDEPENDENCE = [
     "q21_waiting_suppliers",  # vacuous below sf0.01 (0 rows) — pin here
-    "multimodal_webp_lossy_audit",  # r14 NEW lossy-VP8 ctypes decode audit
-    "multimodal_webp_phash_audit",  # r14 changed: predictor 11/13 fixes
-    "multimodal_jpeg_prog_audit",  # r14 changed: Ns=1 DC scan grid fix
-    "animated_gif_video_audit",  # r14 NEW animated-GIF frame-path audit
-    "multimodal_anim_probe_audit",  # r14 NEW animation header probe
-    "animated_webp_video_audit",  # r14 NEW animated-WebP frame-path audit
-    "multimodal_audio_probe_audit",  # r14 NEW FLAC/MP3 duration probe
-    "audio_g711_audit",  # r14 NEW G.711 companded-audio collapse
-    "multimodal_tiff_phash_audit",  # r14 NEW baseline-TIFF pixel audit
-    "video_curation_pipeline",  # r14 changed: GIF routing in frame path
-    "video_curation_provenance",  # r14 changed: GIF routing in frame path
-    "video_frame_cap_report",  # r14 changed: GIF routing in frame path
-    "multimodal_video_audit",  # r14 changed: MJPEG 00dc branch in decode
-    "multimodal_mjpeg_video_audit",  # r14 NEW MJPEG/AVI1 frame-path audit
-    "audio_adpcm_audit",  # r14 NEW IMA ADPCM adaptive-coding collapse
-    "warc_ingest_audit",  # r14 NEW WARC crawl-archive ingest census
-    "corpus_html_extract",  # r14 NEW JVM-side HTML->text extraction
-    "crawl_html_pipeline",  # r14 NEW WARC->HTTP->HTML end-to-end census
-    "animated_apng_video_audit",  # r14 NEW APNG frame-path audit
+    "multimodal_webp_lossy_audit",  # lossy-VP8 ctypes decode audit
+    "multimodal_webp_phash_audit",  # lossless-WebP predictors 11/13
+    "multimodal_jpeg_prog_audit",  # progressive JPEG Ns=1 DC scan grid
+    "animated_gif_video_audit",  # animated-GIF frame path
+    "multimodal_anim_probe_audit",  # animation header probe
+    "animated_webp_video_audit",  # animated-WebP frame path
+    "multimodal_audio_probe_audit",  # FLAC/MP3 duration probe
+    "audio_g711_audit",  # G.711 companded-audio collapse
+    "multimodal_tiff_phash_audit",  # baseline-TIFF pixel audit
+    "video_curation_pipeline",  # GIF routing in the frame path
+    "video_curation_provenance",  # GIF routing in the frame path
+    "video_frame_cap_report",  # GIF routing in the frame path
+    "multimodal_video_audit",  # MJPEG 00dc branch in the decode
+    "multimodal_mjpeg_video_audit",  # MJPEG/AVI1 frame path
+    "audio_adpcm_audit",  # IMA ADPCM adaptive-coding collapse
+    "warc_ingest_audit",  # WARC crawl-archive ingest census
+    "corpus_html_extract",  # JVM-side HTML->text extraction
+    "crawl_html_pipeline",  # WARC->HTTP->HTML end-to-end census
+    "animated_apng_video_audit",  # APNG frame path
 ]
 
 
@@ -87,19 +90,19 @@ def con_large():
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", ROUND_ADDITIONS)
-def test_round_additions_sf_independent(spark, con_large, name):
+@pytest.mark.parametrize("name", SF_INDEPENDENCE)
+def test_query_matches_oracle_at_sf01(fresh_spark, con_large, name):
     from tidb_cdc_spark.queries import ORACLE, QUERIES
 
-    sdf = QUERIES[name](spark, SF_LARGE)
+    sdf = QUERIES[name](fresh_spark, SF_LARGE)
     ok, msg = compare(name, sdf, con_large.sql(ORACLE[name]).df())
     assert ok, msg
 
 
 def test_q21_non_vacuous_at_sf001(spark, con):
-    """ADVICE r8: q21 returns 0 rows at sf0.001, so the sf0.001
-    mirror row is vacuous — assert the sf0.01+ gate rows are NOT
-    (DuckDB side, cheap)."""
+    """q21 returns 0 rows at sf0.001, so the sf0.001 mirror row is
+    vacuous — assert the sf0.01+ gate rows are NOT (DuckDB side,
+    cheap)."""
     from tidb_cdc_spark.queries import ORACLE
 
     c = duck_con("/root/testdata/sf0.01")  # keep a ref: the relation

@@ -85,15 +85,6 @@ class TestSnapshotDiff:
         }
         assert got == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
 
-    def test_summary_counts(self, spark):
-        old = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-        new = spark.createDataFrame([(2, "b2"), (3, "c")], "doc_id long, text string")
-        got = {
-            r.status: r.n_docs
-            for r in VER.diff_summary(VER.snapshot_diff(old, new)).collect()
-        }
-        assert got == {"removed": 1, "changed": 1, "added": 1}
-
     def test_join_ships_fingerprints_not_bodies(self, spark):
         old = spark.createDataFrame([(1, "x" * 1000)], "doc_id long, text string")
         new = spark.createDataFrame([(1, "x" * 1000)], "doc_id long, text string")

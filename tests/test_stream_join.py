@@ -46,7 +46,7 @@ PURCHASES = [
 ]
 
 
-@pytest.mark.slow  # r15 tiered gate: stateful interval-join e2e battery
+@pytest.mark.slow  # slow tier: stateful interval-join e2e battery
 class TestIntervalJoin:
     def test_inner_matches_only_in_window(self, spark, tmp_path):
         joined = interval_join(

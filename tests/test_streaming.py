@@ -697,7 +697,7 @@ class TestScd2SplitHistorySink:
                 self._changes(spark, [_msg("update", "a", 1, 30)]), 0, SPEC
             )
 
-    @pytest.mark.slow  # r15 tiered gate
+    @pytest.mark.slow  # slow tier
     def test_equals_one_shot_batch_by_batch(self, spark, tmp_path):
         from tidb_cdc_spark.cdc.scd import scd2_history
         from tidb_cdc_spark.streaming import Scd2SplitHistorySink
@@ -899,7 +899,7 @@ class TestScd2SplitHistorySink:
         """A batch that closes nothing (insert-only / brand-new keys /
         delete-only) must NOT add a closed/b=<id> dir — per-idle-batch
         empty dirs re-grow exactly the listing cost compact() fights
-        (r9-advice catch). Reads must tolerate the gaps."""
+        Reads must tolerate the gaps."""
         import os
 
         from tidb_cdc_spark.streaming import Scd2SplitHistorySink

@@ -336,7 +336,7 @@ class TestPredictorModeConformance:
 
     The encoder round-trip battery above cannot pin modes whose
     divergent operand patterns the production encoder avoids — the
-    r13 Select tie-break and AddSubtractComponentHalf truncation
+    Select tie-break and AddSubtractComponentHalf truncation
     bugs both survived it. These streams force every mode over
     uniform-random operands, so any arithmetic divergence in the
     inverse predictor shows as a pixel mismatch."""

@@ -23,7 +23,7 @@ length-normalized saturation quotient. The engine quantizes both:
   div (20·tf·avgdl + 6·avgdl + 18·dl))`` — idf multiplies the
   already-divided saturation quotient, so the µ-numerator excludes
   the one corpus-dependent factor. Degenerate inputs are clamped
-  BEFORE scoring (r7 advice: the unclamped numerator overflows
+  BEFORE scoring (the unclamped numerator overflows
   int64 at tf·avgdl ≳ 10¹⁰, and ANSI mode turns that into
   ARITHMETIC_OVERFLOW failing the whole query): ``tf ≤ 10⁶``
   (saturation is flat there: the quotient is within 1e-5 of its

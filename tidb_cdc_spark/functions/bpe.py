@@ -153,58 +153,3 @@ def bpe_train(
     )
 
 
-def bpe_segment(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Tokenize with a learned merge table: (id, subwords) — applies
-    the merges in rank order to each word (the inference half of the
-    tokenizer). One scan; the merge table is closure-captured (a
-    learned table is KBs — always broadcastable).
-
-    Tokenizer parity with training: lower-casing happens JVM-side
-    (``F.lower``, the same function ``word_vocab`` uses — Python's
-    ``str.lower`` disagrees on a few Unicode mappings, e.g. 'İ'),
-    and word splitting uses an ASCII ``\\s+`` regex matching Java's
-    default ``\\s`` class (Python's ``str.split()`` also splits on
-    Unicode whitespace like NBSP, which training treats as a word
-    character) — otherwise inference would segment symbol streams
-    the merge table never saw.
-    """
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-
-    ranked = list(merges)
-    ws = re.compile(r"\s+", re.ASCII)
-
-    @pandas_udf("array<string>")
-    def segment(texts: pd.Series) -> pd.Series:
-        def word_syms(w):
-            s = list(w) + [EOW]
-            for left, right in ranked:
-                out, i, n = [], 0, len(s)
-                while i < n:
-                    if i + 1 < n and s[i] == left and s[i + 1] == right:
-                        out.append(left + right)
-                        i += 2
-                    else:
-                        out.append(s[i])
-                        i += 1
-                s = out
-            return s
-
-        def one(t):
-            subs = []
-            for w in ws.split(t or ""):
-                if w:
-                    subs.extend(word_syms(w))
-            return subs
-
-        return texts.map(one)
-
-    return docs.select(
-        F.col(id_col), segment(F.lower(F.col(text_col))).alias("subwords")
-    )

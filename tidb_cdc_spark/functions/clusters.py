@@ -98,7 +98,7 @@ def connected_components(
             )
         )
     )
-    # r14 (guide §1.2 "remove passes"): the identity initialization
+    # one pass fewer: the identity initialization
     # labels(id)=id makes round 1's sym⋈labels join a no-op lookup —
     # fuse it: label₀ = min(id, min neighbor) is exactly the result
     # of round 1's propagation, computed with ONE aggregate over sym

@@ -49,26 +49,6 @@ def exact_dedup(
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 64, shingle_k: int = 5) -> Column:
-    """MinHash signature as a single Column (array<long>):
-    h_i = min over shingles of xxhash64(seed_i, shingle_hash).
-
-    The shingle set is hashed to longs ONCE, then each family hashes
-    longs (cheap) instead of re-hashing multi-byte strings — but note
-    higher-order functions are interpreted (CodegenFallback), so for
-    bulk pair-finding prefer ``minhash_signatures_df`` (explode +
-    codegen hash-aggregate), which is what ``minhash_lsh_pairs``
-    uses. This Column form is for small/streaming projections."""
-    hs = F.transform(shingles(text, k=shingle_k), lambda s: F.xxhash64(s))
-
-    def family(i: int):
-        # closure (not a default arg) — extra lambda params trip
-        # PySpark's higher-order-function arity detection
-        return F.array_min(F.transform(hs, lambda h: F.xxhash64(F.lit(i), h)))
-
-    return F.array(*[family(i) for i in range(num_hashes)])
-
-
 def minhash_signatures_df(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -593,8 +573,8 @@ def simhash_pairs_from_sigs(
     l = keyed.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a"), "_table", "_key")
     r = keyed.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sh_b"), "_table", "_key")
     hamming = F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
-    # r15 (guide §2.3 "shuffle fewer bytes"): the Hamming test runs
-    # BEFORE the pair-dedup exchange — hamming is a pure function of
+    # shuffle fewer bytes: the Hamming test runs BEFORE the
+    # pair-dedup exchange — hamming is a pure function of
     # the pair (every duplicate candidate row carries the same
     # signatures), so filtering first drops whole duplicate groups
     # and the dropDuplicates shuffle carries only TRUE pairs instead
@@ -724,10 +704,9 @@ def ngram_containment_pairs(
     only — at 100 TB the same plan with the join key narrowed to 16
     bytes of the digest is the standard trade.
 
-    ``shingle_key`` (r15, guide §2.3 "narrower types" / "shuffle
-    fewer bytes"): every OUTPUT column of this op depends only on
-    shingle-set IDENTITY (distinct counts, intersections, the df cap)
-    — never on the key's VALUE — so any injective keying of the
+    ``shingle_key`` (narrower types, fewer shuffled bytes): every
+    OUTPUT column of this op depends only on shingle-set IDENTITY
+    (distinct counts, intersections, the df cap) — never on the key's VALUE — so any injective keying of the
     shingle token sequence yields identical rows. ``"xxh64"`` keys on
     the rolled 8-byte xxhash64 (``shingle_hash_rows``): the shingle
     STRING is never built, the dedup/cap/index-join shuffles carry an

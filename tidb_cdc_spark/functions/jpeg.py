@@ -734,8 +734,8 @@ def _huff_spec_ac():
 # The byte values below are pinned against an independent authority
 # in tests/test_codec_conformance.py: javax.imageio's JPEG writer
 # emits exactly these tables in its DHT segments, and the test
-# parses them out and asserts count+symbol equality (the r13
-# no-guess doctrine — a transcribed constant needs a referee).
+# parses them out and asserts count+symbol equality (a
+# transcribed constant needs a referee).
 
 _STD_DC_LUM = (
     [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],

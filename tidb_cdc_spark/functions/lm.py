@@ -212,7 +212,7 @@ def rank_buckets(
     order - and ``bucket = ((rank-1)*n_buckets) div N`` (0 = lowest
     surprisal). Fully integral, so hash-exact cross-engine.
 
-    Extracted from ``surprisal_buckets`` (r10) so the CCNet shape -
+    Extracted from ``surprisal_buckets`` so the CCNet shape -
     trusted-slice LM -> rank -> head/middle/tail - composes with the
     model-based ``stupid_backoff_score`` without re-implementing the
     two-level banded prefix scan. The input is MATERIALIZED once

@@ -111,23 +111,29 @@ def _above(values, thresh) -> int:
     return _to_signed64(h)
 
 
-def ahash64(gray) -> int:
+def ahash64(gray) -> "int | None":
     """Average-hash: 8×8 integer box means, bit b set iff cell b's
     mean exceeds the truncating mean of all 64 cell means (bit index
     = row-major cell index). Invariant under a uniform brightness
     shift that stays in-range: every cell mean and the threshold
     shift by exactly δ (integer means of uniformly shifted pixels),
     so every comparison is unchanged. Returned as a SIGNED 64-bit
-    value (Spark LongType two's-complement)."""
+    value (Spark LongType two's-complement); None for images smaller
+    than 8×8, whose grid would have empty cells."""
+    if gray.shape[0] < 8 or gray.shape[1] < 8:
+        return None
     m = _box_means(gray, 8, 8)
     return _above(m.ravel().tolist(), int(m.sum()) // 64)
 
 
-def dhash64(gray) -> int:
+def dhash64(gray) -> "int | None":
     """Difference-hash: 9×8 integer box means, bit (i·8+j) set iff
     cell (i, j+1)'s mean exceeds cell (i, j)'s — horizontal gradient
     signs. Shares the brightness-shift invariance of :func:`ahash64`
-    (both means shift by δ exactly). Signed 64-bit."""
+    (both means shift by δ exactly). Signed 64-bit; None below 9
+    pixels wide or 8 tall."""
+    if gray.shape[0] < 8 or gray.shape[1] < 9:
+        return None
     m = _box_means(gray, 9, 8)
     return _above((m[:, 1:] - m[:, :-1]).ravel().tolist(), 0)
 
@@ -199,7 +205,9 @@ def video_frame_hashes(
             frames = decode_webp_anim_frames(b)
         else:
             frames = decode_avi_frames(b)
-        return [(k, ahash64(gray)) for k, gray in enumerate(frames or ())]
+        # a frame too small to hash is no frame evidence: no row
+        hashed = ((k, ahash64(gray)) for k, gray in enumerate(frames or ()))
+        return [(k, h) for k, h in hashed if h is not None]
 
     return _hash_rows(
         media,
@@ -305,13 +313,16 @@ def video_frame_cap_report(
     )
 
 
-def audio_fingerprint64(samples) -> int:
+def audio_fingerprint64(samples) -> "int | None":
     """Energy aHash over PCM samples: 64 equal frames, bit k set iff
     frame k's truncating mean |amplitude| exceeds the truncating
     mean of all 64 frame energies. The audio analog of
     :func:`ahash64` — invariant under clipping-free amplitude
     scaling (every frame energy and the threshold scale together) —
-    computed with the same integer box-mean helper. Signed 64-bit."""
+    computed with the same integer box-mean helper. Signed 64-bit;
+    None below 64 samples, where some frame would be empty."""
+    if len(samples) < 64:
+        return None
     m = _box_means(np.abs(samples)[None, :], 64, 1).ravel()
     return _above(m.tolist(), int(m.sum()) // 64)
 
@@ -331,7 +342,7 @@ def audio_fingerprints(
 
     def rows(payload):
         x = None if payload is None else decode_wav_samples(payload)
-        return [(None if x is None or not len(x) else audio_fingerprint64(x),)]
+        return [(None if x is None else audio_fingerprint64(x),)]
 
     return _hash_rows(
         media, id_col, payload_col, [StructField("afp", LongType())], rows
@@ -485,10 +496,12 @@ def audio_window_hashes(
         x = None if payload is None else decode_wav_samples(payload)
         if x is None:
             return []
-        return [
+        hashed = (
             (k, audio_fingerprint64(x[k * window_samples : (k + 1) * window_samples]))
             for k in range(len(x) // window_samples)
-        ]
+        )
+        # windows under 64 samples cannot be fingerprinted: no rows
+        return [(k, h) for k, h in hashed if h is not None]
 
     return _hash_rows(
         media,

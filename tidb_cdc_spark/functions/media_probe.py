@@ -244,22 +244,6 @@ def extract_features(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
     return media.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: bytes → bytes with updated metadata. The
-    transform itself is the stub (identity payload); the schema/batch
-    shape is the real contract."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["width"] = width
-            pdf["height"] = height
-            # STUB: real impl re-encodes payload at (width, height)
-            yield pdf
-
-    return media.mapInPandas(resize, schema=media.schema)
-
-
 def parse_media_header(
     payload: bytes,
 ) -> "tuple[str, int] | None":

@@ -24,12 +24,3 @@ def dec(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
     return c.cast(f"decimal({precision},{scale})")
 
 
-def dsum(col: Column, precision: int = 18, scale: int = 2) -> Column:
-    """Deterministic sum of a decimal expression, surfaced as double."""
-    return F.sum(col).cast("double")
-
-
-def davg(col: Column) -> Column:
-    """Deterministic mean: exact decimal sum cast to double, divided
-    by the count in double (identical double ops on both engines)."""
-    return F.sum(col).cast("double") / F.count(col).cast("double")

@@ -78,7 +78,7 @@ def semantic_dedup(
         from tidb_cdc_spark.functions.sampling import sampled_train
         from tidb_cdc_spark.session import materialize
 
-        # r15 (guide §5 / VERDICT #5): the vector-building pipeline
+        # the vector-building pipeline
         # (for doc_semantic_dedup: tokenize -> hashed-TF -> densify)
         # feeds THREE consumers — the sampled-train row-count probe,
         # the KMeans fit, and the assignment transform. Without a

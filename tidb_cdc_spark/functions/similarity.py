@@ -170,7 +170,7 @@ def knn_ivf(
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql.functions import pandas_udf
 
-    # r15 note: do NOT materialize `c` here — measured (sf0.01) that
+    # do NOT materialize `c` here — measured (sf0.01) that
     # persisting changes the cached frame's partition layout, and
     # MLlib KMeans' seeded kmeans|| init is partition-sensitive, so
     # the centroids (hence cells, hence top-k) CHANGE. The duplicate
@@ -386,7 +386,7 @@ def knn_lsh(
     cands = cd.join(F.broadcast(qd), "_tag").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    # r15 (guide §2.3): score BEFORE the pair-dedup exchange — the
+    # score BEFORE the pair-dedup exchange — the
     # cosine is a pure function of the pair (every multi-table
     # duplicate row carries the same two vectors, so the same exact
     # double), and computing it map-side means the dropDuplicates

@@ -48,22 +48,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def quality_score(text: Column) -> Column:
-    """Heuristic quality score in [0,1]: mean-token-length band,
-    alpha ratio, and stopword presence — the standard cheap filters
-    a pretraining pipeline applies before expensive scoring."""
-    toks = tokens(text)
-    n = F.greatest(F.size(toks), F.lit(1)).cast("double")
-    mean_len = F.length(F.concat_ws("", toks)).cast("double") / n
-    len_ok = F.when((mean_len >= 3) & (mean_len <= 10), 1.0).otherwise(0.5)
-    alpha_ratio = (
-        F.length(F.regexp_replace(text, r"[^A-Za-z]", "")).cast("double")
-        / F.greatest(F.length(text), F.lit(1)).cast("double")
-    )
-    sw = stopword_ratio(text)
-    return F.round((len_ok + alpha_ratio + F.least(sw * 5, F.lit(1.0))) / 3.0, 6)
-
-
 def lang_scores(text: Column) -> Column:
     """Map of lang → stopword-hit count; argmax is the predicted
     language. Pure expressions; scoring ~100 TB of docs is a scan."""
@@ -168,11 +152,11 @@ def shingle_hash_rows(
     pipeline within the partition. Window state is one row — no
     spill risk regardless of document count per partition.
 
-    r15 (guide §2.3 "narrower types"/"project before the exchange"):
-    each token is hashed to its 8-byte xxhash64 in the projection
-    BELOW the window's hash-exchange, so the exchange carries
-    (id, pos, long) instead of (id, pos, token STRING) — the window
-    expressions then roll the already-hashed longs. Values are
+    Narrower types, projected before the exchange: each token is
+    hashed to its 8-byte xxhash64 in the projection BELOW the
+    window's hash-exchange, so the exchange carries (id, pos, long)
+    instead of (id, pos, token STRING) — the window expressions then
+    roll the already-hashed longs. Values are
     unchanged (the rolled hash always was xxhash64 over per-token
     xxhash64s); only where the per-token hash is computed moves.
     """

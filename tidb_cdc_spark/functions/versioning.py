@@ -45,9 +45,3 @@ def snapshot_diff(
     return j.select("id", status.alias("status"), "old_fp", "new_fp")
 
 
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """(status, n_docs): one map-side-combining aggregate over the
-    diff — the four-row health check a pipeline gates on."""
-    return diff.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )

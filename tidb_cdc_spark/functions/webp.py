@@ -31,7 +31,7 @@ on hosts without libwebp the tests skip and the literal stands as
 the verified record), and (c) pins each of the 14 predictor modes
 individually with crafted random-residual streams against
 ``WebPDecodeRGBA`` — necessary because encoder round-trips never
-exercise the divergent operand patterns (the r13 Select tie-break
+exercise the divergent operand patterns (the Select tie-break
 and AddSubtractComponentHalf truncation bugs survived the battery
 and were caught only differentially). Lossy VP8 and the extended
 VP8X container return None from the PURE path, then get REAL pixels

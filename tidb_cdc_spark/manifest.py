@@ -1,10 +1,11 @@
-"""Persisted-store manifests (r13): the listing-free read path for
+"""Persisted-store manifests: the listing-free read path for
 the bucketed admission/index stores.
 
-The r12 digest-scale rehearsal found the pruned screening regime's
-per-batch cost dominated locally by a CONSTANT term: partition
+The digest-scale rehearsal (``tools/stateful_width_rehearsal.py``)
+found the pruned screening regime's per-batch cost dominated locally
+by a CONSTANT term: partition
 discovery lists every bucket directory on every read, and the
-listing price grows with n_buckets (NOTES r12: 10x the directories
+listing price grows with n_buckets (measured: 10x the directories
 cost 1.71x at an 800 MB index). A manifest-based table format
 (Delta/Iceberg) removes that term by recording the file list in
 metadata -- this module is the same move for the plain-parquet
@@ -16,14 +17,14 @@ hands Spark the files directly (``basePath`` read keeps the
 partition column) -- zero directory listing on the read path, at any
 partition count.
 
-Maintenance contract (the admission stores' shared mechanics,
-streaming/enrich.py):
+Maintenance contract (the partitioned-append store frame,
+``streaming/enrich.py::_PartitionedStore``):
 - appends refresh ONLY the touched partitions (one os.listdir per
   touched dir, the same dirs the append just wrote -- cost
   proportional to the batch);
-- compact() and re-bucketing rebuild the manifest after their
-  directory swap (``_tables_compact`` does it for every partitioned
-  table it rewrites, a re-bucket inside its journaled commit);
+- compact(), re-bucketing and the IVF rebuild rebuild the manifest
+  after their directory swap (a re-bucket or rebuild inside its
+  journaled commit);
 - crash windows heal lazily: a manifest entry whose file vanished
   (crash between a compact swap and its rebuild) is detected by a
   driver-side existence probe over the TOUCHED files only and

@@ -103,7 +103,7 @@ def text_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(hits * 1e6) div tokens`` as BIGINT (integer division is
     bit-identical in every engine), summed exactly, with ONE final
     double division. Round-tripping each ratio through double →
-    decimal(12,6) (the r1 approach) diverged between Spark (half-up)
+    decimal(12,6) (an earlier approach) diverged between Spark (half-up)
     and DuckDB (half-even) at the 6th decimal."""
     d = _docs(spark, sf_dir)
     toks = T.tokens(F.lower(F.col("text")))
@@ -1302,7 +1302,7 @@ def vocab_drift_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     training mixture. Integral ppm (cnt·10⁶ div total) — exact in
     both engines."""
 
-    # deliberately NOT materialized (r12 profile, NOTES.md): the base
+    # deliberately NOT materialized (profiled, NOTES.md): the base
     # scan feeds three consumers but costs only ~0.27 s of the 1.34 s
     # total — the two tokenize+agg sides are 0.60 + 0.97 s — and
     # caching it measured SLOWER in both storage levels (DISK_ONLY
@@ -1485,7 +1485,7 @@ def corpus_mojibake_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-checkable."""
 
     tail = "\u00a0caf\u00e9 \u2014 na\u00efve r\u00e9sum\u00e9"
-    # r7-advice pin: a marker char PLUS non-Latin-1 chars (em dash,
+    # pin: a marker char PLUS non-Latin-1 chars (em dash,
     # CJK, emoji) is realistic clean text that the unguarded encode
     # used to crash on (ANSI MALFORMED_CHARACTER_CODING) — it must
     # pass through untouched, and the scan must not fail.
@@ -1935,7 +1935,7 @@ FROM b GROUP BY doc_id ORDER BY doc_id
 """
 
 
-# --------------------- LM-scored head/middle/tail buckets (r10)
+# --------------------------- LM-scored head/middle/tail buckets
 
 
 def corpus_lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

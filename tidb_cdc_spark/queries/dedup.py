@@ -917,7 +917,7 @@ def _repr_docs(d: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
     pipeline exists to collapse, handing the quadratic blowup back
     to the winnow stage.
 
-    r14 note: an anti-join formulation (docs LEFT ANTI the CC rows
+    An anti-join formulation (docs LEFT ANTI the CC rows
     with id ≠ cluster_id) produces the IDENTICAL survivor set with
     one join fewer, but measured consistently SLOWER here (8.6 s vs
     6.8–7.4 s interleaved at sf0.1) — the inner join against the
@@ -954,7 +954,7 @@ def winnow_repr_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The composed op keeps winnowing's w+k−1 structural guarantee for
     CROSS-family overlap while removing the within-family quadratic
-    pair output the r8 100× curve measured (27.2M rows → the star/CC
+    pair output the 100× scale curve measured (27.2M rows → the star/CC
     stages are linear and the winnow self-join no longer sees
     families). Rows-only (MinHash banding is not SQL-expressible);
     the oracle-checked contract is ``winnow_repr_audit`` and the
@@ -1212,7 +1212,7 @@ ORDER BY eval_id, train_id
 """
 
 
-# ------------------------- containment over representatives (r10)
+# ------------------------------- containment over representatives
 
 
 def dedup_containment_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1224,7 +1224,7 @@ def dedup_containment_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the survivors.
 
     Why: containment, like every raw pair op here, inherently emits
-    ~s·b(b−1)/2 join rows on a b-member near-dup family (the r9 100×
+    ~s·b(b−1)/2 join rows on a b-member near-dup family (the 100×
     rehearsal measured 1.7 s → 4.4 s → memory pressure). Family
     members are mutual near-supersets, so their containment pairs
     are redundant by construction; the relation that MATTERS at
@@ -1246,7 +1246,7 @@ def dedup_containment_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
     than being lowered until rows appear; the audit and the
     synthetic-corpus tests carry the non-vacuous evidence."""
 
-    # r15 (guide §2.3): this composed pipeline is ROWS-ONLY (the
+    # this composed pipeline is ROWS-ONLY (the
     # oracle twin is ``containment_repr_audit``), and containment
     # output depends only on shingle-set identity — so it rides the
     # 8-byte xxhash64 shingle keys instead of 32-byte md5 hex

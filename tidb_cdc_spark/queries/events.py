@@ -804,7 +804,7 @@ def events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     |v − median| > 3·MAD, MAD = median(|v − median|). Cross-engine
     exactness: Spark ``percentile`` and DuckDB ``quantile_cont`` share
-    the p·(n−1) interpolation convention (pinned since r1), both
+    the p·(n−1) interpolation convention (pinned by test), both
     medians are computed from identical doubles, and the final ratio
     divides identical doubles — so both engines select identical rows.
     Plan: two small per-type aggregates (percentile is sort-based but

@@ -38,7 +38,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # --- r14 (guide §2.2): coalesce post-shuffle partitions by
+        # --- coalesce post-shuffle partitions by
         # SIZE (advisoryPartitionSizeInBytes), not down to the core
         # count. parallelismFirst=true (the Spark default) pins every
         # tiny reduce stage at defaultParallelism near-empty tasks;
@@ -47,22 +47,22 @@ def get_spark(
         # target is bytes, so a 100 TB shuffle still fans out to
         # thousands of partitions while a KB-sized one collapses to 1.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        # --- r14 (guide §5): let AQE re-plan the subplans that fill
+        # --- let AQE re-plan the subplans that fill
         # the persisted frames materialize() creates — without this a
         # cached frame keeps the static shuffle.partitions layout and
         # every downstream consumer (MLlib fit iterations included)
         # inherits its near-empty task fan-out.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        # --- r15 (guide §3.1, VERDICT #6/ADVICE): static planner
-        # keeps Spark's sort-merge preference (the default). r14 had
-        # shipped preferSortMergeJoin=false, but the static choice
-        # rides SIZE ESTIMATES — a bad estimate plus skew builds an
-        # unbounded hash map on an executor at 100 TB, and the
+        # --- static planner keeps Spark's sort-merge preference
+        # (the default). preferSortMergeJoin=false was tried and
+        # reverted: the static choice rides SIZE ESTIMATES — a bad
+        # estimate plus skew builds an unbounded hash map on an
+        # executor at 100 TB, and the
         # rotated 3-arm A/B recorded in OPTIMIZATION_r15.md §5 shows
         # the static half carries no measurable win over the bounded
         # AQE runtime rewrite below.
         .config("spark.sql.join.preferSortMergeJoin", "true")
-        # --- r14 (guide §3.1): preferSortMergeJoin=false alone only
+        # --- preferSortMergeJoin=false alone only
         # affects the STATIC planner (whose size estimates rarely
         # qualify); this is the runtime half — AQE rewrites a
         # sort-merge join to shuffled-hash when every post-shuffle
@@ -104,8 +104,8 @@ def get_spark(
         # fixed UTC+8 ("BJ", /root/reference/tag.go:47-55); keep UTC
         # for analytics and convert explicitly in the CDC layer ---
         .config("spark.sql.session.timeZone", "UTC")
-        # catalog warehouse for bucketed tables (operators/bucketing):
-        # kept out of the repo tree
+        # catalog warehouse for saveAsTable tables: kept out of the
+        # repo tree
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -9,20 +9,22 @@ once:
    ``os.replace``-s it over ``<path>`` and fsyncs the parent
    directory. A reader sees the old or the new content, never a torn
    file.
-2. **Versioned directories** (``ParquetSnapshotSink``, the SCD2
-   sinks): ``commit_version`` writes ``<prefix>N`` next to the live
-   version, then publishes it by rewriting the ``_CURRENT`` pointer,
-   ``"<N> <batch_id>"``, so version and batch watermark commit
-   together. Versions older than ``N-1`` are removed afterwards; the
-   previous one stays for readers still in flight. Anything the
-   pointer does not name is invisible, and a retry overwrites it.
-3. **Swapped directories** (compaction, re-bucketing, the copy-on-write
-   sketch tables): the new content is built in ``<live>.swap.tmp``
+2. **Versioned directories**: ``commit_version`` writes ``<prefix>N``
+   next to the live version, then publishes it by rewriting the
+   ``_CURRENT`` pointer, ``"<N> <batch_id>"``, so version and batch
+   watermark commit together. Versions older than ``N-1`` are
+   removed afterwards; the previous one stays for readers still in
+   flight. Anything the pointer does not name is invisible, and a
+   retry overwrites it.
+3. **Swapped directories** (compaction, re-bucketing, the swapped
+   tables): the new content is built in ``<live>.swap.tmp``
    (``staging``), then ``swap_in`` renames ``live`` to
    ``<live>.swap.old``, the tmp to ``live``, and removes the old one.
    ``recover(live)`` rolls a torn swap back: it restores the old
    directory when ``live`` is missing, drops it when ``live`` exists,
-   and removes a stale tmp. Every read and write path calls it first.
+   and removes a stale tmp; ``recover_all`` does so for every
+   directory of a store root. Every read and write path calls one
+   first.
 4. **Several directories as one commit** (IVF rebuild, re-bucketing
    with its new ``_PARAMS``): after staging every tmp, ``swap_all``
    writes a journal file -- the commit point -- and ``roll_forward``
@@ -33,10 +35,29 @@ once:
    last (``commit_watermark``), or inside the pointer or swapped
    directory it belongs to. ``guard_batch_watermark`` makes a
    re-delivered batch a no-op and refuses a batch id behind it.
+6. **Parameters**: ``read_params`` is the one ``_PARAMS`` rule --
+   stored values win over the sink's configuration, a pinned key
+   stored with another value raises, and a data directory without
+   ``_PARAMS`` raises.
 
-Stores whose appends are not idempotent (the admission sinks, the IVF
-index) can be left with an append whose watermark never committed;
-their replay appends again: duplication, never loss.
+Sinks use these in three store frames:
+
+- **versioned pointer** (2 + 5): ``ParquetSnapshotSink`` and
+  ``Scd2SplitHistorySink`` (``streaming/sinks.py``);
+- **root-watermarked partitioned append** (1, 3, 4, 5, 6): the
+  admission sinks and ``IvfIndexSink``
+  (``streaming/enrich.py::_PartitionedStore``) append per batch,
+  refresh a partition manifest, then commit ``root/_BATCH``;
+  ``WinnowOverlapSink`` shares the root watermark with per-batch
+  partitions written by dynamic overwrite;
+- **swapped table** (3 + 5 + 6): ``CountMinSink``, ``PcaMomentSink``
+  and ``HllDistinctSink`` (``streaming/enrich.py::_SwapTableSink``)
+  rewrite one small table with its watermark and ``_PARAMS`` inside
+  and swap it in.
+
+Appends are not idempotent, so a partitioned-append store can be
+left with an append whose watermark never committed; its replay
+appends again: duplication, never loss.
 
 Data directories are fsynced before they are published. All mutation
 goes through three primitives -- ``_write_file``, ``_replace`` and
@@ -129,6 +150,43 @@ def remove(path: str) -> None:
     """Delete a file or directory tree if it exists."""
     if os.path.lexists(path):
         _remove(path)
+
+
+def read_params(path: str, want: dict, pinned, data: str) -> dict | None:
+    """A store's live parameters: the ``_PARAMS`` JSON at ``path``
+    over ``want``, the sink's own configuration.
+
+    Stored values win, so a restart with another creation default
+    cannot split reads and writes across layouts. A ``pinned`` key
+    whose stored and wanted values are both set and differ raises:
+    state built under other parameters (a key layout, a sketch's
+    width) merges without any schema error but corrupts every later
+    read. Returns None for a fresh store; the ``data`` directory
+    existing without ``_PARAMS`` raises, since a layout cannot be
+    inferred from data."""
+    stored = read_json(path)
+    if stored is None:
+        if os.path.exists(data):
+            raise ValueError(
+                f"{data} exists but its _PARAMS file is missing — restore "
+                "it (the layout cannot be inferred from data)"
+            )
+        return None
+    bad = [
+        f"{k}: stored={stored[k]!r} vs sink={want[k]!r}"
+        for k in sorted(pinned)
+        if stored.get(k) is not None
+        and want[k] is not None
+        and stored[k] != want[k]
+    ]
+    if bad:
+        raise ValueError(
+            f"persisted state at {os.path.dirname(path)!r} was built with "
+            f"different parameters ({', '.join(bad)}) — merging would "
+            "corrupt every later read; use a fresh root or matching "
+            "parameters"
+        )
+    return {**want, **{k: v for k, v in stored.items() if v is not None}}
 
 
 # -------------------------------------------------------- watermark
@@ -239,6 +297,16 @@ def recover(live: str) -> None:
         else:
             _replace(old, live)
     remove(live + TMP)
+
+
+def recover_all(root: str) -> None:
+    """``recover`` every directory under ``root`` that has a swap
+    leftover next to it."""
+    if os.path.isdir(root):
+        for name in os.listdir(root):
+            for suffix in (TMP, OLD):
+                if name.endswith(suffix):
+                    recover(os.path.join(root, name[: -len(suffix)]))
 
 
 def swap_all(journal: str, lives: list[str], meta: dict, finish) -> None:
