@@ -244,6 +244,47 @@ def _encoded(ns) -> dict:
     out["lzw_2"] = ns["_gif_lzw_encode"](rng.integers(0, 2, 900), 2)
     out["png_chunk"] = ns["_png_chunk"](b"tEXt", b"k\x00v")
     out["idat"] = ns["_idat_payload"](out["png_rgb_3"])
+    out.update(_encoded_jpeg(ns))
+    return out
+
+
+def _encoded_jpeg(ns) -> dict:
+    """Every JPEG encoder keyword combination the tests use, on one
+    odd-sized noise array (every AC path) and one smooth one (long
+    zero runs: ZRL and EOB runs)."""
+    noise = np.random.default_rng(19).integers(0, 256, (19, 27)).astype(np.int64)
+    smooth = np.add.outer(np.arange(19) * 5, np.arange(27) * 3).astype(np.int64)
+    c420 = {"color": True, "subsampling": "420"}
+    seq = {
+        "plain": {},
+        "rst": {"restart_interval": 2},
+        "444_cbcr": {"color": True, "cb_const": -24, "cr_const": 16},
+        "420_cbcr_rst": {**c420, "cb_const": 17, "cr_const": -9,
+                         "restart_interval": 3},
+        "std": {"tables": "standard"},
+        "std_rst": {"tables": "standard", "restart_interval": 2},
+        "std_420": {**c420, "cb_const": 9, "cr_const": -17,
+                    "tables": "standard"},
+        "exif6": {"exif_orientation": 6},
+    }
+    prog = {
+        "plain": {},
+        "rst": {"restart_interval": 2},
+        "444_cbcr": {"color": True, "cb_const": 5, "cr_const": -5},
+        "420_cbcr_rst": {**c420, "cb_const": 5, "cr_const": -5,
+                         "restart_interval": 3},
+        "dcpc": {"dc_per_component": True},
+        "420_dcpc": {**c420, "cb_const": 17, "cr_const": -9,
+                     "dc_per_component": True},
+        "420_dcpc_rst": {**c420, "dc_per_component": True,
+                         "restart_interval": 2},
+    }
+    out = {}
+    for name, g in (("noise", noise), ("smooth", smooth)):
+        for kind, combos in (("seq", seq), ("prog", prog)):
+            enc = ns["encode_jpeg" if kind == "seq" else "encode_jpeg_progressive"]
+            for label, kw in combos.items():
+                out[f"jpeg_{kind}_{label}_{name}"] = enc(g, **kw)
     return out
 
 

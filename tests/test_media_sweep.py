@@ -10,11 +10,20 @@ every decoder and probe must return on every variant.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import functions as F
 
-from tests.test_media_bytes import PURE, namespace, single_partition_plants
+from tests.test_media_bytes import PURE, _feed, namespace, single_partition_plants
 
 OVERWRITES = (0, 1, 2, 3, 4, 255)
+
+#: sha256 over every variant's decoder and probe results, per payload:
+#: the JPEG codec's outcome on malformed input, pinned value for value
+OUTCOMES = {
+    "jpeg": "d47314af7561aaa08e4be71f214af468fc353a5cdc21bf85c0140318d5ae8bec",
+    "mjpeg": "9d802be7c9fd05d5b3e33ecfa7cf36292171f34a8e25242b92283cce8adcc374",
+}
 
 
 def planted_payloads(spark, ns) -> dict:
@@ -106,3 +115,19 @@ def test_decoders_and_probes_never_raise(spark, monkeypatch):
         ), fmt
     errors = sweep(payloads, ns)
     assert not errors, f"{len(errors)} raises, e.g. {errors[:8]}"
+
+
+def outcomes(p: bytes, ns) -> str:
+    """One digest over (variant, every decoder's and probe's result)."""
+    h = hashlib.sha256()
+    for desc, q in variants(p):
+        _feed(h, [desc] + [ns[name](q) for name in PURE])
+    return h.hexdigest()
+
+
+def test_jpeg_sweep_outcomes_match_fixture(spark, monkeypatch):
+    single_partition_plants(monkeypatch)
+    ns = namespace()
+    payloads = planted_payloads(spark, ns)
+    got = {fmt: outcomes(payloads[fmt], ns) for fmt in OUTCOMES}
+    assert got == OUTCOMES
