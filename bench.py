@@ -4,34 +4,33 @@
 ``{"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
    "n_queries": N, "queries": {<5 slowest>: sec}, "detail": ...}``.
 
-The driver's tail capture window is 2,000 chars (MEASURED round 8:
-a 1,940-byte line parsed, a ~2,120-byte line recorded parsed:null)
+The driver's tail capture window is 2,000 chars (measured: a
+1,940-byte line parsed, a ~2,120-byte line recorded parsed:null)
 — so the stdout line carries only the summary + the 5 slowest
 queries, shrinking that dict if it would ever reach 1,500 bytes
-(graceful, never an assert — r9 advice); the full per-query timings
+(graceful, never an assert); the full per-query timings
 (and per-run raw arrays) go to the committed ``BENCH_DETAIL.json``,
 and raw arrays also stream to stderr live. The line self-describes
 contamination: ``"degraded": true`` when ambient start load exceeds
 0.5/CPU or >15% of queries hit the 4-run cap with their two best
 runs still >15% apart — cap-exit disagreement, NOT "needed a 3rd
-run", which is structurally ~0.75 everywhere (the r9 loaded-box
-record had no such flag and overstated the suite ~17%).
+run", which is structurally ~0.75 everywhere (a record once taken
+on a loaded box had no such flag and overstated the suite ~17%).
 
 Each query is fully materialized via a cheap count-style action
 (``df.count()`` after the query's own sort/limit), which forces the
 whole plan without driver-side collection overhead.
 
-Suite policy (round 9): ≤ ~60 entries — every ≥0.5 s op and every
+Suite policy: ≤ ~60 entries — every ≥0.5 s op and every
 iterative / join-heavy / multi-stage shape stays; sub-0.5 s
 single-scan entries whose plan shape is already represented
 (doc_nfc_normalize, events_hourly, q6, rollup, int8-quantize,
 lang-id, token-entropy, topk-window, budget-head, mix-plan,
-snapshot-diff, q19, hard-negatives; r12: corpus_quality_filter,
+snapshot-diff, q19, hard-negatives, corpus_quality_filter,
 contamination_eval_overlap) are retired from the HEADLINE list
 only — they remain declared, oracle-gated, and mirror-tested.
-Round 12 adds the five multimodal audits (r11 verdict #5), the
-audio/video sample-path audits, and the composed
-media_curation_pipeline → 66 entries.
+The multimodal audits, the audio/video sample-path audits and the
+composed media_curation_pipeline then took the list to 66 entries.
 """
 
 from __future__ import annotations
@@ -49,8 +48,8 @@ def main() -> None:
     from tidb_cdc_spark import get_spark
     from tidb_cdc_spark.queries import QUERIES
 
-    # Load guard (r9 verdict: the official r9 record was captured on
-    # a loaded box and overstated the suite ~17% — uniform drift on
+    # Load guard (an official record was once captured on a loaded
+    # box and overstated the suite ~17% — uniform drift on
     # untouched code, first runs 2-3x the mins). A hot record must be
     # SELF-DESCRIBING, so the stdout line carries "degraded": true
     # when either signal fires: (a) ambient 1-min load at start
@@ -60,20 +59,21 @@ def main() -> None:
     # misses. (Calibration note: "needed a 3rd run" is NOT a load
     # signal — per-query first runs are structurally ~1.5x the min
     # from plan codegen, so that fraction sits near 0.75 on clean
-    # AND loaded boxes; cap-exit disagreement on the r9 records:
-    # 0.05-0.07, so 0.15 flags only genuine sustained noise.)
+    # AND loaded boxes; cap-exit disagreement on the loaded-box
+    # records: 0.05-0.07, so 0.15 flags only genuine sustained noise.)
     # per core of THIS run (local[$SPARK_GRAFT_CPUS]), not of the host:
     # an 8-core run on a busy 32-core box must still read as loaded
     ncpu = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    # both loadavg horizons (r11 advice): the 1-min sample passes a
+    # both loadavg horizons: the 1-min sample passes a
     # box still cache/IO-settling minutes after a pytest marathon —
     # the 5-min figure makes that visible in drift triage. The
     # degraded VERDICT still keys on the 1-min sample only (changing
-    # the flag's semantics would break cross-round comparability).
+    # the flag's semantics would break comparability with older
+    # records).
     load_start = os.getloadavg()[0]
     load_start_5m = os.getloadavg()[1]
 
-    # --requiet[=threshold] (r12 verdict #7): wait (bounded) for the
+    # --requiet[=threshold]: wait (bounded) for the
     # box to quiet down before the first query instead of stamping a
     # degraded record on a settling box. Both samples are recorded
     # either way (pre-wait under load_prewait_*); the degraded
@@ -185,7 +185,6 @@ def main() -> None:
         "source_overlap_matrix",
         "quality_classifier_eval",
         # multimodal: synth → probe/decode → hash/explode shapes
-        # (r11 verdict #5: priced officially from r12 on)
         "multimodal_probe_audit",
         "multimodal_frame_plan",
         "multimodal_image_audit",
@@ -199,14 +198,14 @@ def main() -> None:
         "audio_curation_pipeline",
         "video_curation_pipeline",
         "media_curation_provenance",
-        # no-silent-caps reports (r13)
+        # no-silent-caps reports
         "phash_cap_report",
         "video_frame_cap_report",
         "audio_window_cap_report",
         "audio_curation_provenance",
         "video_curation_provenance",
-        # compressed-codec pixel decode (r13: PNG zlib+unfilter, GIF
-        # LZW — the CPU-heavier decode legs, priced from day one)
+        # compressed-codec pixel decode (PNG zlib+unfilter, GIF LZW
+        # — the CPU-heavier decode legs, priced from day one)
         "multimodal_png_phash_audit",
         "multimodal_codec_matrix_audit",
         "multimodal_jpeg_phash_audit",
@@ -214,9 +213,9 @@ def main() -> None:
         "multimodal_jpeg_prog_audit",
         "multimodal_webp_phash_audit",
         "multimodal_exif_orientation_audit",
-        # r14: lossy-VP8 ctypes decode + animated-GIF frame path +
-        # animation header probe, priced from day one like the r13
-        # codec legs
+        # lossy-VP8 ctypes decode + animated-GIF frame path +
+        # animation header probe, priced from day one like the codec
+        # legs above
         "multimodal_webp_lossy_audit",
         "animated_gif_video_audit",
         "multimodal_anim_probe_audit",
@@ -234,7 +233,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
     # cap-exit disagreement per query, tracked from the UNROUNDED run
-    # times inside the loop (r10 advice: re-deriving it from the
+    # times inside the loop (re-deriving it from the
     # 3-decimal raw arrays can flip verdicts at the 15% boundary, and
     # a min that rounds to 0.000 degenerates the relative test)
     cap_disagree: dict[str, bool] = {}
@@ -304,7 +303,7 @@ def main() -> None:
     # name set ever pushes it over, DEGRADE the line gracefully by
     # shrinking the slowest-queries dict (a bare assert here would be
     # stripped under -O and, when it fired, fired AFTER the whole
-    # suite ran — discarding every timing; r9-advice catch).
+    # suite ran — discarding every timing).
     for n_slow in (5, 3, 1, 0):
         slowest = dict(
             sorted(timings.items(), key=lambda kv: -kv[1])[:n_slow]

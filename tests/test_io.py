@@ -61,49 +61,6 @@ class TestWriteCorpus:
             assert q == sorted(q), f
 
 
-class TestCompaction:
-    def test_small_files_compacted(self, spark, tmp_path):
-        small, big = str(tmp_path / "small"), str(tmp_path / "big")
-        df = _corpus(spark, 200)
-        # simulate streaming-append damage: ≥ 20 tiny files
-        df.repartition(20).write.option("maxRecordsPerFile", 10).parquet(small)
-        assert len(glob.glob(os.path.join(small, "*.parquet"))) >= 20
-        n = IO.compact_corpus(spark, small, big, target_rows_per_file=100)
-        assert n == 2
-        files = glob.glob(os.path.join(big, "*.parquet"))
-        assert len(files) <= 3
-        back = spark.read.parquet(big)
-        assert back.count() == 200
-        assert sorted(r.doc_id for r in back.collect()) == list(range(200))
-
-    def test_compact_with_sort_restores_pruning(self, spark, tmp_path):
-        small, big = str(tmp_path / "s2"), str(tmp_path / "b2")
-        _corpus(spark, 200).repartition(10).write.parquet(small)
-        IO.compact_corpus(
-            spark, small, big, target_rows_per_file=50, sort_by=("doc_id",)
-        )
-        import pyarrow.parquet as pq
-
-        ranges = []
-        for f in glob.glob(os.path.join(big, "*.parquet")):
-            ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
-            assert ids == sorted(ids), f
-            if ids:
-                ranges.append((min(ids), max(ids)))
-        # range partitioning ⇒ files cover disjoint doc_id ranges
-        ranges.sort()
-        for (a0, a1), (b0, b1) in zip(ranges, ranges[1:]):
-            assert a1 < b0, ranges
-
-
-def _grid(spark, side=64):
-    # full side×side grid: every (x, y) cell once, so coverage
-    # fractions are deterministic geometry, not data luck
-    return spark.range(side * side).selectExpr(
-        f"id % {side} AS x", f"id div {side} AS y", "id AS payload"
-    )
-
-
 class TestZorder:
     def test_morton_code_matches_python(self, spark):
         from pyspark.sql import functions as F
@@ -124,28 +81,6 @@ class TestZorder:
         )
         for r in rows:
             assert r.z == py_morton(r.x, r.y), (r.x, r.y)
-
-    def test_zorder_files_prune_on_both_dims(self, spark, tmp_path):
-        zpath, lpath = str(tmp_path / "z"), str(tmp_path / "linear")
-        df = _grid(spark)
-        IO.write_zorder(df, zpath, "x", "y", num_files=16)
-        # baseline: single-dim sort layout — perfect on y, useless on x
-        (
-            df.repartitionByRange(16, "y")
-            .sortWithinPartitions("y")
-            .write.parquet(lpath)
-        )
-        zstats = IO.zorder_pruning_stats(spark, zpath, "x", "y").collect()
-        lstats = IO.zorder_pruning_stats(spark, lpath, "x", "y").collect()
-        zx = sum(r.x_cover for r in zstats) / len(zstats)
-        zy = sum(r.y_cover for r in zstats) / len(zstats)
-        lx = sum(r.x_cover for r in lstats) / len(lstats)
-        # z-order: BOTH dims cover a fraction of the range per file;
-        # linear layout: x spans the whole range in every file
-        assert lx > 0.9, lx
-        assert zx < 0.6 and zy < 0.6, (zx, zy)
-        # roundtrip: no rows lost, curve key preserved
-        assert spark.read.parquet(zpath).count() == 64 * 64
 
 
 class TestTrainingShards:

@@ -1,5 +1,6 @@
-"""No comment or docstring in ``tidb_cdc_spark/`` carries a
-development-round tag (``r12``, ``r14 note``, ``NOTES r12``).
+"""No comment or docstring in ``tidb_cdc_spark/``, ``bench.py`` or
+``__spark_entry__.py`` carries a development-round tag (``r12``,
+``r14 note``, ``NOTES r12``).
 
 History lives in git and in CHANGES.md: a round number says when a
 line was written, not why, and goes stale the moment the code moves.
@@ -33,18 +34,25 @@ def _prose(src: str):
                 yield doc.lineno + k, line
 
 
-def test_package_has_no_round_tags():
-    hits = []
+def _sources():
+    """Every Python file of the package, then the two entry scripts."""
     for d, _, names in os.walk(os.path.join(ROOT, "tidb_cdc_spark")):
         for n in sorted(names):
             if n.endswith(".py"):
-                path = os.path.join(d, n)
-                with open(path, encoding="utf-8") as f:
-                    src = f.read()
-                rel = os.path.relpath(path, ROOT)
-                hits += [
-                    f"{rel}:{line}: {text.strip()}"
-                    for line, text in _prose(src)
-                    if TAG.search(text)
-                ]
+                yield os.path.join(d, n)
+    for n in ("bench.py", "__spark_entry__.py"):
+        yield os.path.join(ROOT, n)
+
+
+def test_package_has_no_round_tags():
+    hits = []
+    for path in _sources():
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        rel = os.path.relpath(path, ROOT)
+        hits += [
+            f"{rel}:{line}: {text.strip()}"
+            for line, text in _prose(src)
+            if TAG.search(text)
+        ]
     assert not hits, "round tags:\n" + "\n".join(hits)

@@ -452,87 +452,6 @@ class TestJdbcMergeSinkDerby:
         assert read_tgt() == {("c", 3)}
 
 
-class TestStreamingWindows:
-    def _stream(self, spark, tmp_path):
-        # memory-format sink over a file stream of event rows
-        import datetime
-
-        rows = [
-            {"ts": "2024-01-01 00:05:00", "event_type": "click", "user_id": 1, "value": 1.0},
-            {"ts": "2024-01-01 00:15:00", "event_type": "click", "user_id": 1, "value": 2.0},
-            {"ts": "2024-01-01 01:05:00", "event_type": "view", "user_id": 2, "value": 3.0},
-            {"ts": "2024-01-01 00:20:00", "event_type": "click", "user_id": 1, "value": 1.0},
-        ]
-        d = tmp_path / "ev"
-        os.makedirs(d, exist_ok=True)
-        with open(d / "1.jsonl", "w") as f:
-            f.write("\n".join(json.dumps(r) for r in rows))
-        raw = (
-            spark.readStream.format("json")
-            .schema("ts timestamp, event_type string, user_id long, value double")
-            .load(str(d))
-        )
-        return raw
-
-    def test_windowed_counts_stream(self, spark, tmp_path):
-        from tidb_cdc_spark.streaming.windows import windowed_counts
-
-        out = windowed_counts(self._stream(spark, tmp_path))
-        q = (
-            out.writeStream.format("memory")
-            .queryName("win_counts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck1"))
-            .start()
-        )
-        q.awaitTermination()
-        rows = {
-            (r.window.start.hour, r.event_type): (r.n_events, r.sum_value)
-            for r in spark.sql("select * from win_counts").collect()
-        }
-        assert rows[(0, "click")] == (3, 4.0)
-        assert rows[(1, "view")] == (1, 3.0)
-
-    def test_session_counts_stream(self, spark, tmp_path):
-        from tidb_cdc_spark.streaming.windows import session_counts
-
-        out = session_counts(self._stream(spark, tmp_path), gap="10 minutes")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("sess_counts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck2"))
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.sql("select * from sess_counts").collect()
-        by_user = {}
-        for r in rows:
-            by_user.setdefault(r.user_id, []).append(r.n_events)
-        # user 1: 00:05+00:15+00:20 chain into one session (10-min gaps)
-        assert sorted(by_user[1]) == [3]
-        assert by_user[2] == [1]
-
-    def test_streaming_dedup(self, spark, tmp_path):
-        from tidb_cdc_spark.streaming.windows import streaming_dedup
-
-        out = streaming_dedup(self._stream(spark, tmp_path), keys=["user_id", "value"])
-        q = (
-            out.writeStream.format("memory")
-            .queryName("dedup_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck3"))
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.sql("select * from dedup_stream").collect()
-        # (1, 1.0) appears twice in input → once out
-        assert len(rows) == 3
-
-
 class TestStatefulOperators:
     def _two_batch_stream(self, spark, tmp_path):
         """File stream fed one file per trigger → two micro-batches,

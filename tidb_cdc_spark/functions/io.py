@@ -43,42 +43,6 @@ def write_corpus(
     )
 
 
-def compact_corpus(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_rows_per_file: int = 1_000_000,
-    sort_by: list[str] | tuple[str, ...] = (),
-    mode: str = "error",
-) -> int:
-    """Rewrite a corpus that has accumulated small files (streaming
-    ingest, per-batch appends) into ``ceil(rows / target)`` right-
-    sized files — the periodic maintenance job every long-lived
-    table needs, since each file costs a task + open + footer parse
-    on every downstream scan.
-
-    Sizing uses one count (a parquet metadata-only action — row
-    counts come from footers, no data pages are read; at 100 TB the
-    same number could come from the catalog for free). With
-    ``sort_by`` the rewrite range-partitions + sorts so row-group
-    stats prune on those columns afterwards; otherwise a plain
-    round-robin repartition balances bytes. Returns the file count
-    written."""
-    df = spark.read.parquet(path)
-    total = df.count()
-    n_files = max(1, -(-total // target_rows_per_file))
-    if sort_by:
-        out = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
-    else:
-        out = df.repartition(n_files)
-    (
-        out.write.mode(mode)
-        .option("maxRecordsPerFile", target_rows_per_file)
-        .parquet(out_path)
-    )
-    return n_files
-
-
 # ------------------------------------------------------------------
 # Z-order (Morton-curve) layout: multi-dimensional pruning.
 #
@@ -88,8 +52,9 @@ def compact_corpus(
 # dimension. Interleaving the bits of the two keys (Morton / Z-order
 # code) and range-partitioning + sorting on the code gives every
 # file a compact rectangle in (x, y) space — the same layout trick
-# Delta/Iceberg OPTIMIZE ZORDER applies, expressed here as three
-# pure-codegen bit expressions plus the standard write path.
+# Delta/Iceberg OPTIMIZE ZORDER applies. ``morton_z2`` is the code,
+# as pure-codegen bit expressions; ``events_zorder_buckets`` pins it
+# bit for bit against the oracle.
 # ------------------------------------------------------------------
 
 #: (shift, mask) steps spreading the low 16 bits of a long so bit i
@@ -110,68 +75,6 @@ def morton_z2(x, y):
     identical arithmetic is expressible in any engine, so oracle
     queries can pin it bit-for-bit."""
     return _spread16(x).bitwiseOR(F.shiftleft(_spread16(y), 1))
-
-
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    num_files: int = 8,
-    max_records_per_file: int = 1_000_000,
-    mode: str = "error",
-) -> None:
-    """Write ``df`` Z-ordered on (``x_col`` low 16 bits, ``y_col``
-    low 16 bits): range-partition on the Morton code (sampled range
-    boundaries — no single-task global sort), sort within partitions
-    so row-group stats are tight, keep the code as ``_z`` (the curve
-    key is useful downstream, e.g. for incremental compaction)."""
-    out = (
-        df.withColumn("_z", morton_z2(F.col(x_col), F.col(y_col)))
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-    )
-    (
-        out.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
-    )
-
-
-def zorder_pruning_stats(
-    spark: SparkSession, path: str, x_col: str, y_col: str
-) -> DataFrame:
-    """Per-file min/max of both layout dimensions plus the fraction
-    of each dimension's global range the file covers — the audit
-    that shows a point/range predicate on EITHER column skips most
-    files (the whole point of the layout)."""
-    df = spark.read.parquet(path).withColumn("_file", F.input_file_name())
-    per_file = df.groupBy("_file").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min(x_col).alias("x_min"),
-        F.max(x_col).alias("x_max"),
-        F.min(y_col).alias("y_min"),
-        F.max(y_col).alias("y_max"),
-    )
-    # global ranges: 1-row aggregate, broadcast into the projection
-    g = df.agg(
-        F.min(x_col).alias("gx0"),
-        F.max(x_col).alias("gx1"),
-        F.min(y_col).alias("gy0"),
-        F.max(y_col).alias("gy1"),
-    )
-    return per_file.crossJoin(F.broadcast(g)).select(
-        "_file",
-        "n_rows",
-        "x_min",
-        "x_max",
-        "y_min",
-        "y_max",
-        ((F.col("x_max") - F.col("x_min"))
-         / F.greatest(F.col("gx1") - F.col("gx0"), F.lit(1))).alias("x_cover"),
-        ((F.col("y_max") - F.col("y_min"))
-         / F.greatest(F.col("gy1") - F.col("gy0"), F.lit(1))).alias("y_cover"),
-    )
 
 
 def corpus_layout_stats(

@@ -1,24 +1,47 @@
-"""JPEG decode (JFIF — baseline SOF0, extended-sequential SOF1, and
-PROGRESSIVE SOF2) in pure Python + numpy — no codec library. The
-last compressed image format a crawl sees in volume becomes a REAL
-pixel path: table-driven Huffman (the tables come from the file's
-OWN DHT segments, so Annex-K and custom-table JPEGs both decode),
-zigzag + dequantization, an orthogonal float64 IDCT, 0xFF00
-byte-unstuffing, DRI/RSTn restart handling, and general interleaved
-MCUs — ANY sampling-factor combination with integer upsample ratios
-(4:4:4, 4:2:0, 4:2:2, 4:4:0, ...), chroma upsampled by
-deterministic pixel replication (libjpeg's "fancy" bilinear variant
-is a smoothing choice, not bitstream semantics). Progressive decode
-(the web's other dominant JPEG flavor) accumulates coefficients
-across scans: spectral selection, successive approximation — DC
-refinement bits and the T.81 G.1.2.3 AC refinement control flow —
-EOB-run coding, per-scan table redefinition, and restart intervals
-in MCU or block units. Since progressive mode is a LOSSLESS
-reordering of the same quantized coefficients, a fully-received
-progressive file decodes pixel-identically to its sequential twin
-(pinned by round-trip tests). Arithmetic coding, 12-bit precision
-and lossless/hierarchical frames return None for the guarded PIL
-branch.
+"""JPEG codec (JFIF) in pure Python + numpy — no codec library.
+
+Scan-script model (ITU-T T.81), shared by the decoder and the encoder:
+a frame is one grid of quantized coefficients per component, and a
+SCRIPT of scans fills it (decode) or reads it out (encode). A scan
+names its components, a spectral band Ss..Se in zigzag order and a
+successive-approximation pair Ah/Al; each of its blocks takes a DC
+step when Ss=0 and an AC step over max(Ss, 1)..Se. An interleaved
+scan (Ns>1) walks the MCU grid, h_i×v_i blocks per component per MCU;
+a one-component scan walks that component's own ceil(dims/8) block
+grid (T.81 A.2); DRI/RSTn restart intervals count those units.
+
+- A sequential frame (SOF0 baseline, SOF1 extended sequential at
+  8-bit precision) is the one-scan script {every component, Ss=0,
+  Se=63, Ah=Al=0}: each block codes DC-first and AC-first and ends
+  with its own EOB, so an EOB-run symbol is malformed there.
+- A progressive frame (SOF2) is a script of DC scans (Ss=Se=0,
+  interleaved or not) and one-component AC band scans, first passes
+  (Ah=0, EOB runs) and refinements (T.81 G.1.2.3), with per-scan
+  table redefinition.
+
+The decoder reads the marker segments through one walker
+(``_segments``), fills the grid scan by scan (``_decode_prog_scan``)
+and rebuilds the pixels (``_reconstruct_progressive``: dequantize,
+orthogonal float64 IDCT, chroma upsampled by pixel replication — any
+sampling-factor combination with integer upsample ratios — and the
+BT.601 luma reduction) at EOI, or as soon as a sequential frame's one
+scan ends. Huffman tables come from the file's OWN DHT segments, so
+Annex-K and custom-table JPEGs both decode. Arithmetic coding, 12-bit
+precision and lossless/hierarchical frames return None for the
+guarded PIL branch. Progressive mode is a LOSSLESS reordering of the
+same quantized coefficients, so a fully-received progressive file
+decodes pixel-identically to its sequential twin (pinned by
+round-trip tests).
+
+The encoder half is a TEST FIXTURE like the PNG/GIF encoders:
+``encode_jpeg`` (the sequential script) and ``encode_jpeg_progressive``
+(a seven-stage script) are thin calls of one scan-script writer,
+``_encode_script``. It writes real interchange-format JPEGs (APP0 +
+DQT + SOF + DHT + SOS..., optional DRI/RSTn) at quantization step 1
+with self-generated canonical Huffman tables (all DC symbols at one
+code length, all AC symbols at another — valid JPEG, carried in DHT,
+and deliberately NOT Annex K so the decoder's table-driven path is
+what's tested) or, on request, the Annex K.3 tables.
 
 Exactness model (what the audits pin): JPEG is lossy in general,
 but a FLAT 8×8 block is DC-only — with quantization step 1 the DC
@@ -37,13 +60,6 @@ tests/test_jpeg_codec.py).
 Scale shape: identical to the other pixel paths — decode rides the
 Arrow-batched ``mapInPandas`` pass via ``decode_pixels``; CPU is
 ∝ pixel bytes, hashes (24 B) shuffle, pixels never do.
-
-The encoder half (``encode_jpeg``) is a TEST FIXTURE like the
-PNG/GIF encoders: it writes real interchange-format JPEGs (APP0 +
-DQT + SOF0 + DHT + SOS, optional DRI/RSTn) using self-generated
-canonical Huffman tables (all DC symbols at one code length, all AC
-symbols at another — valid JPEG, carried in DHT, and deliberately
-NOT Annex K so the decoder's table-driven path is what's tested).
 """
 
 from __future__ import annotations
@@ -76,6 +92,19 @@ def _idct_basis():
 
 
 _IDCT_M = _idct_basis()
+
+#: The pixel budget of every decoded canvas: the JPEG coefficient
+#: grid, the GIF logical screen and the APNG and animated-WebP
+#: canvases. A decoder returns None, before allocating, for a header
+#: that declares more — a few header bytes must not buy gigabytes.
+MAX_CANVAS_PIXELS = 1 << 26
+
+#: T.81 B.1.1.3 standalone markers (TEM, RST0-7, SOI, EOI): no length
+_STANDALONE = bytes([0x01, *range(0xD0, 0xDA)])
+
+#: SOF3/5-7/9-11/13-15: lossless, hierarchical or arithmetic-coded
+_UNSUPPORTED_SOF = bytes([0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
+                          0xCE, 0xCF])
 
 
 class _BitReader:
@@ -138,21 +167,18 @@ class _BitReader:
         return True
 
 
-def _build_huff(counts: "list[int]", symbols: bytes):
-    """Canonical JPEG Huffman table → dict {(length, code): symbol}
-    per T.81 Annex C code assignment."""
-    table = {}
-    code = 0
-    k = 0
+def _canonical(counts, symbols):
+    """T.81 Annex C canonical code assignment: ``(symbol, code,
+    length)`` per symbol, shortest codes first. Both the decoder's
+    ``{(length, code): symbol}`` and the encoder's ``{symbol: (code,
+    length)}`` tables are read off it."""
+    code = k = 0
     for length in range(1, 17):
         for _ in range(counts[length - 1]):
-            if k >= len(symbols):
-                return None
-            table[(length, code)] = symbols[k]
+            yield symbols[k], code, length
             code += 1
             k += 1
         code <<= 1
-    return table
 
 
 def _huff_decode(br: _BitReader, table) -> "int | None":
@@ -176,59 +202,74 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+def _segments(p: bytes, bare: bytes = b"\xd8\xd9"):
+    """The one marker-segment walker: ``(marker, pos, end)`` for each
+    marker after SOI, ``p[pos:end]`` being the whole segment (marker,
+    length field and body). Markers in ``bare`` have no length field:
+    the MJPEG table splicers pass T.81's full standalone set, while the
+    pixel decoder and the EXIF reader read a length after a stray TEM
+    or RSTn at segment level (the malformed-input sweep pins both
+    outcomes). After an SOS segment the walk resumes at the next marker
+    past the entropy-coded data. The walk ends at the end of the data,
+    at a byte that is not a marker, or at a segment whose length does
+    not fit — every caller treats the three alike."""
+    if len(p) < 4 or p[:2] != b"\xff\xd8":
+        return
+    pos = 2
+    while pos + 2 <= len(p) and p[pos] == 0xFF:
+        marker = p[pos + 1]
+        end = pos + 2
+        if marker not in bare:
+            if pos + 4 > len(p):
+                return
+            end += (p[pos + 2] << 8) | p[pos + 3]
+            if end < pos + 4 or end > len(p):
+                return
+        yield marker, pos, end
+        pos = end if marker != 0xDA else _next_marker(p, end)
+        if pos is None:
+            return
+
+
+def _next_marker(p: bytes, pos: int):
+    """Position of the next real marker at or after ``pos`` (skips
+    entropy-coded bytes, stuffed 0xFF00 pairs and RSTn), or None."""
+    while True:
+        pos = p.find(b"\xff", pos)
+        if pos < 0 or pos + 1 >= len(p):
+            return None
+        if p[pos + 1] != 0x00 and not 0xD0 <= p[pos + 1] <= 0xD7:
+            return pos
+        pos += 1
+
+
 def decode_jpeg_pixels(payload: bytes):
     """REAL JPEG pixel decode → int64 BT.601 luma array (h, w), or
     None for anything outside the supported envelope (12-bit,
     lossless/hierarchical, arithmetic-coded, non-integer upsample
-    ratios, truncated, or malformed streams — the
-    guarded-PIL/NULL-hash treatment). Supported frame types: SOF0
-    baseline, SOF1 extended sequential (identical decode at 8-bit
-    precision), and SOF2 PROGRESSIVE — multi-scan coefficient
-    accumulation with spectral selection, successive approximation
-    (DC and the T.81 G.1.2.3 AC refinement), EOB-run coding,
-    per-scan table redefinition, and restart intervals in both
-    interleaved-MCU and single-component block units.
+    ratios, a canvas over :data:`MAX_CANVAS_PIXELS`, truncated, or
+    malformed streams — the guarded-PIL/NULL-hash treatment).
+    Supported frame types: SOF0 baseline, SOF1 extended sequential
+    and SOF2 PROGRESSIVE, all read as scan scripts over one
+    coefficient grid (module docstring).
 
     Grayscale scans return Y directly (luma(g,g,g) = g); 3-component
     scans (any sampling layout incl. 4:2:0, chroma upsampled by
     replication) convert YCbCr→RGB with the JFIF integer convention
     (round-half-away via floor(x+0.5), clip 0..255) and reduce with
-    the same BT.601 integer luma every other pixel path uses.
-
-    Progressive exactness note: a progressive file carries the SAME
-    quantized coefficients as its sequential twin, merely re-ordered
-    across scans — once every scan is consumed, reconstruction is
-    coefficient-identical to the baseline decode, so all the
-    flat-block exactness lemmas carry over unchanged."""
+    the same BT.601 integer luma every other pixel path uses."""
     p = payload
-    if len(p) < 4 or p[:2] != b"\xff\xd8":
-        return None
-    pos = 2
     qt: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict] = {}
-    sof = None
+    sof = coefs = geom = None
     progressive = False
     dri = 0
-    coefs = None  # progressive: per-component accumulated coefficients
-    geom = None
-    preds = None
-    while pos + 2 <= len(p):
-        if p[pos] != 0xFF:
-            return None
-        marker = p[pos + 1]
-        if marker == 0xD8:
-            pos += 2
-            continue
-        if marker == 0xD9:
-            if coefs is not None:
-                return _reconstruct_progressive(sof, qt, coefs, geom)
-            return None  # EOI before any decodable scan
-        if pos + 4 > len(p):
-            return None  # truncated segment header
-        (seglen,) = struct.unpack_from(">H", p, pos + 2)
-        seg = p[pos + 4 : pos + 2 + seglen]
-        if len(seg) != seglen - 2:
-            return None
+    for marker, pos, end in _segments(p):
+        seg = p[pos + 4 : end]
+        if marker == 0xD9:  # EOI: a progressive frame is complete
+            if coefs is None:
+                return None  # EOI before any decodable scan
+            return _reconstruct_progressive(sof, qt, coefs, geom)
         if marker == 0xDB:  # DQT
             i = 0
             while i < len(seg):
@@ -237,14 +278,9 @@ def decode_jpeg_pixels(payload: bytes):
                 n = 64 * (2 if pq == 1 else 1)
                 if i + n > len(seg):
                     return None
-                if pq == 1:
-                    vals = np.frombuffer(
-                        seg[i : i + n], dtype=">u2"
-                    ).astype(np.int64)
-                else:
-                    vals = np.frombuffer(
-                        seg[i : i + n], dtype=np.uint8
-                    ).astype(np.int64)
+                vals = np.frombuffer(
+                    seg[i : i + n], dtype=">u2" if pq == 1 else np.uint8
+                ).astype(np.int64)
                 tbl = np.zeros(64, dtype=np.int64)
                 tbl[_ZZ] = vals  # de-zigzag into natural order
                 qt[tq] = tbl.reshape(8, 8)
@@ -252,16 +288,14 @@ def decode_jpeg_pixels(payload: bytes):
         elif marker == 0xC4:  # DHT
             i = 0
             while i + 17 <= len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 0xF
-                counts = list(seg[i + 1 : i + 17])
+                counts = seg[i + 1 : i + 17]
                 n = sum(counts)
                 syms = seg[i + 17 : i + 17 + n]
                 if len(syms) != n:
                     return None
-                t = _build_huff(counts, syms)
-                if t is None:
-                    return None
-                huff[(tc, th)] = t
+                huff[(seg[i] >> 4, seg[i] & 0xF)] = {
+                    (ln, code): s for s, code, ln in _canonical(counts, syms)
+                }
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 prog.
             progressive = marker == 0xC2
@@ -286,91 +320,65 @@ def decode_jpeg_pixels(payload: bytes):
             if any(hmax % c[2] or vmax % c[3] for c in comps):
                 return None  # non-integer upsample ratio
             sof = (h, w, comps)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            return None  # lossless/hierarchical/arithmetic coding
+        elif marker in _UNSUPPORTED_SOF:
+            return None
         elif marker == 0xDD:  # DRI
-            if seglen != 4:
+            if len(seg) != 2:
                 return None
             (dri,) = struct.unpack_from(">H", seg, 0)
-        elif marker == 0xDA:  # SOS — entropy data follows
-            if sof is None:
-                return None
-            h, w, comps = sof
-            if not seg or len(seg) != 1 + 2 * seg[0] + 3:
+        elif marker == 0xDA:  # SOS: one scan of the frame's script
+            if sof is None or not seg or len(seg) != 1 + 2 * seg[0] + 3:
                 return None  # component selectors + Ss/Se/AhAl
+            h, w, comps = sof
             ns = seg[0]
-            if not progressive:
-                if ns != len(comps):
+            sel = [
+                (seg[1 + 2 * c], huff.get((0, seg[2 + 2 * c] >> 4)),
+                 huff.get((1, seg[2 + 2 * c] & 0xF)))
+                for c in range(ns)
+            ]
+            if progressive:
+                ids = [c[0] for c in comps]
+                if not 1 <= ns <= len(comps) or any(s[0] not in ids for s in sel):
                     return None
-                sel = []
-                for c in range(ns):
-                    _cs, tda = seg[1 + 2 * c], seg[2 + 2 * c]
-                    dc_t = huff.get((0, tda >> 4))
-                    ac_t = huff.get((1, tda & 0xF))
-                    q = qt.get(comps[c][1])
-                    if dc_t is None or ac_t is None or q is None:
-                        return None
-                    sel.append((dc_t, ac_t, q, comps[c][2], comps[c][3]))
-                return _decode_scan(p, pos + 2 + seglen, h, w, sel, dri)
-            # --- progressive scan ---
-            if not 1 <= ns <= len(comps):
-                return None
-            if coefs is None:
+                scomp = [(ids.index(cs), dc_t, ac_t) for cs, dc_t, ac_t in sel]
+                ss, se, ahal = seg[1 + 2 * ns :]
+                if ss == 0:
+                    bad = se != 0  # DC scans carry the DC band only
+                else:  # AC bands: one component, with its AC table
+                    bad = ns != 1 or not ss <= se <= 63 or sel[0][2] is None
+                if bad or (ahal & 0xF) > 13:
+                    return None
+            else:
+                # the sequential one-scan script: every component in
+                # frame order over the full band; the selectors and
+                # the Ss/Se/AhAl bytes are not read
+                if ns != len(comps) or any(None in s for s in sel):
+                    return None
+                if any(c[1] not in qt for c in comps):
+                    return None
+                scomp = [(ci, s[1], s[2]) for ci, s in enumerate(sel)]
+                ss, se, ahal = 0, 63, 0
+            if coefs is None or not progressive:
+                if h * w > MAX_CANVAS_PIXELS:
+                    return None
                 geom = _prog_geometry(h, w, comps)
-                coefs = [
-                    np.zeros((bh_p * bw_p, 64), dtype=np.int64)
-                    for (bh_p, bw_p, _, _) in geom
-                ]
-                preds = None
-            scomp = []
-            for c in range(ns):
-                cs, tda = seg[1 + 2 * c], seg[2 + 2 * c]
-                matches = [i for i, cc in enumerate(comps) if cc[0] == cs]
-                if not matches:
-                    return None
-                ci = matches[0]
-                scomp.append(
-                    (ci, huff.get((0, tda >> 4)), huff.get((1, tda & 0xF)))
-                )
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
-            newpos = _decode_prog_scan(
-                p, pos + 2 + seglen, comps, scomp, ss, se, ah, al,
+                coefs = [np.zeros((g[0] * g[1], 64), dtype=np.int64) for g in geom]
+            if not _decode_prog_scan(
+                p, end, comps, scomp, ss, se, ahal >> 4, ahal & 0xF,
                 coefs, geom, dri,
-            )
-            if newpos is None:
+            ):
                 return None
-            nm = _next_marker(p, newpos)
-            if nm is None:
-                return None
-            pos = nm
-            continue
+            if not progressive:  # the one scan of a sequential frame
+                return _reconstruct_progressive(sof, qt, coefs, geom)
         # APPn / COM / others: skip
-        pos += 2 + seglen
-    return None
-
-
-def _next_marker(p: bytes, pos: int):
-    """Scan forward to the next real marker (skips entropy padding,
-    stuffed 0xFF00 pairs, and stray RSTn)."""
-    while pos + 1 < len(p):
-        if (
-            p[pos] == 0xFF
-            and p[pos + 1] != 0x00
-            and not 0xD0 <= p[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 1
     return None
 
 
 def _prog_geometry(h, w, comps):
-    """Per-component block-grid geometry for progressive scans:
-    (bh_padded, bw_padded, bh_nonint, bw_nonint) — interleaved DC
-    scans cover the MCU-padded grid, single-component scans the
-    component's own ceil(dims/8) grid (T.81 A.2)."""
+    """Per-component block-grid geometry ``(bh_padded, bw_padded,
+    bh_own, bw_own)`` for components ``(id, tq, h_i, v_i)``:
+    interleaved scans cover the MCU-padded grid, one-component scans
+    the component's own ceil(dims/8) grid (T.81 A.2)."""
     hmax = max(c[2] for c in comps)
     vmax = max(c[3] for c in comps)
     mw = (w + 8 * hmax - 1) // (8 * hmax)
@@ -383,80 +391,59 @@ def _prog_geometry(h, w, comps):
     return geom
 
 
+def _scan_blocks(cis, comps, geom, dri):
+    """``(restart, k, block index)`` in the order a scan over the
+    components ``cis`` codes its blocks (``k`` indexes ``cis``; the
+    block index is into the MCU-padded grid). An interleaved scan
+    walks the MCU grid, h_i×v_i blocks per component per MCU; a
+    one-component scan walks the component's own grid, one block per
+    unit. ``restart`` marks the first block of each unit that opens a
+    new restart interval of ``dri`` units."""
+    if len(cis) > 1:
+        c0 = cis[0]
+        mh, mw = geom[c0][0] // comps[c0][3], geom[c0][1] // comps[c0][2]
+        layout = [(k, comps[ci][3], comps[ci][2], geom[ci][1])
+                  for k, ci in enumerate(cis)]
+    else:
+        mh, mw = geom[cis[0]][2], geom[cis[0]][3]
+        layout = [(0, 1, 1, geom[cis[0]][1])]
+    for unit in range(mh * mw):
+        my, mx = divmod(unit, mw)
+        restart = bool(dri and unit and unit % dri == 0)
+        for k, vi, hi, bw in layout:
+            for by in range(vi):
+                for bx in range(hi):
+                    yield restart, k, (my * vi + by) * bw + mx * hi + bx
+                    restart = False
+
+
 def _decode_prog_scan(p, pos, comps, scomp, ss, se, ah, al, coefs, geom, dri):
-    """One progressive scan's entropy data → updated ``coefs``;
-    returns the stream position after the scan (or None on a
-    malformed stream). DC scans (Ss=0) may be interleaved; AC scans
-    are single-component over the component's own block grid.
-    Restart intervals reset DC predictors and the EOB run."""
-    if ss == 0:
-        if se != 0 or al > 13:
-            return None
-    else:
-        if len(scomp) != 1 or not ss <= se <= 63 or al > 13:
-            return None
-        if scomp[0][2] is None:
-            return None  # AC scan needs its AC table
+    """One scan's entropy data from ``pos`` → updated ``coefs``; False
+    on a malformed stream. ``scomp`` lists ``(component index, DC
+    table, AC table)`` in scan order. Each block takes the DC step
+    when Ss=0 and the AC step over max(Ss, 1)..Se; a full-band
+    (sequential) scan ends every block with its own EOB, so an EOB
+    run there is malformed. Restart intervals reset the DC
+    predictors and the EOB run."""
     br = _BitReader(p, pos)
-    eobrun = 0
     preds = [0] * len(comps)
-    interleaved = ss == 0 and len(scomp) > 1
-    if interleaved:
-        hmax = max(c[2] for c in comps)
-        vmax = max(c[3] for c in comps)
-        # MCU grid is shared: geom rows are (mh*vi, mw*hi, ...)
-        mh = geom[scomp[0][0]][0] // comps[scomp[0][0]][3]
-        mw = geom[scomp[0][0]][1] // comps[scomp[0][0]][2]
-        units = mh * mw
-    else:
-        # Non-interleaved scans (DC or AC) cover the component's OWN
-        # ceil(dims/8) grid (T.81 A.2), never the MCU-padded one.
-        ci0 = scomp[0][0]
-        bh, bw = geom[ci0][2], geom[ci0][3]
-        units = bh * bw
-    unit = 0
-    for uy in range(units):
-        if dri and unit and unit % dri == 0:
+    eobrun = 0
+    band = _prog_ac_first if ah == 0 else _prog_ac_refine
+    for restart, k, bidx in _scan_blocks([s[0] for s in scomp], comps, geom, dri):
+        if restart:
             if not br.align_and_expect_rst():
-                return None
+                return False
             preds = [0] * len(comps)
             eobrun = 0
-        if interleaved:
-            my, mx = divmod(unit, mw)
-            for ci, dc_t, _ in scomp:
-                _, _, hi, vi = comps[ci]
-                for by in range(vi):
-                    for bx in range(hi):
-                        bidx = (my * vi + by) * geom[ci][1] + (mx * hi + bx)
-                        ok = _prog_dc_block(
-                            br, coefs[ci][bidx], dc_t, ah, al, preds, ci
-                        )
-                        if not ok:
-                            return None
-        else:
-            ci, dc_t, ac_t = scomp[0]
-            # single-component grid index → padded-grid index
-            by, bx = divmod(unit, geom[ci][3])
-            bidx = by * geom[ci][1] + bx
-            if ss == 0:
-                ok = _prog_dc_block(
-                    br, coefs[ci][bidx], dc_t, ah, al, preds, ci
-                )
-                if not ok:
-                    return None
-            else:
-                if ah == 0:
-                    eobrun = _prog_ac_first(
-                        br, coefs[ci][bidx], ac_t, ss, se, al, eobrun
-                    )
-                else:
-                    eobrun = _prog_ac_refine(
-                        br, coefs[ci][bidx], ac_t, ss, se, al, eobrun
-                    )
-                if eobrun is None:
-                    return None
-        unit += 1
-    return br.pos
+        ci, dc_t, ac_t = scomp[k]
+        coef = coefs[ci][bidx]
+        if ss == 0 and not _prog_dc_block(br, coef, dc_t, ah, al, preds, ci):
+            return False
+        if se:
+            eobrun = band(br, coef, ac_t, max(ss, 1), se, al, eobrun)
+            if eobrun is None or (eobrun and ss == 0):
+                return False
+    return True
 
 
 def _prog_dc_block(br, coef, dc_t, ah, al, preds, ci) -> bool:
@@ -580,13 +567,17 @@ def _prog_ac_refine(br, coef, ac_t, ss, se, al, eobrun):
 
 
 def _reconstruct_progressive(sof, qt, coefs, geom):
-    """After every scan is consumed: dequantize + IDCT each block
-    (vectorized einsum over the whole block grid), assemble planes,
-    and run the shared upsample/crop/color-convert tail."""
+    """A complete coefficient grid → pixels: dequantize + IDCT every
+    block (one batched matmul over the whole grid), upsample subsampled
+    planes by PIXEL REPLICATION (each chroma sample covers its
+    Hmax/h_i × Vmax/v_i footprint), crop to the image rectangle and
+    reduce to the BT.601 integer luma — grayscale returns Y directly;
+    3-component converts YCbCr→RGB with the JFIF integer convention
+    (round-half-up via floor(x+0.5), clip 0..255)."""
     h, w, comps = sof
     hmax = max(c[2] for c in comps)
     vmax = max(c[3] for c in comps)
-    planes = []
+    up = []
     for ci, (_, tq, hi, vi) in enumerate(comps):
         q = qt.get(tq)
         if q is None:
@@ -595,100 +586,14 @@ def _reconstruct_progressive(sof, qt, coefs, geom):
         blk = (
             coefs[ci].reshape(bh_p, bw_p, 8, 8) * q
         ).astype(np.float64)
-        px = np.einsum("ux,ijuv,vy->ijxy", _IDCT_M, blk, _IDCT_M)
-        planes.append(px.transpose(0, 2, 1, 3).reshape(bh_p * 8, bw_p * 8))
-    hvs = [(hi, vi) for (_, _, hi, vi) in comps]
-    return _planes_to_pixels(planes, hvs, hmax, vmax, h, w)
-
-
-def _decode_block(br, dc_t, ac_t, q, pred_box, ci):
-    """One entropy-coded 8×8 block → dequantized spatial pixels (or
-    None on a malformed stream). ``pred_box`` carries the per-
-    component DC predictors across MCUs."""
-    coef = np.zeros(64, dtype=np.int64)
-    t = _huff_decode(br, dc_t)
-    if t is None or t > 11:
-        return None
-    bits = br.read_bits(t) if t else 0
-    if bits is None:
-        return None
-    pred_box[ci] += _extend(bits, t)
-    coef[0] = pred_box[ci]
-    k = 1
-    while k < 64:
-        sym = _huff_decode(br, ac_t)
-        if sym is None:
-            return None
-        if sym == 0x00:  # EOB
-            break
-        if sym == 0xF0:  # ZRL
-            k += 16
-            continue
-        run, size = sym >> 4, sym & 0xF
-        k += run
-        if k > 63 or size == 0:
-            return None
-        bits = br.read_bits(size)
-        if bits is None:
-            return None
-        coef[_ZZ[k]] = _extend(bits, size)
-        k += 1
-    blk = coef.reshape(8, 8) * q
-    return _IDCT_M.T @ blk.astype(np.float64) @ _IDCT_M
-
-
-def _decode_scan(p, pos, h, w, sel, dri):
-    """General interleaved-MCU scan: each MCU carries h_i×v_i blocks
-    per component; subsampled planes are upsampled by PIXEL
-    REPLICATION (each chroma sample covers its Hmax/h_i × Vmax/v_i
-    pixel footprint — deterministic; libjpeg's "fancy" bilinear
-    variant is a smoothing choice, not part of the bitstream)."""
-    ncomp = len(sel)
-    hmax = max(s[3] for s in sel)
-    vmax = max(s[4] for s in sel)
-    mw = (w + 8 * hmax - 1) // (8 * hmax)
-    mh = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mh * vi * 8, mw * hi * 8), dtype=np.float64)
-        for (_, _, _, hi, vi) in sel
-    ]
-    br = _BitReader(p, pos)
-    pred = [0] * ncomp
-    mcu = 0
-    for my in range(mh):
-        for mx in range(mw):
-            if dri and mcu and mcu % dri == 0:
-                if not br.align_and_expect_rst():
-                    return None
-                pred = [0] * ncomp
-            for ci, (dc_t, ac_t, q, hi, vi) in enumerate(sel):
-                for by in range(vi):
-                    for bx in range(hi):
-                        px = _decode_block(br, dc_t, ac_t, q, pred, ci)
-                        if px is None:
-                            return None
-                        r0 = (my * vi + by) * 8
-                        c0 = (mx * hi + bx) * 8
-                        planes[ci][r0 : r0 + 8, c0 : c0 + 8] = px
-            mcu += 1
-    hvs = [(hi, vi) for (_, _, _, hi, vi) in sel]
-    return _planes_to_pixels(planes, hvs, hmax, vmax, h, w)
-
-
-def _planes_to_pixels(planes, hvs, hmax, vmax, h, w):
-    """Shared tail of every JPEG decode path: upsample subsampled
-    planes by PIXEL REPLICATION, crop to the image rectangle, and
-    reduce to the BT.601 integer luma (grayscale returns Y directly;
-    3-component converts YCbCr→RGB with the JFIF integer
-    convention — round-half-up via floor(x+0.5), clip 0..255)."""
-    up = []
-    for pl, (hi, vi) in zip(planes, hvs):
+        px = _IDCT_M.T @ blk @ _IDCT_M  # per block, broadcast over the grid
+        pl = px.transpose(0, 2, 1, 3).reshape(bh_p * 8, bw_p * 8)
         if hi != hmax or vi != vmax:
             pl = np.repeat(
                 np.repeat(pl, vmax // vi, axis=0), hmax // hi, axis=1
             )
         up.append(pl[:h, :w])
-    if len(planes) == 1:
+    if len(up) == 1:
         return np.clip(np.floor(up[0] + 128.5), 0, 255).astype(np.int64)
     y = up[0] + 128.0
     cb = up[1]
@@ -703,27 +608,32 @@ def _planes_to_pixels(planes, hvs, hmax, vmax, h, w):
     return (r * 299 + g * 587 + b * 114) // 1000
 
 
-# ------------------------------------------------ encoder (fixture)
+# ------------------------------------------------ Huffman table specs
 
 
-def _huff_spec_dc():
-    """All 12 DC size symbols at code length 4 (12 ≤ 2⁴−1 — valid:
-    the all-ones code stays unused per T.81 C.2)."""
+def _fixed_length_spec(symbols, length: int):
+    """(counts, symbols) giving every symbol a code of one length —
+    valid while len(symbols) ≤ 2^length − 1 (the all-ones code stays
+    unused per T.81 C.2)."""
     counts = [0] * 16
-    counts[3] = 12
-    return counts, bytes(range(12))
+    counts[length - 1] = len(symbols)
+    return counts, bytes(sorted(symbols))
 
 
-def _huff_spec_ac():
-    """All 162 baseline AC symbols (EOB, ZRL, run 0-15 × size 1-10)
-    at code length 8 (162 ≤ 2⁸−1)."""
-    syms = [0x00, 0xF0] + [
-        (r << 4) | s for r in range(16) for s in range(1, 11)
-    ]
-    syms.sort()
-    counts = [0] * 16
-    counts[7] = len(syms)
-    return counts, bytes(syms)
+#: the fixture's DC table: all 12 DC size symbols at code length 4
+_FIXTURE_DC = _fixed_length_spec(range(12), 4)
+
+
+def _fixture_ac(eob_runs: bool):
+    """The fixture's AC table, every symbol at code length 8: EOB, ZRL
+    and run 0-15 × size 1-10 (the 162 baseline symbols), plus the
+    EOB1..EOB14 run symbols 0x10..0xE0 that only progressive scans
+    code (176 symbols) when ``eob_runs``."""
+    return _fixed_length_spec(
+        [r << 4 for r in range(15 if eob_runs else 1)] + [0xF0]
+        + [(r << 4) | s for r in range(16) for s in range(1, 11)],
+        8,
+    )
 
 
 # ------------------------- T.81 Annex K.3 "typical" Huffman tables
@@ -808,11 +718,18 @@ _STD_DHT_SPECS = (
 )
 
 
-def _std_dht_segment() -> bytes:
-    body = bytearray()
-    for cls_id, (counts, syms) in _STD_DHT_SPECS:
-        body += bytes([cls_id]) + bytes(counts) + syms
-    return b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + bytes(body)
+def _segment(marker: int, body: bytes) -> bytes:
+    """One marker segment: marker, big-endian length, body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
+
+
+def _dht(specs) -> bytes:
+    """One DHT segment carrying ``(class << 4 | id, (counts, symbols))``
+    tables in order."""
+    return _segment(0xC4, b"".join(
+        bytes([cls_id]) + bytes(counts) + syms
+        for cls_id, (counts, syms) in specs
+    ))
 
 
 def mjpeg_ensure_dht(payload: bytes) -> bytes:
@@ -824,25 +741,12 @@ def mjpeg_ensure_dht(payload: bytes) -> bytes:
     already carry a DHT — or anything that is not a JPEG — are
     returned unchanged; malformed marker structure is left for
     :func:`decode_jpeg_pixels` to reject."""
-    p = payload
-    if len(p) < 4 or p[:2] != b"\xff\xd8":
-        return p
-    i = 2
-    while i + 2 <= len(p):
-        if p[i] != 0xFF:
-            return p  # not a marker stream — let the decoder reject
-        m = p[i + 1]
-        if m == 0xC4:
-            return p  # has its own DHT
-        if m == 0xDA:  # first SOS, no DHT seen → inject K.3 tables
-            return p[:i] + _std_dht_segment() + p[i:]
-        if m == 0xD9 or m == 0x01 or 0xD0 <= m <= 0xD8:
-            i += 2  # parameterless markers
-            continue
-        if i + 4 > len(p):
-            return p
-        i += 2 + struct.unpack(">H", p[i + 2 : i + 4])[0]
-    return p
+    for marker, pos, _ in _segments(payload, _STANDALONE):
+        if marker == 0xC4:
+            return payload  # has its own DHT
+        if marker == 0xDA:  # first SOS, no DHT seen → inject K.3 tables
+            return payload[:pos] + _dht(_STD_DHT_SPECS) + payload[pos:]
+    return payload
 
 
 def mjpeg_strip_dht(payload: bytes) -> bytes:
@@ -851,30 +755,18 @@ def mjpeg_strip_dht(payload: bytes) -> bytes:
     producing the DHT-less "AVI1" frame form that only decodes once
     :func:`mjpeg_ensure_dht` re-supplies the K.3 tables. Only
     meaningful for streams actually coded WITH the K.3 tables
-    (``encode_jpeg(..., tables="standard")``)."""
-    p = payload
-    if len(p) < 4 or p[:2] != b"\xff\xd8":
-        return p
-    out = bytearray(p[:2])
-    i = 2
-    while i + 2 <= len(p):
-        if p[i] != 0xFF:
-            break
-        m = p[i + 1]
-        if m == 0xDA:
-            out += p[i:]
-            return bytes(out)
-        if m == 0xD9 or m == 0x01 or 0xD0 <= m <= 0xD8:
-            out += p[i : i + 2]
-            i += 2
-            continue
-        if i + 4 > len(p):
-            break
-        seglen = struct.unpack(">H", p[i + 2 : i + 4])[0]
-        if m != 0xC4:
-            out += p[i : i + 2 + seglen]
-        i += 2 + seglen
-    return p  # malformed — return unchanged
+    (``encode_jpeg(..., tables="standard")``); malformed streams are
+    returned unchanged."""
+    out = bytearray(payload[:2])
+    for marker, pos, end in _segments(payload, _STANDALONE):
+        if marker == 0xDA:
+            return bytes(out + payload[pos:])
+        if marker != 0xC4:
+            out += payload[pos:end]
+    return payload
+
+
+# ------------------------------------------------ encoder (fixture)
 
 
 class _BitWriter:
@@ -899,20 +791,6 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # 1-bits padding per spec
 
 
-def _enc_table(counts, symbols):
-    """symbol → (code, length) for the canonical assignment."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[symbols[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
 def _size_cat(v: int) -> int:
     return int(abs(v)).bit_length()
 
@@ -928,35 +806,6 @@ def _fwd_block(blk) -> np.ndarray:
     # stream always)
     coef[1:] = np.clip(coef[1:], -1023, 1023)
     return coef.reshape(8, 8)
-
-
-def _write_block(bwr, coef, pred, ci, dc_enc, ac_enc):
-    cvec = coef.ravel()[_ZZ]
-    diff = int(cvec[0]) - pred[ci]
-    pred[ci] = int(cvec[0])
-    t = _size_cat(diff)
-    code, ln = dc_enc[t]
-    bwr.write(code, ln)
-    if t:
-        bwr.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    run = 0
-    for k in range(1, 64):
-        v = int(cvec[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_enc[0xF0]
-            bwr.write(code, ln)
-            run -= 16
-        s = _size_cat(v)
-        code, ln = ac_enc[(run << 4) | s]
-        bwr.write(code, ln)
-        bwr.write(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if run:
-        code, ln = ac_enc[0x00]
-        bwr.write(code, ln)
 
 
 def _pad_replicate(g, ph: int, pw: int) -> np.ndarray:
@@ -979,160 +828,7 @@ def _exif_app1(orientation: int) -> bytes:
         + struct.pack("<HHIHH", 0x0112, 3, 1, orientation, 0)
         + struct.pack("<I", 0)  # no next IFD
     )
-    body = b"Exif\x00\x00" + tiff
-    return b"\xff\xe1" + struct.pack(">H", 2 + len(body)) + body
-
-
-def encode_jpeg(
-    gray,
-    color: bool = False,
-    restart_interval: int = 0,
-    subsampling: str = "444",
-    cb_const: int = 0,
-    cr_const: int = 0,
-    exif_orientation: int = 0,
-    tables: str = "fixture",
-) -> bytes:
-    """TEST FIXTURE: encode an int64 gray array as a REAL baseline
-    JFIF JPEG with quantization step 1 everywhere (so flat 8×8
-    blocks round-trip exactly) and the self-generated fixed-length
-    Huffman tables above. ``color=True`` writes a 3-component scan —
-    ``subsampling="444"`` (all factors 1) or ``"420"`` (Y at 2×2,
-    chroma quarter-res: the layout most real crawls carry) — whose
-    chroma planes are FLAT at ``cb_const``/``cr_const`` (signed,
-    around the 128 level shift). Flat chroma quantizes exactly, so
-    the decoded RGB is an exact integer function of (gray, cb, cr)
-    under the JFIF conversion — including through the replication
-    upsample. ``restart_interval`` > 0 emits DRI + RSTn markers
-    every that many MCUs (exercises the decoder's restart path).
-
-    ``tables="standard"`` codes the scan with the T.81 Annex K.3
-    typical tables instead (luma tables as id 0, chroma as id 1 —
-    the assignment every real-world encoder uses): the form MJPEG
-    fixtures need, because only a K.3-coded stream stays decodable
-    after :func:`mjpeg_strip_dht` + :func:`mjpeg_ensure_dht`."""
-    g = np.asarray(gray, dtype=np.int64)
-    h, w = g.shape
-    if not color:
-        comps = [(0x11, None)]
-    elif subsampling == "444":
-        comps = [(0x11, None), (0x11, cb_const), (0x11, cr_const)]
-    elif subsampling == "420":
-        comps = [(0x22, None), (0x11, cb_const), (0x11, cr_const)]
-    else:
-        raise ValueError(f"unsupported subsampling: {subsampling!r}")
-    hmax = max(c[0] >> 4 for c in comps)
-    vmax = max(c[0] & 0xF for c in comps)
-    mw = (w + 8 * hmax - 1) // (8 * hmax)
-    mh = (h + 8 * vmax - 1) // (8 * vmax)
-    padded = _pad_replicate(g, mh * vmax * 8, mw * hmax * 8)
-    ncomp = len(comps)
-    if tables == "standard":
-        # K.3: luma tables as id 0, chroma tables as id 1
-        tids = [0] + [1] * (ncomp - 1)
-        dht_specs = [
-            (0x00, _STD_DC_LUM), (0x10, _STD_AC_LUM),
-        ] + (
-            [(0x01, _STD_DC_CHROM), (0x11, _STD_AC_CHROM)]
-            if ncomp > 1
-            else []
-        )
-        dc_encs = [
-            _enc_table(*_STD_DC_LUM), _enc_table(*_STD_DC_CHROM),
-        ]
-        ac_encs = [
-            _enc_table(*_STD_AC_LUM), _enc_table(*_STD_AC_CHROM),
-        ]
-    else:
-        tids = [0] * ncomp
-        dc_spec, ac_spec = _huff_spec_dc(), _huff_spec_ac()
-        dht_specs = [(0x00, dc_spec), (0x10, ac_spec)]
-        dc_encs = [_enc_table(*dc_spec)]
-        ac_encs = [_enc_table(*ac_spec)]
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    # APP0 JFIF
-    app0 = b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    out += b"\xff\xe0" + struct.pack(">H", 2 + len(app0)) + app0
-    if exif_orientation:
-        out += _exif_app1(exif_orientation)
-    # DQT: table 0, all ones (zigzag order is all-ones too)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + b"\x00" + b"\x01" * 64
-    # SOF0
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for c, (hv, _) in enumerate(comps):
-        sof += bytes([c + 1, hv, 0])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    # DHT: one segment carrying every table the scan references
-    dht = b"".join(
-        bytes([cls_id]) + bytes(counts) + syms
-        for cls_id, (counts, syms) in dht_specs
-    )
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    # SOS
-    sos = bytes([ncomp])
-    for c in range(ncomp):
-        sos += bytes([c + 1, tids[c] * 0x11])
-    sos += bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    # flat chroma block coefficients: DC = 8·const, AC = 0 (exact)
-    flat_coef = {
-        cst: _fwd_block(np.full((8, 8), cst, dtype=np.int64))
-        for _, cst in comps
-        if cst is not None
-    }
-    bwr = _BitWriter()
-    pred = [0] * ncomp
-    mcu = 0
-    rst = 0
-    for my in range(mh):
-        for mx in range(mw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bwr.flush()
-                out += bwr.out
-                bwr = _BitWriter()
-                out += bytes([0xFF, 0xD0 + (rst % 8)])
-                rst += 1
-                pred = [0] * ncomp
-            for ci, (hv, cst) in enumerate(comps):
-                hi, vi = hv >> 4, hv & 0xF
-                for by in range(vi):
-                    for bx in range(hi):
-                        if cst is not None:
-                            coef = flat_coef[cst]
-                        else:
-                            r0 = (my * vi + by) * 8
-                            c0 = (mx * hi + bx) * 8
-                            blk = padded[r0 : r0 + 8, c0 : c0 + 8]
-                            coef = _fwd_block(blk - 128)
-                        _write_block(
-                            bwr, coef, pred, ci,
-                            dc_encs[tids[ci]], ac_encs[tids[ci]],
-                        )
-            mcu += 1
-    bwr.flush()
-    out += bwr.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-# ------------------------------------- progressive encoder (fixture)
-
-
-def _huff_spec_ac_prog():
-    """All 176 progressive AC symbols at code length 8 (176 ≤ 2⁸−1):
-    the baseline 162 plus the EOBn run-length symbols 0x10..0xE0
-    that only exist in progressive scans."""
-    syms = sorted(
-        [(r << 4) for r in range(16)]  # EOB0..EOB14 + ZRL (0xF0)
-        + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-    )
-    counts = [0] * 16
-    counts[7] = len(syms)
-    return counts, bytes(syms)
+    return _segment(0xE1, b"Exif\x00\x00" + tiff)
 
 
 class _ProgAcState:
@@ -1258,6 +954,135 @@ def _enc_ac_refine(bwr, cvec, ss, se, al, ac_enc, st: _ProgAcState):
             _flush_eobrun(bwr, ac_enc, st)
 
 
+def _encode_script(gray, color, subsampling, cb_const, cr_const,
+                   restart_interval, sof_marker, script, tables="fixture",
+                   exif_orientation=0) -> bytes:
+    """The one scan-script writer behind both encoders: the frame's
+    coefficient grid (quant step 1; luma the forward DCT of the
+    edge-replicated image, chroma FLAT at ``cb_const``/``cr_const``),
+    one header (APP0, optional EXIF APP1, DQT, SOF ``sof_marker``, one
+    DHT, optional DRI), then each scan ``(component indices, Ss, Se,
+    Ah, Al)`` of ``script`` as SOS + entropy data with RSTn every
+    ``restart_interval`` units, then EOI."""
+    g = np.asarray(gray, dtype=np.int64)
+    h, w = g.shape
+    if not color:
+        layout = [(1, None)]
+    elif subsampling == "444":
+        layout = [(1, None), (1, cb_const), (1, cr_const)]
+    elif subsampling == "420":
+        layout = [(2, None), (1, cb_const), (1, cr_const)]
+    else:
+        raise ValueError(f"unsupported subsampling: {subsampling!r}")
+    comps = [(c + 1, 0, f, f) for c, (f, _) in enumerate(layout)]
+    geom = _prog_geometry(h, w, comps)
+    padded = _pad_replicate(g, geom[0][0] * 8, geom[0][1] * 8)
+    grid = []  # per component: zigzag coefficients per padded block
+    for (_, cst), (bh_p, bw_p, _, _) in zip(layout, geom):
+        if cst is not None:
+            flat = _fwd_block(np.full((8, 8), cst, dtype=np.int64))
+            grid.append(np.tile(flat.ravel()[_ZZ], (bh_p * bw_p, 1)))
+        else:
+            grid.append(np.array([
+                _fwd_block(padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+                           - 128).ravel()[_ZZ]
+                for by in range(bh_p) for bx in range(bw_p)
+            ]))
+    if tables == "standard":
+        # K.3: luma tables as id 0, chroma tables as id 1
+        tids = [0] + [1] * (len(comps) - 1)
+        specs = _STD_DHT_SPECS[: 2 * len(set(tids))]
+    else:
+        tids = [0] * len(comps)
+        specs = ((0x00, _FIXTURE_DC), (0x10, _fixture_ac(sof_marker == 0xC2)))
+    enc = {
+        cls_id: {s: (code, ln) for s, code, ln in _canonical(*spec)}
+        for cls_id, spec in specs
+    }
+
+    app0 = b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
+    out = bytearray(b"\xff\xd8" + _segment(0xE0, app0))
+    if exif_orientation:
+        out += _exif_app1(exif_orientation)
+    out += _segment(0xDB, b"\x00" + b"\x01" * 64)  # table 0, all ones
+    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([len(comps)])
+    for cid, _, hi, vi in comps:
+        sof += bytes([cid, (hi << 4) | vi, 0])
+    out += _segment(sof_marker, sof) + _dht(specs)
+    if restart_interval:
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    for cis, ss, se, ah, al in script:
+        sos = bytes([len(cis)])
+        for ci in cis:
+            sos += bytes([ci + 1, tids[ci] * 0x11])
+        out += _segment(0xDA, sos + bytes([ss, se, (ah << 4) | al]))
+        bwr = _BitWriter()
+        st = _ProgAcState()
+        pred = [0] * len(comps)
+        rst = 0  # T.81: the RSTn modulo counter restarts every scan
+        ac_enc = enc[0x10 | tids[cis[0]]]  # an EOB run is one component's
+        for restart, k, bidx in _scan_blocks(cis, comps, geom, restart_interval):
+            if restart:
+                _flush_eobrun(bwr, ac_enc, st)
+                bwr.flush()
+                out += bwr.out + bytes([0xFF, 0xD0 + rst % 8])
+                bwr = _BitWriter()
+                rst += 1
+                pred = [0] * len(comps)
+            ci = cis[k]
+            cvec = grid[ci][bidx]
+            if ss == 0 and ah == 0:
+                _enc_dc_first(bwr, int(cvec[0]) >> al, pred, ci, enc[tids[ci]])
+            elif ss == 0:
+                bwr.write((int(cvec[0]) >> al) & 1, 1)
+            if se:
+                ac_enc = enc[0x10 | tids[ci]]
+                band = _enc_ac_first if ah == 0 else _enc_ac_refine
+                band(bwr, cvec, max(ss, 1), se, al, ac_enc, st)
+                if ss == 0:  # full band (sequential): EOB per block
+                    _flush_eobrun(bwr, ac_enc, st)
+        _flush_eobrun(bwr, ac_enc, st)
+        bwr.flush()
+        out += bwr.out
+    return bytes(out + b"\xff\xd9")  # EOI
+
+
+def encode_jpeg(
+    gray,
+    color: bool = False,
+    restart_interval: int = 0,
+    subsampling: str = "444",
+    cb_const: int = 0,
+    cr_const: int = 0,
+    exif_orientation: int = 0,
+    tables: str = "fixture",
+) -> bytes:
+    """TEST FIXTURE: encode an int64 gray array as a REAL baseline
+    JFIF JPEG — the sequential one-scan script — with quantization
+    step 1 everywhere (so flat 8×8 blocks round-trip exactly) and the
+    self-generated fixed-length Huffman tables above. ``color=True``
+    writes a 3-component scan — ``subsampling="444"`` (all factors 1)
+    or ``"420"`` (Y at 2×2, chroma quarter-res: the layout most real
+    crawls carry) — whose chroma planes are FLAT at
+    ``cb_const``/``cr_const`` (signed, around the 128 level shift).
+    Flat chroma quantizes exactly, so the decoded RGB is an exact
+    integer function of (gray, cb, cr) under the JFIF conversion —
+    including through the replication upsample. ``restart_interval``
+    > 0 emits DRI + RSTn markers every that many MCUs (exercises the
+    decoder's restart path).
+
+    ``tables="standard"`` codes the scan with the T.81 Annex K.3
+    typical tables instead (luma tables as id 0, chroma as id 1 —
+    the assignment every real-world encoder uses): the form MJPEG
+    fixtures need, because only a K.3-coded stream stays decodable
+    after :func:`mjpeg_strip_dht` + :func:`mjpeg_ensure_dht`."""
+    cis = list(range(3 if color else 1))
+    return _encode_script(
+        gray, color, subsampling, cb_const, cr_const, restart_interval,
+        0xC0, [(cis, 0, 63, 0, 0)], tables, exif_orientation,
+    )
+
+
 def encode_jpeg_progressive(
     gray,
     color: bool = False,
@@ -1289,186 +1114,22 @@ def encode_jpeg_progressive(
     both interleaved DC scans with per-component Ns=1 DC scans over
     each component's OWN ceil(dims/8) grid (T.81 A.2) — the shape
     real encoders emit for subsampled chroma."""
-    g = np.asarray(gray, dtype=np.int64)
-    h, w = g.shape
-    if not color:
-        comps = [(0x11, None)]
-    elif subsampling == "444":
-        comps = [(0x11, None), (0x11, cb_const), (0x11, cr_const)]
-    elif subsampling == "420":
-        comps = [(0x22, None), (0x11, cb_const), (0x11, cr_const)]
-    else:
-        raise ValueError(f"unsupported subsampling: {subsampling!r}")
-    ncomp = len(comps)
-    hmax = max(c[0] >> 4 for c in comps)
-    vmax = max(c[0] & 0xF for c in comps)
-    mw = (w + 8 * hmax - 1) // (8 * hmax)
-    mh = (h + 8 * vmax - 1) // (8 * vmax)
-    padded = _pad_replicate(g, mh * vmax * 8, mw * hmax * 8)
+    cis = list(range(3 if color else 1))
+    dc = [[ci] for ci in cis] if dc_per_component else [cis]
 
-    # per-component coefficient grids, zigzag order per block
-    grids = []  # (bh_pad, bw_pad, bh_non, bw_non, coef[bidx][64])
-    for hv, cst in comps:
-        hi, vi = hv >> 4, hv & 0xF
-        bh_p, bw_p = mh * vi, mw * hi
-        cw = -(-w * hi // hmax)
-        chh = -(-h * vi // vmax)
-        bh_n, bw_n = -(-chh // 8), -(-cw // 8)
-        coef = np.zeros((bh_p * bw_p, 64), dtype=np.int64)
-        if cst is not None:
-            flat = _fwd_block(np.full((8, 8), cst, dtype=np.int64))
-            coef[:] = flat.ravel()[_ZZ]
-        else:
-            for by in range(bh_p):
-                for bx in range(bw_p):
-                    blk = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                    coef[by * bw_p + bx] = _fwd_block(blk - 128).ravel()[_ZZ]
-        grids.append((bh_p, bw_p, bh_n, bw_n, coef))
+    def bands(ss, se, ah, al):
+        return [([ci], ss, se, ah, al) for ci in cis]
 
-    dc_counts, dc_syms = _huff_spec_dc()
-    ac_counts, ac_syms = _huff_spec_ac_prog()
-    dc_enc = _enc_table(dc_counts, dc_syms)
-    ac_enc = _enc_table(ac_counts, ac_syms)
-
-    out = bytearray(b"\xff\xd8")
-    app0 = b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    out += b"\xff\xe0" + struct.pack(">H", 2 + len(app0)) + app0
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + b"\x00" + b"\x01" * 64
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for c, (hv, _) in enumerate(comps):
-        sof += bytes([c + 1, hv, 0])
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof  # SOF2
-    dht = bytes([0x00]) + bytes(dc_counts) + dc_syms
-    dht += bytes([0x10]) + bytes(ac_counts) + ac_syms
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    rstno = [0]
-
-    def sos_header(cs_list, ss, se, ah, al):
-        sos = bytes([len(cs_list)])
-        for cs in cs_list:
-            sos += bytes([cs + 1, 0x00])
-        sos += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    def emit_restart(bwr):
-        bwr.flush()
-        nonlocal_out.extend(bwr.out)
-        bwr.out = bytearray()
-        bwr.acc = 0
-        bwr.nbits = 0
-        nonlocal_out.extend(bytes([0xFF, 0xD0 + (rstno[0] % 8)]))
-        rstno[0] += 1
-
-    nonlocal_out = out
-
-    # scan 1: interleaved DC first, Al=1
-    def dc_scan(ah, al):
-        rstno[0] = 0  # T.81: the RSTn modulo counter resets per scan
-        nonlocal_out.extend(sos_header(list(range(ncomp)), 0, 0, ah, al))
-        bwr = _BitWriter()
-        pred = [0] * ncomp
-        unit = 0
-        for my in range(mh):
-            for mx in range(mw):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    emit_restart(bwr)
-                    pred = [0] * ncomp
-                for ci, (hv, _) in enumerate(comps):
-                    hi, vi = hv >> 4, hv & 0xF
-                    bh_p, bw_p = grids[ci][0], grids[ci][1]
-                    coef = grids[ci][4]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            bidx = (my * vi + by) * bw_p + (mx * hi + bx)
-                            dc = int(coef[bidx][0])
-                            if ah == 0:
-                                _enc_dc_first(
-                                    bwr, dc >> al, pred, ci, dc_enc
-                                )
-                            else:
-                                bwr.write((dc >> al) & 1, 1)
-                unit += 1
-        bwr.flush()
-        nonlocal_out.extend(bwr.out)
-
-    def ac_scan(ci, ss, se, ah, al):
-        rstno[0] = 0  # T.81: the RSTn modulo counter resets per scan
-        nonlocal_out.extend(sos_header([ci], ss, se, ah, al))
-        bwr = _BitWriter()
-        st = _ProgAcState()
-        bh_n, bw_n = grids[ci][2], grids[ci][3]
-        bw_p = grids[ci][1]
-        coef = grids[ci][4]
-        unit = 0
-        for by in range(bh_n):
-            for bx in range(bw_n):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    _flush_eobrun(bwr, ac_enc, st)
-                    emit_restart(bwr)
-                cvec = coef[by * bw_p + bx]
-                # band vector in zigzag positions ss..se
-                if ah == 0:
-                    _enc_ac_first(bwr, cvec, ss, se, al, ac_enc, st)
-                else:
-                    _enc_ac_refine(bwr, cvec, ss, se, al, ac_enc, st)
-                unit += 1
-        _flush_eobrun(bwr, ac_enc, st)
-        bwr.flush()
-        nonlocal_out.extend(bwr.out)
-
-    def dc_scan_single(ci, ah, al):
-        """Non-interleaved DC scan (Ns=1, Ss=0): T.81 A.2 — covers
-        the component's OWN ceil(dims/8) grid, not the MCU-padded
-        one. Spec-legal and emitted by real encoders for the chroma
-        components of subsampled progressive files."""
-        rstno[0] = 0
-        nonlocal_out.extend(sos_header([ci], 0, 0, ah, al))
-        bwr = _BitWriter()
-        pred = [0] * ncomp
-        bh_n, bw_n = grids[ci][2], grids[ci][3]
-        bw_p = grids[ci][1]
-        coef = grids[ci][4]
-        unit = 0
-        for by in range(bh_n):
-            for bx in range(bw_n):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    emit_restart(bwr)
-                    pred = [0] * ncomp
-                dc = int(coef[by * bw_p + bx][0])
-                if ah == 0:
-                    _enc_dc_first(bwr, dc >> al, pred, ci, dc_enc)
-                else:
-                    bwr.write((dc >> al) & 1, 1)
-                unit += 1
-        bwr.flush()
-        nonlocal_out.extend(bwr.out)
-
-    if dc_per_component:
-        for ci in range(ncomp):
-            dc_scan_single(ci, 0, 1)
-    else:
-        dc_scan(0, 1)
-    for ci in range(ncomp):
-        ac_scan(ci, 1, 5, 0, 2)
-    for ci in range(ncomp):
-        ac_scan(ci, 6, 63, 0, 1)
-    for ci in range(ncomp):
-        ac_scan(ci, 1, 5, 2, 1)
-    if dc_per_component:
-        for ci in range(ncomp):
-            dc_scan_single(ci, 1, 0)
-    else:
-        dc_scan(1, 0)
-    for ci in range(ncomp):
-        ac_scan(ci, 1, 5, 1, 0)
-    for ci in range(ncomp):
-        ac_scan(ci, 6, 63, 1, 0)
-
-    nonlocal_out.extend(b"\xff\xd9")
-    return bytes(nonlocal_out)
+    script = (
+        [(c, 0, 0, 0, 1) for c in dc] + bands(1, 5, 0, 2)
+        + bands(6, 63, 0, 1) + bands(1, 5, 2, 1)
+        + [(c, 0, 0, 1, 0) for c in dc] + bands(1, 5, 1, 0)
+        + bands(6, 63, 1, 0)
+    )
+    return _encode_script(
+        gray, color, subsampling, cb_const, cr_const, restart_interval,
+        0xC2, script,
+    )
 
 
 # ------------------------------------------------ EXIF orientation
@@ -1483,25 +1144,11 @@ def jpeg_exif_orientation(payload: bytes) -> int:
     byte-different file whose DISPLAYED image is rotated — the
     perceptual-dedup trap ``decode_pixels`` neutralizes by
     normalizing through :func:`apply_exif_orientation`."""
-    p = payload
-    if len(p) < 4 or p[:2] != b"\xff\xd8":
-        return 1
-    pos = 2
-    while pos + 4 <= len(p):
-        if p[pos] != 0xFF:
-            return 1
-        marker = p[pos + 1]
-        if marker == 0xD8:
-            pos += 2
-            continue
+    for marker, pos, end in _segments(payload):
         if marker in (0xD9, 0xDA):
             return 1  # image data: no EXIF seen
-        (seglen,) = struct.unpack_from(">H", p, pos + 2)
-        if seglen < 2 or pos + 2 + seglen > len(p):
-            return 1
-        if marker == 0xE1 and p[pos + 4 : pos + 10] == b"Exif\x00\x00":
-            return tiff_orientation(p[pos + 10 : pos + 2 + seglen])
-        pos += 2 + seglen
+        if marker == 0xE1 and payload[pos + 4 : pos + 10] == b"Exif\x00\x00":
+            return tiff_orientation(payload[pos + 10 : end])
     return 1
 
 

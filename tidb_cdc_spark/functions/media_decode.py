@@ -39,6 +39,7 @@ import zlib
 import numpy as np
 
 from tidb_cdc_spark.functions.jpeg import (
+    MAX_CANVAS_PIXELS,
     apply_exif_orientation,
     decode_jpeg_pixels,
     jpeg_exif_orientation,
@@ -445,7 +446,7 @@ def decode_gif_frames(payload: bytes):
     if len(p) < 13 or p[:6] not in GIF_MAGIC:
         return None
     sw, sh = struct.unpack_from("<HH", p, 6)
-    if sw <= 0 or sh <= 0:
+    if sw <= 0 or sh <= 0 or sw * sh > MAX_CANVAS_PIXELS:
         return None
     canvas = np.full((sh, sw), 255, dtype=np.int64)  # white paper
     frames = []
@@ -496,6 +497,8 @@ def decode_webp_anim_frames(payload: bytes):
         return None
     cw = 1 + int.from_bytes(p[24:27], "little")
     ch = 1 + int.from_bytes(p[27:30], "little")
+    if cw * ch > MAX_CANVAS_PIXELS:
+        return None
     canvas = np.full((ch, cw), 255, dtype=np.int64)  # white paper
     frames = []
     for tag, body in chunks:
@@ -627,6 +630,8 @@ def decode_apng_frames(payload: bytes):
         return None
     W, H = struct.unpack_from(">II", ihdr_raw)
     color = ihdr_raw[9]
+    if W * H > MAX_CANVAS_PIXELS:
+        return None
     canvas = np.full((H, W), 255, dtype=np.int64)  # white paper
     frames = []
     for i, (fctl, parts, is_idat) in enumerate(frames_meta):

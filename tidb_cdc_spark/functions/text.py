@@ -41,13 +41,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of whitespace tokens that are stopwords of ``lang``."""
-    toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
 def lang_scores(text: Column) -> Column:
     """Map of lang → stopword-hit count; argmax is the predicted
     language. Pure expressions; scoring ~100 TB of docs is a scan."""

@@ -10,7 +10,6 @@ from tidb_cdc_spark.plans.inspect import (
     has_broadcast_join,
     has_pushed_filters,
     num_exchanges,
-    wholestage_codegen_ids,
 )
 
 __all__ = [
@@ -18,5 +17,4 @@ __all__ = [
     "has_broadcast_join",
     "has_pushed_filters",
     "num_exchanges",
-    "wholestage_codegen_ids",
 ]

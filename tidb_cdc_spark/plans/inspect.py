@@ -36,8 +36,3 @@ def num_exchanges(df: DataFrame) -> int:
     simple mode, where partitioning prints inline on the node."""
     plan = explain_str(df, mode="simple")
     return len(re.findall(r"\bExchange (?:hash|range)partitioning", plan))
-
-
-def wholestage_codegen_ids(df: DataFrame) -> list[str]:
-    plan = explain_str(df)
-    return re.findall(r"WholeStageCodegen \((\d+)\)", plan)

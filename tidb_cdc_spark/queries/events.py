@@ -531,8 +531,8 @@ ORDER BY event_id
 def events_sliding_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window aggregation in BATCH via the built-in
     ``window()`` generator: overlapping 1-hour windows every 15
-    minutes (each event lands in 4 windows) — the batch twin of the
-    streaming sliding agg in streaming/windows.py.
+    minutes (each event lands in 4 windows) — the batch form of a
+    streaming sliding aggregation.
 
     Scale shape: window() explodes each row to its ≤4 windows BEFORE
     the hash aggregate, so map-side partial aggregation still bounds
@@ -673,11 +673,10 @@ FROM events ORDER BY event_id
 
 def events_zorder_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) curve audit: interleave (user_id, minute) low
-    16 bits into the 32-bit curve key that ``functions.io.write_zorder``
-    lays files out on, then summarize curve buckets. Pins the bit
-    dilation arithmetic — the part an engine can silently get wrong —
-    bit-for-bit against the oracle; the layout/pruning effect itself
-    is asserted in tests/test_io.py (file min/max coverage)."""
+    16 bits into the 32-bit curve key (``functions.io.morton_z2``) a
+    Z-ordered layout sorts files on, then summarize curve buckets.
+    Pins the bit dilation arithmetic — the part an engine can
+    silently get wrong — bit-for-bit against the oracle."""
 
     ev = _t(spark, sf_dir, "events")
     x = F.col("user_id") % 65536

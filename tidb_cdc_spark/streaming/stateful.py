@@ -1,7 +1,8 @@
 """Custom stateful streaming operators (``applyInPandasWithState``).
 
-The built-in watermarked aggregations (streaming/windows.py) cover
-windowed counts/sessions; this module is the extension point the
+Spark's built-in watermarked operators (``window``,
+``session_window``, ``dropDuplicates``) cover windowed counts,
+sessions and dedup; this module is the extension point the
 reference delegates to user handlers (``ConsumerHandler``,
 ``/root/reference/cdc_manager.go:43-47``) — arbitrary per-key state
 evolved batch-by-batch, checkpointed by Structured Streaming.
