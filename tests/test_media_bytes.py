@@ -245,6 +245,33 @@ def _encoded(ns) -> dict:
     out["png_chunk"] = ns["_png_chunk"](b"tEXt", b"k\x00v")
     out["idat"] = ns["_idat_payload"](out["png_rgb_3"])
     out.update(_encoded_jpeg(ns))
+    out.update(_encoded_webp(ns))
+    return out
+
+
+def _encoded_webp(ns) -> dict:
+    """Every VP8L encoder variant on odd-sized arrays: noise through
+    the literal, subtract-green, LZ77 and predictor paths; 2, 4 and 16
+    grays through every palette bundling width (xbits 3, 2, 1);
+    repeated rows with few grays for LZ77 copies and colour-cache hits,
+    at a width whose length code carries extra bits and one whose code
+    does not; the literal path at alpha 0, 128 and 255; and a flat
+    image (one-symbol codes only)."""
+    rng = np.random.default_rng(23)
+    enc = ns["encode_webp_lossless"]
+    noise = rng.integers(0, 256, (13, 11)).astype(np.int64)
+    out = {f"webp_{v}_noise": enc(noise, v) for v in ("literal", "sg", "lz", "pred")}
+    for n in (2, 4, 16):
+        grays = rng.choice(256, n, replace=False).astype(np.int64)
+        few = grays[rng.integers(0, n, (9, 13))]
+        assert len(np.unique(few)) == n
+        out[f"webp_pal{n}"] = enc(few, "pal")
+    for a in (0, 128, 255):
+        out[f"webp_literal_a{a}"] = enc(few[:5, :7], "literal", alpha=a)
+    for name, w in (("wide", 13), ("narrow", 3)):
+        rows = few[[0, 0, 1, 2, 2, 2, 3, 0, 0], :w]
+        out[f"webp_lz_rows_{name}"] = enc(rows, "lz")
+    out["webp_literal_flat"] = enc(np.ones((5, 3), dtype=np.int64), "literal")
     return out
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.test_media_bytes import PURE, _feed, namespace, single_partition_plants
@@ -19,10 +20,15 @@ from tests.test_media_bytes import PURE, _feed, namespace, single_partition_plan
 OVERWRITES = (0, 1, 2, 3, 4, 255)
 
 #: sha256 over every variant's decoder and probe results, per payload:
-#: the JPEG codec's outcome on malformed input, pinned value for value
+#: the JPEG and WebP codecs' outcomes on malformed input, pinned value
+#: for value. ``decode_pixels`` hands a WebP the pure VP8L path declines
+#: to the host's libwebp, so the webp digests assume a libwebp build
+#: that decodes what this one decodes.
 OUTCOMES = {
     "jpeg": "d47314af7561aaa08e4be71f214af468fc353a5cdc21bf85c0140318d5ae8bec",
     "mjpeg": "9d802be7c9fd05d5b3e33ecfa7cf36292171f34a8e25242b92283cce8adcc374",
+    "webp": "ffdbf7ee5c964d38fab3fcf7aca2efdd889e37550c410440200fa048591373aa",
+    "webp_anim": "1b69070805c183f3b472ef2dd6733c9e5b9e1735f1112295f28acdf18257e6e4",
 }
 
 
@@ -91,43 +97,46 @@ def variants(p: bytes):
                 yield f"byte {i}:={v}", p[:i] + bytes([v]) + p[i + 1 :]
 
 
-def sweep(payloads: dict, ns) -> list:
-    """[(format, variant, function, error)] for every raise."""
+@pytest.fixture(scope="module")
+def swept(spark):
+    """(payloads, {format: (outcome digest, raises)}): every variant of
+    every planted payload runs once through every decoder and probe.
+    The digest covers (variant, every result) in variant order; each
+    raise is recorded as (variant, function, error) and fed to the
+    digest as its repr."""
+    ns = namespace()
+    with pytest.MonkeyPatch.context() as mp:
+        single_partition_plants(mp)
+        payloads = planted_payloads(spark, ns)
     fns = [(name, ns[name]) for name in PURE]
-    errors = []
+    out = {}
     for fmt, p in sorted(payloads.items()):
+        h = hashlib.sha256()
+        errors = []
         for desc, q in variants(p):
+            results = [desc]
             for name, fn in fns:
                 try:
-                    fn(q)
+                    results.append(fn(q))
                 except Exception as e:  # noqa: BLE001 — the thing under test
-                    errors.append((fmt, desc, name, repr(e)[:80]))
-    return errors
+                    errors.append((desc, name, repr(e)[:80]))
+                    results.append(repr(e))
+            _feed(h, results)
+        out[fmt] = (h.hexdigest(), errors)
+    return payloads, out
 
 
-def test_decoders_and_probes_never_raise(spark, monkeypatch):
-    single_partition_plants(monkeypatch)
+def test_decoders_and_probes_never_raise(swept):
+    payloads, out = swept
     ns = namespace()
-    payloads = planted_payloads(spark, ns)
     for fmt, p in payloads.items():  # each plant is valid for some reader
         assert any(
             ns[name](p) is not None for name in PURE if name != "decode_image_dims"
         ), fmt
-    errors = sweep(payloads, ns)
+    errors = [(fmt, *e) for fmt, (_, errs) in sorted(out.items()) for e in errs]
     assert not errors, f"{len(errors)} raises, e.g. {errors[:8]}"
 
 
-def outcomes(p: bytes, ns) -> str:
-    """One digest over (variant, every decoder's and probe's result)."""
-    h = hashlib.sha256()
-    for desc, q in variants(p):
-        _feed(h, [desc] + [ns[name](q) for name in PURE])
-    return h.hexdigest()
-
-
-def test_jpeg_sweep_outcomes_match_fixture(spark, monkeypatch):
-    single_partition_plants(monkeypatch)
-    ns = namespace()
-    payloads = planted_payloads(spark, ns)
-    got = {fmt: outcomes(payloads[fmt], ns) for fmt in OUTCOMES}
-    assert got == OUTCOMES
+def test_jpeg_sweep_outcomes_match_fixture(swept):
+    _, out = swept
+    assert {fmt: out[fmt][0] for fmt in OUTCOMES} == OUTCOMES
