@@ -155,6 +155,15 @@ class TestRealEncoderRoundTrip:
         assert (out == _expected_luma(rgba)).all(), name
 
 
+def _riff(bw) -> bytes:
+    data = b"\x2f" + bw.flush()
+    padded = data + (b"\x00" if len(data) % 2 else b"")
+    return (
+        b"RIFF" + struct.pack("<I", 4 + 8 + len(padded)) + b"WEBP"
+        + b"VP8L" + struct.pack("<I", len(data)) + padded
+    )
+
+
 def _craft_backref_stream(w, h, backref_at, length, dcode):
     """Minimal VP8L stream: position-stamped literals (pos in
     green + red bit 8), one backref of ``length`` using neighbor
@@ -165,69 +174,19 @@ def _craft_backref_stream(w, h, backref_at, length, dcode):
     bw.write(0, 1)
     bw.write(0, 3)
     bw.write(0, 1)  # no transforms
-    bw.write(0, 1)  # no cache
-    bw.write(0, 1)  # no meta
-
-    def prefix_val(v, maxcode):
-        if v <= 4:
-            return v - 1, 0, 0
-        for code in range(4, maxcode):
-            eb = (code - 2) >> 1
-            off = (2 + (code & 1)) << eb
-            if off + 1 <= v <= off + (1 << eb):
-                return code, v - off - 1, eb
-        raise ValueError(v)
-
-    lcode, lx, lxb = prefix_val(length, 24)
-    dpref, dxv, dxb = prefix_val(dcode, 40)
-
-    def emit_tree(symbols, alphabet):
-        symbols = sorted(symbols)
-        if len(symbols) <= 2 and all(s < 256 for s in symbols):
-            lengths = [0] * alphabet
-            for s in symbols:
-                lengths[s] = 1
-            W._write_prefix_code(bw, lengths)
-            if len(symbols) == 1:
-                return {symbols[0]: (0, 0)}
-            return W._canonical_codes(lengths)
-        lengths = W._balanced_lengths(symbols, alphabet)
-        W._write_prefix_code(bw, lengths, use_max=True)
-        return W._canonical_codes(lengths)
-
-    gt = emit_tree(sorted(set(range(256)) | {256 + lcode}), 280)
-    rt = emit_tree([0, 1], 256)
-    bt = emit_tree([0], 256)
-    at = emit_tree([255], 256)
-    dt = emit_tree([dpref], 40)
-
-    def wc(t, s):
-        c, ln = t[s]
-        bw.write_code(c, ln)
-
+    lcode, lx, lxb = W._prefix_symbol(length)
+    dpref, dxv, dxb = W._prefix_symbol(dcode)
+    image = []
     i = 0
-    n = w * h
-    while i < n:
+    while i < w * h:
         if i == backref_at:
-            wc(gt, 256 + lcode)
-            if lxb:
-                bw.write(lx, lxb)
-            wc(dt, dpref)
-            if dxb:
-                bw.write(dxv, dxb)
+            image += [(0, 256 + lcode, lx, lxb), (4, dpref, dxv, dxb)]
             i += length
             continue
-        wc(gt, i & 0xFF)
-        wc(rt, (i >> 8) & 1)
-        wc(bt, 0)
-        wc(at, 255)
+        image.append(0xFF000000 | ((i >> 8) & 1) << 16 | (i & 0xFF) << 8)
         i += 1
-    data = b"\x2f" + bw.flush()
-    padded = data + (b"\x00" if len(data) % 2 else b"")
-    return (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(padded)) + b"WEBP"
-        + b"VP8L" + struct.pack("<I", len(data)) + padded
-    )
+    W._write_image(bw, image, level0=True, use_max=True)
+    return _riff(bw)
 
 
 class TestDistanceMapDerivation:
@@ -277,58 +236,17 @@ def _craft_predictor_stream(w, h, mode, rng):
     bw.write(1, 1)  # transform present
     bw.write(0, 2)  # predictor transform
     bw.write(7, 3)  # size_bits = 9 -> one 512x512 tile
-
-    def emit_tree(symbols, alphabet):
-        symbols = sorted(set(symbols))
-        if len(symbols) <= 2 and all(s < 256 for s in symbols):
-            lengths = [0] * alphabet
-            for s in symbols:
-                lengths[s] = 1
-            W._write_prefix_code(bw, lengths)
-            if len(symbols) == 1:
-                return {symbols[0]: (0, 0)}
-            return W._canonical_codes(lengths)
-        lengths = W._balanced_lengths(symbols, alphabet)
-        W._write_prefix_code(bw, lengths, use_max=True)
-        return W._canonical_codes(lengths)
-
-    def wc(t, s):
-        c, ln = t[s]
-        bw.write_code(c, ln)
-
-    # tile entropy image (1x1 literal, mode in green)
-    bw.write(0, 1)  # no color cache
-    tg = emit_tree([mode], 280)
-    tr = emit_tree([0], 256)
-    tb = emit_tree([0], 256)
-    ta = emit_tree([0], 256)
-    td = emit_tree([0], 40)
-    wc(tg, mode)
-    wc(tr, 0)
-    wc(tb, 0)
-    wc(ta, 0)
+    W._write_image(bw, [mode << 8])  # tile image: 1x1, mode in green
     bw.write(0, 1)  # no more transforms
     # main image: random residuals, all four channels
-    bw.write(0, 1)  # no color cache
-    bw.write(0, 1)  # no meta prefix
     res = rng.integers(0, 256, (h * w, 4))  # g, r, b, a
-    gt = emit_tree(res[:, 0].tolist(), 280)
-    rt = emit_tree(res[:, 1].tolist(), 256)
-    bt = emit_tree(res[:, 2].tolist(), 256)
-    at = emit_tree(res[:, 3].tolist(), 256)
-    dt = emit_tree([0], 40)
-    del dt  # no backrefs; the tree still had to be written
-    for g, r, b, a in res.tolist():
-        wc(gt, g)
-        wc(rt, r)
-        wc(bt, b)
-        wc(at, a)
-    data = b"\x2f" + bw.flush()
-    padded = data + (b"\x00" if len(data) % 2 else b"")
-    return (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(padded)) + b"WEBP"
-        + b"VP8L" + struct.pack("<I", len(data)) + padded
+    W._write_image(
+        bw,
+        [a << 24 | r << 16 | g << 8 | b for g, r, b, a in res.tolist()],
+        level0=True,
+        use_max=True,
     )
+    return _riff(bw)
 
 
 class TestPredictorModeConformance:

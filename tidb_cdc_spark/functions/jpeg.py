@@ -94,9 +94,10 @@ def _idct_basis():
 _IDCT_M = _idct_basis()
 
 #: The pixel budget of every decoded canvas: the JPEG coefficient
-#: grid, the GIF logical screen and the APNG and animated-WebP
-#: canvases. A decoder returns None, before allocating, for a header
-#: that declares more — a few header bytes must not buy gigabytes.
+#: grid, the GIF logical screen, the APNG and animated-WebP canvases
+#: and the still WebP image on both its pixel paths. A decoder returns
+#: None, before allocating, for a header that declares more — a few
+#: header bytes must not buy gigabytes.
 MAX_CANVAS_PIXELS = 1 << 26
 
 #: T.81 B.1.1.3 standalone markers (TEM, RST0-7, SOI, EOI): no length
@@ -105,6 +106,19 @@ _STANDALONE = bytes([0x01, *range(0xD0, 0xDA)])
 #: SOF3/5-7/9-11/13-15: lossless, hierarchical or arithmetic-coded
 _UNSUPPORTED_SOF = bytes([0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
                           0xCE, 0xCF])
+
+
+def over_white(v, a):
+    """Channel ``v`` at alpha ``a`` composited over white, rounded
+    half up in integers: a = 255 is the identity. Every pixel path
+    that carries alpha (PNG, TIFF, WebP) reduces with it."""
+    return (v * a + 255 * (255 - a) + 127) // 255
+
+
+def luma(r, g, b):
+    """BT.601 integer luma ``(299·R + 587·G + 114·B) // 1000`` — the
+    one gray reduction every pixel path shares (luma(g, g, g) = g)."""
+    return (r * 299 + g * 587 + b * 114) // 1000
 
 
 class _BitReader:
@@ -202,24 +216,22 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def _segments(p: bytes, bare: bytes = b"\xd8\xd9"):
+def _segments(p: bytes):
     """The one marker-segment walker: ``(marker, pos, end)`` for each
     marker after SOI, ``p[pos:end]`` being the whole segment (marker,
-    length field and body). Markers in ``bare`` have no length field:
-    the MJPEG table splicers pass T.81's full standalone set, while the
-    pixel decoder and the EXIF reader read a length after a stray TEM
-    or RSTn at segment level (the malformed-input sweep pins both
-    outcomes). After an SOS segment the walk resumes at the next marker
-    past the entropy-coded data. The walk ends at the end of the data,
-    at a byte that is not a marker, or at a segment whose length does
-    not fit — every caller treats the three alike."""
+    length field and body). T.81's standalone markers (``_STANDALONE``)
+    have no length field, for every caller. After an SOS segment the
+    walk resumes at the next marker past the entropy-coded data. The
+    walk ends at the end of the data, at a byte that is not a marker,
+    or at a segment whose length does not fit — every caller treats the
+    three alike."""
     if len(p) < 4 or p[:2] != b"\xff\xd8":
         return
     pos = 2
     while pos + 2 <= len(p) and p[pos] == 0xFF:
         marker = p[pos + 1]
         end = pos + 2
-        if marker not in bare:
+        if marker not in _STANDALONE:
             if pos + 4 > len(p):
                 return
             end += (p[pos + 2] << 8) | p[pos + 3]
@@ -605,7 +617,7 @@ def _reconstruct_progressive(sof, qt, coefs, geom):
         np.floor(y - 0.344136 * cb - 0.714136 * cr + 0.5), 0, 255
     ).astype(np.int64)
     b = np.clip(np.floor(y + 1.772 * cb + 0.5), 0, 255).astype(np.int64)
-    return (r * 299 + g * 587 + b * 114) // 1000
+    return luma(r, g, b)
 
 
 # ------------------------------------------------ Huffman table specs
@@ -741,7 +753,7 @@ def mjpeg_ensure_dht(payload: bytes) -> bytes:
     already carry a DHT — or anything that is not a JPEG — are
     returned unchanged; malformed marker structure is left for
     :func:`decode_jpeg_pixels` to reject."""
-    for marker, pos, _ in _segments(payload, _STANDALONE):
+    for marker, pos, _ in _segments(payload):
         if marker == 0xC4:
             return payload  # has its own DHT
         if marker == 0xDA:  # first SOS, no DHT seen → inject K.3 tables
@@ -758,7 +770,7 @@ def mjpeg_strip_dht(payload: bytes) -> bytes:
     (``encode_jpeg(..., tables="standard")``); malformed streams are
     returned unchanged."""
     out = bytearray(payload[:2])
-    for marker, pos, end in _segments(payload, _STANDALONE):
+    for marker, pos, end in _segments(payload):
         if marker == 0xDA:
             return bytes(out + payload[pos:])
         if marker != 0xC4:

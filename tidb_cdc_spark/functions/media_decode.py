@@ -43,7 +43,9 @@ from tidb_cdc_spark.functions.jpeg import (
     apply_exif_orientation,
     decode_jpeg_pixels,
     jpeg_exif_orientation,
+    luma,
     mjpeg_ensure_dht,
+    over_white,
     tiff_orientation,
 )
 from tidb_cdc_spark.functions.media_probe import (
@@ -63,12 +65,6 @@ from tidb_cdc_spark.functions.webp import (
     decode_webp_lossless_pixels,
     decode_webp_lossy_pixels,
 )
-
-
-def _luma(r, g, b):
-    """BT.601 integer luma ``(299·R + 587·G + 114·B) // 1000`` — the
-    one gray reduction every pixel path shares."""
-    return (r * 299 + g * 587 + b * 114) // 1000
 
 
 # ------------------------------------------------- real pixel path
@@ -109,7 +105,7 @@ def decode_bmp_pixels(payload: bytes):
     arr = arr.reshape(h, stride)[:, : w * 3].reshape(h, w, 3).astype(np.int64)
     if not topdown:
         arr = arr[::-1]
-    return _luma(arr[:, :, 2], arr[:, :, 1], arr[:, :, 0])
+    return luma(arr[:, :, 2], arr[:, :, 1], arr[:, :, 0])
 
 
 def decode_png_pixels(payload: bytes):
@@ -224,7 +220,7 @@ def decode_png_pixels(payload: bytes):
     elif depth < 8 and color == 0:
         samples *= 255 // ((1 << depth) - 1)  # left-bit replication
     if color == 0:
-        luma = samples[:, :, 0]  # luma(g,g,g) = g exactly
+        gray = samples[:, :, 0]  # luma(g,g,g) = g exactly
     else:
         if color == 3:
             idx = samples[:, :, 0]
@@ -233,16 +229,15 @@ def decode_png_pixels(payload: bytes):
             pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
             rgb = pal.astype(np.int64)[idx]
         elif color in (4, 6):
-            a = samples[:, :, -1:]
-            v = (samples[:, :, :-1] * a + 255 * (255 - a) + 127) // 255
+            v = over_white(samples[:, :, :-1], samples[:, :, -1:])
             rgb = np.repeat(v, 3, axis=2) if color == 4 else v
         else:  # color == 2
             rgb = samples
-        luma = _luma(rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2])
+        gray = luma(rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2])
     if exif is not None:
         # PNG eXIf: same camera-rotation normalization as JPEG APP1
-        luma = apply_exif_orientation(luma, tiff_orientation(exif))
-    return luma
+        gray = apply_exif_orientation(gray, tiff_orientation(exif))
+    return gray
 
 
 # Adam7: (x0, y0, dx, dy) per pass — PNG spec 8.2's starting offsets
@@ -401,7 +396,7 @@ def _gif_image(block):
     if int(arr.max()) * 3 + 2 >= len(pal):
         return None
     pt = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-    return arr, _luma(pt[:, 0], pt[:, 1], pt[:, 2])
+    return arr, luma(pt[:, 0], pt[:, 1], pt[:, 2])
 
 
 def decode_gif_pixels(payload: bytes):
@@ -767,7 +762,7 @@ def decode_tiff_pixels(payload: bytes):
         if int(idx.max()) >= npal:
             return None
         pal = np.asarray(cmap[: 3 * npal], dtype=np.int64).reshape(3, npal)
-        gray = _luma(pal[0][idx] >> 8, pal[1][idx] >> 8, pal[2][idx] >> 8)
+        gray = luma(pal[0][idx] >> 8, pal[1][idx] >> 8, pal[2][idx] >> 8)
     elif photo in (0, 1):
         v = sam[:, :, 0]
         if bits == 16:
@@ -781,14 +776,10 @@ def decode_tiff_pixels(payload: bytes):
         if bits == 16:
             sam = sam >> 8
         if spp == 4:
-            a = sam[:, :, 3]
-            comp_rgb = [
-                (sam[:, :, c] * a + 255 * (255 - a) + 127) // 255
-                for c in range(3)
-            ]
+            comp_rgb = [over_white(sam[:, :, c], sam[:, :, 3]) for c in range(3)]
         else:
             comp_rgb = [sam[:, :, c] for c in range(3)]
-        gray = _luma(*comp_rgb)
+        gray = luma(*comp_rgb)
     orient = one(274, 1)
     if orient is None or not 1 <= orient <= 8:
         orient = 1
@@ -864,7 +855,7 @@ def decode_pixels(payload: bytes):
                 arr = np.asarray(im.convert("RGB"), dtype=np.int64)
         except Exception:
             return None
-        gray = _luma(arr[:, :, 0], arr[:, :, 1], arr[:, :, 2])
+        gray = luma(arr[:, :, 0], arr[:, :, 1], arr[:, :, 2])
         if payload[:2] == b"\xff\xd8":
             # JPEGs outside the native envelope still carry camera
             # rotation — normalize here too (PIL does not)
@@ -920,7 +911,7 @@ def decode_avi_frames(payload: bytes):
                 .reshape(h, w, 3)
                 .astype(np.int64)[::-1]  # bottom-up rows
             )
-            frames.append(_luma(arr[:, :, 2], arr[:, :, 1], arr[:, :, 0]))
+            frames.append(luma(arr[:, :, 2], arr[:, :, 1], arr[:, :, 0]))
         elif fid[2:4] == b"dc" and p[j + 8 : j + 10] == b"\xff\xd8":
             if j + 8 + flen > len(p):
                 return None  # truncated MJPEG frame
