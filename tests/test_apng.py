@@ -14,7 +14,6 @@ import numpy as np
 import pytest
 
 from tidb_cdc_spark.functions.media_decode import (
-    _png_chunk,
     decode_apng_frames,
     decode_png_pixels,
 )
@@ -23,7 +22,7 @@ from tidb_cdc_spark.functions.media_hash import (
     video_frame_hashes,
     video_near_dup_pairs,
 )
-from tidb_cdc_spark.functions.media_probe import apng_animation_info
+from tidb_cdc_spark.functions.media_probe import _png_chunk, apng_animation_info
 from tidb_cdc_spark.functions.media_synth import (
     _encode_apng,
     _encode_png,

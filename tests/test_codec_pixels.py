@@ -76,7 +76,7 @@ class TestPngDecode:
         import struct
         import zlib
 
-        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_probe import _png_chunk
 
         def png_with_ihdr(depth, color, interlace):
             ihdr = struct.pack(">IIBBBBB", 4, 4, depth, color, 0, 0, interlace)
@@ -102,7 +102,7 @@ class TestPngDecode:
         # shrink PLTE to one entry: rebuild with a truncated palette
         import struct
 
-        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_probe import _png_chunk
 
         pos = 8
         out = b"\x89PNG\r\n\x1a\n"
@@ -221,7 +221,7 @@ class TestPngFullEnvelope:
         import struct
         import zlib
 
-        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_probe import _png_chunk
         from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)
@@ -244,7 +244,7 @@ class TestPngFullEnvelope:
         import struct
         import zlib
 
-        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_probe import _png_chunk
         from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)
@@ -430,7 +430,7 @@ class TestPngExifOrientation:
     def _with_exif(raw: bytes, orientation: int) -> bytes:
         import struct as _s
 
-        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_probe import _png_chunk
 
         tiff = (
             b"II*\x00" + _s.pack("<I", 8) + _s.pack("<H", 1)
@@ -459,7 +459,7 @@ class TestPngExifOrientation:
             assert (out == g).all(), o  # PNG is lossless: exact
 
     def test_malformed_exif_falls_back_upright(self):
-        from tidb_cdc_spark.functions.media_decode import _png_chunk
+        from tidb_cdc_spark.functions.media_probe import _png_chunk
         from tidb_cdc_spark.functions.media_synth import _encode_png_ex
 
         g = _rng().integers(0, 256, (8, 8)).astype(np.int64)

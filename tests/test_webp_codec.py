@@ -15,10 +15,17 @@ from tidb_cdc_spark.functions.media_hash import ahash64
 from tidb_cdc_spark.functions.webp import (
     _DIST_MAP,
     _inv_predictor,
-    _px_bytes,
     decode_webp_lossless_pixels,
     encode_webp_lossless,
 )
+
+
+def _px_bytes(v):
+    """The (a, r, g, b) bytes of an ARGB int as an int64 array."""
+    return np.array(
+        [(v >> 24) & 0xFF, (v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF],
+        dtype=np.int64,
+    )
 
 
 def _rng():

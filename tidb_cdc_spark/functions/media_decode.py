@@ -17,9 +17,12 @@ feed the perceptual-hash chain (``media_hash``) through the single
 ``decode_pixels`` boundary.
 
 FRAME decode covers uncompressed and MJPEG AVI
-(``decode_avi_frames``) and the three animation formats composed
-onto a white canvas (``decode_gif_frames``,
-``decode_webp_anim_frames``, ``decode_apng_frames``). SAMPLE decode
+(``decode_avi_frames``) and the three animation formats
+(``decode_gif_frames``, ``decode_webp_anim_frames``,
+``decode_apng_frames``): each only turns its blocks or chunks into
+``(x, y, w, h, pixels, dispose)`` frames, and the one compositor
+``_compose`` bounds the canvas, paints the frames onto white paper
+and disposes them. SAMPLE decode
 covers WAV 16-bit PCM, G.711 µ-law / A-law and IMA ADPCM
 (``decode_wav_samples``).
 
@@ -27,7 +30,10 @@ Every decoder returns None for bytes outside its envelope — no
 fabricated pixels or samples, and no exception: a raise inside
 ``mapInPandas`` would fail the whole Spark job. The container walks
 come from ``media_probe``, so a decoder and its header probe read a
-stream the same way.
+stream the same way, and the sample paths share one unpacker
+(``_unpack_samples``: PNG scanlines and TIFF strips), one palette
+reduction (``_palette_gray``: PNG and GIF) and one padded-BGR row
+reader (``_bgr_luma``: BMP and AVI).
 """
 
 from __future__ import annotations
@@ -49,16 +55,25 @@ from tidb_cdc_spark.functions.jpeg import (
     tiff_orientation,
 )
 from tidb_cdc_spark.functions.media_probe import (
+    FCTL,
     GIF_MAGIC,
     PNG_MAGIC,
+    _chunk,
     _PIL_Image,
+    _png,
+    _riff,
     _tiff_ifd0,
     _tiff_values,
+    anmf_fields,
     avi_list,
     gif_blocks,
+    is_riff,
     parse_avi_header,
     png_chunks,
     riff_chunks,
+    riff_walk,
+    vp8x_canvas,
+    wav_chunks,
     webp_anim_chunks,
 )
 from tidb_cdc_spark.functions.webp import (
@@ -96,16 +111,28 @@ def decode_bmp_pixels(payload: bytes):
     comp = struct.unpack_from("<I", p, 30)[0]
     if bpp != 24 or comp != 0 or w <= 0 or h == 0:
         return None
-    topdown = h < 0
-    h = abs(h)
-    stride = (w * 3 + 3) & ~3
+    return _bgr_luma(p, off, w, abs(h), bottom_up=h > 0)
+
+
+def _bgr_stride(w: int) -> int:
+    """Bytes per stored row of ``w`` BGR pixels: 3·w padded to 4."""
+    return (w * 3 + 3) & ~3
+
+
+def _bgr_luma(p: bytes, off: int, w: int, h: int, bottom_up: bool):
+    """BT.601 luma of the ``h`` stored rows of ``w`` BGR pixels at
+    ``p[off:]``, each ``_bgr_stride(w)`` bytes — the layout of a BMP
+    pixel array and of an AVI ``00db`` frame — with the first stored
+    row at the bottom when ``bottom_up``, or None when the rows run
+    past the end."""
+    stride = _bgr_stride(w)
     if off + stride * h > len(p):
-        return None  # truncated pixel array
-    arr = np.frombuffer(p, dtype=np.uint8, count=stride * h, offset=off)
-    arr = arr.reshape(h, stride)[:, : w * 3].reshape(h, w, 3).astype(np.int64)
-    if not topdown:
-        arr = arr[::-1]
-    return luma(arr[:, :, 2], arr[:, :, 1], arr[:, :, 0])
+        return None  # truncated pixel rows
+    rows = np.frombuffer(p, dtype=np.uint8, count=stride * h, offset=off)
+    bgr = rows.reshape(h, stride)[:, : w * 3].reshape(h, w, 3).astype(np.int64)
+    if bottom_up:
+        bgr = bgr[::-1]
+    return luma(bgr[:, :, 2], bgr[:, :, 1], bgr[:, :, 0])
 
 
 def decode_png_pixels(payload: bytes):
@@ -186,15 +213,11 @@ def decode_png_pixels(payload: bytes):
         return None
     if comp != 0 or filt != 0 or interlace not in (0, 1):
         return None
-    if w <= 0 or h <= 0:
+    if w <= 0 or h <= 0 or w * h > MAX_CANVAS_PIXELS:
         return None
     if color == 3 and plte is None:
         return None
     ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error:
-        return None
     bits_pp = depth * ch
     bpp = max(1, bits_pp // 8)  # filter unit: whole bytes, min 1
     passes = []  # (x0, y0, dx, dy, pw, ph, rowbytes); empty passes
@@ -203,8 +226,9 @@ def decode_png_pixels(payload: bytes):
         ph = (h - y0 + dy - 1) // dy
         if pw > 0 and ph > 0:
             passes.append((x0, y0, dx, dy, pw, ph, (pw * bits_pp + 7) // 8))
-    if sum(ph * (1 + rb) for *_, ph, rb in passes) != len(raw):
-        return None  # truncated pixel stream or trailing garbage
+    raw = _inflate(b"".join(idat), sum(ph * (1 + rb) for *_, ph, rb in passes))
+    if raw is None:
+        return None  # corrupt, truncated or over-long pixel stream
     samples = np.zeros((h, w, ch), dtype=np.int64)
     pos = 0
     for x0, y0, dx, dy, pw, ph, rowbytes in passes:
@@ -213,27 +237,22 @@ def decode_png_pixels(payload: bytes):
         if rows is None:
             return None  # invalid filter byte
         pos += need
-        samples[y0::dy, x0::dx] = _png_samples(rows, pw, depth, ch)
+        samples[y0::dy, x0::dx] = _unpack_samples(rows, pw, depth, ch)
     # reduce to the 8-bit domain
     if depth == 16:
         samples >>= 8  # high byte: v·257 expansions reduce to v
     elif depth < 8 and color == 0:
         samples *= 255 // ((1 << depth) - 1)  # left-bit replication
-    if color == 0:
-        gray = samples[:, :, 0]  # luma(g,g,g) = g exactly
+    if color in (4, 6):
+        samples = over_white(samples[:, :, :-1], samples[:, :, -1:])
+    if color == 3:
+        gray = _palette_gray(samples[:, :, 0], plte)
+        if gray is None:
+            return None  # index past the palette
+    elif color in (2, 6):
+        gray = luma(samples[:, :, 0], samples[:, :, 1], samples[:, :, 2])
     else:
-        if color == 3:
-            idx = samples[:, :, 0]
-            if int(idx.max()) * 3 + 2 >= len(plte):
-                return None  # index past the palette
-            pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-            rgb = pal.astype(np.int64)[idx]
-        elif color in (4, 6):
-            v = over_white(samples[:, :, :-1], samples[:, :, -1:])
-            rgb = np.repeat(v, 3, axis=2) if color == 4 else v
-        else:  # color == 2
-            rgb = samples
-        gray = luma(rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2])
+        gray = samples[:, :, 0]  # luma(g, g, g) = g exactly
     if exif is not None:
         # PNG eXIf: same camera-rotation normalization as JPEG APP1
         gray = apply_exif_orientation(gray, tiff_orientation(exif))
@@ -293,16 +312,31 @@ def _png_unfilter(raw: bytes, h: int, rowbytes: int, bpp: int):
     return out
 
 
-def _png_samples(rows, w: int, depth: int, ch: int):
-    """Unpack one (sub-)image's unfiltered scanline bytes into the
-    (h, w, ch) int64 sample array: big-endian pairs at depth 16,
-    straight bytes at 8, MSB-first bit fields below 8 (sub-byte
-    depths are single-channel by spec; row padding bits are
-    discarded by the trim to ``w``)."""
+def _inflate(data: bytes, size: int):
+    """The zlib stream ``data`` inflated, or None unless it ends —
+    checksum included — after exactly ``size`` bytes. At most
+    ``size + 1`` bytes are ever produced, so a few bytes of stream
+    cannot expand into a large buffer."""
+    z = zlib.decompressobj()
+    try:
+        out = z.decompress(data, size + 1)
+    except zlib.error:
+        return None
+    return out if z.eof and len(out) == size else None
+
+
+def _unpack_samples(rows, w: int, depth: int, ch: int, order: str = ">"):
+    """Unpack one (sub-)image's scanline bytes (PNG after unfiltering,
+    TIFF strips) into the (h, w, ch) int64 sample array: byte pairs in
+    ``order`` (``>`` big-endian, ``<`` little) at depth 16, straight
+    bytes at 8, MSB-first bit fields below 8 (sub-byte depths are
+    single-channel; row padding bits are discarded by the trim to
+    ``w``)."""
     h = rows.shape[0]
     if depth == 16:
         pairs = rows[:, : w * ch * 2].reshape(h, w, ch, 2).astype(np.int64)
-        return (pairs[..., 0] << 8) | pairs[..., 1]
+        hi, lo = (0, 1) if order == ">" else (1, 0)
+        return (pairs[..., hi] << 8) | pairs[..., lo]
     if depth == 8:
         return rows[:, : w * ch].reshape(h, w, ch).astype(np.int64)
     per = 8 // depth
@@ -312,27 +346,30 @@ def _png_samples(rows, w: int, depth: int, ch: int):
     return expanded.reshape(h, -1)[:, :w].reshape(h, w, 1)
 
 
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    """One length + type + data + CRC chunk."""
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
+def _palette_gray(idx, table: bytes):
+    """Luma of the palette indices ``idx`` through a raw RGB colour
+    table (PNG ``PLTE``, GIF colour tables), or None for an index past
+    the table."""
+    if int(idx.max()) * 3 + 2 >= len(table):
+        return None
+    rgb = np.frombuffer(table, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
+    return luma(rgb[:, 0], rgb[:, 1], rgb[:, 2])[idx]
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int):
+def _gif_lzw_decode(data: bytes, min_code_size: int,
+                    limit: int = MAX_CANVAS_PIXELS):
     """GIF-flavor LZW decode (variable code width, LSB-first bit
     packing, clear/EOI codes, 12-bit dictionary cap). Returns the
-    palette-index list or None on a malformed stream."""
+    palette-index list or None on a malformed stream. Codes stop
+    expanding once the list holds ``limit`` indices; every later code
+    is still checked, which needs only the table's size."""
     clear = 1 << min_code_size
     eoi = clear + 1
     base = [(i,) for i in range(clear)] + [None, None]
     table = list(base)
     code_size = min_code_size + 1
     out = []
-    prev_entry = None
+    prev = None
     acc = 0
     nbits = 0
     pos = 0
@@ -349,28 +386,23 @@ def _gif_lzw_decode(data: bytes, min_code_size: int):
         if code == clear:
             table = list(base)
             code_size = min_code_size + 1
-            prev_entry = None
+            prev = None
             continue
         if code == eoi:
             return out
-        if prev_entry is None:
-            if code >= len(table) or table[code] is None:
-                return None
-            entry = table[code]
-        elif code < len(table) and table[code] is not None:
-            entry = table[code]
-            if len(table) < 4096:
-                table.append(prev_entry + (entry[0],))
-        elif code == len(table) and len(table) < 4096:
-            entry = prev_entry + (prev_entry[0],)
-            table.append(entry)
+        grow = prev is not None and len(table) < 4096
+        if code >= len(table) + grow:
+            return None  # neither in the table nor the next entry
+        if len(out) >= limit:
+            entry = ()  # past the limit: count entries, build none
         else:
-            return None
+            entry = table[code] if code < len(table) else prev + prev[:1]
+        if grow:
+            table.append(prev + entry[:1])
         out.extend(entry)
         if len(table) == (1 << code_size) and code_size < 12:
             code_size += 1
-        prev_entry = entry
-    return out
+        prev = entry
 
 
 def gif_interlace_rows(h: int) -> list:
@@ -381,11 +413,13 @@ def gif_interlace_rows(h: int) -> list:
 
 
 def _gif_image(block):
-    """(palette indices, palette luma) of one ``gif_blocks`` record:
+    """(palette indices, luma) of one ``gif_blocks`` record:
     LZW-decoded, de-interlaced, every index inside the palette — or
-    None for a malformed image."""
+    None for a malformed or oversized image."""
     _gce, _lx, _ty, iw, ih, iflags, pal, min_code, data = block
-    idx = _gif_lzw_decode(b"".join(data), min_code)
+    if iw * ih > MAX_CANVAS_PIXELS:
+        return None
+    idx = _gif_lzw_decode(b"".join(data), min_code, iw * ih)
     if idx is None or len(idx) < iw * ih:
         return None
     arr = np.array(idx[: iw * ih], dtype=np.int64).reshape(ih, iw)
@@ -393,10 +427,8 @@ def _gif_image(block):
         de = np.empty_like(arr)
         de[gif_interlace_rows(ih)] = arr
         arr = de
-    if int(arr.max()) * 3 + 2 >= len(pal):
-        return None
-    pt = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-    return arr, luma(pt[:, 0], pt[:, 1], pt[:, 2])
+    gray = _palette_gray(arr, pal)
+    return None if gray is None else (arr, gray)
 
 
 def decode_gif_pixels(payload: bytes):
@@ -409,10 +441,42 @@ def decode_gif_pixels(payload: bytes):
     the decode is ∝ pixel bytes inside the Arrow pass."""
     first = next(gif_blocks(payload), None)
     img = None if first is None else _gif_image(first)
-    if img is None:
+    return None if img is None else img[1]
+
+
+def _compose(width: int, height: int, frames):
+    """The one animation compositor: the luma snapshots of a
+    ``width``×``height`` WHITE canvas after each of ``frames``, or
+    None for a canvas over :data:`MAX_CANVAS_PIXELS` and for a frame
+    that is None (malformed), lies outside the canvas, or whose pixels
+    do not decode to its size — each fails the whole animation — or
+    for no frame at all. A frame is ``(x, y, w, h, pixels, dispose)``:
+    ``pixels()`` decodes its ``h``×``w`` luma (None when it cannot;
+    negative entries are transparent and paint nothing), called only
+    once the rect is known to fit. After the snapshot ``dispose`` 1
+    restores the rect to the white paper, 2 to what it covered
+    before, and 0 keeps it. ``frames`` is consumed lazily, so nothing
+    is decoded for a refused canvas."""
+    if width <= 0 or height <= 0 or width * height > MAX_CANVAS_PIXELS:
         return None
-    arr, lut = img
-    return lut[arr]
+    canvas = np.full((height, width), 255, dtype=np.int64)  # white paper
+    out = []
+    for frame in frames:
+        if frame is None:
+            return None
+        x, y, w, h, pixels, dispose = frame
+        gray = pixels() if x + w <= width and y + h <= height else None
+        if gray is None or gray.shape != (h, w):
+            return None
+        region = canvas[y : y + h, x : x + w]
+        saved = region.copy() if dispose == 2 else None
+        np.copyto(region, gray, where=gray >= 0)
+        out.append(canvas.copy())
+        if dispose == 1:
+            region[:] = 255
+        elif dispose == 2:
+            region[:] = saved
+    return out or None
 
 
 def decode_gif_frames(payload: bytes):
@@ -440,35 +504,30 @@ def decode_gif_frames(payload: bytes):
     p = payload
     if len(p) < 13 or p[:6] not in GIF_MAGIC:
         return None
-    sw, sh = struct.unpack_from("<HH", p, 6)
-    if sw <= 0 or sh <= 0 or sw * sh > MAX_CANVAS_PIXELS:
+    screen = struct.unpack_from("<HH", p, 6)
+    return _compose(*screen, map(_gif_frame, gif_blocks(p)))
+
+
+def _gif_frame(block):
+    """One ``gif_blocks`` record as a ``_compose`` frame: pixels with
+    the GCE's transparent index are transparent, disposal 2 restores
+    the paper and 3 the previous contents (0, 1 and the reserved 4-7
+    keep the frame) — or None for a malformed block."""
+    if block is None:
         return None
-    canvas = np.full((sh, sw), 255, dtype=np.int64)  # white paper
-    frames = []
-    for block in gif_blocks(p):
-        if block is None:
-            return None
-        gce, lx, ty, iw, ih = block[:5]
-        if lx + iw > sw or ty + ih > sh:
-            return None  # frame outside the logical screen
+    gce, lx, ty, iw, ih = block[:5]
+
+    def pixels():
         img = _gif_image(block)
         if img is None:
             return None
-        arr, lut = img
-        disposal = 0 if gce is None else (gce[0] >> 2) & 0x7
-        transp = gce[3] if gce is not None and gce[0] & 1 else None
-        region = canvas[ty : ty + ih, lx : lx + iw]
-        saved = region.copy() if disposal == 3 else None
-        if transp is None:
-            region[:] = lut[arr]
-        else:
-            np.copyto(region, lut[arr], where=arr != transp)
-        frames.append(canvas.copy())
-        if disposal == 2:
-            region[:] = 255  # restore region to the paper color
-        elif disposal == 3:
-            region[:] = saved
-    return frames or None
+        arr, gray = img
+        if gce is not None and gce[0] & 1:
+            gray = np.where(arr == gce[3], -1, gray)
+        return gray
+
+    disposal = 0 if gce is None else gce[0] >> 2 & 0x7
+    return lx, ty, iw, ih, pixels, {2: 1, 3: 2}.get(disposal, 0)
 
 
 def decode_webp_anim_frames(payload: bytes):
@@ -486,67 +545,42 @@ def decode_webp_anim_frames(payload: bytes):
     an alpha-carrying frame with ALPHA-BLEND semantics returns None
     (blending needs the RGBA planes the luma reduction has already
     collapsed — fail closed, never wrong pixels)."""
-    p = payload
-    chunks = webp_anim_chunks(p)
+    chunks = webp_anim_chunks(payload)
     if chunks is None:
         return None
-    cw = 1 + int.from_bytes(p[24:27], "little")
-    ch = 1 + int.from_bytes(p[27:30], "little")
-    if cw * ch > MAX_CANVAS_PIXELS:
+    anmf = (_webp_frame(body) for tag, body in chunks if tag == b"ANMF")
+    return _compose(*vp8x_canvas(payload), anmf)
+
+
+def _webp_frame(body: bytes):
+    """One ANMF chunk body as a ``_compose`` frame — its optional
+    ALPH chunk, then one VP8/VP8L stream decoded as a still WebP —
+    or None outside the envelope (``decode_webp_anim_frames``)."""
+    anmf = anmf_fields(body)
+    sub = None if anmf is None else riff_chunks(body, 16)
+    if sub is None:
         return None
-    canvas = np.full((ch, cw), 255, dtype=np.int64)  # white paper
-    frames = []
-    for tag, body in chunks:
-        if tag != b"ANMF":
-            continue
-        if len(body) < 16:
-            return None
-        fx = 2 * int.from_bytes(body[0:3], "little")
-        fy = 2 * int.from_bytes(body[3:6], "little")
-        fw = 1 + int.from_bytes(body[6:9], "little")
-        fh = 1 + int.from_bytes(body[9:12], "little")
-        flags = body[15]
-        if fx + fw > cw or fy + fh > ch:
-            return None
-        # frame data: optional ALPH chunk, then one VP8/VP8L
-        sub = riff_chunks(body, 16)
-        if sub is None:
-            return None
-        has_alpha = False
-        stream = None
-        for ftag, fdata in sub:
-            if ftag == b"ALPH":
-                has_alpha = True
-            elif ftag in (b"VP8 ", b"VP8L"):
-                stream = ftag + struct.pack("<I", len(fdata)) + fdata
-                if ftag == b"VP8L" and len(fdata) >= 5:
-                    # VP8L header: signature byte, then 14+14 dim
-                    # bits; the ALPHA HINT is the next bit (bit 4 of
-                    # the 4th bitstream byte)
-                    has_alpha = has_alpha or bool(fdata[4] & 0x10)
-                break
-        if stream is None:
-            return None
-        no_blend = bool(flags & 0x02)
-        if has_alpha and not no_blend:
-            return None  # alpha blending: fail closed (docstring)
-        wrapped = (
-            b"RIFF"
-            + struct.pack("<I", 4 + len(stream) + (len(stream) & 1))
-            + b"WEBP"
-            + stream
-            + (b"\x00" if len(stream) & 1 else b"")
-        )
-        luma = decode_webp_lossless_pixels(wrapped)
-        if luma is None:
-            luma = decode_webp_lossy_pixels(wrapped)
-        if luma is None or luma.shape != (fh, fw):
-            return None
-        canvas[fy : fy + fh, fx : fx + fw] = luma
-        frames.append(canvas.copy())
-        if flags & 0x01:  # dispose to background = white paper
-            canvas[fy : fy + fh, fx : fx + fw] = 255
-    return frames or None
+    x, y, w, h, _, flags = anmf
+    has_alpha = False
+    for tag, data in sub:
+        if tag in (b"VP8 ", b"VP8L"):
+            break
+        has_alpha |= tag == b"ALPH"
+    else:
+        return None  # no frame bitstream
+    if tag == b"VP8L" and len(data) >= 5:
+        # VP8L header: signature byte, then 14+14 dim bits; the ALPHA
+        # HINT is the next bit (bit 4 of the 4th bitstream byte)
+        has_alpha |= bool(data[4] & 0x10)
+    if has_alpha and not flags & 0x02:
+        return None  # alpha blending: fail closed (docstring)
+    still = _riff(b"WEBP", _chunk(tag, data, pad=True))
+
+    def pixels():
+        gray = decode_webp_lossless_pixels(still)
+        return decode_webp_lossy_pixels(still) if gray is None else gray
+
+    return x, y, w, h, pixels, flags & 0x01  # bit 0: dispose to paper
 
 
 def decode_apng_frames(payload: bytes):
@@ -598,9 +632,9 @@ def decode_apng_frames(payload: bytes):
                 return None  # must precede IDAT
             actl = struct.unpack_from(">II", data)
         elif ctype == b"fcTL":
-            if clen != 26:
+            if clen != FCTL.size:
                 return None
-            fctl = struct.unpack(">IIIIIHHBB", data)
+            fctl = FCTL.unpack(data)
             if fctl[0] != next_seq:
                 return None  # sequence gap
             next_seq += 1
@@ -625,45 +659,25 @@ def decode_apng_frames(payload: bytes):
         return None
     W, H = struct.unpack_from(">II", ihdr_raw)
     color = ihdr_raw[9]
-    if W * H > MAX_CANVAS_PIXELS:
-        return None
-    canvas = np.full((H, W), 255, dtype=np.int64)  # white paper
-    frames = []
-    for i, (fctl, parts, is_idat) in enumerate(frames_meta):
+    pal = [] if plte is None else [(b"PLTE", plte)]
+
+    def frame(i, fctl, parts, is_idat):
         _, fw, fh, fx, fy, _, _, dispose, blend = fctl
         if not parts:
             return None  # fcTL without frame data
-        if fw <= 0 or fh <= 0 or fx + fw > W or fy + fh > H:
-            return None
         if is_idat and (fw, fh, fx, fy) != (W, H, 0, 0):
             return None  # spec: the IDAT frame covers the canvas
         if blend == 1 and (color in (4, 6) or trns):
             return None  # true alpha blending: fail closed
         if blend > 1 or dispose > 2:
             return None
-        mini = (
-            PNG_MAGIC
-            + _png_chunk(
-                b"IHDR",
-                struct.pack(">II", fw, fh) + ihdr_raw[8:],
-            )
-            + (_png_chunk(b"PLTE", plte) if plte is not None else b"")
-            + _png_chunk(b"IDAT", b"".join(parts))
-            + _png_chunk(b"IEND", b"")
-        )
-        luma = decode_png_pixels(mini)
-        if luma is None or luma.shape != (fh, fw):
-            return None
-        if dispose == 2 and i == 0:
-            dispose = 1  # spec: first-frame dispose-previous → bg
-        prev = canvas.copy() if dispose == 2 else None
-        canvas[fy : fy + fh, fx : fx + fw] = luma
-        frames.append(canvas.copy())
-        if dispose == 1:
-            canvas[fy : fy + fh, fx : fx + fw] = 255
-        elif dispose == 2:
-            canvas = prev
-    return frames or None
+        ihdr = struct.pack(">II", fw, fh) + ihdr_raw[8:]
+        still = _png([(b"IHDR", ihdr), *pal, (b"IDAT", b"".join(parts))])
+        # spec: a first frame's dispose-to-previous means background
+        dispose = 1 if dispose == 2 and i == 0 else dispose
+        return fx, fy, fw, fh, lambda: decode_png_pixels(still), dispose
+
+    return _compose(W, H, (frame(i, *m) for i, m in enumerate(frames_meta)))
 
 
 def decode_tiff_pixels(payload: bytes):
@@ -741,18 +755,7 @@ def decode_tiff_pixels(payload: bytes):
     rows = np.frombuffer(
         bytes(data[: row_bytes * h]), dtype=np.uint8
     ).reshape(h, row_bytes)
-    if bits == 1:
-        expanded = np.unpackbits(rows, axis=1)[:, :w].astype(np.int64)
-        sam = expanded.reshape(h, w, 1)
-        maxv = 1
-    elif bits == 8:
-        sam = rows[:, : w * spp].reshape(h, w, spp).astype(np.int64)
-        maxv = 255
-    else:  # 16: high-byte reduction (the PNG rule)
-        pairs = rows[:, : w * spp * 2].reshape(h, w, spp, 2).astype(np.int64)
-        hi, lo = (0, 1) if end == ">" else (1, 0)
-        sam = (pairs[..., hi] << 8) | pairs[..., lo]
-        maxv = 65535
+    sam = _unpack_samples(rows, w, bits, spp, end)
     if photo == 3:
         cmap = vals(320)
         npal = 1 << bits
@@ -763,23 +766,15 @@ def decode_tiff_pixels(payload: bytes):
             return None
         pal = np.asarray(cmap[: 3 * npal], dtype=np.int64).reshape(3, npal)
         gray = luma(pal[0][idx] >> 8, pal[1][idx] >> 8, pal[2][idx] >> 8)
-    elif photo in (0, 1):
-        v = sam[:, :, 0]
-        if bits == 16:
-            v = v >> 8
-            maxv = 255
-        elif bits == 1:
-            v = v * 255
-            maxv = 255
-        gray = (maxv - v) if photo == 0 else v
     else:
-        if bits == 16:
-            sam = sam >> 8
+        # the 8-bit domain: 16-bit by the high byte (the PNG rule)
+        sam = sam >> 8 if bits == 16 else sam * 255 if bits == 1 else sam
         if spp == 4:
-            comp_rgb = [over_white(sam[:, :, c], sam[:, :, 3]) for c in range(3)]
+            sam = over_white(sam[:, :, :3], sam[:, :, 3:])
+        if photo == 2:
+            gray = luma(sam[:, :, 0], sam[:, :, 1], sam[:, :, 2])
         else:
-            comp_rgb = [sam[:, :, c] for c in range(3)]
-        gray = luma(*comp_rgb)
+            gray = 255 - sam[:, :, 0] if photo == 0 else sam[:, :, 0]
     orient = one(274, 1)
     if orient is None or not 1 <= orient <= 8:
         orient = 1
@@ -833,11 +828,7 @@ def decode_pixels(payload: bytes):
             return apply_exif_orientation(
                 gray, jpeg_exif_orientation(payload)
             )
-    if (
-        len(payload) >= 16
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WEBP"
-    ):
+    if len(payload) >= 16 and is_riff(payload, b"WEBP"):
         gray = decode_webp_lossless_pixels(payload)
         if gray is not None:
             return gray
@@ -895,32 +886,25 @@ def decode_avi_frames(payload: bytes):
     _, w, h, _ = hdr
     if w <= 0 or h <= 0:
         return None
-    stride = (w * 3 + 3) & ~3
     p = payload
     frames = []
-    j, end = avi_list(p, b"movi") or (0, 0)
-    while j + 8 <= end:
-        fid = p[j : j + 4]
-        flen = int.from_bytes(p[j + 4 : j + 8], "little")
-        if fid[2:4] == b"db":
-            if flen != stride * h or j + 8 + flen > len(p):
-                return None  # truncated / mis-sized frame
-            arr = np.frombuffer(p, dtype=np.uint8, count=flen, offset=j + 8)
-            arr = (
-                arr.reshape(h, stride)[:, : w * 3]
-                .reshape(h, w, 3)
-                .astype(np.int64)[::-1]  # bottom-up rows
-            )
-            frames.append(luma(arr[:, :, 2], arr[:, :, 1], arr[:, :, 0]))
-        elif fid[2:4] == b"dc" and p[j + 8 : j + 10] == b"\xff\xd8":
-            if j + 8 + flen > len(p):
+    for tag, at, flen in riff_walk(p, *(avi_list(p, b"movi") or (0, 0))):
+        if tag[2:4] == b"db":
+            if flen != _bgr_stride(w) * h:
+                return None  # mis-sized frame
+            gray = _bgr_luma(p, at, w, h, bottom_up=True)
+            if gray is None:
+                return None  # truncated frame
+        elif tag[2:4] == b"dc" and p[at : at + 2] == b"\xff\xd8":
+            if at + flen > len(p):
                 return None  # truncated MJPEG frame
-            gray = decode_jpeg_pixels(mjpeg_ensure_dht(p[j + 8 : j + 8 + flen]))
+            gray = decode_jpeg_pixels(mjpeg_ensure_dht(p[at : at + flen]))
             if gray is None or gray.shape != (h, w):
                 return None  # undecodable / dims disagree
-            frames.append(gray)
-        j += 8 + flen + (flen & 1)
-    return frames if frames else None
+        else:
+            continue
+        frames.append(gray)
+    return frames or None
 
 
 # ------------------------------------------------ real sample path
@@ -1078,20 +1062,15 @@ def decode_wav_samples(payload: bytes):
     (other compressed audio keeps its header-only probe). Truncated
     data chunks are rejected — no fabricated samples."""
     p = payload
-    if len(p) < 12 or p[:4] != b"RIFF" or p[8:12] != b"WAVE":
-        return None
-    i, fmt, fmt_ext, data = 12, None, b"", None
-    while i + 8 <= len(p):
-        cid = p[i : i + 4]
-        clen = int.from_bytes(p[i + 4 : i + 8], "little")
-        if cid == b"fmt " and i + 8 + 16 <= len(p):
-            fmt = struct.unpack_from("<HHIIHH", p, i + 8)
-            fmt_ext = p[i + 8 + 16 : min(i + 8 + clen, len(p))]
-        elif cid == b"data":
-            if i + 8 + clen > len(p):
-                return None  # truncated sample data
-            data = p[i + 8 : i + 8 + clen]
-        i += 8 + clen + (clen & 1)  # RIFF chunks are word-aligned
+    fmt, fmt_ext, data = None, b"", None
+    for tag, at, clen in wav_chunks(p):
+        if tag == b"fmt ":
+            fmt = struct.unpack_from("<HHIIHH", p, at)
+            fmt_ext = p[at + 16 : at + clen]
+        elif at + clen > len(p):
+            return None  # truncated sample data
+        else:
+            data = p[at : at + clen]
     if fmt is None or data is None:
         return None
     audio_format, channels, _rate, _brate, _align, bits = fmt

@@ -12,13 +12,29 @@ animation probes (``gif_animation_info``, ``webp_animation_info``,
 ``apng_animation_info``) sum frame durations with frame data
 length-skipped. ``probe_media`` runs them over a media frame.
 
-The stream walkers the decoders share live here too, so the probes
-and ``media_decode`` read each container one way: ``png_chunks``,
-``gif_blocks``, ``riff_chunks`` / ``webp_anim_chunks``, ``avi_list``
-and the TIFF IFD reader.
-Remaining codec territory: PIL is used automatically when importable,
-and ``_decode_image_stub`` (deterministic fake, clearly marked) covers
-ONLY bytes no real path recognizes.
+The container layer lives here too: one reader and one writer per
+framing, shared by the probes, the decoders in ``media_decode`` and
+the fixture writers in ``media_synth``, so every container is read
+and written one way:
+
+- PNG: ``png_chunks`` reads the length + type + data + CRC chunks,
+  ``_png_chunk`` / ``_png`` write them; ``FCTL`` is the APNG frame
+  control record;
+- RIFF (WAV, AVI, WebP): ``riff_walk`` is the one chunk walk (tag,
+  little-endian length, even padding) under ``riff_chunks``,
+  ``wav_chunks``, ``avi_list`` and ``webp_anim_chunks``; ``_chunk``
+  / ``_riff`` write chunks and streams; ``vp8x_canvas`` and
+  ``anmf_fields`` read the animated-WebP canvas and frame headers;
+- GIF: ``gif_blocks`` walks the blocks;
+- TIFF: ``_tiff_ifd0`` / ``_tiff_values`` read the first IFD.
+
+The frames these readers yield are composed onto one canvas by
+``media_decode._compose``, the compositor every animation decoder
+shares.
+
+Remaining codec territory: PIL is used automatically when
+importable, and ``_decode_image_stub`` (deterministic fake, clearly
+marked) covers ONLY bytes no real path recognizes.
 
 Module map of the media family (imports run one way, down this
 list): ``media_probe`` (schema, probes, walkers) → ``media_decode``
@@ -149,7 +165,7 @@ def parse_image_header(payload: bytes) -> "tuple[str, int, int] | None":
         if not w or not h:
             return None
         return ("image/tiff", w[0], h[0])
-    if len(p) >= 30 and p[:4] == b"RIFF" and p[8:12] == b"WEBP":
+    if len(p) >= 30 and is_riff(p, b"WEBP"):
         tag = p[12:16]
         if tag == b"VP8L" and p[20] == 0x2F:
             # LSB-first bitstream: 14 bits width-1, 14 bits height-1
@@ -163,10 +179,7 @@ def parse_image_header(payload: bytes) -> "tuple[str, int, int] | None":
             h = int.from_bytes(p[28:30], "little") & 0x3FFF
             return ("image/webp", w, h)
         if tag == b"VP8X":
-            # extended container: 24-bit canvas dims minus one
-            w = 1 + int.from_bytes(p[24:27], "little")
-            h = 1 + int.from_bytes(p[27:30], "little")
-            return ("image/webp", w, h)
+            return ("image/webp", *vp8x_canvas(p))
         return None
     if len(p) >= 4 and p[:2] == b"\xff\xd8":
         i = 2
@@ -266,18 +279,15 @@ def parse_media_header(
     Returns ``(mime, duration_ms)`` or None for unrecognized bytes.
     Full sample/frame decode stays out of scope (codec territory)."""
     p = payload
-    if len(p) >= 12 and p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        i, byte_rate, data_len = 12, None, None
-        while i + 8 <= len(p):
-            cid = p[i : i + 4]
-            clen = int.from_bytes(p[i + 4 : i + 8], "little")
-            if cid == b"fmt " and i + 16 + 8 <= len(p):
-                byte_rate = int.from_bytes(p[i + 16 : i + 20], "little")
-            elif cid == b"data":
-                data_len = clen
+    if is_riff(p, b"WAVE"):
+        byte_rate, data_len = None, None
+        for tag, at, clen in wav_chunks(p):
+            if tag == b"data":
+                data_len = clen  # as declared: the samples are not read
+            else:
+                byte_rate = int.from_bytes(p[at + 8 : at + 12], "little")
             if byte_rate and data_len is not None:
                 return ("audio/wav", data_len * 1000 // max(byte_rate, 1))
-            i += 8 + clen + (clen & 1)  # RIFF chunks are word-aligned
         return None
     if len(p) >= 12 and p[4:8] == b"ftyp":
         i = 0
@@ -379,22 +389,14 @@ def parse_avi_header(payload: bytes):
     bytes. Bounded LIST walk, truncation rejected — the probe field
     recovery for video containers without ffmpeg."""
     p = payload
-    span = avi_list(p, b"hdrl")
-    if span is None:
-        return None
-    j, end = span
-    while j + 8 <= end:
-        sid = p[j : j + 4]
-        slen = int.from_bytes(p[j + 4 : j + 8], "little")
-        if sid == b"avih":
-            if j + 8 + 40 > len(p):
+    for tag, at, _ in riff_walk(p, *(avi_list(p, b"hdrl") or (0, 0))):
+        if tag == b"avih":
+            if at + 40 > len(p):
                 return None  # truncated main header
-            us_per_frame = int.from_bytes(p[j + 8 : j + 12], "little")
-            total_frames = int.from_bytes(p[j + 24 : j + 28], "little")
-            w = int.from_bytes(p[j + 40 : j + 44], "little")
-            h = int.from_bytes(p[j + 44 : j + 48], "little")
+            us_per_frame, total_frames, w, h = struct.unpack_from(
+                "<I12xI12xII", p, at
+            )
             return ("video/avi", w, h, us_per_frame * total_frames // 1000)
-        j += 8 + slen + (slen & 1)
     return None
 
 
@@ -402,14 +404,10 @@ def avi_list(p: bytes, kind: bytes):
     """``(start, end)`` of the sub-chunks of an AVI stream's first
     top-level ``LIST`` of type ``kind`` (``hdrl``, ``movi``), clamped
     to the bytes present, or None for non-AVI bytes or no such list."""
-    if len(p) < 12 or p[:4] != b"RIFF" or p[8:12] != b"AVI ":
-        return None
-    i = 12
-    while i + 8 <= len(p):
-        clen = int.from_bytes(p[i + 4 : i + 8], "little")
-        if p[i : i + 4] == b"LIST" and p[i + 8 : i + 12] == kind:
-            return i + 12, min(i + 8 + clen, len(p))
-        i += 8 + clen + (clen & 1)
+    if is_riff(p, b"AVI "):
+        for tag, at, clen in riff_walk(p, 12):
+            if tag == b"LIST" and p[at : at + 4] == kind:
+                return at + 4, min(at + clen, len(p))
     return None
 
 
@@ -561,8 +559,9 @@ def probe_media(media: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------ container walkers
-# One reader per container structure, shared by the header probes
-# below and the decoders in ``media_decode``.
+# One reader and one writer per container framing, shared by the
+# header probes below, the decoders in ``media_decode`` and the
+# fixture writers in ``media_synth``.
 
 
 def png_chunks(p: bytes, check_crc: bool = True):
@@ -591,6 +590,29 @@ def png_chunks(p: bytes, check_crc: bool = True):
         out.append((ctype, data))
         pos += 12 + clen
     return out
+
+
+def _png_chunk(ctype: bytes, data: bytes) -> bytes:
+    """One length + type + data + CRC chunk."""
+    return (
+        struct.pack(">I", len(data))
+        + ctype
+        + data
+        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+    )
+
+
+def _png(chunks) -> bytes:
+    """The PNG stream of ``(type, data)`` chunks — what ``png_chunks``
+    reads back — closed by ``IEND``."""
+    return PNG_MAGIC + b"".join(
+        _png_chunk(t, d) for t, d in [*chunks, (b"IEND", b"")]
+    )
+
+
+#: the fields of an APNG ``fcTL`` chunk: sequence number, width,
+#: height, x, y, delay numerator and denominator, dispose, blend
+FCTL = struct.Struct(">IIIIIHHBB")
 
 
 class _Malformed(Exception):
@@ -656,35 +678,86 @@ def gif_blocks(p: bytes):
         yield None
 
 
+def is_riff(p: bytes, form: bytes) -> bool:
+    """Whether ``p`` opens a RIFF stream of type ``form``."""
+    return len(p) >= 12 and p[:4] == b"RIFF" and p[8:12] == form
+
+
+def riff_walk(p: bytes, pos: int = 0, end: "int | None" = None):
+    """The RIFF framing alone: ``(tag, body offset, declared length)``
+    for each chunk header in ``p[pos:end]`` — 4-byte tag, little-endian
+    length, body padded to an even size. A length that runs past the
+    end is yielded as declared; each reader keeps its own rule for it
+    (refuse, clamp, or use the declared value)."""
+    end = len(p) if end is None else end
+    while pos + 8 <= end:
+        clen = int.from_bytes(p[pos + 4 : pos + 8], "little")
+        yield p[pos : pos + 4], pos + 8, clen
+        pos += 8 + clen + (clen & 1)
+
+
+def riff_chunks(p: bytes, pos: int = 0):
+    """``(tag, data)`` for each RIFF chunk of ``p`` from ``pos`` on,
+    or None when a chunk runs past the end."""
+    out = []
+    for tag, at, clen in riff_walk(p, pos):
+        if at + clen > len(p):
+            return None
+        out.append((tag, p[at : at + clen]))
+    return out
+
+
+def wav_chunks(p: bytes):
+    """``riff_walk`` records of a RIFF/WAVE stream's ``data`` chunks
+    and of its ``fmt `` chunks whose 16 fixed bytes are present, in
+    stream order; nothing for other bytes."""
+    if is_riff(p, b"WAVE"):
+        for tag, at, clen in riff_walk(p, 12):
+            if tag == b"data" or tag == b"fmt " and at + 16 <= len(p):
+                yield tag, at, clen
+
+
+def _chunk(tag: bytes, data: bytes, pad: bool = False) -> bytes:
+    """One RIFF chunk — tag, little-endian length, data — and with
+    ``pad`` the zero byte that evens an odd length."""
+    odd = pad and len(data) & 1
+    return tag + struct.pack("<I", len(data)) + data + b"\x00" * odd
+
+
+def _riff(form: bytes, chunks: bytes) -> bytes:
+    """A RIFF stream of type ``form`` around written ``chunks``."""
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + form + chunks
+
+
+def vp8x_canvas(p: bytes):
+    """``(width, height)`` of an extended (VP8X) WebP's canvas: two
+    24-bit fields, each the size minus one (RFC 9649 §2.7)."""
+    return (1 + int.from_bytes(p[24:27], "little"),
+            1 + int.from_bytes(p[27:30], "little"))
+
+
+def anmf_fields(body: bytes):
+    """``(x, y, width, height, duration_ms, flags)`` of an ``ANMF``
+    chunk body, or None when its 16-byte header is cut: offsets in
+    2-px units, sizes minus one, all 24-bit (RFC 9649 §2.5.3)."""
+    if len(body) < 16:
+        return None
+    x, y, w, h, ms = (int.from_bytes(body[i : i + 3], "little")
+                      for i in range(0, 15, 3))
+    return 2 * x, 2 * y, 1 + w, 1 + h, ms, body[15]
+
+
 def webp_anim_chunks(p: bytes):
     """The top-level chunks after ``VP8X`` of an ANIMATED WebP as a
     list of ``(tag, data)`` (RIFF chunks, even-padded), or None when
     ``p`` is not a VP8X container with the animation flag (bit 0x02)
     or a chunk runs past the end."""
-    if (
-        len(p) < 30
-        or p[:4] != b"RIFF"
-        or p[8:12] != b"WEBP"
-        or p[12:16] != b"VP8X"
-        or not p[20] & 0x02
-    ):
+    if len(p) < 30 or not is_riff(p, b"WEBP") or p[12:16] != b"VP8X":
+        return None
+    if not p[20] & 0x02:
         return None
     (vp8x_len,) = struct.unpack_from("<I", p, 16)
     return riff_chunks(p, 20 + vp8x_len + (vp8x_len & 1))
-
-
-def riff_chunks(p: bytes, pos: int = 0):
-    """``(tag, data)`` for each little-endian, even-padded RIFF chunk
-    of ``p`` from ``pos`` on, or None when a chunk runs past the
-    end."""
-    out = []
-    while pos + 8 <= len(p):
-        (clen,) = struct.unpack_from("<I", p, pos + 4)
-        if pos + 8 + clen > len(p):
-            return None
-        out.append((p[pos : pos + 4], p[pos + 8 : pos + 8 + clen]))
-        pos += 8 + clen + (clen & 1)
-    return out
 
 
 def gif_animation_info(payload: bytes):
@@ -723,9 +796,10 @@ def webp_animation_info(payload: bytes):
     total_ms = 0
     for tag, body in chunks:
         if tag == b"ANMF":
-            if len(body) < 16:
+            anmf = anmf_fields(body)
+            if anmf is None:
                 return None
-            total_ms += body[12] | (body[13] << 8) | (body[14] << 16)
+            total_ms += anmf[4]
             n_frames += 1
     if n_frames == 0:
         return None
@@ -750,8 +824,8 @@ def apng_animation_info(payload: bytes):
             n_frames = struct.unpack_from(">I", data)[0]
         elif ctype == b"IDAT":
             seen_idat = True
-        elif ctype == b"fcTL" and len(data) >= 26:
-            num, den = struct.unpack_from(">HH", data, 20)
+        elif ctype == b"fcTL" and len(data) >= FCTL.size:
+            num, den = FCTL.unpack_from(data)[5:7]
             dur_ms += num * 1000 // (den or 100)
     if n_frames is None:
         return None
@@ -784,22 +858,24 @@ def _tiff_ifd0(p: bytes):
     return end, entries
 
 
-_TIFF_TYPE_SIZE = {1: 1, 3: 2, 4: 4}
+#: the TIFF field types the pixel path reads and the fixture writer
+#: writes, as struct codes: BYTE, SHORT, LONG (rational tags are
+#: irrelevant to the pixel path)
+TIFF_TYPES = {1: "B", 3: "H", 4: "I"}
 
 
 def _tiff_values(p: bytes, end: str, entry):
-    """Entry values as a list of ints (BYTE/SHORT/LONG only —
-    rational tags are irrelevant to the pixel path), or None."""
+    """Entry values as a list of ints (``TIFF_TYPES`` only), or
+    None."""
     typ, cnt, vpos = entry
-    size = _TIFF_TYPE_SIZE.get(typ)
-    if size is None:
+    code = TIFF_TYPES.get(typ)
+    if code is None:
         return None
-    total = size * cnt
+    total = struct.calcsize(code) * cnt
     if total <= 4:
         base = vpos
     else:
         (base,) = struct.unpack_from(end + "I", p, vpos)
     if base + total > len(p):
         return None
-    fmt = {1: "B", 3: "H", 4: "I"}[typ]
-    return list(struct.unpack_from(end + str(cnt) + fmt, p, base))
+    return list(struct.unpack_from(end + str(cnt) + code, p, base))

@@ -42,13 +42,19 @@ from tidb_cdc_spark.functions.media_decode import (
     _ALAW_LUT,
     _IMA_STEP_TABLE,
     _ULAW_LUT,
+    _bgr_stride,
     _ima_step,
-    _png_chunk,
     gif_interlace_rows,
 )
 from tidb_cdc_spark.functions.media_probe import (
+    FCTL,
     MEDIA_SCHEMA,
     PNG_MAGIC,
+    TIFF_TYPES,
+    _chunk,
+    _png,
+    _png_chunk,
+    _riff,
     png_chunks,
 )
 from tidb_cdc_spark.functions.webp import encode_webp_lossless, encode_webp_lossy
@@ -143,7 +149,7 @@ def _bmp_rows(rows) -> bytes:
     """24-bpp BMP pixel rows in stored order: gray replicated to BGR,
     each row zero-padded to the 4-byte stride."""
     h, w = rows.shape
-    body = np.zeros((h, (w * 3 + 3) & ~3), dtype=np.uint8)
+    body = np.zeros((h, _bgr_stride(w)), dtype=np.uint8)
     body[:, : w * 3] = np.repeat(rows.astype(np.uint8), 3, axis=1)
     return body.tobytes()
 
@@ -152,7 +158,7 @@ def _encode_bmp(gray, topdown: bool = False) -> bytes:
     """An uncompressed 24-bpp BITMAPINFOHEADER BMP of a gray array,
     bottom-up unless ``topdown`` (stored height negative)."""
     h, w = gray.shape
-    size = ((w * 3 + 3) & ~3) * h
+    size = _bgr_stride(w) * h
     return (
         b"BM"
         + struct.pack("<IHHI", 54 + size, 0, 0, 54)
@@ -164,15 +170,6 @@ def _encode_bmp(gray, topdown: bool = False) -> bytes:
     )
 
 
-def _chunk(tag: bytes, data: bytes) -> bytes:
-    """One RIFF chunk: tag, little-endian length, data (no pad)."""
-    return tag + struct.pack("<I", len(data)) + data
-
-
-def _riff(form: bytes, chunks: bytes) -> bytes:
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + form + chunks
-
-
 def _wav(fmt: bytes, samples: bytes) -> bytes:
     return _riff(b"WAVE", _chunk(b"fmt ", fmt) + _chunk(b"data", samples))
 
@@ -181,9 +178,7 @@ def _avi(tag: bytes, frames, width: int, height: int, us_per_frame: int):
     """RIFF 'AVI ' with LIST hdrl (avih: µs-per-frame, total frames,
     dims) and LIST movi holding one ``tag`` chunk per frame
     (word-aligned)."""
-    movi = b"movi" + b"".join(
-        _chunk(tag, f) + b"\x00" * (len(f) & 1) for f in frames
-    )
+    movi = b"movi" + b"".join(_chunk(tag, f, pad=True) for f in frames)
     avih = (
         struct.pack("<I", us_per_frame)
         + b"\x00" * 12
@@ -227,36 +222,27 @@ def _encode_apng(
     then rides fdAT). Each frame's pixel stream comes from the
     conformance-verified still encoder (:func:`_encode_png`), so
     the decode side under test is the APNG machinery alone."""
-    out = bytearray(PNG_MAGIC)
-    out += _png_chunk(
-        b"IHDR",
-        struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0),
-    )
-    out += _png_chunk(b"acTL", struct.pack(">II", len(frames), 0))
-    seq = 0
+    chunks = [
+        (b"IHDR", struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)),
+        (b"acTL", struct.pack(">II", len(frames), 0)),
+    ]
     if hidden_default is not None:
-        out += _png_chunk(
-            b"IDAT",
-            _idat_payload(_encode_png(hidden_default, "gray")),
+        chunks.append(
+            (b"IDAT", _idat_payload(_encode_png(hidden_default, "gray")))
         )
+    seq = 0
     for i, (gray, x, y, dispose, blend) in enumerate(frames):
         h, w = gray.shape
-        out += _png_chunk(
-            b"fcTL",
-            struct.pack(
-                ">IIIIIHHBB", seq, w, h, x, y, delay_ms, 1000,
-                dispose, blend,
-            ),
-        )
+        fctl = FCTL.pack(seq, w, h, x, y, delay_ms, 1000, dispose, blend)
+        chunks.append((b"fcTL", fctl))
         seq += 1
         data = _idat_payload(_encode_png(gray, "gray", filter_seed=i))
         if i == 0 and hidden_default is None:
-            out += _png_chunk(b"IDAT", data)
+            chunks.append((b"IDAT", data))
         else:
-            out += _png_chunk(b"fdAT", struct.pack(">I", seq) + data)
+            chunks.append((b"fdAT", struct.pack(">I", seq) + data))
             seq += 1
-    out += _png_chunk(b"IEND", b"")
-    return bytes(out)
+    return _png(chunks)
 
 
 def _encode_png(gray, mode: str, filter_seed: int = 0) -> bytes:
@@ -283,7 +269,7 @@ def _encode_png(gray, mode: str, filter_seed: int = 0) -> bytes:
 
 def _png_pack_rows(sub, depth: int):
     """Pack one (sub-)image's (h, w, ch) samples into PNG scanline
-    bytes — the exact inverse of ``media_decode._png_samples``:
+    bytes — the exact inverse of ``media_decode._unpack_samples``:
     big-endian pairs at depth 16, straight bytes at 8, MSB-first bit
     fields below 8 (zero row-padding bits)."""
     h, w, ch = sub.shape
@@ -368,15 +354,9 @@ def _encode_png_ex(
     ihdr = struct.pack(
         ">IIBBBBB", w, h, depth, color, 0, 0, 1 if interlaced else 0
     )
-    chunks = _png_chunk(b"IHDR", ihdr)
-    if palette is not None:
-        chunks += _png_chunk(b"PLTE", palette)
-    return (
-        PNG_MAGIC
-        + chunks
-        + _png_chunk(b"IDAT", zlib.compress(bytes(out), 6))
-        + _png_chunk(b"IEND", b"")
-    )
+    plte = [] if palette is None else [(b"PLTE", palette)]
+    idat = zlib.compress(bytes(out), 6)
+    return _png([(b"IHDR", ihdr), *plte, (b"IDAT", idat)])
 
 
 def _gif_lzw_encode(indices, min_code_size: int) -> bytes:
@@ -551,7 +531,7 @@ def _encode_webp_anim(frames_ms, width: int, height: int) -> bytes:
             + bytes([flags])
             + vp8l
         )
-        chunks += _chunk(b"ANMF", body) + b"\x00" * (len(body) & 1)
+        chunks += _chunk(b"ANMF", body, pad=True)
     return _riff(b"WEBP", chunks)
 
 
@@ -572,112 +552,50 @@ def _encode_tiff(
     the JPEG EXIF fixture)."""
     g = np.asarray(gray, dtype=np.int64)
     h, w = g.shape
-    if rgba:
-        spp, photo = 4, 2
-        px = np.concatenate(
-            [
-                np.repeat(g[:, :, None], 3, axis=2),
-                np.full((h, w, 1), 255, dtype=np.int64),
-            ],
-            axis=2,
-        )
-    elif rgb:
-        spp, photo = 3, 2
+    if rgb or rgba:
         px = np.repeat(g[:, :, None], 3, axis=2)
+        if rgba:
+            px = np.concatenate([px, np.full((h, w, 1), 255)], axis=2)
     else:
-        spp, photo = 1, photometric
-        v = (255 - g) if photometric == 0 else g
-        px = v[:, :, None]
+        px = ((255 - g) if photometric == 0 else g)[:, :, None]
+    spp = px.shape[2]
     if bits == 16:
         px = px * 257
-        dt = np.dtype(">u2" if endian == ">" else "<u2")
-        body_rows = px.astype(dt).tobytes()
-        row_bytes = w * spp * 2
-    else:
-        body_rows = px.astype(np.uint8).tobytes()
-        row_bytes = w * spp
+    rows = px.astype(endian + "u2" if bits == 16 else np.uint8).reshape(h, -1)
     rps = rows_per_strip or h
-    strips = []
-    for y0 in range(0, h, rps):
-        nrows = min(rps, h - y0)
-        strips.append(
-            body_rows[y0 * row_bytes : (y0 + nrows) * row_bytes]
-        )
-    e = endian
-    tags = []  # (tag, type, count, value_or_None, payload_bytes)
-
-    def short(tag, v):
-        tags.append((tag, 3, 1, v, None))
-
-    short(256, w)
-    short(257, h)
-    short(258, bits) if spp == 1 else tags.append(
-        (258, 3, spp, None, struct.pack(e + str(spp) + "H", *([bits] * spp)))
-    )
-    short(259, 1)
-    short(262, photo)
+    strips = [rows[y : y + rps].tobytes() for y in range(0, h, rps)]
+    counts = [len(b) for b in strips]
+    entries = {  # {tag: (TIFF type, values)}: SHORTs, strips as LONGs
+        256: (3, [w]), 257: (3, [h]), 258: (3, [bits] * spp), 259: (3, [1]),
+        262: (3, [2 if spp > 1 else photometric]), 277: (3, [spp]),
+        278: (3, [rps]), 273: (4, counts), 279: (4, counts),
+    }
     if orientation != 1:
-        short(274, orientation)
-    short(277, spp)
-    short(278, rps)
-    # strip offsets/counts resolved after layout
-    header = struct.pack(e + "2sHI", b"II" if e == "<" else b"MM", 42, 8)
-    n_entries = len(tags) + 2
-    ifd_size = 2 + 12 * n_entries + 4
-    # layout: header(8) + IFD + out-of-line tag payloads + strips
-    payload_pos = 8 + ifd_size
-    out_of_line = []
-    for t in tags:
-        if t[4] is not None:
-            out_of_line.append((t, payload_pos))
-            payload_pos += len(t[4])
-    # reserve room for offsets/counts arrays when multi-strip
-    ns = len(strips)
-    if ns > 1:
-        so_pos = payload_pos
-        payload_pos += 4 * ns
-        sc_pos = payload_pos
-        payload_pos += 4 * ns
-    strip_pos = []
-    for s in strips:
-        strip_pos.append(payload_pos)
-        payload_pos += len(s)
-    full = [*tags]
-    if ns > 1:
-        full.append((273, 4, ns, None, b""))
-        full.append((279, 4, ns, None, b""))
-    else:
-        full.append((273, 4, 1, strip_pos[0], None))
-        full.append((279, 4, 1, len(strips[0]), None))
-    full.sort(key=lambda t: t[0])
-    ifd = struct.pack(e + "H", n_entries)
-    ool_iter = {id(t): pos for t, pos in out_of_line}
-    for t in full:
-        tag, typ, cnt, val, pay = t
-        if tag == 273 and ns > 1:
-            ifd += struct.pack(e + "HHII", tag, typ, cnt, so_pos)
-        elif tag == 279 and ns > 1:
-            ifd += struct.pack(e + "HHII", tag, typ, cnt, sc_pos)
-        elif pay is not None:
-            ifd += struct.pack(e + "HHII", tag, typ, cnt, ool_iter[id(t)])
-        elif typ == 3:
-            ifd += struct.pack(e + "HHI", tag, typ, cnt) + struct.pack(
-                e + "HH", val, 0
-            )
+        entries[274] = (3, [orientation])
+
+    def packed(typ, vals):
+        return struct.pack(f"{endian}{len(vals)}{TIFF_TYPES[typ]}", *vals)
+
+    # one layout: header, IFD (count, 12-byte entries, next-IFD link),
+    # the values longer than 4 bytes in tag order, then the strips
+    ifd_end = 8 + 2 + 12 * len(entries) + 4
+    blocks = [packed(typ, vals) for typ, vals in entries.values()]
+    # the strips start after the spilled values; StripOffsets' own
+    # length does not depend on where they start
+    first = ifd_end + sum(len(b) for b in blocks if len(b) > 4)
+    entries[273] = (4, [first + sum(counts[:i]) for i in range(len(strips))])
+    ifd = struct.pack(endian + "H", len(entries))
+    data = b""
+    for tag, (typ, vals) in sorted(entries.items()):
+        raw = packed(typ, vals)
+        ifd += struct.pack(endian + "HHI", tag, typ, len(vals))
+        if len(raw) <= 4:
+            ifd += raw.ljust(4, b"\x00")
         else:
-            ifd += struct.pack(e + "HHII", tag, typ, cnt, val)
-    ifd += struct.pack(e + "I", 0)  # no next IFD
-    out = bytearray(header + ifd)
-    for t, pos in out_of_line:
-        assert len(out) == pos
-        out += t[4]
-    if ns > 1:
-        assert len(out) == so_pos
-        out += struct.pack(e + str(ns) + "I", *strip_pos)
-        out += struct.pack(e + str(ns) + "I", *[len(s) for s in strips])
-    for s in strips:
-        out += s
-    return bytes(out)
+            ifd += struct.pack(endian + "I", ifd_end + len(data))
+            data += raw
+    head = struct.pack(endian + "2sHI", b"II" if endian == "<" else b"MM", 42, 8)
+    return head + ifd + struct.pack(endian + "I", 0) + data + b"".join(strips)
 
 
 def _g711_encode(x, lut):

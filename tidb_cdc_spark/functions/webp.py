@@ -271,11 +271,17 @@ def _read_image(br: _LsbReader, w: int, h: int, level0: bool = False):
         [_read_prefix_code(br, n) for n in (green, 256, 256, 256, 40)]
         for _ in range(groups)
     ]
-    cache = [0] * (1 << cache_bits)
     n = w * h
+    gcode, rcode, bcode, acode, dcode = codes[0]
+    if groups == 1 and not cache_bits and all(
+        1 in c for c in (gcode, rcode, bcode, acode)
+    ) and gcode[1] < 256:
+        # one-symbol literal codes: every pixel is one ARGB, no bits
+        argb = acode[1] << 24 | rcode[1] << 16 | gcode[1] << 8 | bcode[1]
+        return np.full(n, argb, dtype=np.uint32)
+    cache = [0] * (1 << cache_bits)
     px = np.zeros(n, dtype=np.uint32)
     pos = 0
-    gcode, rcode, bcode, acode, dcode = codes[0]
     while pos < n:
         if groups > 1:
             x, y = pos % w, pos // w
@@ -356,97 +362,82 @@ def _inv_color_transform(px, w, h, bits, tiles):
     )
 
 
-def _avg2(a, b):
-    return (a + b) // 2
+#: per predictor mode, its candidate in ``_inv_predictor``'s row
+#: stack — black, T, TR, TL, avg(TL, T), avg(T, TR) for modes 0, 2,
+#: 3, 4, 8, 9, which read only the row above (TR at the right edge is
+#: the row's first pixel, decoded first) — or -1 for a mode reading L
+_ROW_PICK = np.array([0, -1, 1, 2, 3, -1, -1, -1, 4, 5, -1, -1, -1, -1])
 
 
-def _px_bytes(v):
-    return np.array(
-        [(v >> 24) & 0xFF, (v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF],
-        dtype=np.int64,
-    )
-
-
-def _bytes_px(b):
-    b = np.clip(b, 0, 255).astype(np.uint32)
-    return (b[0] << 24) | (b[1] << 16) | (b[2] << 8) | b[3]
-
-
-def _clamp_add_sub_full(a, b, c):
-    return np.clip(a + b - c, 0, 255)
-
-
-def _clamp_add_sub_half(a, b):
-    # RFC 9649 AddSubtractComponentHalf: (a - b) / 2 with C integer
-    # division (truncation toward ZERO), not Python floor division —
-    # they differ whenever a < b by an odd amount.
-    d = a - b
-    return np.clip(a + np.sign(d) * (np.abs(d) // 2), 0, 255)
+def _predict(mode: int, L, T, TL, TR):
+    """Predictor ``mode`` (one that reads L) per channel of four-int
+    lists (RFC 9649, "Predictor Transform")."""
+    if mode == 1:
+        return L
+    if mode == 11:  # Select: ties go to T (strict comparison)
+        pl = sum(abs(t - tl) for t, tl in zip(T, TL))
+        pt = sum(abs(lv - tl) for lv, tl in zip(L, TL))
+        return L if pl < pt else T
+    out = []
+    for lv, t, tl, tr in zip(L, T, TL, TR):
+        if mode == 5:
+            v = (((lv + tr) >> 1) + t) >> 1
+        elif mode == 6:
+            v = (lv + tl) >> 1
+        elif mode == 7:
+            v = (lv + t) >> 1
+        elif mode == 10:
+            v = (((lv + tl) >> 1) + ((t + tr) >> 1)) >> 1
+        elif mode == 12:
+            v = lv + t - tl
+        else:  # 13: AddSubtractComponentHalf, C division (toward zero)
+            a = (lv + t) >> 1
+            d = a - tl
+            v = a + (d >> 1 if d >= 0 else -(-d >> 1))
+        out.append(0 if v < 0 else 255 if v > 255 else v)
+    return out
 
 
 def _inv_predictor(px, w, h, bits, tiles):
-    """Invert the predictor transform (14 modes). Sequential by
-    definition (each pixel depends on decoded neighbors), per-pixel
-    Python over thumbnail-scale images."""
-    tw = _subsample(w, bits)
-    out = px.astype(np.uint32).copy()
-    for y in range(h):
-        for x in range(w):
-            i = y * w + x
-            if x == 0 and y == 0:
-                mode = -1  # 0xff000000 base
-            elif y == 0:
-                mode = -2  # L
-            elif x == 0:
-                mode = -3  # T
-            else:
-                mode = int((tiles[(y >> bits) * tw + (x >> bits)] >> 8) & 0xFF)
-                _check(mode <= 13)
-            if mode in (-1, 0):
-                pred = 0xFF000000
-            elif mode == -2 or mode == 1:
-                pred = int(out[i - 1])
-            elif mode == -3 or mode == 2:
-                pred = int(out[i - w])
-            elif mode == 3:
-                # TR: linear index i-w+1; at the right edge this is
-                # the first (already decoded) pixel of the CURRENT
-                # row — the spec addresses pixels in scan order
-                pred = int(out[i - w + 1])
-            elif mode == 4:  # TL
-                pred = int(out[i - w - 1])
-            else:
-                L = _px_bytes(int(out[i - 1]))
-                T = _px_bytes(int(out[i - w]))
-                TL = _px_bytes(int(out[i - w - 1]))
-                TR = _px_bytes(int(out[i - w + 1]))
-                if mode == 5:
-                    pred_b = _avg2(_avg2(L, TR), T)
-                elif mode == 6:
-                    pred_b = _avg2(L, TL)
-                elif mode == 7:
-                    pred_b = _avg2(L, T)
-                elif mode == 8:
-                    pred_b = _avg2(TL, T)
-                elif mode == 9:
-                    pred_b = _avg2(T, TR)
-                elif mode == 10:
-                    pred_b = _avg2(_avg2(L, TL), _avg2(T, TR))
-                elif mode == 11:  # Select
-                    p = L + T - TL
-                    perr = int(np.abs(p - L).sum())
-                    terr = int(np.abs(p - T).sum())
-                    # RFC 9649 Select: "if (pL < pT) return L; else
-                    # return T" — ties go to T (strict comparison).
-                    pred_b = L if perr < terr else T
-                elif mode == 12:
-                    pred_b = _clamp_add_sub_full(L, T, TL)
-                else:  # 13
-                    pred_b = _clamp_add_sub_half(_avg2(L, T), TL)
-                out[i] = _bytes_px((_px_bytes(int(px[i])) + pred_b) % 256)
-                continue
-            out[i] = _bytes_px((_px_bytes(int(px[i])) + _px_bytes(pred)) % 256)
-    return out
+    """Invert the predictor transform (14 modes) on per-channel
+    planes. Row 0 is a running sum from the opaque-black base, column
+    0 adds the pixel above. Elsewhere each row first takes every
+    pixel whose mode reads only the row above at once, then the modes
+    that read L left to right on Python ints."""
+    shifts = np.array([24, 16, 8, 0])
+    res = px.astype(np.int64).reshape(h, w, 1) >> shifts & 0xFF
+    out = np.empty_like(res)
+    res[0, 0, 0] += 0xFF  # (0, 0) predicts 0xff000000
+    out[0] = np.cumsum(res[0], axis=0) % 256
+    if h > 1 and w > 1:
+        modes = (tiles.astype(np.int64) >> 8 & 0xFF).reshape(-1, _subsample(w, bits))
+        _check(int(modes.max()) <= 13)
+        modes = np.repeat(modes, 1 << bits, axis=1)[:, 1:w]  # x = 1 .. w-1
+        picks = _ROW_PICK[modes]
+        left = [(np.flatnonzero(k < 0) + 1).tolist() for k in picks]
+        cols = np.arange(w - 1)
+        black = np.broadcast_to([0xFF, 0, 0, 0], (w - 1, 4))
+    for y in range(1, h):
+        up, row = out[y - 1], out[y]
+        row[0] = (res[y, 0] + up[0]) % 256
+        if w == 1:
+            continue
+        T, TL = up[1:], up[:-1]
+        TR = np.concatenate([up[2:], row[:1]])
+        cand = np.stack([black, T, TR, TL, (TL + T) >> 1, (T + TR) >> 1])
+        # a mode reading L picks the last candidate, then is redone
+        row[1:] = (res[y, 1:] + cand[picks[y >> bits], cols]) % 256
+        xs = left[y >> bits]
+        if xs:
+            m = modes[y >> bits].tolist()
+            cur, top, r = row.tolist(), up.tolist(), res[y].tolist()
+            for x in xs:
+                tr = top[x + 1] if x + 1 < w else cur[0]
+                p = _predict(m[x - 1], cur[x - 1], top[x], top[x - 1], tr)
+                cur[x] = [(a + b) & 0xFF for a, b in zip(r[x], p)]
+            out[y] = cur
+    return (out[..., 0] << 24 | out[..., 1] << 16 | out[..., 2] << 8
+            | out[..., 3]).astype(np.uint32).reshape(-1)
 
 
 def _inv_color_indexing(px, w, h, palette, xbits):

@@ -32,20 +32,7 @@ def _payloads(leg: str, patterns):
     for v in patterns:
         g = _plant(v)
         if leg == "bmp":
-            # reuse the synth's exact BMP layout via the boundary twin
-            from tidb_cdc_spark.functions.media_synth import _encode_png  # noqa
-            import struct
-
-            h, w = g.shape
-            stride = (w * 3 + 3) & ~3
-            hdr = (
-                b"BM" + struct.pack("<IHHI", 54 + stride * h, 0, 0, 54)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                              stride * h, 0, 0, 0, 0)
-            )
-            body = np.zeros((h, stride), dtype=np.uint8)
-            body[:, : w * 3] = np.repeat(g[::-1].astype(np.uint8), 3, axis=1)
-            out.append(hdr + body.tobytes())
+            out.append(M._encode_bmp(g))
         elif leg.startswith("png"):
             kind = {"png": "rgb", "png_gray": "gray", "png_pal": "pal"}[leg]
             out.append(M._encode_png(g, kind, filter_seed=v))
@@ -87,34 +74,18 @@ def _payloads(leg: str, patterns):
                 prev = gf
             out.append(M._encode_apng(frames, 64, 64))
         elif leg == "mjpeg_avi":
-            import struct
-
             from tidb_cdc_spark.functions.jpeg import (
                 encode_jpeg,
                 mjpeg_strip_dht,
             )
 
-            movi = b"movi"
-            for f in range(4):
-                gf = _plant(1 + (v * 4 + f) % 254)
-                data = mjpeg_strip_dht(
-                    encode_jpeg(gf, tables="standard")
+            frames = [
+                mjpeg_strip_dht(
+                    encode_jpeg(_plant(1 + (v * 4 + f) % 254), tables="standard")
                 )
-                movi += b"00dc" + struct.pack("<I", len(data)) + data
-                if len(data) & 1:
-                    movi += b"\x00"
-            avih = (
-                struct.pack("<I", 40_000) + b"\x00" * 12
-                + struct.pack("<I", 4) + b"\x00" * 12
-                + struct.pack("<II", 64, 64) + b"\x00" * 16
-            )
-            hdrl = b"hdrl" + b"avih" + struct.pack("<I", len(avih)) + avih
-            body = (
-                b"AVI "
-                + b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
-                + b"LIST" + struct.pack("<I", len(movi)) + movi
-            )
-            out.append(b"RIFF" + struct.pack("<I", len(body)) + body)
+                for f in range(4)
+            ]
+            out.append(M._avi(b"00dc", frames, 64, 64, 40_000))
         elif leg.startswith("jpeg"):
             from tidb_cdc_spark.functions.jpeg import (
                 encode_jpeg,
