@@ -158,6 +158,87 @@ class TestApply:
         assert got == expected
 
 
+def _random_log(seed, n, keys):
+    rng = random.Random(seed)
+    ops, ts = [], 0
+    for _ in range(n):
+        ts += rng.randint(1, 5)
+        op = rng.choice(["insert", "update", "update", "delete"])
+        ops.append(_msg(op, rng.choice(keys), rng.randint(0, 99) + 1, ts))
+    return ops
+
+
+_RANDOM = _random_log(11, 80, "abcde")
+
+#: name → (batches of messages, optional (as_of, seeded rows))
+FOLD_CASES = {
+    # random log, uneven batch cuts (one of a single change)
+    "random": (
+        [
+            _RANDOM[lo:hi]
+            for lo, hi in ((0, 7), (7, 30), (30, 31), (31, 60), (60, 80))
+        ],
+        None,
+    ),
+    # a batch of deletes only closes heads in place
+    "delete_only_batch": (
+        [
+            [_msg("insert", "a", 1, 10), _msg("insert", "b", 2, 11)],
+            [_msg("delete", "a", 1, 20), _msg("delete", "b", 2, 21)],
+            [_msg("update", "c", 3, 30)],
+        ],
+        None,
+    ),
+    # a key's first event is a delete: in the first batch, and in a
+    # later batch whose head does not hold the key
+    "first_event_delete": (
+        [
+            [_msg("delete", "a", 1, 10), _msg("insert", "a", 2, 11)],
+            [_msg("delete", "c", 5, 20), _msg("update", "a", 3, 21)],
+            [_msg("insert", "c", 6, 30)],
+        ],
+        None,
+    ),
+    # re-insert over a head a delete closed: that head keeps its
+    # valid_to (the delete ts) and moves to the closed store
+    "reinsert_after_closed_head": (
+        [
+            [_msg("insert", "a", 1, 10), _msg("update", "a", 2, 20)],
+            [_msg("delete", "a", 2, 30)],
+            [_msg("insert", "a", 3, 40), _msg("update", "a", 4, 50)],
+            [_msg("delete", "a", 4, 60), _msg("insert", "a", 5, 70)],
+        ],
+        None,
+    ),
+    # equal ts inside a batch and across a cut: _seq, then the head,
+    # orders them
+    "ts_tie_by_seq": (
+        [
+            [
+                _msg("insert", "a", 1, 10),
+                _msg("update", "a", 2, 10),
+                _msg("update", "a", 3, 20),
+            ],
+            [
+                _msg("update", "a", 4, 20),
+                _msg("delete", "a", 4, 20),
+                _msg("insert", "a", 5, 20),
+            ],
+        ],
+        None,
+    ),
+    # head seeded by bootstrap(as_of=5); one change lands exactly at
+    # as_of, one key is never touched
+    "bootstrap_seed": (
+        [
+            [_msg("update", "a", 7, 5), _msg("delete", "b", 2, 8)],
+            [_msg("insert", "b", 9, 12), _msg("insert", "d", 4, 13)],
+        ],
+        (5, [("a", 1), ("b", 2), ("c", 3)]),
+    ),
+}
+
+
 class TestScd2History:
     def test_delete_closes_interval_without_opening(self, spark):
         from tidb_cdc_spark.cdc.scd import scd2_history
@@ -216,42 +297,35 @@ class TestScd2History:
             map(tuple, hist.collect())
         )
 
-    @pytest.mark.slow  # slow tier
-    def test_split_merge_fold_equals_one_shot(self, spark):
+    @pytest.mark.parametrize("case", sorted(FOLD_CASES))
+    def test_split_merge_fold_equals_one_shot(self, spark, tmp_path, case):
         """merge_scd2_split contract: head ∪ (all emitted closed
-        rows) after a fold equals scd2_history over the whole log —
-        random log, uneven batch cuts."""
-        import random
-
+        rows) after a fold equals scd2_history over the whole log.
+        A case with seeded rows starts from a head written by the
+        sink's ``bootstrap(as_of=…)``, which the one-shot replay sees
+        as inserts at ``as_of`` ahead of the log."""
         from tidb_cdc_spark.cdc.scd import merge_scd2_split, scd2_history
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
 
-        rng = random.Random(11)
-        ops, ts = [], 0
-        for _ in range(80):
-            ts += rng.randint(1, 5)
-            k = rng.choice("abcde")
-            op = rng.choice(["insert", "update", "update", "delete"])
-            ops.append(_msg(op, k, rng.randint(0, 99) + 1, ts))
-        one_shot = scd2_history(_parse(spark, ops), SPEC)
-        head, closed_all = None, []
-        for lo, hi in ((0, 7), (7, 30), (30, 31), (31, 60), (60, 80)):
-            head, closed, handles = merge_scd2_split(
-                head, _parse(spark, ops[lo:hi]), SPEC
-            )
-            closed_all.append(closed)
-            # lineage grows across 5 folds; keep plans small the way
-            # the sink does (it writes parquet between folds)
-            head = spark.createDataFrame(head.collect(), head.schema)
-            closed_all[-1] = spark.createDataFrame(
-                closed.collect(), closed.schema
-            )
-            for h in handles:  # explicit-handle contract: caller frees
-                h.unpersist()
-        got = head
-        for c in closed_all:
-            got = got.unionByName(c)
+        batches, seed = FOLD_CASES[case]
+        head, log = None, []
+        if seed:
+            as_of, rows = seed
+            sink = Scd2SplitHistorySink(str(tmp_path / "seeded"))
+            sink.bootstrap(spark.createDataFrame(rows, "k string, v int"), SPEC, as_of)
+            head = sink.read_current(spark)
+            log = [_msg("insert", k, v, as_of) for k, v in rows]
+        got = []
+        for ops in batches:
+            head, closed, handles = merge_scd2_split(head, _parse(spark, ops), SPEC)
+            assert handles == []
+            got.append(closed)
+            log += ops
+        for c in got:
+            head = head.unionByName(c)
+        one_shot = scd2_history(_parse(spark, log), SPEC)
         assert sorted(map(tuple, one_shot.collect())) == sorted(
-            map(tuple, got.collect())
+            map(tuple, head.collect())
         )
 
     def test_split_merge_head_invariant(self, spark):

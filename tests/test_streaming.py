@@ -870,6 +870,60 @@ class TestScd2SplitHistorySink:
         assert hist[("b", 1)].is_current
 
 
+class TestJobsPerBatch:
+    """Spark jobs one ``process`` call costs over an existing store.
+    Per-job overhead, not data, bounds a small micro-batch, so these
+    counts are the sinks' fixed per-batch cost: the SCD2 sink is one
+    labelled pass written once (read schema, staged write, head
+    commit), the snapshot sink one merge and its commit."""
+
+    def _jobs(self, spark, sink, changes, batch_id, tag):
+        sc = spark.sparkContext
+        group = f"jobs-per-batch-{tag}-{id(sink)}"
+        sc.setJobGroup(group, group)
+        try:
+            sink.process(changes, batch_id, SPEC)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_sink_jobs_per_batch(self, spark, tmp_path):
+        from tidb_cdc_spark.cdc import parse_cdc
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
+
+        def changes(msgs):
+            df = spark.createDataFrame([(m,) for m in msgs], "value string")
+            return parse_cdc(
+                df.withColumn("_s", F.monotonically_increasing_id()),
+                SPEC,
+                seq_col=F.col("_s"),
+            ).persist()
+
+        hist = Scd2SplitHistorySink(str(tmp_path / "hist"))
+        snap = ParquetSnapshotSink(str(tmp_path / "snap"))
+        first = changes([_msg("insert", k, i, 10 + i) for i, k in enumerate("abcd")])
+        for sink in (hist, snap):
+            sink.process(first, 0, SPEC)
+        batch = changes([
+            _msg("insert", "e", 5, 20),
+            _msg("update", "a", 6, 21),
+            _msg("update", "b", 7, 22),
+            _msg("delete", "c", 2, 23),
+        ])
+        try:
+            scd2_jobs = self._jobs(spark, hist, batch, 1, "scd2")
+            snap_jobs = self._jobs(spark, snap, batch, 1, "snapshot")
+        finally:
+            first.unpersist()
+            batch.unpersist()
+        assert scd2_jobs <= 4, scd2_jobs
+        assert snap_jobs <= 5, snap_jobs
+        # the counted calls did their work
+        assert {(r.k, r.v) for r in snap.read_current(spark).collect()} == {
+            ("a", 6), ("b", 7), ("d", 3), ("e", 5)}
+        assert hist.read_current(spark).count() == 7
+
+
 class TestStreamMetrics:
     def test_progress_captured_and_jsonl(self, spark, tmp_path):
         import time
@@ -1053,10 +1107,9 @@ class TestBootstrap:
 
 class TestSharedConnectorWidth:
     def test_routes_twenty_tables_sparse_batch(self, spark, tmp_path):
-        """Width rehearsal shape (tools/shared_width_rehearsal.py):
-        20 registrations, one shared stream, messages for only a
-        subset — the presence prefilter must skip absent tables and
-        every active table's snapshot must converge."""
+        """Width shape: 20 registrations, one shared stream, messages
+        for only a subset — the presence prefilter must skip absent
+        tables and every active table's snapshot must converge."""
         specs = [
             TableSpec(
                 database="d",

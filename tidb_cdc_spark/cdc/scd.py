@@ -9,11 +9,12 @@ the standard warehouse consumer of exactly this change feed, so the
 engine ships it as a first-class operator next to
 ``apply.conflate_latest``.
 
-Plan shape: ONE hash exchange on the primary key serves both window
-passes (version ordinal + interval close via ``lead``) — the minimal
-movement for per-key ordered semantics. State per row is O(1); no
-unbounded frames. At 100 TB of backlog the cost is the one shuffle
-of the change log, same as conflation.
+``scd2_history`` replays a whole change log; ``label_scd2_split``
+folds one micro-batch into a store split into a per-key head and
+append-only closed rows (``Scd2SplitHistorySink``). Both are one
+hash exchange on the primary key feeding per-key windows (version
+ordinal + interval close via ``lead``) — the minimal movement for
+per-key ordered semantics, with O(1) state per row.
 """
 
 from __future__ import annotations
@@ -79,6 +80,89 @@ def scd2_history(
     )
 
 
+def label_scd2_split(
+    head: DataFrame | None,
+    changes: DataFrame,
+    spec: TableSpec,
+    ts_col: str = "ts",
+    seq_col: str = "_seq",
+) -> DataFrame:
+    """One micro-batch of typed changes merged into a split SCD2
+    store's ``head`` (None for an empty store): the ``scd2_history``
+    columns plus a boolean ``__head`` label — True for the key's new
+    head row, False for a row that moves to the append-only closed
+    store.
+
+    ``head`` holds exactly ONE row per key ever seen: its LATEST
+    version, open or closed by a delete with no successor. So
+    ``head.version`` is the key's version counter, and a row once
+    closed never changes again.
+
+    One window over ``head ∪ batch``, partitioned by the PK and
+    ordered by ``(src, valid_from, seq)``, where head rows have
+    ``src = 0`` and sort first:
+
+    - ``valid_to = lead(valid_from)``, except that a head row a
+      delete already closed keeps its ``valid_to``;
+    - ``version`` is a running sum: a head row adds its ``version``,
+      a live change 1, a delete 0;
+    - deletes are dropped, then ``is_current = valid_to IS NULL``;
+    - ``__head = (version = max(version))`` over the key.
+
+    Invariants (pinned by the fold tests): the labelled heads are
+    again one row per key, and if batches partition the change log
+    respecting per-key ``(ts, seq)`` order (the CDC dispatch-key
+    guarantee), the last fold's heads plus every fold's closed rows
+    equal ``scd2_history`` over the whole log. One PK exchange per
+    batch, ∝ batch + live keyspace, not accumulated history.
+    """
+    pk = spec.pk_columns
+    if not pk:
+        raise ValueError(f"spec {spec.table} has no primary key")
+    attrs = [c.target for c in spec.resolved_columns() if not c.pk]
+    rows = changes.select(
+        *[
+            F.coalesce(F.col(f"after.{c}"), F.col(f"before.{c}")).alias(c)
+            for c in pk
+        ],
+        *[F.col(f"after.{a}").alias(a) for a in attrs],
+        F.lit(1).alias("__src"),
+        F.col("op").alias("__op"),
+        F.col(ts_col).alias("valid_from"),
+        F.col(seq_col).alias("__seq"),
+        F.lit(None).cast(changes.schema[ts_col].dataType).alias("valid_to"),
+        (F.col("op") != CDCType.DELETE).cast("long").alias("version"),
+    )
+    if head is not None:
+        rows = rows.unionByName(
+            head.withColumn("__src", F.lit(0)), allowMissingColumns=True
+        )
+    w = Window.partitionBy(*pk).orderBy("__src", "valid_from", "__seq")
+    # only a delete-closed head row arrives with a valid_to
+    return (
+        rows.withColumn(
+            "valid_to", F.coalesce("valid_to", F.lead("valid_from").over(w))
+        )
+        .withColumn(
+            "version",
+            F.sum("version")
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .cast("long"),
+        )
+        .filter(~F.col("__op").eqNullSafe(CDCType.DELETE))
+        .select(
+            *pk,
+            *attrs,
+            "version",
+            "valid_from",
+            "valid_to",
+            F.col("valid_to").isNull().alias("is_current"),
+            (F.col("version") == F.max("version").over(Window.partitionBy(*pk)))
+            .alias("__head"),
+        )
+    )
+
+
 def merge_scd2_split(
     head: DataFrame | None,
     changes: DataFrame,
@@ -86,107 +170,13 @@ def merge_scd2_split(
     ts_col: str = "ts",
     seq_col: str = "_seq",
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Incrementally maintain a Type-2 SCD table with one micro-batch
-    of typed changes — the ``foreachBatch`` body of
-    ``Scd2SplitHistorySink``: ``(new_head, newly_closed,
-    batch_handles)``.
-
-    ``head`` holds exactly ONE row per key ever seen — the key's
-    LATEST version (open, or closed by a delete with no successor).
-    The invariant makes ``head.version`` the per-key version counter
-    (no max() over full history needed) and makes every other
-    history row immutable forever, so a sink can keep them in an
-    append-only store: per-batch write cost is ∝ batch + live
-    keyspace, NOT ∝ accumulated history.
-
-    Contract (pinned by tests): if batches partition the change log
-    respecting per-key (ts, seq) order (the CDC dispatch-key
-    guarantee), then folding them through this function and unioning
-    ``new_head`` with all emitted ``newly_closed`` rows equals
-    ``scd2_history`` over the whole log.
-
-    Execution shape: exactly TWO heavy passes per batch, each
-    materialized once — the persisted frames come back as the THIRD
-    tuple element, which the caller MUST unpersist after its writes
-    (an explicit return, not a dynamic attribute: any DataFrame
-    transformation silently drops an attribute, and a caller that
-    never learns the handles exist leaks two DISK_ONLY blocks per
-    batch, unbounded across a streaming fold) —
-    (1) ``shifted``: the batch's SCD2
-    windows + one left join against head for the version shift and
-    the per-key max; (2) ``labeled``: ONE pass over head left-joined
-    with the batch's per-key (first_ts, emitted) summary. Everything
-    the caller writes is a filter/union over those two, so a sink's
-    single partitioned write re-executes nothing — an earlier
-    formulation with per-output joins re-ran the JSON parse 3×.
-    """
-    from tidb_cdc_spark.session import materialize
-
-    pk = spec.pk_columns
-    mxw = Window.partitionBy(*pk)
-
-    if head is None:
-        batch = materialize(
-            scd2_history(changes, spec, ts_col, seq_col).withColumn(
-                "_mx", F.max("version").over(mxw)
-            )
-        )
-        h0 = batch.filter(F.col("version") == F.col("_mx")).drop("_mx")
-        c0 = batch.filter(F.col("version") < F.col("_mx")).drop("_mx")
-        # a streaming sink folding thousands of batches must release
-        # each batch's persisted blocks once its writes are done
-        return h0, c0, [batch]
-
-    # pass 1 — version-shifted batch rows + per-key max (ONE window
-    # over the already-pk-partitioned SCD2 output: no extra exchange)
-    shifted = materialize(
-        scd2_history(changes, spec, ts_col, seq_col)
-        .join(head.select(*pk, F.col("version").alias("_v0")), pk, "left")
-        .withColumn(
-            "version", F.col("version") + F.coalesce(F.col("_v0"), F.lit(0))
-        )
-        .drop("_v0")
-        .withColumn("_mx", F.max("version").over(mxw))
+    """``label_scd2_split`` as ``(new_head, newly_closed, handles)``:
+    the two filters of the one labelled frame. Nothing is persisted,
+    so ``handles`` is always empty; it stays for callers that unpack
+    three values."""
+    labelled = label_scd2_split(head, changes, spec, ts_col, seq_col)
+    return (
+        labelled.filter("__head").drop("__head"),
+        labelled.filter(~F.col("__head")).drop("__head"),
+        [],
     )
-    batch_head = shifted.filter(F.col("version") == F.col("_mx")).drop("_mx")
-    batch_closed = shifted.filter(F.col("version") < F.col("_mx")).drop("_mx")
-
-    # pass 2 — ONE pass over head: touched? emitted? Close the open
-    # interval of every touched head at the batch's first change ts
-    # (delete-closed heads keep their valid_to).
-    summary = (
-        changes.select(
-            *[
-                F.coalesce(F.col(f"after.{c}"), F.col(f"before.{c}")).alias(c)
-                for c in pk
-            ],
-            F.col(ts_col).alias("_bts"),
-        )
-        .groupBy(*pk)
-        .agg(F.min("_bts").alias("_first_ts"))
-        .join(
-            batch_head.select(*pk, F.lit(True).alias("_emitted")), pk, "left"
-        )
-    )
-    labeled = materialize(
-        head.join(summary, pk, "left")
-        .withColumn(
-            "valid_to",
-            F.when(
-                F.col("_first_ts").isNotNull() & F.col("is_current"),
-                F.col("_first_ts"),
-            ).otherwise(F.col("valid_to")),
-        )
-        .withColumn("is_current", F.col("valid_to").isNull())
-    )
-    untouched_or_kept = labeled.filter(
-        F.col("_first_ts").isNull() | F.col("_emitted").isNull()
-    ).drop("_first_ts", "_emitted")
-    # touched heads SUPERSEDED by an emitted version move to the
-    # closed store; delete-only keys keep their (closed) head row in
-    # place — it still carries the key's version counter
-    superseded = labeled.filter(
-        F.col("_first_ts").isNotNull() & F.col("_emitted").isNotNull()
-    ).drop("_first_ts", "_emitted")
-    new_head = untouched_or_kept.unionByName(batch_head)
-    return new_head, batch_closed.unionByName(superseded), [shifted, labeled]

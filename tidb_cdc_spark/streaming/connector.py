@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tidb_cdc_spark.cdc.parse import cdc_parser, parse_cdc
+from tidb_cdc_spark.cdc.parse import cdc_parser
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.sources.kafka import KafkaSourceConfig, kafka_stream
 from tidb_cdc_spark.streaming.sinks import Sink
@@ -188,22 +188,21 @@ class Connector:
         # batch, so it builds them per batch for the tables present
         parse = cdc_parser(regs[0].spec, seq_col=seq) if len(regs) == 1 else None
 
-        def deliver(r: _Registration, changes: DataFrame, batch_id: int) -> None:
-            # fan-out loop parity (cdc_manager.go:277-298) — but a sink
-            # error FAILS the batch (no silent offset commit past lost
-            # data)
-            for sink in r.sinks:
-                with self._sink_locks[id(sink)]:
-                    sink.process(changes, batch_id, r.spec)
+        def deliver(r: _Registration, rows: DataFrame, batch_id: int) -> None:
+            # every sink of the table reads one cached parse; fan-out
+            # loop parity (cdc_manager.go:277-298) — but a sink error
+            # FAILS the batch (no silent offset commit past lost data)
+            changes = (parse or cdc_parser(r.spec, seq_col=seq))(rows).persist()
+            try:
+                for sink in r.sinks:
+                    with self._sink_locks[id(sink)]:
+                        sink.process(changes, batch_id, r.spec)
+            finally:
+                changes.unpersist()
 
         def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
             if parse is not None:
-                # every sink of the table reads one cached parse
-                cached = parse(batch_df).persist()
-                try:
-                    deliver(regs[0], cached, batch_id)
-                finally:
-                    cached.unpersist()
+                deliver(regs[0], batch_df, batch_id)
                 return
             # ONE slim routing parse per row, cached with the batch:
             # separate get_json_object calls each re-parse the whole
@@ -223,15 +222,15 @@ class Connector:
                     (F.col("_route.database") == r.spec.database)
                     & (F.col("_route.table") == r.spec.table)
                 ).drop("_route")
-                deliver(r, parse_cdc(rows, r.spec, seq_col=seq), batch_id)
+                deliver(r, rows, batch_id)
 
             # CONCURRENT routed passes: a sequential loop serializes
             # N small Spark jobs per batch and loses to per-table
-            # mode's N independent trigger loops by ~N/parallelism
-            # (tools/shared_width_rehearsal.py measured 2.7× slower
-            # at 24 tables before this). Driver threads submit jobs
-            # Spark schedules side by side over the SAME cached
-            # batch; sinks of one registration still run in order.
+            # mode's N independent trigger loops by ~N/parallelism.
+            # Driver threads submit jobs Spark schedules side by side
+            # over the SAME cached batch; sinks of one registration
+            # still run in order, over that registration's one
+            # cached parse.
             # Any failure propagates out of .result() and fails the
             # whole batch — offsets never commit past a lost table.
             #

@@ -27,7 +27,7 @@ from tidb_cdc_spark.cdc.apply import (
     conflate_latest,
 )
 from tidb_cdc_spark.cdc.schema import CDCType
-from tidb_cdc_spark.cdc.scd import merge_scd2_split
+from tidb_cdc_spark.cdc.scd import label_scd2_split
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.streaming import store
 from tidb_cdc_spark.streaming.store import guard_batch_watermark
@@ -238,51 +238,39 @@ class Scd2SplitHistorySink(ParquetSnapshotSink):
                 "(scd2zone, b) — rename via ColumnSpec(column=...)"
             )
         changes = self._since_bootstrap(changes)
-        spark = changes.sparkSession
         store.recover(self._closed_root())
-        head = super().read_current(spark)
-        new_head, newly_closed, batch_handles = merge_scd2_split(
-            head, changes, spec
-        )
-        # ONE partitioned job computes both outputs (two separate
-        # writes re-executed the shared merge subplan; the batch SCD2
-        # subplan is additionally materialized inside
-        # merge_scd2_split), staged then moved into the two stores;
-        # the pointer swap publishes both. Single writer: whatever is
-        # left in _stage is a crashed attempt's
+        head = super().read_current(changes.sparkSession)
+        labelled = label_scd2_split(head, changes, spec)
+        # the one labelled pass is ONE partitioned write, staged and
+        # then moved into the two stores; the pointer swap publishes
+        # both. Single writer: whatever is left in _stage is a crashed
+        # attempt's
         staging = os.path.join(self.path, "_stage")
-        try:
-            store.remove(staging)
-            (
-                new_head.withColumn("scd2zone", F.lit("head"))
-                .unionByName(newly_closed.withColumn("scd2zone", F.lit("closed")))
-                .write.partitionBy("scd2zone")
-                .mode("overwrite")
-                .parquet(staging)
-            )
-            closed_dst = os.path.join(self._closed_root(), f"b={batch_id}")
-            os.makedirs(self._closed_root(), exist_ok=True)
-            src_closed = os.path.join(staging, "scd2zone=closed")
-            src_head = os.path.join(staging, "scd2zone=head")
-            if os.path.exists(src_closed):
-                store.move(src_closed, closed_dst)
-            else:
-                # batch closed nothing — create NO b=<id> dir at all
-                # (_read_closed tolerates gaps; an empty dir per idle
-                # batch would re-grow the listing cost compact()
-                # fights), but clear a torn prior attempt
-                store.remove(closed_dst)
-            # an empty stream batch over an empty store stages no head
-            head_src = src_head if os.path.exists(src_head) else new_head.limit(0)
-        finally:
-            # release this batch's persisted blocks, also when the
-            # staged write fails
-            for handle in batch_handles:
-                try:
-                    handle.unpersist()
-                except Exception:  # noqa: BLE001 — best-effort cache release
-                    pass
-        store.commit_version(self.path, self.PREFIX, head_src, batch_id)
+        store.remove(staging)
+        zone = F.when(F.col("__head"), "head").otherwise("closed")
+        (
+            labelled.withColumn("scd2zone", zone)
+            .drop("__head")
+            .write.partitionBy("scd2zone")
+            .mode("overwrite")
+            .parquet(staging)
+        )
+        closed_dst = os.path.join(self._closed_root(), f"b={batch_id}")
+        os.makedirs(self._closed_root(), exist_ok=True)
+        src_closed = os.path.join(staging, "scd2zone=closed")
+        src_head = os.path.join(staging, "scd2zone=head")
+        if os.path.exists(src_closed):
+            store.move(src_closed, closed_dst)
+        else:
+            # batch closed nothing — create NO b=<id> dir at all
+            # (_read_closed tolerates gaps; an empty dir per idle
+            # batch would re-grow the listing cost compact()
+            # fights), but clear a torn prior attempt
+            store.remove(closed_dst)
+        # an empty stream batch over an empty store stages no head
+        if not os.path.exists(src_head):
+            src_head = labelled.drop("__head").limit(0)
+        store.commit_version(self.path, self.PREFIX, src_head, batch_id)
         store.remove(staging)
 
     def compact(self, spark) -> tuple[int, int]:
