@@ -9,7 +9,14 @@ import random
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.cdc import parse_cdc
-from tidb_cdc_spark.cdc.apply import apply_changes, snapshot_from_ops
+from tidb_cdc_spark.cdc.apply import (
+    align_to_spec,
+    apply_changes,
+    batch_keys,
+    conflate_latest,
+    snapshot_from_ops,
+)
+from tidb_cdc_spark.cdc.schema import CDCType
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
 
 SPEC = TableSpec(
@@ -30,11 +37,11 @@ def _msg(op, k, v, ts):
     return json.dumps(m)
 
 
-def _parse(spark, msgs):
+def _parse(spark, msgs, spec=SPEC):
     df = spark.createDataFrame([(m,) for m in msgs], "value string")
     # file-order seq: zip with index so ties on ts resolve by arrival
     df = df.withColumn("_file_seq", F.monotonically_increasing_id())
-    return parse_cdc(df, SPEC, seq_col=F.col("_file_seq"))
+    return parse_cdc(df, spec, seq_col=F.col("_file_seq"))
 
 
 def _state(snapshot):
@@ -237,6 +244,120 @@ FOLD_CASES = {
         (5, [("a", 1), ("b", 2), ("c", 3)]),
     ),
 }
+
+
+#: two-column primary key, for the key-set comparisons
+CSPEC = TableSpec(
+    database="d",
+    table="t",
+    columns=(
+        ColumnSpec("K", "string", column="k", pk=True),
+        ColumnSpec("N", "int", column="n", pk=True),
+        ColumnSpec("V", "int"),
+    ),
+)
+
+
+def _cmsg(op, k, n, v, ts):
+    m = {"database": "d", "table": "t", "type": op, "ts": ts,
+         "data": {"k": k, "n": n, "v": v}}
+    if op == "update":
+        m["old"] = {"v": v - 1}
+    return json.dumps(m)
+
+
+def _conflated_key_merge(base, changes, spec):
+    """``apply_changes`` with the anti-join's key side taken from the
+    conflated frame (``conflate_latest(...).select("_pk.*")``), as it
+    was before the merge read the batch's own keys."""
+    pk = spec.pk_columns
+    latest = conflate_latest(changes, pk)
+    upserts = latest.filter(F.col("op") != CDCType.DELETE).select("after.*")
+    survivors = align_to_spec(base, spec).join(
+        latest.select("_pk.*"), on=pk, how="left_anti"
+    )
+    return survivors.unionByName(upserts)
+
+
+_KV = "k string, v int"
+#: name → (spec, base rows, base DDL, batch messages)
+KEY_CASES = {
+    **{
+        f"random_seed{seed}": (
+            SPEC,
+            [(k, i) for i, k in enumerate("abcdef")],
+            _KV,
+            _random_log(seed, 40, "abcdefghij"),
+        )
+        for seed in (3, 17, 29)
+    },
+    "delete_only": (
+        SPEC,
+        [("a", 1), ("b", 2), ("c", 3)],
+        _KV,
+        [_msg("delete", "a", 1, 10), _msg("delete", "c", 3, 11)],
+    ),
+    "insert_delete_reinsert": (
+        SPEC,
+        [("b", 2)],
+        _KV,
+        [
+            _msg("insert", "a", 1, 10),
+            _msg("delete", "a", 1, 11),
+            _msg("insert", "a", 7, 12),
+            _msg("update", "b", 3, 12),
+        ],
+    ),
+    "composite_pk": (
+        CSPEC,
+        [("a", 1, 10), ("a", 2, 20), ("b", 1, 30)],
+        "k string, n int, v int",
+        [
+            _cmsg("update", "a", 1, 11, 10),
+            _cmsg("delete", "a", 2, 20, 11),
+            _cmsg("insert", "b", 2, 40, 12),
+            _cmsg("insert", "a", 3, 50, 13),
+            _cmsg("update", "a", 3, 51, 14),
+        ],
+    ),
+    "no_existing_key": (
+        SPEC,
+        [("a", 1), ("b", 2)],
+        _KV,
+        [
+            _msg("insert", "x", 1, 10),
+            _msg("update", "x", 2, 11),
+            _msg("insert", "y", 5, 12),
+            _msg("delete", "z", 9, 13),
+        ],
+    ),
+}
+
+
+class TestBatchKeyAntiJoin:
+    """The merge anti-joins the base against ``batch_keys`` (the
+    batch's own PKs, duplicates kept) instead of the conflated
+    frame's keys: the same key set, so the same merged rows."""
+
+    @staticmethod
+    def _same_rows(a, b):
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
+
+    @pytest.mark.parametrize("case", sorted(KEY_CASES))
+    def test_same_keys_and_rows_as_conflated_keys(self, spark, case):
+        spec, rows, ddl, msgs = KEY_CASES[case]
+        changes = _parse(spark, msgs, spec)
+        base = spark.createDataFrame(rows, ddl)
+        pk = spec.pk_columns
+        self._same_rows(
+            batch_keys(changes, pk).distinct(),
+            conflate_latest(changes, pk).select("_pk.*"),
+        )
+        merged = apply_changes(base, changes, spec)
+        self._same_rows(merged, _conflated_key_merge(base, changes, spec))
+        # a key is never dropped or doubled by the merge
+        assert merged.count() == merged.select(*pk).distinct().count()
 
 
 class TestScd2History:

@@ -4,6 +4,7 @@ SURVEY §5 strategy item (2)."""
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from tidb_cdc_spark.streaming import (
     MemorySink,
     ParquetSnapshotSink,
 )
+from tidb_cdc_spark.streaming import store
 
 SPEC = TableSpec(
     database="d",
@@ -870,58 +872,127 @@ class TestScd2SplitHistorySink:
         assert hist[("b", 1)].is_current
 
 
+def _count_jobs(spark, fn):
+    """``(fn(), the number of Spark jobs it ran)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _parsed(spark, msgs, spec=SPEC):
+    from tidb_cdc_spark.cdc import parse_cdc
+
+    df = spark.createDataFrame([(m,) for m in msgs], "value string")
+    return parse_cdc(
+        df.withColumn("_s", F.monotonically_increasing_id()),
+        spec,
+        seq_col=F.col("_s"),
+    )
+
+
 class TestJobsPerBatch:
     """Spark jobs one ``process`` call costs over an existing store.
     Per-job overhead, not data, bounds a small micro-batch, so these
     counts are the sinks' fixed per-batch cost: the SCD2 sink is one
-    labelled pass written once (read schema, staged write, head
-    commit), the snapshot sink one merge and its commit."""
-
-    def _jobs(self, spark, sink, changes, batch_id, tag):
-        sc = spark.sparkContext
-        group = f"jobs-per-batch-{tag}-{id(sink)}"
-        sc.setJobGroup(group, group)
-        try:
-            sink.process(changes, batch_id, SPEC)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    labelled pass written once, the snapshot sink one merge written
+    once. Neither plans a schema-inference job for its base read, and
+    the merge conflates the batch once."""
 
     def test_sink_jobs_per_batch(self, spark, tmp_path):
-        from tidb_cdc_spark.cdc import parse_cdc
         from tidb_cdc_spark.streaming import Scd2SplitHistorySink
-
-        def changes(msgs):
-            df = spark.createDataFrame([(m,) for m in msgs], "value string")
-            return parse_cdc(
-                df.withColumn("_s", F.monotonically_increasing_id()),
-                SPEC,
-                seq_col=F.col("_s"),
-            ).persist()
 
         hist = Scd2SplitHistorySink(str(tmp_path / "hist"))
         snap = ParquetSnapshotSink(str(tmp_path / "snap"))
-        first = changes([_msg("insert", k, i, 10 + i) for i, k in enumerate("abcd")])
+        first = _parsed(
+            spark, [_msg("insert", k, i, 10 + i) for i, k in enumerate("abcd")]
+        ).persist()
         for sink in (hist, snap):
             sink.process(first, 0, SPEC)
-        batch = changes([
+        batch = _parsed(spark, [
             _msg("insert", "e", 5, 20),
             _msg("update", "a", 6, 21),
             _msg("update", "b", 7, 22),
             _msg("delete", "c", 2, 23),
-        ])
+        ]).persist()
         try:
-            scd2_jobs = self._jobs(spark, hist, batch, 1, "scd2")
-            snap_jobs = self._jobs(spark, snap, batch, 1, "snapshot")
+            _, scd2_jobs = _count_jobs(spark, lambda: hist.process(batch, 1, SPEC))
+            _, snap_jobs = _count_jobs(spark, lambda: snap.process(batch, 1, SPEC))
         finally:
             first.unpersist()
             batch.unpersist()
-        assert scd2_jobs <= 4, scd2_jobs
-        assert snap_jobs <= 5, snap_jobs
+        assert scd2_jobs <= 3, scd2_jobs
+        assert snap_jobs <= 3, snap_jobs
         # the counted calls did their work
         assert {(r.k, r.v) for r in snap.read_current(spark).collect()} == {
             ("a", 6), ("b", 7), ("d", 3), ("e", 5)}
         assert hist.read_current(spark).count() == 7
+
+
+class TestSchemaKnownRead:
+    """A version directory is read with the schema recorded in its
+    files' footers: no Spark job, and the same schema and rows as
+    ``spark.read.parquet`` of the directory, which infers the schema
+    in a job of its own."""
+
+    @staticmethod
+    def _read(spark, sink):
+        """The sink's version read (for the SCD2 sink: its head), after
+        checking it against ``spark.read.parquet``."""
+        df, jobs = _count_jobs(
+            spark, lambda: ParquetSnapshotSink.read_current(sink, spark)
+        )
+        assert jobs == 0
+        version, _ = store.read_pointer(sink.path)
+        ref = spark.read.parquet(os.path.join(sink.path, f"{sink.PREFIX}{version}"))
+        assert df.schema == ref.schema
+        assert df.exceptAll(ref).count() == 0 and ref.exceptAll(df).count() == 0
+        return df
+
+    def test_bootstrap_merged_and_empty_versions(self, spark, tmp_path):
+        sink = ParquetSnapshotSink(str(tmp_path / "snap"))
+        initial = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
+        sink.bootstrap(initial, SPEC)
+        assert self._read(spark, sink).count() == 2
+        merge = [_msg("insert", "c", 3, 10), _msg("update", "a", 5, 11)]
+        sink.process(_parsed(spark, merge), 0, SPEC)
+        assert {(r.k, r.v) for r in self._read(spark, sink).collect()} == {
+            ("a", 5), ("b", 2), ("c", 3)}
+        # the batch deletes every key: the version is an empty write
+        sink.process(_parsed(spark, [_msg("delete", k, 0, 20) for k in "abc"]), 1, SPEC)
+        assert store.read_pointer(sink.path) == (3, 1)
+        assert self._read(spark, sink).count() == 0
+
+    def test_scd2_head_from_the_staged_move(self, spark, tmp_path):
+        from tidb_cdc_spark.streaming import Scd2SplitHistorySink
+
+        hist = Scd2SplitHistorySink(str(tmp_path / "hist"))
+        hist.process(_parsed(spark, [_msg("insert", k, 1, 10) for k in "ab"]), 0, SPEC)
+        second = [_msg("update", "a", 2, 20), _msg("delete", "b", 1, 21)]
+        hist.process(_parsed(spark, second), 1, SPEC)
+        assert store.read_pointer(hist.path) == (2, 1)
+        head = self._read(spark, hist)
+        assert {(r.k, r.v, r.version, r.is_current) for r in head.collect()} == {
+            ("a", 2, 2, True), ("b", 1, 1, False)}
+
+    def test_base_written_under_an_older_spec(self, spark, tmp_path):
+        sink = ParquetSnapshotSink(str(tmp_path / "snap"))
+        sink.bootstrap(spark.createDataFrame([("a", 1)], "k string, v int"), SPEC)
+        evolved = SPEC.evolve(
+            add=(ColumnSpec("Added", "string"),), widen={"v": "bigint"}
+        )
+        # the base reads as it was written, not as the evolved spec says
+        assert self._read(spark, sink).schema.simpleString() == "struct<k:string,v:int>"
+        big = _msg_for("d", "t", "insert", {"k": "b", "v": 2**40, "added": "x"}, 30)
+        sink.process(_parsed(spark, [big], evolved), 0, evolved)
+        merged = self._read(spark, sink)
+        assert merged.schema.simpleString() == "struct<k:string,v:bigint,added:string>"
+        assert {(r.k, r.v, r.added) for r in merged.collect()} == {
+            ("a", 1, None), ("b", 2**40, "x")}
 
 
 class TestStreamMetrics:

@@ -15,10 +15,14 @@ Spark patterns:
    A window would shuffle + sort every change row. Hot-key skew
    (one PK updated millions of times) is absorbed map-side for the
    same reason.
-2. **Merge** — anti-join the base snapshot against touched PKs, then
-   union the surviving upserts. One shuffle join on PK; with the
-   base table bucketed/partitioned by PK hash this becomes a
-   co-located join at scale (no base re-shuffle).
+2. **Merge** — anti-join the base snapshot against the batch's own
+   keys (``batch_keys``: ``coalesce(after.pk, before.pk)`` projected
+   straight from the change rows), then union the surviving upserts.
+   Every key in the batch is touched, so this is the conflated key
+   set without an aggregate of its own: a left-anti join keeps a base
+   row iff no key matches it, whatever the duplicates on the key side
+   (the broadcast relation drops them), and conflation runs once, for
+   the upserts only.
 """
 
 from __future__ import annotations
@@ -48,6 +52,23 @@ def align_to_spec(df: DataFrame, spec: TableSpec) -> DataFrame:
     )
 
 
+def _pk_exprs(pk_cols: list[str], image_col: str = "after") -> list:
+    """A change row's PK columns: read from the image struct, or from
+    ``before`` when the image is null (a delete carries the full
+    deleted row in its before-image, cdc_manager.go:249-256)."""
+    return [
+        F.coalesce(F.col(f"{image_col}.{c}"), F.col(f"before.{c}")).alias(c)
+        for c in pk_cols
+    ]
+
+
+def batch_keys(changes: DataFrame, pk_cols: list[str]) -> DataFrame:
+    """The PKs a batch touches, one row per change row (duplicates
+    kept): the key side of the merge's anti-join. Its distinct rows
+    are exactly ``conflate_latest(changes, pk_cols)``'s ``_pk``."""
+    return changes.select(*_pk_exprs(pk_cols))
+
+
 def conflate_latest(
     changes: DataFrame,
     pk_cols: list[str],
@@ -58,22 +79,9 @@ def conflate_latest(
     """Latest change per PK: ``max_by(row, (ts, seq))`` — equivalent
     to rank-1 of a window ordered by (ts desc, seq desc), but as a
     hash aggregate with map-side combine (see module docstring).
-
-    PK columns are read from the image struct: ``after`` for
-    insert/update, ``before`` for delete (delete carries the full
-    deleted row in its before-image, cdc_manager.go:249-256).
+    PK columns are read as ``_pk_exprs`` reads them.
     """
-    keyed = changes.withColumn(
-        "_pk",
-        F.struct(
-            *[
-                F.coalesce(
-                    F.col(f"{image_col}.{c}"), F.col(f"before.{c}")
-                ).alias(c)
-                for c in pk_cols
-            ]
-        ),
-    )
+    keyed = changes.withColumn("_pk", F.struct(*_pk_exprs(pk_cols, image_col)))
     payload = [c for c in keyed.columns if c != "_pk"]
     # struct comparison is lexicographic → (ts, seq) ordering
     top = keyed.groupBy("_pk").agg(
@@ -117,8 +125,7 @@ def apply_changes(
     # snapshot dtype should be the spec's by construction, not by
     # coercion accident.
     base = align_to_spec(base, spec)
-    touched = latest.select("_pk.*")
-    survivors = base.join(touched, on=pk, how="left_anti")
+    survivors = base.join(batch_keys(changes, pk), on=pk, how="left_anti")
     return survivors.unionByName(upserts)
 
 

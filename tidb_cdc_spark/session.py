@@ -62,6 +62,11 @@ def get_spark(
         # the static half carries no measurable win over the bounded
         # AQE runtime rewrite below.
         .config("spark.sql.join.preferSortMergeJoin", "true")
+        # --- generated-class cache: a 4-table stream alone compiles
+        # ~93 distinct classes, so Spark's default of 100 entries
+        # evicts and recompiles some every batch; 1000 holds the
+        # engine's working set (per-batch counts: CHANGES.md).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # --- preferSortMergeJoin=false alone only
         # affects the STATIC planner (whose size estimates rarely
         # qualify); this is the runtime half — AQE rewrites a

@@ -14,12 +14,14 @@ sink here fails the batch and BLOCKS the offset commit).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tidb_cdc_spark.cdc.apply import (
     align_to_spec,
@@ -31,6 +33,27 @@ from tidb_cdc_spark.cdc.scd import label_scd2_split
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.streaming import store
 from tidb_cdc_spark.streaming.store import guard_batch_watermark
+
+
+#: footer key under which Spark's Parquet writer records the row schema
+_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _written_schema(directory: str) -> StructType:
+    """The Spark schema ``directory``'s data files were written with,
+    read from one file's footer on the driver: the schema
+    ``spark.read.parquet`` infers, without the Spark job inference
+    runs. Every version directory is a Spark write (``commit_version``),
+    which leaves at least one file, with the key, even when empty."""
+    import pyarrow.parquet as pq
+
+    name = min(
+        n
+        for n in os.listdir(directory)
+        if n.startswith("part-") and n.endswith(".parquet")
+    )
+    meta = pq.read_metadata(os.path.join(directory, name)).metadata
+    return StructType.fromJson(json.loads(meta[_ROW_SCHEMA_KEY]))
 
 
 class Sink:
@@ -47,11 +70,16 @@ class ParquetSnapshotSink(Sink):
     copy-on-write MERGE pattern for a plain-Parquet table (commit
     protocol: ``store.py``).
 
-    Scale: each batch rewrites the snapshot via an anti-join on PK.
-    At 100 TB the same sink logic targets a format with real MERGE
-    (Delta/Iceberg) or a partitioned base where only touched
-    partitions rewrite (partition pruning on the PK-hash prefix);
-    the conflation/merge plan is identical.
+    Cost: each batch rewrites the whole snapshot via an anti-join on
+    PK. Rewriting only the PK-hash buckets a batch touches would not
+    help on uniform traffic: a ``snapshot_merge`` batch
+    (``perfbench/gen.py``) hashes 1,000 keys, 600 fresh inserts plus
+    400 updates or deletes of uniformly chosen live keys, so it
+    touches 1 − e^(−1000/N) of N buckets: about 98 % at N = 256, and
+    more with fewer buckets.
+
+    A version directory is read with the schema its writer recorded
+    (``_written_schema``), so a read plans no schema-inference job.
     """
 
     path: str
@@ -65,7 +93,8 @@ class ParquetSnapshotSink(Sink):
         p = store.read_pointer(self.path)
         if p is None:
             return None
-        return spark.read.parquet(os.path.join(self.path, f"{self.PREFIX}{p[0]}"))
+        version = os.path.join(self.path, f"{self.PREFIX}{p[0]}")
+        return spark.read.schema(_written_schema(version)).parquet(version)
 
     def bootstrap(self, initial: DataFrame, spec: TableSpec) -> None:
         """Seed the snapshot with an initial full-table load — the
