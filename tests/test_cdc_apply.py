@@ -4,6 +4,7 @@ the reference never tests (SURVEY §5)."""
 
 import pytest
 import json
+import os
 import random
 
 from pyspark.sql import functions as F
@@ -358,6 +359,111 @@ class TestBatchKeyAntiJoin:
         self._same_rows(merged, _conflated_key_merge(base, changes, spec))
         # a key is never dropped or doubled by the merge
         assert merged.count() == merged.select(*pk).distinct().count()
+
+
+#: the spec after ``TableSpec.evolve``: one added column, ``v`` widened
+ESPEC = SPEC.evolve(add=(ColumnSpec("Added", "string"),), widen={"v": "bigint"})
+
+
+def _emsg(op, k, v, added, ts):
+    return json.dumps({"database": "d", "table": "t", "type": op, "ts": ts,
+                       "data": {"k": k, "v": v, "added": added}})
+
+
+#: bootstrap keys: enough rows that every one of 4 bootstrap files, and
+#: every base partition Spark reads from them, stays non-empty
+_KEYS = [f"k{i:02d}" for i in range(40)]
+
+#: name → (spec, bootstrap rows, their DDL, batches as (spec, messages))
+SINK_CASES = {
+    "random": (
+        SPEC,
+        [(k, i) for i, k in enumerate(_KEYS)],
+        _KV,
+        [
+            (SPEC, _random_log(seed, 30, _KEYS[::3] + ["n0", "n1", "n2"]))
+            for seed in (5, 23, 41)
+        ],
+    ),
+    "all_delete": (
+        SPEC,
+        [(k, i) for i, k in enumerate(_KEYS)],
+        _KV,
+        [
+            (SPEC, [_msg("update", "k00", 7, 5)]),
+            (SPEC, [_msg("delete", k, i, 10 + i) for i, k in enumerate(_KEYS)]),
+            (SPEC, [_msg("insert", "e", 5, 50)]),
+        ],
+    ),
+    "composite_pk": (
+        CSPEC,
+        [(f"k{i % 8}", i, 10 * i) for i in range(40)],
+        "k string, n int, v int",
+        [(CSPEC, [
+            _cmsg("update", "k1", 1, 11, 10),
+            _cmsg("delete", "k2", 2, 20, 11),
+            _cmsg("insert", "k2", 41, 40, 12),
+            _cmsg("insert", "k1", 2, 50, 13),
+            _cmsg("update", "k1", 2, 51, 14),
+        ])],
+    ),
+    "evolve": (
+        SPEC,
+        [(k, i) for i, k in enumerate(_KEYS)],
+        _KV,
+        [
+            (SPEC, [_msg("update", "k00", 7, 10), _msg("insert", "g", 1, 11)]),
+            (ESPEC, [
+                _emsg("update", "k01", 2**40, "x", 20),
+                _emsg("insert", "h", 3, None, 21),
+                _emsg("delete", "k02", 2, None, 22),
+            ]),
+        ],
+    ),
+}
+
+
+class TestCoalescedBaseMerge:
+    """``ParquetSnapshotSink.process`` reads its base in as many
+    partitions as its bytes need: the same rows as merging the
+    version ``spark.read.parquet`` reads, and a small version written
+    as at most two files (base side and upserts), however many files
+    the version before it had."""
+
+    @staticmethod
+    def _parts(directory):
+        return len([n for n in os.listdir(directory) if n.startswith("part-")])
+
+    @pytest.mark.parametrize("case", sorted(SINK_CASES))
+    def test_same_rows_as_a_merge_of_the_parquet_read(self, spark, tmp_path, case):
+        from tidb_cdc_spark.streaming import ParquetSnapshotSink, store
+
+        spec, rows, ddl, batches = SINK_CASES[case]
+        sink = ParquetSnapshotSink(str(tmp_path / "snap"))
+        initial = spark.sparkContext.parallelize(rows, 4)  # 4 non-empty slices
+        sink.bootstrap(spark.createDataFrame(initial, ddl), spec)
+
+        def current():
+            version, _ = store.read_pointer(sink.path)
+            return os.path.join(sink.path, f"{sink.PREFIX}{version}")
+
+        assert self._parts(current()) == 4
+        for batch_id, (batch_spec, msgs) in enumerate(batches):
+            # cached and counted, so the planner sizes the batch as it
+            # sizes a streamed micro-batch, whose source scan it knows
+            changes = _parse(spark, msgs, batch_spec).persist()
+            try:
+                changes.count()
+                # the version read here is kept as the previous one
+                base = spark.read.parquet(current())
+                want = apply_changes(base, changes, batch_spec)
+                sink.process(changes, batch_id, batch_spec)
+                got = sink.read_current(spark)
+                assert got.exceptAll(want).count() == 0
+                assert want.exceptAll(got).count() == 0
+            finally:
+                changes.unpersist()
+            assert self._parts(current()) <= 2, os.listdir(current())
 
 
 class TestScd2History:

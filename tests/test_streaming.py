@@ -390,6 +390,58 @@ class TestOneBatchBodyBothModes:
         assert [(r.k, r.v) for r in sink.read_current(spark).collect()] == [("a", 5)]
 
 
+class TestSharedParserBuilds:
+    def test_one_parser_per_registration(self, spark, tmp_path, monkeypatch):
+        """A shared query builds each registration's parser once, on
+        its first batch, and applies it to every later one. Six
+        registrations fan out on more driver threads than cores, with
+        a short switch interval, so a lost or doubled build shows."""
+        import sys
+
+        from tidb_cdc_spark.streaming import connector
+
+        built = []
+
+        def counting(spec, **kw):
+            built.append(spec.table)
+            return real(spec, **kw)
+
+        real = connector.cdc_parser
+        monkeypatch.setattr(connector, "cdc_parser", counting)
+        tables = [f"p{i}" for i in range(6)]
+        events_dir = tmp_path / "in"
+        for b in range(2):
+            _write_batch(events_dir, f"b{b}.jsonl", [
+                _msg_for("d", t, "insert", {"k": f"a{b}", "v": b}, 10 + b)
+                for t in tables
+            ])
+        conn = Connector(
+            ConnectorConfig(server_name="srv", checkpoint_root=str(tmp_path / "ck"))
+        )
+        sinks = {t: MemorySink() for t in tables}
+        for t in tables:
+            conn.register(
+                TableSpec(database="d", table=t, columns=SPEC.columns), [sinks[t]]
+            )
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            q = conn.start_shared(
+                spark,
+                source=maxwell_file_stream(spark, str(events_dir), 1),
+                available_now=True,
+            )
+            assert q.awaitTermination(120)
+        finally:
+            sys.setswitchinterval(interval)
+        # two batches, each delivered to every table
+        for t in tables:
+            got = [(b, [(r.after.k, r.after.v) for r in rows])
+                   for b, rows in sinks[t].batches]
+            assert got == [(0, [("a0", 0)]), (1, [("a1", 1)])], t
+        assert sorted(built) == tables
+
+
 class TestJdbcMergeSql:
     def test_merge_statement_shape(self):
         sink = JdbcMergeSink(url="jdbc:x", table="tgt")

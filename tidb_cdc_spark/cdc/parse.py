@@ -240,8 +240,8 @@ def cdc_parser(
     """``parse_cdc`` for one spec with its expressions built once: the
     returned function applies them to any raw frame. Building them
     costs about 0.1 s of driver CPU for a ten-column spec, more than
-    parsing a small micro-batch, so a one-table streaming query builds
-    one parser and applies it to every batch."""
+    parsing a small micro-batch, so a streaming query builds one
+    parser per registration and applies it to every batch."""
     raw = F.col(value_col).cast("string")
     env = F.from_json(raw, typed_envelope_schema(spec))
     # _mono (monotonically_increasing_id) is non-deterministic, which

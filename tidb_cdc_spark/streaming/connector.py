@@ -19,6 +19,7 @@ anyway, :281-299 — data-loss bug we do not replicate).
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -182,17 +183,19 @@ class Connector:
         """Start one checkpointed query running the Connector's
         ``foreachBatch`` body for ``regs``."""
         seq = F.col("offset").cast("long") if "offset" in source.columns else None
-        # a one-table query builds its parse expressions once (each
-        # build costs about 0.1 s of driver CPU); a shared query may
-        # serve hundreds of registrations, most absent from any one
-        # batch, so it builds them per batch for the tables present
-        parse = cdc_parser(regs[0].spec, seq_col=seq) if len(regs) == 1 else None
+        # each registration's parse expressions are built once, when
+        # its rows first arrive (a build costs about 0.1 s of driver
+        # CPU, more than parsing a small batch); one thread at a time
+        # handles a registration, so the dict needs no lock
+        parsers: dict[str, Callable[[DataFrame], DataFrame]] = {}
 
         def deliver(r: _Registration, rows: DataFrame, batch_id: int) -> None:
+            if r.group not in parsers:
+                parsers[r.group] = cdc_parser(r.spec, seq_col=seq)
             # every sink of the table reads one cached parse; fan-out
             # loop parity (cdc_manager.go:277-298) — but a sink error
             # FAILS the batch (no silent offset commit past lost data)
-            changes = (parse or cdc_parser(r.spec, seq_col=seq))(rows).persist()
+            changes = parsers[r.group](rows).persist()
             try:
                 for sink in r.sinks:
                     with self._sink_locks[id(sink)]:
@@ -201,7 +204,7 @@ class Connector:
                 changes.unpersist()
 
         def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-            if parse is not None:
+            if len(regs) == 1:
                 deliver(regs[0], batch_df, batch_id)
                 return
             # ONE slim routing parse per row, cached with the batch:

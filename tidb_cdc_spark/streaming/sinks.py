@@ -15,6 +15,7 @@ sink here fails the batch and BLOCKS the offset commit).
 from __future__ import annotations
 
 import json
+import math
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -39,21 +40,31 @@ from tidb_cdc_spark.streaming.store import guard_batch_watermark
 _ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _written_schema(directory: str) -> StructType:
-    """The Spark schema ``directory``'s data files were written with,
+def _written(directory: str) -> tuple[StructType, int]:
+    """The Spark schema ``directory``'s data files were written with
+    and their total size in bytes, from one listing. The schema is
     read from one file's footer on the driver: the schema
     ``spark.read.parquet`` infers, without the Spark job inference
     runs. Every version directory is a Spark write (``commit_version``),
     which leaves at least one file, with the key, even when empty."""
     import pyarrow.parquet as pq
 
-    name = min(
+    names = [
         n
         for n in os.listdir(directory)
         if n.startswith("part-") and n.endswith(".parquet")
-    )
-    meta = pq.read_metadata(os.path.join(directory, name)).metadata
-    return StructType.fromJson(json.loads(meta[_ROW_SCHEMA_KEY]))
+    ]
+    meta = pq.read_metadata(os.path.join(directory, min(names))).metadata
+    size = sum(os.path.getsize(os.path.join(directory, n)) for n in names)
+    return StructType.fromJson(json.loads(meta[_ROW_SCHEMA_KEY])), size
+
+
+def _split_bytes(spark) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes. Unset, the
+    session returns it with a unit (``'134217728b'``), so it is parsed
+    by Spark's own byte-string rule."""
+    conf = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    return spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
 
 
 class Sink:
@@ -78,8 +89,20 @@ class ParquetSnapshotSink(Sink):
     touches 1 − e^(−1000/N) of N buckets: about 98 % at N = 256, and
     more with fewer buckets.
 
+    The rewrite's fixed cost is per file: each one is a write task, a
+    deserialized Hadoop configuration and forked ``chmod`` calls,
+    which outweigh the data of a small version. So the merge reads its
+    base in ``ceil(bytes / spark.sql.files.maxPartitionBytes)``
+    partitions, coalesced with no shuffle, and a version is written as
+    that many files plus the upserts' own: two for a small table,
+    where Spark's own read would spread the base over every core. A
+    base many splits long keeps about the split count Spark's read
+    gives it. Only the merge path does this: ``read_current`` keeps
+    Spark's parallel split for readers, and ``Scd2SplitHistorySink``
+    writes through its window shuffle, which sizes its output already.
+
     A version directory is read with the schema its writer recorded
-    (``_written_schema``), so a read plans no schema-inference job.
+    (``_written``), so a read plans no schema-inference job.
     """
 
     path: str
@@ -89,12 +112,18 @@ class ParquetSnapshotSink(Sink):
         p = store.read_pointer(self.path)
         return None if p is None else p[1]
 
-    def read_current(self, spark) -> DataFrame | None:
+    def _read_version(self, spark) -> tuple[DataFrame, int] | None:
+        """The published version and its size in bytes."""
         p = store.read_pointer(self.path)
         if p is None:
             return None
         version = os.path.join(self.path, f"{self.PREFIX}{p[0]}")
-        return spark.read.schema(_written_schema(version)).parquet(version)
+        schema, size = _written(version)
+        return spark.read.schema(schema).parquet(version), size
+
+    def read_current(self, spark) -> DataFrame | None:
+        read = self._read_version(spark)
+        return None if read is None else read[0]
 
     def bootstrap(self, initial: DataFrame, spec: TableSpec) -> None:
         """Seed the snapshot with an initial full-table load — the
@@ -126,7 +155,11 @@ class ParquetSnapshotSink(Sink):
 
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
         spark = changes.sparkSession
-        base = self.read_current(spark)
+        base, read = None, self._read_version(spark)
+        if read is not None:
+            # each base partition is written back as one file
+            version, size = read
+            base = version.coalesce(max(1, math.ceil(size / _split_bytes(spark))))
         merged = apply_changes(base, changes, spec)
         store.commit_version(self.path, self.PREFIX, merged, batch_id)
 
