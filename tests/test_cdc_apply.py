@@ -466,6 +466,47 @@ class TestCoalescedBaseMerge:
             assert self._parts(current()) <= 2, os.listdir(current())
 
 
+class TestSnapshotReplayGuard:
+    """``ParquetSnapshotSink`` keeps the batch watermark in its pointer:
+    a re-delivered batch is a no-op, a batch id behind the watermark
+    raises, and a bootstrap version (watermark −1) takes batch 0."""
+
+    BATCHES = [
+        [_msg("insert", "a", 1, 10), _msg("insert", "b", 2, 11)],
+        [_msg("update", "a", 5, 20), _msg("delete", "b", 2, 21)],
+    ]
+
+    def _sink(self, spark, tmp_path):
+        from tidb_cdc_spark.streaming import ParquetSnapshotSink
+
+        sink = ParquetSnapshotSink(str(tmp_path / "snap"))
+        for batch_id, msgs in enumerate(self.BATCHES):
+            sink.process(_parse(spark, msgs), batch_id, SPEC)
+        return sink
+
+    def test_redelivered_batch_leaves_the_pointer(self, spark, tmp_path):
+        sink = self._sink(spark, tmp_path)
+        pointer = tmp_path / "snap" / "_CURRENT"
+        before = pointer.read_bytes()
+        sink.process(_parse(spark, self.BATCHES[1]), 1, SPEC)
+        assert pointer.read_bytes() == before
+        assert _state(sink.read_current(spark)) == {"a": 5}
+
+    def test_batch_behind_the_watermark_raises(self, spark, tmp_path):
+        sink = self._sink(spark, tmp_path)
+        with pytest.raises(RuntimeError, match="behind the stored watermark"):
+            sink.process(_parse(spark, self.BATCHES[0]), 0, SPEC)
+        assert _state(sink.read_current(spark)) == {"a": 5}
+
+    def test_bootstrap_then_batch_zero_applies(self, spark, tmp_path):
+        from tidb_cdc_spark.streaming import ParquetSnapshotSink
+
+        sink = ParquetSnapshotSink(str(tmp_path / "snap"))
+        sink.bootstrap(spark.createDataFrame([("z", 0)], "k string, v int"), SPEC)
+        sink.process(_parse(spark, self.BATCHES[0]), 0, SPEC)
+        assert _state(sink.read_current(spark)) == {"z": 0, "a": 1, "b": 2}
+
+
 class TestScd2History:
     def test_delete_closes_interval_without_opening(self, spark):
         from tidb_cdc_spark.cdc.scd import scd2_history

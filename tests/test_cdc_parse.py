@@ -215,3 +215,65 @@ class TestSpec:
 
     def test_topic_name(self):
         assert deals_spec().topic("srv") == "srv.deal_test.deals"
+
+
+#: two-column primary key with a non-string key column
+PAIR_SPEC = TableSpec(
+    database="d",
+    table="t",
+    columns=(
+        ColumnSpec("K", "string", column="k", pk=True),
+        ColumnSpec("N", "int", column="n", pk=True),
+        ColumnSpec("V", "decimal(12,2)"),
+        ColumnSpec("At", "timestamp"),
+    ),
+)
+
+_DEALS_IMAGE = (
+    "struct<entity_id:string,entity_name:string,entity_type:int,"
+    "deal_type:string,financiers_entity_id:string,financiers_name:string,"
+    "financiers_type:int,financing_company_data_module_id:string,"
+    "financing_company_entity_id:string,financing_company_entity_type:int,"
+    "financing_company_name:string,status:int,type:string,"
+    "created_at:timestamp,updated_at:timestamp,deleted_at:timestamp>"
+)
+_PAIR_IMAGE = "struct<k:string,n:int,v:decimal(12,2),at:timestamp>"
+
+
+class TestChangeRowContract:
+    """The typed change row ``parse_cdc`` emits — ``op string, ts
+    bigint, _seq bigint, before struct, after struct`` — is what every
+    operator after the parse reads by fixed column names, so its
+    fields, order and types are pinned, and so are the frames that
+    ``apply_changes`` and ``label_scd2_split`` build from it."""
+
+    @pytest.mark.parametrize(
+        "spec, image", [(deals_spec(), _DEALS_IMAGE), (PAIR_SPEC, _PAIR_IMAGE)]
+    )
+    def test_parse_cdc_schema(self, spark, spec, image):
+        got = parse_cdc(_df(spark, [GOLDEN]), spec).schema.simpleString()
+        assert got == (
+            f"struct<op:string,ts:bigint,_seq:bigint,before:{image},after:{image}>"
+        )
+
+    def test_apply_and_split_label_columns(self, spark):
+        from tidb_cdc_spark.cdc.apply import apply_changes
+        from tidb_cdc_spark.cdc.scd import label_scd2_split
+
+        changes = parse_cdc(_df(spark, []), PAIR_SPEC)
+        image = [("k", "string"), ("n", "int"), ("v", "decimal(12,2)"),
+                 ("at", "timestamp")]
+        base = spark.createDataFrame([], ", ".join(f"{c} {t}" for c, t in image))
+        assert apply_changes(None, changes, PAIR_SPEC).dtypes == image
+        assert apply_changes(base, changes, PAIR_SPEC).dtypes == image
+        labelled = image + [
+            ("version", "bigint"),
+            ("valid_from", "bigint"),
+            ("valid_to", "bigint"),
+            ("is_current", "boolean"),
+            ("__head", "boolean"),
+        ]
+        first = label_scd2_split(None, changes, PAIR_SPEC)
+        assert first.dtypes == labelled
+        head = first.filter("__head").drop("__head")
+        assert label_scd2_split(head, changes, PAIR_SPEC).dtypes == labelled

@@ -1277,8 +1277,8 @@ class TestSharedConnectorWidth:
                     ("a", i + 100)
                 }
             else:
-                # absent tables skipped entirely — no snapshot dir
-                assert cur is None or cur.count() == 0
+                # absent tables skipped entirely — no snapshot published
+                assert cur is None
 
 
 class TestSharedSinkErrorPropagation:

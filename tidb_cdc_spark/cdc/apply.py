@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tidb_cdc_spark.cdc.schema import CDCType
+from tidb_cdc_spark.cdc.schema import SEQ_COL, TS_COL, CDCType, change_image
 from tidb_cdc_spark.cdc.spec import TableSpec
 
 
@@ -52,41 +52,25 @@ def align_to_spec(df: DataFrame, spec: TableSpec) -> DataFrame:
     )
 
 
-def _pk_exprs(pk_cols: list[str], image_col: str = "after") -> list:
-    """A change row's PK columns: read from the image struct, or from
-    ``before`` when the image is null (a delete carries the full
-    deleted row in its before-image, cdc_manager.go:249-256)."""
-    return [
-        F.coalesce(F.col(f"{image_col}.{c}"), F.col(f"before.{c}")).alias(c)
-        for c in pk_cols
-    ]
-
-
 def batch_keys(changes: DataFrame, pk_cols: list[str]) -> DataFrame:
     """The PKs a batch touches, one row per change row (duplicates
     kept): the key side of the merge's anti-join. Its distinct rows
     are exactly ``conflate_latest(changes, pk_cols)``'s ``_pk``."""
-    return changes.select(*_pk_exprs(pk_cols))
+    return changes.select(*change_image(pk_cols))
 
 
-def conflate_latest(
-    changes: DataFrame,
-    pk_cols: list[str],
-    image_col: str = "after",
-    ts_col: str = "ts",
-    seq_col: str = "_seq",
-) -> DataFrame:
+def conflate_latest(changes: DataFrame, pk_cols: list[str]) -> DataFrame:
     """Latest change per PK: ``max_by(row, (ts, seq))`` — equivalent
     to rank-1 of a window ordered by (ts desc, seq desc), but as a
     hash aggregate with map-side combine (see module docstring).
-    PK columns are read as ``_pk_exprs`` reads them.
+    PK columns are read from the change's image (``change_image``).
     """
-    keyed = changes.withColumn("_pk", F.struct(*_pk_exprs(pk_cols, image_col)))
+    keyed = changes.withColumn("_pk", F.struct(*change_image(pk_cols)))
     payload = [c for c in keyed.columns if c != "_pk"]
     # struct comparison is lexicographic → (ts, seq) ordering
     top = keyed.groupBy("_pk").agg(
         F.max_by(
-            F.struct(*payload), F.struct(F.col(ts_col), F.col(seq_col))
+            F.struct(*payload), F.struct(F.col(TS_COL), F.col(SEQ_COL))
         ).alias("_top")
     )
     return top.select(*[F.col(f"_top.{c}").alias(c) for c in payload], "_pk")

@@ -25,8 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tidb_cdc_spark.cdc.schema import change_image
+
 #: exact accumulator type for value sums (matches events_hourly).
 _DEC = "decimal(18,2)"
+#: the maintained aggregate's count and sum columns
+COUNT_COL, SUM_COL = "n", "total"
 
 
 def agg_delta(
@@ -50,10 +54,9 @@ def agg_delta(
         .when(F.col("op") == "delete", -before_v)
         .otherwise(after_v - before_v)
     )
-    k = F.coalesce(F.col(f"after.{key}"), F.col(f"before.{key}"))
     return (
         changes.select(
-            k.alias(key),
+            *change_image([key]),
             d_count.alias("_dc"),
             F.coalesce(d_sum, zero).alias("_ds"),
         )
@@ -65,21 +68,16 @@ def agg_delta(
     )
 
 
-def merge_agg(
-    base: DataFrame,
-    delta: DataFrame,
-    key: str,
-    count_col: str = "n",
-    sum_col: str = "total",
-) -> DataFrame:
-    """Merge a delta aggregate into the base aggregate: full-outer on
-    the key, components added, keys whose count reaches 0 dropped
-    (fully deleted). Both inputs are aggregates — at scale this join
-    is keyed and slim (no raw rows)."""
+def merge_agg(base: DataFrame, delta: DataFrame, key: str) -> DataFrame:
+    """Merge a delta aggregate into the base aggregate
+    (``key, n, total``): full-outer on the key, components added,
+    keys whose count reaches 0 dropped (fully deleted). Both inputs
+    are aggregates — at scale this join is keyed and slim (no raw
+    rows)."""
     b = base.select(
         F.col(key),
-        F.col(count_col).alias("_bn"),
-        F.col(sum_col).cast(_DEC).alias("_bs"),
+        F.col(COUNT_COL).alias("_bn"),
+        F.col(SUM_COL).cast(_DEC).alias("_bs"),
     )
     d = delta.select(
         F.col(key),
@@ -93,11 +91,11 @@ def merge_agg(
             key,
             (F.coalesce("_bn", F.lit(0)) + F.coalesce("_dn", F.lit(0)))
             .cast("long")
-            .alias(count_col),
+            .alias(COUNT_COL),
             (F.coalesce(F.col("_bs"), zero) + F.coalesce(F.col("_ds"), zero))
             .cast(_DEC)
-            .alias(sum_col),
+            .alias(SUM_COL),
         )
-        .filter(F.col(count_col) > 0)
+        .filter(F.col(COUNT_COL) > 0)
     )
     return merged

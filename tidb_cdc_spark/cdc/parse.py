@@ -25,7 +25,14 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tidb_cdc_spark.cdc.schema import ENVELOPE_SCHEMA, CDCType
+from tidb_cdc_spark.cdc.schema import (
+    ENVELOPE_SCHEMA,
+    SEQ_COL,
+    TS_COL,
+    VALUE_COL,
+    CDCType,
+    envelope_schema,
+)
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
 
 #: Fixed zone the reference parses wall-clock timestamps in
@@ -35,12 +42,15 @@ SOURCE_TIMEZONE = "Asia/Shanghai"
 _INT_RE = r"^-?\d+$"
 
 
-def parse_envelope(
-    df: DataFrame,
-    value_col: str = "value",
-    drop_malformed: bool = False,
-) -> DataFrame:
-    """Phase-1 parse: raw Kafka/file bytes → envelope columns.
+def _malformed(env: Column) -> Column:
+    """The one malformed-envelope rule: ``from_json`` yields a null
+    envelope for a null message and an all-null one for text that is
+    not an envelope, so a required field (``type``) is checked too."""
+    return env.isNull() | env["type"].isNull()
+
+
+def parse_envelope(df: DataFrame, drop_malformed: bool = False) -> DataFrame:
+    """Raw Kafka/file bytes → envelope columns, row images as maps.
 
     Output: ``database, table, type, ts, data, old, _corrupt``.
     Null messages (Kafka tombstones) are dropped, matching
@@ -48,27 +58,18 @@ def parse_envelope(
     ``_corrupt`` column (dead-letter) instead of the reference's
     panic at cdc_manager.go:164.
     """
-    raw = F.col(value_col).cast("string")
+    raw = F.col(VALUE_COL).cast("string")
     parsed = F.from_json(raw, ENVELOPE_SCHEMA)
-    env = F.col("_env")
     out = (
-        df.filter(F.col(value_col).isNotNull())
+        df.filter(F.col(VALUE_COL).isNotNull())
         .withColumn("_env", parsed)
         # reference _env (not the from_json expr) so the JSON parse
         # runs once per row even without subexpression elimination
-        .withColumn(
-            "_corrupt",
-            F.when(env.isNull() | env["type"].isNull(), raw),
-        )
+        .withColumn("_corrupt", F.when(_malformed(F.col("_env")), raw))
         .select(
-            F.col("_env.database").alias("database"),
-            F.col("_env.table").alias("table"),
-            F.col("_env.type").alias("type"),
-            F.col("_env.ts").alias("ts"),
-            F.col("_env.data").alias("data"),
-            F.col("_env.old").alias("old"),
+            *[F.col(f"_env.{f.name}").alias(f.name) for f in ENVELOPE_SCHEMA],
             "_corrupt",
-            *[c for c in df.columns if c not in (value_col,)],
+            *[c for c in df.columns if c != VALUE_COL],
         )
     )
     if drop_malformed:
@@ -76,9 +77,7 @@ def parse_envelope(
     return out
 
 
-def schema_drift(
-    df: DataFrame, spec: TableSpec, value_col: str = "value"
-) -> DataFrame:
+def schema_drift(df: DataFrame, spec: TableSpec) -> DataFrame:
     """Stream-vs-spec drift report: which columns arrive that the spec
     does not declare, and which declared columns the stream no longer
     carries — per column, with event counts.
@@ -91,13 +90,13 @@ def schema_drift(
     absent from an event's ``data`` — decoded as NULL by
     ``parse_cdc``). Feed the findings into ``TableSpec.evolve``.
 
-    Plan: the string-map phase-1 parse (key PRESENCE is detectable
+    Plan: the string-map envelope parse (key PRESENCE is detectable
     there), two ``array_except`` probes per row, explode of the
     (usually empty) drift array, then a groupBy on (col_name, kind) —
     shuffle cardinality = drifted columns, not rows, so the report is
     a cheap monitoring query at any scale.
     """
-    env = parse_envelope(df, value_col, drop_malformed=True)
+    env = parse_envelope(df, drop_malformed=True)
     known = F.array(*[F.lit(c.source) for c in spec.resolved_columns()])
     keys = F.map_keys(F.col("data"))
     unknown = F.array_except(keys, known)
@@ -164,47 +163,8 @@ def cast_value(value: Column, col: ColumnSpec) -> Column:
     return value.try_cast(col.dtype)
 
 
-def typed_envelope_schema(spec: TableSpec):
-    """Single-phase envelope schema for ONE table: ``data`` is a
-    struct of the spec's source columns (all string — coercion stays
-    in ``cast_value``), ``old`` stays ``map<string,string>`` because
-    the before-image overlay needs key-PRESENCE detection
-    (Maxwell's ``old`` holds changed columns only, and ``old`` maps
-    are small — a linear map probe per spec column is cheap there).
-
-    Why: parsing ``data`` as a map makes every per-column ``getItem``
-    an O(columns) linear scan of the Tungsten map — O(columns²) work
-    per row. Struct field access is O(1), and the whole projection
-    stays in whole-stage codegen with ONE ``from_json`` per row.
-    """
-    from pyspark.sql.types import (
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    data_struct = StructType(
-        [StructField(c.source, StringType()) for c in spec.resolved_columns()]
-    )
-    return StructType(
-        [
-            StructField("database", StringType()),
-            StructField("table", StringType()),
-            StructField("type", StringType()),
-            StructField("ts", LongType()),
-            StructField("data", data_struct),
-            StructField("old", MapType(StringType(), StringType())),
-        ]
-    )
-
-
 def parse_cdc(
-    df: DataFrame,
-    spec: TableSpec,
-    value_col: str = "value",
-    seq_col: Column | None = None,
+    df: DataFrame, spec: TableSpec, seq_col: Column | None = None
 ) -> DataFrame:
     """End-to-end: raw messages → typed change rows for one table.
 
@@ -221,29 +181,25 @@ def parse_cdc(
     within a partition (deals_changefeed.toml:28-31), so downstream
     conflation orders by (ts, _seq).
 
-    Single-phase fast path: one ``from_json`` with a per-table typed
-    envelope (see ``typed_envelope_schema``), then pure struct-field
-    casts.
+    One ``from_json`` with the table's envelope
+    (``envelope_schema(spec)``), then pure struct-field casts.
 
     Scale: stateless, shuffle-free, fully codegen'd; parallelism =
     source partitions. At 100 TB of backlog this stage scales
     linearly with executors.
     """
-    return cdc_parser(spec, value_col, seq_col)(df)
+    return cdc_parser(spec, seq_col)(df)
 
 
 def cdc_parser(
-    spec: TableSpec,
-    value_col: str = "value",
-    seq_col: Column | None = None,
+    spec: TableSpec, seq_col: Column | None = None
 ) -> Callable[[DataFrame], DataFrame]:
     """``parse_cdc`` for one spec with its expressions built once: the
     returned function applies them to any raw frame. Building them
     costs about 0.1 s of driver CPU for a ten-column spec, more than
     parsing a small micro-batch, so a streaming query builds one
     parser per registration and applies it to every batch."""
-    raw = F.col(value_col).cast("string")
-    env = F.from_json(raw, typed_envelope_schema(spec))
+    env = F.from_json(F.col(VALUE_COL).cast("string"), envelope_schema(spec))
     # _mono (monotonically_increasing_id) is non-deterministic, which
     # blocks predicate pushdown through this projection — guaranteeing
     # the JSON parse runs exactly once per row instead of being
@@ -252,16 +208,16 @@ def cdc_parser(
     # inside foreachBatch (``streaming/connector.py``), where the
     # micro-batch is a batch frame, so this holds there too.
     mono = F.monotonically_increasing_id()
-    # NOTE: no explicit tombstone filter on value_col here — a null
+    # NOTE: no explicit tombstone filter on the value here — a null
     # Kafka value parses to a null envelope, which the malformed
     # filter below already drops (same outcome as cdc_manager.go:
     # 209-211). An explicit isnotnull(value) would be pushed below
     # this projection and re-evaluate the value expression (fatal
     # when value is computed, e.g. the bench's synthesized to_json).
     valid = (
-        F.col("_env").isNotNull()
-        & F.col("_env.type").isNotNull()  # malformed → dropped (dead-letter
-        # surface is parse_envelope; the reference panics, cdc_manager.go:164)
+        # malformed → dropped (dead-letter surface is parse_envelope;
+        # the reference panics, cdc_manager.go:164)
+        ~_malformed(F.col("_env"))
         & (F.col("_env.database") == spec.database)
         & (F.col("_env.table") == spec.table)
     )
@@ -310,19 +266,19 @@ def cdc_parser(
     known = F.col("type").isin(*CDCType.ALL) & has_data
     typed = [
         F.col("type").alias("op"),
-        F.col("ts"),
-        F.col("_seq"),
+        F.col(TS_COL),
+        F.col(SEQ_COL),
         before.alias("before"),
         after.alias("after"),
     ]
 
     def parse(df: DataFrame) -> DataFrame:
-        passthrough = [c for c in df.columns if c != value_col]
+        passthrough = [c for c in df.columns if c != VALUE_COL]
         return (
             df.select(env.alias("_env"), mono.alias("_mono"), *passthrough)
             .filter(valid)
             .select(*fields, *passthrough)
-            .withColumn("_seq", seq)
+            .withColumn(SEQ_COL, seq)
             .filter(known)
             .select(*typed, *passthrough)
         )

@@ -23,16 +23,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tidb_cdc_spark.cdc.schema import CDCType
+from tidb_cdc_spark.cdc.schema import SEQ_COL, TS_COL, CDCType, change_image
 from tidb_cdc_spark.cdc.spec import TableSpec
 
 
-def scd2_history(
-    changes: DataFrame,
-    spec: TableSpec,
-    ts_col: str = "ts",
-    seq_col: str = "_seq",
-) -> DataFrame:
+def scd2_history(changes: DataFrame, spec: TableSpec) -> DataFrame:
     """Versioned history rows from typed change rows (the
     ``parse_cdc`` output schema ``op, ts, _seq, before, after``).
 
@@ -48,13 +43,10 @@ def scd2_history(
     if not pk:
         raise ValueError(f"spec {spec.table} has no primary key")
     keyed = changes.select(
-        *[
-            F.coalesce(F.col(f"after.{c}"), F.col(f"before.{c}")).alias(c)
-            for c in pk
-        ],
+        *change_image(pk),
         "op",
-        F.col(ts_col).alias("valid_from"),
-        F.col(seq_col).alias("__seq"),
+        F.col(TS_COL).alias("valid_from"),
+        F.col(SEQ_COL).alias("__seq"),
         F.col("after").alias("__after"),
     )
     w = Window.partitionBy(*pk).orderBy("valid_from", "__seq")
@@ -81,11 +73,7 @@ def scd2_history(
 
 
 def label_scd2_split(
-    head: DataFrame | None,
-    changes: DataFrame,
-    spec: TableSpec,
-    ts_col: str = "ts",
-    seq_col: str = "_seq",
+    head: DataFrame | None, changes: DataFrame, spec: TableSpec
 ) -> DataFrame:
     """One micro-batch of typed changes merged into a split SCD2
     store's ``head`` (None for an empty store): the ``scd2_history``
@@ -121,16 +109,13 @@ def label_scd2_split(
         raise ValueError(f"spec {spec.table} has no primary key")
     attrs = [c.target for c in spec.resolved_columns() if not c.pk]
     rows = changes.select(
-        *[
-            F.coalesce(F.col(f"after.{c}"), F.col(f"before.{c}")).alias(c)
-            for c in pk
-        ],
+        *change_image(pk),
         *[F.col(f"after.{a}").alias(a) for a in attrs],
         F.lit(1).alias("__src"),
         F.col("op").alias("__op"),
-        F.col(ts_col).alias("valid_from"),
-        F.col(seq_col).alias("__seq"),
-        F.lit(None).cast(changes.schema[ts_col].dataType).alias("valid_to"),
+        F.col(TS_COL).alias("valid_from"),
+        F.col(SEQ_COL).alias("__seq"),
+        F.lit(None).cast(changes.schema[TS_COL].dataType).alias("valid_to"),
         (F.col("op") != CDCType.DELETE).cast("long").alias("version"),
     )
     if head is not None:
@@ -164,17 +149,13 @@ def label_scd2_split(
 
 
 def merge_scd2_split(
-    head: DataFrame | None,
-    changes: DataFrame,
-    spec: TableSpec,
-    ts_col: str = "ts",
-    seq_col: str = "_seq",
+    head: DataFrame | None, changes: DataFrame, spec: TableSpec
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """``label_scd2_split`` as ``(new_head, newly_closed, handles)``:
     the two filters of the one labelled frame. Nothing is persisted,
     so ``handles`` is always empty; it stays for callers that unpack
     three values."""
-    labelled = label_scd2_split(head, changes, spec, ts_col, seq_col)
+    labelled = label_scd2_split(head, changes, spec)
     return (
         labelled.filter("__head").drop("__head"),
         labelled.filter(~F.col("__head")).drop("__head"),

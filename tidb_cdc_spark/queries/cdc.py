@@ -12,13 +12,14 @@ envelopes the parser rejects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_cdc_spark.cdc.apply import snapshot_from_ops
 from tidb_cdc_spark.cdc.incremental import agg_delta, merge_agg
 from tidb_cdc_spark.cdc.parse import parse_cdc, parse_envelope, schema_drift
 from tidb_cdc_spark.cdc.scd import scd2_history
+from tidb_cdc_spark.cdc.schema import ENVELOPE_HEADER
 from tidb_cdc_spark.cdc.spec import ColumnSpec, TableSpec
 from tidb_cdc_spark.session import fan_out, materialize, read_table
 
@@ -64,6 +65,40 @@ def _cached_source(spark: SparkSession, key, build) -> DataFrame:
     return cached
 
 
+def _message(table: str, op: Column, ts: Column, data: Column) -> Column:
+    """One Maxwell message of database ``app`` as JSON text: the
+    envelope header (``cdc.schema.ENVELOPE_HEADER``) and ``data``."""
+    header = (F.lit("app"), F.lit(table), op, ts)
+    return F.to_json(
+        F.struct(
+            *[v.alias(f.name) for v, f in zip(header, ENVELOPE_HEADER)],
+            data.alias("data"),
+        )
+    )
+
+
+def _op_mix() -> Column:
+    """The insert/update/delete mix by ``event_id % 4`` that the
+    oracles spell as a ``CASE``."""
+    return (
+        F.when(F.col("event_id") % 4 == 3, "delete")
+        .when(F.col("event_id") % 4 == 1, "update")
+        .otherwise("insert")
+    )
+
+
+def _event_data(*extra: Column) -> Column:
+    """An ``events`` row as a message's ``data`` image."""
+    return F.struct(
+        F.col("user_id"),
+        F.col("event_id"),
+        F.col("event_type"),
+        F.col("value"),
+        F.unix_millis(F.col("ts")).alias("ts_ms"),
+        *extra,
+    )
+
+
 def _envelopes(spark: SparkSession, sf_dir: str, with_ops: bool) -> DataFrame:
     """events rows → Maxwell JSON messages (one per row).
 
@@ -82,31 +117,9 @@ def _envelopes(spark: SparkSession, sf_dir: str, with_ops: bool) -> DataFrame:
         # partitions; the single-row-group test parquet collapses the
         # scan to one split, which would serialize the JSON round-trip.
         ev = fan_out(read_table(spark, sf_dir, "events"), spark)
-        op = (
-            F.when(F.col("event_id") % 4 == 3, "delete")
-            .when(F.col("event_id") % 4 == 1, "update")
-            .otherwise("insert")
-            if with_ops
-            else F.lit("insert")
-        )
-        data = F.struct(
-            F.col("user_id"),
-            F.col("event_id"),
-            F.col("event_type"),
-            F.col("value"),
-            F.unix_millis(F.col("ts")).alias("ts_ms"),
-        )
-        return ev.select(
-            F.to_json(
-                F.struct(
-                    F.lit("app").alias("database"),
-                    F.lit("events").alias("table"),
-                    op.alias("type"),
-                    F.unix_timestamp(F.col("ts")).alias("ts"),
-                    data.alias("data"),
-                )
-            ).alias("value")
-        )
+        op = _op_mix() if with_ops else F.lit("insert")
+        ts = F.unix_timestamp(F.col("ts"))
+        return ev.select(_message("events", op, ts, _event_data()).alias("value"))
 
     return _cached_source(spark, (sf_dir, with_ops), build)
 
@@ -264,7 +277,7 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("after"),
     )
     delta = agg_delta(changes, key="event_type", value_field="value")
-    merged = merge_agg(base, delta, key="event_type", count_col="n", sum_col="total")
+    merged = merge_agg(base, delta, key="event_type")
     return merged.select(
         "event_type",
         F.col("n"),
@@ -309,26 +322,12 @@ def cdc_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         ev = fan_out(read_table(spark, sf_dir, "events"), spark)
-        data = F.struct(
-            F.col("user_id"),
-            F.col("event_id"),
-            F.col("event_type"),
-            F.col("value"),
-            F.unix_millis(F.col("ts")).alias("ts_ms"),
-            # to_json omits null fields, so odd event_ids genuinely lack
-            # the key (absence, not null — the drift probe detects keys)
-            F.when(F.col("event_id") % 2 == 0, F.lit("shard-a")).alias("extra_col"),
-        )
+        # to_json omits null fields, so odd event_ids genuinely lack
+        # the key (absence, not null — the drift probe detects keys)
+        extra = F.when(F.col("event_id") % 2 == 0, F.lit("shard-a")).alias("extra_col")
+        ts = F.unix_timestamp(F.col("ts"))
         return ev.select(
-            F.to_json(
-                F.struct(
-                    F.lit("app").alias("database"),
-                    F.lit("events").alias("table"),
-                    F.lit("insert").alias("type"),
-                    F.unix_timestamp(F.col("ts")).alias("ts"),
-                    data.alias("data"),
-                )
-            ).alias("value")
+            _message("events", F.lit("insert"), ts, _event_data(extra)).alias("value")
         )
 
     env = _cached_source(spark, (sf_dir, "drift"), build)
@@ -371,17 +370,8 @@ def cdc_decimal_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_discount").cast("decimal(12,2)").cast("string").alias("discount"),
             F.col("l_returnflag"),
         )
-        return li.select(
-            F.to_json(
-                F.struct(
-                    F.lit("app").alias("database"),
-                    F.lit("li_money").alias("table"),
-                    F.lit("insert").alias("type"),
-                    F.lit(0).cast("long").alias("ts"),
-                    data.alias("data"),
-                )
-            ).alias("value")
-        )
+        ts = F.lit(0).cast("long")
+        return li.select(_message("li_money", F.lit("insert"), ts, data).alias("value"))
 
     env = _cached_source(spark, (sf_dir, "money"), build)
     spec = TableSpec(
@@ -432,19 +422,11 @@ def cdc_dead_letter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket."""
 
     ev = fan_out(read_table(spark, sf_dir, "events"), spark)
-    op = (
-        F.when(F.col("event_id") % 4 == 3, "delete")
-        .when(F.col("event_id") % 4 == 1, "update")
-        .otherwise("insert")
-    )
-    good = F.to_json(
-        F.struct(
-            F.lit("app").alias("database"),
-            F.lit("events").alias("table"),
-            op.alias("type"),
-            F.unix_timestamp(F.col("ts")).alias("ts"),
-            F.struct(F.col("event_id"), F.col("user_id")).alias("data"),
-        )
+    good = _message(
+        "events",
+        _op_mix(),
+        F.unix_timestamp(F.col("ts")),
+        F.struct(F.col("event_id"), F.col("user_id")),
     )
     value = F.when(
         F.col("event_id") % 7 == 0, F.concat(F.lit("not json "), good)

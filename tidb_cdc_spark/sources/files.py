@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def maxwell_file_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch read: one Maxwell JSON document per line → ``value``."""
-    return spark.read.text(path).withColumnRenamed("value", "value")
+    return spark.read.text(path)
 
 
 def maxwell_file_stream(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tidb_cdc_spark.cdc.parse import cdc_parser
+from tidb_cdc_spark.cdc.schema import ROUTE_SCHEMA, VALUE_COL
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.sources.kafka import KafkaSourceConfig, kafka_stream
 from tidb_cdc_spark.streaming.sinks import Sink
@@ -215,9 +216,7 @@ class Connector:
             # the cached rows
             routed = batch_df.withColumn(
                 "_route",
-                F.from_json(
-                    F.col("value").cast("string"), "database string, table string"
-                ),
+                F.from_json(F.col(VALUE_COL).cast("string"), ROUTE_SCHEMA),
             ).persist()
 
             def handle(r: _Registration) -> None:

@@ -4,12 +4,19 @@ real built-in sinks the reference lacks (SURVEY §2.1).
 
 All sinks are driven from the Connector's one ``foreachBatch`` body
 (handler fan-out loop parity, ``cdc_manager.go:277-298``) with Structured
-Streaming checkpointing carrying the offsets — and, because every
-built-in sink is an idempotent latest-wins MERGE keyed on PK,
-at-least-once replay upgrades to effectively-exactly-once (the
-reference is at-least-once with swallowed handler errors,
-``cdc_manager.go:281-299``; divergence #3 of SURVEY §7.5: a failing
-sink here fails the batch and BLOCKS the offset commit).
+Streaming checkpointing carrying the offsets. A failing sink fails the
+batch and BLOCKS the offset commit (the reference is at-least-once
+with swallowed handler errors, ``cdc_manager.go:281-299``; divergence
+#3 of SURVEY §7.5), so a batch may be re-delivered. How the three
+built-in stores make that replay effectively-exactly-once
+(``HandlerSink`` hands it on to the user's callbacks):
+
+- ``ParquetSnapshotSink`` and ``JdbcMergeSink`` merge latest-wins on
+  the PK, which is idempotent; the snapshot sink also skips a batch id
+  its pointer already records and refuses one behind it
+  (``store.guard_batch_watermark``);
+- ``Scd2SplitHistorySink`` appends closed versions, which is NOT
+  idempotent, so it relies on that watermark guard alone.
 """
 
 from __future__ import annotations
@@ -29,7 +36,7 @@ from tidb_cdc_spark.cdc.apply import (
     apply_changes,
     conflate_latest,
 )
-from tidb_cdc_spark.cdc.schema import CDCType
+from tidb_cdc_spark.cdc.schema import CDCType, change_image
 from tidb_cdc_spark.cdc.scd import label_scd2_split
 from tidb_cdc_spark.cdc.spec import TableSpec
 from tidb_cdc_spark.streaming import store
@@ -103,6 +110,11 @@ class ParquetSnapshotSink(Sink):
 
     A version directory is read with the schema its writer recorded
     (``_written``), so a read plans no schema-inference job.
+
+    Replay: ``_CURRENT`` records the batch id of the version it names,
+    so a re-delivered batch leaves the snapshot as it is, and a batch
+    id behind it (a fresh checkpoint on a live path) raises
+    (``store.guard_batch_watermark``).
     """
 
     path: str
@@ -112,18 +124,15 @@ class ParquetSnapshotSink(Sink):
         p = store.read_pointer(self.path)
         return None if p is None else p[1]
 
-    def _read_version(self, spark) -> tuple[DataFrame, int] | None:
-        """The published version and its size in bytes."""
-        p = store.read_pointer(self.path)
-        if p is None:
-            return None
-        version = os.path.join(self.path, f"{self.PREFIX}{p[0]}")
-        schema, size = _written(version)
-        return spark.read.schema(schema).parquet(version), size
+    def _read_version(self, spark, version: int) -> tuple[DataFrame, int]:
+        """Version ``version`` and its size in bytes."""
+        directory = os.path.join(self.path, f"{self.PREFIX}{version}")
+        schema, size = _written(directory)
+        return spark.read.schema(schema).parquet(directory), size
 
     def read_current(self, spark) -> DataFrame | None:
-        read = self._read_version(spark)
-        return None if read is None else read[0]
+        p = store.read_pointer(self.path)
+        return None if p is None else self._read_version(spark, p[0])[0]
 
     def bootstrap(self, initial: DataFrame, spec: TableSpec) -> None:
         """Seed the snapshot with an initial full-table load — the
@@ -154,11 +163,14 @@ class ParquetSnapshotSink(Sink):
         store.commit_version(self.path, self.PREFIX, align_to_spec(initial, spec), -1)
 
     def process(self, changes: DataFrame, batch_id: int, spec: TableSpec) -> None:
+        p = store.read_pointer(self.path)
+        if guard_batch_watermark(None if p is None else p[1], batch_id, "snapshot"):
+            return
         spark = changes.sparkSession
-        base, read = None, self._read_version(spark)
-        if read is not None:
+        base = None
+        if p is not None:
             # each base partition is written back as one file
-            version, size = read
+            version, size = self._read_version(spark, p[0])
             base = version.coalesce(max(1, math.ceil(size / _split_bytes(spark))))
         merged = apply_changes(base, changes, spec)
         store.commit_version(self.path, self.PREFIX, merged, batch_id)
@@ -411,10 +423,7 @@ class JdbcMergeSink(Sink):
         latest = conflate_latest(changes, spec.pk_columns)
         staged = latest.select(
             F.col("op").alias("_op"),
-            *[
-                F.coalesce(F.col(f"after.{c}"), F.col(f"before.{c}")).alias(c)
-                for c in [c.source for c in spec.resolved_columns()]
-            ],
+            *change_image([c.source for c in spec.resolved_columns()]),
         )
         staging = f"{self.table}_stage_{batch_id}"
         props = self.properties or {}
